@@ -24,7 +24,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ecommerce_realtime_pipeline_spark.operators.generate import SyntheticBatch, _choice, _unit
+from ecommerce_realtime_pipeline_spark.operators.generate import SyntheticBatch, choice, unit
 from ecommerce_realtime_pipeline_spark.settings import Settings
 
 PRODUCT_CORRUPTIONS = (
@@ -60,12 +60,12 @@ def _gate_and_type(
     ``corruption`` pins the type for every gated row (the reference's
     ``corrupt_x(obj, corruption=...)`` override, used by its
     post-condition tests)."""
-    gate = _unit(f"corrupt_gate_{entity}", seed, F.col(id_col)) < rate
+    gate = unit(f"corrupt_gate_{entity}", seed, F.col(id_col)) < rate
     if corruption is not None:
         if corruption not in types:
             raise ValueError(f"unknown {entity} corruption: {corruption}")
         return gate, F.lit(corruption)
-    return gate, _choice(f"corrupt_type_{entity}", seed, types, F.col(id_col))
+    return gate, choice(f"corrupt_type_{entity}", seed, types, F.col(id_col))
 
 
 def corrupt_products(

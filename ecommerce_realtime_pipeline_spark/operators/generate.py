@@ -35,6 +35,7 @@ from ecommerce_realtime_pipeline_spark.schemas import (
     EVENT_TYPES,
     PRODUCT_CATEGORIES,
 )
+from ecommerce_realtime_pipeline_spark.session import overlapped
 from ecommerce_realtime_pipeline_spark.settings import Settings
 
 # reference utils.py:87-99 (syllable name model), :105-121 (description vocab)
@@ -60,7 +61,7 @@ TIME_WINDOW_SECONDS = 7 * 86400  # generated event-time span
 _RES = 2**40  # hash→uniform resolution
 
 
-def _unit(tag: str, seed: int, *cols: Column) -> Column:
+def unit(tag: str, seed: int, *cols: Column) -> Column:
     """Uniform [0,1) drawn from xxhash64(tag, seed, row-id...) — pure
     f(seed, row), independent of partitioning and task order (G1)."""
     h = F.xxhash64(F.lit(tag), F.lit(seed), *cols)
@@ -69,10 +70,10 @@ def _unit(tag: str, seed: int, *cols: Column) -> Column:
 
 def _randint(tag: str, seed: int, lo: int, hi: int, *cols: Column) -> Column:
     """Uniform integer in [lo, hi] (inclusive, like random.randint)."""
-    return (F.floor(_unit(tag, seed, *cols) * (hi - lo + 1)) + lo).cast("int")
+    return (F.floor(unit(tag, seed, *cols) * (hi - lo + 1)) + lo).cast("int")
 
 
-def _choice(tag: str, seed: int, values: tuple[str, ...], *cols: Column) -> Column:
+def choice(tag: str, seed: int, values: tuple[str, ...], *cols: Column) -> Column:
     return F.element_at(
         F.array(*[F.lit(v) for v in values]), _randint(tag, seed, 1, len(values), *cols)
     )
@@ -95,12 +96,12 @@ def _ts(tag: str, seed: int, *cols: Column) -> Column:
     """Deterministic event-time within the generation window (the
     reference stamps wall-clock now(); a fixed window keeps batches
     reproducible and time-bucket KPIs meaningful)."""
-    offset = F.floor(_unit(tag, seed, *cols) * TIME_WINDOW_SECONDS).cast("long")
+    offset = F.floor(unit(tag, seed, *cols) * TIME_WINDOW_SECONDS).cast("long")
     return F.timestamp_seconds(F.unix_timestamp(F.lit(BASE_TS)) + offset)
 
 
 def _word(tag: str, seed: int, *cols: Column) -> Column:
-    return F.initcap(_choice(tag, seed, SYLLABLES, *cols))
+    return F.initcap(choice(tag, seed, SYLLABLES, *cols))
 
 
 def _entity_name(prefix: str, tag: str, seed: int, id_col: Column) -> Column:
@@ -118,7 +119,7 @@ def gen_products(spark: SparkSession, n: int, seed: int = 42) -> DataFrame:
     n_words = _randint("p_desc_n", seed, 5, 12, rid)
     desc_words = F.transform(
         F.sequence(F.lit(1), n_words),
-        lambda i: _choice("p_desc_w", seed, DESCRIPTION_VOCAB, rid, i),
+        lambda i: choice("p_desc_w", seed, DESCRIPTION_VOCAB, rid, i),
     )
     desc_body = F.concat_ws(" ", desc_words)
     description = F.concat(
@@ -129,8 +130,8 @@ def gen_products(spark: SparkSession, n: int, seed: int = 42) -> DataFrame:
         "_idx",
         _uuid("product", seed, rid).alias("product_id"),
         _entity_name("Product", "p_name", seed, rid).alias("name"),
-        _choice("p_cat", seed, PRODUCT_CATEGORIES, rid).alias("category"),
-        F.bround(_unit("p_price", seed, rid) * (500.0 - 2.0) + 2.0, 2)
+        choice("p_cat", seed, PRODUCT_CATEGORIES, rid).alias("category"),
+        F.bround(unit("p_price", seed, rid) * (500.0 - 2.0) + 2.0, 2)
         .cast("decimal(10,2)")
         .alias("price"),
         description.alias("description"),
@@ -149,7 +150,7 @@ def gen_customers(spark: SparkSession, n: int, seed: int = 42) -> DataFrame:
     email = F.concat(
         F.regexp_replace(F.lower(name), " ", "."),
         F.lit("@"),
-        _choice("c_domain", seed, EMAIL_DOMAINS, rid),
+        choice("c_domain", seed, EMAIL_DOMAINS, rid),
     )
     created = _ts("c_created", seed, rid)
     return base.select(
@@ -273,7 +274,7 @@ def gen_events(
         base.select(
             "_idx",
             _uuid("event", seed, rid).alias("event_id"),
-            _choice("e_type", seed, EVENT_TYPES, rid).alias("event_type"),
+            choice("e_type", seed, EVENT_TYPES, rid).alias("event_type"),
             _randint("e_cidx", seed, 0, n_customers - 1, rid).alias("_cidx"),
             _ts("e_ts", seed, rid).alias("timestamp"),
         )
@@ -317,16 +318,14 @@ class SyntheticBatch:
         tail back-fills with the next frame's tasks instead of
         serializing 4× fixed job overhead (guide §2.6). Results are
         byte-identical to the sequential order."""
-        from concurrent.futures import ThreadPoolExecutor
-
-        from ecommerce_realtime_pipeline_spark.settings import pool_width
-
-        with ThreadPoolExecutor(max_workers=pool_width()) as pool:
-            p, c, o, e = pool.map(
-                lambda df: df.localCheckpoint(),
-                (self.products, self.customers, self.orders, self.events),
+        return SyntheticBatch(
+            *overlapped(
+                self.products.localCheckpoint,
+                self.customers.localCheckpoint,
+                self.orders.localCheckpoint,
+                self.events.localCheckpoint,
             )
-        return SyntheticBatch(p, c, o, e)
+        )
 
 
 def generate_batch(

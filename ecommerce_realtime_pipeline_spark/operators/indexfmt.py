@@ -11,10 +11,9 @@ leaves either the old manifest (fully intact old index, plus orphan
 directories nobody references) or the new one (fully intact new
 index). Torn states are structurally impossible: there is no window
 in which a reader can observe half-swapped partitions, and a crashed
-merge needs no recovery beyond re-running it (the r7
-``_MERGE_IN_PROGRESS`` marker + delete-then-rebuild protocol this
-replaces existed only because per-directory rename sequences were not
-atomic as a whole).
+merge needs no recovery beyond re-running it. The file-level steps
+(pointer replace, writer lock) are the shared ones in
+:mod:`ecommerce_realtime_pipeline_spark.storage`.
 
 On an object store the ``os.replace`` pointer flip becomes a
 conditional PUT of the manifest object — the same design carries over
@@ -40,6 +39,8 @@ import json
 import os
 import re
 import uuid
+
+from ecommerce_realtime_pipeline_spark import storage
 
 #: the pointer file: the ONLY mutable name in an index directory
 MANIFEST = "_CURRENT"
@@ -67,42 +68,6 @@ LOCK = "_LOCK"
 #: (milliseconds) — 300 s is orders of magnitude of headroom while
 #: still letting maintenance resume automatically after a crash.
 STALE_LOCK_SECONDS = 300.0
-
-
-def run_writes_overlapped(*thunks) -> None:
-    """Run independent staged-write jobs from a small thread pool
-    (guide §2.6 — actions were only sequential because the writer
-    called them sequentially; one write's task tail back-fills with
-    the next write's tasks). ONLY for writes into fresh unreferenced
-    names ahead of a manifest flip: every target is invisible until
-    the commit point, so failure/crash semantics are identical to the
-    sequential form (orphan staged dirs, reclaimed by compaction /
-    stage discard). The first exception propagates after all writes
-    settle — same "stage dies, index intact" outcome as before.
-    Measured on write_text_index's 4 staged writes at sf0.1:
-    4.33 s → 3.06 s warm (and ~2.3× under host contention, where the
-    overlap also rides out slow windows)."""
-    from concurrent.futures import ThreadPoolExecutor
-
-    if len(thunks) == 1:
-        thunks[0]()
-        return
-    from ecommerce_realtime_pipeline_spark.settings import pool_width
-
-    with ThreadPoolExecutor(max_workers=min(pool_width(), len(thunks))) as pool:
-        futures = [pool.submit(t) for t in thunks]
-        first_exc = None
-        for f in futures:
-            try:
-                f.result()
-            except Exception as exc:  # settle ALL before raising
-                if first_exc is None:
-                    first_exc = exc
-                else:  # keep later failures diagnosable, not swallowed
-                    exc.__context__ = first_exc.__context__
-                    first_exc.__context__ = exc
-        if first_exc is not None:
-            raise first_exc
 
 
 def new_dir_name(prefix: str) -> str:
@@ -217,17 +182,6 @@ def read_manifest(
     return m
 
 
-def _atomic_write_json(path: str, name: str, obj: dict) -> None:
-    """Crash-safe file publish: write to a temp name in the SAME
-    directory (os.replace is only atomic within a filesystem) and
-    replace. Stale ``*.tmp-*`` leftovers from a crash between write
-    and replace are reclaimed by :func:`vacuum`."""
-    tmp = os.path.join(path, f"{name}.tmp-{uuid.uuid4().hex[:8]}")
-    with open(tmp, "w") as fh:
-        json.dump(obj, fh, indent=1, sort_keys=True)
-    os.replace(tmp, os.path.join(path, name))
-
-
 class ConcurrentWriterError(RuntimeError):
     """A second mutator targeted the same index path while another
     writer held the ``_LOCK`` — the loser fails LOUDLY here instead of
@@ -237,55 +191,21 @@ class ConcurrentWriterError(RuntimeError):
 
 def _acquire_writer_lock(path: str) -> str:
     """Best-effort single-writer guard for the snapshot+flip critical
-    section: an ``O_CREAT|O_EXCL`` lock file (atomic on POSIX local
-    filesystems; on an object store this becomes a conditional PUT,
-    same as the pointer flip itself). A lock older than
-    ``STALE_LOCK_SECONDS`` is a crashed writer's leftover and is
-    broken — the crash-release path. Raises
-    :class:`ConcurrentWriterError` when a live writer holds it."""
-    import time
-
+    section: a :func:`storage.try_lock` lock file (on an object store
+    this becomes a conditional PUT, same as the pointer flip itself),
+    broken after ``STALE_LOCK_SECONDS`` as a crashed writer's
+    leftover. Raises :class:`ConcurrentWriterError` when a live writer
+    holds it."""
     lock = os.path.join(path, LOCK)
-    for attempt in (0, 1):
-        try:
-            fd = os.open(lock, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-            with os.fdopen(fd, "w") as fh:
-                fh.write(f"pid={os.getpid()} t={time.time()}\n")
-            return lock
-        except FileExistsError:
-            try:
-                age = time.time() - os.path.getmtime(lock)
-            except OSError:
-                continue  # holder released between open and stat: retry
-            if age <= STALE_LOCK_SECONDS:
-                raise ConcurrentWriterError(
-                    f"index at {path} has a live writer lock ({LOCK}, "
-                    f"age {age:.1f}s): merge/delete/compact are "
-                    "single-writer operations — serialize mutators, or "
-                    "pass lock=False to write_manifest when an external "
-                    "coordinator (job scheduler) already guarantees it"
-                ) from None
-            # crashed writer: break the stale lock by RENAME, not
-            # remove — two breakers that both observed the stale lock
-            # could otherwise interleave so the second remove() deletes
-            # the first breaker's freshly re-acquired lock (TOCTOU),
-            # letting both enter the critical section. Rename is
-            # winner-takes-all: exactly one breaker moves the stale
-            # file aside; the loser's rename fails and its retry sees
-            # the winner's fresh lock.
-            broken = f"{lock}.broken-{uuid.uuid4().hex[:8]}"
-            try:
-                os.rename(lock, broken)
-            except OSError:
-                continue  # another breaker won the rename: retry
-            try:
-                os.remove(broken)  # we own the moved-aside file
-            except OSError:
-                pass
-    raise ConcurrentWriterError(
-        f"index at {path}: could not acquire {LOCK} after breaking a "
-        "stale lock — another writer keeps re-acquiring it"
-    )
+    if not storage.try_lock(lock, STALE_LOCK_SECONDS):
+        raise ConcurrentWriterError(
+            f"index at {path} has a live writer lock ({LOCK}): "
+            "merge/delete/compact are single-writer operations — "
+            "serialize mutators, or pass lock=False to write_manifest "
+            "when an external coordinator (job scheduler) already "
+            "guarantees it"
+        )
+    return lock
 
 
 def write_manifest(
@@ -323,10 +243,14 @@ def write_manifest(
                     old = json.load(fh)
                 gen_name = f"{GEN_PREFIX}{int(old.get('version', 0))}"
                 if not os.path.exists(os.path.join(path, gen_name)):
-                    _atomic_write_json(path, gen_name, old)
+                    storage.replace_file(
+                        path, gen_name, json.dumps(old, indent=1, sort_keys=True)
+                    )
             except (OSError, ValueError):
                 pass  # unreadable old pointer: nothing to retain
-        _atomic_write_json(path, MANIFEST, manifest)
+        storage.replace_file(
+            path, MANIFEST, json.dumps(manifest, indent=1, sort_keys=True)
+        )
         for name in _generation_names(path)[: -keep_generations or None]:
             try:
                 os.remove(os.path.join(path, name))

@@ -27,6 +27,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ecommerce_realtime_pipeline_spark.session import overlapped
+
 
 #: Embedding dimension memo keyed by caller-chosen key (e.g. the table
 #: path) — avoids re-running a one-row driver job per query call.
@@ -58,7 +60,7 @@ def embedding_dim(
     return dim
 
 
-def _dot(a, b):
+def dot(a, b):
     return F.aggregate(
         F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
         F.lit(0.0),
@@ -66,12 +68,12 @@ def _dot(a, b):
     )
 
 
-def _norm(a):
-    return F.sqrt(_dot(a, a))
+def norm(a):
+    return F.sqrt(dot(a, a))
 
 
 def with_norm(emb: DataFrame, col: str = "embedding") -> DataFrame:
-    return emb.withColumn("_nrm", _norm(F.col(col)))
+    return emb.withColumn("_nrm", norm(F.col(col)))
 
 
 def knn_bruteforce(
@@ -90,9 +92,9 @@ def knn_bruteforce(
         F.col("vec_id").alias("neighbor_id"), F.col(col).alias("_cv"), "_nrm"
     )
     scored = (
-        c.crossJoin(F.broadcast(q.withColumn("_qn", _norm(F.col("_qv")))))
+        c.crossJoin(F.broadcast(q.withColumn("_qn", norm(F.col("_qv")))))
         .filter(F.col("neighbor_id") != F.col("query_id"))
-        .withColumn("cos_sim", _dot(F.col("_qv"), F.col("_cv")) / (F.col("_qn") * F.col("_nrm")))
+        .withColumn("cos_sim", dot(F.col("_qv"), F.col("_cv")) / (F.col("_qn") * F.col("_nrm")))
     )
     w = Window.partitionBy("query_id").orderBy(
         F.desc("cos_sim"), F.asc("neighbor_id")
@@ -111,7 +113,7 @@ def hyperplanes(dim: int, n_planes: int = 12, seed: int = 42) -> list[list[float
     return [[rng.gauss(0.0, 1.0) for _ in range(dim)] for _ in range(n_planes)]
 
 
-def _bucket_udf(planes: list[list[float]], bits: int, n_tables: int):
+def bucket_udf(planes: list[list[float]], bits: int, n_tables: int):
     """Vectorized Arrow-batched bucket computation: one numpy matmul per
     batch gives every table's sign-bucket for every vector.
 
@@ -165,7 +167,7 @@ def knn_lsh(
     """
     dim = dim or embedding_dim(emb, col)
     planes = hyperplanes(dim, bits * n_tables, seed)
-    buckets = _bucket_udf(planes, bits, n_tables)
+    buckets = bucket_udf(planes, bits, n_tables)
 
     # index side: (neighbor_id, tbl, bucket) — narrow key rows only
     index = emb.select(
@@ -182,10 +184,10 @@ def knn_lsh(
         .select("query_id", "neighbor_id")
         .distinct()
     )
-    return _exact_rerank(cand, emb, queries, k, col)
+    return exact_rerank(cand, emb, queries, k, col)
 
 
-def _exact_rerank(
+def exact_rerank(
     cand: DataFrame, emb: DataFrame, queries: DataFrame, k: int, col: str
 ) -> DataFrame:
     """Exact cosine top-k over a (query_id, neighbor_id) candidate set —
@@ -196,11 +198,11 @@ def _exact_rerank(
     )
     qv = queries.select(
         F.col("vec_id").alias("query_id"), F.col(col).alias("_qv")
-    ).withColumn("_qn", _norm(F.col("_qv")))
+    ).withColumn("_qn", norm(F.col("_qv")))
     scored = (
         cand.join(corpus, "neighbor_id")
         .join(F.broadcast(qv), "query_id")
-        .withColumn("cos_sim", _dot(F.col("_qv"), F.col("_cv")) / (F.col("_qn") * F.col("_nrm")))
+        .withColumn("cos_sim", dot(F.col("_qv"), F.col("_cv")) / (F.col("_qn") * F.col("_nrm")))
     )
     w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("neighbor_id"))
     return (
@@ -393,7 +395,7 @@ def knn_ivf(
         .select("query_id", "neighbor_id")
         .distinct()
     )
-    return _exact_rerank(cand, emb, queries, k, col)
+    return exact_rerank(cand, emb, queries, k, col)
 
 
 def knn_ivf_filtered(
@@ -441,7 +443,7 @@ def knn_ivf_filtered(
         .select("query_id", "neighbor_id")
         .distinct()
     )
-    return _exact_rerank(cand, emb, queries, k, col)
+    return exact_rerank(cand, emb, queries, k, col)
 
 
 def ivf_cell_tables(
@@ -530,7 +532,7 @@ def write_ivf_index(
     # sound by construction, not by luck
     vtype = emb.schema[col].dataType.elementType.simpleString()
     # segment + centroid table are independent staged writes ahead of
-    # the manifest — overlapped (guide §2.6; run_writes_overlapped).
+    # the manifest — overlapped (guide §2.6).
     # CLUSTER the segment write by cell (guide §6): without it every
     # upstream partition emits its own file into every cell it
     # touches — an upstream-partitions × n_cells small-file fan
@@ -539,7 +541,7 @@ def write_ivf_index(
     # shuffle buys ≈1 file per cell directory (AQE coalesces the
     # tiny partitions); at 100 TB add maxRecordsPerFile to
     # re-split oversized cells — the clustering stays correct.
-    indexfmt.run_writes_overlapped(
+    overlapped(
         lambda: (
             emb.select(
                 F.col("vec_id").cast("long").alias("neighbor_id"),
@@ -723,14 +725,14 @@ def knn_ivf_from_index(
     The probed-cell id collect is bounded by |queries|·n_probe (the
     same bounded-collect class as the centroid pick).
 
-    Since r12 the probed cells are read via the CELL-DIRECTORY SEEK
+    The probed cells are read via the CELL-DIRECTORY SEEK
     (:func:`_seek_cell_dirs` — row-identity with the pruned discovery
     read test-pinned): the serve opens exactly |probed| directories
     per live segment off the manifest instead of letting Spark's
     partition discovery list all n_centroids directories first — at
     the occupancy-pinned sizing rule (k ~ n/occ) that discovery pass
-    is corpus-linear driver metadata per query, the r11 lifecycle
-    bench's measured serving bottleneck."""
+    is corpus-linear driver metadata per query, the measured serving
+    bottleneck of the index lifecycle bench."""
     from . import indexfmt
 
     m = indexfmt.read_manifest(path, IVF_INDEX_FORMAT, version=version)
@@ -769,7 +771,7 @@ def knn_ivf_from_index(
     stored_vecs = cells.select(
         F.col("neighbor_id").alias("vec_id"), F.col("_v").alias(col)
     )
-    return _exact_rerank(cand, stored_vecs, queries, k, col)
+    return exact_rerank(cand, stored_vecs, queries, k, col)
 
 
 def _seq_l2(vals: list) -> float:
@@ -817,7 +819,7 @@ def _unit_vectors(vecs: DataFrame, col: str = "embedding") -> DataFrame:
     """(vec_id, _nv): unit-normalized double components. Element j is
     x_j/‖x‖ with the norm a sequential fold — every engine computes
     the identical doubles."""
-    return vecs.withColumn("_nrm", _norm(F.col(col))).select(
+    return vecs.withColumn("_nrm", norm(F.col(col))).select(
         "vec_id",
         F.transform(
             F.col(col), lambda x: x.cast("double") / F.col("_nrm")
@@ -1003,7 +1005,7 @@ def knn_pq_adc(
         .filter(F.col("_rn") <= refine)
         .select("query_id", "neighbor_id")
     )
-    return _exact_rerank(cand, emb, queries, k, col)
+    return exact_rerank(cand, emb, queries, k, col)
 
 
 def knn_ivfpq(
@@ -1062,7 +1064,7 @@ def knn_ivfpq(
         .filter(F.col("_rn") <= refine)
         .select("query_id", "neighbor_id")
     )
-    return _exact_rerank(cand, emb, queries, k, col)
+    return exact_rerank(cand, emb, queries, k, col)
 
 
 #: Refined-quantizer memos, session-scoped like the other index
@@ -1303,7 +1305,7 @@ def knn_ivf_refined(
         .select("query_id", "neighbor_id")
         .distinct()
     )
-    return _exact_rerank(cand, emb, queries, k, col)
+    return exact_rerank(cand, emb, queries, k, col)
 
 
 def auto_lsh_params(
@@ -1362,7 +1364,7 @@ def cosine_neardup_pairs(
         bits, n_tables = auto_lsh_params(n, threshold, bits, n_tables)
     dim = dim or embedding_dim(emb, col)
     planes = hyperplanes(dim, bits * n_tables, seed)
-    buckets = _bucket_udf(planes, bits, n_tables)
+    buckets = bucket_udf(planes, bits, n_tables)
     # materialize the (id, table, bucket) index once: the self-join
     # references it on both sides, and the Arrow matmul pass is the
     # expensive part — without this it runs twice in one job
@@ -1405,7 +1407,7 @@ def cosine_neardup_pairs(
             "vec_b",
         )
         .withColumn(
-            "cos_sim", _dot(F.col("_va"), F.col("_vb")) / (F.col("_na") * F.col("_nb"))
+            "cos_sim", dot(F.col("_va"), F.col("_vb")) / (F.col("_na") * F.col("_nb"))
         )
         .filter(F.col("cos_sim") >= threshold)
         .select("vec_a", "vec_b", "cos_sim")
@@ -1507,7 +1509,7 @@ def semdedup_drops(
         F.col("_v").alias("_vb"),
         F.col("_nrm").alias("_nb"),
     )
-    cos = _dot(F.col("_va"), F.col("_vb")) / (F.col("_na") * F.col("_nb"))
+    cos = dot(F.col("_va"), F.col("_vb")) / (F.col("_na") * F.col("_nb"))
     hits = (
         a.join(b, "cid")
         .filter(F.col("vec_a") < F.col("vec_b"))
@@ -1955,7 +1957,7 @@ def requantize_ivf_index(
     # cell-clustered rewrite, same rationale as write_ivf_index
     # (guide §6): the retrain must leave ≈1 file per cell, not
     # live-partitions × cells
-    indexfmt.run_writes_overlapped(
+    overlapped(
         lambda: live.select(
             F.col("vec_id").alias("neighbor_id"),
             F.col("embedding").alias("_v"),
@@ -2208,7 +2210,7 @@ def knn_graph_beam(
             .join(va, "src")
             .join(vb, "dst")
             .withColumn(
-                "_cos", _dot(F.col("_sv"), F.col("_dv")) / (F.col("_sn") * F.col("_dn"))
+                "_cos", dot(F.col("_sv"), F.col("_dv")) / (F.col("_sn") * F.col("_dn"))
             )
             .withColumn("_rn", F.row_number().over(pw))
             .filter(F.col("_rn") <= m)
@@ -2227,7 +2229,7 @@ def knn_graph_beam(
     )
     qv = queries.select(
         F.col("vec_id").alias("query_id"), F.col(col).alias("_qv")
-    ).withColumn("_qn", _norm(F.col("_qv")))
+    ).withColumn("_qn", norm(F.col("_qv")))
 
     def score(nodes: DataFrame) -> DataFrame:
         """(query_id, nid) → + _cos (pure function, exact join)."""
@@ -2236,7 +2238,7 @@ def knn_graph_beam(
             .join(F.broadcast(qv), "query_id")
             .withColumn(
                 "_cos",
-                _dot(F.col("_qv"), F.col("_cv")) / (F.col("_qn") * F.col("_nrm")),
+                dot(F.col("_qv"), F.col("_cv")) / (F.col("_qn") * F.col("_nrm")),
             )
             .select("query_id", "nid", "_cos")
         )

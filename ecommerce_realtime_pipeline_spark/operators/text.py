@@ -22,6 +22,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ecommerce_realtime_pipeline_spark.session import materialize as _materialize
+from ecommerce_realtime_pipeline_spark.session import overlapped
 
 
 def _lazy_materialize(df):
@@ -666,14 +667,15 @@ def write_text_index(docs: DataFrame, path: str) -> None:
     docs_tbl = indexfmt.new_dir_name("docs")
     stage = f"{path}.stage-{_uuid.uuid4().hex[:8]}"
     # the four staged writes are independent jobs off the checkpointed
-    # base — overlapped (guide §2.6; see indexfmt.run_writes_overlapped
-    # for the measured numbers and the crash-equivalence argument).
+    # base — overlapped (guide §2.6). Every target is a fresh name no
+    # reader resolves before the publish, so a failure or crash leaves
+    # only orphan stage dirs, exactly as the sequential form would.
     # The docs sidecar is the per-doc (doc_id, dl) norms file: the ONLY
     # record of docs whose text tokenized to zero tokens (present in
     # n_docs/sum_dl but absent from postings), which is what lets a
     # tombstone compaction recompute stats over the TRUE survivor set
     # instead of silently dropping zero-token docs
-    indexfmt.run_writes_overlapped(
+    overlapped(
         lambda: postings.write.mode("overwrite")
         .partitionBy("token")
         .parquet(f"{stage}/{seg}"),
@@ -791,8 +793,8 @@ def merge_text_index(
     semantically identical to consolidating them into the existing
     token partitions: BM25 and every other reader union the segments.
     The merge therefore never READS existing postings at all — zero
-    read amplification, compared to the r7 design's DPP-pruned
-    read-merge-rewrite of |batch tokens| partitions.
+    read amplification, compared to a DPP-pruned read-merge-rewrite
+    of |batch tokens| partitions.
 
     TORN MERGES ARE STRUCTURALLY IMPOSSIBLE: the segment and the
     merged dfreq/stats tables are written under fresh names no reader
@@ -800,8 +802,8 @@ def merge_text_index(
     is the commit point. A crash before the flip leaves orphan
     directories and a fully-intact old index; recovery is simply
     re-running the merge (orphans are reclaimed by the next
-    ``compact_text_index``). This replaces the r7
-    ``_MERGE_IN_PROGRESS`` marker + delete-then-rebuild protocol.
+    ``compact_text_index``); no in-progress marker or
+    delete-then-rebuild recovery is needed.
 
     NULL/empty tokens are rejected up front: Spark writes them as the
     ``__HIVE_DEFAULT_PARTITION__`` directory, whose partition value
@@ -811,9 +813,8 @@ def merge_text_index(
 
     Cost at 100 TB: one |batch|-sized partitioned write + a
     |vocab|-row metadata rewrite + one pointer flip — never O(index),
-    and no per-partition rename fan-out (the r7 design's |batch
-    tokens| filesystem round-trips inside the commit window are
-    gone). Read amplification grows by one segment per merge;
+    and no per-partition rename fan-out (no |batch tokens|
+    filesystem round-trips inside the commit window). Read amplification grows by one segment per merge;
     ``compact_text_index`` is the tiered-merge knob that folds
     segments back to one, and ``max_segments`` makes it a POLICY:
     when set, a merge that leaves more than that many live segments
@@ -870,7 +871,7 @@ def merge_text_index(
     dfreq = m["dfreq"]
     # all staged writes land under fresh names no reader resolves
     # until the manifest flip — independent jobs, overlapped
-    # (guide §2.6; indexfmt.run_writes_overlapped)
+    # (guide §2.6)
     writes = []
     if n_touched:
         seg = indexfmt.new_dir_name("seg")
@@ -910,7 +911,7 @@ def merge_text_index(
     )
     stats = indexfmt.new_dir_name("stats")
     docs_tbl = indexfmt.new_dir_name("docs")
-    indexfmt.run_writes_overlapped(
+    overlapped(
         *writes,
         lambda: merged_stats.write.mode("overwrite").parquet(
             f"{path}/{stats}"
@@ -1149,7 +1150,7 @@ def compact_text_index(spark, path: str) -> int:
     dfreq = indexfmt.new_dir_name("dfreq")
     stats = indexfmt.new_dir_name("stats")
     # fresh unreferenced names ahead of the flip — independent write
-    # jobs, overlapped (guide §2.6; indexfmt.run_writes_overlapped)
+    # jobs, overlapped (guide §2.6)
     writes = [
         lambda: postings.write.mode("overwrite")
         .partitionBy("token")
@@ -1173,7 +1174,7 @@ def compact_text_index(spark, path: str) -> int:
             )
         )
         manifest["docs"] = [docs_tbl]
-    indexfmt.run_writes_overlapped(*writes)
+    overlapped(*writes)
     indexfmt.write_manifest(path, manifest)
     indexfmt.vacuum(path, TEXT_INDEX_FORMAT)
     return n

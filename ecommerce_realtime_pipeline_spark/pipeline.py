@@ -30,21 +30,19 @@ the orchestration itself adds no driver-side data movement.
 from __future__ import annotations
 
 import os
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ecommerce_realtime_pipeline_spark.settings import pool_width
+from ecommerce_realtime_pipeline_spark import storage
+from ecommerce_realtime_pipeline_spark.session import overlapped
 from ecommerce_realtime_pipeline_spark.sources import produce as P
 from ecommerce_realtime_pipeline_spark.streaming import ingest as I
 
 #: entities flowing through the silver layer (products ride the same
 #: path; events are append-only facts keyed by their immutable id).
 ENTITIES = ("products", "customers", "orders", "events")
-
-
-def _atomic_snapshot(df: DataFrame, path: str) -> None:
-    I._atomic_overwrite(df, path)
 
 
 def build_marts(spark: SparkSession, silver_dir: str, gold_dir: str) -> dict[str, int]:
@@ -57,7 +55,6 @@ def build_marts(spark: SparkSession, silver_dir: str, gold_dir: str) -> dict[str
     each other; test-pinned on the duplicate item lines). Each mart is
     a full (mart-sized, tiny) snapshot written atomically. Returns
     mart → row count."""
-    out: dict[str, int] = {}
     gate, valid_frames = dq_gate(spark, silver_dir)
     orders = valid_frames["orders"]
     items = valid_frames["order_items"]
@@ -101,20 +98,16 @@ def build_marts(spark: SparkSession, silver_dir: str, gold_dir: str) -> dict[str
     # the five marts are independent tiny snapshots — submit their
     # write+count jobs from a small thread pool so the next mart's
     # tasks back-fill executors freed by the previous one's tail
-    # (guide §2.6 overlap; actions were only sequential because this
-    # loop called them sequentially). Each writes its own uuid-temp
+    # (guide §2.6 overlap). Each writes its own uuid-temp
     # dir + target path, so no shared mutable state crosses threads.
-    def _write_one(item: tuple[str, DataFrame]) -> tuple[str, int]:
-        name, df = item
+    def _write_one(name: str, df: DataFrame) -> tuple[str, int]:
         path = os.path.join(gold_dir, name)
-        _atomic_snapshot(df, path)
+        storage.swap_dir(df, path)
         return name, spark.read.parquet(path).count()
 
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=pool_width()) as pool:
-        out.update(pool.map(_write_one, marts.items()))
-    return out
+    return dict(
+        overlapped(*(partial(_write_one, name, df) for name, df in marts.items()))
+    )
 
 
 def dq_gate(
@@ -153,7 +146,7 @@ def dq_gate(
     # valid sides) — run them from a small thread pool so one table's
     # checkpoint/count tail back-fills with the next table's tasks
     # (guide §2.6). Results are deterministic, so the tally is
-    # byte-identical to the old sequential loop.
+    # byte-identical to a sequential loop's.
     def _one(name: str) -> tuple[str, DataFrame, int, int]:
         valid, _quarantine, _m = V.validate_entity(
             name, silver[name], parents
@@ -161,10 +154,7 @@ def dq_gate(
         valid = valid.localCheckpoint()
         return name, valid, valid.count(), silver[name].count()
 
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=pool_width()) as pool:
-        results = list(pool.map(_one, (*ENTITIES, "order_items")))
+    results = overlapped(*(partial(_one, n) for n in (*ENTITIES, "order_items")))
     valid_frames = {name: valid for name, valid, _nv, _nt in results}
     rows = [
         (name, n_valid, n_total - n_valid)
@@ -269,12 +259,9 @@ def run_pipeline(
             df = I.read_silver(spark, os.path.join(silver, e))
         return e, df.count()
 
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=pool_width()) as pool:
-        silver_counts = dict(
-            pool.map(_count_one, (*ENTITIES, "order_items"))
-        )
+    silver_counts = dict(
+        overlapped(*(partial(_count_one, e) for e in (*ENTITIES, "order_items")))
+    )
     marts = build_marts(spark, silver, gold)
     return {
         "published": published,

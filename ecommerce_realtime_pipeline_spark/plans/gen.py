@@ -9,35 +9,27 @@ runs and partitionings (tests/test_generate.py).
 
 from __future__ import annotations
 
+import json
 import os
+import shutil
 from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ecommerce_realtime_pipeline_spark import storage
 from ecommerce_realtime_pipeline_spark.operators import generate as G
 from ecommerce_realtime_pipeline_spark.operators import validation as V
+from ecommerce_realtime_pipeline_spark.plans import fixtures as FX
 from ecommerce_realtime_pipeline_spark.schemas import ENTITY_SCHEMAS
 from ecommerce_realtime_pipeline_spark.settings import Settings
 from ecommerce_realtime_pipeline_spark.sources import produce as P
 
 SEED = 42
 
-
-def _fast_fixtures() -> bool:
-    """Reduced-fixture mode (``SPARK_GRAFT_FAST_FIXTURES``, default ON;
-    set ``0`` for the fuller multi-epoch variants): fixtures whose
-    contract does NOT depend on the epoch slicing group their input
-    files into fewer availableNow runs. Only the HLL/CMS sketch streams
-    qualify — their oracles are functions of the union MULTISET, and
-    one cross-run boundary is kept so the persisted-state merge is
-    still exercised. Every other streaming fixture's epochs are
-    load-bearing (watermark advances, replay, retract order) and run
-    identically in both modes. Oracles are shared, not forked: the
-    same SQL value-gates both modes."""
-    import os
-
-    return os.environ.get("SPARK_GRAFT_FAST_FIXTURES", "1") != "0"
+#: per-topic publish counts of a memoized topic tree; written last, so
+#: its presence marks the tree complete
+_COUNTS_FILE = "_counts.json"
 
 
 def _await(q, what: str = "streaming fixture", timeout_s: int = 120) -> None:
@@ -69,39 +61,38 @@ def _pinned_state_partitions(spark: SparkSession, n: int = 4):
 def _produced_topics_fixture(
     spark: SparkSession, repeats: int = 1, **produce_kw
 ) -> tuple[str, dict[str, int]]:
-    """Session-memoized produced-topics fixture (r13 verdict task 4:
-    the per-query SOURCE fixtures repeat across the streaming family).
+    """Session-memoized produced-topics fixture: the per-query SOURCE
+    fixtures repeat across the streaming family.
 
     Builds the seeded topic tree ONCE per (Spark application id, spec)
     by running the REAL ``P.produce_batch`` (``repeats``× into the same
-    dir for replayed-offset fixtures) under a session temp dir, records
-    the returned per-topic counts, and hands every later caller the
-    same READ-ONLY directory + counts. The tree is a pure function of
-    the spec (seeded generator, deterministic partition/offset
-    assignment), so reuse changes no query's input bytes — and the key
-    carries the application id, so a fresh bench/oracle invocation
-    always rebuilds from scratch (no cross-run caching; dirs are reaped
-    at interpreter exit). The produce code path itself stays gated: the
+    dir for replayed-offset fixtures) under a session temp dir
+    (:mod:`plans.fixtures`), records the returned per-topic counts, and
+    hands every later caller the same READ-ONLY directory + counts. The
+    tree is a pure function of the spec (seeded generator,
+    deterministic partition/offset assignment), so reuse changes no
+    query's input bytes. The produce code path itself stays gated: the
     first call per session runs it for real, and
     ``produce_envelopes_shape`` re-runs the envelope pass in-plan every
-    time."""
-    import hashlib
-    import json as _json
-    import tempfile
+    time.
 
-    # llm.py owns the session-fixture discipline (stamped dirs, atexit
-    # reap, cross-process build-once guard) — reuse it, don't fork it
-    from ecommerce_realtime_pipeline_spark.plans import llm as _llm
-
-    key = _json.dumps({"repeats": repeats, **produce_kw}, sort_keys=True)
-    app_id = spark.sparkContext.applicationId
-    path = os.path.join(
-        tempfile.gettempdir(),
-        "spark_graft_topics_"
-        + hashlib.md5(f"{app_id}|{key}".encode()).hexdigest()[:12],
-    )
-    _llm._SESSION_FIXTURE_DIRS.add(path)
-    counts_file = os.path.join(path, "_counts.json")
+    The spec is the memo key, so every ``produce_kw`` value must be
+    JSON-encodable; anything else (a ``metrics=`` accumulator, a
+    ``Settings``) raises a ``TypeError`` naming the kwarg — memoizing it
+    would, on a hit, silently skip the side effect the caller asked
+    for."""
+    for name, value in produce_kw.items():
+        try:
+            json.dumps(value)
+        except TypeError:
+            raise TypeError(
+                f"memoized produce cannot take {name}={value!r}: the spec "
+                "is the memo key and must be JSON-encodable; call "
+                "produce_batch directly for this publish"
+            ) from None
+    key = json.dumps({"repeats": repeats, **produce_kw}, sort_keys=True)
+    path = FX.session_path(spark, "spark_graft_topics_", key)
+    counts_file = os.path.join(path, _COUNTS_FILE)
 
     def _ready(p: str) -> bool:
         return os.path.exists(counts_file)
@@ -111,14 +102,21 @@ def _produced_topics_fixture(
         counts: dict[str, int] = {}
         for _ in range(repeats):
             counts = P.produce_batch(spark, p, **produce_kw)
-        tmp = counts_file + ".tmp"
-        with open(tmp, "w") as fh:
-            _json.dump(counts, fh)
-        os.replace(tmp, counts_file)  # counts land LAST = ready marker
+        storage.replace_file(p, _COUNTS_FILE, json.dumps(counts))
 
-    _llm._fixture_build_once(path, _ready, _build)
+    FX.build_once(path, _ready, _build)
     with open(counts_file) as fh:
-        return path, _json.load(fh)
+        return path, json.load(fh)
+
+
+def _link_or_copy(src: str, dst: str) -> None:
+    """Hardlink ``src`` to ``dst``; copy when linking fails (e.g. EXDEV:
+    the session temp dir and the caller's work dir sit on different
+    filesystems)."""
+    try:
+        os.link(src, dst)
+    except OSError:
+        shutil.copy2(src, dst)
 
 
 def _memo_publisher(spark: SparkSession, topics_dir: str, *counts, **kw):
@@ -129,8 +127,6 @@ def _memo_publisher(spark: SparkSession, topics_dir: str, *counts, **kw):
     publish it replaces on a warm session). Returns the recorded
     counts — byte-identical to what the real publish returned when the
     fixture was built."""
-    import shutil
-
     product_count, customer_count, order_count, event_count = (
         list(counts) + [None] * (4 - len(counts))
     )[:4]
@@ -145,9 +141,9 @@ def _memo_publisher(spark: SparkSession, topics_dir: str, *counts, **kw):
     shutil.copytree(
         src,
         topics_dir,
-        copy_function=os.link,
+        copy_function=_link_or_copy,
         dirs_exist_ok=True,
-        ignore=shutil.ignore_patterns("_counts.json*", "*.build-lock"),
+        ignore=shutil.ignore_patterns(f"{_COUNTS_FILE}*", "*.build-lock"),
     )
     return dict(published)
 
@@ -1296,8 +1292,7 @@ def streaming_embdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def streaming_hll_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     """§2.7 + sketches: approximate distinct users maintained over a
-    STREAM — availableNow runs (2 in fast-fixture mode, 3 in full —
-    `_fast_fixtures`) feed a foreachBatch that
+    STREAM — two availableNow runs feed a foreachBatch that
     max-merges HLL registers into a persisted table (bounded state:
     256 rows per event type, forever; replay-idempotent because max
     is idempotent). Fixture batches carry view-users 0..99, 50..149,
@@ -1325,11 +1320,11 @@ def streaming_hll_users(spark: SparkSession, sf_dir: str) -> DataFrame:
             + [(i, "click") for i in range(0, 50)],
         ]
         os.makedirs(src, exist_ok=True)
-        # fast mode: batches 0+1 share one run (estimate depends only on
+        # batches 0+1 share one run (the estimate depends only on
         # the union multiset); the 2→3 boundary stays a separate run so
         # the cross-run register merge against the PERSISTED table is
         # still what produces the final answer.
-        runs = [(0, 1), (2,)] if _fast_fixtures() else [(0,), (1,), (2,)]
+        runs = [(0, 1), (2,)]
         with _pinned_state_partitions(spark):
             for run in runs:
                 for bi in run:
@@ -1355,7 +1350,7 @@ def streaming_hll_users(spark: SparkSession, sf_dir: str) -> DataFrame:
 def streaming_cms_user_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """§2.7 + sketches, the SUM-merged counterpart of
     streaming_hll_users: Count-Min counter DELTAS journaled per epoch
-    over the same 3-batch user stream (same run-grouping modes) (sum-merge is NOT
+    over the same 3-batch user stream in the same two runs (sum-merge is NOT
     replay-idempotent, so the journal + dedup-by-epoch fold carries
     the exactly-once burden — the treatment the HLL's max-merge
     doesn't need). Probes five fixed users afterwards. The stream's
@@ -1383,10 +1378,10 @@ def streaming_cms_user_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
             + [(i, "click") for i in range(0, 50)],
         ]
         os.makedirs(src, exist_ok=True)
-        # fast mode: same run-grouping rationale as streaming_hll_users
+        # same run grouping as streaming_hll_users
         # (counter sums depend only on the union multiset; one cross-run
         # boundary keeps the journaled cross-epoch fold exercised).
-        runs = [(0, 1), (2,)] if _fast_fixtures() else [(0,), (1,), (2,)]
+        runs = [(0, 1), (2,)]
         with _pinned_state_partitions(spark):
             for run in runs:
                 for bi in run:

@@ -133,3 +133,37 @@ def materialize(df, eager: bool = True):
         # interpreter
         atexit.register(shutil.rmtree, ckpt_dir, ignore_errors=True)
     return df.checkpoint(eager=eager)
+
+
+#: in-flight thunks of :func:`overlapped`: two jobs fill one job's
+#: stage tail without fighting the other for executors
+OVERLAP_WIDTH = 2
+
+
+def overlapped(*thunks) -> list:
+    """Run independent Spark actions (writes, checkpoints, counts)
+    from a small thread pool, so one job's task tail back-fills with
+    the next job's tasks instead of the driver submitting them one by
+    one. Returns the results in submission order. Every thunk settles
+    before an error unwinds (no job is left racing the caller's
+    cleanup); then the first failure is raised, with later failures
+    chained on its ``__context__``. Zero or one thunk runs inline."""
+    if len(thunks) <= 1:
+        return [t() for t in thunks]
+    from concurrent.futures import ThreadPoolExecutor
+
+    with ThreadPoolExecutor(max_workers=OVERLAP_WIDTH) as pool:
+        futures = [pool.submit(t) for t in thunks]
+    results, first_exc = [], None
+    for f in futures:
+        exc = f.exception()
+        if exc is None:
+            results.append(f.result())
+        elif first_exc is None:
+            first_exc = exc
+        else:
+            exc.__context__ = first_exc.__context__
+            first_exc.__context__ = exc
+    if first_exc is not None:
+        raise first_exc
+    return results

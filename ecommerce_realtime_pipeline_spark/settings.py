@@ -29,26 +29,6 @@ def _env(name: str, default: str, *aliases: str) -> str:
     return default
 
 
-def pool_width(default: int = 2) -> int:
-    """Width of the driver-side job-overlap thread pools (guide §2.6:
-    2-3 in-flight jobs fill a stage tail without fighting for
-    executors). One env knob, ``SPARK_GRAFT_POOL_WIDTH``, so the width
-    is a deployment parameter rather than six hard-coded constants —
-    and so the r14 A/B (2 vs 3 under the full suite, a saturated
-    local[32] host being the contention-amplification suspect from the
-    r13 verdict) could measure both widths on identical code. Default
-    2 = the measured winner: both width-2 suite passes beat both
-    width-3 passes (341.9/328.6 s vs 348.0/352.6 s, ABBA order at
-    sf0.1) while per-query best-ofs are flat (geomean 0.99) — i.e.
-    the third in-flight job buys no per-path speed and bleeds
-    contention into neighboring queries. On a large cluster with idle
-    executors, raise it via the env knob. See OPTIMIZATION_r14.md."""
-    try:
-        return max(1, int(os.environ.get("SPARK_GRAFT_POOL_WIDTH", str(default))))
-    except ValueError:
-        return default
-
-
 @dataclass(frozen=True)
 class Settings:
     # Topic routing — reference settings.py:27-30 (reference env names)

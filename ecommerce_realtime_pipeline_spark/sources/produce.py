@@ -37,12 +37,14 @@ import os
 import shutil
 import uuid
 from dataclasses import dataclass
+from functools import partial
 
 from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ecommerce_realtime_pipeline_spark.operators import generate as G
 from ecommerce_realtime_pipeline_spark.schemas import ENTITY_SCHEMAS
+from ecommerce_realtime_pipeline_spark.session import overlapped
 from ecommerce_realtime_pipeline_spark.settings import Settings
 
 @dataclass
@@ -252,10 +254,9 @@ def produce_batch(
     # thread pool so one topic's commit tail back-fills with the next
     # topic's tasks (guide §2.6). Outcomes are folded back in the
     # ORIGINAL entity order, so counts ordering, metrics accumulation
-    # order, and which error surfaces first are byte-identical to the
-    # old sequential loop.
-    def _publish(item: tuple[str, "DataFrame"]):
-        entity, df = item
+    # order, and which error surfaces first are byte-identical to a
+    # sequential loop's.
+    def _publish(entity: str, df: "DataFrame"):
         env = to_envelope(df, entity, settings)
         try:
             return entity, write_topic(
@@ -264,15 +265,7 @@ def produce_batch(
         except Exception as exc:  # folded below, order-preserving
             return entity, None, exc
 
-    from concurrent.futures import ThreadPoolExecutor
-
-    from ecommerce_realtime_pipeline_spark.settings import pool_width
-
-    if len(selected) > 1:
-        with ThreadPoolExecutor(max_workers=pool_width()) as pool:
-            outcomes = list(pool.map(_publish, selected))
-    else:
-        outcomes = [_publish(item) for item in selected]
+    outcomes = overlapped(*(partial(_publish, *item) for item in selected))
 
     counts: dict[str, int] = {}
     for entity, ok, exc in outcomes:

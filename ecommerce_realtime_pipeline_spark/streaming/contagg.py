@@ -43,10 +43,10 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ecommerce_realtime_pipeline_spark import storage
 from ecommerce_realtime_pipeline_spark.operators import normalize as N
 from ecommerce_realtime_pipeline_spark.schemas import ENTITY_SCHEMAS
 from ecommerce_realtime_pipeline_spark.streaming.ingest import (
-    _atomic_overwrite,
     bucket_of,
     deduped_stream,
     stream_envelopes,
@@ -81,39 +81,9 @@ _BASE_DIR = "base"
 def pruned_through(agg_path: str) -> int:
     """Largest epoch retired by :func:`prune_versions` (-1 if none)."""
     try:
-        with open(os.path.join(agg_path, _PRUNE_WM_FILE)) as f:
-            return int(f.read().strip())
-    except (FileNotFoundError, ValueError):
+        return int(storage.read_file(agg_path, _PRUNE_WM_FILE) or -1)
+    except ValueError:
         return -1
-
-
-def _checkpoint_query_id(checkpoint_dir: str) -> str | None:
-    """Streaming query id persisted in the checkpoint's ``metadata``
-    file (stable across restarts of the SAME checkpoint; a recreated
-    checkpoint gets a fresh id). None if the checkpoint is new."""
-    import json
-
-    try:
-        with open(os.path.join(checkpoint_dir, "metadata")) as f:
-            return str(json.load(f)["id"])
-    except (FileNotFoundError, ValueError, KeyError):
-        return None
-
-
-def _ledger_query_id(agg_path: str) -> str | None:
-    try:
-        with open(os.path.join(agg_path, _LEDGER_ID_FILE)) as f:
-            return f.read().strip() or None
-    except FileNotFoundError:
-        return None
-
-
-def _write_ledger_query_id(agg_path: str, query_id: str) -> None:
-    os.makedirs(agg_path, exist_ok=True)
-    tmp = os.path.join(agg_path, _LEDGER_ID_FILE + ".tmp")
-    with open(tmp, "w") as f:
-        f.write(query_id)
-    os.replace(tmp, os.path.join(agg_path, _LEDGER_ID_FILE))
 
 
 def rebase_from_silver(
@@ -153,7 +123,7 @@ def rebase_from_silver(
         base = spark.createDataFrame(
             [], f"{group_col} string, n_rows long, sum_val {_SUM_TYPE}"
         )
-    _atomic_overwrite(base, os.path.join(agg_path, _BASE_DIR))
+    storage.swap_dir(base, os.path.join(agg_path, _BASE_DIR))
     for e in _committed_epochs(agg_path):
         shutil.rmtree(os.path.join(agg_path, f"v={e}"), ignore_errors=True)
     try:
@@ -267,7 +237,7 @@ def refresh_epoch(
         prev = spark.createDataFrame(
             [], f"{group_col} string, n_rows long, sum_val {_SUM_TYPE}"
         )
-    _atomic_overwrite(
+    storage.swap_dir(
         N.merge_agg_delta(prev, delta_agg, group_col, _SUM_TYPE), version_dir
     )
 
@@ -303,8 +273,9 @@ def run_ingest_with_agg(
         pruned_through(agg_path) >= 0 or bool(_committed_epochs(agg_path))
     )
     if ledger_bound:
-        chk_id = _checkpoint_query_id(checkpoint_dir)
-        if chk_id is None or chk_id != _ledger_query_id(agg_path):
+        chk_id = storage.checkpoint_query_id(checkpoint_dir)
+        ledger_id = storage.read_file(agg_path, _LEDGER_ID_FILE)
+        if chk_id is None or chk_id != ledger_id:
             rebase_from_silver(
                 spark, silver_path, agg_path, group_col, sum_col
             )
@@ -340,7 +311,7 @@ def run_ingest_with_agg(
         .trigger(availableNow=True)
         .start()
     )
-    _write_ledger_query_id(agg_path, str(query.id))
+    storage.replace_file(agg_path, _LEDGER_ID_FILE, str(query.id))
     return query
 
 
@@ -364,10 +335,7 @@ def prune_versions(agg_path: str, keep: int = 3) -> list[int]:
     if not victims:
         return victims
     wm = max(max(victims), pruned_through(agg_path))
-    tmp = os.path.join(agg_path, _PRUNE_WM_FILE + ".tmp")
-    with open(tmp, "w") as f:
-        f.write(str(wm))
-    os.replace(tmp, os.path.join(agg_path, _PRUNE_WM_FILE))
+    storage.replace_file(agg_path, _PRUNE_WM_FILE, str(wm))
     import shutil
 
     for e in victims:

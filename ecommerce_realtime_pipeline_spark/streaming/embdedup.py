@@ -7,7 +7,7 @@ crawl).
 
 Per micro-batch:
   1. bucket the batch's vectors in ``n_tables`` sign-LSH tables
-     (``similarity._bucket_udf`` — one Arrow matmul pass),
+     (``similarity.bucket_udf`` — one Arrow matmul pass),
   2. equi-join those (table, bucket) keys against the persisted index
      of every previously ACCEPTED vector (plus an in-batch self-join,
      min-id canonical),
@@ -30,30 +30,23 @@ deduped on read).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ecommerce_realtime_pipeline_spark.operators import similarity as SIM
+from ecommerce_realtime_pipeline_spark.streaming.neardup import (
+    guard_journal_generation,
+    has_kind,
+    journal_path,
+    read_kind,
+    stamp_journal_query_id,
+)
 
 EMB_STREAM_SCHEMA = "vec_id long, embedding array<float>"
 
 #: journal kinds: 'decision' (batch_id, vec_id, is_dup, matched_id),
 #: 'bucket' (batch_id, vec_id, tbl, bucket), 'vec' (batch_id, vec_id,
 #: embedding). Unused columns are null per kind.
-
-
-def _journal_path(work_dir: str) -> str:
-    return os.path.join(work_dir, "journal")
-
-
-def _has_kind(work_dir: str, kind: str) -> bool:
-    return os.path.exists(os.path.join(_journal_path(work_dir), f"kind={kind}"))
-
-
-def _read_kind(spark: SparkSession, work_dir: str, kind: str) -> DataFrame:
-    return spark.read.parquet(_journal_path(work_dir)).filter(F.col("kind") == kind)
 
 
 def _exact_cos_verify(
@@ -83,7 +76,7 @@ def _exact_cos_verify(
         )
         .withColumn(
             "cos_sim",
-            SIM._dot(F.col("_va"), F.col("_vb")) / (F.col("_na") * F.col("_nb")),
+            SIM.dot(F.col("_va"), F.col("_vb")) / (F.col("_na") * F.col("_nb")),
         )
         .filter(F.col("cos_sim") >= threshold)
         .select("vec_a", "vec_b")
@@ -107,7 +100,7 @@ def dedup_batch(
         return
     dim = len(batch.select("embedding").first()[0])
     planes = SIM.hyperplanes(dim, bits * n_tables, seed)
-    buckets = SIM._bucket_udf(planes, bits, n_tables)
+    buckets = SIM.bucket_udf(planes, bits, n_tables)
     banded = batch.select(
         "vec_id", F.posexplode(buckets(F.col("embedding"))).alias("tbl", "bucket")
     ).localCheckpoint()
@@ -121,8 +114,8 @@ def dedup_batch(
         .select(F.col("x.vec_id").alias("vec_a"), F.col("y.vec_id").alias("vec_b"))
     )
     all_vecs = batch
-    if _has_kind(work_dir, "bucket"):
-        hist = _read_kind(spark, work_dir, "bucket").select("vec_id", "tbl", "bucket")
+    if has_kind(work_dir, "bucket"):
+        hist = read_kind(spark, work_dir, "bucket").select("vec_id", "tbl", "bucket")
         vs_hist = (
             banded.join(hist.withColumnRenamed("vec_id", "hist_id"), ["tbl", "bucket"])
             .filter(F.col("vec_id") != F.col("hist_id"))
@@ -130,7 +123,7 @@ def dedup_batch(
         )
         cand = cand.unionByName(vs_hist)
         all_vecs = batch.unionByName(
-            _read_kind(spark, work_dir, "vec").select("vec_id", "embedding")
+            read_kind(spark, work_dir, "vec").select("vec_id", "embedding")
         )
     verified = _exact_cos_verify(cand.distinct(), all_vecs, threshold)
     matches = verified.groupBy("vec_a").agg(F.min("vec_b").alias("matched_id"))
@@ -167,7 +160,7 @@ def dedup_batch(
         .unionByName(vec_rows)
         .write.mode("append")
         .partitionBy("kind")
-        .parquet(_journal_path(work_dir))
+        .parquet(journal_path(work_dir))
     )
 
 
@@ -183,12 +176,6 @@ def run_embdedup_stream(
     """Drain all currently-available embedding files through the dedup
     pass (availableNow); re-running with the same checkpoint processes
     only newly-arrived files."""
-
-    from ecommerce_realtime_pipeline_spark.streaming.neardup import (
-        _stamp_journal_query_id,
-        guard_journal_generation,
-    )
-
     # same run-identity binding as neardup: batch_id-keyed journal rows
     # are meaningless across checkpoint generations
     guard_journal_generation(work_dir, checkpoint)
@@ -203,7 +190,7 @@ def run_embdedup_stream(
         .trigger(availableNow=True)
         .start()
     )
-    _stamp_journal_query_id(work_dir, str(q.id))
+    stamp_journal_query_id(work_dir, str(q.id))
     return q
 
 
@@ -211,7 +198,7 @@ def read_decisions(spark: SparkSession, work_dir: str) -> DataFrame:
     """Per-vector decisions, deduped on (batch_id, vec_id) for the
     replayed-append case."""
     return (
-        _read_kind(spark, work_dir, "decision")
+        read_kind(spark, work_dir, "decision")
         .select("batch_id", "vec_id", "is_dup", "matched_id")
         .dropDuplicates(["batch_id", "vec_id"])
     )
@@ -220,7 +207,7 @@ def read_decisions(spark: SparkSession, work_dir: str) -> DataFrame:
 def read_index_vecs(spark: SparkSession, work_dir: str) -> DataFrame:
     """Accepted (novel) vectors currently in the index."""
     return (
-        _read_kind(spark, work_dir, "vec")
+        read_kind(spark, work_dir, "vec")
         .select("vec_id", "embedding")
         .dropDuplicates(["vec_id"])
     )

@@ -50,6 +50,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQueryListener
 
+from ecommerce_realtime_pipeline_spark import storage
 from ecommerce_realtime_pipeline_spark.operators import normalize as N
 from ecommerce_realtime_pipeline_spark.schemas import (
     ENTITY_SCHEMAS,
@@ -94,23 +95,6 @@ def read_silver(spark: SparkSession, path: str) -> DataFrame:
     partition column (the user-facing schema)."""
     df = spark.read.parquet(path)
     return df.drop("bucket") if "bucket" in df.columns else df
-
-
-def _atomic_overwrite(df: DataFrame, path: str) -> None:
-    """Write a parquet snapshot via tmp dir + rename. NOTE: between the
-    two renames there is a short window where ``path`` does not exist —
-    acceptable for the single-writer local-mode tables this backs (the
-    tiny offsets ledger); a multi-reader deployment swaps in a
-    version-pointer (write versioned dir, flip a manifest) or a real
-    table format."""
-    tmp = f"{path}__tmp_{uuid.uuid4().hex[:8]}"
-    df.write.mode("overwrite").parquet(tmp)
-    old = f"{path}__old_{uuid.uuid4().hex[:8]}"
-    if os.path.exists(path):
-        os.rename(path, old)
-    os.rename(tmp, path)
-    if os.path.exists(old):
-        shutil.rmtree(old, ignore_errors=True)
 
 
 def _swap_buckets(df: DataFrame, path: str, buckets: list[int]) -> None:
@@ -282,7 +266,7 @@ def record_offsets(
         F.lit(group).alias("consumer_group"),
         F.current_timestamp().alias("last_updated"),
     )
-    _atomic_overwrite(out, offsets_path)
+    storage.swap_dir(out, offsets_path)
 
 
 class StatsListener(StreamingQueryListener):

@@ -46,6 +46,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ecommerce_realtime_pipeline_spark import storage
 from ecommerce_realtime_pipeline_spark.operators import dedup as DD
 
 DOC_STREAM_SCHEMA = "doc_id long, text string"
@@ -57,7 +58,7 @@ DOC_STREAM_SCHEMA = "doc_id long, text string"
 _KINDS = ("decision", "band", "doc")
 
 
-def _journal_path(work_dir: str) -> str:
+def journal_path(work_dir: str) -> str:
     return os.path.join(work_dir, "journal")
 
 
@@ -73,20 +74,9 @@ def _journal_path(work_dir: str) -> str:
 _JOURNAL_ID_FILE = "_journal_query_id"
 
 
-def _journal_query_id(work_dir: str) -> str | None:
-    try:
-        with open(os.path.join(work_dir, _JOURNAL_ID_FILE)) as f:
-            return f.read().strip() or None
-    except FileNotFoundError:
-        return None
-
-
-def _stamp_journal_query_id(work_dir: str, query_id: str) -> None:
-    os.makedirs(work_dir, exist_ok=True)
-    tmp = os.path.join(work_dir, _JOURNAL_ID_FILE + ".tmp")
-    with open(tmp, "w") as f:
-        f.write(query_id)
-    os.replace(tmp, os.path.join(work_dir, _JOURNAL_ID_FILE))
+def stamp_journal_query_id(work_dir: str, query_id: str) -> None:
+    """Bind the journal at ``work_dir`` to streaming query ``query_id``."""
+    storage.replace_file(work_dir, _JOURNAL_ID_FILE, query_id)
 
 
 def guard_journal_generation(work_dir: str, checkpoint: str) -> None:
@@ -97,14 +87,10 @@ def guard_journal_generation(work_dir: str, checkpoint: str) -> None:
     moral twin of ``contagg.rebase_from_silver``, except here the
     source replay IS the rebase. No-op while the journal is empty
     (nothing to double-add yet)."""
-    from ecommerce_realtime_pipeline_spark.streaming.contagg import (
-        _checkpoint_query_id,
-    )
-
-    if not os.path.exists(_journal_path(work_dir)):
+    if not os.path.exists(journal_path(work_dir)):
         return
-    cp_id = _checkpoint_query_id(checkpoint)
-    j_id = _journal_query_id(work_dir)
+    cp_id = storage.checkpoint_query_id(checkpoint)
+    j_id = storage.read_file(work_dir, _JOURNAL_ID_FILE) or None
     if j_id is None and cp_id is not None:
         # missing stamp + live checkpoint: the stamp is written only
         # after start() returns, so a crash in that window (or a
@@ -115,7 +101,7 @@ def guard_journal_generation(work_dir: str, checkpoint: str) -> None:
         # journal rebuild. A recreated checkpoint still trips the
         # guard: recreation changes the metadata query id, and the
         # adopted stamp then mismatches on the next run.
-        _stamp_journal_query_id(work_dir, cp_id)
+        stamp_journal_query_id(work_dir, cp_id)
         return
     if cp_id is None or j_id is None or cp_id != j_id:
         raise RuntimeError(
@@ -129,12 +115,12 @@ def guard_journal_generation(work_dir: str, checkpoint: str) -> None:
         )
 
 
-def _has_kind(work_dir: str, kind: str) -> bool:
-    return os.path.exists(os.path.join(_journal_path(work_dir), f"kind={kind}"))
+def has_kind(work_dir: str, kind: str) -> bool:
+    return os.path.exists(os.path.join(journal_path(work_dir), f"kind={kind}"))
 
 
-def _read_kind(spark: SparkSession, work_dir: str, kind: str) -> DataFrame:
-    return spark.read.parquet(_journal_path(work_dir)).filter(
+def read_kind(spark: SparkSession, work_dir: str, kind: str) -> DataFrame:
+    return spark.read.parquet(journal_path(work_dir)).filter(
         F.col("kind") == kind
     )
 
@@ -165,8 +151,8 @@ def dedup_batch(
         .select(F.col("x.doc_id").alias("doc_a"), F.col("y.doc_id").alias("doc_b"))
     )
     all_docs = batch
-    if _has_kind(work_dir, "band"):
-        hist = _read_kind(spark, work_dir, "band").select("doc_id", "band", "bucket")
+    if has_kind(work_dir, "band"):
+        hist = read_kind(spark, work_dir, "band").select("doc_id", "band", "bucket")
         vs_hist = (
             banded.join(hist.withColumnRenamed("doc_id", "hist_id"), ["band", "bucket"])
             .filter(F.col("doc_id") != F.col("hist_id"))
@@ -177,7 +163,7 @@ def dedup_batch(
         # here: dup band rows only repeat candidates (distinct'd below),
         # dup doc rows only repeat verified pairs (min-agg'd below)
         all_docs = batch.unionByName(
-            _read_kind(spark, work_dir, "doc").select("doc_id", "text")
+            read_kind(spark, work_dir, "doc").select("doc_id", "text")
         )
     verified = DD.verify_jaccard(cand.distinct(), all_docs, threshold, n)
     matches = verified.groupBy("doc_a").agg(F.min("doc_b").alias("matched_id"))
@@ -214,7 +200,7 @@ def dedup_batch(
         .unionByName(doc_rows)
         .write.mode("append")
         .partitionBy("kind")
-        .parquet(_journal_path(work_dir))
+        .parquet(journal_path(work_dir))
     )
 
 
@@ -249,7 +235,7 @@ def run_neardup_stream(
     )
     # bind the journal to this checkpoint generation (q.id is the
     # persistent id the checkpoint's metadata file records)
-    _stamp_journal_query_id(work_dir, str(q.id))
+    stamp_journal_query_id(work_dir, str(q.id))
     return q
 
 
@@ -258,7 +244,7 @@ def read_decisions(spark: SparkSession, work_dir: str) -> DataFrame:
     replayed batch (crash after journal commit, before checkpoint
     commit) cannot double-count."""
     return (
-        _read_kind(spark, work_dir, "decision")
+        read_kind(spark, work_dir, "decision")
         .select("batch_id", "doc_id", "is_dup", "matched_id")
         .dropDuplicates(["batch_id", "doc_id"])
     )
@@ -268,7 +254,7 @@ def read_index_docs(spark: SparkSession, work_dir: str) -> DataFrame:
     """Accepted (novel) docs currently in the index: (doc_id, text),
     deduped for the replayed-append case."""
     return (
-        _read_kind(spark, work_dir, "doc")
+        read_kind(spark, work_dir, "doc")
         .select("doc_id", "text")
         .dropDuplicates(["doc_id"])
     )

@@ -21,8 +21,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
+from ecommerce_realtime_pipeline_spark import storage
 from ecommerce_realtime_pipeline_spark.operators import sketch as SK
-from ecommerce_realtime_pipeline_spark.streaming.ingest import _atomic_overwrite
 
 STREAM_SCHEMA = StructType(
     [
@@ -44,7 +44,7 @@ def merge_hll_batch(
         merged = SK.hll_merge([old, new], ["event_type"])
     else:
         merged = SK.hll_merge([new], ["event_type"])
-    _atomic_overwrite(merged, regs_path)
+    storage.swap_dir(merged, regs_path)
 
 
 def run_hll_stream(

@@ -167,3 +167,61 @@ def test_produced_topics_fixture_memoizes_and_matches_real_publish(
         **{**spec, "customer_count": 8},
     )
     assert calls["n"] == before + 1
+
+
+def test_memo_publisher_copies_when_hardlinks_cross_filesystems(
+    spark, tmp_path, monkeypatch
+):
+    """A work dir on another filesystem than the session temp dir makes
+    ``os.link`` fail with EXDEV; the memo publisher then copies the
+    files instead of crashing, and the caller gets the same tree."""
+    import errno
+    import os
+
+    from ecommerce_realtime_pipeline_spark.plans import gen as GP
+
+    spec = dict(
+        product_count=0, customer_count=7, order_count=0, event_count=0,
+        seed=33, n_partitions=2, entities=("customers",),
+    )
+    linked = str(tmp_path / "linked")
+    counts_linked = GP._memo_publisher(spark, linked, **spec)
+
+    def cross_device(src, dst):
+        raise OSError(errno.EXDEV, "Invalid cross-device link", src)
+
+    monkeypatch.setattr(os, "link", cross_device)
+    copied = str(tmp_path / "copied")
+    assert GP._memo_publisher(spark, copied, **spec) == counts_linked
+
+    def tree(root):
+        out = {}
+        for dp, _dn, fns in os.walk(root):
+            for fn in fns:
+                with open(os.path.join(dp, fn), "rb") as fh:
+                    out[os.path.relpath(os.path.join(dp, fn), root)] = fh.read()
+        return out
+
+    assert tree(copied) == tree(linked) and tree(copied)
+
+
+def test_memo_publisher_rejects_unencodable_kwarg_by_name(
+    spark, tmp_path, monkeypatch
+):
+    """A produce kwarg that cannot be part of the JSON memo key (here a
+    metrics accumulator, whose update a memo hit would skip) raises a
+    TypeError naming the kwarg, and nothing is published."""
+    import pytest
+
+    from ecommerce_realtime_pipeline_spark.plans import gen as GP
+    from ecommerce_realtime_pipeline_spark.sources import produce as P
+
+    def must_not_publish(*a, **kw):  # pragma: no cover
+        raise AssertionError("an unencodable spec must not be published")
+
+    monkeypatch.setattr(P, "produce_batch", must_not_publish)
+    with pytest.raises(TypeError, match="metrics="):
+        GP._memo_publisher(
+            spark, str(tmp_path / "t"), 0, 3, 0, 0,
+            seed=5, metrics=P.ProducerMetrics(),
+        )

@@ -455,14 +455,14 @@ def test_dir_exists_windows_drive_path_is_local(spark, monkeypatch):
 
 
 def test_run_writes_overlapped_settles_all_and_raises_first():
-    """run_writes_overlapped (r13 optimization round) must execute
-    EVERY thunk even when one fails (staged writes must all settle
-    before the error unwinds — a half-submitted pool would leave
+    """session.overlapped (the index writers' staged-write runner) must
+    execute EVERY thunk even when one fails (staged writes must all
+    settle before the error unwinds — a half-submitted pool would leave
     in-flight jobs racing the caller's cleanup) and then re-raise the
     first failure; the single-thunk fast path runs inline."""
     import threading
 
-    from ecommerce_realtime_pipeline_spark.operators import indexfmt
+    from ecommerce_realtime_pipeline_spark.session import overlapped
 
     ran = []
     lock = threading.Lock()
@@ -480,7 +480,7 @@ def test_run_writes_overlapped_settles_all_and_raises_first():
         raise ValueError("staged write failed")
 
     try:
-        indexfmt.run_writes_overlapped(ok("a"), boom, ok("b"))
+        overlapped(ok("a"), boom, ok("b"))
     except ValueError as exc:
         assert "staged write failed" in str(exc)
     else:  # pragma: no cover
@@ -488,19 +488,45 @@ def test_run_writes_overlapped_settles_all_and_raises_first():
     assert sorted(ran) == ["a", "b", "boom"]  # every thunk settled
 
     ran.clear()
-    indexfmt.run_writes_overlapped(ok("solo"))  # 1-thunk inline path
+    overlapped(ok("solo"))  # 1-thunk inline path
     assert ran == ["solo"]
 
-    # r14 (ADVICE): a SECOND failure must stay diagnosable — chained
+    # a SECOND failure must stay diagnosable — chained
     # onto the raised exception's __context__, not silently discarded
     def boom2():
         raise KeyError("second staged write failed")
 
     try:
-        indexfmt.run_writes_overlapped(boom, boom2)
+        overlapped(boom, boom2)
     except ValueError as exc:
         chained = exc.__context__
         assert isinstance(chained, KeyError)
         assert "second staged write failed" in str(chained)
     else:  # pragma: no cover
         raise AssertionError("first failure must propagate")
+
+
+def test_overlapped_returns_results_in_submission_order():
+    """Results come back in submission order whatever order the pool
+    finishes them in; no thunk and one thunk both run inline."""
+    import threading
+
+    from ecommerce_realtime_pipeline_spark.session import overlapped
+
+    first_may_finish = threading.Event()
+
+    def slow_first():
+        assert first_may_finish.wait(10)
+        return "first"
+
+    def fast_second():
+        first_may_finish.set()
+        return "second"
+
+    assert overlapped(slow_first, fast_second, lambda: "third") == [
+        "first",
+        "second",
+        "third",
+    ]
+    assert overlapped() == []
+    assert overlapped(threading.get_ident) == [threading.get_ident()]

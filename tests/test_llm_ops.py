@@ -17,6 +17,7 @@ from ecommerce_realtime_pipeline_spark.operators import dedup as DD
 from ecommerce_realtime_pipeline_spark.operators import multimodal as MM
 from ecommerce_realtime_pipeline_spark.operators import similarity as SIM
 from ecommerce_realtime_pipeline_spark.operators import text as TX
+from ecommerce_realtime_pipeline_spark.plans import fixtures as FX
 from ecommerce_realtime_pipeline_spark.plans import llm
 
 SF = "/root/testdata/sf0.001"
@@ -966,7 +967,7 @@ def test_persisted_ivf_equals_in_session(spark):
 
 
 def test_fixture_build_once_lock_protocol(tmp_path, monkeypatch):
-    """_fixture_build_once (r13): the winner builds exactly once; a
+    """fixtures.build_once: the winner builds exactly once; a
     caller arriving while a fixture is READY never rebuilds; a stale
     build lock from a crashed process is broken and the build
     proceeds; the lock file is removed afterward."""
@@ -981,8 +982,8 @@ def test_fixture_build_once_lock_protocol(tmp_path, monkeypatch):
         calls.append(1)
         open(os.path.join(p, "DONE"), "w").close()
 
-    llm._fixture_build_once(path, ready, build)
-    llm._fixture_build_once(path, ready, build)  # ready → no rebuild
+    FX.build_once(path, ready, build)
+    FX.build_once(path, ready, build)  # ready → no rebuild
     assert calls == [1]
     assert not os.path.exists(f"{path}.build-lock")
     # crashed builder: stale lock + half-built dir → broken + rebuilt
@@ -991,7 +992,7 @@ def test_fixture_build_once_lock_protocol(tmp_path, monkeypatch):
     _sh.rmtree(path)
     open(f"{path}.build-lock", "w").close()
     os.utime(f"{path}.build-lock", (1, 1))  # ancient ⇒ stale
-    llm._fixture_build_once(path, ready, build)
+    FX.build_once(path, ready, build)
     assert calls == [1, 1] and ready(path)
     assert not os.path.exists(f"{path}.build-lock")
 

@@ -1,0 +1,88 @@
+"""Package modules use each other's public names only: no module
+imports or reads another package module's ``_private`` name. Shared
+machinery gets a public name in the module that owns it (commit and
+lock steps in ``storage``, job overlap in ``session``, fixture
+directories in ``plans.fixtures``). Tests are exempt."""
+
+from __future__ import annotations
+
+import ast
+import pathlib
+
+import ecommerce_realtime_pipeline_spark as PKG
+
+ROOT = pathlib.Path(PKG.__file__).parent
+
+
+def _modules() -> dict[str, pathlib.Path]:
+    out = {}
+    for path in ROOT.rglob("*.py"):
+        parts = list(path.relative_to(ROOT.parent).with_suffix("").parts)
+        if parts[-1] == "__init__":
+            parts.pop()
+        out[".".join(parts)] = path
+    return out
+
+
+def _private(name: str) -> bool:
+    return name.startswith("_") and not name.startswith("__")
+
+
+def _reaches(name: str, path: pathlib.Path, modules: dict) -> list[str]:
+    """Every ``from <pkg module> import _x`` and ``<module alias>._x``
+    in one module that targets a DIFFERENT package module."""
+    tree = ast.parse(path.read_text())
+    package = name if path.name == "__init__.py" else name.rpartition(".")[0]
+    aliases: dict[str, str] = {}
+    found = []
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Import):
+            for a in node.names:
+                if a.name in modules:
+                    aliases[a.asname or a.name] = a.name
+        elif isinstance(node, ast.ImportFrom):
+            base = package.split(".")
+            if node.level:
+                base = base[: len(base) - node.level + 1]
+                src = ".".join(base + ([node.module] if node.module else []))
+            else:
+                src = node.module
+            for a in node.names:
+                if f"{src}.{a.name}" in modules:
+                    aliases[a.asname or a.name] = f"{src}.{a.name}"
+                elif src in modules and src != name and _private(a.name):
+                    found.append(f"{name}:{node.lineno} from {src} import {a.name}")
+    for node in ast.walk(tree):
+        if (
+            isinstance(node, ast.Attribute)
+            and isinstance(node.value, ast.Name)
+            and aliases.get(node.value.id, name) != name
+            and _private(node.attr)
+        ):
+            found.append(f"{name}:{node.lineno} {node.value.id}.{node.attr}")
+    return found
+
+
+def test_no_module_reaches_into_another_modules_privates():
+    modules = _modules()
+    assert len(modules) > 40  # the scan sees the whole package
+    reaches = [r for n, p in sorted(modules.items()) for r in _reaches(n, p, modules)]
+    assert reaches == []
+
+
+def test_scan_detects_both_reach_forms(tmp_path):
+    """The scan itself: a private import and a private attribute read of
+    another package module are both reported; a module's own privates
+    and public names are not."""
+    modules = _modules()
+    probe = tmp_path / "probe.py"
+    probe.write_text(
+        "from ecommerce_realtime_pipeline_spark.streaming import ingest as I\n"
+        "from ecommerce_realtime_pipeline_spark.streaming.ingest import _swap_buckets\n"
+        "I._swap_buckets\n"
+        "I.read_silver\n"
+    )
+    name = "ecommerce_realtime_pipeline_spark.probe"
+    found = _reaches(name, probe, {**modules, name: probe})
+    assert len(found) == 2
+    assert all("_swap_buckets" in f for f in found)
