@@ -1,19 +1,37 @@
-"""Versioned-manifest index layout shared by the persisted TEXT and
-IVF indexes — the Lucene segments_N / Iceberg-metadata pattern applied
-to both search-index lifecycles.
+"""Versioned-manifest index layout and segment-and-tombstone lifecycle
+shared by the three persisted index families: BM25 text and positional
+(:mod:`.text`) and IVF (:mod:`.similarity`) — the Lucene segments_N /
+Iceberg-metadata pattern applied to every search-index lifecycle.
 
 An index directory holds IMMUTABLE child directories (postings/cell
-segments, dfreq/stats/centroids metadata tables) plus ONE pointer
-file, ``_CURRENT``: a JSON manifest naming exactly which children form
-the live index. Every mutation (merge, compact) writes NEW children
-and then atomically replaces the pointer — so a crash at ANY point
-leaves either the old manifest (fully intact old index, plus orphan
-directories nobody references) or the new one (fully intact new
-index). Torn states are structurally impossible: there is no window
-in which a reader can observe half-swapped partitions, and a crashed
-merge needs no recovery beyond re-running it. The file-level steps
-(pointer replace, writer lock) are the shared ones in
-:mod:`ecommerce_realtime_pipeline_spark.storage`.
+segments, tombstone sets, dfreq/stats/centroids/doc-id sidecar tables)
+plus ONE pointer file, ``_CURRENT``: a JSON manifest naming exactly
+which children form the live index. Every mutation (merge, delete,
+compact) writes NEW children and then atomically replaces the pointer
+— so a crash at ANY point leaves either the old manifest (fully intact
+old index, plus orphan directories nobody references) or the new one
+(fully intact new index). Torn states are structurally impossible:
+there is no window in which a reader can observe half-swapped
+partitions, and a crashed merge needs no recovery beyond re-running
+it. The file-level steps (pointer replace, writer lock) are the shared
+ones in :mod:`ecommerce_realtime_pipeline_spark.storage`.
+
+The lifecycle steps every family shares live here, so the tombstone
+format and the delete policy have one home:
+
+- :func:`read_live` opens a union of children with the live
+  tombstones anti-joined on the family's id column
+  (:func:`mask_tombstones` is the mask alone, for the seek readers);
+- :func:`delete_ids` commits a tombstone child and applies the
+  deleted-ratio compaction policy;
+- :func:`commit_fold` is the compaction tail: refuse an empty fold,
+  flip the manifest, vacuum.
+
+A family passes only what differs: its id column (``doc_id`` or
+``neighbor_id``), the id plane the ratio counts (the ``docs`` sidecar
+or the segments), and its own metadata tables. :func:`required` reads
+a key every current writer of a format records, and refuses by name a
+manifest that lacks it.
 
 On an object store the ``os.replace`` pointer flip becomes a
 conditional PUT of the manifest object — the same design carries over
@@ -38,7 +56,12 @@ from __future__ import annotations
 import json
 import os
 import re
+import shutil
 import uuid
+from functools import reduce
+
+from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 
 from ecommerce_realtime_pipeline_spark import storage
 
@@ -86,7 +109,8 @@ _SCHEME = re.compile(r"^[A-Za-z][A-Za-z0-9+.\-]+:")
 
 def dir_exists(spark, path: str) -> bool:
     """Existence probe behind every term/cell-directory SEEK reader
-    (``text._seek_token_dirs`` / ``similarity.seek_ivf_cells``) —
+    (``text.seek_text_postings`` / ``text.seek_positional_tokens`` /
+    ``similarity.seek_ivf_cells``) —
     deploy-target-safe by construction: a scheme-less path takes the
     local ``os.path`` branch (the default on this test rig), anything
     carrying a URI scheme (``s3://…``, ``hdfs://…``, ``file:/…``)
@@ -95,8 +119,7 @@ def dir_exists(spark, path: str) -> bool:
     seek docstrings price. Without this split, an ``os.path.exists``
     probe on an ``s3://`` path silently returns False for EVERY
     directory and the seek reader returns an empty frame instead of
-    the postings — a correctness cliff keyed on the deploy target
-    (r11 judge finding)."""
+    the postings — a correctness cliff keyed on the deploy target."""
     if not _SCHEME.match(path):
         return os.path.exists(path)
     jvm = spark._jvm
@@ -113,10 +136,10 @@ SEEK_LIST_THRESHOLD = 8
 
 def existing_dirs(spark, parent: str, names: list[str]) -> list[str]:
     """Which of ``parent/<name>`` exist, in input order — the seek
-    readers' BATCHED existence probe (r12 judge task: the per-
-    (term, segment) ``dir_exists`` loop serializes k·segments HEAD
-    round-trips of ~20-50 ms each on an object store — a 20-term
-    query over 8 segments is ~160 serial driver round-trips). Short
+    readers' BATCHED existence probe: a per-(term, segment)
+    ``dir_exists`` loop would serialize k·segments HEAD round-trips
+    of ~20-50 ms each on an object store — a 20-term query over 8
+    segments is ~160 serial driver round-trips. Short
     lists (≤ ``SEEK_LIST_THRESHOLD``) keep per-directory HEAD
     semantics — one HEAD beats a LIST of a segment with thousands of
     term directories; longer lists pay ONE ``listStatus`` (Hadoop) /
@@ -276,13 +299,12 @@ def publish_stage(stage: str, path: str) -> None:
       discarded, silently: the winner's index is equivalent by the
       builders' shared input contract.
 
-    Every OTHER failure re-raises after discarding the stage — the r10
-    writers swallowed ALL OSErrors here, which turned EXDEV (stage and
-    path on different filesystems — os.rename never crosses one) and
-    permission errors into a mystery "no index at path" much later.
+    Every OTHER failure re-raises after discarding the stage: swallowing
+    them would turn EXDEV (stage and path on different filesystems —
+    os.rename never crosses one) and permission errors into a mystery
+    "no index at path" much later.
     """
     import errno
-    import shutil
 
     try:
         os.rename(stage, path)
@@ -355,8 +377,6 @@ def vacuum(path: str, expect_format: str) -> list[str]:
     reader older than the ``KEEP_GENERATIONS`` horizon can still lose
     files, which is the same contract as Iceberg snapshot expiry:
     size the horizon to the longest-running query."""
-    import shutil
-
     read_manifest(path, expect_format)  # refuse a non-index directory
     live: set[str] = set()
     for m in retained_manifests(path):
@@ -378,3 +398,163 @@ def vacuum(path: str, expect_format: str) -> list[str]:
             shutil.rmtree(full, ignore_errors=True)
             deleted.append(name)
     return deleted
+
+
+# -- the shared segment-and-tombstone lifecycle -------------------------------
+
+
+def required(m: dict, key: str):
+    """``m[key]`` for a key every current writer of the manifest's
+    format records (``docs`` for text and positional, ``vtype`` for
+    IVF). A manifest without it was written before the key existed;
+    no fallback reads such an index, so it is refused by name —
+    rebuild it with the format's writer."""
+    if key not in m:
+        raise ValueError(
+            f"{m.get('format')} manifest (version {m.get('version')}) has "
+            f"no {key!r} key, which every {m.get('format')} writer records; "
+            "the index predates it — rebuild it with the writer"
+        )
+    return m[key]
+
+
+def _union(spark, path: str, children: list[str], cols: list[str]) -> DataFrame:
+    return reduce(
+        lambda a, b: a.unionByName(b),
+        [spark.read.parquet(f"{path}/{c}").select(*cols) for c in children],
+    )
+
+
+def mask_tombstones(spark, path: str, m: dict, df: DataFrame, id_col: str) -> DataFrame:
+    """``df`` minus every row whose ``id_col`` the manifest's live
+    tombstone sets name: a BROADCAST anti-join (the set is bounded by
+    deletes-since-compaction, which the compaction policy keeps
+    small; a sort-merge anti-join would shuffle the index). Deleted
+    ids vanish from every reader immediately; columns keep their
+    order. No tombstones: ``df`` itself, no join in the plan."""
+    tombs = m.get("tombstones", [])
+    if not tombs:
+        return df
+    dead = _union(spark, path, tombs, [id_col])
+    return df.join(F.broadcast(dead), id_col, "left_anti").select(*df.columns)
+
+
+def read_live(
+    spark, path: str, m: dict, children: list[str], cols: list[str], id_col: str
+) -> DataFrame:
+    """The union of the ``children`` scans (segments, or a family's
+    doc-id sidecars) projected to ``cols``, tombstones masked on
+    ``id_col``. Each segment scan keeps its own partitioning, so a
+    partition filter on the result prunes PER SEGMENT."""
+    return mask_tombstones(spark, path, m, _union(spark, path, children, cols), id_col)
+
+
+def delete_ids(
+    ids: DataFrame,
+    path: str,
+    expect_format: str,
+    plane: str,
+    max_deleted_ratio: float | None,
+    compact,
+) -> int:
+    """The one DELETE commit path of the three families (the Lucene
+    live-docs model): the distinct ids of ``ids`` (one column, the
+    family's id column) are written FIRST as a fresh tombstone child,
+    unreferenced until the flip; the count comes from its parquet
+    footers; an empty request drops the child and leaves the index
+    untouched (no flip); otherwise one atomic pointer flip appends the
+    child to the manifest's tombstones. Cost: O(|ids|) + a flip —
+    never O(index).
+
+    RETURN VALUE: the number of DISTINCT ids in the request — not the
+    number of newly tombstoned ids. Ids the index never held and ids
+    already tombstoned count too (21 never-indexed ids return 21).
+
+    ``max_deleted_ratio`` is the deletes-percentage compaction policy
+    (Lucene's tier trigger): after the flip, n_dead / n_all is the
+    number of DISTINCT ids of the manifest's ``plane`` children (the
+    ``docs`` sidecar, or the IVF segments) that any live tombstone
+    names, over the distinct ids of that plane — never a raw
+    tombstone-row sum, which re-deletes and foreign ids would inflate
+    until the ``0 < n_dead < n_all`` guard disabled the policy for
+    good. Above the ratio, ``compact()`` runs inline; n_dead == n_all
+    stays tombstoned, because compaction refuses an empty fold. Safe
+    under concurrent readers via generation retention."""
+    spark = ids.sparkSession
+    id_col = ids.columns[0]
+    m = read_manifest(path, expect_format)
+    plane_children = required(m, plane)
+    tomb = new_dir_name("tomb")
+    ids.distinct().write.mode("overwrite").parquet(f"{path}/{tomb}")
+    n = spark.read.parquet(f"{path}/{tomb}").count()
+    if n == 0:
+        shutil.rmtree(f"{path}/{tomb}", ignore_errors=True)
+        return 0
+    m = {
+        **m,
+        "version": int(m["version"]) + 1,
+        "tombstones": [*m.get("tombstones", []), tomb],
+    }
+    write_manifest(path, m)  # ---- the single commit point ----
+    if max_deleted_ratio is not None and _over_deleted_ratio(
+        spark, path, m, plane_children, id_col, max_deleted_ratio
+    ):
+        compact()
+    return n
+
+
+def _over_deleted_ratio(
+    spark, path: str, m: dict, plane_children: list[str], id_col: str, ratio: float
+) -> bool:
+    """Whether n_dead / n_all > ``ratio`` with ``0 < n_dead < n_all``
+    (see :func:`delete_ids`), both counts from ONE aggregate: the
+    distinct plane ids left-joined to the broadcast distinct tombstone
+    set."""
+    dead = _union(spark, path, m["tombstones"], [id_col]).distinct()
+    row = (
+        _union(spark, path, plane_children, [id_col])
+        .distinct()
+        .join(F.broadcast(dead.withColumn("_dead", F.lit(1))), id_col, "left")
+        .agg(F.count("*").alias("n_all"), F.count("_dead").alias("n_dead"))
+        .collect()[0]
+    )
+    n_all, n_dead = int(row["n_all"]), int(row["n_dead"])
+    return 0 < n_dead < n_all and n_dead / n_all > ratio
+
+
+def commit_fold(
+    path: str, m: dict, seg: str, part_col: str, caller: str, **tables
+) -> None:
+    """The compaction tail of every family, run once the fold of the
+    live (tombstone-masked) rows is written as the partitioned segment
+    ``seg`` and the family's ``tables`` under fresh names:
+
+    - refuse an EMPTY fold — a segment with no ``<part_col>=``
+      directory is unreadable on the way back (the writers'
+      empty-corpus contract); the unreferenced new children are
+      vacuumed as crash-equivalent orphans and the manifest is
+      untouched;
+    - flip to the next version naming ``seg`` as the one segment plus
+      ``tables``, with no tombstones (the fold applied them);
+    - vacuum every child no retained generation references."""
+    try:
+        names = os.listdir(os.path.join(path, seg))
+    except OSError:
+        names = []
+    if not any(n.startswith(f"{part_col}=") for n in names):
+        vacuum(path, m["format"])
+        raise ValueError(
+            f"{caller}: the fold is empty — every indexed id is tombstoned "
+            "(or no survivor has a posting); an empty index is unreadable "
+            "on the way back, so delete the index directory instead"
+        )
+    write_manifest(
+        path,
+        {
+            "format": m["format"],
+            "version": int(m["version"]) + 1,
+            "segments": [seg],
+            **tables,
+        },
+    )
+    vacuum(path, m["format"])

@@ -29,6 +29,8 @@ from pyspark.sql import functions as F
 
 from ecommerce_realtime_pipeline_spark.session import overlapped
 
+from . import indexfmt
+
 
 #: Embedding dimension memo keyed by caller-chosen key (e.g. the table
 #: path) — avoids re-running a one-row driver job per query call.
@@ -517,19 +519,16 @@ def write_ivf_index(
     stores swap the rename for a conditional manifest PUT."""
     import uuid as _uuid
 
-    from . import indexfmt
-
     cents = ivf_centroids(emb, n_centroids, col, seed, cache_key=cache_key)
     spark = emb.sparkSession
     assign = _probe_udf(cents, 1)
     seg = indexfmt.new_dir_name("seg")
     cent_dir = indexfmt.new_dir_name("centroids")
     stage = f"{path}.stage-{_uuid.uuid4().hex[:8]}"
-    # the index's canonical element type, RECORDED in the manifest
-    # (r12 ADVICE): merges cast their batch to it and the cell seek
-    # builds its read schema from it — no segment can ever carry a
-    # different physical type, so the one-inference seek schema is
-    # sound by construction, not by luck
+    # the index's canonical element type, RECORDED in the manifest:
+    # merges cast their batch to it and the cell seek builds its read
+    # schema from it — no segment can ever carry a different physical
+    # type, so the one seek schema is sound by construction
     vtype = emb.schema[col].dataType.elementType.simpleString()
     # segment + centroid table are independent staged writes ahead of
     # the manifest — overlapped (guide §2.6).
@@ -581,33 +580,15 @@ def read_ivf_index(
     same bounded-collect class as `ivf_centroids` — and the cell
     postings as the union of the manifest's segment scans). Each
     segment keeps its own cell partitioning, so probed-cell filters
-    prune to n_probe directories PER SEGMENT (plan-pinned)."""
-    from functools import reduce
-
-    from . import indexfmt
-
+    prune to n_probe directories PER SEGMENT (plan-pinned). Deleted
+    vectors vanish immediately via the shared tombstone anti-join
+    (:func:`.indexfmt.read_live`); ``compact_ivf_index`` applies
+    tombstones physically."""
     m = indexfmt.read_manifest(path, IVF_INDEX_FORMAT, version=version)
     cents = _read_centroid_list(spark, path, m)
-    segs = [
-        spark.read.parquet(f"{path}/{s}").select("neighbor_id", "_v", "cell")
-        for s in m["segments"]
-    ]
-    cells = reduce(lambda a, b: a.unionByName(b), segs)
-    tombs = m.get("tombstones", [])
-    if tombs:
-        # deleted vectors vanish from serving immediately via a
-        # broadcast ANTI join (bounded by deletes-since-compaction);
-        # compact_ivf_index applies tombstones physically
-        dead = reduce(
-            lambda a, b: a.unionByName(b),
-            [
-                spark.read.parquet(f"{path}/{t}").select("neighbor_id")
-                for t in tombs
-            ],
-        )
-        cells = cells.join(F.broadcast(dead), "neighbor_id", "left_anti").select(
-            "neighbor_id", "_v", "cell"
-        )
+    cells = indexfmt.read_live(
+        spark, path, m, m["segments"], ["neighbor_id", "_v", "cell"], "neighbor_id"
+    )
     return cents, cells
 
 
@@ -617,62 +598,35 @@ def _seek_cell_dirs(
     """Shared mechanics of the cell-directory SEEK: open exactly the
     probed cells' directories per live segment straight off the
     manifest, mask tombstones with the same broadcast anti-join as the
-    discovery reader. Duplicate cell ids are collapsed
-    (order-preserving ``dict.fromkeys``) so a caller passing a
-    repeated id cannot duplicate that cell's rows; the existence
-    probe routes through :func:`..operators.indexfmt.existing_dirs` —
-    batched per segment (r12 judge task): short probe lists keep one
-    HEAD-class ``dir_exists`` per (cell, segment) (local ``os.path``
-    / Hadoop ``FileSystem`` by scheme), wide ones pay ONE segment
-    listing instead of n_probe serialized object-store round-trips."""
+    discovery reader. The read schema comes from the manifest's
+    recorded element type (``vtype``) — zero footer reads, and sound
+    because write/merge/compact/requantize all pin segments to that
+    type. Duplicate cell ids are collapsed (order-preserving
+    ``dict.fromkeys``) so a caller passing a repeated id cannot
+    duplicate that cell's rows; the existence probe routes through
+    :func:`..operators.indexfmt.existing_dirs` — batched per segment:
+    short probe lists keep one HEAD-class ``dir_exists`` per (cell,
+    segment) (local ``os.path`` / Hadoop ``FileSystem`` by scheme),
+    wide ones pay ONE segment listing instead of n_probe serialized
+    object-store round-trips."""
     from functools import reduce
 
-    from . import indexfmt
-
-    parts = []
-    # read schema comes from the MANIFEST's recorded element type —
-    # zero footer reads, and sound because write/merge/compact/
-    # requantize all pin segments to that type (r12 ADVICE: a single
-    # inferred schema was only correct while every segment happened
-    # to agree). Legacy pre-``vtype`` manifests fall back to one
-    # inference from the first existing directory (their segments
-    # were homogeneous in practice; heterogeneous legacy indexes are
-    # upgraded by their next compaction, which records the widened
-    # type).
-    schema = (
-        f"neighbor_id bigint, _v array<{m['vtype']}>"
-        if m.get("vtype")
-        else None
-    )
+    vtype = indexfmt.required(m, "vtype")
+    schema = f"neighbor_id bigint, _v array<{vtype}>"
     dirs = {f"cell={c}": c for c in dict.fromkeys(int(c) for c in cell_ids)}
-    for s in m["segments"]:
-        for name in indexfmt.existing_dirs(spark, f"{path}/{s}", list(dirs)):
-            d = f"{path}/{s}/{name}"
-            if schema is None:
-                schema = spark.read.parquet(d).select(
-                    "neighbor_id", "_v"
-                ).schema
-            parts.append(
-                spark.read.schema(schema)
-                .parquet(d)
-                .withColumn("cell", F.lit(dirs[name]).cast("int"))
-            )
+    parts = [
+        spark.read.schema(schema)
+        .parquet(f"{path}/{s}/{name}")
+        .withColumn("cell", F.lit(dirs[name]).cast("int"))
+        for s in m["segments"]
+        for name in indexfmt.existing_dirs(spark, f"{path}/{s}", list(dirs))
+    ]
     if not parts:
-        return spark.createDataFrame(
-            [], "neighbor_id long, _v array<float>, cell int"
-        )
+        return spark.createDataFrame([], f"{schema}, cell int")
     posts = reduce(lambda a, b: a.unionByName(b), parts)
-    tombs = m.get("tombstones", [])
-    if tombs:
-        dead = reduce(
-            lambda a, b: a.unionByName(b),
-            [
-                spark.read.parquet(f"{path}/{t}").select("neighbor_id")
-                for t in tombs
-            ],
-        )
-        posts = posts.join(F.broadcast(dead), "neighbor_id", "left_anti")
-    return posts.select("neighbor_id", "_v", "cell")
+    return indexfmt.mask_tombstones(spark, path, m, posts, "neighbor_id").select(
+        "neighbor_id", "_v", "cell"
+    )
 
 
 def seek_ivf_cells(
@@ -690,10 +644,8 @@ def seek_ivf_cells(
     probed cells, tombstones masked by the same broadcast anti-join
     (test-pinned); a cell absent from a segment contributes nothing;
     duplicate cell ids are collapsed. Returns (centroids, probed
-    postings). This IS the production serving path since r12:
+    postings). This IS the production serving path:
     :func:`knn_ivf_from_index` reads through it."""
-    from . import indexfmt
-
     m = indexfmt.read_manifest(path, IVF_INDEX_FORMAT, version=version)
     cents = _read_centroid_list(spark, path, m)
     return cents, _seek_cell_dirs(spark, path, m, cell_ids)
@@ -733,8 +685,6 @@ def knn_ivf_from_index(
     the occupancy-pinned sizing rule (k ~ n/occ) that discovery pass
     is corpus-linear driver metadata per query, the measured serving
     bottleneck of the index lifecycle bench."""
-    from . import indexfmt
-
     m = indexfmt.read_manifest(path, IVF_INDEX_FORMAT, version=version)
     cents = _read_centroid_list(spark, path, m)
     probe = _probe_udf(cents, n_probe)
@@ -1664,8 +1614,8 @@ def merge_ivf_index(
     (:mod:`.indexfmt`). Vec-id disjointness is the caller's contract,
     so the segment union is identical to consolidating into the
     existing cell partitions — the merge never READS existing cells
-    at all (zero read amplification; the r7 design read-merged-
-    rewrote every touched cell partition under a torn-merge marker).
+    at all (zero read amplification, where a read-merge-rewrite of
+    every touched cell partition would need a torn-merge marker).
 
     TORN MERGES ARE STRUCTURALLY IMPOSSIBLE: a crash before the flip
     leaves an orphan segment and a fully-intact old index; recovery
@@ -1675,40 +1625,35 @@ def merge_ivf_index(
     compaction is the tiered-merge knob, and ``max_segments`` makes
     it a policy (a merge leaving more live segments than that
     compacts inline — amortized tiered merging).
-    ``max_occupancy_ratio`` is the drift twin (r12): after the flip,
+    ``max_occupancy_ratio`` is the drift twin: after the flip,
     max/mean live-cell occupancy above the threshold triggers an
     inline quantizer retrain (:func:`maybe_requantize_ivf_index`) —
     streamed landings self-remediate drift the way streamed
     text/positional landings self-compact fan-out. Returns the
     touched cell ids (reporting — never enters a plan)."""
-    from . import indexfmt
-
     spark = new_emb.sparkSession
     m = indexfmt.read_manifest(path, IVF_INDEX_FORMAT)
+    # cast the batch to the index's RECORDED element type: an
+    # array<double> batch merged into an array<float> index would
+    # otherwise create a heterogeneous segment the single-schema cell
+    # seek cannot read
+    vtype = indexfmt.required(m, "vtype")
     cents = _read_centroid_list(spark, path, m)
     assign = _probe_udf(cents, 1)
-    # cast the batch to the index's RECORDED element type (r12
-    # ADVICE): an array<double> batch merged into an array<float>
-    # index would otherwise create a heterogeneous segment the
-    # single-schema cell seek cannot read. Legacy manifests without
-    # ``vtype`` keep the batch's own type (their readers still infer).
-    vcol = F.col(col)
-    if m.get("vtype"):
-        vcol = vcol.cast(f"array<{m['vtype']}>")
     delta = new_emb.select(
         F.col("vec_id").cast("long").alias("neighbor_id"),
-        vcol.alias("_v"),
+        F.col(col).cast(f"array<{vtype}>").alias("_v"),
         F.element_at(assign(F.col(col)), 1).alias("cell"),
     )
     seg = indexfmt.new_dir_name("seg")
     # cell-clustered write, same rationale as write_ivf_index
     # (guide §6): ≈1 file per touched cell instead of
     # batch-partitions × cells. The touched-cell report comes back
-    # for free from the WRITTEN partition layout (r13 optimization
-    # round — guide §1.2: the write already materializes the answer),
-    # replacing a separate localCheckpoint + distinct().collect() job
-    # pair; cells are non-null ints by construction (the assignment
-    # UDF always emits a cell), so the dir names are the exact set.
+    # for free from the WRITTEN partition layout (guide §1.2: the
+    # write already materializes the answer) instead of a separate
+    # localCheckpoint + distinct().collect() job pair; cells are
+    # non-null ints by construction (the assignment UDF always emits a
+    # cell), so the dir names are the exact set.
     delta.repartition(F.col("cell")).write.mode("overwrite").partitionBy(
         "cell"
     ).parquet(f"{path}/{seg}")
@@ -1722,21 +1667,20 @@ def merge_ivf_index(
         # crash-equivalent orphan — discard it, index untouched
         shutil.rmtree(f"{path}/{seg}", ignore_errors=True)
         return touched
-    manifest = {
-        "format": IVF_INDEX_FORMAT,
-        "version": int(m["version"]) + 1,
-        "segments": [*m["segments"], seg],
-        "centroids": m["centroids"],
-        # live tombstones carry through a merge untouched (the
-        # batch is new vec ids by contract, never resurrections)
-        "tombstones": m.get("tombstones", []),
-    }
-    if m.get("vtype"):
-        manifest["vtype"] = m["vtype"]
-    indexfmt.write_manifest(path, manifest)  # ---- the commit point ----
+    indexfmt.write_manifest(  # ---- the single commit point ----
+        path,
+        {
+            # centroids, vtype and live tombstones carry through a
+            # merge untouched (the batch is new vec ids by contract,
+            # never resurrections)
+            **m,
+            "version": int(m["version"]) + 1,
+            "segments": [*m["segments"], seg],
+        },
+    )
     requantized = False
     if max_occupancy_ratio is not None:
-        # drift-remediation POLICY knob (r12) — sibling of
+        # drift-remediation POLICY knob — sibling of
         # merge_positional_index(max_segments=): streamed IVF landings
         # self-remediate the way streamed text/positional landings
         # self-compact. Each merge assigns into FROZEN centroids, so a
@@ -1747,7 +1691,7 @@ def merge_ivf_index(
         # the live set, test-pinned), restoring the n/k probe bound.
         # Amortized exactly like tiered compaction: the O(index)
         # retrain fires only when drift has accrued. Checked BEFORE
-        # the segment policy (r12 ADVICE): a retrain folds the index
+        # the segment policy: a retrain folds the index
         # to one segment anyway, so running compaction first when
         # both knobs fire would pay the O(index) fold twice.
         requantized = maybe_requantize_ivf_index(
@@ -1776,121 +1720,49 @@ def delete_from_ivf_index(
     O(|deleted ids|) write + a pointer flip, never O(index).
 
     ``max_deleted_ratio`` is the deletes-percentage compaction POLICY
-    (mirroring the text twin): when the cumulative tombstone count
-    exceeds that ratio of the live cell rows, compaction runs inline,
-    bounding the serving anti-join and the dead bytes on disk. Safe
-    under concurrent readers via generation retention. Returns the
-    number of newly tombstoned ids."""
-    from . import indexfmt
-
-    spark = vec_ids.sparkSession
-    m = indexfmt.read_manifest(path, IVF_INDEX_FORMAT)
-    tomb = indexfmt.new_dir_name("tomb")
-    # write-first + footer count, same rationale as
-    # delete_from_text_index (r13): one evaluation, 3 jobs → 2
-    vec_ids.select(F.col("vec_id").alias("neighbor_id")).distinct().write.mode(
-        "overwrite"
-    ).parquet(f"{path}/{tomb}")
-    n = spark.read.parquet(f"{path}/{tomb}").count()
-    if n == 0:
-        shutil.rmtree(f"{path}/{tomb}", ignore_errors=True)
-        return 0
-    tombs = [*m.get("tombstones", []), tomb]
-    indexfmt.write_manifest(  # ---- the single commit point ----
+    (mirroring the text twin), counted over the segments' vec ids:
+    above it, ``compact_ivf_index`` runs inline, bounding the serving
+    anti-join and the dead bytes on disk. The commit path, the policy
+    and the return value (distinct ids in the request) are
+    :func:`.indexfmt.delete_ids`."""
+    return indexfmt.delete_ids(
+        vec_ids.select(F.col("vec_id").alias("neighbor_id")),
         path,
-        {
-            **m,
-            "version": int(m["version"]) + 1,
-            "tombstones": tombs,
-        },
+        IVF_INDEX_FORMAT,
+        "segments",
+        max_deleted_ratio,
+        lambda: compact_ivf_index(vec_ids.sparkSession, path),
     )
-    if max_deleted_ratio is not None:
-        from functools import reduce
-
-        n_rows = sum(
-            spark.read.parquet(f"{path}/{s}").count() for s in m["segments"]
-        )
-        # n_dead counts DISTINCT tombstoned ids THAT EXIST in the
-        # index (one narrow vec-id column scan semi-joined against
-        # the broadcast tombstone set) — raw tombstone-row sums
-        # over-count on re-deletes / never-indexed ids, and once the
-        # inflated n_dead reaches n_rows the 0 < n_dead < n_rows
-        # guard would disable the policy for good (text twin has the
-        # same fix).
-        _union = lambda a, b: a.unionByName(b)  # noqa: E731
-        dead_ids = reduce(
-            _union,
-            [
-                spark.read.parquet(f"{path}/{t}").select("neighbor_id")
-                for t in tombs
-            ],
-        ).distinct()
-        live = reduce(
-            _union,
-            [
-                spark.read.parquet(f"{path}/{s}").select("neighbor_id")
-                for s in m["segments"]
-            ],
-        )
-        n_dead = (
-            live.join(F.broadcast(dead_ids), "neighbor_id", "left_semi")
-            .select("neighbor_id")
-            .distinct()
-            .count()
-        )
-        # n_dead == n_rows stays tombstoned: compaction refuses to
-        # publish an empty index (caller drops the directory instead)
-        if 0 < n_dead < n_rows and n_dead / n_rows > max_deleted_ratio:
-            compact_ivf_index(spark, path)
-    return n
 
 
 def compact_ivf_index(spark, path: str) -> int:
-    """Fold all IVF segments back into ONE and vacuum unreferenced
-    children (pre-compaction segments, crashed-merge orphans) — the
+    """Fold all IVF segments back into ONE, applying live tombstones
+    physically, and commit through :func:`.indexfmt.commit_fold`
+    (empty-fold refusal, manifest flip, vacuum of pre-compaction
+    segments, tombstone sets and crashed-merge orphans) — the
     tiered-merge step bounding per-query segment fan-out, mirroring
-    ``text.compact_text_index``. The quantizer carries over untouched
-    (compaction is a layout operation, not a retrain). Returns the
-    number of segments folded. O(index) by design, scheduled offline
-    like any segment-merge policy."""
-    from . import indexfmt
-
+    ``text.compact_text_index``. The quantizer and the recorded
+    element type carry over untouched (compaction is a layout
+    operation, not a retrain). Returns the number of segments folded.
+    O(index) by design, scheduled offline like any segment-merge
+    policy."""
     m = indexfmt.read_manifest(path, IVF_INDEX_FORMAT)
-    n = len(m["segments"])
-    _, all_cells = read_ivf_index(spark, path)
-    if m.get("tombstones"):
-        # the reader already masked tombstoned vectors; refuse to
-        # publish an unreadable empty index (write_ivf_index contract)
-        all_cells = all_cells.localCheckpoint()
-        if all_cells.isEmpty():
-            raise ValueError(
-                "compact_ivf_index: every vector is tombstoned — an "
-                "empty index is unreadable on the way back; delete "
-                "the index directory instead"
-            )
+    vtype = indexfmt.required(m, "vtype")
+    cells = indexfmt.read_live(
+        spark, path, m, m["segments"], ["neighbor_id", "_v", "cell"], "neighbor_id"
+    )
     seg = indexfmt.new_dir_name("seg")
     # cell-clustered rewrite (guide §6): the fold's whole point is
     # bounding read fan-out, so it must not re-emit
     # source-partitions × cells small files
-    all_cells.repartition(F.col("cell")).write.mode("overwrite").partitionBy(
+    cells.repartition(F.col("cell")).write.mode("overwrite").partitionBy(
         "cell"
     ).parquet(f"{path}/{seg}")
-    indexfmt.write_manifest(
-        path,
-        {
-            "format": IVF_INDEX_FORMAT,
-            "version": int(m["version"]) + 1,
-            "segments": [seg],
-            "centroids": m["centroids"],
-            # the rewritten segment's type IS the union-widened type,
-            # so recording it here also upgrades a legacy (pre-vtype)
-            # index to the pinned-schema contract at its next fold
-            "vtype": all_cells.schema["_v"].dataType.elementType
-            .simpleString(),
-        },
+    indexfmt.commit_fold(
+        path, m, seg, "cell", "compact_ivf_index",
+        centroids=m["centroids"], vtype=vtype,
     )
-    indexfmt.vacuum(path, IVF_INDEX_FORMAT)
-    return n
+    return len(m["segments"])
 
 
 def requantize_ivf_index(
@@ -1927,8 +1799,6 @@ def requantize_ivf_index(
     lands in fresh child directories, one pointer flip commits, and
     the closing vacuum spares retained generations. Returns the new
     cell count."""
-    from . import indexfmt
-
     m = indexfmt.read_manifest(path, IVF_INDEX_FORMAT)
     # ``_cells`` lets the drift POLICY (maybe_requantize_ivf_index)
     # hand over the postings frame it already opened for the
@@ -1969,18 +1839,11 @@ def requantize_ivf_index(
         .parquet(f"{path}/{seg}"),
         lambda: _write_centroid_table(spark, cents, f"{path}/{cent_dir}"),
     )
-    indexfmt.write_manifest(  # ---- the single commit point ----
-        path,
-        {
-            "format": IVF_INDEX_FORMAT,
-            "version": int(m["version"]) + 1,
-            "segments": [seg],
-            "centroids": cent_dir,
-            "vtype": live.schema["embedding"].dataType.elementType
-            .simpleString(),
-        },
+    indexfmt.commit_fold(
+        path, m, seg, "cell", "requantize_ivf_index",
+        centroids=cent_dir,
+        vtype=live.schema["embedding"].dataType.elementType.simpleString(),
     )
-    indexfmt.vacuum(path, IVF_INDEX_FORMAT)
     return len(cents)
 
 

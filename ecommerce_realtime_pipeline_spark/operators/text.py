@@ -24,6 +24,8 @@ from pyspark.sql import functions as F
 from ecommerce_realtime_pipeline_spark.session import materialize as _materialize
 from ecommerce_realtime_pipeline_spark.session import overlapped
 
+from . import indexfmt
+
 
 def _lazy_materialize(df):
     return _materialize(df, eager=False)
@@ -650,13 +652,11 @@ def write_text_index(docs: DataFrame, path: str) -> None:
     exactly like the Jaccard blocker."""
     import uuid as _uuid
 
-    from . import indexfmt
-
     base, postings = _doc_postings(docs)
     if base.isEmpty():
         # an empty partitionBy write produces a directory Spark cannot
         # re-read (UNABLE_TO_INFER_SCHEMA) — refuse loudly instead of
-        # publishing an unreadable index (empty-corpus audit, r7)
+        # publishing an unreadable index
         raise ValueError(
             "write_text_index: empty corpus — a search index over "
             "nothing is unreadable on the way back; filter upstream"
@@ -727,25 +727,10 @@ def read_text_index(
     merge reclaims them — documented, test-pinned). The tombstone set
     is bounded by deletes-since-compaction, which the compaction
     policy keeps broadcast-small."""
-    from functools import reduce
-
-    from . import indexfmt
-
     m = indexfmt.read_manifest(path, TEXT_INDEX_FORMAT, version=version)
-    segs = [
-        spark.read.parquet(f"{path}/{s}").select("token", "doc_id", "tf", "dl")
-        for s in m["segments"]
-    ]
-    postings = reduce(lambda a, b: a.unionByName(b), segs)
-    tombs = m.get("tombstones", [])
-    if tombs:
-        dead = reduce(
-            lambda a, b: a.unionByName(b),
-            [spark.read.parquet(f"{path}/{t}").select("doc_id") for t in tombs],
-        )
-        postings = postings.join(
-            F.broadcast(dead), "doc_id", "left_anti"
-        ).select("token", "doc_id", "tf", "dl")
+    postings = indexfmt.read_live(
+        spark, path, m, m["segments"], ["token", "doc_id", "tf", "dl"], "doc_id"
+    )
     dfreq = spark.read.parquet(f"{path}/{m['dfreq']}")
     stats = spark.read.parquet(f"{path}/{m['stats']}")
     return postings, dfreq, stats
@@ -829,10 +814,9 @@ def merge_text_index(
     the driver — the contract check and the did-anything-land gate are
     both 1-row aggregates, so the only driver-side list is the capped
     sample)."""
-    from . import indexfmt
-
     spark = new_docs.sparkSession
     m = indexfmt.read_manifest(path, TEXT_INDEX_FORMAT)
+    doc_tbls = indexfmt.required(m, "docs")
     base, delta = _doc_postings(new_docs)
     if base.isEmpty():
         return []
@@ -923,15 +907,14 @@ def merge_text_index(
     indexfmt.write_manifest(  # ---- the single commit point ----
         path,
         {
-            "format": TEXT_INDEX_FORMAT,
+            # live tombstones carry through a merge untouched (the
+            # batch is new doc ids by contract, never resurrections)
+            **m,
             "version": int(m["version"]) + 1,
             "segments": segments,
             "dfreq": dfreq,
             "stats": stats,
-            "docs": [*m.get("docs", []), docs_tbl],
-            # live tombstones carry through a merge untouched (the
-            # batch is new doc ids by contract, never resurrections)
-            "tombstones": m.get("tombstones", []),
+            "docs": [*doc_tbls, docs_tbl],
         },
     )
     if max_segments is not None and len(segments) > max_segments:
@@ -955,229 +938,76 @@ def delete_from_text_index(
     deletes). An UPDATE is delete + `merge_text_index` of the new
     version under the same contract.
 
-    Cost: O(|deleted ids|) write + a pointer flip — never O(index);
-    serving pays one broadcast anti-join while tombstones are live,
-    which the compaction policy keeps bounded. ``max_deleted_ratio``
-    makes that policy EXPLICIT (Lucene's deletes-percentage tier
-    trigger): when set and the cumulative tombstone count exceeds the
-    ratio of the index's doc count, compaction runs inline — so the
-    stale-idf window, the serving anti-join size, and the dead bytes
-    on disk are all bounded by the knob. Safe under concurrent
-    readers via generation retention, same as ``max_segments``.
-    Returns the number of newly tombstoned ids."""
-    from . import indexfmt
-
-    import shutil as _shutil
-
-    spark = doc_ids.sparkSession
-    m = indexfmt.read_manifest(path, TEXT_INDEX_FORMAT)
-    tomb = indexfmt.new_dir_name("tomb")
-    # ONE evaluation of the id set (r13 optimization round): write the
-    # tombstone child first (unreferenced until the flip), count from
-    # its parquet footers (metadata-only), discard the empty child on
-    # a no-op delete — replaces the localCheckpoint + count + write
-    # triple (3 jobs → 2) the old shape paid per delete.
-    doc_ids.select("doc_id").distinct().write.mode("overwrite").parquet(
-        f"{path}/{tomb}"
-    )
-    n = spark.read.parquet(f"{path}/{tomb}").count()
-    if n == 0:
-        _shutil.rmtree(f"{path}/{tomb}", ignore_errors=True)
-        return 0
-    tombs = [*m.get("tombstones", []), tomb]
-    indexfmt.write_manifest(  # ---- the single commit point ----
+    Cost: O(|deleted ids|) write + a pointer flip — never O(index).
+    ``max_deleted_ratio`` is the deletes-percentage compaction policy,
+    counted over the ``docs`` sidecar: above it, ``compact_text_index``
+    runs inline, so the stale-idf window, the serving anti-join size
+    and the dead bytes on disk are all bounded by the knob. The commit
+    path, the policy and the return value (distinct ids in the
+    request) are :func:`.indexfmt.delete_ids`."""
+    return indexfmt.delete_ids(
+        doc_ids.select("doc_id"),
         path,
-        {
-            **m,
-            "version": int(m["version"]) + 1,
-            "tombstones": tombs,
-        },
+        TEXT_INDEX_FORMAT,
+        "docs",
+        max_deleted_ratio,
+        lambda: compact_text_index(doc_ids.sparkSession, path),
     )
-    if max_deleted_ratio is not None:
-        from functools import reduce
-
-        n_docs = int(
-            spark.read.parquet(f"{path}/{m['stats']}").collect()[0]["n_docs"]
-        )
-        # n_dead counts DISTINCT tombstoned ids THAT EXIST in the
-        # index — raw tombstone-row sums over-count (re-deleting an
-        # already-tombstoned id, or deleting an id the index never
-        # held, inflates the ratio; once the inflated n_dead reaches
-        # n_docs the 0 < n_dead < n_docs guard would disable the
-        # policy for good). The live doc plane is the |docs|-row
-        # sidecar when it covers the whole index, else the postings
-        # doc_id column; either way one narrow scan semi-joined
-        # against the broadcast (bounded) tombstone set.
-        _union = lambda a, b: a.unionByName(b)  # noqa: E731
-        dead_ids = reduce(
-            _union,
-            [spark.read.parquet(f"{path}/{t}").select("doc_id") for t in tombs],
-        ).distinct()
-        doc_tbls = m.get("docs", [])
-        live = (
-            reduce(
-                _union,
-                [
-                    spark.read.parquet(f"{path}/{t}").select("doc_id")
-                    for t in doc_tbls
-                ],
-            )
-            if doc_tbls
-            else None
-        )
-        if live is None or live.count() < n_docs:  # partial sidecar
-            post = reduce(
-                _union,
-                [
-                    spark.read.parquet(f"{path}/{s}").select("doc_id")
-                    for s in m["segments"]
-                ],
-            )
-            live = post if live is None else live.unionByName(post)
-        n_dead = (
-            live.join(F.broadcast(dead_ids), "doc_id", "left_semi")
-            .select("doc_id")
-            .distinct()
-            .count()
-        )
-        # n_dead == n_docs stays tombstoned: compaction refuses to
-        # publish an empty index (caller drops the directory instead)
-        if 0 < n_dead < n_docs and n_dead / n_docs > max_deleted_ratio:
-            compact_text_index(spark, path)
-    return n
 
 
 def compact_text_index(spark, path: str) -> int:
     """Fold all segments back into ONE (the Lucene tiered-merge
-    step): rewrites the unioned postings as a single token-partitioned
-    segment, flips the manifest, and vacuums every unreferenced child
-    (pre-compaction segments, superseded dfreq/stats generations,
-    tombstone sets, crashed-merge orphans). With NO live tombstones,
-    dfreq/stats are already corpus-accurate and carry over by rewrite;
-    with tombstones, compaction APPLIES them physically (the surviving
-    postings are what gets rewritten — `read_text_index` masks) and
-    RECOMPUTES dfreq/stats exactly from the survivors, clearing the
-    tombstone list — the Lucene segment merge reclaiming deletes, so
-    idf/avgdl snap from the documented stale values to exact. Returns
-    the number of segments folded. O(index) by design — the offline
-    amortization knob that bounds per-merge read amplification,
-    scheduled like any segment-merge policy (e.g. when |segments| or
-    |tombstones| exceeds a tier size). The closing vacuum spares
-    children referenced by retained manifest generations, so readers
-    holding the previous generation survive an inline compaction."""
-    from functools import reduce
-
-    from . import indexfmt
-
+    step): rewrites the live (tombstone-masked) postings as a single
+    token-partitioned segment, RECOMPUTES dfreq/stats from the
+    survivors — dfreq from the surviving postings, stats from the
+    per-doc (doc_id, dl) ``docs`` sidecar, which also holds docs whose
+    text tokenized to zero tokens — folds the sidecar generations to
+    one table of the survivors, and hands the commit to
+    :func:`.indexfmt.commit_fold` (empty-fold refusal, manifest flip
+    with the tombstone list cleared, vacuum of every unreferenced
+    child). With no tombstones the recompute equals the carried
+    values; with tombstones idf/avgdl snap from the documented stale
+    values to exact — the Lucene segment merge reclaiming deletes.
+    Returns the number of segments folded. O(index) by design — the
+    offline amortization knob that bounds per-merge read
+    amplification, scheduled like any segment-merge policy. The
+    closing vacuum spares children referenced by retained manifest
+    generations, so readers holding the previous generation survive
+    an inline compaction."""
     m = indexfmt.read_manifest(path, TEXT_INDEX_FORMAT)
-    n = len(m["segments"])
-    postings, dfreq_df, stats_df = read_text_index(spark, path)
-    # the per-doc (doc_id, dl) sidecar — the survivor-set ground truth
-    # that includes zero-token docs (they have stats presence but no
-    # postings rows, so a postings-derived recount would drop them)
-    doc_tbls = m.get("docs", [])
-    survivors = (
-        reduce(
-            lambda a, b: a.unionByName(b),
-            [
-                spark.read.parquet(f"{path}/{t}").select("doc_id", "dl")
-                for t in doc_tbls
-            ],
-        )
-        if doc_tbls
-        else None
+    postings = indexfmt.read_live(
+        spark, path, m, m["segments"], ["token", "doc_id", "tf", "dl"], "doc_id"
     )
-    if survivors is not None:
-        # The sidecar can be PARTIAL: an index built by a pre-sidecar
-        # writer then merged by sidecar-writing code carries sidecar
-        # tables only for the merged batches, and trusting it alone
-        # would silently drop every pre-sidecar doc from the recomputed
-        # stats (wrong avgdl/idf) AND from the folded sidecar. The
-        # manifest stats row is the ground-truth UNMASKED doc count:
-        # when the sidecar covers fewer docs, union it with the
-        # postings-derived doc set (which misses only zero-token docs —
-        # exactly the rows the sidecar DOES have) and dedupe by doc_id;
-        # the two agree on dl wherever both carry a row. Complete
-        # sidecars (every index this writer built) skip the extra scan.
-        n_indexed = int(
-            spark.read.parquet(f"{path}/{m['stats']}").collect()[0]["n_docs"]
-        )
-        if survivors.count() < n_indexed:
-            survivors = survivors.unionByName(
-                postings.select("doc_id", "dl").distinct()
-            ).dropDuplicates(["doc_id"])
-    if m.get("tombstones"):
-        postings = postings.localCheckpoint()
-        if postings.isEmpty():
-            # covers both all-tombstoned and the pathological
-            # every-survivor-has-zero-tokens corpus: either way the
-            # partitioned postings rewrite would be empty
-            raise ValueError(
-                "compact_text_index: every document is tombstoned (or "
-                "no surviving document has any tokens) — an empty "
-                "index is unreadable on the way back (same contract "
-                "as write_text_index); delete the index directory "
-                "instead"
-            )
-        dead = reduce(
-            lambda a, b: a.unionByName(b),
-            [
-                spark.read.parquet(f"{path}/{t}").select("doc_id")
-                for t in m["tombstones"]
-            ],
-        )
-        if survivors is not None:
-            survivors = survivors.join(
-                F.broadcast(dead), "doc_id", "left_anti"
-            ).localCheckpoint()
-        # postings are already tombstone-masked by the reader; dfreq
-        # recomputes from surviving postings, stats from the survivor
-        # DOC set (exact for zero-token docs; pre-sidecar indexes fall
-        # back to the postings-derived distinct, which excludes them)
-        dfreq_df = postings.groupBy("token").agg(
-            F.count("*").cast("long").alias("df")
-        )
-        stats_src = (
-            survivors
-            if survivors is not None
-            else postings.select("doc_id", "dl").distinct()
-        )
-        stats_df = stats_src.agg(
-            F.count("*").cast("long").alias("n_docs"),
-            F.sum("dl").cast("long").alias("sum_dl"),
-        )
+    survivors = indexfmt.read_live(
+        spark, path, m, indexfmt.required(m, "docs"), ["doc_id", "dl"], "doc_id"
+    )
     seg = indexfmt.new_dir_name("seg")
     dfreq = indexfmt.new_dir_name("dfreq")
     stats = indexfmt.new_dir_name("stats")
+    docs_tbl = indexfmt.new_dir_name("docs")
     # fresh unreferenced names ahead of the flip — independent write
     # jobs, overlapped (guide §2.6)
-    writes = [
+    overlapped(
         lambda: postings.write.mode("overwrite")
         .partitionBy("token")
         .parquet(f"{path}/{seg}"),
-        lambda: dfreq_df.write.mode("overwrite").parquet(f"{path}/{dfreq}"),
-        lambda: stats_df.write.mode("overwrite").parquet(f"{path}/{stats}"),
-    ]
-    manifest = {
-        "format": TEXT_INDEX_FORMAT,
-        "version": int(m["version"]) + 1,
-        "segments": [seg],
-        "dfreq": dfreq,
-        "stats": stats,
-    }
-    if survivors is not None:
-        # fold the sidecar generations to one table of the survivors
-        docs_tbl = indexfmt.new_dir_name("docs")
-        writes.append(
-            lambda: survivors.write.mode("overwrite").parquet(
-                f"{path}/{docs_tbl}"
-            )
+        lambda: postings.groupBy("token")
+        .agg(F.count("*").cast("long").alias("df"))
+        .write.mode("overwrite")
+        .parquet(f"{path}/{dfreq}"),
+        lambda: survivors.agg(
+            F.count("*").cast("long").alias("n_docs"),
+            F.sum("dl").cast("long").alias("sum_dl"),
         )
-        manifest["docs"] = [docs_tbl]
-    overlapped(*writes)
-    indexfmt.write_manifest(path, manifest)
-    indexfmt.vacuum(path, TEXT_INDEX_FORMAT)
-    return n
+        .write.mode("overwrite")
+        .parquet(f"{path}/{stats}"),
+        lambda: survivors.write.mode("overwrite").parquet(f"{path}/{docs_tbl}"),
+    )
+    indexfmt.commit_fold(
+        path, m, seg, "token", "compact_text_index",
+        dfreq=dfreq, stats=stats, docs=[docs_tbl],
+    )
+    return len(m["segments"])
 
 
 # -- positional index (phrase / proximity search) ----------------------------
@@ -1216,10 +1046,10 @@ HIVE_DEFAULT_PARTITION = "__HIVE_DEFAULT_PARTITION__"
 def _check_written_segment(seg_dir: str, caller: str) -> int:
     """POST-WRITE contract check for a token-partitioned segment:
     inspect the directory the write just produced instead of paying a
-    separate pre-write validation pass (r13 — the old
-    ``_positional_batch_counts`` aggregate re-tokenized the whole
-    batch one extra time per write/merge, a full Spark job whose
-    answer the written directory layout already carries for free).
+    separate pre-write validation pass — an aggregate that would
+    re-tokenize the whole batch one extra time per write/merge, a full
+    Spark job whose answer the written directory layout already
+    carries for free.
 
     - a ``__HIVE_DEFAULT_PARTITION__`` child is EXACTLY a NULL/empty
       token in the batch (``tokens('')`` yields ``['']`` and the
@@ -1258,8 +1088,6 @@ def write_positional_index(docs: DataFrame, path: str) -> None:
     positional posting-list seek (plan-pinned in tests)."""
     import uuid as _uuid
 
-    from . import indexfmt
-
     import shutil as _shutil
 
     postings = positional_postings(docs)
@@ -1271,7 +1099,7 @@ def write_positional_index(docs: DataFrame, path: str) -> None:
     # visit every directory). A production corpus with stopword-class
     # hot tokens adds doc_id to the distribution key (more files per
     # hot directory, balanced tasks) — the standard skew knob.
-    # WRITE FIRST, validate from the produced layout (r13): the
+    # WRITE FIRST, validate from the produced layout: the
     # NULL/empty-token and empty-corpus contracts are both visible in
     # the staged segment's directory fan-out, so checking there
     # replaces the old pre-write validation aggregate (one full
@@ -1339,14 +1167,13 @@ def merge_positional_index(
     concurrent readers via :mod:`.indexfmt` generation retention.
     Returns the number of live segments after the merge (1 when the
     inline compaction fired)."""
-    from . import indexfmt
-
     import shutil as _shutil
 
     m = indexfmt.read_manifest(path, POS_INDEX_FORMAT)
+    doc_tbls = indexfmt.required(m, "docs")
     delta = positional_postings(new_docs)
     seg = indexfmt.new_dir_name("seg")
-    # write first, validate from the produced layout (r13, same as
+    # write first, validate from the produced layout (same as
     # write_positional_index): the segment lands under a fresh name no
     # manifest references, so discarding it on a failed check is
     # crash-equivalent (orphan, reclaimed by compaction) — never torn
@@ -1375,7 +1202,7 @@ def merge_positional_index(
             **m,
             "version": int(m["version"]) + 1,
             "segments": segments,
-            "docs": [*m.get("docs", []), docs_tbl],
+            "docs": [*doc_tbls, docs_tbl],
         },
     )
     if max_segments is not None and len(segments) > max_segments:
@@ -1391,28 +1218,13 @@ def read_positional_index(
     (time travel inside the retention horizon) — and open the
     positional postings: the union of the manifest's segment scans,
     each keeping its own token partitioning so a term filter prunes to
-    |terms| directories PER SEGMENT. Tombstones (future deletes) are
-    masked by the same broadcast anti-join as the sibling indexes."""
-    from functools import reduce
-
-    from . import indexfmt
-
+    |terms| directories PER SEGMENT. Tombstones are masked by the
+    same broadcast anti-join as the sibling indexes
+    (:func:`.indexfmt.read_live`)."""
     m = indexfmt.read_manifest(path, POS_INDEX_FORMAT, version=version)
-    segs = [
-        spark.read.parquet(f"{path}/{s}").select("token", "doc_id", "pos")
-        for s in m["segments"]
-    ]
-    postings = reduce(lambda a, b: a.unionByName(b), segs)
-    tombs = m.get("tombstones", [])
-    if tombs:
-        dead = reduce(
-            lambda a, b: a.unionByName(b),
-            [spark.read.parquet(f"{path}/{t}").select("doc_id") for t in tombs],
-        )
-        postings = postings.join(
-            F.broadcast(dead), "doc_id", "left_anti"
-        ).select("token", "doc_id", "pos")
-    return postings
+    return indexfmt.read_live(
+        spark, path, m, m["segments"], ["token", "doc_id", "pos"], "doc_id"
+    )
 
 
 def _escape_partition_value(spark, value: str) -> str:
@@ -1465,14 +1277,12 @@ def _seek_token_dirs(
     the documented row-identity with ``read(...).filter(isin(terms))``
     breaks and phrase occurrence counts silently multiply. The
     existence probe routes through :func:`..operators.indexfmt.
-    existing_dirs` — BATCHED per segment (r12 judge task): short term
-    lists keep one HEAD-class ``dir_exists`` per (term, segment)
-    (local ``os.path`` / Hadoop ``FileSystem`` by scheme), wide ones
-    pay ONE segment listing instead of k serialized object-store
-    round-trips, so probe cost is min(k HEADs, 1 LIST) per segment."""
+    existing_dirs` — BATCHED per segment: short term lists keep one
+    HEAD-class ``dir_exists`` per (term, segment) (local ``os.path`` /
+    Hadoop ``FileSystem`` by scheme), wide ones pay ONE segment
+    listing instead of k serialized object-store round-trips, so
+    probe cost is min(k HEADs, 1 LIST) per segment."""
     from functools import reduce
-
-    from . import indexfmt
 
     dirs = {
         f"token={_escape_partition_value(spark, t)}": t
@@ -1491,21 +1301,6 @@ def _seek_token_dirs(
     return reduce(lambda a, b: a.unionByName(b), parts)
 
 
-def _mask_tombstones(spark, path: str, m: dict, df: DataFrame) -> DataFrame:
-    """Broadcast anti-join of the manifest's live tombstone sets —
-    the shared delete mask every reader applies."""
-    from functools import reduce
-
-    tombs = m.get("tombstones", [])
-    if not tombs:
-        return df
-    dead = reduce(
-        lambda a, b: a.unionByName(b),
-        [spark.read.parquet(f"{path}/{t}").select("doc_id") for t in tombs],
-    )
-    return df.join(F.broadcast(dead), "doc_id", "left_anti")
-
-
 def seek_positional_tokens(
     spark, path: str, terms: list[str], version: int | None = None
 ) -> DataFrame:
@@ -1520,13 +1315,11 @@ def seek_positional_tokens(
     For DataFrame-valued term sets (bulk phrase batches) keep
     :func:`read_positional_postings_for_tokens` — DPP does the seek
     there."""
-    from . import indexfmt
-
     m = indexfmt.read_manifest(path, POS_INDEX_FORMAT, version=version)
     df = _seek_token_dirs(spark, path, m, terms, "doc_id long, pos int")
     if df is None:
         return spark.createDataFrame([], "token string, doc_id long, pos int")
-    return _mask_tombstones(spark, path, m, df).select(
+    return indexfmt.mask_tombstones(spark, path, m, df, "doc_id").select(
         "token", "doc_id", "pos"
     )
 
@@ -1540,8 +1333,6 @@ def seek_text_postings(
     multi-segment union read (test-pinned) minus the per-query
     |vocab|-directory discovery. dfreq/stats stay plain-file reads
     (they are unpartitioned metadata tables)."""
-    from . import indexfmt
-
     m = indexfmt.read_manifest(path, TEXT_INDEX_FORMAT, version=version)
     df = _seek_token_dirs(
         spark, path, m, terms, "doc_id long, tf bigint, dl long"
@@ -1550,7 +1341,7 @@ def seek_text_postings(
         return spark.createDataFrame(
             [], "token string, doc_id long, tf bigint, dl long"
         )
-    return _mask_tombstones(spark, path, m, df).select(
+    return indexfmt.mask_tombstones(spark, path, m, df, "doc_id").select(
         "token", "doc_id", "tf", "dl"
     )
 
@@ -1565,8 +1356,6 @@ def read_text_index_meta(
     and never triggers its |vocab|-directory partition discovery —
     which ``read_text_index`` would pay just to hand back the same
     two frames."""
-    from . import indexfmt
-
     m = indexfmt.read_manifest(path, TEXT_INDEX_FORMAT, version=version)
     return (
         spark.read.parquet(f"{path}/{m['dfreq']}"),
@@ -1638,121 +1427,57 @@ def delete_from_positional_index(
     UPDATE is delete + ``merge_positional_index`` of the new version.
 
     Cost: O(|deleted ids|) write + a pointer flip — never O(index).
-    ``max_deleted_ratio`` is the same explicit deletes-percentage
-    policy as the other two families: n_dead counts DISTINCT
-    tombstoned ids THAT EXIST in the index (raw tombstone-row sums
-    over-count re-deletes and foreign ids — the accounting bug the r10
-    advice fixed on text/IVF, not re-introduced here), and when
-    n_dead/n_docs crosses the ratio, compaction runs inline — safe
-    under concurrent readers via generation retention. The |docs|-row
-    sidecar keeps that policy check |docs|-cheap; for a PRE-SIDECAR
-    index (manifest with no ``docs`` list) the fallback distincts the
-    |corpus tokens|-row positional plane instead — O(index) on that
-    legacy path until the next compaction writes a sidecar. Returns
-    the number of newly tombstoned ids."""
-    from functools import reduce
-
-    from . import indexfmt
-
-    import shutil as _shutil
-
-    spark = doc_ids.sparkSession
-    m = indexfmt.read_manifest(path, POS_INDEX_FORMAT)
-    tomb = indexfmt.new_dir_name("tomb")
-    # write-first + footer count, same rationale as
-    # delete_from_text_index (r13): one evaluation, 3 jobs → 2
-    doc_ids.select("doc_id").distinct().write.mode("overwrite").parquet(
-        f"{path}/{tomb}"
-    )
-    n = spark.read.parquet(f"{path}/{tomb}").count()
-    if n == 0:
-        _shutil.rmtree(f"{path}/{tomb}", ignore_errors=True)
-        return 0
-    tombs = [*m.get("tombstones", []), tomb]
-    indexfmt.write_manifest(  # ---- the single commit point ----
+    ``max_deleted_ratio`` is the same deletes-percentage policy as the
+    other two families, counted over the |docs|-row ``docs`` sidecar
+    (never the |tokens|-row positional plane); above it,
+    ``compact_positional_index`` runs inline. The commit path, the
+    policy and the return value (distinct ids in the request) are
+    :func:`.indexfmt.delete_ids`."""
+    return indexfmt.delete_ids(
+        doc_ids.select("doc_id"),
         path,
-        {
-            **m,
-            "version": int(m["version"]) + 1,
-            "tombstones": tombs,
-        },
+        POS_INDEX_FORMAT,
+        "docs",
+        max_deleted_ratio,
+        lambda: compact_positional_index(doc_ids.sparkSession, path),
     )
-    if max_deleted_ratio is not None:
-        _union = lambda a, b: a.unionByName(b)  # noqa: E731
-        # the |docs|-row sidecar is the live plane; fall back to the
-        # segments' doc_id column only for pre-sidecar indexes
-        doc_tbls = m.get("docs") or m["segments"]
-        live = reduce(
-            _union,
-            [
-                spark.read.parquet(f"{path}/{t}").select("doc_id")
-                for t in doc_tbls
-            ],
-        ).distinct()
-        dead_ids = reduce(
-            _union,
-            [spark.read.parquet(f"{path}/{t}").select("doc_id") for t in tombs],
-        ).distinct()
-        n_docs = live.count()
-        n_dead = live.join(
-            F.broadcast(dead_ids), "doc_id", "left_semi"
-        ).count()
-        # n_dead == n_docs stays tombstoned: compaction refuses to
-        # publish an empty index (caller drops the directory instead)
-        if 0 < n_dead < n_docs and n_dead / n_docs > max_deleted_ratio:
-            compact_positional_index(spark, path)
-    return n
 
 
 def compact_positional_index(spark, path: str) -> int:
     """Fold all positional segments back into ONE, applying live
     tombstones physically (the surviving postings are what gets
-    rewritten — exactly what :func:`read_positional_index` masks) and
-    clearing the tombstone list; the closing vacuum reclaims
-    pre-compaction segments, tombstone sets, and crashed-merge
-    orphans while sparing children referenced by RETAINED manifest
-    generations, so concurrent readers survive. Refuses to publish an
-    empty index (everything deleted — drop the directory instead).
+    rewritten — exactly what :func:`read_positional_index` masks),
+    fold the ``docs`` sidecar generations to one table of the
+    survivors, and commit through :func:`.indexfmt.commit_fold`:
+    an empty fold (everything deleted — drop the directory instead)
+    is refused, the flip clears the tombstone list, and the closing
+    vacuum reclaims pre-compaction segments, tombstone sets, and
+    crashed-merge orphans while sparing children referenced by
+    RETAINED manifest generations, so concurrent readers survive.
     Returns the number of segments folded. O(index) by design, the
     offline tiered-merge amortization step."""
-    from . import indexfmt
-
-    import shutil as _shutil
-
     m = indexfmt.read_manifest(path, POS_INDEX_FORMAT)
-    n = len(m["segments"])
-    postings = read_positional_index(spark, path)  # tombstones masked
-    seg = indexfmt.new_dir_name("seg")
-    # write first, inspect the produced fan-out (r13): the old
-    # pre-write isEmpty() probe cost one extra pass over the whole
-    # masked index; an all-tombstoned fold now shows up as a
-    # zero-token-directory segment, which is discarded unreferenced
-    # (crash-equivalent orphan) before the same refusal
-    postings.repartition(F.col("token")).write.mode("overwrite").partitionBy(
-        "token"
-    ).parquet(f"{path}/{seg}")
-    if _check_written_segment(f"{path}/{seg}", "compact_positional_index") == 0:
-        _shutil.rmtree(f"{path}/{seg}", ignore_errors=True)
-        raise ValueError(
-            "compact_positional_index: every doc is tombstoned — an "
-            "empty index is unreadable on the way back; drop the "
-            "directory instead of compacting it"
-        )
-    docs_tbl = indexfmt.new_dir_name("docs")
-    spark.read.parquet(f"{path}/{seg}").select(
-        "doc_id"
-    ).distinct().write.mode("overwrite").parquet(f"{path}/{docs_tbl}")
-    indexfmt.write_manifest(
-        path,
-        {
-            "format": POS_INDEX_FORMAT,
-            "version": int(m["version"]) + 1,
-            "segments": [seg],
-            "docs": [docs_tbl],
-        },
+    postings = indexfmt.read_live(
+        spark, path, m, m["segments"], ["token", "doc_id", "pos"], "doc_id"
     )
-    indexfmt.vacuum(path, POS_INDEX_FORMAT)
-    return n
+    survivors = indexfmt.read_live(
+        spark, path, m, indexfmt.required(m, "docs"), ["doc_id"], "doc_id"
+    )
+    seg = indexfmt.new_dir_name("seg")
+    docs_tbl = indexfmt.new_dir_name("docs")
+    overlapped(
+        lambda: postings.repartition(F.col("token"))
+        .write.mode("overwrite")
+        .partitionBy("token")
+        .parquet(f"{path}/{seg}"),
+        lambda: survivors.distinct()
+        .write.mode("overwrite")
+        .parquet(f"{path}/{docs_tbl}"),
+    )
+    indexfmt.commit_fold(
+        path, m, seg, "token", "compact_positional_index", docs=[docs_tbl]
+    )
+    return len(m["segments"])
 
 
 def phrase_occurrences_bulk(

@@ -225,3 +225,61 @@ def test_memo_publisher_rejects_unencodable_kwarg_by_name(
             spark, str(tmp_path / "t"), 0, 3, 0, 0,
             seed=5, metrics=P.ProducerMetrics(),
         )
+
+
+def test_topics_fixture_rebuild_clears_a_half_built_tree(spark, tmp_path):
+    """A builder that crashed after publishing envelopes but before
+    writing the counts file leaves a half-built tree. The next build
+    must start from an empty tree, not publish on top of the
+    leftovers: the fixture then holds exactly the files a real publish
+    of the spec writes, with the spec's record counts."""
+    import json
+    import os
+    import shutil
+
+    from ecommerce_realtime_pipeline_spark.plans import fixtures as FX
+    from ecommerce_realtime_pipeline_spark.plans import gen as GP
+    from ecommerce_realtime_pipeline_spark.sources import produce as P
+
+    spec = dict(
+        product_count=0, customer_count=6, order_count=0, event_count=0,
+        seed=71, n_partitions=2, entities=("customers",),
+    )
+    real = str(tmp_path / "real")
+    real_counts = P.produce_batch(spark, real, **spec)
+
+    def envelopes(root):
+        """relative dir -> (data file count, record count)"""
+        out = {}
+        for dp, _dn, fns in os.walk(root):
+            data = [f for f in fns if not f.startswith(("_", "."))]
+            if data:
+                lines = 0
+                for f in data:
+                    with open(os.path.join(dp, f)) as fh:
+                        lines += len(fh.read().splitlines())
+                out[os.path.relpath(dp, root)] = (len(data), lines)
+        return out
+
+    # the crashed builder's leftovers: a published tree plus one stray
+    # replayed envelope file, and no counts file
+    half = FX.session_path(
+        spark, "spark_graft_topics_",
+        json.dumps({"repeats": 1, **spec}, sort_keys=True),
+    )
+    shutil.rmtree(half, ignore_errors=True)
+    shutil.copytree(real, half)
+    topic_dir, envelope = next(
+        (dp, f) for dp, _dn, fns in os.walk(half)
+        for f in fns if not f.startswith(("_", "."))
+    )
+    shutil.copy(
+        os.path.join(topic_dir, envelope),
+        os.path.join(topic_dir, "stray-" + envelope),
+    )
+
+    path, counts = GP._produced_topics_fixture(spark, **spec)
+    assert path == half
+    assert counts == real_counts
+    assert envelopes(path) == envelopes(real)
+    assert sum(n for _f, n in envelopes(path).values()) == sum(counts.values())

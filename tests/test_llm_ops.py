@@ -2353,54 +2353,6 @@ def test_knn_graph_beam_recall_floor(spark):
     assert sum(recalls) / len(recalls) >= 0.4
 
 
-def test_compact_partial_sidecar_falls_back_to_postings(spark, tmp_path):
-    """r9-ADVICE regression: an index built by a PRE-sidecar writer
-    (simulated by stripping ``docs`` from the manifest) then merged by
-    sidecar-writing code carries sidecar tables only for the merged
-    batches. Compaction must NOT trust that partial sidecar — the
-    recomputed BM25 stats (and the folded sidecar) have to cover the
-    pre-sidecar survivors too, i.e. equal a fresh build over the
-    survivor set."""
-    from ecommerce_realtime_pipeline_spark.operators import indexfmt
-    from ecommerce_realtime_pipeline_spark.operators.text import (
-        TEXT_INDEX_FORMAT,
-        compact_text_index,
-        delete_from_text_index,
-        merge_text_index,
-        write_text_index,
-    )
-
-    base = [(i, f"tok{i} alpha beta") for i in range(6)]
-    extra = [(i, f"tok{i} gamma") for i in range(6, 9)]
-    inc = str(tmp_path / "inc")
-    write_text_index(_mk_docs(spark, base), inc)
-    # simulate the pre-sidecar layout: drop the docs pointer group
-    m = indexfmt.read_manifest(inc, TEXT_INDEX_FORMAT)
-    indexfmt.write_manifest(
-        inc,
-        {k: v for k, v in m.items() if k != "docs"}
-        | {"version": int(m["version"]) + 1},
-    )
-    merge_text_index(_mk_docs(spark, extra), inc)
-    m = indexfmt.read_manifest(inc, TEXT_INDEX_FORMAT)
-    assert len(m.get("docs", [])) == 1  # sidecar is PARTIAL by construction
-    # tombstone one pre-sidecar doc and one merged doc, then compact
-    assert (
-        delete_from_text_index(
-            spark.createDataFrame([(0,), (6,)], "doc_id long"), inc
-        )
-        == 2
-    )
-    compact_text_index(spark, inc)
-    fresh = str(tmp_path / "fresh")
-    write_text_index(_mk_docs(spark, base[1:] + extra[1:]), fresh)
-    assert _text_index_content(spark, inc) == _text_index_content(spark, fresh)
-    # the folded sidecar is now COMPLETE (future compactions can trust it)
-    m = indexfmt.read_manifest(inc, TEXT_INDEX_FORMAT)
-    docs = spark.read.parquet(f"{inc}/{m['docs'][0]}")
-    assert sorted(int(r["doc_id"]) for r in docs.collect()) == [1, 2, 3, 4, 5, 7, 8]
-
-
 def test_max_deleted_ratio_counts_distinct_live_dead(spark, tmp_path):
     """r9-ADVICE regression, both families: n_dead must count DISTINCT
     tombstoned ids THAT EXIST in the index. Raw tombstone-row sums let
@@ -2918,12 +2870,10 @@ def test_wide_cell_probe_takes_listing_branch(spark, tmp_path, monkeypatch):
 
 def test_ivf_vtype_pinned_across_heterogeneous_merge(spark, tmp_path):
     """The manifest records the index's `_v` element type at write
-    time and every mutation preserves it (r12 ADVICE): a float-built
-    index merged with an array<double> batch must stay float on disk
-    — the merge CASTS the batch — so the manifest-driven single-schema
-    cell seek reads every segment. A legacy manifest with the vtype
-    key stripped still seeks via one-time inference, and its next
-    compaction records the type."""
+    time and every mutation preserves it: a float-built index merged
+    with an array<double> batch must stay float on disk — the merge
+    CASTS the batch — so the manifest-driven single-schema cell seek
+    reads every segment."""
     from ecommerce_realtime_pipeline_spark.operators import indexfmt
 
     def mk(ids_, elem):
@@ -2946,17 +2896,66 @@ def test_ivf_vtype_pinned_across_heterogeneous_merge(spark, tmp_path):
     _, posts = SIM.seek_ivf_cells(spark, ivf, [0, 1])
     assert posts.schema["_v"].dataType.elementType.simpleString() == "float"
     assert posts.count() == 30  # both segments served through one schema
-    # legacy manifest (no vtype): seek falls back to inference
-    legacy = dict(m1)
-    legacy.pop("vtype")
-    legacy["version"] = int(m1["version"]) + 1
-    indexfmt.write_manifest(ivf, legacy)
-    _, posts2 = SIM.seek_ivf_cells(spark, ivf, [0, 1])
-    assert posts2.count() == 30
-    # compaction upgrades the legacy index to the pinned contract
-    SIM.compact_ivf_index(spark, ivf)
-    m2 = indexfmt.read_manifest(ivf, SIM.IVF_INDEX_FORMAT)
-    assert m2["vtype"] == "float"
+
+
+def _required_key_case(spark, root, fmt):
+    """(index path, stripped key, lifecycle calls that need the key)
+    for one index family, built small in-process."""
+    path = str(root / fmt)
+    if fmt == SIM.IVF_INDEX_FORMAT:
+        def emb(ids_):
+            return spark.createDataFrame(
+                [(i, [float(i % 5) - 2.0, 1.0, float(i % 3)]) for i in ids_],
+                "vec_id long, embedding array<float>",
+            )
+
+        SIM.write_ivf_index(emb(range(8)), path, n_centroids=2)
+        return path, "vtype", [
+            lambda: SIM.seek_ivf_cells(spark, path, [0, 1]),
+            lambda: SIM.merge_ivf_index(emb(range(8, 12)), path),
+            lambda: SIM.compact_ivf_index(spark, path),
+        ]
+    write, merge, delete, compact = {
+        TX.TEXT_INDEX_FORMAT: (
+            TX.write_text_index, TX.merge_text_index,
+            TX.delete_from_text_index, TX.compact_text_index,
+        ),
+        TX.POS_INDEX_FORMAT: (
+            TX.write_positional_index, TX.merge_positional_index,
+            TX.delete_from_positional_index, TX.compact_positional_index,
+        ),
+    }[fmt]
+    write(_mk_docs(spark, [(i, f"tok{i} alpha") for i in range(4)]), path)
+    return path, "docs", [
+        lambda: merge(_mk_docs(spark, [(9, "tok9 beta")]), path),
+        lambda: delete(
+            spark.createDataFrame([(1,)], "doc_id long"), path,
+            max_deleted_ratio=0.1,
+        ),
+        lambda: compact(spark, path),
+    ]
+
+
+@pytest.mark.parametrize("fmt", ["text-index", "pos-index", "ivf-index"])
+def test_manifest_missing_required_key_is_refused(spark, tmp_path, fmt):
+    """A manifest without the key every current writer of its format
+    records (``docs`` for text and positional, ``vtype`` for IVF) has
+    no fallback reader: every lifecycle call that needs the key raises
+    a ValueError naming the format and the key, before it writes
+    anything — never a KeyError, never silent schema inference."""
+    from ecommerce_realtime_pipeline_spark.operators import indexfmt
+
+    path, key, calls = _required_key_case(spark, tmp_path, fmt)
+    m = indexfmt.read_manifest(path, fmt)
+    stripped = {k: v for k, v in m.items() if k != key}
+    stripped["version"] = int(m["version"]) + 1
+    indexfmt.write_manifest(path, stripped)
+    children = sorted(os.listdir(path))
+    for call in calls:
+        with pytest.raises(ValueError, match=f"{fmt} manifest .*no '{key}' key"):
+            call()
+        assert indexfmt.read_manifest(path, fmt) == stripped
+    assert sorted(os.listdir(path)) == children
 
 
 def test_seek_ivf_cells_equals_pruned_read(spark, tmp_path):
