@@ -56,7 +56,13 @@ def _offsets_check(
     spark: SparkSession, offsets_path: str, max_age_seconds: float | None
 ) -> tuple[str, str, str]:
     """Consumer-offsets ledger exists and (optionally) is fresh — the
-    lag alarm a deployment points at the R19 bookkeeping table."""
+    lag alarm a deployment points at the R19 bookkeeping table.
+
+    The age is that of the newest ``last_updated``, which advances only
+    when a micro-batch lands rows (``run_ingest`` skips empty batches),
+    so it measures DATA progress, not consumer liveness: an idle topic
+    under a healthy consumer ages too. Liveness needs a progress-event
+    heartbeat (ROADMAP direction 2)."""
     try:
         if not os.path.exists(offsets_path):
             return ("consumer_offsets", FAIL, "ledger missing")
@@ -96,7 +102,9 @@ def health_checks(
     offsets_path: str | None = None,
     max_offset_age_seconds: float | None = None,
 ) -> DataFrame:
-    """Run all health checks; one (check, status, detail) row each."""
+    """Run all health checks; one (check, status, detail) row each.
+    ``max_offset_age_seconds`` bounds the offsets ledger's data-progress
+    age (see :func:`_offsets_check`), not consumer liveness."""
     rows = [_session_check(spark)]
     rows += [_table_check(spark, sf_dir, t) for t in tables]
     if offsets_path is not None:

@@ -1,6 +1,7 @@
-"""Session-shared fixture directories for the registered queries: the
+"""Session-shared fixture directories for the registered queries (the
 persisted indexes the serving queries read and the produced topic
-trees the pipeline queries ingest.
+trees the pipeline queries ingest), and the one writer of the
+hand-built envelope files the streaming fixture queries stream.
 
 A fixture path is keyed on the Spark application id plus a caller key,
 so every query in one session shares one build, and a new session (a
@@ -13,6 +14,7 @@ from __future__ import annotations
 
 import atexit
 import hashlib
+import json
 import os
 import shutil
 import tempfile
@@ -107,3 +109,32 @@ def build_once(path: str, ready, build) -> None:
                 os.remove(lockfile)
             except OSError:
                 pass
+
+
+#: arrival time of the hand-built fixture envelopes
+CONSUMED_AT = "2025-03-01T10:00:00Z"
+
+
+def envelope_line(
+    topic: str, offset: int, key: str, payload: dict, consumed_at: str = CONSUMED_AT
+) -> str:
+    """One ``RAW_ENVELOPE_SCHEMA`` JSON line on partition 0, with the
+    payload JSON-encoded as a string (the Kafka message value)."""
+    return json.dumps(
+        {
+            "topic": topic,
+            "topic_partition": 0,
+            "topic_offset": offset,
+            "message_key": key,
+            "payload": json.dumps(payload),
+            "consumed_at": consumed_at,
+        }
+    )
+
+
+def write_jsonl(dir: str, name: str, lines) -> None:
+    """Write ``lines`` as the JSON-lines file ``dir/name`` (one record
+    per line, newline-terminated), creating ``dir`` if needed."""
+    os.makedirs(dir, exist_ok=True)
+    with open(os.path.join(dir, name), "w") as f:
+        f.write("\n".join(lines) + "\n")

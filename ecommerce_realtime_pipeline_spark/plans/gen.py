@@ -58,6 +58,21 @@ def _pinned_state_partitions(spark: SparkSession, n: int = 4):
         spark.conf.set("spark.sql.shuffle.partitions", old)
 
 
+def _event_line(
+    offset: int, at, etype: str, cust: str = "c1", eid: str | None = None
+) -> str:
+    """An events-topic fixture envelope; the event id (default
+    ``e<offset>``) is also the message key."""
+    eid = eid or f"e{offset}"
+    payload = {
+        "event_id": eid,
+        "event_type": etype,
+        "customer_id": cust,
+        "timestamp": at.strftime("%Y-%m-%dT%H:%M:%SZ"),
+    }
+    return FX.envelope_line("events", offset, eid, payload)
+
+
 def _produced_topics_fixture(
     spark: SparkSession, repeats: int = 1, **produce_kw
 ) -> tuple[str, dict[str, int]]:
@@ -291,9 +306,6 @@ def streaming_windowed_kpi(spark: SparkSession, sf_dir: str) -> DataFrame:
     above), so a literal contract oracle value-gates them — the
     streaming machinery itself is not DuckDB-expressible."""
     import datetime as _dt
-    import json
-    import os
-    import shutil
     import tempfile
 
     from ecommerce_realtime_pipeline_spark.streaming import ingest as I
@@ -301,32 +313,7 @@ def streaming_windowed_kpi(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = _dt.datetime(2025, 3, 1, 10, 0, 0)
 
     def line(offset: int, mm: int, ss: int, etype: str) -> str:
-        ts = (base + _dt.timedelta(minutes=mm, seconds=ss)).strftime(
-            "%Y-%m-%dT%H:%M:%SZ"
-        )
-        payload = json.dumps(
-            {
-                "event_id": f"e{offset}",
-                "event_type": etype,
-                "customer_id": "c1",
-                "timestamp": ts,
-            }
-        )
-        return json.dumps(
-            {
-                "topic": "events",
-                "topic_partition": 0,
-                "topic_offset": offset,
-                "message_key": f"e{offset}",
-                "payload": payload,
-                "consumed_at": "2025-03-01T10:00:00Z",
-            }
-        )
-
-    def write(src: str, name: str, lines: list[str]) -> None:
-        os.makedirs(src, exist_ok=True)
-        with open(os.path.join(src, name), "w") as f:
-            f.write("\n".join(lines) + "\n")
+        return _event_line(offset, base + _dt.timedelta(minutes=mm, seconds=ss), etype)
 
     tmp = tempfile.mkdtemp(prefix="eng_window_q_")
     try:
@@ -340,7 +327,7 @@ def streaming_windowed_kpi(spark: SparkSession, sf_dir: str) -> DataFrame:
         ]
         with _pinned_state_partitions(spark):
             for i, lines in enumerate(batches):
-                write(src, f"b{i}.json", lines)
+                FX.write_jsonl(src, f"b{i}.json", lines)
                 q = I.run_windowed_counts(
                     spark, src, sink, ckpt, watermark="10 minutes"
                 )
@@ -373,9 +360,6 @@ def streaming_attribution_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     state machinery itself is not DuckDB-expressible).
     """
     import datetime as _dt
-    import json
-    import os
-    import shutil
     import tempfile
 
     from ecommerce_realtime_pipeline_spark.streaming import ingest as I
@@ -383,32 +367,8 @@ def streaming_attribution_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     day = _dt.datetime(2025, 3, 1)
 
     def line(offset: int, hh: int, mm: int, etype: str, cust: str, eid: str) -> str:
-        ts = (day + _dt.timedelta(hours=hh, minutes=mm)).strftime(
-            "%Y-%m-%dT%H:%M:%SZ"
-        )
-        payload = json.dumps(
-            {
-                "event_id": eid,
-                "event_type": etype,
-                "customer_id": cust,
-                "timestamp": ts,
-            }
-        )
-        return json.dumps(
-            {
-                "topic": "events",
-                "topic_partition": 0,
-                "topic_offset": offset,
-                "message_key": eid,
-                "payload": payload,
-                "consumed_at": "2025-03-01T10:00:00Z",
-            }
-        )
-
-    def write(src: str, name: str, lines: list[str]) -> None:
-        os.makedirs(src, exist_ok=True)
-        with open(os.path.join(src, name), "w") as f:
-            f.write("\n".join(lines) + "\n")
+        at = day + _dt.timedelta(hours=hh, minutes=mm)
+        return _event_line(offset, at, etype, cust, eid)
 
     tmp = tempfile.mkdtemp(prefix="eng_ssjoin_q_")
     try:
@@ -434,7 +394,7 @@ def streaming_attribution_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         ]
         with _pinned_state_partitions(spark):
             for i, lines in enumerate(batches):
-                write(src, f"b{i}.json", lines)
+                FX.write_jsonl(src, f"b{i}.json", lines)
                 q = I.run_attribution_join(
                     spark, src, sink, ckpt, watermark="10 minutes"
                 )
@@ -748,9 +708,6 @@ def streaming_late_drop_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     analytic constants → literal contract oracle (the counter itself is
     engine state, not DuckDB-expressible)."""
     import datetime as _dt
-    import json
-    import os
-    import shutil
     import tempfile
     import threading
     import time
@@ -762,32 +719,12 @@ def streaming_late_drop_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = _dt.datetime(2025, 3, 1, 10, 0, 0)
 
     def line(offset: int, mm: int, ss: int) -> str:
-        ts = (base + _dt.timedelta(minutes=mm, seconds=ss)).strftime(
-            "%Y-%m-%dT%H:%M:%SZ"
-        )
-        payload = json.dumps(
-            {
-                "event_id": f"e{offset}",
-                "event_type": "view",
-                "customer_id": "c1",
-                "timestamp": ts,
-            }
-        )
-        return json.dumps(
-            {
-                "topic": "events",
-                "topic_partition": 0,
-                "topic_offset": offset,
-                "message_key": f"e{offset}",
-                "payload": payload,
-                "consumed_at": "2025-03-01T10:00:00Z",
-            }
-        )
+        return _event_line(offset, base + _dt.timedelta(minutes=mm, seconds=ss), "view")
 
     class _DropListener(StreamingQueryListener):
         """Per-QUERY-ID accounting: listeners are session-global, so a
         concurrent stream in the same session would otherwise pollute
-        the counters (round-6 ADVICE). Events are bucketed by
+        the counters of a fixture that sums them. Events are bucketed by
         ``progress.id`` unconditionally (no registration race — ids
         are only known after ``start()`` returns, which can lose to
         the first async progress event) and the fixture sums ONLY its
@@ -827,7 +764,6 @@ def streaming_late_drop_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     spark.streams.addListener(listener)
     try:
         src, sink, ckpt = (os.path.join(tmp, d) for d in ("src", "sink", "ckpt"))
-        os.makedirs(src, exist_ok=True)
         batches = [
             [line(1, 0, 10), line(2, 0, 40), line(3, 15, 0)],
             [line(4, 0, 20), line(5, 30, 0)],  # late row + advancer
@@ -835,8 +771,7 @@ def streaming_late_drop_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         fixture_ids: set[str] = set()
         with _pinned_state_partitions(spark):
             for bi, lines in enumerate(batches):
-                with open(os.path.join(src, f"b{bi}.json"), "w") as f:
-                    f.write("\n".join(lines) + "\n")
+                FX.write_jsonl(src, f"b{bi}.json", lines)
                 q = I.run_windowed_counts(
                     spark, src, sink, ckpt, watermark="10 minutes"
                 )
@@ -891,9 +826,6 @@ def streaming_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     Expected rows are analytic constants → literal contract oracle
     (the session-state machinery is not DuckDB-expressible)."""
     import datetime as _dt
-    import json
-    import os
-    import shutil
     import tempfile
 
     from ecommerce_realtime_pipeline_spark.streaming import ingest as I
@@ -901,25 +833,7 @@ def streaming_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = _dt.datetime(2025, 3, 1, 10, 0, 0)
 
     def line(offset: int, mm: int, cust: str) -> str:
-        ts = (base + _dt.timedelta(minutes=mm)).strftime("%Y-%m-%dT%H:%M:%SZ")
-        payload = json.dumps(
-            {
-                "event_id": f"e{offset}",
-                "event_type": "page_view",
-                "customer_id": cust,
-                "timestamp": ts,
-            }
-        )
-        return json.dumps(
-            {
-                "topic": "events",
-                "topic_partition": 0,
-                "topic_offset": offset,
-                "message_key": f"e{offset}",
-                "payload": payload,
-                "consumed_at": "2025-03-01T10:00:00Z",
-            }
-        )
+        return _event_line(offset, base + _dt.timedelta(minutes=mm), "page_view", cust)
 
     tmp = tempfile.mkdtemp(prefix="eng_sessionw_q_")
     try:
@@ -928,11 +842,9 @@ def streaming_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
             [line(1, 0, "c1"), line(2, 5, "c1"), line(3, 10, "c2")],
             [line(4, 120, "c3")],  # watermark advancer; stays open
         ]
-        os.makedirs(src, exist_ok=True)
         with _pinned_state_partitions(spark):
             for bi, lines in enumerate(batches):
-                with open(os.path.join(src, f"b{bi}.json"), "w") as f:
-                    f.write("\n".join(lines) + "\n")
+                FX.write_jsonl(src, f"b{bi}.json", lines)
                 q = I.run_session_counts(
                     spark, src, sink, ckpt, gap="30 minutes",
                     watermark="10 minutes",
@@ -963,9 +875,6 @@ def streaming_continuous_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     final silver is additionally asserted in tests (incl. epoch
     replay)."""
     import datetime as _dt
-    import json
-    import os
-    import shutil
     import tempfile
 
     from ecommerce_realtime_pipeline_spark.streaming import contagg as CA
@@ -977,32 +886,16 @@ def streaming_continuous_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
         updated = (day + _dt.timedelta(minutes=upd_min)).strftime(
             "%Y-%m-%dT%H:%M:%SZ"
         )
-        payload = json.dumps(
-            {
-                "order_id": oid,
-                "customer_id": "c1",
-                "items": [],
-                "total": total,
-                "status": status,
-                "created_at": created,
-                "updated_at": updated,
-            }
-        )
-        return json.dumps(
-            {
-                "topic": "orders",
-                "topic_partition": 0,
-                "topic_offset": offset,
-                "message_key": oid,
-                "payload": payload,
-                "consumed_at": created,
-            }
-        )
-
-    def write(src: str, name: str, lines: list[str]) -> None:
-        os.makedirs(src, exist_ok=True)
-        with open(os.path.join(src, name), "w") as f:
-            f.write("\n".join(lines) + "\n")
+        payload = {
+            "order_id": oid,
+            "customer_id": "c1",
+            "items": [],
+            "total": total,
+            "status": status,
+            "created_at": created,
+            "updated_at": updated,
+        }
+        return FX.envelope_line("orders", offset, oid, payload, consumed_at=created)
 
     tmp = tempfile.mkdtemp(prefix="eng_contagg_q_")
     try:
@@ -1025,7 +918,7 @@ def streaming_continuous_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
         ]
         with _pinned_state_partitions(spark):
             for i, lines in enumerate(batches):
-                write(src, f"b{i}.json", lines)
+                FX.write_jsonl(src, f"b{i}.json", lines)
                 q = CA.run_ingest_with_agg(
                     spark, src, "orders", silver, agg, ckpt,
                     group_col="status", sum_col="total",
@@ -1303,9 +1196,6 @@ def streaming_hll_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     and must reproduce the estimate bit-for-bit. A real algorithmic
     oracle for a streaming query, not a literal: it proves the
     cross-batch register merge is lossless."""
-    import json
-    import os
-    import shutil
     import tempfile
 
     from ecommerce_realtime_pipeline_spark.streaming import sketchstream as SS
@@ -1319,7 +1209,6 @@ def streaming_hll_users(spark: SparkSession, sf_dir: str) -> DataFrame:
             [(i, "view") for i in range(100, 200)]
             + [(i, "click") for i in range(0, 50)],
         ]
-        os.makedirs(src, exist_ok=True)
         # batches 0+1 share one run (the estimate depends only on
         # the union multiset); the 2→3 boundary stays a separate run so
         # the cross-run register merge against the PERSISTED table is
@@ -1328,14 +1217,14 @@ def streaming_hll_users(spark: SparkSession, sf_dir: str) -> DataFrame:
         with _pinned_state_partitions(spark):
             for run in runs:
                 for bi in run:
-                    with open(os.path.join(src, f"b{bi}.json"), "w") as f:
-                        f.write(
-                            "\n".join(
-                                json.dumps({"user_id": i, "event_type": t})
-                                for i, t in batches[bi]
-                            )
-                            + "\n"
-                        )
+                    FX.write_jsonl(
+                        src,
+                        f"b{bi}.json",
+                        (
+                            json.dumps({"user_id": i, "event_type": t})
+                            for i, t in batches[bi]
+                        ),
+                    )
                 q = SS.run_hll_stream(spark, src, regs, ckpt)
                 _await(q)
         return (
@@ -1358,9 +1247,6 @@ def streaming_cms_user_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     the DuckDB oracle recomputes the identical all-integer CMS from
     generate_series — equality proves the journaled cross-epoch sum
     is lossless."""
-    import json
-    import os
-    import shutil
     import tempfile
 
     from ecommerce_realtime_pipeline_spark.operators import sketch as SK
@@ -1377,7 +1263,6 @@ def streaming_cms_user_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
             [(i, "view") for i in range(100, 200)]
             + [(i, "click") for i in range(0, 50)],
         ]
-        os.makedirs(src, exist_ok=True)
         # same run grouping as streaming_hll_users
         # (counter sums depend only on the union multiset; one cross-run
         # boundary keeps the journaled cross-epoch fold exercised).
@@ -1385,14 +1270,14 @@ def streaming_cms_user_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         with _pinned_state_partitions(spark):
             for run in runs:
                 for bi in run:
-                    with open(os.path.join(src, f"b{bi}.json"), "w") as f:
-                        f.write(
-                            "\n".join(
-                                json.dumps({"user_id": i, "event_type": t})
-                                for i, t in batches[bi]
-                            )
-                            + "\n"
-                        )
+                    FX.write_jsonl(
+                        src,
+                        f"b{bi}.json",
+                        (
+                            json.dumps({"user_id": i, "event_type": t})
+                            for i, t in batches[bi]
+                        ),
+                    )
                 q = SS.run_cms_stream(spark, src, journal, ckpt)
                 _await(q)
         counters = SS.cms_counters_from_journal(spark, journal)
@@ -1437,9 +1322,6 @@ def streaming_funnel_cep(spark: SparkSession, sf_dir: str) -> DataFrame:
     All three emitted rows are analytic constants → literal contract
     oracle (the state machinery itself is not DuckDB-expressible)."""
     import datetime as _dt
-    import json
-    import os
-    import shutil
     import tempfile
 
     from ecommerce_realtime_pipeline_spark.streaming import stateful as ST
@@ -1447,32 +1329,12 @@ def streaming_funnel_cep(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = _dt.datetime(2025, 3, 1, 10, 0, 0)
 
     def line(offset: int, mm: int, ss: int, cust: str, etype: str) -> str:
-        ts = (base + _dt.timedelta(minutes=mm, seconds=ss)).strftime(
-            "%Y-%m-%dT%H:%M:%SZ"
-        )
-        payload = json.dumps(
-            {
-                "event_id": f"e{offset}",
-                "event_type": etype,
-                "customer_id": cust,
-                "timestamp": ts,
-            }
-        )
-        return json.dumps(
-            {
-                "topic": "events",
-                "topic_partition": 0,
-                "topic_offset": offset,
-                "message_key": f"e{offset}",
-                "payload": payload,
-                "consumed_at": "2025-03-01T10:00:00Z",
-            }
-        )
+        at = base + _dt.timedelta(minutes=mm, seconds=ss)
+        return _event_line(offset, at, etype, cust)
 
     tmp = tempfile.mkdtemp(prefix="eng_funnel_cep_")
     try:
         src, sink, ckpt = (os.path.join(tmp, d) for d in ("src", "sink", "ckpt"))
-        os.makedirs(src, exist_ok=True)
         batches = [
             [  # run 1: c1 full funnel OUT OF ORDER + neutral event;
                # c2 partial funnel
@@ -1501,8 +1363,7 @@ def streaming_funnel_cep(spark: SparkSession, sf_dir: str) -> DataFrame:
         # at 4 customers that is pure fixture overhead (~3× wall).
         with _pinned_state_partitions(spark, 1):
             for bi, lines in enumerate(batches):
-                with open(os.path.join(src, f"b{bi}.json"), "w") as f:
-                    f.write("\n".join(lines) + "\n")
+                FX.write_jsonl(src, f"b{bi}.json", lines)
                 q = ST.run_funnel_matcher(
                     spark, src, sink, ckpt, gap_s=300, watermark="1 minute"
                 )
@@ -2071,9 +1932,6 @@ def streaming_outer_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     contract, literal oracle (the outer-eviction machinery is not
     DuckDB-expressible)."""
     import datetime as _dt
-    import json
-    import os
-    import shutil
     import tempfile
 
     from ecommerce_realtime_pipeline_spark.streaming import ingest as I
@@ -2081,32 +1939,12 @@ def streaming_outer_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     day = _dt.datetime(2025, 3, 1)
 
     def line(offset: int, hh: int, mm: int, etype: str, cust: str, eid: str) -> str:
-        ts = (day + _dt.timedelta(hours=hh, minutes=mm)).strftime(
-            "%Y-%m-%dT%H:%M:%SZ"
-        )
-        payload = json.dumps(
-            {
-                "event_id": eid,
-                "event_type": etype,
-                "customer_id": cust,
-                "timestamp": ts,
-            }
-        )
-        return json.dumps(
-            {
-                "topic": "events",
-                "topic_partition": 0,
-                "topic_offset": offset,
-                "message_key": eid,
-                "payload": payload,
-                "consumed_at": "2025-03-01T10:00:00Z",
-            }
-        )
+        at = day + _dt.timedelta(hours=hh, minutes=mm)
+        return _event_line(offset, at, etype, cust, eid)
 
     tmp = tempfile.mkdtemp(prefix="eng_ssouter_q_")
     try:
         src, sink, ckpt = (os.path.join(tmp, d) for d in ("src", "sink", "ckpt"))
-        os.makedirs(src, exist_ok=True)
         batches = [
             [
                 line(1, 9, 30, "click", "c1", "c10"),
@@ -2127,8 +1965,7 @@ def streaming_outer_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
         ]
         with _pinned_state_partitions(spark):
             for i, lines in enumerate(batches):
-                with open(os.path.join(src, f"b{i}.json"), "w") as f:
-                    f.write("\n".join(lines) + "\n")
+                FX.write_jsonl(src, f"b{i}.json", lines)
                 q = I.run_attribution_join(
                     spark, src, sink, ckpt,
                     watermark="10 minutes", how="leftOuter",
@@ -2156,37 +1993,15 @@ def streaming_dim_enrichment(spark: SparkSession, sf_dir: str) -> DataFrame:
     Expected: exactly 6 fixture-literal rows (a literal contract
     oracle; the per-run dim snapshot semantics are not
     DuckDB-expressible)."""
-    import json
-    import os
-    import shutil
+    import datetime as _dt
     import tempfile
 
     from ecommerce_realtime_pipeline_spark.streaming import ingest as I
 
-    def line(offset: int, cust: str, eid: str) -> str:
-        payload = json.dumps(
-            {
-                "event_id": eid,
-                "event_type": "purchase",
-                "customer_id": cust,
-                "timestamp": "2025-03-01T10:00:00Z",
-            }
-        )
-        return json.dumps(
-            {
-                "topic": "events",
-                "topic_partition": 0,
-                "topic_offset": offset,
-                "message_key": eid,
-                "payload": payload,
-                "consumed_at": "2025-03-01T10:00:00Z",
-            }
-        )
+    at = _dt.datetime(2025, 3, 1, 10, 0, 0)
 
-    def write(src: str, name: str, lines: list[str]) -> None:
-        os.makedirs(src, exist_ok=True)
-        with open(os.path.join(src, name), "w") as f:
-            f.write("\n".join(lines) + "\n")
+    def line(offset: int, cust: str, eid: str) -> str:
+        return _event_line(offset, at, "purchase", cust, eid)
 
     tmp = tempfile.mkdtemp(prefix="eng_dimjoin_q_")
     try:
@@ -2196,15 +2011,21 @@ def streaming_dim_enrichment(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark.createDataFrame(
             [("c1", "gold"), ("c2", "silver")], "customer_id string, segment string"
         ).write.mode("overwrite").parquet(dim)
-        write(src, "b0.json", [line(1, "c1", "p1"), line(2, "c2", "p2"),
-                               line(3, "c9", "p3")])
+        FX.write_jsonl(
+            src,
+            "b0.json",
+            [line(1, "c1", "p1"), line(2, "c2", "p2"), line(3, "c9", "p3")],
+        )
         _await(I.run_dim_enrichment(spark, src, dim, sink, ckpt))
         spark.createDataFrame(
             [("c1", "gold"), ("c2", "gold"), ("c3", "bronze")],
             "customer_id string, segment string",
         ).write.mode("overwrite").parquet(dim)
-        write(src, "b1.json", [line(4, "c2", "p4"), line(5, "c3", "p5"),
-                               line(6, "c1", "p6")])
+        FX.write_jsonl(
+            src,
+            "b1.json",
+            [line(4, "c2", "p4"), line(5, "c3", "p5"), line(6, "c1", "p6")],
+        )
         _await(I.run_dim_enrichment(spark, src, dim, sink, ckpt))
         out = spark.read.parquet(sink).select(
             "purchase_id", "customer_id", "segment"

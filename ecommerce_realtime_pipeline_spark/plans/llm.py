@@ -28,6 +28,7 @@ from ecommerce_realtime_pipeline_spark.operators import similarity as SIM
 from ecommerce_realtime_pipeline_spark.operators import text as TX
 from ecommerce_realtime_pipeline_spark.plans import fixtures as FX
 from ecommerce_realtime_pipeline_spark.session import overlapped
+from ecommerce_realtime_pipeline_spark.streaming.ingest import start_available_now
 
 N_QUERY_VECS = 10  # ANN query set: vec_id < 10 (deterministic)
 KNN_K = 5
@@ -5226,9 +5227,6 @@ def docs_bm25_index_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
     write + a |vocab|-row metadata rewrite (never O(index));
     `max_segments` bounds read amplification across an arbitrary
     landing sequence, retention keeps concurrent serving safe."""
-    import shutil
-    import tempfile
-
     from ecommerce_realtime_pipeline_spark.operators import indexfmt
     from ecommerce_realtime_pipeline_spark.operators.text import (
         merge_text_index,
@@ -5262,15 +5260,9 @@ def docs_bm25_index_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
             docs.filter(F.col("doc_id") % 2 == half).repartition(1).write.mode(
                 "append"
             ).parquet(src)
-            (
-                spark.readStream.schema(doc_schema)
-                .parquet(src)
-                .writeStream.foreachBatch(fold)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-                .awaitTermination()
-            )
+            start_available_now(
+                spark.readStream.schema(doc_schema).parquet(src), ckpt, fold
+            ).awaitTermination()
         spark.conf.set("spark.sql.shuffle.partitions", old_sp)
         assert indexfmt.read_manifest(idx, "text-index")["version"] >= 2
         return _bm25_top20_indexed(spark, idx).localCheckpoint(eager=True)
@@ -6766,9 +6758,6 @@ def docs_phrase_index_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale stance: each trigger costs one |batch tokens|-sized
     clustered segment write + a |batch docs|-row sidecar + one pointer
     flip — never O(index)."""
-    import shutil
-    import tempfile
-
     from ecommerce_realtime_pipeline_spark.operators import indexfmt
 
     docs = load_table(spark, sf_dir, "documents")
@@ -6797,15 +6786,9 @@ def docs_phrase_index_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
             docs.filter(F.col("doc_id") % 2 == half).repartition(1).write.mode(
                 "append"
             ).parquet(src)
-            (
-                spark.readStream.schema(doc_schema)
-                .parquet(src)
-                .writeStream.foreachBatch(fold)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-                .awaitTermination()
-            )
+            start_available_now(
+                spark.readStream.schema(doc_schema).parquet(src), ckpt, fold
+            ).awaitTermination()
         spark.conf.set("spark.sql.shuffle.partitions", old_sp)
         m = indexfmt.read_manifest(idx, TX.POS_INDEX_FORMAT)
         assert int(m["version"]) >= 2 and len(m["segments"]) >= 2

@@ -46,6 +46,7 @@ from pyspark.sql import functions as F
 from ecommerce_realtime_pipeline_spark import storage
 from ecommerce_realtime_pipeline_spark.operators import normalize as N
 from ecommerce_realtime_pipeline_spark.schemas import ENTITY_SCHEMAS
+from ecommerce_realtime_pipeline_spark.streaming import journal as EJ
 from ecommerce_realtime_pipeline_spark.streaming.ingest import (
     bucket_of,
     deduped_stream,
@@ -70,7 +71,9 @@ _PRUNE_WM_FILE = "_pruned_through"
 #: restart at 0 and a bare ``epoch_id <= _pruned_through`` check would
 #: silently skip refreshes for genuinely new data while the upsert
 #: still lands, leaving the view permanently stale. ``run_ingest_with_agg``
-#: detects the generation change and rebases the view from silver.
+#: checks and stamps it through the epoch journal's generation binding
+#: (``journal.start_bound``) and, on a change, rebases the view from
+#: silver instead of refusing.
 _LEDGER_ID_FILE = "_ledger_query_id"
 
 #: full-recompute base version written by :func:`rebase_from_silver`;
@@ -269,16 +272,6 @@ def run_ingest_with_agg(
     its delta against the post-image cancels to zero). The new query
     id is bound to the ledger right after start.
     """
-    ledger_bound = (
-        pruned_through(agg_path) >= 0 or bool(_committed_epochs(agg_path))
-    )
-    if ledger_bound:
-        chk_id = storage.checkpoint_query_id(checkpoint_dir)
-        ledger_id = storage.read_file(agg_path, _LEDGER_ID_FILE)
-        if chk_id is None or chk_id != ledger_id:
-            rebase_from_silver(
-                spark, silver_path, agg_path, group_col, sum_col
-            )
     stream = deduped_stream(stream_envelopes(spark, source_dir), watermark)
 
     def handle(batch_df: DataFrame, epoch_id: int) -> None:
@@ -305,14 +298,17 @@ def run_ingest_with_agg(
         )
         upsert_batch(spark, batch_df, entity, silver_path)
 
-    query = (
-        stream.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return EJ.start_bound(
+        stream,
+        checkpoint_dir,
+        handle,
+        agg_path,
+        pruned_through(agg_path) >= 0 or bool(_committed_epochs(agg_path)),
+        stamp=_LEDGER_ID_FILE,
+        on_mismatch=lambda: rebase_from_silver(
+            spark, silver_path, agg_path, group_col, sum_col
+        ),
     )
-    storage.replace_file(agg_path, _LEDGER_ID_FILE, str(query.id))
-    return query
 
 
 def prune_versions(agg_path: str, keep: int = 3) -> list[int]:

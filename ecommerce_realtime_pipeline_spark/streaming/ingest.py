@@ -71,6 +71,31 @@ def stream_envelopes(spark: SparkSession, source_dir: str) -> DataFrame:
     )
 
 
+def start_available_now(frame: DataFrame, checkpoint_dir: str, sink):
+    """Start ``frame`` as an availableNow query checkpointed at
+    ``checkpoint_dir`` — the package's one streaming start path.
+    ``sink`` is either a foreachBatch handler ``(batch_df, epoch_id)``
+    or a parquet directory the query appends its rows to. availableNow
+    drains the files present at start, then terminates; the checkpoint
+    makes the next run pick up only newer files."""
+    writer = frame.writeStream.option("checkpointLocation", checkpoint_dir).trigger(
+        availableNow=True
+    )
+    if callable(sink):
+        return writer.foreachBatch(sink).start()
+    return writer.format("parquet").option("path", sink).outputMode("append").start()
+
+
+def parse_events(raw: DataFrame) -> DataFrame:
+    """The events-topic payload of an envelope stream as typed columns,
+    with ``timestamp`` renamed to ``event_time``."""
+    return (
+        raw.select(F.from_json("payload", ENTITY_SCHEMAS["events"]).alias("_p"))
+        .select("_p.*")
+        .withColumnRenamed("timestamp", "event_time")
+    )
+
+
 def deduped_stream(raw: DataFrame, watermark: str = "10 minutes") -> DataFrame:
     """R3 streaming exactly-once: offset dedup with bounded state."""
     return raw.withWatermark("consumed_at", watermark).dropDuplicatesWithinWatermark(
@@ -374,12 +399,9 @@ def session_event_counts(
     state on one task — same bound as the batch form; AQE skew-join
     handles the downstream joins, and the state store holds only
     (customer, window, count)."""
-    parsed = raw.withColumn("_p", F.from_json("payload", ENTITY_SCHEMAS["events"])).select(
-        F.col("_p.timestamp").alias("event_time"),
-        F.col("_p.customer_id").alias("customer_id"),
-    )
     return (
-        parsed.withWatermark("event_time", watermark)
+        parse_events(raw)
+        .withWatermark("event_time", watermark)
         .groupBy(
             F.session_window("event_time", gap).alias("win"), "customer_id"
         )
@@ -404,14 +426,7 @@ def run_session_counts(
     """Run streaming sessionization over a file-envelope stream,
     appending closed sessions to parquet (exactly-once via checkpoint)."""
     counts = session_event_counts(stream_envelopes(spark, source_dir), gap, watermark)
-    return (
-        counts.writeStream.format("parquet")
-        .option("path", sink_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start_available_now(counts, checkpoint_dir, sink_dir)
 
 
 def run_windowed_counts(
@@ -430,14 +445,7 @@ def run_windowed_counts(
     counts = windowed_event_counts(
         stream_envelopes(spark, source_dir), entity, window, watermark
     )
-    return (
-        counts.writeStream.format("parquet")
-        .option("path", sink_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start_available_now(counts, checkpoint_dir, sink_dir)
 
 
 def run_ingest(
@@ -452,8 +460,7 @@ def run_ingest(
 ):
     """Wire the full ingest: stream → watermarked offset dedup →
     foreachBatch(upsert + offset bookkeeping). Returns the started
-    query; callers use ``trigger(availableNow)`` semantics by awaiting
-    termination (tests) or leave it running (deployment).
+    availableNow query; callers await its termination.
 
     ``items_path`` (orders only): also maintain the normalized
     ``order_items`` child table (R11/R9) — re-derived from the TOUCHED
@@ -470,10 +477,13 @@ def run_ingest(
         # watermark advance may evict state (dropDuplicatesWithinWatermark
         # here) — zero rows, but it would still pay the full upsert pass
         # (envelope parse + touched-bucket collect + swap write) plus an
-        # identical-content offsets-ledger rewrite (~0.5-1 s of fixed job
-        # cost per run, measured). An empty batch cannot change silver,
-        # items, or offsets, so skip it after one limit-1 probe; replay
-        # of an empty epoch is trivially idempotent.
+        # offsets-ledger rewrite (~0.5-1 s of fixed job cost per run,
+        # measured). An empty batch cannot change silver, items, or the
+        # committed offsets, so skip it after one limit-1 probe; replay
+        # of an empty epoch is trivially idempotent. The skipped rewrite
+        # is not a no-op: it would have advanced ``last_updated``, so the
+        # ledger's age now measures data progress, not consumer liveness
+        # (see ``monitoring._offsets_check``).
         if batch_df.isEmpty():
             return
         touched = upsert_batch(spark, batch_df, entity, silver_path)
@@ -488,12 +498,7 @@ def run_ingest(
         if offsets_path:
             record_offsets(spark, batch_df, offsets_path)
 
-    return (
-        stream.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start_available_now(stream, checkpoint_dir, handle)
 
 
 def attribution_join_stream(
@@ -521,14 +526,7 @@ def attribution_join_stream(
     eviction in a LATER micro-batch; the abandoned-journey feed every
     attribution pipeline also needs.
     """
-    parsed = raw.withColumn(
-        "_p", F.from_json("payload", ENTITY_SCHEMAS["events"])
-    ).select(
-        F.col("_p.event_id").alias("event_id"),
-        F.col("_p.event_type").alias("event_type"),
-        F.col("_p.customer_id").alias("customer_id"),
-        F.col("_p.timestamp").alias("event_time"),
-    )
+    parsed = parse_events(raw)
     p = (
         parsed.filter(F.col("event_type") == "purchase")
         .select(
@@ -579,14 +577,7 @@ def run_attribution_join(
     pairs = attribution_join_stream(
         stream_envelopes(spark, source_dir), watermark, range_sec, how
     )
-    return (
-        pairs.writeStream.format("parquet")
-        .option("path", sink_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start_available_now(pairs, checkpoint_dir, sink_dir)
 
 
 def run_dim_enrichment(
@@ -611,23 +602,11 @@ def run_dim_enrichment(
     dim is the small side by definition; a dim too big to broadcast
     becomes a shuffled stream-static join with the identical plan
     shape."""
-    parsed = (
-        stream_envelopes(spark, source_dir)
-        .withColumn("_p", F.from_json("payload", ENTITY_SCHEMAS["events"]))
-        .select(
-            F.col("_p.event_id").alias("purchase_id"),
-            F.col("_p.customer_id").alias("customer_id"),
-        )
+    parsed = parse_events(stream_envelopes(spark, source_dir)).select(
+        F.col("event_id").alias("purchase_id"), "customer_id"
     )
     dim = F.broadcast(spark.read.parquet(dim_dir))
     enriched = parsed.join(dim, "customer_id", "left").select(
         "purchase_id", "customer_id", "segment"
     )
-    return (
-        enriched.writeStream.format("parquet")
-        .option("path", sink_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start_available_now(enriched, checkpoint_dir, sink_dir)

@@ -2,17 +2,21 @@
 accumulating MinHash-LSH index — the dedup-new-crawl-against-history
 pass every continuously-fed training-data pipeline needs (batch-mode
 near-dup over a closed corpus is ``operators/dedup.py``; this module
-is its streaming counterpart).
+is its streaming counterpart). It also owns the banded-LSH stream-dedup
+kernel (:func:`lsh_dedup_batch`) that ``streaming/embdedup.py`` runs
+with sign-LSH buckets and a cosine verify.
 
-Per micro-batch:
-  1. band the batch's MinHash signatures (``dedup.banded_signatures``),
+Per micro-batch (the kernel):
+  1. band the batch (here: the MinHash signatures,
+     ``dedup.banded_signatures``) and self-join the band keys,
   2. equi-join those band keys against the persisted index of every
-     previously ACCEPTED doc (plus an in-batch self-join, min-id
-     canonical),
-  3. verify candidates with exact Jaccard over full shingle sets,
-  4. append the batch's per-doc decisions AND the novel docs' band
-     keys / texts to ONE kind-partitioned journal in a single write
-     job.
+     previously ACCEPTED item,
+  3. verify candidates exactly (here: Jaccard over full shingle sets),
+  4. decide min-id canonical: a dup points at its smallest verified
+     match, so the earliest-seen item of a cluster stays novel,
+  5. append the batch's per-item decisions AND the novel items' band
+     keys / payloads to ONE kind-partitioned epoch journal
+     (``streaming/journal.py``) in a single write job.
 
 Scale stance (100 TB): per-trigger work is |batch|·bands index rows
 joined on (band, bucket) against the history index — an equi-join,
@@ -26,17 +30,12 @@ marking is the standard greedy min-id-canonical rule; full transitive
 clustering over the accepted corpus remains a batch job
 (``dedup.neardup_clusters``).
 
-Failure semantics: the file source's checkpoint gives exactly-once
-BATCH delivery, and the journal write is ONE Spark job over the union
-of decision + band + doc rows — the output-committer publishes all
-three kinds at job commit, so a crash can no longer land a batch's
-decisions without its index rows (the r3 layout's three sequential
-appends had exactly that window). The remaining window is a crash
-AFTER job commit but BEFORE the stream checkpoint commits, which
-replays the whole batch: every journal row carries ``batch_id``, and
-the readers dedup on (batch_id, doc_id[, band]) so the replayed
-append is idempotent-on-read. A transactional sink makes the replay
-append itself a no-op in production.
+Failure semantics are the journal's: the file source's checkpoint
+gives exactly-once BATCH delivery; decisions, band keys and docs land
+in one write job, so a crash cannot land a batch's decisions without
+its index rows; a replayed batch is deduped on read by (batch_id,
+doc_id[, band]); a recreated checkpoint is refused by the journal's
+generation guard.
 """
 
 from __future__ import annotations
@@ -46,8 +45,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ecommerce_realtime_pipeline_spark import storage
 from ecommerce_realtime_pipeline_spark.operators import dedup as DD
+from ecommerce_realtime_pipeline_spark.streaming import journal as EJ
 
 DOC_STREAM_SCHEMA = "doc_id long, text string"
 
@@ -57,62 +56,12 @@ DOC_STREAM_SCHEMA = "doc_id long, text string"
 #: (batch_id, doc_id, text). Unused columns are null per kind.
 _KINDS = ("decision", "band", "doc")
 
+#: the journal's generation stamp, beside the journal in the work dir
+_JOURNAL_ID_FILE = EJ.STAMP
+
 
 def journal_path(work_dir: str) -> str:
     return os.path.join(work_dir, "journal")
-
-
-#: identity binding for the journal (the contagg ledger pattern):
-#: journal rows are keyed by ``batch_id`` = the checkpoint's epoch id,
-#: and epoch ids are only comparable WITHIN one checkpoint generation.
-#: A recreated checkpoint restarts epochs at 0 AND re-delivers every
-#: source file, so the (batch_id, id)-keyed read-side dedup can no
-#: longer recognize the replay — docs originally journaled under
-#: batches 1..n would append again under fresh batch ids, double-
-#: counting decisions and re-admitting their index rows. The stamp
-#: detects the generation change up front.
-_JOURNAL_ID_FILE = "_journal_query_id"
-
-
-def stamp_journal_query_id(work_dir: str, query_id: str) -> None:
-    """Bind the journal at ``work_dir`` to streaming query ``query_id``."""
-    storage.replace_file(work_dir, _JOURNAL_ID_FILE, query_id)
-
-
-def guard_journal_generation(work_dir: str, checkpoint: str) -> None:
-    """Refuse to run against a journal written under a DIFFERENT
-    streaming-query generation (recreated/foreign checkpoint). Raises
-    RuntimeError; recovery is clearing the journal so the fresh
-    checkpoint's full re-delivery rebuilds it from scratch — the
-    moral twin of ``contagg.rebase_from_silver``, except here the
-    source replay IS the rebase. No-op while the journal is empty
-    (nothing to double-add yet)."""
-    if not os.path.exists(journal_path(work_dir)):
-        return
-    cp_id = storage.checkpoint_query_id(checkpoint)
-    j_id = storage.read_file(work_dir, _JOURNAL_ID_FILE) or None
-    if j_id is None and cp_id is not None:
-        # missing stamp + live checkpoint: the stamp is written only
-        # after start() returns, so a crash in that window (or a
-        # pre-stamp-era journal) leaves journal rows that were keyed
-        # by THIS checkpoint's epochs — the only generation that can
-        # have delivered them while its metadata file exists. Adopt
-        # the checkpoint id (one-time migration) instead of forcing a
-        # journal rebuild. A recreated checkpoint still trips the
-        # guard: recreation changes the metadata query id, and the
-        # adopted stamp then mismatches on the next run.
-        stamp_journal_query_id(work_dir, cp_id)
-        return
-    if cp_id is None or j_id is None or cp_id != j_id:
-        raise RuntimeError(
-            f"journal at {work_dir} was written under streaming query "
-            f"{j_id}, but the checkpoint at {checkpoint} is "
-            f"{'new' if cp_id is None else cp_id}: epoch ids are not "
-            "comparable across checkpoint generations and a re-run "
-            "would double-add journal rows. Clear the journal (the "
-            "fresh checkpoint re-delivers every source file) or "
-            "restore the original checkpoint."
-        )
 
 
 def has_kind(work_dir: str, kind: str) -> bool:
@@ -122,6 +71,102 @@ def has_kind(work_dir: str, kind: str) -> bool:
 def read_kind(spark: SparkSession, work_dir: str, kind: str) -> DataFrame:
     return spark.read.parquet(journal_path(work_dir)).filter(
         F.col("kind") == kind
+    )
+
+
+def lsh_dedup_batch(
+    spark: SparkSession,
+    batch: DataFrame,
+    work_dir: str,
+    batch_id: int,
+    *,
+    id_col: str,
+    payload: str,
+    band,
+    band_cols: tuple[str, ...],
+    verify,
+    kinds: tuple[str, str, str],
+) -> None:
+    """The banded-LSH stream-dedup kernel: decide dup/novel per item of
+    one micro-batch, then journal the decisions plus the novel items'
+    index rows in one write job.
+
+    Per family: ``batch`` rows are (``id_col``, ``payload``);
+    ``band(batch)`` gives (``id_col``, *``band_cols``) band keys;
+    ``verify(cand, items)`` keeps the true pairs of a candidate frame
+    whose columns are ``id_col`` with its ``id`` suffix replaced by
+    ``a`` and ``b`` (``doc_a``/``doc_b``); ``kinds`` names the
+    decision, band-key and payload partitions of the journal."""
+    batch = batch.select(id_col, payload).localCheckpoint()
+    if batch.isEmpty():
+        return
+    banded = band(batch).localCheckpoint()
+    keys = list(band_cols)
+    a, b = (id_col.removesuffix("id") + s for s in "ab")
+    decision_kind, band_kind, payload_kind = kinds
+
+    # in-batch candidates: newer (larger) id is the dup candidate, so
+    # the earliest-seen item of a cluster stays canonical
+    cand = (
+        banded.alias("x")
+        .join(banded.alias("y"), keys)
+        .filter(F.col(f"x.{id_col}") > F.col(f"y.{id_col}"))
+        .select(F.col(f"x.{id_col}").alias(a), F.col(f"y.{id_col}").alias(b))
+    )
+    items = batch
+    if has_kind(work_dir, band_kind):
+        hist = read_kind(spark, work_dir, band_kind).select(id_col, *keys)
+        vs_hist = (
+            banded.join(hist.withColumnRenamed(id_col, "hist_id"), keys)
+            .filter(F.col(id_col) != F.col("hist_id"))
+            .select(F.col(id_col).alias(a), F.col("hist_id").alias(b))
+        )
+        cand = cand.unionByName(vs_hist)
+        # duplicate history rows (post-commit-crash replay) are harmless
+        # here: dup band rows only repeat candidates (distinct'd below),
+        # dup payload rows only repeat verified pairs (min-agg'd below)
+        items = batch.unionByName(
+            read_kind(spark, work_dir, payload_kind).select(id_col, payload)
+        )
+    matches = verify(cand.distinct(), items).groupBy(a).agg(
+        F.min(b).alias("matched_id")
+    )
+    decisions = (
+        batch.join(matches, batch[id_col] == matches[a], "left")
+        .select(
+            id_col,
+            F.col("matched_id").isNotNull().alias("is_dup"),
+            "matched_id",
+        )
+        .localCheckpoint()
+    )
+    novel = decisions.filter(~F.col("is_dup")).select(id_col)
+
+    # every kind carries every column (nulls where unused), in one order
+    types = {
+        "is_dup": "boolean",
+        "matched_id": "long",
+        **{c: banded.schema[c].dataType for c in keys},
+        payload: batch.schema[payload].dataType,
+    }
+
+    def rows(kind: str, df: DataFrame) -> DataFrame:
+        return df.select(
+            F.lit(kind).alias("kind"),
+            F.lit(batch_id).cast("long").alias("batch_id"),
+            id_col,
+            *(
+                c if c in df.columns else F.lit(None).cast(t).alias(c)
+                for c, t in types.items()
+            ),
+        )
+
+    EJ.append(
+        rows(decision_kind, decisions)
+        .unionByName(rows(band_kind, banded.join(novel, id_col)))
+        .unionByName(rows(payload_kind, batch.join(novel, id_col))),
+        journal_path(work_dir),
+        "kind",
     )
 
 
@@ -135,72 +180,19 @@ def dedup_batch(
     bands: int = 16,
     n: int = 3,
 ) -> None:
-    """Process one micro-batch: decide dup/novel per doc, then journal
-    the decisions plus the novel docs' index rows in one write job."""
-    batch = batch.select("doc_id", "text").localCheckpoint()
-    if batch.isEmpty():
-        return
-    banded = DD.banded_signatures(batch, num_hashes, bands, n).localCheckpoint()
-
-    # in-batch candidates: newer (larger) id is the dup candidate, so
-    # the earliest-seen doc of a cluster stays canonical
-    cand = (
-        banded.alias("x")
-        .join(banded.alias("y"), ["band", "bucket"])
-        .filter(F.col("x.doc_id") > F.col("y.doc_id"))
-        .select(F.col("x.doc_id").alias("doc_a"), F.col("y.doc_id").alias("doc_b"))
-    )
-    all_docs = batch
-    if has_kind(work_dir, "band"):
-        hist = read_kind(spark, work_dir, "band").select("doc_id", "band", "bucket")
-        vs_hist = (
-            banded.join(hist.withColumnRenamed("doc_id", "hist_id"), ["band", "bucket"])
-            .filter(F.col("doc_id") != F.col("hist_id"))
-            .select(F.col("doc_id").alias("doc_a"), F.col("hist_id").alias("doc_b"))
-        )
-        cand = cand.unionByName(vs_hist)
-        # duplicate history rows (post-commit-crash replay) are harmless
-        # here: dup band rows only repeat candidates (distinct'd below),
-        # dup doc rows only repeat verified pairs (min-agg'd below)
-        all_docs = batch.unionByName(
-            read_kind(spark, work_dir, "doc").select("doc_id", "text")
-        )
-    verified = DD.verify_jaccard(cand.distinct(), all_docs, threshold, n)
-    matches = verified.groupBy("doc_a").agg(F.min("doc_b").alias("matched_id"))
-
-    decisions = (
-        batch.join(matches, batch.doc_id == matches.doc_a, "left")
-        .select(
-            "doc_id",
-            F.col("matched_id").isNotNull().alias("is_dup"),
-            "matched_id",
-        )
-        .localCheckpoint()
-    )
-    novel = decisions.filter(~F.col("is_dup")).select("doc_id")
-
-    bid = F.lit(batch_id).cast("long").alias("batch_id")
-    nul = lambda name, t: F.lit(None).cast(t).alias(name)  # noqa: E731
-    dec_rows = decisions.select(
-        F.lit("decision").alias("kind"), bid, "doc_id", "is_dup", "matched_id",
-        nul("band", "int"), nul("bucket", "long"), nul("text", "string"),
-    )
-    band_rows = banded.join(novel, "doc_id").select(
-        F.lit("band").alias("kind"), bid, "doc_id",
-        nul("is_dup", "boolean"), nul("matched_id", "long"),
-        "band", "bucket", nul("text", "string"),
-    )
-    doc_rows = batch.join(novel, "doc_id").select(
-        F.lit("doc").alias("kind"), bid, "doc_id",
-        nul("is_dup", "boolean"), nul("matched_id", "long"),
-        nul("band", "int"), nul("bucket", "long"), "text",
-    )
-    (
-        dec_rows.unionByName(band_rows)
-        .unionByName(doc_rows)
-        .write.mode("append")
-        .partitionBy("kind")
-        .parquet(journal_path(work_dir))
+    """Process one micro-batch of documents through the kernel: MinHash
+    band keys, exact-Jaccard verify."""
+    lsh_dedup_batch(
+        spark,
+        batch,
+        work_dir,
+        batch_id,
+        id_col="doc_id",
+        payload="text",
+        band=lambda docs: DD.banded_signatures(docs, num_hashes, bands, n),
+        band_cols=("band", "bucket"),
+        verify=lambda cand, docs: DD.verify_jaccard(cand, docs, threshold, n),
+        kinds=_KINDS,
     )
 
 
@@ -217,9 +209,8 @@ def run_neardup_stream(
     """Drain all currently-available document files through the dedup
     pass (availableNow). Re-running with the same checkpoint processes
     only files that arrived since — the incremental crawl-snapshot
-    loop."""
-
-    guard_journal_generation(work_dir, checkpoint)
+    loop. A checkpoint of another generation than the journal's is
+    refused with ``RuntimeError``."""
 
     def handle(batch_df: DataFrame, epoch_id: int) -> None:
         dedup_batch(
@@ -227,16 +218,9 @@ def run_neardup_stream(
         )
 
     stream = spark.readStream.schema(DOC_STREAM_SCHEMA).parquet(src_dir)
-    q = (
-        stream.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    return EJ.start_bound(
+        stream, checkpoint, handle, work_dir, EJ.has_rows(journal_path(work_dir))
     )
-    # bind the journal to this checkpoint generation (q.id is the
-    # persistent id the checkpoint's metadata file records)
-    stamp_journal_query_id(work_dir, str(q.id))
-    return q
 
 
 def read_decisions(spark: SparkSession, work_dir: str) -> DataFrame:

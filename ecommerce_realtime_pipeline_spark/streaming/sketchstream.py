@@ -5,9 +5,11 @@ forever), no watermark needed because registers never need eviction.
 
 Replay safety falls out of the algebra: max-merge is IDEMPOTENT, so a
 crashed/replayed micro-batch re-merging the same registers converges
-to the same table — stronger than the usual at-least-once caveats (a
-SUM-merged sketch like Count-Min would need the journal treatment the
-near-dup indexes use; HLL does not).
+to the same table. A SUM-merged sketch is not: the Count-Min counters
+ride the epoch journal the near-dup indexes use
+(``streaming/journal.py``) — per-epoch deltas in one append, an
+epoch-deduped fold, and the generation guard that refuses a recreated
+checkpoint, whose re-delivered files would otherwise sum in twice.
 
 At 100 TB the register table is still 256 rows per group: the state
 IS the dashboard. Fold on read (`sketch.hll_fold`).
@@ -23,6 +25,8 @@ from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 from ecommerce_realtime_pipeline_spark import storage
 from ecommerce_realtime_pipeline_spark.operators import sketch as SK
+from ecommerce_realtime_pipeline_spark.streaming import journal as EJ
+from ecommerce_realtime_pipeline_spark.streaming.ingest import start_available_now
 
 STREAM_SCHEMA = StructType(
     [
@@ -52,14 +56,10 @@ def run_hll_stream(
 ):
     """One availableNow pass of the user-event stream into the
     register table."""
-    stream = spark.readStream.schema(STREAM_SCHEMA).json(src)
-    return (
-        stream.writeStream.foreachBatch(
-            lambda b, _eid: merge_hll_batch(spark, b, regs_path)
-        )
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+    return start_available_now(
+        spark.readStream.schema(STREAM_SCHEMA).json(src),
+        ckpt,
+        lambda b, _eid: merge_hll_batch(spark, b, regs_path),
     )
 
 
@@ -81,25 +81,27 @@ def merge_cms_batch(
     micro-batch's counter DELTAS tagged with the epoch id. Unlike the
     HLL max-merge, summing is NOT idempotent — a replayed batch would
     double-count — so the journal carries (batch_id, r, c, cnt) and
-    the fold dedups by epoch first (same one-job journal + replay-
-    idempotent-reader semantics as the streaming near-dup indexes)."""
-    deltas = SK.cms_counters(batch_df, "user_id").select(
-        F.lit(int(batch_id)).alias("batch_id"), "_r", "_c", "cnt"
+    the fold dedups by epoch first (the epoch journal's one-job append
+    + replay-idempotent reader)."""
+    EJ.append(
+        SK.cms_counters(batch_df, "user_id").select(
+            F.lit(int(batch_id)).alias("batch_id"), "_r", "_c", "cnt"
+        ),
+        journal_path,
     )
-    deltas.write.mode("append").parquet(journal_path)
 
 
 def run_cms_stream(spark: SparkSession, src: str, journal_path: str, ckpt: str):
     """One availableNow pass of the user-event stream into the
-    counter journal."""
-    stream = spark.readStream.schema(STREAM_SCHEMA).json(src)
-    return (
-        stream.writeStream.foreachBatch(
-            lambda b, eid: merge_cms_batch(spark, b, eid, journal_path)
-        )
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+    counter journal, bound to the checkpoint generation (the stamp
+    lives in the journal directory; a recreated checkpoint is refused
+    with ``RuntimeError``)."""
+    return EJ.start_bound(
+        spark.readStream.schema(STREAM_SCHEMA).json(src),
+        ckpt,
+        lambda b, eid: merge_cms_batch(spark, b, eid, journal_path),
+        journal_path,
+        EJ.has_rows(journal_path),
     )
 
 

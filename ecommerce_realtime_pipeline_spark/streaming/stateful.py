@@ -50,7 +50,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ecommerce_realtime_pipeline_spark.schemas import ENTITY_SCHEMAS
+from ecommerce_realtime_pipeline_spark.streaming import ingest as I
 
 #: Ordered funnel stages (strict subset of EVENT_TYPES — product_view /
 #: remove_from_cart are deliberately neutral: browsing more or bouncing
@@ -224,22 +224,9 @@ def run_funnel_matcher(
     """Run the CEP funnel matcher over a file-envelope stream (the same
     S4 source as every other streaming query), appending funnel
     resolutions to parquet exactly-once via checkpoint."""
-    from ecommerce_realtime_pipeline_spark.streaming.ingest import stream_envelopes
-
-    raw = stream_envelopes(spark, source_dir)
-    parsed = raw.withColumn(
-        "_p", F.from_json("payload", ENTITY_SCHEMAS["events"])
-    ).select(
-        F.col("_p.customer_id").alias("customer_id"),
-        F.col("_p.event_type").alias("event_type"),
-        F.col("_p.timestamp").alias("event_time"),
+    matched = funnel_matches(
+        I.parse_events(I.stream_envelopes(spark, source_dir)),
+        gap_s=gap_s,
+        watermark=watermark,
     )
-    matched = funnel_matches(parsed, gap_s=gap_s, watermark=watermark)
-    return (
-        matched.writeStream.format("parquet")
-        .option("path", sink_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
+    return I.start_available_now(matched, checkpoint_dir, sink_dir)

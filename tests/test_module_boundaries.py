@@ -2,7 +2,8 @@
 imports or reads another package module's ``_private`` name. Shared
 machinery gets a public name in the module that owns it (commit and
 lock steps in ``storage``, job overlap in ``session``, fixture
-directories in ``plans.fixtures``). Tests are exempt."""
+directories in ``plans.fixtures``, the streaming start path in
+``streaming.ingest``). Tests are exempt."""
 
 from __future__ import annotations
 
@@ -86,3 +87,40 @@ def test_scan_detects_both_reach_forms(tmp_path):
     found = _reaches(name, probe, {**modules, name: probe})
     assert len(found) == 2
     assert all("_swap_buckets" in f for f in found)
+
+
+def _stream_start_sites(name: str, path: pathlib.Path) -> set:
+    """(module, innermost enclosing function or None, form) for every
+    ``.writeStream`` read and ``.trigger(...)`` call in one module."""
+    sites = set()
+
+    def visit(node, fn):
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            fn = node.name
+        if isinstance(node, ast.Attribute) and node.attr == "writeStream":
+            sites.add((name, fn, "writeStream"))
+        if (
+            isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Attribute)
+            and node.func.attr == "trigger"
+        ):
+            sites.add((name, fn, "trigger"))
+        for child in ast.iter_child_nodes(node):
+            visit(child, fn)
+
+    visit(ast.parse(path.read_text()), None)
+    return sites
+
+
+def test_one_streaming_start_path():
+    """Every streaming query of the package starts through
+    ``ingest.start_available_now``: no other function or module body
+    builds a ``writeStream`` or sets a ``.trigger(``."""
+    sites = set()
+    for name, path in sorted(_modules().items()):
+        sites |= _stream_start_sites(name, path)
+    starter = "ecommerce_realtime_pipeline_spark.streaming.ingest"
+    assert sites == {
+        (starter, "start_available_now", "writeStream"),
+        (starter, "start_available_now", "trigger"),
+    }

@@ -393,14 +393,14 @@ def test_streaming_embdedup_decisions_index_and_replay(spark, tmp_path):
 
 
 def test_recreated_checkpoint_refuses_journal_double_add(spark, tmp_path):
-    """THE epoch-id-reset crash class, applied to the journal-keeping
-    dedup streams (round-6 verdict task 6): a recreated checkpoint
-    restarts epoch ids at 0 AND re-delivers every source file, so the
-    (batch_id, id)-keyed read-side dedup could no longer recognize the
-    replay — the journal would double-add decisions and index rows.
-    Both streams must detect the generation change via the persisted
-    query id and REFUSE with a rebuild instruction (the source replay
-    is the rebase), while a same-checkpoint resume keeps working (the
+    """THE epoch-id-reset crash class, applied to the epoch journals:
+    a recreated checkpoint restarts epoch ids at 0 AND re-delivers
+    every source file, so the (batch_id, id)-keyed read-side dedup
+    could no longer recognize the replay — the journal would double-add
+    decisions and index rows, or Count-Min deltas. All three journal
+    streams must detect the generation change via the persisted query
+    id and REFUSE with a rebuild instruction (the source replay is the
+    rebase), while a same-checkpoint resume keeps working (the
     decisions/index tests above pin that)."""
     import shutil
 
@@ -408,6 +408,7 @@ def test_recreated_checkpoint_refuses_journal_double_add(spark, tmp_path):
 
     from ecommerce_realtime_pipeline_spark.streaming import embdedup as ED
     from ecommerce_realtime_pipeline_spark.streaming import neardup as ND
+    from ecommerce_realtime_pipeline_spark.streaming import sketchstream as SS
 
     toks = [f"g{j}" for j in range(40)]
     src, work, ckpt = (
@@ -440,6 +441,24 @@ def test_recreated_checkpoint_refuses_journal_double_add(spark, tmp_path):
     shutil.rmtree(eckpt)
     with _pytest.raises(RuntimeError, match="generation"):
         ED.run_embdedup_stream(spark, esrc, ework, str(tmp_path / "eck2"))
+
+    # Count-Min: epoch 0 = b0, epoch 1 = b1; a recreated checkpoint's
+    # epoch 0 would re-deliver b0+b1 and the fold would count b1 twice
+    csrc, cjournal, cckpt = (
+        str(tmp_path / "csrc"),
+        str(tmp_path / "cjournal"),
+        str(tmp_path / "cck"),
+    )
+    os.makedirs(csrc)
+    for bi, users in enumerate((range(0, 20), range(10, 30))):
+        with open(os.path.join(csrc, f"b{bi}.json"), "w") as f:
+            f.writelines(f'{{"user_id": {u}, "event_type": "view"}}\n' for u in users)
+        SS.run_cms_stream(spark, csrc, cjournal, cckpt).awaitTermination(120)
+    n_cms = spark.read.parquet(cjournal).count()
+    shutil.rmtree(cckpt)
+    with _pytest.raises(RuntimeError, match="generation"):
+        SS.run_cms_stream(spark, csrc, cjournal, cckpt)
+    assert spark.read.parquet(cjournal).count() == n_cms
 
 
 def test_missing_journal_stamp_adopts_live_checkpoint(spark, tmp_path):
