@@ -16,9 +16,14 @@ partitions, and a crashed merge needs no recovery beyond re-running
 it. The file-level steps (pointer replace, writer lock) are the shared
 ones in :mod:`ecommerce_realtime_pipeline_spark.storage`.
 
-The lifecycle steps every family shares live here, so the tombstone
-format and the delete policy have one home:
+The lifecycle steps every family shares live here, so the segment
+layout, the tombstone format and the delete policy have one home:
 
+- :func:`write_segment` is the one partitioned segment write: it
+  reads the partition values back from the written layout and refuses
+  a NULL/empty key there;
+- :func:`build` runs a family's build body into a stage and publishes
+  it as version 1;
 - :func:`read_live` opens a union of children with the live
   tombstones anti-joined on the family's id column
   (:func:`mask_tombstones` is the mask alone, for the seek readers);
@@ -317,6 +322,30 @@ def publish_stage(stage: str, path: str) -> None:
             raise
 
 
+def build(path: str, fmt: str, body, caller: str) -> None:
+    """The initial build of every family: ``body(stage)`` writes the
+    batch as one segment plus the family's sidecars into a fresh stage
+    beside ``path`` and returns ``(partition values, manifest
+    entries)``; the stage gets the version-1 manifest and
+    :func:`publish_stage` exposes it. A segment with no partition
+    value is an empty corpus, refused because an empty index is
+    unreadable on the way back. Any failure discards the stage, so
+    nothing is half-published."""
+    stage = f"{path}.stage-{uuid.uuid4().hex[:8]}"
+    try:
+        values, entries = body(stage)
+        if not values:
+            raise ValueError(
+                f"{caller}: empty corpus — an index over nothing is "
+                "unreadable on the way back; filter upstream"
+            )
+        write_manifest(stage, {"format": fmt, "version": 1, **entries})
+    except BaseException:
+        shutil.rmtree(stage, ignore_errors=True)
+        raise
+    publish_stage(stage, path)
+
+
 def _generation_names(path: str) -> list[str]:
     """Retained ``_GEN-<k>`` snapshot file names, oldest first."""
     out = []
@@ -401,6 +430,61 @@ def vacuum(path: str, expect_format: str) -> list[str]:
 
 
 # -- the shared segment-and-tombstone lifecycle -------------------------------
+
+#: the directory name Spark's partitioned writer gives a NULL or empty
+#: partition value, which reads back as NULL
+HIVE_DEFAULT_PARTITION = "__HIVE_DEFAULT_PARTITION__"
+
+#: one escaped character of a partition directory name (Spark's
+#: ``escapePathName`` writes ``%XX`` for each character it escapes)
+_ESCAPED = re.compile(r"%([0-9A-Fa-f]{2})")
+
+
+def write_segment(
+    df: DataFrame, parent: str, part_col: str, caller: str
+) -> tuple[str, list[str]]:
+    """The one partitioned segment write of the three families: ``df``,
+    already clustered as its family wants, written partitioned by
+    ``part_col`` (``token`` or ``cell``) as the fresh child
+    ``parent/seg-<id>``. Returns the child name and the partition values
+    read back from the written layout, unescaped and sorted (Python
+    string order is Spark's UTF-8 byte order). The layout answers both
+    batch contracts without a separate job:
+
+    - a ``__HIVE_DEFAULT_PARTITION__`` value is exactly a NULL or empty
+      key in the batch (``tokens('')`` yields ``['']``, and the writer
+      gives NULL and '' that one name, which reads back as NULL and no
+      term equality can reach): refused with a ``ValueError`` naming
+      ``caller``;
+    - no value at all: the batch produced no rows.
+
+    A refused or empty segment is removed before returning; it is
+    unreferenced, so the removal is crash-equivalent. Driver-side
+    listing of one directory whose fan-out the write just created
+    (one LIST of the segment prefix on an object store)."""
+    seg = new_dir_name("seg")
+    out = f"{parent}/{seg}"
+    df.write.mode("overwrite").partitionBy(part_col).parquet(out)
+    prefix = f"{part_col}="
+    try:
+        names = os.listdir(out)
+    except OSError:
+        names = []
+    values = sorted(
+        _ESCAPED.sub(lambda g: chr(int(g[1], 16)), n[len(prefix):])
+        for n in names
+        if n.startswith(prefix)
+    )
+    if not values or HIVE_DEFAULT_PARTITION in values:
+        shutil.rmtree(out, ignore_errors=True)
+        if values:
+            raise ValueError(
+                f"{caller}: batch contains NULL/empty tokens, which Spark "
+                f"writes as {HIVE_DEFAULT_PARTITION} and reads back as "
+                "NULL — unreachable by any term equality; clean the "
+                "tokenizer output"
+            )
+    return seg, values
 
 
 def required(m: dict, key: str):
@@ -523,25 +607,22 @@ def _over_deleted_ratio(
 
 
 def commit_fold(
-    path: str, m: dict, seg: str, part_col: str, caller: str, **tables
+    path: str, m: dict, segment: tuple[str, list[str]], caller: str, **tables
 ) -> None:
     """The compaction tail of every family, run once the fold of the
-    live (tombstone-masked) rows is written as the partitioned segment
-    ``seg`` and the family's ``tables`` under fresh names:
+    live (tombstone-masked) rows is written by :func:`write_segment`
+    (``segment`` is its result) and the family's ``tables`` under
+    fresh names:
 
-    - refuse an EMPTY fold — a segment with no ``<part_col>=``
-      directory is unreadable on the way back (the writers'
-      empty-corpus contract); the unreferenced new children are
-      vacuumed as crash-equivalent orphans and the manifest is
-      untouched;
-    - flip to the next version naming ``seg`` as the one segment plus
-      ``tables``, with no tombstones (the fold applied them);
+    - refuse an EMPTY fold — a segment with no partition value is
+      unreadable on the way back (the writers' empty-corpus
+      contract); the unreferenced new children are vacuumed as
+      crash-equivalent orphans and the manifest is untouched;
+    - flip to the next version naming the segment as the only one
+      plus ``tables``, with no tombstones (the fold applied them);
     - vacuum every child no retained generation references."""
-    try:
-        names = os.listdir(os.path.join(path, seg))
-    except OSError:
-        names = []
-    if not any(n.startswith(f"{part_col}=") for n in names):
+    seg, values = segment
+    if not values:
         vacuum(path, m["format"])
         raise ValueError(
             f"{caller}: the fold is empty — every indexed id is tombstoned "

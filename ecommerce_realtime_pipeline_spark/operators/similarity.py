@@ -18,9 +18,7 @@ Scale stance (100 TB):
 from __future__ import annotations
 
 import math
-import os
 import random
-import shutil
 
 import numpy as np
 import pandas as pd
@@ -490,6 +488,52 @@ def ivf_cell_tables(
     return corpus_cells, q_cells
 
 
+def _ivf_body(
+    emb: DataFrame,
+    parent: str,
+    col: str,
+    cents: list[list[float]],
+    vtype: str,
+    caller: str,
+    cent_dir: str | None = None,
+) -> tuple[str, list[str]]:
+    """The build/merge body of the IVF index, shared by write, merge
+    and requantize: assign every vector of ``emb`` its nearest centroid
+    of ``cents`` (one Arrow pass), cast it to the index's element type
+    ``vtype`` and write the batch as one cell-clustered segment under
+    ``parent`` — with ``cent_dir``, beside the centroid table (two
+    independent writes into fresh names, overlapped, guide §2.6).
+    Returns :func:`.indexfmt.write_segment`'s (segment name, cell
+    values).
+
+    The element type is the one the manifest RECORDS: merges cast
+    their batch to it and the cell seek builds its read schema from
+    it, so no segment can carry a different physical type (an
+    array<double> batch in an array<float> index would make the
+    single-schema seek unreadable). The write is CLUSTERED by cell
+    (guide §6): without it every upstream partition emits its own
+    file into every cell it touches — an upstream-partitions ×
+    n_cells small-file fan that every later read/merge/retrain of the
+    segment pays as pure task-scheduling overhead. One narrow
+    |batch|-row shuffle buys ≈1 file per cell directory (AQE
+    coalesces the tiny partitions); at 100 TB add maxRecordsPerFile
+    to re-split oversized cells — the clustering stays correct."""
+    assign = _probe_udf(cents, 1)
+    cells = emb.select(
+        F.col("vec_id").cast("long").alias("neighbor_id"),
+        F.col(col).cast(f"array<{vtype}>").alias("_v"),
+        F.element_at(assign(F.col(col)), 1).alias("cell"),
+    ).repartition(F.col("cell"))
+    writes = [lambda: indexfmt.write_segment(cells, parent, "cell", caller)]
+    if cent_dir is not None:
+        writes.append(
+            lambda: _write_centroid_table(
+                emb.sparkSession, cents, f"{parent}/{cent_dir}"
+            )
+        )
+    return overlapped(*writes)[0]
+
+
 def write_ivf_index(
     emb: DataFrame,
     path: str,
@@ -502,72 +546,33 @@ def write_ivf_index(
     PARTITIONED BY CELL inside an immutable SEGMENT directory
     (`<path>/seg-<id>/cell=<i>/`) with the vectors stored inline (the
     IVF-flat layout — serving never rejoins the corpus), plus the
-    quantizer centroids, both named by a `_CURRENT` manifest (see
-    :mod:`.indexfmt` — the shared versioned-index layout).
-    Partitioning by cell is the point: at query time the probed cells
-    become PartitionFilters, so the scan touches n_probe directories
-    per segment out of n_centroids — the columnar analogue of an
-    inverted-file seek. At 100 TB each cell directory holds its own
-    row groups and the index is rebuilt (or merged) offline like any
-    search index.
+    quantizer centroids and the recorded element type, all named by a
+    `_CURRENT` manifest (see :mod:`.indexfmt` — the shared
+    versioned-index layout). Partitioning by cell is the point: at
+    query time the probed cells become PartitionFilters, so the scan
+    touches n_probe directories per segment out of n_centroids — the
+    columnar analogue of an inverted-file seek. At 100 TB each cell
+    directory holds its own row groups and the index is rebuilt (or
+    merged) offline like any search index.
 
-    PUBLICATION IS ATOMIC: everything (manifest included) is staged
-    into a scratch directory and a single `os.rename` exposes it — a
-    concurrent reader sees either no index or a complete one, and if
-    two builders race, the loser's rename fails and it discards its
-    staging dir (the winner's identical index serves both). Object
-    stores swap the rename for a conditional manifest PUT."""
-    import uuid as _uuid
-
+    PUBLICATION IS ATOMIC (:func:`.indexfmt.build`): everything
+    (manifest included) is staged into a scratch directory and a
+    single `os.rename` exposes it — a concurrent reader sees either no
+    index or a complete one, and if two builders race, the loser's
+    rename fails and it discards its staging dir (the winner's
+    identical index serves both). Object stores swap the rename for a
+    conditional manifest PUT."""
     cents = ivf_centroids(emb, n_centroids, col, seed, cache_key=cache_key)
-    spark = emb.sparkSession
-    assign = _probe_udf(cents, 1)
-    seg = indexfmt.new_dir_name("seg")
-    cent_dir = indexfmt.new_dir_name("centroids")
-    stage = f"{path}.stage-{_uuid.uuid4().hex[:8]}"
-    # the index's canonical element type, RECORDED in the manifest:
-    # merges cast their batch to it and the cell seek builds its read
-    # schema from it — no segment can ever carry a different physical
-    # type, so the one seek schema is sound by construction
     vtype = emb.schema[col].dataType.elementType.simpleString()
-    # segment + centroid table are independent staged writes ahead of
-    # the manifest — overlapped (guide §2.6).
-    # CLUSTER the segment write by cell (guide §6): without it every
-    # upstream partition emits its own file into every cell it
-    # touches — an upstream-partitions × n_cells small-file fan
-    # that every later read/merge/retrain of the segment pays as
-    # pure task-scheduling overhead. One narrow |batch|-row
-    # shuffle buys ≈1 file per cell directory (AQE coalesces the
-    # tiny partitions); at 100 TB add maxRecordsPerFile to
-    # re-split oversized cells — the clustering stays correct.
-    overlapped(
-        lambda: (
-            emb.select(
-                F.col("vec_id").cast("long").alias("neighbor_id"),
-                F.col(col).alias("_v"),
-                F.element_at(assign(F.col(col)), 1).alias("cell"),
-            )
-            .repartition(F.col("cell"))
-            .write.mode("overwrite")
-            .partitionBy("cell")
-            .parquet(f"{stage}/{seg}")
-        ),
-        lambda: _write_centroid_table(spark, cents, f"{stage}/{cent_dir}"),
-    )
-    indexfmt.write_manifest(
-        stage,
-        {
-            "format": IVF_INDEX_FORMAT,
-            "version": 1,
-            "segments": [seg],
-            "centroids": cent_dir,
-            "vtype": vtype,
-        },
-    )
-    # losing a concurrent-builder race discards the stage silently
-    # (the winner's index is identical); every other rename failure
-    # re-raises — see indexfmt.publish_stage
-    indexfmt.publish_stage(stage, path)
+    cent_dir = indexfmt.new_dir_name("centroids")
+
+    def body(stage):
+        seg, values = _ivf_body(
+            emb, stage, col, cents, vtype, "write_ivf_index", cent_dir
+        )
+        return values, {"segments": [seg], "centroids": cent_dir, "vtype": vtype}
+
+    indexfmt.build(path, IVF_INDEX_FORMAT, body, "write_ivf_index")
 
 
 def read_ivf_index(
@@ -1633,40 +1638,20 @@ def merge_ivf_index(
     touched cell ids (reporting — never enters a plan)."""
     spark = new_emb.sparkSession
     m = indexfmt.read_manifest(path, IVF_INDEX_FORMAT)
-    # cast the batch to the index's RECORDED element type: an
-    # array<double> batch merged into an array<float> index would
-    # otherwise create a heterogeneous segment the single-schema cell
-    # seek cannot read
-    vtype = indexfmt.required(m, "vtype")
-    cents = _read_centroid_list(spark, path, m)
-    assign = _probe_udf(cents, 1)
-    delta = new_emb.select(
-        F.col("vec_id").cast("long").alias("neighbor_id"),
-        F.col(col).cast(f"array<{vtype}>").alias("_v"),
-        F.element_at(assign(F.col(col)), 1).alias("cell"),
+    # the touched-cell report is the written partition layout: cells
+    # are non-null ints by construction (the assignment UDF always
+    # emits one), so the directory values are the exact set
+    seg, values = _ivf_body(
+        new_emb,
+        path,
+        col,
+        _read_centroid_list(spark, path, m),
+        indexfmt.required(m, "vtype"),
+        "merge_ivf_index",
     )
-    seg = indexfmt.new_dir_name("seg")
-    # cell-clustered write, same rationale as write_ivf_index
-    # (guide §6): ≈1 file per touched cell instead of
-    # batch-partitions × cells. The touched-cell report comes back
-    # for free from the WRITTEN partition layout (guide §1.2: the
-    # write already materializes the answer) instead of a separate
-    # localCheckpoint + distinct().collect() job pair; cells are
-    # non-null ints by construction (the assignment UDF always emits a
-    # cell), so the dir names are the exact set.
-    delta.repartition(F.col("cell")).write.mode("overwrite").partitionBy(
-        "cell"
-    ).parquet(f"{path}/{seg}")
-    touched = sorted(
-        int(d.split("=", 1)[1])
-        for d in os.listdir(f"{path}/{seg}")
-        if d.startswith("cell=")
-    )
+    touched = sorted(int(v) for v in values)
     if not touched:
-        # empty batch: the unreferenced empty segment is a
-        # crash-equivalent orphan — discard it, index untouched
-        shutil.rmtree(f"{path}/{seg}", ignore_errors=True)
-        return touched
+        return touched  # empty batch: index untouched
     indexfmt.write_manifest(  # ---- the single commit point ----
         path,
         {
@@ -1751,15 +1736,14 @@ def compact_ivf_index(spark, path: str) -> int:
     cells = indexfmt.read_live(
         spark, path, m, m["segments"], ["neighbor_id", "_v", "cell"], "neighbor_id"
     )
-    seg = indexfmt.new_dir_name("seg")
     # cell-clustered rewrite (guide §6): the fold's whole point is
     # bounding read fan-out, so it must not re-emit
     # source-partitions × cells small files
-    cells.repartition(F.col("cell")).write.mode("overwrite").partitionBy(
-        "cell"
-    ).parquet(f"{path}/{seg}")
+    segment = indexfmt.write_segment(
+        cells.repartition(F.col("cell")), path, "cell", "compact_ivf_index"
+    )
     indexfmt.commit_fold(
-        path, m, seg, "cell", "compact_ivf_index",
+        path, m, segment, "compact_ivf_index",
         centroids=m["centroids"], vtype=vtype,
     )
     return len(m["segments"])
@@ -1819,30 +1803,13 @@ def requantize_ivf_index(
             "index directory instead"
         )
     cents = ivf_centroids(live, n_centroids, "embedding", seed)
-    assign = _probe_udf(cents, 1)
-    seg = indexfmt.new_dir_name("seg")
+    vtype = live.schema["embedding"].dataType.elementType.simpleString()
     cent_dir = indexfmt.new_dir_name("centroids")
-    # segment rewrite + centroid table: independent writes into fresh
-    # unreferenced names ahead of the flip — overlapped (guide §2.6).
-    # cell-clustered rewrite, same rationale as write_ivf_index
-    # (guide §6): the retrain must leave ≈1 file per cell, not
-    # live-partitions × cells
-    overlapped(
-        lambda: live.select(
-            F.col("vec_id").alias("neighbor_id"),
-            F.col("embedding").alias("_v"),
-            F.element_at(assign(F.col("embedding")), 1).alias("cell"),
-        )
-        .repartition(F.col("cell"))
-        .write.mode("overwrite")
-        .partitionBy("cell")
-        .parquet(f"{path}/{seg}"),
-        lambda: _write_centroid_table(spark, cents, f"{path}/{cent_dir}"),
+    segment = _ivf_body(
+        live, path, "embedding", cents, vtype, "requantize_ivf_index", cent_dir
     )
     indexfmt.commit_fold(
-        path, m, seg, "cell", "requantize_ivf_index",
-        centroids=cent_dir,
-        vtype=live.schema["embedding"].dataType.elementType.simpleString(),
+        path, m, segment, "requantize_ivf_index", centroids=cent_dir, vtype=vtype
     )
     return len(cents)
 

@@ -15,8 +15,6 @@ layout for near-dup joins; its fan-out is bounded by tokens-per-doc.
 
 from __future__ import annotations
 
-import os
-
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -608,15 +606,32 @@ def winnow_fingerprints(
 #: manifest format tag for the persisted inverted text index
 TEXT_INDEX_FORMAT = "text-index"
 # merge_text_index reports at most this many touched tokens — the
-# report is human-facing, so a bounded sorted sample; the full delta
-# vocabulary never crosses to the driver
+# report is human-facing, so a bounded sorted sample of the delta
+# vocabulary, never all of it
 TOUCHED_REPORT_CAP = 1024
 
 
-def _doc_postings(docs: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """One pass over a doc batch → (per-doc base with dl, postings
-    (token, doc_id, tf, dl)). The base is checkpointed so the stats
-    aggregate and the postings explode share the tokenize work."""
+def _text_body(docs: DataFrame, parent: str, caller: str, m: dict) -> tuple:
+    """The build/merge body of the text index: one pass over a doc
+    batch → the token-partitioned postings segment (token, doc_id, tf,
+    dl), the document-frequency table, the 1-row corpus stats and the
+    per-doc (doc_id, dl) ``docs`` sidecar, all under fresh names in
+    ``parent``. With the live manifest ``m`` (a merge), the old dfreq
+    and stats are added into the new ones and the segment and sidecar
+    lists are extended; a build passes ``{}``. Returns (the written
+    token values, manifest entries).
+
+    The batch base is checkpointed so the postings explode, the stats
+    aggregate and the sidecar share the tokenize work; the four writes
+    are independent jobs into fresh names no reader resolves before
+    the commit, so they are overlapped (guide §2.6). The ``docs``
+    sidecar is the ONLY record of docs whose text tokenized to zero
+    tokens (counted in n_docs/sum_dl, absent from postings), which
+    lets a tombstone compaction recompute stats over the TRUE survivor
+    set. A batch with no postings lands no segment and keeps the old
+    token counts, yet its docs still count (n_docs grows, avgdl
+    shifts)."""
+    spark = docs.sparkSession
     base = docs.select(
         "doc_id",
         token_count("text").alias("dl"),
@@ -627,7 +642,38 @@ def _doc_postings(docs: DataFrame) -> tuple[DataFrame, DataFrame]:
         .groupBy("token", "doc_id")
         .agg(F.count("*").alias("tf"), F.first("dl").alias("dl"))
     )
-    return base, postings
+    dfreq = postings.groupBy("token").agg(F.count("*").alias("df"))
+    stats = base.agg(F.count("*").alias("n_docs"), F.sum("dl").alias("sum_dl"))
+    if m:
+        dfreq = (
+            spark.read.parquet(f"{parent}/{m['dfreq']}")
+            .unionByName(dfreq)
+            .groupBy("token")
+            .agg(F.sum("df").cast("long").alias("df"))
+        )
+        stats = (
+            spark.read.parquet(f"{parent}/{m['stats']}")
+            .unionByName(stats)
+            .agg(
+                F.sum("n_docs").cast("long").alias("n_docs"),
+                F.sum("sum_dl").cast("long").alias("sum_dl"),
+            )
+        )
+    names = [indexfmt.new_dir_name(k) for k in ("dfreq", "stats", "docs")]
+    (seg, values), *_ = overlapped(
+        lambda: indexfmt.write_segment(postings, parent, "token", caller),
+        *[
+            lambda n=n, t=t: t.write.mode("overwrite").parquet(f"{parent}/{n}")
+            for n, t in zip(names, (dfreq, stats, base.select("doc_id", "dl")))
+        ],
+    )
+    dfreq_tbl, stats_tbl, docs_tbl = names
+    return values, {
+        "segments": [*m.get("segments", []), *([seg] if values else [])],
+        "dfreq": dfreq_tbl,
+        "stats": stats_tbl,
+        "docs": [*m.get("docs", []), docs_tbl],
+    }
 
 
 def write_text_index(docs: DataFrame, path: str) -> None:
@@ -636,74 +682,29 @@ def write_text_index(docs: DataFrame, path: str) -> None:
     PARTITIONED BY TOKEN inside an immutable SEGMENT directory
     (``<path>/seg-<id>/token=<t>/``) carrying (doc_id, tf, dl) —
     Lucene's docid/freq/norm triple in columnar form — plus the
-    |vocab|-row document-frequency table and the 1-row corpus stats,
-    all named by a single ``_CURRENT`` manifest (see
-    :mod:`..operators.indexfmt`). At query time the query's terms
-    become PartitionFilters, so serving touches |query terms|
-    directories per segment out of |vocab| — the columnar
+    |vocab|-row document-frequency table, the 1-row corpus stats and
+    the per-doc ``docs`` sidecar, all named by a single ``_CURRENT``
+    manifest (see :mod:`..operators.indexfmt`). At query time the
+    query's terms become PartitionFilters, so serving touches |query
+    terms| directories per segment out of |vocab| — the columnar
     posting-list seek (pinned in tests).
 
     PUBLICATION IS ATOMIC, same contract as the IVF index: everything
     (manifest included) stages into a scratch dir and one
     ``os.rename`` exposes it; a losing concurrent builder discards
-    its stage. At 100 TB the index rebuilds/merges offline like any
-    search index; segments are the merge unit and hot stopword
-    partitions are the skew knob — df-cutoff them out of the index
-    exactly like the Jaccard blocker."""
-    import uuid as _uuid
-
-    base, postings = _doc_postings(docs)
-    if base.isEmpty():
-        # an empty partitionBy write produces a directory Spark cannot
-        # re-read (UNABLE_TO_INFER_SCHEMA) — refuse loudly instead of
-        # publishing an unreadable index
-        raise ValueError(
-            "write_text_index: empty corpus — a search index over "
-            "nothing is unreadable on the way back; filter upstream"
-        )
-    seg = indexfmt.new_dir_name("seg")
-    dfreq = indexfmt.new_dir_name("dfreq")
-    stats = indexfmt.new_dir_name("stats")
-    docs_tbl = indexfmt.new_dir_name("docs")
-    stage = f"{path}.stage-{_uuid.uuid4().hex[:8]}"
-    # the four staged writes are independent jobs off the checkpointed
-    # base — overlapped (guide §2.6). Every target is a fresh name no
-    # reader resolves before the publish, so a failure or crash leaves
-    # only orphan stage dirs, exactly as the sequential form would.
-    # The docs sidecar is the per-doc (doc_id, dl) norms file: the ONLY
-    # record of docs whose text tokenized to zero tokens (present in
-    # n_docs/sum_dl but absent from postings), which is what lets a
-    # tombstone compaction recompute stats over the TRUE survivor set
-    # instead of silently dropping zero-token docs
-    overlapped(
-        lambda: postings.write.mode("overwrite")
-        .partitionBy("token")
-        .parquet(f"{stage}/{seg}"),
-        lambda: postings.groupBy("token")
-        .agg(F.count("*").alias("df"))
-        .write.mode("overwrite")
-        .parquet(f"{stage}/{dfreq}"),
-        lambda: base.agg(
-            F.count("*").alias("n_docs"), F.sum("dl").alias("sum_dl")
-        )
-        .write.mode("overwrite")
-        .parquet(f"{stage}/{stats}"),
-        lambda: base.select("doc_id", "dl")
-        .write.mode("overwrite")
-        .parquet(f"{stage}/{docs_tbl}"),
+    its stage (:func:`.indexfmt.build`). The written layout is checked
+    before the publish: a NULL/empty token or a corpus with no
+    postings is refused and nothing is published. At 100 TB the index
+    rebuilds/merges offline like any search index; segments are the
+    merge unit and hot stopword partitions are the skew knob —
+    df-cutoff them out of the index exactly like the Jaccard
+    blocker."""
+    indexfmt.build(
+        path,
+        TEXT_INDEX_FORMAT,
+        lambda stage: _text_body(docs, stage, "write_text_index", {}),
+        "write_text_index",
     )
-    indexfmt.write_manifest(
-        stage,
-        {
-            "format": TEXT_INDEX_FORMAT,
-            "version": 1,
-            "segments": [seg],
-            "dfreq": dfreq,
-            "stats": stats,
-            "docs": [docs_tbl],
-        },
-    )
-    indexfmt.publish_stage(stage, path)
 
 
 def read_text_index(
@@ -790,11 +791,14 @@ def merge_text_index(
     ``compact_text_index``); no in-progress marker or
     delete-then-rebuild recovery is needed.
 
-    NULL/empty tokens are rejected up front: Spark writes them as the
+    NULL/empty tokens are refused from the written layout
+    (:func:`.indexfmt.write_segment`): Spark writes them as the
     ``__HIVE_DEFAULT_PARTITION__`` directory, whose partition value
     reads back as NULL — a token no equality predicate (BM25 term
-    match, dfreq join) can ever hit, so the postings would be
-    dead weight that still desynchronizes dfreq/stats.
+    match, dfreq join) can ever hit, so the postings would be dead
+    weight that still desynchronizes dfreq/stats. The refused segment
+    is removed, the sidecars written beside it stay unreferenced
+    orphans, and the manifest is untouched.
 
     Cost at 100 TB: one |batch|-sized partitioned write + a
     |vocab|-row metadata rewrite + one pointer flip — never O(index),
@@ -809,117 +813,23 @@ def merge_text_index(
     spares every child the RETAINED manifest generations reference —
     see :mod:`.indexfmt` generation retention).
     Returns a SORTED SAMPLE of the touched tokens, capped at
-    ``TOUCHED_REPORT_CAP`` (reporting — never enters a plan; the cap
-    keeps a heavy ingest batch's O(10⁵–10⁶)-term delta vocabulary off
-    the driver — the contract check and the did-anything-land gate are
-    both 1-row aggregates, so the only driver-side list is the capped
-    sample)."""
-    spark = new_docs.sparkSession
+    ``TOUCHED_REPORT_CAP`` (reporting — never enters a plan): the
+    token values the segment write reads back from its layout (one
+    listing of |batch vocab| directory names, no Spark job), cut to
+    the cap so a heavy batch's O(10⁵–10⁶)-term vocabulary never
+    becomes the report. An empty batch is a no-op."""
     m = indexfmt.read_manifest(path, TEXT_INDEX_FORMAT)
-    doc_tbls = indexfmt.required(m, "docs")
-    base, delta = _doc_postings(new_docs)
-    if base.isEmpty():
+    indexfmt.required(m, "docs")
+    if new_docs.isEmpty():
         return []
-    delta = delta.localCheckpoint()
-    delta_tokens = delta.select("token").distinct()
-    # contract check + vocab size as ONE 1-row aggregate — never an
-    # O(|delta vocab|) collect (a 100 TB ingest batch can carry a
-    # million-term delta vocabulary)
-    chk = delta_tokens.agg(
-        F.count("*").alias("n"),
-        F.count(
-            F.when(F.col("token").isNull() | (F.col("token") == ""), 1)
-        ).alias("bad"),
-    ).collect()[0]
-    if int(chk["bad"]):
-        raise ValueError(
-            "merge_text_index: batch contains NULL/empty tokens, which "
-            "Spark writes as __HIVE_DEFAULT_PARTITION__ and reads back "
-            "as NULL — unreachable by any term equality; clean the "
-            "tokenizer output"
-        )
-    n_touched = int(chk["n"])
-    # capped, sorted sample for reporting — TakeOrdered on the
-    # executors, at most TOUCHED_REPORT_CAP strings cross to the driver
-    touched = [
-        r["token"]
-        for r in delta_tokens.orderBy("token")
-        .limit(TOUCHED_REPORT_CAP)
-        .collect()
-    ]
-    # a non-empty batch whose docs ALL tokenized to zero tokens still
-    # changes the corpus (n_docs grows, avgdl shifts — a fresh build
-    # over the union would count them), so only the postings segment
-    # and dfreq rewrite are skipped, never the stats/docs commit
-    segments = m["segments"]
-    dfreq = m["dfreq"]
-    # all staged writes land under fresh names no reader resolves
-    # until the manifest flip — independent jobs, overlapped
-    # (guide §2.6)
-    writes = []
-    if n_touched:
-        seg = indexfmt.new_dir_name("seg")
-        segments = [*m["segments"], seg]
-        writes.append(
-            lambda: delta.select("token", "doc_id", "tf", "dl")
-            .write.mode("overwrite")
-            .partitionBy("token")
-            .parquet(f"{path}/{seg}")
-        )
-        # metadata tables: |vocab| dfreq rows and the 1-row corpus
-        # stats, merged by summation and written under fresh names
-        # (index metadata, not data)
-        delta_df = delta.groupBy("token").agg(F.count("*").alias("df"))
-        merged_df = (
-            spark.read.parquet(f"{path}/{m['dfreq']}")
-            .unionByName(delta_df)
-            .groupBy("token")
-            .agg(F.sum("df").cast("long").alias("df"))
-        )
-        dfreq = indexfmt.new_dir_name("dfreq")
-        writes.append(
-            lambda: merged_df.write.mode("overwrite").parquet(
-                f"{path}/{dfreq}"
-            )
-        )
-    batch_stats = base.agg(
-        F.count("*").alias("n_docs"), F.sum("dl").alias("sum_dl")
-    )
-    merged_stats = (
-        spark.read.parquet(f"{path}/{m['stats']}")
-        .unionByName(batch_stats)
-        .agg(
-            F.sum("n_docs").cast("long").alias("n_docs"),
-            F.sum("sum_dl").cast("long").alias("sum_dl"),
-        )
-    )
-    stats = indexfmt.new_dir_name("stats")
-    docs_tbl = indexfmt.new_dir_name("docs")
-    overlapped(
-        *writes,
-        lambda: merged_stats.write.mode("overwrite").parquet(
-            f"{path}/{stats}"
-        ),
-        lambda: base.select("doc_id", "dl")
-        .write.mode("overwrite")
-        .parquet(f"{path}/{docs_tbl}"),
-    )
-    indexfmt.write_manifest(  # ---- the single commit point ----
-        path,
-        {
-            # live tombstones carry through a merge untouched (the
-            # batch is new doc ids by contract, never resurrections)
-            **m,
-            "version": int(m["version"]) + 1,
-            "segments": segments,
-            "dfreq": dfreq,
-            "stats": stats,
-            "docs": [*doc_tbls, docs_tbl],
-        },
-    )
-    if max_segments is not None and len(segments) > max_segments:
-        compact_text_index(spark, path)
-    return touched
+    touched, entries = _text_body(new_docs, path, "merge_text_index", m)
+    # ---- the single commit point; live tombstones carry through a
+    # merge untouched (the batch is new doc ids by contract, never
+    # resurrections)
+    indexfmt.write_manifest(path, {**m, "version": int(m["version"]) + 1, **entries})
+    if max_segments is not None and len(entries["segments"]) > max_segments:
+        compact_text_index(new_docs.sparkSession, path)
+    return touched[:TOUCHED_REPORT_CAP]
 
 
 def delete_from_text_index(
@@ -981,16 +891,13 @@ def compact_text_index(spark, path: str) -> int:
     survivors = indexfmt.read_live(
         spark, path, m, indexfmt.required(m, "docs"), ["doc_id", "dl"], "doc_id"
     )
-    seg = indexfmt.new_dir_name("seg")
     dfreq = indexfmt.new_dir_name("dfreq")
     stats = indexfmt.new_dir_name("stats")
     docs_tbl = indexfmt.new_dir_name("docs")
     # fresh unreferenced names ahead of the flip — independent write
     # jobs, overlapped (guide §2.6)
-    overlapped(
-        lambda: postings.write.mode("overwrite")
-        .partitionBy("token")
-        .parquet(f"{path}/{seg}"),
+    segment, *_ = overlapped(
+        lambda: indexfmt.write_segment(postings, path, "token", "compact_text_index"),
         lambda: postings.groupBy("token")
         .agg(F.count("*").cast("long").alias("df"))
         .write.mode("overwrite")
@@ -1004,7 +911,7 @@ def compact_text_index(spark, path: str) -> int:
         lambda: survivors.write.mode("overwrite").parquet(f"{path}/{docs_tbl}"),
     )
     indexfmt.commit_fold(
-        path, m, seg, "token", "compact_text_index",
+        path, m, segment, "compact_text_index",
         dfreq=dfreq, stats=stats, docs=[docs_tbl],
     )
     return len(m["segments"])
@@ -1037,111 +944,56 @@ def positional_postings(docs: DataFrame, text_col: str = "text") -> DataFrame:
     ).select("token", "doc_id", F.col("pos").cast("int").alias("pos"))
 
 
-#: the directory name Spark's partitioned writer gives NULL/empty
-#: partition values — its presence after a ``partitionBy('token')``
-#: write IS the NULL/empty-token contract breach, byte-exactly
-HIVE_DEFAULT_PARTITION = "__HIVE_DEFAULT_PARTITION__"
+def _pos_body(docs: DataFrame, parent: str, caller: str, m: dict) -> tuple:
+    """The build/merge body of the positional index: the batch's
+    postings as one token-clustered segment under ``parent``, then the
+    |docs|-row ``docs`` sidecar — the distinct doc ids, read back from
+    the written segment (column-pruned, no second tokenize pass), the
+    live-set plane that keeps the ``max_deleted_ratio`` check
+    |docs|-cheap instead of a distinct over the |tokens|-row plane.
+    With the live manifest ``m`` (a merge) the segment and sidecar
+    lists are extended; a build passes ``{}``. Returns (the written
+    token values, manifest entries); a batch with no postings writes
+    nothing and returns no entries.
 
-
-def _check_written_segment(seg_dir: str, caller: str) -> int:
-    """POST-WRITE contract check for a token-partitioned segment:
-    inspect the directory the write just produced instead of paying a
-    separate pre-write validation pass — an aggregate that would
-    re-tokenize the whole batch one extra time per write/merge, a full
-    Spark job whose answer the written directory layout already
-    carries for free.
-
-    - a ``__HIVE_DEFAULT_PARTITION__`` child is EXACTLY a NULL/empty
-      token in the batch (``tokens('')`` yields ``['']`` and the
-      partitioned writer maps both NULL and '' to that one name) —
-      raise the same contract error, and the caller discards the
-      never-referenced segment (stage dir / orphan — crash-equivalent,
-      reclaimed by compaction, so no torn state is possible);
-    - zero ``token=`` children ⇔ the batch produced zero postings.
-
-    Returns the number of token directories. Driver-side listing of
-    ONE directory whose fan-out the writer itself just created —
-    |batch vocab|-bounded metadata, not a data pass (object stores:
-    one LIST of the segment prefix, cheaper than the extra job)."""
-    try:
-        names = os.listdir(seg_dir)
-    except OSError:
-        names = []
-    if f"token={HIVE_DEFAULT_PARTITION}" in names:
-        raise ValueError(
-            f"{caller}: batch contains NULL/empty tokens, which Spark "
-            "writes as __HIVE_DEFAULT_PARTITION__ and reads back as "
-            "NULL — unreachable by any term equality; clean the "
-            "tokenizer output"
-        )
-    return sum(1 for n in names if n.startswith("token="))
+    Clustering by token before the partitioned write makes each writer
+    task own whole token directories (one exchange, 2.5x faster here
+    than the unclustered write, which makes every input task visit
+    every directory). A production corpus with stopword-class hot
+    tokens adds doc_id to the distribution key (more files per hot
+    directory, balanced tasks) — the standard skew knob."""
+    seg, values = indexfmt.write_segment(
+        positional_postings(docs).repartition(F.col("token")), parent, "token", caller
+    )
+    if not values:
+        return values, {}
+    docs_tbl = indexfmt.new_dir_name("docs")
+    docs.sparkSession.read.parquet(f"{parent}/{seg}").select(
+        "doc_id"
+    ).distinct().write.mode("overwrite").parquet(f"{parent}/{docs_tbl}")
+    return values, {
+        "segments": [*m.get("segments", []), seg],
+        "docs": [*m.get("docs", []), docs_tbl],
+    }
 
 
 def write_positional_index(docs: DataFrame, path: str) -> None:
     """Persist the POSITIONAL index: postings written as parquet
     PARTITIONED BY TOKEN inside an immutable segment directory, named
     by the same atomic ``_CURRENT`` manifest protocol as the BM25/IVF
-    indexes (:mod:`.indexfmt` — stage everything, one ``os.rename``
-    publishes; losing concurrent builders discard their stage). At
-    query time the phrase's terms become PartitionFilters, so a k-term
-    phrase touches k directories per segment out of |vocab| — the
-    positional posting-list seek (plan-pinned in tests)."""
-    import uuid as _uuid
-
-    import shutil as _shutil
-
-    postings = positional_postings(docs)
-    seg = indexfmt.new_dir_name("seg")
-    stage = f"{path}.stage-{_uuid.uuid4().hex[:8]}"
-    # cluster by token before the partitioned write: each writer task
-    # then owns whole token directories (one exchange, 2.5x faster
-    # here than the unclustered write, which makes every input task
-    # visit every directory). A production corpus with stopword-class
-    # hot tokens adds doc_id to the distribution key (more files per
-    # hot directory, balanced tasks) — the standard skew knob.
-    # WRITE FIRST, validate from the produced layout: the
-    # NULL/empty-token and empty-corpus contracts are both visible in
-    # the staged segment's directory fan-out, so checking there
-    # replaces the old pre-write validation aggregate (one full
-    # re-tokenize job per build); a failed check just discards the
-    # unpublished stage.
-    postings.repartition(F.col("token")).write.mode("overwrite").partitionBy(
-        "token"
-    ).parquet(f"{stage}/{seg}")
-    try:
-        n_tok_dirs = _check_written_segment(
-            f"{stage}/{seg}", "write_positional_index"
-        )
-    except ValueError:
-        _shutil.rmtree(stage, ignore_errors=True)
-        raise
-    if n_tok_dirs == 0:
-        _shutil.rmtree(stage, ignore_errors=True)
-        raise ValueError(
-            "write_positional_index: empty corpus — a phrase index "
-            "over nothing is unreadable on the way back (empty "
-            "partitionBy write); filter upstream"
-        )
-    # |docs|-row doc-id sidecar (distinct ids present in the segment,
-    # derived from a column-pruned read-back of what was just
-    # written — no second tokenize pass): the live-set plane that
-    # keeps the max_deleted_ratio policy check |docs|-cheap instead
-    # of a distinct over the |tokens|-row positional plane
-    docs_tbl = indexfmt.new_dir_name("docs")
-    spark = docs.sparkSession
-    spark.read.parquet(f"{stage}/{seg}").select(
-        "doc_id"
-    ).distinct().write.mode("overwrite").parquet(f"{stage}/{docs_tbl}")
-    indexfmt.write_manifest(
-        stage,
-        {
-            "format": POS_INDEX_FORMAT,
-            "version": 1,
-            "segments": [seg],
-            "docs": [docs_tbl],
-        },
+    indexes (:func:`.indexfmt.build` — stage everything, one
+    ``os.rename`` publishes; losing concurrent builders discard their
+    stage; a NULL/empty token or an empty corpus, both read from the
+    written layout, discard it too). At query time the phrase's terms
+    become PartitionFilters, so a k-term phrase touches k directories
+    per segment out of |vocab| — the positional posting-list seek
+    (plan-pinned in tests)."""
+    indexfmt.build(
+        path,
+        POS_INDEX_FORMAT,
+        lambda stage: _pos_body(docs, stage, "write_positional_index", {}),
+        "write_positional_index",
     )
-    indexfmt.publish_stage(stage, path)
 
 
 def merge_positional_index(
@@ -1154,7 +1006,8 @@ def merge_positional_index(
     segments, so appending ≡ consolidating). A crash before the flip
     leaves orphans + a fully-intact old index. Cost at 100 TB: one
     |batch tokens|-sized partitioned write + one pointer flip — never
-    O(index).
+    O(index). A batch with no postings is a no-op; a NULL/empty token
+    is refused from the written layout with the manifest untouched.
 
     ``max_segments`` is the same tiered-merge POLICY the text and IVF
     merges carry: a streamed positional index otherwise accumulates
@@ -1167,48 +1020,16 @@ def merge_positional_index(
     concurrent readers via :mod:`.indexfmt` generation retention.
     Returns the number of live segments after the merge (1 when the
     inline compaction fired)."""
-    import shutil as _shutil
-
     m = indexfmt.read_manifest(path, POS_INDEX_FORMAT)
-    doc_tbls = indexfmt.required(m, "docs")
-    delta = positional_postings(new_docs)
-    seg = indexfmt.new_dir_name("seg")
-    # write first, validate from the produced layout (same as
-    # write_positional_index): the segment lands under a fresh name no
-    # manifest references, so discarding it on a failed check is
-    # crash-equivalent (orphan, reclaimed by compaction) — never torn
-    delta.repartition(F.col("token")).write.mode("overwrite").partitionBy(
-        "token"
-    ).parquet(f"{path}/{seg}")
-    try:
-        n_tok_dirs = _check_written_segment(
-            f"{path}/{seg}", "merge_positional_index"
-        )
-    except ValueError:
-        _shutil.rmtree(f"{path}/{seg}", ignore_errors=True)
-        raise
-    if n_tok_dirs == 0:
-        _shutil.rmtree(f"{path}/{seg}", ignore_errors=True)
+    indexfmt.required(m, "docs")
+    values, entries = _pos_body(new_docs, path, "merge_positional_index", m)
+    if not values:
         return len(m["segments"])
-    spark = new_docs.sparkSession
-    docs_tbl = indexfmt.new_dir_name("docs")
-    spark.read.parquet(f"{path}/{seg}").select(
-        "doc_id"
-    ).distinct().write.mode("overwrite").parquet(f"{path}/{docs_tbl}")
-    segments = list(m["segments"]) + [seg]
-    indexfmt.write_manifest(
-        path,
-        {
-            **m,
-            "version": int(m["version"]) + 1,
-            "segments": segments,
-            "docs": [*doc_tbls, docs_tbl],
-        },
-    )
-    if max_segments is not None and len(segments) > max_segments:
-        compact_positional_index(spark, path)
+    indexfmt.write_manifest(path, {**m, "version": int(m["version"]) + 1, **entries})
+    if max_segments is not None and len(entries["segments"]) > max_segments:
+        compact_positional_index(new_docs.sparkSession, path)
         return 1
-    return len(segments)
+    return len(entries["segments"])
 
 
 def read_positional_index(
@@ -1463,19 +1284,18 @@ def compact_positional_index(spark, path: str) -> int:
     survivors = indexfmt.read_live(
         spark, path, m, indexfmt.required(m, "docs"), ["doc_id"], "doc_id"
     )
-    seg = indexfmt.new_dir_name("seg")
     docs_tbl = indexfmt.new_dir_name("docs")
-    overlapped(
-        lambda: postings.repartition(F.col("token"))
-        .write.mode("overwrite")
-        .partitionBy("token")
-        .parquet(f"{path}/{seg}"),
+    segment, _ = overlapped(
+        lambda: indexfmt.write_segment(
+            postings.repartition(F.col("token")), path, "token",
+            "compact_positional_index",
+        ),
         lambda: survivors.distinct()
         .write.mode("overwrite")
         .parquet(f"{path}/{docs_tbl}"),
     )
     indexfmt.commit_fold(
-        path, m, seg, "token", "compact_positional_index", docs=[docs_tbl]
+        path, m, segment, "compact_positional_index", docs=[docs_tbl]
     )
     return len(m["segments"])
 

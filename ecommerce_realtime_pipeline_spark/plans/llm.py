@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 
 from ecommerce_realtime_pipeline_spark.catalog import load_table
 from ecommerce_realtime_pipeline_spark.operators import dedup as DD
+from ecommerce_realtime_pipeline_spark.operators import indexfmt
 from ecommerce_realtime_pipeline_spark.operators import model as MODEL
 from ecommerce_realtime_pipeline_spark.operators import multimodal as MM
 from ecommerce_realtime_pipeline_spark.operators import similarity as SIM
@@ -455,121 +456,112 @@ def emb_knn_ivf_wide_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _persisted_ivf_path(spark: SparkSession, sf_dir: str, emb: DataFrame) -> str:
-    """Build-once path of the session-shared persisted IVF index
-    (see :func:`fixtures.stamped_path` for the freshness key). Shared by
-    every query that SERVES from the canonical full-corpus index
-    (`emb_knn_ivf_persisted`, `emb_ivf_index_health`) — queries
-    that MUTATE an index (deletes, merges) build their own copy."""
-    path = FX.stamped_path(
-        spark, sf_dir, "embeddings.parquet", "spark_graft_ivf_"
-    )
-    from ecommerce_realtime_pipeline_spark.operators import indexfmt
+#: the source table each index format is built from — the file whose
+#: size and mtime stamp a fixture's path (:func:`fixtures.stamped_path`)
+_FIXTURE_SOURCE = {
+    TX.TEXT_INDEX_FORMAT: "documents.parquet",
+    TX.POS_INDEX_FORMAT: "documents.parquet",
+    SIM.IVF_INDEX_FORMAT: "embeddings.parquet",
+}
 
-    if not indexfmt.has_index(path):
-        # a leftover non-index dir (crashed publish, pre-manifest
-        # layout) would make the builder's atomic rename lose to it
-        # forever; it holds nothing referenced, so clear it
-        if os.path.exists(path):
-            shutil.rmtree(path, ignore_errors=True)
-        SIM.write_ivf_index(emb, path, cache_key=f"{sf_dir}/embeddings")
+
+def _index_fixture(
+    spark: SparkSession,
+    sf_dir: str,
+    fmt: str,
+    prefix: str,
+    shape: tuple[int, int, bool],
+    *steps,
+) -> str:
+    """Build-once path of a session-shared index fixture: the index of
+    format ``fmt`` over ``sf_dir``'s source table, keyed on the app id
+    and the source's size and mtime (:func:`fixtures.stamped_path`).
+    ``steps`` run in order on the fixture path — a build, then any
+    merge or delete — and land the pinned generation history ``shape``
+    = (live version, live segments, live tombstones?): (1, 1, False)
+    for a plain build, (2, 1, True) for build + delete, where v1 is
+    what ``version=1`` time travel serves, (2, 2, False) for build +
+    merge. The ready check requires exactly that shape, so a
+    half-built tree from a crashed process is cleared and rebuilt,
+    never served (:func:`fixtures.build_once`, which also keeps a
+    concurrent process from interleaving a multi-flip build), and a
+    build that lands any other shape fails loudly. Fixtures are
+    serving-only: a query that mutates an index takes a
+    :func:`_mutable_index_copy`."""
+    path = FX.stamped_path(spark, sf_dir, _FIXTURE_SOURCE[fmt], prefix)
+
+    def ready(p):
+        if not indexfmt.has_index(p):
+            return False
+        m = indexfmt.read_manifest(p, fmt)
+        got = (int(m["version"]), len(m["segments"]), bool(m.get("tombstones")))
+        return got == shape
+
+    def build(p):
+        for step in steps:
+            step(p)
+
+    FX.build_once(path, ready, build)
+    if not ready(path):
+        raise RuntimeError(
+            f"index fixture {path} did not land as (version, segments, "
+            f"tombstones) {shape}"
+        )
     return path
+
+
+def _persisted_ivf_path(spark: SparkSession, sf_dir: str, emb: DataFrame) -> str:
+    """The full-corpus IVF index, shared by every query that SERVES
+    from the canonical index (`emb_knn_ivf_persisted`,
+    `emb_ivf_index_health`)."""
+    return _index_fixture(
+        spark, sf_dir, SIM.IVF_INDEX_FORMAT, "spark_graft_ivf_", (1, 1, False),
+        lambda p: SIM.write_ivf_index(emb, p, cache_key=f"{sf_dir}/embeddings"),
+    )
 
 
 def _persisted_text_path(
     spark: SparkSession, sf_dir: str, docs: DataFrame
 ) -> str:
-    """Build-once path of the session-shared persisted TEXT index
-    over the full documents corpus — the BM25 twin of
-    `_persisted_pos_path` (same freshness stamp, same build-on-miss),
-    for queries that SERVE from the canonical index; mutation
-    queries (merge/delete/compact boundaries) keep scripted copies."""
-    from ecommerce_realtime_pipeline_spark.operators import indexfmt
-    from ecommerce_realtime_pipeline_spark.operators.text import (
-        write_text_index,
+    """The full-corpus TEXT index — the BM25 twin of
+    `_persisted_pos_path`, for queries that SERVE from the canonical
+    index."""
+    return _index_fixture(
+        spark, sf_dir, TX.TEXT_INDEX_FORMAT, "spark_graft_text_", (1, 1, False),
+        lambda p: TX.write_text_index(docs, p),
     )
-
-    path = FX.stamped_path(
-        spark, sf_dir, "documents.parquet", "spark_graft_text_"
-    )
-    if not indexfmt.has_index(path):
-        if os.path.exists(path):
-            shutil.rmtree(path, ignore_errors=True)
-        write_text_index(docs, path)
-    return path
 
 
 def _persisted_ivf_deleted_path(
     spark: SparkSession, sf_dir: str, emb: DataFrame
 ) -> str:
-    """Build-once path of the session-shared 'full IVF index + odd
-    vec_ids tombstoned' fixture, shared by the deleted/hybrid/
-    time-travel serving family instead of each query rebuilding it
-    in-query. Generation
-    contract, test-pinned: v1 = the full-corpus build (what
-    ``version=1`` time travel serves), v2 = live tombstones on the
-    odd ids (what the masked serves read). SERVING-ONLY — any query
-    that mutates further (compaction, merges) builds its own scripted
-    copy. The ready check requires exactly that v2-with-tombstones
-    shape, so a half-built fixture from a crashed process is rebuilt,
-    never served."""
-    from ecommerce_realtime_pipeline_spark.operators import indexfmt
-
-    path = FX.stamped_path(
-        spark, sf_dir, "embeddings.parquet", "spark_graft_ivfdel_"
-    )
-
-    def _ready(p):
-        if not indexfmt.has_index(p):
-            return False
-        m = indexfmt.read_manifest(p, SIM.IVF_INDEX_FORMAT)
-        return int(m["version"]) == 2 and bool(m.get("tombstones"))
-
-    def _build(p):
-        SIM.write_ivf_index(emb, p, cache_key=f"{sf_dir}/embeddings")
-        n = SIM.delete_from_ivf_index(
+    """Full IVF index + odd vec_ids tombstoned, shared by the
+    deleted/hybrid/time-travel serving family: v1 = the full-corpus
+    build (what ``version=1`` time travel serves), v2 = live
+    tombstones on the odd ids (what the masked serves read)."""
+    return _index_fixture(
+        spark, sf_dir, SIM.IVF_INDEX_FORMAT, "spark_graft_ivfdel_", (2, 1, True),
+        lambda p: SIM.write_ivf_index(emb, p, cache_key=f"{sf_dir}/embeddings"),
+        lambda p: SIM.delete_from_ivf_index(
             emb.filter(F.col("vec_id") % 2 == 1).select("vec_id"), p
-        )
-        assert n > 0
-
-    FX.build_once(path, _ready, _build)
-    return path
+        ),
+    )
 
 
 def _persisted_text_deleted_path(
     spark: SparkSession, sf_dir: str, docs: DataFrame
 ) -> str:
     """Text twin of :func:`_persisted_ivf_deleted_path`: full-corpus
-    ``write_text_index`` + odd doc_ids tombstoned, built once per
-    (session, corpus stamp). v1 = full build (time travel), v2 = live
-    tombstones (masked BM25 serves with deliberately-stale idf/avgdl
-    — the documented Lucene semantics). Serving-only."""
-    from ecommerce_realtime_pipeline_spark.operators import indexfmt
-    from ecommerce_realtime_pipeline_spark.operators.text import (
-        TEXT_INDEX_FORMAT,
-        delete_from_text_index,
-        write_text_index,
-    )
-
-    path = FX.stamped_path(
-        spark, sf_dir, "documents.parquet", "spark_graft_textdel_"
-    )
-
-    def _ready(p):
-        if not indexfmt.has_index(p):
-            return False
-        m = indexfmt.read_manifest(p, TEXT_INDEX_FORMAT)
-        return int(m["version"]) == 2 and bool(m.get("tombstones"))
-
-    def _build(p):
-        write_text_index(docs, p)
-        n = delete_from_text_index(
+    ``write_text_index`` + odd doc_ids tombstoned. v1 = full build
+    (time travel), v2 = live tombstones (masked BM25 serves with
+    deliberately-stale idf/avgdl — the documented Lucene semantics)."""
+    return _index_fixture(
+        spark, sf_dir, TX.TEXT_INDEX_FORMAT, "spark_graft_textdel_", (2, 1, True),
+        lambda p: TX.write_text_index(docs, p),
+        lambda p: TX.delete_from_text_index(
             docs.filter(F.col("doc_id") % 2 == 1).select("doc_id"), p
-        )
-        assert n > 0
-
-    FX.build_once(path, _ready, _build)
-    return path
+        ),
+    )
 
 
 def _persisted_pos_deleted_path(
@@ -578,28 +570,14 @@ def _persisted_pos_deleted_path(
     """Positional twin of :func:`_persisted_text_deleted_path`: full
     ``write_positional_index`` + every doc_id ≡ 0 (mod 7) tombstoned
     (the family's delete-gate fixture shape). v1 = full build, v2 =
-    live tombstones. Serving-only."""
-    from ecommerce_realtime_pipeline_spark.operators import indexfmt
-
-    path = FX.stamped_path(
-        spark, sf_dir, "documents.parquet", "spark_graft_posdel_"
-    )
-
-    def _ready(p):
-        if not indexfmt.has_index(p):
-            return False
-        m = indexfmt.read_manifest(p, TX.POS_INDEX_FORMAT)
-        return int(m["version"]) == 2 and bool(m.get("tombstones"))
-
-    def _build(p):
-        TX.write_positional_index(docs, p)
-        n = TX.delete_from_positional_index(
+    live tombstones."""
+    return _index_fixture(
+        spark, sf_dir, TX.POS_INDEX_FORMAT, "spark_graft_posdel_", (2, 1, True),
+        lambda p: TX.write_positional_index(docs, p),
+        lambda p: TX.delete_from_positional_index(
             docs.filter(F.col("doc_id") % 7 == 0).select("doc_id"), p
-        )
-        assert n > 0
-
-    FX.build_once(path, _ready, _build)
-    return path
+        ),
+    )
 
 
 def _deleted_fixture_pair(
@@ -629,10 +607,8 @@ def _mutable_index_copy(base: str, prefix: str) -> tuple[str, str]:
     (test-pinned in test_indexfmt), so an index directory is
     relocatable byte-for-byte, and the shipped fixtures are ≤ a few
     MB, so the copy is milliseconds against the multi-second build it
-    replaces (r12 judge task 3: amortize the repeated in-query fixture
-    builds). Returns ``(tmpdir, index_path)``; the CALLER owns the
-    tmpdir (``shutil.rmtree`` in its ``finally``), exactly like the
-    mkdtemp pattern this replaces."""
+    replaces. Returns ``(tmpdir, index_path)``; the CALLER owns the
+    tmpdir (``shutil.rmtree`` in its ``finally``)."""
     tmp = tempfile.mkdtemp(prefix=prefix)
     path = os.path.join(tmp, "index")
     shutil.copytree(base, path)
@@ -640,159 +616,78 @@ def _mutable_index_copy(base: str, prefix: str) -> tuple[str, str]:
 
 
 def _ivf_even_path(spark: SparkSession, sf_dir: str, emb: DataFrame) -> str:
-    """Build-once path of the session-shared HALF-CORPUS (even
-    vec_ids) IVF index — the frozen-quantizer base every drift-family
-    fixture starts from (`write_ivf_index` publishes atomically, so
-    has_index ⇒ complete v1). The even-trained quantizer itself is
-    additionally memoized under the ``#even`` cache key, shared with
-    the oracle chain."""
-    from ecommerce_realtime_pipeline_spark.operators import indexfmt
-
-    path = FX.stamped_path(
-        spark, sf_dir, "embeddings.parquet", "spark_graft_ivfeven_"
-    )
-    if not indexfmt.has_index(path):
-        if os.path.exists(path):
-            shutil.rmtree(path, ignore_errors=True)
-        SIM.write_ivf_index(
+    """The HALF-CORPUS (even vec_ids) IVF index — the frozen-quantizer
+    base every drift-family fixture starts from. The even-trained
+    quantizer itself is additionally memoized under the ``#even``
+    cache key, shared with the oracle chain."""
+    return _index_fixture(
+        spark, sf_dir, SIM.IVF_INDEX_FORMAT, "spark_graft_ivfeven_", (1, 1, False),
+        lambda p: SIM.write_ivf_index(
             emb.filter(F.col("vec_id") % 2 == 0),
-            path,
+            p,
             cache_key=f"{sf_dir}/embeddings#even",
-        )
-    return path
+        ),
+    )
 
 
 def _ivf_drifted_path(spark: SparkSession, sf_dir: str, emb: DataFrame) -> str:
-    """Build-once path of the session-shared DRIFTED IVF fixture —
-    quantizer frozen on the even half, odd half merged in under it
-    (v1 = even build, v2 = odd-batch segment append). This exact
-    2-segment state is the shared prefix of the whole drift family
-    (`emb_knn_ivf_merged` serves it as-is; requantize/policy queries
-    take a :func:`_mutable_index_copy` and retrain their own copy).
-    Multi-flip build ⇒ the cross-process build-once guard."""
-    from ecommerce_realtime_pipeline_spark.operators import indexfmt
-
-    path = FX.stamped_path(
-        spark, sf_dir, "embeddings.parquet", "spark_graft_ivfdrift_"
+    """The DRIFTED IVF index — quantizer frozen on the even half, odd
+    half merged in under it (v1 = even build, v2 = odd-batch segment
+    append). This exact 2-segment state is the shared prefix of the
+    whole drift family (`emb_knn_ivf_merged` serves it as-is;
+    requantize/policy queries take a :func:`_mutable_index_copy` and
+    retrain their own copy)."""
+    return _index_fixture(
+        spark, sf_dir, SIM.IVF_INDEX_FORMAT, "spark_graft_ivfdrift_", (2, 2, False),
+        lambda p: shutil.copytree(_ivf_even_path(spark, sf_dir, emb), p),
+        lambda p: SIM.merge_ivf_index(emb.filter(F.col("vec_id") % 2 == 1), p),
     )
-
-    def _ready(p):
-        if not indexfmt.has_index(p):
-            return False
-        m = indexfmt.read_manifest(p, SIM.IVF_INDEX_FORMAT)
-        return (
-            int(m["version"]) == 2
-            and len(m["segments"]) == 2
-            and not m.get("tombstones")
-        )
-
-    def _build(p):
-        shutil.copytree(_ivf_even_path(spark, sf_dir, emb), p)
-        SIM.merge_ivf_index(emb.filter(F.col("vec_id") % 2 == 1), p)
-
-    FX.build_once(path, _ready, _build)
-    return path
 
 
 def _merged_text_path(spark: SparkSession, sf_dir: str, docs: DataFrame) -> str:
-    """Build-once path of the session-shared MERGED text index — even
-    doc_ids built, odd doc_ids merged as a second immutable segment
-    (v1 = build, v2 = merge, 2 live segments). The shared prefix of
-    the merge-lifecycle family: `docs_bm25_index_merge` serves it
-    as-is; compaction/stats queries mutate a
+    """The MERGED text index — even doc_ids built, odd doc_ids merged
+    as a second immutable segment (v1 = build, v2 = merge). The shared
+    prefix of the merge-lifecycle family: `docs_bm25_index_merge`
+    serves it as-is; compaction/stats queries mutate a
     :func:`_mutable_index_copy`."""
-    from ecommerce_realtime_pipeline_spark.operators import indexfmt
-    from ecommerce_realtime_pipeline_spark.operators.text import (
-        TEXT_INDEX_FORMAT,
-        merge_text_index,
-        write_text_index,
+    return _index_fixture(
+        spark, sf_dir, TX.TEXT_INDEX_FORMAT, "spark_graft_textmrg_", (2, 2, False),
+        lambda p: TX.write_text_index(docs.filter(F.col("doc_id") % 2 == 0), p),
+        lambda p: TX.merge_text_index(docs.filter(F.col("doc_id") % 2 == 1), p),
     )
-
-    path = FX.stamped_path(
-        spark, sf_dir, "documents.parquet", "spark_graft_textmrg_"
-    )
-
-    def _ready(p):
-        if not indexfmt.has_index(p):
-            return False
-        m = indexfmt.read_manifest(p, TEXT_INDEX_FORMAT)
-        return (
-            int(m["version"]) == 2
-            and len(m["segments"]) == 2
-            and not m.get("tombstones")
-        )
-
-    def _build(p):
-        write_text_index(docs.filter(F.col("doc_id") % 2 == 0), p)
-        merge_text_index(docs.filter(F.col("doc_id") % 2 == 1), p)
-
-    FX.build_once(path, _ready, _build)
-    return path
 
 
 def _merged_pos_median_path(
     spark: SparkSession, sf_dir: str, docs: DataFrame
 ) -> str:
-    """Build-once path of the session-shared MEDIAN-SPLIT positional
-    index (first half of the doc_id range built, second half merged as
-    a second segment — `docs_phrase_search_indexed`'s fixture shape,
-    v2 with 2 live segments). Serving-only."""
-    from ecommerce_realtime_pipeline_spark.operators import indexfmt
-
-    path = FX.stamped_path(
-        spark, sf_dir, "documents.parquet", "spark_graft_posmrg_"
-    )
-
-    def _ready(p):
-        if not indexfmt.has_index(p):
-            return False
-        m = indexfmt.read_manifest(p, TX.POS_INDEX_FORMAT)
-        return (
-            int(m["version"]) == 2
-            and len(m["segments"]) == 2
-            and not m.get("tombstones")
-        )
-
-    def _build(p):
+    """The MEDIAN-SPLIT positional index: first half of the doc_id
+    range built, second half merged as a second segment —
+    `docs_phrase_search_indexed`'s fixture shape (v1 = build, v2 =
+    merge)."""
+    def build(p):
         mid = docs.agg(
             F.percentile_approx("doc_id", 0.5, 10000).alias("m")
         ).collect()[0]["m"]
         TX.write_positional_index(docs.filter(F.col("doc_id") <= mid), p)
         TX.merge_positional_index(docs.filter(F.col("doc_id") > mid), p)
 
-    FX.build_once(path, _ready, _build)
-    return path
+    return _index_fixture(
+        spark, sf_dir, TX.POS_INDEX_FORMAT, "spark_graft_posmrg_", (2, 2, False),
+        build,
+    )
 
 
 def _merged_pos_evenodd_path(
     spark: SparkSession, sf_dir: str, docs: DataFrame
 ) -> str:
-    """Build-once path of the session-shared EVEN/ODD merged
-    positional index (even doc_ids built, odd merged — the
-    `docs_pos_index_stats` lifecycle prefix, v2 with 2 live
-    segments); its consumer deletes on a :func:`_mutable_index_copy`."""
-    from ecommerce_realtime_pipeline_spark.operators import indexfmt
-
-    path = FX.stamped_path(
-        spark, sf_dir, "documents.parquet", "spark_graft_posmeo_"
+    """The EVEN/ODD merged positional index (even doc_ids built, odd
+    merged — the `docs_pos_index_stats` lifecycle prefix, v1 = build,
+    v2 = merge); its consumer deletes on a :func:`_mutable_index_copy`."""
+    return _index_fixture(
+        spark, sf_dir, TX.POS_INDEX_FORMAT, "spark_graft_posmeo_", (2, 2, False),
+        lambda p: TX.write_positional_index(docs.filter(F.col("doc_id") % 2 == 0), p),
+        lambda p: TX.merge_positional_index(docs.filter(F.col("doc_id") % 2 == 1), p),
     )
-
-    def _ready(p):
-        if not indexfmt.has_index(p):
-            return False
-        m = indexfmt.read_manifest(p, TX.POS_INDEX_FORMAT)
-        return (
-            int(m["version"]) == 2
-            and len(m["segments"]) == 2
-            and not m.get("tombstones")
-        )
-
-    def _build(p):
-        TX.write_positional_index(docs.filter(F.col("doc_id") % 2 == 0), p)
-        TX.merge_positional_index(docs.filter(F.col("doc_id") % 2 == 1), p)
-
-    FX.build_once(path, _ready, _build)
-    return path
 
 
 def emb_pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1931,7 +1826,7 @@ def docs_bm25_from_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     ride broadcasts, and the scoring is the shared `_bm25_rank`, so
     the result is bit-identical to `docs_bm25_search` and shares its
     oracle. Serves from the session-shared full-corpus fixture
-    (:func:`_persisted_text_path`, r13) — built once per session."""
+    (:func:`_persisted_text_path`) — built once per session."""
     docs = load_table(spark, sf_dir, "documents")
     path = _persisted_text_path(spark, sf_dir, docs)
     return _bm25_top20_indexed(spark, path)
@@ -4887,7 +4782,7 @@ def docs_bm25_index_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     result must be bit-identical to a full-corpus build — it shares
     `docs_bm25_search`'s oracle, so the driver hash-gates the merge
     path itself. Serves from the session-shared merged fixture
-    (:func:`_merged_text_path`, r13) — build+merge paid once per
+    (:func:`_merged_text_path`) — build+merge paid once per
     session across the merge-lifecycle family."""
     docs = load_table(spark, sf_dir, "documents")
     path = _merged_text_path(spark, sf_dir, docs)
@@ -4898,7 +4793,7 @@ LLM_ORACLES["docs_bm25_index_merge"] = LLM_ORACLES["docs_bm25_search"]
 
 
 def docs_bm25_index_compacted(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The FULL index lifecycle through the r8 manifest layout: build
+    """The FULL index lifecycle through the manifest layout: build
     over half the corpus (even doc_ids), MERGE the other half in as a
     second segment (`text.merge_text_index`), COMPACT the segments
     back to one (`text.compact_text_index` — the Lucene tiered-merge
@@ -4907,12 +4802,11 @@ def docs_bm25_index_compacted(spark: SparkSession, sf_dir: str) -> DataFrame:
     one-shot full build — shares `docs_bm25_search`'s oracle, so the
     driver hash-gates build → merge → compact → serve end to end.
     The build+merge prefix comes from the session-shared merged
-    fixture (:func:`_merged_text_path`, r13); compaction — the step
+    fixture (:func:`_merged_text_path`); compaction — the step
     this query gates — mutates a private
     :func:`_mutable_index_copy`."""
     import shutil
 
-    from ecommerce_realtime_pipeline_spark.operators import indexfmt
     from ecommerce_realtime_pipeline_spark.operators.text import (
         TEXT_INDEX_FORMAT,
         compact_text_index,
@@ -4945,7 +4839,7 @@ def docs_bm25_index_deleted(spark: SparkSession, sf_dir: str) -> DataFrame:
     surviving docs. (The compacted/exact half of the lifecycle is
     hash-gated by pytest: delete -> compact == fresh build over the
     survivors.) Serves from the session-shared deleted fixture
-    (:func:`_persisted_text_deleted_path`, r13) — the build+delete is
+    (:func:`_persisted_text_deleted_path`) — the build+delete is
     paid once per session, not per family member."""
     docs = load_table(spark, sf_dir, "documents")
     path = _persisted_text_deleted_path(spark, sf_dir, docs)
@@ -5137,7 +5031,6 @@ def docs_text_index_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     the script; corpus fields recompute in SQL."""
     import shutil
 
-    from ecommerce_realtime_pipeline_spark.operators import indexfmt
     from ecommerce_realtime_pipeline_spark.operators.text import (
         TEXT_INDEX_FORMAT,
         delete_from_text_index,
@@ -5227,7 +5120,6 @@ def docs_bm25_index_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
     write + a |vocab|-row metadata rewrite (never O(index));
     `max_segments` bounds read amplification across an arbitrary
     landing sequence, retention keeps concurrent serving safe."""
-    from ecommerce_realtime_pipeline_spark.operators import indexfmt
     from ecommerce_realtime_pipeline_spark.operators.text import (
         merge_text_index,
         write_text_index,
@@ -5285,7 +5177,7 @@ def docs_bm25_index_timetravel(spark: SparkSession, sf_dir: str) -> DataFrame:
     path would serve the masked (or stale-stats) index and
     hash-mismatch. Scale: manifest resolution + the seeked serve —
     zero extra data I/O. Serves from the session-shared deleted
-    fixture (:func:`_persisted_text_deleted_path`, r13), whose
+    fixture (:func:`_persisted_text_deleted_path`), whose
     generation contract pins v1 = the pre-delete full build."""
     docs = load_table(spark, sf_dir, "documents")
     path = _persisted_text_deleted_path(spark, sf_dir, docs)
@@ -5316,7 +5208,7 @@ def docs_hybrid_search_rrf_indexed(spark: SparkSession, sf_dir: str) -> DataFram
     a full-outer join of two k-row lists, driver-trivial anywhere.
     Both legs serve from the session-shared deleted fixtures
     (:func:`_persisted_text_deleted_path` /
-    :func:`_persisted_ivf_deleted_path`, r13) — the two full
+    :func:`_persisted_ivf_deleted_path`) — the two full
     build+delete sequences are paid once per session across the whole
     deleted/hybrid/time-travel family, not per query."""
     from pyspark.sql import Window
@@ -5417,7 +5309,7 @@ def emb_knn_ivf_merged(spark: SparkSession, sf_dir: str) -> DataFrame:
     replays the IVF chain with the quantizer sample drawn from the
     even half and assignment over the full corpus — so the driver
     hash-gates the append path itself. Serves from the session-shared
-    drifted fixture (:func:`_ivf_drifted_path`, r13) — build+merge
+    drifted fixture (:func:`_ivf_drifted_path`) — build+merge
     paid once per session across the drift family."""
     emb = load_table(spark, sf_dir, "embeddings")
     path = _ivf_drifted_path(spark, sf_dir, emb)
@@ -5455,8 +5347,8 @@ def emb_knn_ivf_requantized(spark: SparkSession, sf_dir: str) -> DataFrame:
     test_llm_ops), the oracle is exactly the full-corpus-trained
     emb_knn_ivf chain — the driver hash-gates the remediation path
     against the drift-free ideal it promises to restore. The drift
-    fixture comes from the session-shared :func:`_ivf_drifted_path`
-    (r13); the retrain — the step this query gates — mutates a
+    fixture comes from the session-shared :func:`_ivf_drifted_path`;
+    the retrain — the step this query gates — mutates a
     private :func:`_mutable_index_copy`."""
     import shutil
 
@@ -5496,7 +5388,7 @@ def emb_knn_ivf_policy_remediated(
     is again the drift-free `emb_knn_ivf` chain. The check itself is
     index-metadata cheap: a count aggregate pruned to the partition
     key. The drift fixture comes from the session-shared
-    :func:`_ivf_drifted_path` (r13); the policy loop — the step this
+    :func:`_ivf_drifted_path`; the policy loop — the step this
     query gates — runs on a private :func:`_mutable_index_copy`."""
     import shutil
 
@@ -5521,7 +5413,7 @@ LLM_ORACLES["emb_knn_ivf_policy_remediated"] = LLM_ORACLES["emb_knn_ivf"]
 
 def emb_knn_ivf_merge_policy(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The drift policy AS A MERGE KNOB end to end
-    (`merge_ivf_index(max_occupancy_ratio=)`, r12 — sibling of
+    (`merge_ivf_index(max_occupancy_ratio=)` — sibling of
     `merge_positional_index(max_segments=)`): the same drift fixture
     as `emb_knn_ivf_policy_remediated` (quantizer frozen on the even
     half), but the odd half lands through the merge itself carrying
@@ -5540,12 +5432,11 @@ def emb_knn_ivf_merge_policy(spark: SparkSession, sf_dir: str) -> DataFrame:
     the threshold, the Faiss retrain-on-imbalance scheduler run by the
     ingest path itself instead of a separate ops loop. The
     frozen-quantizer base comes from the session-shared
-    :func:`_ivf_even_path` (r13); the knob-carrying merge — the step
+    :func:`_ivf_even_path`; the knob-carrying merge — the step
     this query gates — lands on a private
     :func:`_mutable_index_copy`."""
     import shutil
 
-    from ecommerce_realtime_pipeline_spark.operators import indexfmt
 
     emb = load_table(spark, sf_dir, "embeddings")
     tmp, path = _mutable_index_copy(
@@ -5590,7 +5481,7 @@ def emb_knn_ivf_timetravel(spark: SparkSession, sf_dir: str) -> DataFrame:
     I/O; retention cost is the superseded segments' storage until
     vacuum, the Iceberg snapshot-expiry trade. Serves from the
     session-shared deleted fixture
-    (:func:`_persisted_ivf_deleted_path`, r13), whose generation
+    (:func:`_persisted_ivf_deleted_path`), whose generation
     contract pins v1 = the pre-delete full build."""
     emb = load_table(spark, sf_dir, "embeddings")
     path = _persisted_ivf_deleted_path(spark, sf_dir, emb)
@@ -6225,7 +6116,7 @@ def docs_phrase_search_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     opens per segment off the manifest, no |vocab|-linear partition
     discovery (plan-pinned); everything after the seek is the same
     aligned join. Serves from the session-shared median-split merged
-    fixture (:func:`_merged_pos_median_path`, r13) — build+merge paid
+    fixture (:func:`_merged_pos_median_path`) — build+merge paid
     once per session."""
     docs = load_table(spark, sf_dir, "documents")
     path = _merged_pos_median_path(spark, sf_dir, docs)
@@ -6292,22 +6183,13 @@ LLM_ORACLES["docs_proximity_search"] = f"""
 
 
 def _persisted_pos_path(spark: SparkSession, sf_dir: str, docs: DataFrame) -> str:
-    """Build-once path of the session-shared persisted POSITIONAL
-    index over the full documents corpus — the positional twin of
-    `_persisted_ivf_path` (same (app id, size, mtime) freshness stamp,
-    same build-on-miss), for queries that SERVE from the canonical
-    index; queries that exercise MUTATIONS (merge/delete boundaries)
-    keep building their own scripted copies."""
-    path = FX.stamped_path(
-        spark, sf_dir, "documents.parquet", "spark_graft_pos_"
+    """The full-corpus POSITIONAL index — the positional twin of
+    `_persisted_ivf_path`, for queries that SERVE from the canonical
+    index (:func:`_index_fixture`)."""
+    return _index_fixture(
+        spark, sf_dir, TX.POS_INDEX_FORMAT, "spark_graft_pos_", (1, 1, False),
+        lambda p: TX.write_positional_index(docs, p),
     )
-    from ecommerce_realtime_pipeline_spark.operators import indexfmt
-
-    if not indexfmt.has_index(path):
-        if os.path.exists(path):
-            shutil.rmtree(path, ignore_errors=True)
-        TX.write_positional_index(docs, path)
-    return path
 
 
 def _proximity_boosted(lex: DataFrame, pairs: DataFrame) -> DataFrame:
@@ -6569,7 +6451,7 @@ def docs_phrase_search_deleted(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounded by deletes-since-compaction) to the partition-pruned
     seeks; everything else is `docs_phrase_search_indexed`'s plan.
     Serves from the session-shared deleted fixture
-    (:func:`_persisted_pos_deleted_path`, r13) — the build+delete is
+    (:func:`_persisted_pos_deleted_path`) — the build+delete is
     paid once per session."""
     docs = load_table(spark, sf_dir, "documents")
     path = _persisted_pos_deleted_path(spark, sf_dir, docs)
@@ -6758,7 +6640,6 @@ def docs_phrase_index_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale stance: each trigger costs one |batch tokens|-sized
     clustered segment write + a |batch docs|-row sidecar + one pointer
     flip — never O(index)."""
-    from ecommerce_realtime_pipeline_spark.operators import indexfmt
 
     docs = load_table(spark, sf_dir, "documents")
     doc_schema = (
@@ -6807,7 +6688,7 @@ LLM_ORACLES["docs_phrase_index_streaming"] = LLM_ORACLES["docs_phrase_search"]
 
 def docs_phrase_index_tiered(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TIERED-MERGE POLICY on the positional index end to end
-    (`merge_positional_index(..., max_segments=2)`, r11 — the
+    (`merge_positional_index(..., max_segments=2)` — the
     sibling-parity knob that keeps a streamed index's segment fan-out
     bounded): the corpus lands in FOUR quartile batches (doc_id % 4 —
     disjoint ids, deterministic), merges run under the cap, so the
@@ -6824,7 +6705,6 @@ def docs_phrase_index_tiered(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     import tempfile
 
-    from ecommerce_realtime_pipeline_spark.operators import indexfmt
 
     docs = load_table(spark, sf_dir, "documents")
     tmp = tempfile.mkdtemp(prefix="eng_posidx_t_")
@@ -6927,7 +6807,7 @@ def docs_hybrid_search_weighted_indexed(
 
     Scale stance: the legs' own plans + two 1-row min/max broadcasts
     and a full-outer join of two k-row lists — driver-trivial. Both
-    legs serve from the session-shared deleted fixtures (r13) — see
+    legs serve from the session-shared deleted fixtures — see
     `docs_hybrid_search_rrf_indexed`."""
     docs = load_table(spark, sf_dir, "documents")
     emb = load_table(spark, sf_dir, "embeddings")
@@ -7028,13 +6908,12 @@ def docs_pos_index_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the sidecar read is |docs|-row; the live counts are
     column-pruned aggregates over the masked postings — index
     metadata cost, never a text scan. The build+merge prefix comes
-    from the session-shared :func:`_merged_pos_evenodd_path` (r13);
+    from the session-shared :func:`_merged_pos_evenodd_path`;
     the delete — the step this query gates — mutates a private
     :func:`_mutable_index_copy`."""
     import shutil
     from functools import reduce
 
-    from ecommerce_realtime_pipeline_spark.operators import indexfmt
 
     docs = load_table(spark, sf_dir, "documents")
     tmp, path = _mutable_index_copy(

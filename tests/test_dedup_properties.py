@@ -99,10 +99,14 @@ def test_merge_text_index_equals_rebuild_random(spark, tmp_path_factory, da, db)
         assert got == want
 
 
-def test_empty_corpus_contracts_are_loud_and_clear(spark):
-    """Empty-corpus audit (r7): every ANN/index entry point must fail
+def test_empty_corpus_contracts_are_loud_and_clear(spark, tmp_path):
+    """Empty-corpus audit: every ANN/index entry point must fail
     with a CLEAR contract error, not an obscure numpy AxisError /
-    NoneType subscript / unreadable-index AnalysisException."""
+    NoneType subscript / unreadable-index AnalysisException. That
+    includes a text corpus whose rows yield no postings (all-NULL
+    text): nothing is published, where an index with no token
+    directory would fail on read with UNABLE_TO_INFER_SCHEMA."""
+    from ecommerce_realtime_pipeline_spark.operators import indexfmt
     from ecommerce_realtime_pipeline_spark.operators import similarity as SIM
     from ecommerce_realtime_pipeline_spark.operators.text import write_text_index
 
@@ -116,3 +120,11 @@ def test_empty_corpus_contracts_are_loud_and_clear(spark):
     )
     with pytest.raises(ValueError, match="empty corpus"):
         write_text_index(empty_docs, "/tmp/should_never_exist_idx")
+    null_text = spark.createDataFrame(
+        [(1, None, "en", "s", 0), (2, None, "en", "s", 0)],
+        "doc_id long, text string, lang string, source string, n_chars long",
+    )
+    path = str(tmp_path / "idx")
+    with pytest.raises(ValueError, match="empty corpus"):
+        write_text_index(null_text, path)
+    assert not indexfmt.has_index(path)

@@ -3,7 +3,8 @@ imports or reads another package module's ``_private`` name. Shared
 machinery gets a public name in the module that owns it (commit and
 lock steps in ``storage``, job overlap in ``session``, fixture
 directories in ``plans.fixtures``, the streaming start path in
-``streaming.ingest``). Tests are exempt."""
+``streaming.ingest``, the partitioned index-segment write in
+``operators.indexfmt``). Tests are exempt."""
 
 from __future__ import annotations
 
@@ -124,3 +125,30 @@ def test_one_streaming_start_path():
         (starter, "start_available_now", "writeStream"),
         (starter, "start_available_now", "trigger"),
     }
+
+
+def _segment_write_sites(path: pathlib.Path) -> list[str]:
+    """Every DataFrameWriter ``.partitionBy(`` call and ``os.listdir``
+    read in one module, as ``<line> <form>``; ``Window.partitionBy``
+    is a window spec, not a write, and does not count."""
+    found = []
+    for node in ast.walk(ast.parse(path.read_text())):
+        if not isinstance(node, ast.Attribute):
+            continue
+        if node.attr == "partitionBy" and not (
+            isinstance(node.value, ast.Name) and node.value.id == "Window"
+        ):
+            found.append(f"{node.lineno} partitionBy")
+        if node.attr == "listdir":
+            found.append(f"{node.lineno} listdir")
+    return found
+
+
+def test_index_families_write_segments_through_indexfmt():
+    """The text, positional and IVF index families write their
+    partitioned segments through ``indexfmt.write_segment``, which
+    reads the written layout back: ``operators/text.py`` and
+    ``operators/similarity.py`` hold no ``.partitionBy(`` writer of
+    their own and list no directory."""
+    for name in ("text.py", "similarity.py"):
+        assert _segment_write_sites(ROOT / "operators" / name) == [], name

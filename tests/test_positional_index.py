@@ -490,13 +490,21 @@ def test_max_segments_triggers_inline_compaction(spark, tmp_path):
 def test_writers_reject_null_empty_tokens(spark, tmp_path):
     """tokens('') yields [''], and partitionBy('token') writes it as
     __HIVE_DEFAULT_PARTITION__ → NULL on read-back — unreachable by
-    any phrase equality yet counted by the stats aggregates. Both
-    positional writers must fail loudly, like merge_text_index."""
+    any term or phrase equality yet counted by the stats aggregates
+    (the text index's dfreq would keep a '' row matching no posting).
+    Both positional writers and the text writer must fail loudly,
+    like merge_text_index, and publish nothing."""
+    from ecommerce_realtime_pipeline_spark.operators.text import write_text_index
+
     path = str(tmp_path / "idx")
     bad = _docs(spark, [(1, "a b"), (2, "")])
     with pytest.raises(ValueError, match="NULL/empty tokens"):
         write_positional_index(bad, path)
     assert not indexfmt.has_index(path)  # nothing half-published
+    text_path = str(tmp_path / "text")
+    with pytest.raises(ValueError, match="NULL/empty tokens"):
+        write_text_index(bad, text_path)
+    assert not indexfmt.has_index(text_path)
     write_positional_index(_docs(spark, ROWS), path)
     v = indexfmt.read_manifest(path, POS_INDEX_FORMAT)["version"]
     with pytest.raises(ValueError, match="NULL/empty tokens"):
