@@ -1,108 +1,40 @@
 #!/usr/bin/env python
-"""Benchmark harness — prints ONE JSON line the driver can parse.
+"""Benchmark harness: per-query wall times and Spark job counts.
 
 Runs every query registered in ``__spark_entry__.queries()`` against
 ``$SPARK_GRAFT_SF_DIR`` (default ``/root/testdata/sf0.1``) on
 ``local[$SPARK_GRAFT_CPUS]``, forcing full execution with a ``noop``
 format write (computes everything, writes nothing, no driver collect).
+Each query is timed ``$SPARK_GRAFT_BENCH_RUNS`` (default 3) times by
+:func:`time_query`, which records the median wall time and the Spark
+``{jobs, stages, tasks}`` of the last run (``perfbench.spans.JobCounter``).
+Job counts repeat from run to run for nearly every query; wall times do
+not. The bench records both and judges neither: ``tools/compare_bench.py A.json B.json``
+compares two recordings.
 
-Wall-times in this sandbox are noisy (the same query has been observed
-to vary 1.7s → 91s under contention), so each query is timed
-``$SPARK_GRAFT_BENCH_RUNS`` (default 3) times and the **median** is
-reported. Output (single line, last line of stdout):
+``$SPARK_GRAFT_STRESS=0`` skips the stress pass, which re-times
+``STRESS_QUERIES`` over a ``STRESS_MULT``× copy of the data and then
+times build, serve and merge of each persisted-index family at 1× and
+``STRESS_MULT``× (``stress.lifecycle``).
 
-    {"metric": "suite_median_wall_sec", "value": <sum of medians>,
-     "unit": "sec", "queries": {name: median_sec, ...},
-     "contention_suspects": [...], "solo_sec": {name: best_of, ...},
-     "sf": 0.1}
+Output, the last two lines of stdout:
 
-Queries whose runs spread >2.5× (the sandbox-contention signature) are
-flagged in ``contention_suspects`` AND re-timed solo after the pass;
-``solo_sec`` carries the trustworthy best-of next to the suspect
-median so comparisons never need a by-hand re-time.
-
-The spread heuristic is blind to UNIFORM contention (round 8's
-recorded bench ran concurrently with the pytest suite: all three runs
-of ~60 queries were equally slowed, so no triple spread fired). Two
-defenses, per round-8 verdict task 2:
-
-- ``$SPARK_GRAFT_BENCH_PREV`` (path to the previous round's
-  BENCH_LOCAL json): any query whose median moved >2× in EITHER
-  direction vs that round — above a 0.5 s noise floor — is added to
-  the solo-retime set and reported in ``prev_comparison`` /
-  ``movers``, so the JSON itself carries the round-over-round table
-  with a trustworthy number next to every suspicious move.
-- the recorded bench must run ALONE: use ``tools/close_round.py``,
-  which serializes pytest → multi-SF sweep → bench instead of letting
-  them share the machine.
-
-TRUNCATION-PROOF TAIL (round-10 verdict task 4): the driver records
-only the LAST 2000 chars of stdout, which can slice the full artifact
-mid-JSON and eat the adjudication. The FINAL stdout line is therefore
-a compact summary that always fits; the full artifact is the line
-before it (``tools/close_round.py`` selects the line carrying
-``"metric"`` without ``"bench_summary"``).
-
-DRIVER-READABLE PER-QUERY CHANNEL (round-13 verdict task 1): the
-2000-char tail is a hard cap (BENCH_r02 is the only driver artifact
-whose parsed line ever carried a queries map — 41 queries still fit;
-213 cannot), so PERF_r13 had ``per_query: {}`` and both ``bench_ok``
-flags false. Three additive fixes, all pinned in
-``tests/test_bench_prev.py``:
-
-- the final summary line now carries the driver contract keys
-  (``metric``/``value``/``unit``/``sf``) plus a ``queries`` map with
-  as many of the MOST EXPENSIVE per-query medians as fit under the
-  tail budget (deterministic descending-cost order, so the 32-core
-  and 8-core driver runs share entries and the scaling diff has
-  common keys) and ``queries_truncated`` = how many were dropped;
-- the FULL per-query map is written to
-  ``BENCH_PERQUERY_c{cpus}.json`` next to this script (one file per
-  core count — the driver benches at two), and the summary line
-  carries its absolute path as ``bench_perquery_path``;
-- ``tools/close_round.py`` keeps selecting the full-artifact line
-  (it now skips ``bench_summary`` lines explicitly).
-
-SOLO-ADJUDICATED HEADLINE (round-13 verdict task 5): the r13
-recording's 3-pass medians carried ~56 contention-inflated numbers
-(e.g. docs_text_stats 5.05 s concurrent vs 0.26 s solo — same code).
-The ``queries`` map is the artifact every later round diffs against,
-so a retimed query's entry is now the BEST of (median, solo best-of)
-— contention is one-sided, noise only ever ADDS time — and the
-displaced concurrent median is kept verbatim in
-``queries_concurrent_median`` (nothing is dropped; ``runs_sec`` still
-carries every raw run). ``movers``/``prev_comparison`` are recomputed
-from the adjudicated numbers, so the flag list is post-adjudication
-signal instead of contention noise.
-
-STRESS LIFECYCLE SPLIT (round-10 verdict task 2): the lifecycle
-STRESS_QUERIES rebuild their index over the 10× corpus IN-PLAN, so
-the O(corpus) build dominates and the serve/merge claims are never
-isolated. ``stress.lifecycle`` therefore builds each persisted-index
-family ONCE per scale and times SERVE-ONLY and MERGE-ONE-BATCH
-separately; the in-plan rebuild numbers stay in ``stress.queries``
-for honesty.
-
-ENVIRONMENT-CONTROLLED COMPARISON (round-12 verdict task 1): the
-archived prev artifact was recorded on a DIFFERENT day's host, and
-same-code recordings have been observed to oscillate ±12-56% — so
-raw cur/prev ratios conflate host drift with real plan changes.
-``env_drift`` (median cur/prev ratio over all shared queries — code
-touches few of 200+, so the median isolates the host) is recorded,
-every ``prev_comparison`` row carries ``adj_ratio`` = ratio /
-env_drift, and the mover flag fires on the ADJUSTED ratio. The
-median-of-N protocol is visible in the artifact: ``suite_runs_sec``
-carries each run's suite total (plus ``suite_runs_median``), so a
-±12% oscillation shows as spread instead of hiding inside one
-number. ``stress.lifecycle`` families carry a ``prev`` block
-(previous serve_sec per scale + cur/prev ratios + the previous 10×
-serve_ratio), so serve-path regressions are adjudicated from ONE
-artifact (round-12 verdict task 8).
+- the full artifact: ``metric``/``value``/``unit``/``sf``, ``queries``
+  (name → median seconds, null for a failed query), ``counts`` (name →
+  jobs/stages/tasks), ``runs_sec`` (every raw run), ``suite_runs_sec``
+  and the ``stress`` block;
+- a compact summary line, because the bench runner keeps only the last
+  2,000 characters of stdout, which can slice the full artifact mid-JSON. It
+  carries the contract keys plus as many of the most expensive medians
+  as fit under ``SUMMARY_LINE_BUDGET`` and the path of the full
+  per-query map, written to ``BENCH_PERQUERY_c{cpus}.json`` next to this
+  script (one file per core count: the bench is recorded at two).
+  ``tools/close_round.py`` records the full artifact and skips this line
+  by its ``bench_summary`` marker.
 """
 
 from __future__ import annotations
 
-import glob
 import json
 import os
 import re
@@ -110,28 +42,21 @@ import statistics
 import sys
 import time
 
+from perfbench.spans import JobCounter
+
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-RUNS = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "3"))
+CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+RUNS = max(int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "3")), 1)
 
 # Stress mode: union the fact tables STRESS_MULT× (≈ sf × mult) and
-# re-time the data-bound heavy hitters, so round-over-round regressions
-# are visible above the fixed local-Spark overhead that dominates sf0.1.
-# SPARK_GRAFT_STRESS=0 disables; runs once (not RUNS×) per query.
+# re-time the data-bound heavy hitters, so regressions are visible
+# above the fixed local-Spark overhead that dominates sf0.1.
+# SPARK_GRAFT_STRESS=0 disables.
 STRESS = os.environ.get("SPARK_GRAFT_STRESS", "1") != "0"
-STRESS_MULT = int(os.environ.get("SPARK_GRAFT_STRESS_MULT", "10"))
-# median-of-3 like the main pass: with 2 runs the median AVERAGES the
-# first (cold, one-time index/quantizer build on the fresh stress dir)
-# and warm runs, charging half the build-once cost to every serve —
-# 3 runs report the true steady-state median while the cold time stays
-# visible in the per-run stderr line.
-STRESS_RUNS = int(os.environ.get("SPARK_GRAFT_STRESS_RUNS", "3"))
-# Solo re-times for contention suspects (>2.5x intra-triple spread):
-# after a pass completes, each flagged query is re-run SOLO_RUNS more
-# times with nothing else in flight and the BEST-OF is recorded as
-# solo_sec — best-of is the contention-robust statistic (noise only
-# ever ADDS time), so round-over-round comparisons can use solo_sec
-# directly instead of a judge re-time. 0 disables.
-SOLO_RUNS = int(os.environ.get("SPARK_GRAFT_SOLO_RUNS", "2"))
+STRESS_MULT = 10
+# Every stress query must stay linear in rows at STRESS_MULT× (or within
+# the bounded superlinear term named next to it); a superlinear stress
+# time is the regression signal.
 STRESS_QUERIES = [
     "top_products_by_revenue",
     "order_total_reagg",
@@ -139,30 +64,27 @@ STRESS_QUERIES = [
     "docs_neardup_jaccard",
     "docs_neardup_minhash",
     "emb_cosine_neardup",
-    # round-3 additions: the data-bound new operators
     "docs_decontaminate",
     "events_asof_attribution",
     "events_range_attribution",
     "docs_bm25_search",
     "top_products_per_nation",
     "customer_running_totals",
-    # round-4 additions: the CC scale path, the Python-bound (Arrow)
-    # decode pass, and the composite IVF-PQ ANN — all should scale
-    # linearly in rows
+    # the connected-components scale path, the Python-bound (Arrow)
+    # decode pass, and the composite IVF-PQ ANN
     "docs_neardup_clusters_lss",
     "mm_decode_image_stats",
     "emb_knn_ivfpq",
-    # round-4 additions: cell-bounded semantic dedup (Σ|cell|² term),
-    # the hopping-window explode (2× pre-agg rows), the w×-gram-explode
-    # winnowing pass, and the sketch family (must stay flat-linear)
+    # cell-bounded semantic dedup (Σ|cell|² term), the hopping-window
+    # explode (2× pre-agg rows), the w×-gram-explode winnowing pass,
+    # and the sketch family (must stay flat-linear)
     "emb_semdedup",
     "events_sliding_window",
     "docs_winnow_overlap",
     "events_hll_users",
-    # round-4 additions: the iterative edge-propagation workload (must
-    # stay rounds × linear-in-edges), the Bloom-pruned fact scan, and
-    # the segment-blocked fuzzy join (candidates linear in rows unless
-    # a hot segment appears)
+    # the iterative edge propagation (rounds × linear-in-edges), the
+    # Bloom-pruned fact scan, and the segment-blocked fuzzy join
+    # (candidates linear in rows unless a hot segment appears)
     "parts_copurchase_pagerank",
     "events_bloom_semijoin",
     "docs_neardup_editdist",
@@ -171,168 +93,54 @@ STRESS_QUERIES = [
     "customers_incremental_agg",
     "orders_exact_quantiles_twopass",
     "events_zorder_roundtrip",
-    # round-5 additions: corpus-comparison passes — a token-explode
-    # partial agg and a shingle-hash inverted-index self-join; both
-    # must stay linear in rows (per-copy token suffixing keeps the
+    # corpus comparison: a token-explode partial agg and a shingle-hash
+    # inverted-index self-join (per-copy token suffixing keeps the
     # cross-copy shingle/vocab space disjoint)
     "docs_distinctive_terms",
     "docs_source_overlap_matrix",
     "emb_label_outliers",
-    # classic multi-join analytics — selective pushdown + semi-join +
-    # TakeOrdered; must stay linear in fact rows
+    # multi-join analytics: selective pushdown + semi-join + TakeOrdered
     "shipping_priority",
     "returned_items_report",
-    # round-6 additions: the de-weaked quintile scoring (boundary
-    # order statistics must stay 3 bounded passes, never a global
-    # sort), the outer-join histogram, the yield-curve shingle pass,
-    # and the per-nation concentration fold — all linear in rows
+    # quintile scoring (boundary order statistics in 3 bounded passes,
+    # never a global sort), the outer-join histogram, the yield-curve
+    # shingle pass, and the per-nation concentration fold
     "customer_rfm_segments",
     "customer_order_distribution",
     "docs_dedup_yield_curve",
     "nation_supplier_hhi",
-    # round-6 additions, second wave: the oriented triangle close
-    # (must stay O(|E|^1.5)-bounded, edge build checkpointed once),
-    # the per-order window blame report, the distinct-pair diversity
-    # rollup, and the train/apply LM scoring — all linear-in-rows
-    # except the triangle close's bounded superlinear term
+    # the oriented triangle close (O(|E|^1.5)-bounded, edge build
+    # checkpointed once), the per-order window blame report, the
+    # distinct-pair diversity rollup, and the train/apply LM scoring
     "parts_copurchase_triangles",
     "waiting_orders_suppliers",
     "supplier_part_diversity",
     "docs_heldout_perplexity",
-    # round-6 third wave: the Σ|basket|³ triple join (support cut in
-    # its own shuffle) and the two-window-pass Markov fit (the walk
-    # itself is |types|²-bounded) — both must stay linear in rows
+    # the Σ|basket|³ triple join (support cut in its own shuffle) and
+    # the two-window-pass Markov fit (the walk is |types|²-bounded)
     "market_basket_rules",
     "events_markov_attribution",
-    # round-10 additions: the persisted-index LIFECYCLE paths, whose
-    # cost story ("|batch|-sized segment writes + |vocab|-row metadata
-    # rewrites, cell/token-pruned serving — never O(index) on the hot
-    # path") is exactly the claim a 10x corpus should test: build +
-    # incremental merge + tombstoned serving for both families, the
-    # compaction fold, and the two-leg indexed hybrid composition
+    # the persisted-index lifecycle: |batch|-sized segment writes and
+    # |vocab|-row metadata rewrites, cell/token-pruned serving, never
+    # O(index) on the hot path; build + incremental merge + tombstoned
+    # serving for both families, the compaction fold, and the two-leg
+    # indexed hybrid composition
     "docs_bm25_index_merge",
     "docs_bm25_index_deleted",
     "docs_bm25_index_compacted",
     "emb_knn_ivf_merged",
     "docs_hybrid_search_rrf_indexed",
-    # round-10 second wave: the positional (phrase) index family —
-    # |tokens|-row positional plane, token-clustered segment writes,
-    # term-seek serving; the brute-force scan must stay linear and the
-    # index paths metadata-plane-dominant at 10x
+    # the positional (phrase) family: the brute-force scan must stay
+    # linear and the index paths metadata-plane-dominant
     "docs_phrase_search",
     "docs_phrase_search_indexed",
     "docs_phrase_search_deleted",
 ]
 
-
-def _default_prev(here: str | None = None) -> str:
-    """Latest ``BENCH_LOCAL_r*.json`` in the repo root — the default
-    previous-round artifact for the mover check. Round 9's DRIVER-run
-    bench recorded 5-9x uniform contention inflation with
-    ``movers: []`` because the check was opt-in via env and the
-    driver's environment never set it; defaulting to the newest
-    serialized local artifact makes the defense fire in ANY
-    invocation (a driver run then auto-compares against the builder's
-    clean serialized numbers and solo-retimes every uniform mover)."""
-    here = here or os.path.dirname(os.path.abspath(__file__))
-    cands = []
-    for p in glob.glob(os.path.join(here, "BENCH_LOCAL_r*.json")):
-        m = re.search(r"_r0*(\d+)\.json$", p)
-        if m:
-            cands.append((int(m.group(1)), p))
-    return max(cands)[1] if cands else ""
-
-
-#: previous round's BENCH_LOCAL json: enables the >2x round-over-round
-#: mover check the spread heuristic cannot see. Env overrides; default
-#: is the newest serialized artifact in the repo root (see above).
-PREV_PATH = os.environ.get("SPARK_GRAFT_BENCH_PREV") or _default_prev()
-#: medians below this are scheduler noise at local[32]; a 0.3s->0.7s
-#: "2.3x move" is not a regression signal
-MOVER_FLOOR_SEC = 0.5
-MOVER_RATIO = 2.0
-
-
-def _load_prev(key: str) -> dict[str, float]:
-    """Per-query medians from the previous round's BENCH_LOCAL json.
-    key='queries' for the main pass, 'stress' for the stress block.
-    Refuses a prev recorded at a DIFFERENT scale factor — a cross-SF
-    compare would flag every query as a mover and trigger a pointless
-    solo-retime storm."""
-    if not PREV_PATH:
-        return {}
-    try:
-        with open(PREV_PATH) as fh:
-            prev = json.load(fh)
-    except (OSError, ValueError) as exc:
-        print(f"# prev bench unreadable ({exc}); mover check off", file=sys.stderr)
-        return {}
-    cur_sf = _sf_from_dir(SF_DIR)
-    if prev.get("sf") != cur_sf:
-        print(
-            f"# prev bench sf={prev.get('sf')} != current sf={cur_sf}; "
-            "mover check off",
-            file=sys.stderr,
-        )
-        return {}
-    block = prev.get("stress", {}).get("queries", {}) if key == "stress" else prev.get("queries", {})
-    print(f"# mover check ({key}) vs {PREV_PATH}", file=sys.stderr)
-    return {k: v for k, v in block.items() if isinstance(v, (int, float))}
-
-
-#: minimum shared queries before the cross-round environment-drift
-#: estimate is trusted (a median over a handful of ratios is noise)
-ENV_DRIFT_MIN_SHARED = 10
-
-
-def _movers(
-    cur: dict[str, float | None], prev: dict[str, float]
-) -> tuple[list[str], dict, float | None]:
-    """Queries whose median moved >MOVER_RATIO either way vs the
-    previous round (above the noise floor), plus the full comparison
-    table for the JSON, plus the ENVIRONMENT-DRIFT estimate (r12
-    judge task 1: the archived prev was recorded on a different day's
-    host, and the r12 adjudication showed the whole suite oscillating
-    ±12-56% with zero code diff — so round-over-round ratios must be
-    environment-controlled, not read raw).
-
-    ``env_drift`` = median of cur/prev over ALL shared queries: code
-    changes touch few of 200+ registered queries, so the median ratio
-    is a robust estimator of pure host drift between the two
-    recording days (a real regression moves its own query far off the
-    median; uniform host slowdown moves the median itself). Each
-    comparison row carries ``adj_ratio`` = ratio / env_drift, and the
-    MOVER FLAG FIRES ON THE ADJUSTED RATIO — a uniformly-slow day no
-    longer flags everything, and a genuinely regressed query is
-    flagged even on a uniformly-fast day."""
-    comparison: dict[str, dict] = {}
-    ratios: list[float] = []
-    for name, p in sorted(prev.items()):
-        c = cur.get(name)
-        if c is None or p <= 0:
-            continue
-        ratio = round(c / p, 3)
-        comparison[name] = {"prev": p, "cur": c, "ratio": ratio}
-        ratios.append(ratio)
-    env_drift = (
-        round(statistics.median(ratios), 3)
-        if len(ratios) >= ENV_DRIFT_MIN_SHARED
-        else None
-    )
-    flagged: list[str] = []
-    for name, row in comparison.items():
-        adj = (
-            round(row["ratio"] / env_drift, 3)
-            if env_drift
-            else row["ratio"]
-        )
-        row["adj_ratio"] = adj
-        if max(row["cur"], row["prev"]) >= MOVER_FLOOR_SEC and (
-            adj > MOVER_RATIO or adj < 1.0 / MOVER_RATIO
-        ):
-            flagged.append(name)
-            row["mover"] = True
-    return sorted(flagged), comparison, env_drift
+#: total serialized length cap for the final summary line; the bench
+#: runner keeps the last 2,000 chars of stdout, so the line must fit inside
+#: that window with room to spare.
+SUMMARY_LINE_BUDGET = 1700
 
 
 def _sf_from_dir(sf_dir: str) -> float:
@@ -344,10 +152,9 @@ def _force(df) -> None:
     """Force full evaluation without materializing rows on the driver,
     then release the result's storage blocks: fixture queries return
     eagerly-localCheckpointed frames whose blocks would otherwise pin
-    block-manager memory for the whole 63-query session (the r3 bench
-    drifted ~1.6× across the suite from exactly this accumulation).
-    unpersist on a non-persisted frame is a no-op, so this is safe for
-    every query."""
+    block-manager memory for the whole session and slow every later
+    query. unpersist on a non-persisted frame is a no-op, so this is
+    safe for every query."""
     df.write.format("noop").mode("overwrite").save()
     df.unpersist()
 
@@ -361,6 +168,50 @@ def _release_leaked_blocks() -> None:
     import gc
 
     gc.collect()
+
+
+def time_query(spark, counter: JobCounter, fn, data_dir: str, runs: int):
+    """Run ``fn(spark, data_dir)`` ``runs`` times through :func:`_force`.
+
+    Returns ``(median_sec, run_secs, counts)``: the median wall time
+    rounded to 0.1 ms, every run's wall time, and the
+    ``{jobs, stages, tasks}`` the last run submitted. The counter is read
+    outside the timed window. A failing run raises."""
+    times = []
+    try:
+        for _ in range(runs):
+            first = counter.mark()
+            t0 = time.perf_counter()
+            _force(fn(spark, data_dir))
+            times.append(round(time.perf_counter() - t0, 4))
+            counts = counter.since(first)
+    finally:
+        _release_leaked_blocks()
+    return round(statistics.median(times), 4), times, counts
+
+
+def _timed_pass(spark, counter, queries, names, data_dir, label=""):
+    """:func:`time_query` over ``names``: medians (None for a failed
+    query, never a bare NaN, which is invalid JSON), raw runs and
+    counts per query."""
+    medians: dict[str, float | None] = {}
+    runs: dict[str, list[float]] = {}
+    counts: dict[str, dict[str, int]] = {}
+    for name in names:
+        try:
+            medians[name], runs[name], counts[name] = time_query(
+                spark, counter, queries[name], data_dir, RUNS
+            )
+        except Exception as exc:
+            medians[name] = None
+            print(f"# {label}{name}: FAILED: {exc}", file=sys.stderr)
+            continue
+        print(
+            f"# {label}{name}: runs={runs[name]} median={medians[name]}s "
+            f"counts={counts[name]}",
+            file=sys.stderr,
+        )
+    return medians, runs, counts
 
 
 def _build_stress_dir(spark, mult: int) -> str:
@@ -378,7 +229,6 @@ def _build_stress_dir(spark, mult: int) -> str:
       embeddings flip component signs by hash(vec_id, pos, copy)
       (expected cross-copy cosine ≈ 0). Ids offset by copy×10^7.
     """
-    import shutil
     import tempfile
 
     from pyspark.sql import functions as F
@@ -434,32 +284,29 @@ def _union_all(dfs):
 
 def _lifecycle_stress(spark, base_dir: str, stress_dir: str) -> dict:
     """Maintenance vs serve, measured SEPARATELY per index family
-    (text/BM25, positional/phrase, IVF/ANN) at 1× and 10×:
+    (text/BM25, positional/phrase, IVF/ANN) at 1× and STRESS_MULT×.
+    The in-plan rebuilds of the lifecycle STRESS_QUERIES are dominated
+    by the O(corpus) build, so this block builds each family once per
+    scale and times serve and merge on their own:
 
     - ``build_sec``: one full index build per scale (the O(corpus)
       cost, paid once offline — reported, not judged);
     - ``serve_sec``: BEST-OF query time from the PREBUILT index
-      through the PRODUCTION serving path — since the r12 rewire that
-      is the term/cell-dictionary SEEK the registered queries
-      themselves run (text: the shared ``_bm25_top20_indexed`` plan
-      helper; positional: ``seek_positional_tokens`` + the aligned
-      join; IVF: ``knn_ivf_from_index``, itself seek-based) — which
-      must be corpus-size-insensitive (``serve_ratio`` ≤ ~2× at 10×
-      is the claim). Best-of, not median: these run at the END of a
-      ~1 h bench session where block-manager/GC pressure only ADDS
-      time (the r11 recording saw a 3.2× text-serve "ratio" that
-      re-measured at ~0.5× warm solo), and contention is one-sided —
-      the same rationale as ``solo_sec``. ``serve_discovery_sec``
-      (text/positional) keeps timing the SAME rows through the
-      pre-r12 discovery readers (`read_text_index` /
-      `read_positional_index` + isin) as the REGRESSION REFERENCE:
-      the serve/discovery gap IS the |vocab|-linear
-      partition-discovery cost the r11 split exposed and the rewire
-      removed from the production path;
+      through the production serving path — the term/cell-dictionary
+      SEEK the registered queries run (text: the shared
+      ``_bm25_top20_indexed`` plan helper; positional:
+      ``seek_positional_tokens`` + the aligned join; IVF:
+      ``knn_ivf_from_index``) — which must be corpus-size-insensitive
+      (``serve_ratio`` ≤ ~2× is the claim). Best-of, not median: these
+      run at the END of a long bench session where block-manager/GC
+      pressure only ADDS time. ``serve_discovery_sec``
+      (text/positional) times the SAME rows through the discovery
+      readers (`read_text_index` / `read_positional_index` + isin) as
+      the regression reference: the serve/discovery gap IS the
+      |vocab|-linear partition-discovery cost the seek avoids;
     - ``merge_sec``: fold a fixed 1×-sized batch into each index,
       best-of-2 (each merge lands a DISJOINT id-offset batch, so
-      repeating it is valid — every merge is |batch|-sized by the
-      claim under test) — |batch|-sized, never O(index), so
+      repeating it is valid) — |batch|-sized, never O(index), so
       ``merge_ratio`` must stay ~flat across scales.
 
     The IVF stress build scales ``n_centroids`` with the corpus
@@ -514,16 +361,10 @@ def _lifecycle_stress(spark, base_dir: str, stress_dir: str) -> dict:
         .localCheckpoint()
     )
 
-    def bm25_serve(path):
-        # the PRODUCTION serve: the same plan helper every registered
-        # persisted-text-index query runs (seek postings + manifest
-        # dfreq/stats + shared _bm25_rank)
-        return _bm25_top20_indexed(spark, path)
-
     def bm25_serve_discovery(path):
-        # pre-r12 discovery path, kept as the regression reference:
+        # the discovery reader, kept as the regression reference:
         # read_text_index pays the |vocab|-linear partition-discovery
-        # pass the rewire removed from production
+        # pass the production seek avoids
         postings, dfreq, stats = TX.read_text_index(spark, path)
         return _bm25_rank(
             postings.filter(F.col("token").isin(*BM25_TERMS)).select(
@@ -534,8 +375,7 @@ def _lifecycle_stress(spark, base_dir: str, stress_dir: str) -> dict:
         )
 
     def phrase_serve(path):
-        # PRODUCTION: the seek-based plan the registered phrase
-        # queries run since r12
+        # the seek-based plan the registered phrase queries run
         post = TX.seek_positional_tokens(spark, path, list(PHRASE_QUERY))
         return _phrase_hits(TX.phrase_occurrences(post, list(PHRASE_QUERY)))
 
@@ -548,7 +388,9 @@ def _lifecycle_stress(spark, base_dir: str, stress_dir: str) -> dict:
     fams = {
         "text_bm25": dict(
             build=lambda docs, emb, path, mult: TX.write_text_index(docs, path),
-            serve=bm25_serve,
+            # the same plan helper every registered persisted-text-index
+            # query runs (seek postings + manifest dfreq/stats)
+            serve=lambda path: _bm25_top20_indexed(spark, path),
             serve_discovery=bm25_serve_discovery,
             merge=lambda path, run: TX.merge_text_index(docs_batch(run), path),
         ),
@@ -572,6 +414,15 @@ def _lifecycle_stress(spark, base_dir: str, stress_dir: str) -> dict:
             merge=lambda path, run: SIM.merge_ivf_index(emb_batch(run), path),
         ),
     }
+
+    def best_of(n, op):
+        times = []
+        for i in range(n):
+            t0 = time.perf_counter()
+            op(i)
+            times.append(time.perf_counter() - t0)
+        return round(min(times), 4)
+
     out: dict[str, dict] = {}
     try:
         for scale, d, mult in (
@@ -582,155 +433,70 @@ def _lifecycle_stress(spark, base_dir: str, stress_dir: str) -> dict:
             emb = spark.read.parquet(f"{d}/embeddings.parquet")
             for fam, ops in fams.items():
                 path = os.path.join(root, f"{fam}-{scale}")
-                t0 = time.perf_counter()
-                ops["build"](docs, emb, path, mult)
-                build_sec = round(time.perf_counter() - t0, 4)
-                runs = max(STRESS_RUNS, 1)  # env can zero STRESS_RUNS;
-                # an empty best-of would throw and void the block
-                serves = []
-                for _ in range(runs):
-                    t0 = time.perf_counter()
-                    _force(ops["serve"](path))
-                    serves.append(time.perf_counter() - t0)
-                discs = []
-                for _ in range(runs if "serve_discovery" in ops else 0):
-                    t0 = time.perf_counter()
-                    _force(ops["serve_discovery"](path))
-                    discs.append(time.perf_counter() - t0)
-                merges = []
-                for run in range(2):  # disjoint batches: repeat is valid
-                    t0 = time.perf_counter()
-                    ops["merge"](path, run)
-                    merges.append(time.perf_counter() - t0)
-                _release_leaked_blocks()
-                out.setdefault(fam, {})[scale] = {
-                    "build_sec": build_sec,
-                    "serve_sec": round(min(serves), 4),
-                    **(
-                        {"serve_discovery_sec": round(min(discs), 4)}
-                        if discs
-                        else {}
+                row = {
+                    "build_sec": best_of(
+                        1, lambda _: ops["build"](docs, emb, path, mult)
                     ),
-                    "merge_sec": round(min(merges), 4),
+                    "serve_sec": best_of(
+                        RUNS, lambda _: _force(ops["serve"](path))
+                    ),
                 }
-                print(
-                    f"# lifecycle {fam}@{scale}: build={build_sec}s "
-                    f"serve={out[fam][scale]['serve_sec']}s "
-                    f"merge={out[fam][scale]['merge_sec']}s",
-                    file=sys.stderr,
-                )
-        for fam, scales in out.items():
+                if "serve_discovery" in ops:
+                    row["serve_discovery_sec"] = best_of(
+                        RUNS, lambda _: _force(ops["serve_discovery"](path))
+                    )
+                # disjoint batches: repeating the merge is valid
+                row["merge_sec"] = best_of(2, lambda run: ops["merge"](path, run))
+                _release_leaked_blocks()
+                out.setdefault(fam, {})[scale] = row
+                print(f"# lifecycle {fam}@{scale}: {row}", file=sys.stderr)
+        for scales in out.values():
             b, s = scales.get("base"), scales.get("stress")
             if b and s:
-                scales["serve_ratio"] = (
-                    round(s["serve_sec"] / b["serve_sec"], 3)
-                    if b["serve_sec"]
-                    else None
-                )
-                if "serve_discovery_sec" in b and "serve_discovery_sec" in s:
-                    scales["serve_discovery_ratio"] = (
-                        round(
-                            s["serve_discovery_sec"]
-                            / b["serve_discovery_sec"],
-                            3,
-                        )
-                        if b["serve_discovery_sec"]
-                        else None
-                    )
-                scales["merge_ratio"] = (
-                    round(s["merge_sec"] / b["merge_sec"], 3)
-                    if b["merge_sec"]
-                    else None
-                )
+                for key in ("serve", "serve_discovery", "merge"):
+                    if f"{key}_sec" in b:
+                        bv, sv = b[f"{key}_sec"], s[f"{key}_sec"]
+                        scales[f"{key}_ratio"] = round(sv / bv, 3) if bv else None
     finally:
         shutil.rmtree(root, ignore_errors=True)
     return out
 
 
-def _attach_lifecycle_prev(lifecycle: dict) -> None:
-    """Carry the previous round's lifecycle serve numbers INTO the
-    current artifact (r12 judge task 8): each family gains a
-    ``prev`` block with the prior ``serve_sec`` per scale, a
-    ``serve_vs_prev`` cur/prev ratio, and the prior 10× serve_ratio —
-    so a serve-path regression is caught by reading ONE artifact
-    instead of diffing two rounds' files by hand. Same-SF guard as
-    the query mover check (a cross-SF compare is meaningless)."""
-    if not PREV_PATH:
-        return
+def _stress(spark, counter, queries) -> dict:
+    """The stress pass: :func:`_timed_pass` over STRESS_QUERIES on a
+    STRESS_MULT× copy of the data, then the index lifecycle block."""
+    import shutil
+
+    stress_dir = None
     try:
-        with open(PREV_PATH) as fh:
-            prev = json.load(fh)
-    except (OSError, ValueError):
-        return
-    if prev.get("sf") != _sf_from_dir(SF_DIR):
-        return
-    prev_lc = prev.get("stress", {}).get("lifecycle", {})
-    for fam, scales in lifecycle.items():
-        p = prev_lc.get(fam)
-        if not isinstance(scales, dict) or not isinstance(p, dict):
-            continue
-        prev_block: dict = {}
-        for scale in ("base", "stress"):
-            cur_s, prev_s = scales.get(scale), p.get(scale)
-            if (
-                isinstance(cur_s, dict)
-                and isinstance(prev_s, dict)
-                and cur_s.get("serve_sec")
-                and prev_s.get("serve_sec")
-            ):
-                prev_block[scale] = {
-                    "serve_sec": prev_s["serve_sec"],
-                    "serve_vs_prev": round(
-                        cur_s["serve_sec"] / prev_s["serve_sec"], 3
-                    ),
-                }
-        if p.get("serve_ratio") is not None:
-            prev_block["serve_ratio"] = p["serve_ratio"]
-        if prev_block:
-            scales["prev"] = prev_block
-
-
-def _adopt_solo(
-    per_query: dict[str, float | None], solo: dict[str, float | None]
-) -> dict[str, float]:
-    """Round-13 verdict task 5: fold each solo retime into the headline
-    ``queries`` map when it beats the concurrent median (contention is
-    one-sided — noise only ever ADDS time, so min is the honest
-    estimator). Mutates ``per_query`` in place and returns the displaced
-    concurrent medians so the artifact keeps the old numbers verbatim."""
-    displaced: dict[str, float] = {}
-    for name, s in solo.items():
-        m = per_query.get(name)
-        if s is not None and m is not None and s < m:
-            displaced[name] = m
-            per_query[name] = s
-    return displaced
-
-
-def _solo_retime(queries, names, spark, data_dir) -> dict[str, float | None]:
-    """Re-run each contention suspect SOLO (serially, after the full
-    pass, nothing else in flight) SOLO_RUNS times and report the
-    best-of. Closes the loop the suspects flag opened: the JSON now
-    carries a trustworthy number next to the suspect median, so a
-    round-over-round comparison never needs a by-hand re-time."""
-    solo: dict[str, float | None] = {}
-    for name in names:
-        fn = queries.get(name)
-        if fn is None:
-            continue
-        times = []
-        for _ in range(SOLO_RUNS):
-            t0 = time.perf_counter()
-            try:
-                _force(fn(spark, data_dir))
-            except Exception as exc:
-                print(f"solo {name} failed: {exc}", file=sys.stderr)
-                break
-            times.append(time.perf_counter() - t0)
-        _release_leaked_blocks()
-        solo[name] = round(min(times), 4) if times else None
-        print(f"# solo {name}: best-of-{len(times)} {solo[name]}s", file=sys.stderr)
-    return solo
+        t0 = time.perf_counter()
+        stress_dir = _build_stress_dir(spark, STRESS_MULT)
+        build_sec = round(time.perf_counter() - t0, 4)
+        names = [n for n in STRESS_QUERIES if n in queries]
+        medians, runs, counts = _timed_pass(
+            spark, counter, queries, names, stress_dir, label="stress "
+        )
+        stress = {
+            "multiplier": STRESS_MULT,
+            "approx_sf": round(_sf_from_dir(SF_DIR) * STRESS_MULT, 4),
+            "build_sec": build_sec,
+            "runs": RUNS,
+            "queries": medians,
+            "counts": counts,
+            "runs_sec": runs,
+        }
+        try:
+            stress["lifecycle"] = _lifecycle_stress(spark, SF_DIR, stress_dir)
+        except Exception as exc:  # never break the stress block
+            print(f"lifecycle stress failed: {exc}", file=sys.stderr)
+            stress["lifecycle"] = {"error": str(exc)}
+    except Exception as exc:  # stress must never break the main line
+        print(f"stress mode failed: {exc}", file=sys.stderr)
+        stress = {"error": str(exc)}
+    finally:
+        if stress_dir:
+            shutil.rmtree(stress_dir, ignore_errors=True)
+    return stress
 
 
 def main() -> int:
@@ -738,6 +504,7 @@ def main() -> int:
     from ecommerce_realtime_pipeline_spark.session import get_spark
 
     spark = get_spark(app_name="bench")
+    counter = JobCounter(spark.sparkContext)
     queries = entry_mod.queries()
 
     # Warm the JVM/codegen once with the cheapest full pass so the first
@@ -748,221 +515,43 @@ def main() -> int:
     except Exception as exc:  # pragma: no cover - warmup best-effort
         print(f"warmup failed: {exc}", file=sys.stderr)
 
-    per_query: dict[str, float] = {}
-    # raw per-run times alongside each median: one contention-inflated
-    # run is then visible as an outlier in the list instead of
-    # masquerading as a regression (round-5 judge burned a re-time
-    # pass on five false regressions the median alone couldn't clear)
-    per_query_runs: dict[str, list[float]] = {}
-    for name, fn in queries.items():
-        times = []
-        for _ in range(RUNS):
-            t0 = time.perf_counter()
-            try:
-                _force(fn(spark, SF_DIR))
-            except Exception as exc:
-                print(f"{name} failed: {exc}", file=sys.stderr)
-                times.append(float("nan"))
-                break
-            times.append(time.perf_counter() - t0)
-        _release_leaked_blocks()
-        ok = [t for t in times if t == t]
-        if not ok:
-            # failed query: report null, never bare NaN (invalid JSON)
-            per_query[name] = None
-            print(f"# {name}: FAILED", file=sys.stderr)
-            continue
-        med = statistics.median(ok)
-        per_query[name] = round(med, 4)
-        per_query_runs[name] = [round(t, 4) for t in ok]
-        print(f"# {name}: runs={[round(t, 3) for t in times]} median={med:.3f}s", file=sys.stderr)
-
-    stress: dict | None = None
-    if STRESS:
-        import shutil
-
-        stress_dir = None
-        try:
-            t0 = time.perf_counter()
-            stress_dir = _build_stress_dir(spark, STRESS_MULT)
-            build_sec = round(time.perf_counter() - t0, 4)
-            stress_q: dict[str, float | None] = {}
-            stress_runs: dict[str, list[float]] = {}
-            for name in STRESS_QUERIES:
-                fn = queries.get(name)
-                if fn is None:
-                    continue
-                times = []
-                for _ in range(STRESS_RUNS):
-                    t0 = time.perf_counter()
-                    try:
-                        _force(fn(spark, stress_dir))
-                    except Exception as exc:
-                        print(f"stress {name} failed: {exc}", file=sys.stderr)
-                        break
-                    times.append(time.perf_counter() - t0)
-                _release_leaked_blocks()
-                stress_q[name] = round(statistics.median(times), 4) if times else None
-                stress_runs[name] = [round(t, 4) for t in times]
-                print(f"# stress {name}: {stress_q[name]}s", file=sys.stderr)
-            # contention self-diagnosis: a >2.5x max/min spread WITHIN
-            # one query's runs is the known sandbox-contention mode
-            # (same plan, same data — only scheduler noise moves 2.5x),
-            # so flag it in the JSON and the reader can discard the
-            # median as suspect instead of re-timing by hand
-            suspects = sorted(
-                name
-                for name, ts in stress_runs.items()
-                if len(ts) >= 2 and min(ts) > 0 and max(ts) / min(ts) > 2.5
-            )
-            s_prev = _load_prev("stress")
-            s_movers, s_cmp, s_drift = _movers(stress_q, s_prev)
-            retime = sorted(set(suspects) | set(s_movers))
-            s_solo = (
-                _solo_retime(queries, retime, spark, stress_dir)
-                if SOLO_RUNS > 0
-                else {}
-            )
-            s_displaced = _adopt_solo(stress_q, s_solo)
-            if s_displaced:  # re-adjudicate flags from the final numbers
-                s_movers, s_cmp, s_drift = _movers(stress_q, s_prev)
-            stress = {
-                "multiplier": STRESS_MULT,
-                "approx_sf": round(_sf_from_dir(SF_DIR) * STRESS_MULT, 4),
-                "build_sec": build_sec,
-                "runs": STRESS_RUNS,
-                "queries": stress_q,
-                "queries_concurrent_median": s_displaced,
-                "runs_sec": stress_runs,
-                "contention_suspects": suspects,
-                "movers": s_movers,
-                "env_drift": s_drift,
-                "prev_comparison": s_cmp,
-                "solo_sec": s_solo,
-            }
-            try:
-                stress["lifecycle"] = _lifecycle_stress(
-                    spark, SF_DIR, stress_dir
-                )
-                _attach_lifecycle_prev(stress["lifecycle"])
-            except Exception as exc:  # never break the stress block
-                print(f"lifecycle stress failed: {exc}", file=sys.stderr)
-                stress["lifecycle"] = {"error": str(exc)}
-        except Exception as exc:  # stress must never break the main line
-            print(f"stress mode failed: {exc}", file=sys.stderr)
-            stress = {"error": str(exc)}
-        finally:
-            if stress_dir:
-                shutil.rmtree(stress_dir, ignore_errors=True)
-
-    # same >2.5x within-triple spread flag as the stress pass, PLUS
-    # the >2x round-over-round mover flag (uniform contention makes
-    # all three runs agree, so only a cross-round compare catches it)
-    main_suspects = sorted(
-        name
-        for name, ts in per_query_runs.items()
-        if len(ts) >= 2 and min(ts) > 0 and max(ts) / min(ts) > 2.5
-    )
-    prev_q = _load_prev("queries")
-    movers, prev_cmp, env_drift = _movers(per_query, prev_q)
-    retime = sorted(set(main_suspects) | set(movers))
-    solo = (
-        _solo_retime(queries, retime, spark, SF_DIR)
-        if SOLO_RUNS > 0
-        else {}
-    )
-    # round-13 verdict task 5: the headline map adopts the solo best-of
-    # where it beats the concurrent median; displaced medians are kept
-    # verbatim, and the mover flags are recomputed from the adjudicated
-    # numbers (see module docstring).
-    displaced = _adopt_solo(per_query, solo)
-    if displaced:
-        movers, prev_cmp, env_drift = _movers(per_query, prev_q)
+    per_query, runs, counts = _timed_pass(spark, counter, queries, queries, SF_DIR)
     total = round(sum(v for v in per_query.values() if v is not None), 4)
-    # per-run SUITE totals over the queries that completed every run:
-    # the median-of-N recording protocol made visible in the artifact
-    # itself (the three r12 same-day recordings oscillated ±12% —
-    # one number can't show that; the per-run totals can)
-    complete = [n for n, ts in per_query_runs.items() if len(ts) == RUNS]
-    suite_runs = [
-        round(sum(per_query_runs[n][i] for n in complete), 4)
-        for i in range(RUNS)
-    ]
+    # each run's suite total over the queries that completed: the spread
+    # of the median-of-RUNS protocol, visible in the artifact
+    suite_runs = [round(sum(ts[i] for ts in runs.values()), 4) for i in range(RUNS)]
     out = {
         "metric": "suite_median_wall_sec",
         "value": total,
         "unit": "sec",
-        "queries": per_query,
-        "queries_concurrent_median": displaced,
-        "runs_sec": per_query_runs,
-        "suite_runs_sec": suite_runs,
-        "suite_runs_median": (
-            round(statistics.median(suite_runs), 4) if suite_runs else None
-        ),
-        "contention_suspects": main_suspects,
-        "movers": movers,
-        "env_drift": env_drift,
-        "prev_comparison": prev_cmp,
-        "solo_sec": solo,
         "sf": _sf_from_dir(SF_DIR),
+        "queries": per_query,
+        "counts": counts,
+        "runs_sec": runs,
+        "suite_runs_sec": suite_runs,
+        "suite_runs_median": round(statistics.median(suite_runs), 4),
     }
-    if stress is not None:
-        out["stress"] = stress
+    if STRESS:
+        out["stress"] = _stress(spark, counter, queries)
     print(json.dumps(out))
-    # round-13 verdict task 1: the FULL per-query map, at a stable path
-    # the summary line points to (the 2000-char stdout tail cannot carry
-    # 213 queries; a file can carry them all).
     perquery_path = _write_perquery(out)
-    # FINAL line = compact adjudication summary (the driver keeps only
-    # the last 2000 stdout chars, which can slice the full artifact
-    # mid-JSON — this line always survives whole).
-    print(
-        summary_line(
-            total, len(per_query), _sf_from_dir(SF_DIR),
-            movers, prev_cmp, per_query, solo, env_drift,
-            perquery_path=perquery_path,
-        )
-    )
+    print(summary_line(total, len(per_query), out["sf"], per_query, perquery_path))
     return 0
 
 
-#: worst movers carried on the final summary line. 4 (was 8 in r13)
-#: — the mover block now shares the tail budget with the fitted
-#: ``queries`` map, and post-solo-adjudication the flag list is short
-#: signal, not contention noise. Pinned in tests/test_bench_prev.py.
-SUMMARY_MOVERS_CAP = 4
-#: total serialized length target for the final summary line; the
-#: driver keeps the last 2000 chars of stdout, so the line must stay
-#: comfortably inside that window WITH the fitted queries map.
-SUMMARY_LINE_BUDGET = 1700
-
-
 def _write_perquery(out: dict) -> str:
-    """Write the full per-query artifact to a stable path next to this
-    script (round-13 verdict task 1): ``BENCH_PERQUERY_c{cpus}.json``
-    — one file per core count, because the driver benches at two core
-    counts and the scaling diff needs both runs' maps. Returns the
-    absolute path (carried on the summary line as
-    ``bench_perquery_path``); never raises — a read-only checkout must
-    not kill the bench."""
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    """Write the full per-query map and counts to
+    ``BENCH_PERQUERY_c{cpus}.json`` next to this script — one file per
+    core count, because the bench is recorded at two core counts and the
+    scaling diff needs both. Returns the absolute path (carried on the
+    summary line as ``bench_perquery_path``); never raises — a read-only
+    checkout must not kill the bench."""
     path = os.path.join(
         os.path.dirname(os.path.abspath(__file__)),
-        f"BENCH_PERQUERY_c{cpus}.json",
+        f"BENCH_PERQUERY_c{CPUS}.json",
     )
-    doc = {
-        "metric": out["metric"],
-        "value": out["value"],
-        "unit": out["unit"],
-        "sf": out["sf"],
-        "cpus": int(cpus),
-        "queries": out["queries"],
-        "queries_concurrent_median": out.get("queries_concurrent_median", {}),
-        "solo_sec": out.get("solo_sec", {}),
-        "env_drift": out.get("env_drift"),
-        "movers": out.get("movers", []),
-        "suite_runs_sec": out.get("suite_runs_sec", []),
-    }
+    keys = ("metric", "value", "unit", "sf", "queries", "counts", "suite_runs_sec")
+    doc = {"cpus": int(CPUS), **{k: out[k] for k in keys}}
     try:
         with open(path, "w") as fh:
             json.dump(doc, fh)
@@ -975,7 +564,7 @@ def _write_perquery(out: dict) -> str:
 
 def _fit_queries(per_query: dict, budget: int) -> dict:
     """The most expensive queries, in deterministic descending-cost
-    order, trimmed so their JSON serialization stays under ``budget``
+    order, trimmed so their JSON serialization stays within ``budget``
     chars. Descending cost (not name order) so the 32-core and 8-core
     driver runs carry near-identical key sets and the driver's scaling
     diff has common entries."""
@@ -986,7 +575,9 @@ def _fit_queries(per_query: dict, budget: int) -> dict:
     fitted: dict[str, float] = {}
     used = 2  # the enclosing {}
     for v, n in ranked:
-        cost = len(json.dumps({n: v})) - 1  # entry + separating comma
+        cost = len(json.dumps({n: v})) - 2  # the entry without its {}
+        if fitted:
+            cost += 2  # the ", " separator
         if used + cost > budget:
             break
         fitted[n] = v
@@ -994,24 +585,12 @@ def _fit_queries(per_query: dict, budget: int) -> dict:
     return fitted
 
 
-def summary_line(
-    total, n, sf, movers, prev_cmp, per_query, solo, env_drift=None,
-    perquery_path: str = "",
-) -> str:
-    """The truncation-proof final stdout line. Carries the driver
-    contract keys (``metric``/``value``/``unit``/``sf``) plus a
-    ``queries`` map with as many of the most expensive medians as fit
-    (round-13 verdict task 1), the path to the FULL per-query artifact,
-    the worst SUMMARY_MOVERS_CAP movers by |adj_ratio-1|
-    (environment-adjusted — see ``_movers``), and ``env_drift``. Total
-    length is pinned under SUMMARY_LINE_BUDGET so the line can never
-    outgrow the driver's 2000-char window."""
-    def _key(q):
-        row = prev_cmp.get(q, {})
-        return -abs((row.get("adj_ratio") or row.get("ratio") or 1.0) - 1.0)
-
-    worst = sorted(movers, key=_key)[:SUMMARY_MOVERS_CAP]
-    ratios = [c["ratio"] for c in prev_cmp.values()]
+def summary_line(total, n, sf, per_query, perquery_path: str = "") -> str:
+    """The truncation-proof final stdout line: the contract keys
+    (``metric``/``value``/``unit``/``sf``), ``n``, ``suite_sec``, the
+    path of the full per-query artifact, and a ``queries`` map with as
+    many of the most expensive medians as fit. Total length stays within
+    SUMMARY_LINE_BUDGET, inside the runner's 2,000-char window."""
     base = {
         "bench_summary": True,
         "metric": "suite_median_wall_sec",
@@ -1020,21 +599,14 @@ def summary_line(
         "suite_sec": total,
         "n": n,
         "sf": sf,
-        "worst_ratio": max(ratios) if ratios else None,
-        "env_drift": env_drift,
         "bench_perquery_path": perquery_path,
-        "movers": {
-            m: {
-                "concurrent": per_query.get(m),
-                "solo": solo.get(m),
-                "prev": prev_cmp.get(m, {}).get("prev"),
-            }
-            for m in worst
-        },
-        "queries_truncated": 0,
+        # sized at its largest value (n) so the final count cannot
+        # lengthen the line past what was budgeted
+        "queries_truncated": n,
         "queries": {},
     }
-    room = SUMMARY_LINE_BUDGET - len(json.dumps(base))
+    # the serialized {} of the empty map is replaced by the fitted map
+    room = SUMMARY_LINE_BUDGET - len(json.dumps(base)) + 2
     fitted = _fit_queries(per_query, max(room, 0))
     base["queries"] = fitted
     base["queries_truncated"] = max(n - len(fitted), 0)

@@ -1,137 +1,38 @@
-"""bench.py's round-over-round mover defense must be
-environment-independent (round-9 verdict task 2): with no env var,
-the previous artifact defaults to the NEWEST serialized
-BENCH_LOCAL_r*.json next to the script, so a driver-style invocation
-still emits a populated prev_comparison."""
+"""bench.py's outputs and the tools that read them: the final summary
+line must fit the bench runner's 2,000-char stdout tail, the per-query
+sidecar carries the full medians and Spark job counts, the timing
+helper's counts repeat exactly between calls, and
+``tools/compare_bench.py`` / ``tools/close_round.py`` read the
+recordings."""
 
 from __future__ import annotations
 
 import importlib.util
+import json
 import os
 
-_SPEC = importlib.util.spec_from_file_location(
-    "bench_mod", os.path.join(os.path.dirname(__file__), "..", "bench.py")
-)
-bench = importlib.util.module_from_spec(_SPEC)
-_SPEC.loader.exec_module(bench)
+_ROOT = os.path.join(os.path.dirname(__file__), "..")
 
 
-def test_default_prev_picks_highest_round(tmp_path):
-    for r in (7, 10, 9):
-        (tmp_path / f"BENCH_LOCAL_r{r:02d}.json").write_text("{}")
-    (tmp_path / "BENCH_LOCAL_notaround.json").write_text("{}")
-    got = bench._default_prev(str(tmp_path))
-    assert got.endswith("BENCH_LOCAL_r10.json")
+def _load(name, *path):
+    spec = importlib.util.spec_from_file_location(name, os.path.join(_ROOT, *path))
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    return mod
 
 
-def test_default_prev_empty_dir_is_safe(tmp_path):
-    assert bench._default_prev(str(tmp_path)) == ""
-
-
-def test_default_prev_resolves_in_this_repo():
-    # the repo carries serialized artifacts from earlier rounds, so a
-    # no-env invocation MUST find one (the driver-style path is live)
-    assert bench._default_prev() != ""
-
-
-def test_movers_flags_both_directions_above_floor():
-    cur = {"a": 2.0, "b": 0.2, "c": 1.0, "d": 0.4}
-    prev = {"a": 0.6, "b": 0.05, "c": 0.9, "d": 1.0}
-    flagged, cmp_, drift = bench._movers(cur, prev)
-    assert drift is None           # < ENV_DRIFT_MIN_SHARED queries
-    assert "a" in flagged          # 3.3x up, above floor
-    assert "b" not in flagged      # 4x up but under the 0.5s floor
-    assert "c" not in flagged      # 1.1x: not a mover
-    assert "d" in flagged          # 2.5x DOWN, above floor
-    assert cmp_["a"]["mover"] and cmp_["d"]["mover"]
-    assert set(cmp_) == {"a", "b", "c", "d"}
-
-
-def test_movers_environment_drift_adjustment():
-    """The r13 environment-control (r12 judge task 1): a uniformly
-    3x-slower host day must flag NOTHING (the median ratio IS the
-    drift, adj_ratio ≈ 1 everywhere), while a query that regressed
-    3x ON TOP of the drift is still flagged; and on a drift-free day
-    the adjustment is a no-op."""
-    prev = {f"q{i:02d}": 1.0 for i in range(12)}
-    # uniform 3x day: every query 3.0s vs prev 1.0s
-    cur = {n: 3.0 for n in prev}
-    flagged, cmp_, drift = bench._movers(cur, prev)
-    assert drift == 3.0 and flagged == []
-    assert all(c["adj_ratio"] == 1.0 for c in cmp_.values())
-    # same day, but q00 regressed 3x on top of the drift
-    cur["q00"] = 9.0
-    flagged, cmp_, drift = bench._movers(cur, prev)
-    assert drift == 3.0 and flagged == ["q00"]
-    assert cmp_["q00"]["adj_ratio"] == 3.0 and cmp_["q00"]["mover"]
-    # drift-free day: raw == adjusted
-    cur = {n: 1.0 for n in prev}
-    cur["q01"] = 4.0
-    flagged, cmp_, drift = bench._movers(cur, prev)
-    assert drift == 1.0 and flagged == ["q01"]
-    assert cmp_["q01"]["adj_ratio"] == cmp_["q01"]["ratio"] == 4.0
-
-
-def test_attach_lifecycle_prev(tmp_path, monkeypatch):
-    """Task-8 pin: the lifecycle block carries the PREVIOUS round's
-    serve numbers + cur/prev ratios inside the current artifact, with
-    the same-SF guard the query mover check applies."""
-    import json
-
-    prev = {
-        "sf": bench._sf_from_dir(bench.SF_DIR),
-        "stress": {
-            "lifecycle": {
-                "text": {
-                    "base": {"serve_sec": 0.5},
-                    "stress": {"serve_sec": 0.6},
-                    "serve_ratio": 1.2,
-                },
-            }
-        },
-    }
-    p = tmp_path / "BENCH_LOCAL_prev.json"
-    p.write_text(json.dumps(prev))
-    monkeypatch.setattr(bench, "PREV_PATH", str(p))
-    lc = {
-        "text": {
-            "base": {"serve_sec": 1.0},
-            "stress": {"serve_sec": 1.5},
-            "serve_ratio": 1.5,
-        }
-    }
-    bench._attach_lifecycle_prev(lc)
-    got = lc["text"]["prev"]
-    assert got["base"] == {"serve_sec": 0.5, "serve_vs_prev": 2.0}
-    assert got["stress"] == {"serve_sec": 0.6, "serve_vs_prev": 2.5}
-    assert got["serve_ratio"] == 1.2
-    # cross-SF prev: refused, block untouched
-    prev["sf"] = 999.0
-    p.write_text(json.dumps(prev))
-    lc2 = {"text": {"base": {"serve_sec": 1.0}}}
-    bench._attach_lifecycle_prev(lc2)
-    assert "prev" not in lc2["text"]
+bench = _load("bench_mod", "bench.py")
 
 
 def test_close_round_picks_full_artifact_not_summary(tmp_path):
     """tools/close_round.py must select the FULL bench artifact (the
     line carrying "metric"), not the compact bench_summary line that
     bench.py prints last for the driver's 2000-char stdout tail."""
-    import importlib.util
-    import json
-
-    spec = importlib.util.spec_from_file_location(
-        "close_round_mod",
-        os.path.join(
-            os.path.dirname(__file__), "..", "tools", "close_round.py"
-        ),
-    )
-    cr = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(cr)
+    cr = _load("close_round_mod", "tools", "close_round.py")
     full = {"metric": "suite_median_wall_sec", "value": 1.0, "queries": {}}
-    # since r14 the summary line carries the driver contract keys too
-    # (metric/value/unit + fitted queries); pick_artifact must still
-    # skip it via the bench_summary marker
+    # the summary line carries the contract keys too (metric/
+    # value/unit + fitted queries); pick_artifact must still skip it
+    # via the bench_summary marker
     summary = {
         "bench_summary": True,
         "metric": "suite_median_wall_sec",
@@ -148,36 +49,20 @@ def test_close_round_picks_full_artifact_not_summary(tmp_path):
 
 
 def test_summary_line_stays_under_driver_tail_at_250_queries():
-    """The truncation-proof contract at registry growth (r11 verdict
-    task 7): simulate a 250-query registry where EVERY query moved
-    (the pathological movers dict that ballooned r11's tail) — the
-    final summary line must stay under 1800 chars (the driver keeps
-    2000), i.e. the movers cap and the queries auto-fit do their job
-    with long query names."""
+    """The truncation-proof contract at registry growth: a 250-query
+    registry with long query names — the final summary line must stay
+    under 1800 chars (the runner keeps 2000), i.e. the queries auto-fit
+    does its job."""
     names = [f"docs_extremely_long_query_name_number_{i:04d}" for i in range(250)]
     per_query = {n: 1.2345 for n in names}
-    prev_cmp = {
-        n: {
-            "prev": 0.5,
-            "cur": 1.2345,
-            "ratio": 2.469,
-            "adj_ratio": 2.469,
-            "mover": True,
-        }
-        for n in names
-    }
-    solo = {n: 0.9876 for n in names}
     line = bench.summary_line(
-        308.1234, 250, 0.1, list(names), prev_cmp, per_query, solo, 1.013,
-        perquery_path="/root/repo/BENCH_PERQUERY_c32.json",
+        308.1234, 250, 0.1, per_query,
+        perquery_path="/srv/bench/BENCH_PERQUERY_c32.json",
     )
     assert len(line) < 1800, len(line)
-    import json
-
     parsed = json.loads(line)
     assert parsed["bench_summary"] is True and parsed["n"] == 250
-    assert len(parsed["movers"]) == bench.SUMMARY_MOVERS_CAP
-    # r13 verdict task 1: the driver contract keys ride the final line
+    # the contract keys ride the final line
     assert parsed["metric"] == "suite_median_wall_sec"
     assert parsed["value"] == 308.1234 and parsed["unit"] == "sec"
     assert parsed["bench_perquery_path"].endswith("BENCH_PERQUERY_c32.json")
@@ -187,16 +72,30 @@ def test_summary_line_stays_under_driver_tail_at_250_queries():
     assert parsed["queries_truncated"] == 250 - len(parsed["queries"])
 
 
+def test_summary_line_fits_budget_with_recorded_medians():
+    """Built from the 213 medians of a recorded sf0.1 bench, the line
+    stays within SUMMARY_LINE_BUDGET: each fitted entry is charged its
+    ", " separator (2 chars), and queries_truncated is budgeted at its
+    widest value."""
+    with open(os.path.join(_ROOT, "BENCH_LOCAL_r14.json")) as fh:
+        rec = json.load(fh)
+    per_query = rec["queries"]
+    assert len(per_query) == 213
+    line = bench.summary_line(
+        rec["value"], len(per_query), rec["sf"], per_query,
+        perquery_path="/srv/bench/BENCH_PERQUERY_c32.json",
+    )
+    assert len(line) <= bench.SUMMARY_LINE_BUDGET, len(line)
+    parsed = json.loads(line)
+    assert len(parsed["queries"]) + parsed["queries_truncated"] == 213
+
+
 def test_summary_line_small_registry_carries_full_queries_map():
     """Below the tail budget nothing is truncated: every query rides
     the final line, so a small-registry driver parse sees the complete
-    map (the r02 behavior, restored for any registry that fits)."""
-    import json
-
+    map."""
     per_query = {f"q{i:02d}": round(0.1 * i, 4) for i in range(20)}
-    line = bench.summary_line(
-        10.0, 20, 0.1, [], {}, per_query, {}, 1.0, perquery_path="/x.json"
-    )
+    line = bench.summary_line(10.0, 20, 0.1, per_query, perquery_path="/x.json")
     parsed = json.loads(line)
     assert parsed["queries"] == per_query
     assert parsed["queries_truncated"] == 0
@@ -209,46 +108,87 @@ def test_fit_queries_descending_cost_and_budget():
     tiny = bench._fit_queries(per_query, len('"heavy": 9.0') + 4)
     assert list(tiny) == ["heavy"]  # budget admits only the worst
     assert bench._fit_queries(per_query, 0) == {}
-
-
-def test_adopt_solo_replaces_headline_and_keeps_old_number():
-    """r13 verdict task 5: a contention-inflated median is replaced by
-    the solo best-of in the headline map; the displaced number is
-    returned (kept verbatim in the artifact); a solo that did NOT beat
-    the median, a failed solo (None), and an unknown name are no-ops."""
-    per_query = {"a": 5.05, "b": 0.3, "c": 1.0}
-    solo = {"a": 0.26, "b": 0.4, "c": None, "ghost": 0.1}
-    displaced = bench._adopt_solo(per_query, solo)
-    assert per_query == {"a": 0.26, "b": 0.3, "c": 1.0}
-    assert displaced == {"a": 5.05}
+    # the budget bounds the serialized map exactly
+    for budget in range(2, 60):
+        assert len(json.dumps(bench._fit_queries(per_query, budget))) <= budget
 
 
 def test_write_perquery_roundtrip(tmp_path, monkeypatch):
-    """The sidecar carries the FULL queries map at the path the summary
-    line advertises — the driver-readable channel for 213 queries that
-    cannot fit the 2000-char stdout tail."""
-    import json
-
-    monkeypatch.setenv("SPARK_GRAFT_CPUS", "8")
+    """The sidecar carries the FULL queries map and per-query counts at
+    the path the summary line advertises — the machine-readable channel
+    for 213 queries that cannot fit the 2000-char stdout tail."""
+    monkeypatch.setattr(bench, "CPUS", "8")
+    counts = {"a": {"jobs": 3, "stages": 4, "tasks": 9}}
     out = {
         "metric": "suite_median_wall_sec",
         "value": 1.5,
         "unit": "sec",
         "sf": 0.1,
-        "queries": {"a": 1.0, "b": 0.5},
-        "queries_concurrent_median": {"a": 2.0},
-        "solo_sec": {"a": 1.0},
-        "env_drift": 0.99,
-        "movers": [],
-        "suite_runs_sec": [1.6, 1.5, 1.5],
+        "queries": {"a": 1.0, "b": None},
+        "counts": counts,
+        "runs_sec": {"a": [1.1, 1.0, 0.9]},
+        "suite_runs_sec": [1.1, 1.0, 0.9],
     }
     real = os.path.join
-    monkeypatch.setattr(
-        bench.os.path, "dirname", lambda p: str(tmp_path)
-    )
+    monkeypatch.setattr(bench.os.path, "dirname", lambda p: str(tmp_path))
     path = bench._write_perquery(out)
     assert path == real(str(tmp_path), "BENCH_PERQUERY_c8.json")
     doc = json.loads(open(path).read())
     assert doc["queries"] == out["queries"]
+    assert doc["counts"] == counts
     assert doc["cpus"] == 8
-    assert doc["queries_concurrent_median"] == {"a": 2.0}
+
+
+def test_time_query_counts_repeat(spark, sf_dir):
+    """The timing helper's Spark counts are deterministic: two calls on
+    the same cheap queries submit identical jobs/stages/tasks."""
+    import __spark_entry__ as entry
+    from perfbench.spans import JobCounter
+
+    queries = entry.queries()
+    counter = JobCounter(spark.sparkContext)
+    # start after the jobs this session already ran (the status store
+    # may have evicted the oldest ones, which the counter cannot scan)
+    retained = spark.sparkContext.statusTracker().getJobIdsForGroup(None)
+    if retained:
+        counter.since(max(retained))
+    for name in ("pricing_summary", "order_status_distribution"):
+        calls = [
+            bench.time_query(spark, counter, queries[name], sf_dir, runs=1)
+            for _ in range(2)
+        ]
+        (med1, runs1, c1), (med2, runs2, c2) = calls
+        assert len(runs1) == len(runs2) == 1 and med1 == runs1[0] > 0
+        assert set(c1) == {"jobs", "stages", "tasks"}
+        assert c1["jobs"] >= 1, (name, c1)
+        assert c1 == c2, (name, c1, c2)
+
+
+def test_compare_bench_common_count_and_job_delta(tmp_path, capsys):
+    cb = _load("compare_bench_mod", "tools", "compare_bench.py")
+    a = {
+        "queries": {"q1": 1.0, "q2": 2.0, "q3": None, "only_a": 0.5},
+        "counts": {
+            "q1": {"jobs": 2, "stages": 3, "tasks": 10},
+            "q2": {"jobs": 5, "stages": 6, "tasks": 20},
+        },
+    }
+    b = {
+        "queries": {"q1": 1.5, "q2": 1.0, "q3": 0.7, "only_b": 0.5},
+        "counts": {
+            "q1": {"jobs": 2, "stages": 3, "tasks": 10},
+            "q2": {"jobs": 4, "stages": 6, "tasks": 20},
+            "q3": {"jobs": 1, "stages": 1, "tasks": 1},
+        },
+    }
+    res = cb.compare(a, b)
+    assert res["n_common"] == 3
+    assert res["count_deltas"] == {"q2": {"a": a["counts"]["q2"], "b": b["counts"]["q2"]}}
+    assert res["ratios"] == [["q1", 1.5], ["q2", 0.5]]  # q3 failed in A
+    pa, pb = tmp_path / "a.json", tmp_path / "b.json"
+    pa.write_text(json.dumps(a))
+    pb.write_text(json.dumps(b))
+    assert cb.main([str(pa), str(pb)]) == 0
+    printed = capsys.readouterr().out
+    assert "common queries: 3" in printed
+    assert "q2: jobs 5 -> 4, stages 6 -> 6, tasks 20 -> 20" in printed

@@ -1,25 +1,18 @@
 #!/usr/bin/env python
 """Serialized round-close: pytest → multi-SF oracle sweep → recorded
-bench, one after another, NEVER overlapping.
-
-Round 8's recorded bench ran concurrently with the pytest suite and
-~60 medians inflated 2-10× with no retime trail (uniform contention —
-the intra-triple spread heuristic can't see it). This script is the
-structural fix (round-8 verdict task 2a): the recorded
-``BENCH_LOCAL_r{N}.json`` is produced with nothing else on the
-machine, and the bench gets ``SPARK_GRAFT_BENCH_PREV`` pointed at the
-previous round's artifact so >2× round-over-round movers are
-auto-retimed solo (task 2b, implemented in bench.py).
+bench, one after another, never overlapping, so the recorded
+``BENCH_LOCAL_r{N}.json`` is timed with nothing else on the machine.
 
     python tools/close_round.py <round-number> [--skip-pytest] [--skip-sweep]
 
 Steps (each must exit 0 before the next starts):
 1. ``python -m pytest tests/ -x -q``
 2. ``python tools/sweep_all.py <N>``  (writes SWEEPS_r{N}.md)
-3. ``python bench.py``  with BENCH_PREV = BENCH_LOCAL_r{N-1}.json,
-   stdout's last line captured to BENCH_LOCAL_r{N}.json
+3. ``python bench.py``, whose full-artifact stdout line is written to
+   BENCH_LOCAL_r{N}.json
 
-Exit code is the first failing step's.
+Compare two recordings with ``tools/compare_bench.py``. Exit code is
+the first failing step's.
 """
 
 from __future__ import annotations
@@ -36,9 +29,9 @@ def pick_artifact(stdout: str) -> str | None:
     """The FULL bench artifact line from bench.py stdout: scan from
     the END for the first JSON object carrying ``"metric"`` and NOT
     ``"bench_summary"`` — bench.py prints a compact ``bench_summary``
-    adjudication line AFTER the artifact (for the driver's 2000-char
-    stdout tail; since r14 it carries the driver contract keys too,
-    so the summary-line marker must be excluded explicitly), and
+    line AFTER the artifact (for the runner's 2000-char stdout tail;
+    it carries the contract keys too, so the summary-line
+    marker must be excluded explicitly), and
     trailing non-JSON prints must be skipped, never recorded."""
     for line in reversed([l for l in stdout.splitlines() if l.strip()]):
         try:
@@ -74,14 +67,8 @@ def main() -> int:
             return rc
 
     print(f"== step 3/3: recorded bench (ALONE — do not run anything else) ==", file=sys.stderr)
-    env = dict(os.environ)
-    prev = os.path.join(REPO, f"BENCH_LOCAL_r{rnd - 1:02d}.json")
-    if os.path.exists(prev):
-        env["SPARK_GRAFT_BENCH_PREV"] = prev
-    else:
-        print(f"# no {prev}; mover check off", file=sys.stderr)
     proc = subprocess.run(
-        [sys.executable, "bench.py"], cwd=REPO, env=env, capture_output=True, text=True
+        [sys.executable, "bench.py"], cwd=REPO, capture_output=True, text=True
     )
     sys.stderr.write(proc.stderr)
     if proc.returncode != 0:
