@@ -9,21 +9,54 @@ for non-SQL-expressible ops, which get a rows-only check).
 
 from __future__ import annotations
 
+import inspect
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ecommerce_realtime_pipeline_spark.plans import dq, gen, kpi, llm, temporal
+from ecommerce_realtime_pipeline_spark.plans import (
+    ann,
+    dedup,
+    dq,
+    gen,
+    kpi,
+    multimodal,
+    temporal,
+    textsearch,
+    training,
+)
 from ecommerce_realtime_pipeline_spark.plans._registry_order import (
     NARRATIVE,
     REGISTRY_ORDER,
 )
-from ecommerce_realtime_pipeline_spark.plans.dq import DQ_ORACLES
-from ecommerce_realtime_pipeline_spark.plans.gen import GEN_ORACLES
-from ecommerce_realtime_pipeline_spark.plans.llm import LLM_ORACLES
-from ecommerce_realtime_pipeline_spark.plans.oracles import KPI_ORACLES
 from ecommerce_realtime_pipeline_spark.plans.sqlhints import materialize_all
-from ecommerce_realtime_pipeline_spark.plans.temporal import TEMPORAL_ORACLES
+
+#: the plan modules, one per query family: each defines its queries as
+#: plain functions named like the query, and an ``ORACLES`` dict
+PLAN_MODULES = (kpi, dq, temporal, gen, dedup, ann, textsearch, training, multimodal)
+
+
+def resolve(name: str) -> Callable[[SparkSession, str], DataFrame]:
+    """The one plain function named ``name`` that a ``PLAN_MODULES``
+    module defines (an import of it into another module does not
+    count); raises when no module or more than one defines it."""
+    found = [
+        fn
+        for mod in PLAN_MODULES
+        if inspect.isfunction(fn := getattr(mod, name, None))
+        and fn.__module__ == mod.__name__
+    ]
+    if not found:
+        raise LookupError(
+            f"{name!r} is not a query: no plan module defines a plain "
+            "function of that name"
+        )
+    if len(found) > 1:
+        raise LookupError(
+            f"query {name!r} is defined by more than one plan module: "
+            f"{[fn.__module__ for fn in found]}"
+        )
+    return found[0]
 
 
 def entry(spark: SparkSession) -> DataFrame:
@@ -47,15 +80,16 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
         python tools/rotate_window.py
 
-    The generated narrative for the current rotation is appended to
-    this docstring at import time (below).
+    Each registered name is resolved to its plan function at import
+    time (:func:`resolve`), so a name that no plan module defines, or
+    that two define, fails the import. The generated narrative for the
+    current rotation is appended to this docstring at import time
+    (below).
     """
-    mods = {"kpi": kpi, "dq": dq, "llm": llm, "gen": gen, "temporal": temporal}
-    q: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-    for name, ref in REGISTRY_ORDER:
-        mod, fn = ref.split(".", 1)
-        q[name] = getattr(mods[mod], fn)
-    return q
+    return dict(_QUERIES)
+
+
+_QUERIES = {name: resolve(name) for name in REGISTRY_ORDER}
 
 
 # the tool-generated rotation narrative rides the generated module so
@@ -82,11 +116,5 @@ def oracle_sql() -> dict[str, str]:
     # and re-running them per RECURSIVE iteration (the CC oracles went
     # 12-14 s → <2 s; suite oracle time 77 s → ~25 s). See sqlhints.py.
     return materialize_all(
-        {
-            **KPI_ORACLES,
-            **DQ_ORACLES,
-            **LLM_ORACLES,
-            **GEN_ORACLES,
-            **TEMPORAL_ORACLES,
-        }
+        {name: sql for mod in PLAN_MODULES for name, sql in mod.ORACLES.items()}
     )

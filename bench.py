@@ -294,8 +294,8 @@ def _lifecycle_stress(spark, base_dir: str, stress_dir: str) -> dict:
     - ``serve_sec``: BEST-OF query time from the PREBUILT index
       through the production serving path — the term/cell-dictionary
       SEEK the registered queries run (text: the shared
-      ``_bm25_top20_indexed`` plan helper; positional:
-      ``seek_positional_tokens`` + the aligned join; IVF:
+      ``bm25_top20_indexed`` plan helper; positional: the shared
+      ``phrase_serve`` seek + aligned join; IVF:
       ``knn_ivf_from_index``) — which must be corpus-size-insensitive
       (``serve_ratio`` ≤ ~2× is the claim). Best-of, not median: these
       run at the END of a long bench session where block-manager/GC
@@ -326,12 +326,13 @@ def _lifecycle_stress(spark, base_dir: str, stress_dir: str) -> dict:
 
     from ecommerce_realtime_pipeline_spark.operators import similarity as SIM
     from ecommerce_realtime_pipeline_spark.operators import text as TX
-    from ecommerce_realtime_pipeline_spark.plans.llm import (
+    from ecommerce_realtime_pipeline_spark.plans.textsearch import (
         BM25_TERMS,
         PHRASE_QUERY,
-        _bm25_rank,
-        _bm25_top20_indexed,
-        _phrase_hits,
+        bm25_rank,
+        bm25_top20_indexed,
+        phrase_hits,
+        phrase_serve,
     )
 
     root = tempfile.mkdtemp(prefix="bench_lifecycle_")
@@ -366,7 +367,7 @@ def _lifecycle_stress(spark, base_dir: str, stress_dir: str) -> dict:
         # read_text_index pays the |vocab|-linear partition-discovery
         # pass the production seek avoids
         postings, dfreq, stats = TX.read_text_index(spark, path)
-        return _bm25_rank(
+        return bm25_rank(
             postings.filter(F.col("token").isin(*BM25_TERMS)).select(
                 "doc_id", "token", "tf", "dl"
             ),
@@ -374,23 +375,18 @@ def _lifecycle_stress(spark, base_dir: str, stress_dir: str) -> dict:
             stats,
         )
 
-    def phrase_serve(path):
-        # the seek-based plan the registered phrase queries run
-        post = TX.seek_positional_tokens(spark, path, list(PHRASE_QUERY))
-        return _phrase_hits(TX.phrase_occurrences(post, list(PHRASE_QUERY)))
-
     def phrase_serve_discovery(path):
         post = TX.read_positional_index(spark, path).filter(
             F.col("token").isin(*PHRASE_QUERY)
         )
-        return _phrase_hits(TX.phrase_occurrences(post, list(PHRASE_QUERY)))
+        return phrase_hits(TX.phrase_occurrences(post, list(PHRASE_QUERY)))
 
     fams = {
         "text_bm25": dict(
             build=lambda docs, emb, path, mult: TX.write_text_index(docs, path),
             # the same plan helper every registered persisted-text-index
             # query runs (seek postings + manifest dfreq/stats)
-            serve=lambda path: _bm25_top20_indexed(spark, path),
+            serve=lambda path: bm25_top20_indexed(spark, path),
             serve_discovery=bm25_serve_discovery,
             merge=lambda path, run: TX.merge_text_index(docs_batch(run), path),
         ),
@@ -398,7 +394,7 @@ def _lifecycle_stress(spark, base_dir: str, stress_dir: str) -> dict:
             build=lambda docs, emb, path, mult: TX.write_positional_index(
                 docs, path
             ),
-            serve=phrase_serve,
+            serve=lambda path: phrase_serve(spark, path, PHRASE_QUERY),
             serve_discovery=phrase_serve_discovery,
             merge=lambda path, run: TX.merge_positional_index(
                 docs_batch(run), path

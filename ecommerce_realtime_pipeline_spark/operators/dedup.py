@@ -373,7 +373,7 @@ def simhash(
     - ``portable_hash=True`` (oracle parity): first 8 hex chars of md5
       via ``conv`` — md5 is the one hash Spark and DuckDB share
       bit-for-bit, which is what makes docs_neardup_simhash exactly
-      replicable in SQL. ~2.4× slower than xxhash64 (r3 bench); pay it
+      replicable in SQL. ~2.4× slower than xxhash64 (measured); pay it
       only when an external engine must reproduce the signature.
 
     Requires ``bits`` ≤ 32."""

@@ -46,7 +46,7 @@ def embedding_dim(
     row = emb.select(col).first()
     if row is None:
         # loud contract instead of the NoneType-subscript the bare
-        # first()[0] throws (empty-corpus audit, r7): every ANN/dedup
+        # first()[0] throws on an empty corpus: every ANN/dedup
         # entry point funnels through here, so this one check converts
         # a family of obscure numpy/TypeError crashes into one message
         raise ValueError(
@@ -217,17 +217,17 @@ def exact_rerank(
 #: owning SparkContext application id (a localCheckpoint is only valid
 #: inside the session that produced it). An IVF index is build-once /
 #: query-many by definition — re-deriving the quantizer and the cell
-#: table per query call is pure waste (the r3 bench paid a full md5
-#: TakeOrdered scan + an extra corpus matmul on every invocation).
+#: table per query call is pure waste (a full md5 TakeOrdered scan +
+#: an extra corpus matmul on every invocation).
 #: manifest format tag for the persisted IVF index (see indexfmt)
 IVF_INDEX_FORMAT = "ivf-index"
 
 _IVF_CENTROID_CACHE: dict[tuple, list] = {}
 _IVF_CELL_CACHE: dict[tuple, DataFrame] = {}
 
-#: persisted centroid-TABLE memo (r13 optimization round): every IVF
-#: serve/merge re-read and re-collected the k·dim-tiny quantizer table
-#: of the same index generation — one Spark job apiece. Centroid
+#: persisted centroid-TABLE memo: without it every IVF serve/merge
+#: re-reads and re-collects the k·dim-tiny quantizer table of the same
+#: index generation — one Spark job apiece. Centroid
 #: directories are immutable once referenced (fresh uuid name per
 #: generation, never rewritten in place; vacuum only deletes
 #: unreferenced ones), so (index path, centroid dir name) keys the
@@ -320,8 +320,8 @@ def _write_centroid_table(spark, cents: list[list[float]], dest: str) -> None:
     ``createDataFrame(list)`` parallelizes into defaultParallelism
     pickled partitions, and ``coalesce(1)`` then drains all of them
     through ONE task's sequential Python-worker round-trips (~4.5 s
-    measured for 32 partitions of 16 rows — the r13 profile's single
-    biggest fixed cost, paid by every index build/retrain); the Arrow
+    measured for 32 partitions of 16 rows — the single biggest fixed
+    cost of every index build/retrain in a profile); the Arrow
     frame is a handful of batches the coalesced task reads in ~0.2 s
     (guide §4: batches over pickled rows, §6: one output file)."""
     spark.createDataFrame(

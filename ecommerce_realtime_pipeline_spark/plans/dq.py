@@ -439,7 +439,7 @@ def revenue_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
 # DuckDB oracles (driver runs these side-by-side at sf0.01)
 # ---------------------------------------------------------------------------
 
-DQ_ORACLES: dict[str, str] = {
+ORACLES: dict[str, str] = {
     # drift: both distributions derived from the modular perturbation
     # predicates; chi2 chain is the same fixed IEEE sequence.
     "customers_segment_drift": """
@@ -723,7 +723,7 @@ def customers_incremental_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("c_mktsegment")
 
 
-DQ_ORACLES["customers_incremental_agg"] = """
+ORACLES["customers_incremental_agg"] = """
     WITH newsnap AS (
         SELECT c_mktsegment,
                CASE WHEN c_custkey % 13 = 0 THEN c_acctbal + 10
@@ -741,7 +741,7 @@ DQ_ORACLES["customers_incremental_agg"] = """
 """
 
 
-DQ_ORACLES["customers_snapshot_diff"] = """
+ORACLES["customers_snapshot_diff"] = """
     SELECT 'delete' AS op, COUNT(*) AS n_keys,
            MIN(c_custkey) AS min_key, MAX(c_custkey) AS max_key
     FROM customer WHERE c_custkey % 97 = 0

@@ -1,6 +1,9 @@
 """Session-shared fixture directories for the registered queries (the
 persisted indexes the serving queries read and the produced topic
-trees the pipeline queries ingest), and the one writer of the
+trees the pipeline queries ingest), the build-once index fixtures
+themselves (:func:`index_fixture` and its ``persisted_*``,
+``merged_*``, ``ivf_*`` paths), the scratch directories of queries
+that mutate a private index copy, and the one writer of the
 hand-built envelope files the streaming fixture queries stream.
 
 A fixture path is keyed on the Spark application id plus a caller key,
@@ -20,10 +23,17 @@ import shutil
 import tempfile
 import threading
 import time
+from collections.abc import Iterator
+from contextlib import contextmanager
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 from ecommerce_realtime_pipeline_spark import storage
+from ecommerce_realtime_pipeline_spark.operators import indexfmt
+from ecommerce_realtime_pipeline_spark.operators import similarity as SIM
+from ecommerce_realtime_pipeline_spark.operators import text as TX
+from ecommerce_realtime_pipeline_spark.session import overlapped
 
 #: fixture dirs created by THIS process, removed at interpreter exit —
 #: session-scoped paths are never reused by a later invocation, so
@@ -109,6 +119,264 @@ def build_once(path: str, ready, build) -> None:
                 os.remove(lockfile)
             except OSError:
                 pass
+
+
+#: the source table each index format is built from — the file whose
+#: size and mtime stamp a fixture's path (:func:`stamped_path`)
+_FIXTURE_SOURCE = {
+    TX.TEXT_INDEX_FORMAT: "documents.parquet",
+    TX.POS_INDEX_FORMAT: "documents.parquet",
+    SIM.IVF_INDEX_FORMAT: "embeddings.parquet",
+}
+
+
+def index_fixture(
+    spark: SparkSession,
+    sf_dir: str,
+    fmt: str,
+    prefix: str,
+    shape: tuple[int, int, bool],
+    *steps,
+) -> str:
+    """Build-once path of a session-shared index fixture: the index of
+    format ``fmt`` over ``sf_dir``'s source table, keyed on the app id
+    and the source's size and mtime (:func:`stamped_path`).
+    ``steps`` run in order on the fixture path — a build, then any
+    merge or delete — and land the pinned generation history ``shape``
+    = (live version, live segments, live tombstones?): (1, 1, False)
+    for a plain build, (2, 1, True) for build + delete, where v1 is
+    what ``version=1`` time travel serves, (2, 2, False) for build +
+    merge. The ready check requires exactly that shape, so a
+    half-built tree from a crashed process is cleared and rebuilt,
+    never served (:func:`build_once`, which also keeps a
+    concurrent process from interleaving a multi-flip build), and a
+    build that lands any other shape fails loudly. Fixtures are
+    serving-only: a query that mutates an index takes a
+    :func:`mutable_index_copy`."""
+    path = stamped_path(spark, sf_dir, _FIXTURE_SOURCE[fmt], prefix)
+
+    def ready(p):
+        if not indexfmt.has_index(p):
+            return False
+        m = indexfmt.read_manifest(p, fmt)
+        got = (int(m["version"]), len(m["segments"]), bool(m.get("tombstones")))
+        return got == shape
+
+    def build(p):
+        for step in steps:
+            step(p)
+
+    build_once(path, ready, build)
+    if not ready(path):
+        raise RuntimeError(
+            f"index fixture {path} did not land as (version, segments, "
+            f"tombstones) {shape}"
+        )
+    return path
+
+
+def persisted_ivf_path(spark: SparkSession, sf_dir: str, emb: DataFrame) -> str:
+    """The full-corpus IVF index, shared by every query that SERVES
+    from the canonical index (`emb_knn_ivf_persisted`,
+    `emb_ivf_index_health`)."""
+    return index_fixture(
+        spark, sf_dir, SIM.IVF_INDEX_FORMAT, "spark_graft_ivf_", (1, 1, False),
+        lambda p: SIM.write_ivf_index(emb, p, cache_key=f"{sf_dir}/embeddings"),
+    )
+
+
+def persisted_text_path(
+    spark: SparkSession, sf_dir: str, docs: DataFrame
+) -> str:
+    """The full-corpus TEXT index — the BM25 twin of
+    `persisted_pos_path`, for queries that SERVE from the canonical
+    index."""
+    return index_fixture(
+        spark, sf_dir, TX.TEXT_INDEX_FORMAT, "spark_graft_text_", (1, 1, False),
+        lambda p: TX.write_text_index(docs, p),
+    )
+
+
+def persisted_ivf_deleted_path(
+    spark: SparkSession, sf_dir: str, emb: DataFrame
+) -> str:
+    """Full IVF index + odd vec_ids tombstoned, shared by the
+    deleted/hybrid/time-travel serving family: v1 = the full-corpus
+    build (what ``version=1`` time travel serves), v2 = live
+    tombstones on the odd ids (what the masked serves read)."""
+    return index_fixture(
+        spark, sf_dir, SIM.IVF_INDEX_FORMAT, "spark_graft_ivfdel_", (2, 1, True),
+        lambda p: SIM.write_ivf_index(emb, p, cache_key=f"{sf_dir}/embeddings"),
+        lambda p: SIM.delete_from_ivf_index(
+            emb.filter(F.col("vec_id") % 2 == 1).select("vec_id"), p
+        ),
+    )
+
+
+def persisted_text_deleted_path(
+    spark: SparkSession, sf_dir: str, docs: DataFrame
+) -> str:
+    """Text twin of :func:`persisted_ivf_deleted_path`: full-corpus
+    ``write_text_index`` + odd doc_ids tombstoned. v1 = full build
+    (time travel), v2 = live tombstones (masked BM25 serves with
+    deliberately-stale idf/avgdl — the documented Lucene semantics)."""
+    return index_fixture(
+        spark, sf_dir, TX.TEXT_INDEX_FORMAT, "spark_graft_textdel_", (2, 1, True),
+        lambda p: TX.write_text_index(docs, p),
+        lambda p: TX.delete_from_text_index(
+            docs.filter(F.col("doc_id") % 2 == 1).select("doc_id"), p
+        ),
+    )
+
+
+def persisted_pos_deleted_path(
+    spark: SparkSession, sf_dir: str, docs: DataFrame
+) -> str:
+    """Positional twin of :func:`persisted_text_deleted_path`: full
+    ``write_positional_index`` + every doc_id ≡ 0 (mod 7) tombstoned
+    (the family's delete-gate fixture shape). v1 = full build, v2 =
+    live tombstones."""
+    return index_fixture(
+        spark, sf_dir, TX.POS_INDEX_FORMAT, "spark_graft_posdel_", (2, 1, True),
+        lambda p: TX.write_positional_index(docs, p),
+        lambda p: TX.delete_from_positional_index(
+            docs.filter(F.col("doc_id") % 7 == 0).select("doc_id"), p
+        ),
+    )
+
+
+def deleted_fixture_pair(
+    spark: SparkSession, sf_dir: str, docs: DataFrame, emb: DataFrame
+) -> tuple[str, str]:
+    """Both deleted serving fixtures (text + IVF) for the hybrid
+    queries, built CONCURRENTLY when cold (the two build+delete
+    sequences are independent multi-job chains; submitting
+    them from a 2-thread pool lets one build's task tail back-fill with
+    the other's tasks instead of serializing the two builds). Warm
+    path: both submits return immediately off the session memo, so the
+    pool costs microseconds. The per-path build locks are what make
+    the overlap real."""
+    return tuple(
+        overlapped(
+            lambda: persisted_text_deleted_path(spark, sf_dir, docs),
+            lambda: persisted_ivf_deleted_path(spark, sf_dir, emb),
+        )
+    )
+
+
+@contextmanager
+def scratch_dir(prefix: str) -> Iterator[str]:
+    """A fresh temp directory for one query's private index, stream
+    source or checkpoint, removed when the block exits, on error too."""
+    tmp = tempfile.mkdtemp(prefix=prefix)
+    try:
+        yield tmp
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
+
+
+@contextmanager
+def mutable_index_copy(base: str, prefix: str) -> Iterator[str]:
+    """Private MUTABLE copy of a session-shared index fixture, for
+    queries whose point is the mutation itself (compact, delete,
+    policy retrain): copy the memoized base instead of re-running its
+    multi-job build — the manifests store path-RELATIVE child names
+    (test-pinned in test_indexfmt), so an index directory is
+    relocatable byte-for-byte, and the shipped fixtures are ≤ a few
+    MB, so the copy is milliseconds against the multi-second build it
+    replaces. Yields the copy's index path inside a
+    :func:`scratch_dir`, so the copy is gone when the block exits; a
+    query returns a ``localCheckpoint(eager=True)`` frame from inside
+    the block."""
+    with scratch_dir(prefix) as tmp:
+        path = os.path.join(tmp, "index")
+        shutil.copytree(base, path)
+        yield path
+
+
+def ivf_even_path(spark: SparkSession, sf_dir: str, emb: DataFrame) -> str:
+    """The HALF-CORPUS (even vec_ids) IVF index — the frozen-quantizer
+    base every drift-family fixture starts from. The even-trained
+    quantizer itself is additionally memoized under the ``#even``
+    cache key, shared with the oracle chain."""
+    return index_fixture(
+        spark, sf_dir, SIM.IVF_INDEX_FORMAT, "spark_graft_ivfeven_", (1, 1, False),
+        lambda p: SIM.write_ivf_index(
+            emb.filter(F.col("vec_id") % 2 == 0),
+            p,
+            cache_key=f"{sf_dir}/embeddings#even",
+        ),
+    )
+
+
+def ivf_drifted_path(spark: SparkSession, sf_dir: str, emb: DataFrame) -> str:
+    """The DRIFTED IVF index — quantizer frozen on the even half, odd
+    half merged in under it (v1 = even build, v2 = odd-batch segment
+    append). This exact 2-segment state is the shared prefix of the
+    whole drift family (`emb_knn_ivf_merged` serves it as-is;
+    requantize/policy queries take a :func:`mutable_index_copy` and
+    retrain their own copy)."""
+    return index_fixture(
+        spark, sf_dir, SIM.IVF_INDEX_FORMAT, "spark_graft_ivfdrift_", (2, 2, False),
+        lambda p: shutil.copytree(ivf_even_path(spark, sf_dir, emb), p),
+        lambda p: SIM.merge_ivf_index(emb.filter(F.col("vec_id") % 2 == 1), p),
+    )
+
+
+def merged_text_path(spark: SparkSession, sf_dir: str, docs: DataFrame) -> str:
+    """The MERGED text index — even doc_ids built, odd doc_ids merged
+    as a second immutable segment (v1 = build, v2 = merge). The shared
+    prefix of the merge-lifecycle family: `docs_bm25_index_merge`
+    serves it as-is; compaction/stats queries mutate a
+    :func:`mutable_index_copy`."""
+    return index_fixture(
+        spark, sf_dir, TX.TEXT_INDEX_FORMAT, "spark_graft_textmrg_", (2, 2, False),
+        lambda p: TX.write_text_index(docs.filter(F.col("doc_id") % 2 == 0), p),
+        lambda p: TX.merge_text_index(docs.filter(F.col("doc_id") % 2 == 1), p),
+    )
+
+
+def merged_pos_median_path(
+    spark: SparkSession, sf_dir: str, docs: DataFrame
+) -> str:
+    """The MEDIAN-SPLIT positional index: first half of the doc_id
+    range built, second half merged as a second segment —
+    `docs_phrase_search_indexed`'s fixture shape (v1 = build, v2 =
+    merge)."""
+    def build(p):
+        mid = docs.agg(
+            F.percentile_approx("doc_id", 0.5, 10000).alias("m")
+        ).collect()[0]["m"]
+        TX.write_positional_index(docs.filter(F.col("doc_id") <= mid), p)
+        TX.merge_positional_index(docs.filter(F.col("doc_id") > mid), p)
+
+    return index_fixture(
+        spark, sf_dir, TX.POS_INDEX_FORMAT, "spark_graft_posmrg_", (2, 2, False),
+        build,
+    )
+
+
+def merged_pos_evenodd_path(
+    spark: SparkSession, sf_dir: str, docs: DataFrame
+) -> str:
+    """The EVEN/ODD merged positional index (even doc_ids built, odd
+    merged — the `docs_pos_index_stats` lifecycle prefix, v1 = build,
+    v2 = merge); its consumer deletes on a :func:`mutable_index_copy`."""
+    return index_fixture(
+        spark, sf_dir, TX.POS_INDEX_FORMAT, "spark_graft_posmeo_", (2, 2, False),
+        lambda p: TX.write_positional_index(docs.filter(F.col("doc_id") % 2 == 0), p),
+        lambda p: TX.merge_positional_index(docs.filter(F.col("doc_id") % 2 == 1), p),
+    )
+
+
+def persisted_pos_path(spark: SparkSession, sf_dir: str, docs: DataFrame) -> str:
+    """The full-corpus POSITIONAL index — the positional twin of
+    `persisted_ivf_path`, for queries that SERVE from the canonical
+    index (:func:`index_fixture`)."""
+    return index_fixture(
+        spark, sf_dir, TX.POS_INDEX_FORMAT, "spark_graft_pos_", (1, 1, False),
+        lambda p: TX.write_positional_index(docs, p),
+    )
 
 
 #: arrival time of the hand-built fixture envelopes

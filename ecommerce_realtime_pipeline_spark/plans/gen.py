@@ -167,7 +167,7 @@ def gen_batch_shape(spark: SparkSession, sf_dir: str) -> DataFrame:
     """G7 contract row: batch counts + referential-coherence orphan
     counts (all zero by construction).
 
-    Oracle-checked against ANALYTIC constants (GEN_ORACLES): the
+    Oracle-checked against ANALYTIC constants (ORACLES): the
     requested batch shape (10/10/25/50) must come back exactly, and
     coherent generation guarantees zero orphans of any kind — those
     values are the operator's contract, not hash-derived artifacts, so
@@ -209,7 +209,7 @@ def produce_envelopes_shape(spark: SparkSession, sf_dir: str) -> DataFrame:
     repairs even a corrupted header before publish).
 
     Oracle-checked against the ANALYTIC contract constants
-    (GEN_ORACLES): 50 messages per topic, zero violations of each kind
+    (ORACLES): 50 messages per topic, zero violations of each kind
     — corruption may mangle payload FIELDS but never the row count, the
     key, JSON well-formedness, or the forced total."""
     settings = Settings(
@@ -1531,7 +1531,7 @@ def gen_corrupt_rates_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
 # tests/test_generate.py.
 # ---------------------------------------------------------------------------
 
-GEN_ORACLES: dict[str, str] = {
+ORACLES: dict[str, str] = {
     # streaming_hll_users: a COMPUTED oracle — DuckDB rebuilds the
     # stream's distinct user sets from generate_series (HLL over a
     # multiset == HLL over its support) and runs the identical HLL:
@@ -2035,7 +2035,7 @@ def streaming_dim_enrichment(spark: SparkSession, sf_dir: str) -> DataFrame:
         shutil.rmtree(tmp, ignore_errors=True)
 
 
-GEN_ORACLES["streaming_dim_enrichment"] = """
+ORACLES["streaming_dim_enrichment"] = """
     SELECT * FROM (VALUES
         ('p1', 'c1', 'gold'),
         ('p2', 'c2', 'silver'),
@@ -2057,7 +2057,7 @@ GEN_ORACLES["streaming_dim_enrichment"] = """
 # empty_description violates no rule and negative_stock no-ops on a
 # stock of 0. The constants below are the requested batch shape —
 # derivable without running either engine.
-GEN_ORACLES["gen_corrupt_rates_sweep"] = """
+ORACLES["gen_corrupt_rates_sweep"] = """
     SELECT table_name, metric, CAST(n AS BIGINT) AS n
     FROM (VALUES
         ('customers', 'corruption_signature', 80),

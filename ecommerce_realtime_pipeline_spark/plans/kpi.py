@@ -24,6 +24,10 @@ from pyspark.sql import functions as F
 
 from ecommerce_realtime_pipeline_spark.catalog import load_table
 
+# the KPI oracles live in their own module; bound here so every plan
+# module exposes its family's oracles as ``ORACLES``
+from ecommerce_realtime_pipeline_spark.plans.oracles import ORACLES  # noqa: F401
+
 # Exact money expression: cast to decimal BEFORE arithmetic so sums are
 # exact and partition-order independent (doubles would make the oracle
 # hash flaky). Mirrors reference round-to-2dp money semantics
@@ -1262,7 +1266,7 @@ def customer_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     engines), then folded into the standard segment labels via ONE
     deterministic CASE chain mirrored verbatim in the oracle.
 
-    Scale (the round-5 de-weak): scoring reproduces ``ntile(5)``
+    Scale: scoring reproduces ``ntile(5)``
     EXACTLY — the oracle keeps plain ntile — but WITHOUT the three
     single-reducer global-sort windows ``Window.orderBy`` forces: the
     4 bucket-closing boundary ROWS per dimension (ntile's cumulative
@@ -1623,9 +1627,9 @@ def nation_trade_flows(spark: SparkSession, sf_dir: str) -> DataFrame:
     NATION_13 and NATION_19 (both directions), per ship year — the
     two-dimension-decorated fact shape (supplier nation AND customer
     nation on one lineitem scan). The nation pair is chosen so the
-    gate is NON-EMPTY at every test SF (r12 judge task 5: the old
-    pair had zero suppliers at sf0.001 — an empty result exercises
-    nothing in the direction the driver scales).
+    gate is NON-EMPTY at every test SF (a pair with zero suppliers at
+    sf0.001 would give an empty result, which exercises nothing in the
+    direction the driver scales).
 
     Plan: the 2-row filtered nation dim broadcasts into supplier and
     customer, shrinking both scale-linear dims to the two target
@@ -1784,8 +1788,8 @@ def cheapest_supplier_per_part(spark: SparkSession, sf_dir: str) -> DataFrame:
     a per-part window MIN replaces the self-join the subquery would
     naively compile to (the reference schema has no partsupp; lineitem
     evidence is the offer book). The (size, type) selector is chosen
-    to be non-empty at every test SF (r12 judge task 5 — size 25 had
-    zero STANDARD parts at sf0.001).
+    to be non-empty at every test SF (size 25 has zero STANDARD parts
+    at sf0.001).
 
     Plan: the filtered part dim (1/300th of parts) broadcasts into the
     fact BEFORE any aggregation, so the window only ever sees relevant
@@ -2445,10 +2449,10 @@ def events_markov_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: brand-triple support quantiles of the synthetic corpus — the
 #: floor lands between p50 and p90 at sf0.001/0.01/0.1 (supports
 #: p50/p90: 4/9, 47/63, 484/529 vs floors 6, 52, 516), so the gate
-#: is non-empty AND discriminating at every SF (r12 judge task 5: a
-#: fixed absolute floor gated an empty result at sf0.1, where no
-#: part-level triple even repeats — rules are mined at BRAND level
-#: for exactly that reason).
+#: is non-empty AND discriminating at every SF (a fixed absolute
+#: floor gates an empty result at sf0.1, where no part-level triple
+#: even repeats — rules are mined at BRAND level for exactly that
+#: reason).
 BASKET_RULES_MIN_SUPPORT = 0.0035
 
 

@@ -12,7 +12,7 @@ row-count + schema + order-insensitive value hash. Rules used here:
 
 from __future__ import annotations
 
-KPI_ORACLES: dict[str, str] = {
+ORACLES: dict[str, str] = {
     "revenue_trend_daily": """
         SELECT strftime(date_trunc('day', o_orderdate), '%Y-%m-%d') AS order_day,
                count(*) AS n_orders,
@@ -533,7 +533,7 @@ KPI_ORACLES: dict[str, str] = {
     """,
 }
 
-KPI_ORACLES.update(
+ORACLES.update(
     {
         "top_products_per_nation": """
             WITH per AS (
@@ -587,7 +587,7 @@ KPI_ORACLES.update(
     }
 )
 
-KPI_ORACLES.update(
+ORACLES.update(
     {
         # market_basket_pairs: same order of operations — distinct
         # (order, part), within-order pair counts, top-20, enrich.
@@ -668,12 +668,12 @@ KPI_ORACLES.update(
 
 # The heap scale-path variant produces the identical result by
 # construction (candidates cover the true top-k) -> same oracle.
-KPI_ORACLES["top_products_per_nation_heap"] = KPI_ORACLES["top_products_per_nation"]
+ORACLES["top_products_per_nation_heap"] = ORACLES["top_products_per_nation"]
 
 # ntile decile segmentation: SQL-standard remainder-to-first-buckets
 # rule + a total order (spend DECIMAL-exact, custkey tie-break) make
 # bucket membership engine-identical.
-KPI_ORACLES["customer_value_deciles"] = """
+ORACLES["customer_value_deciles"] = """
     WITH spend AS (
         SELECT o_custkey,
                SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS s
@@ -693,7 +693,7 @@ KPI_ORACLES["customer_value_deciles"] = """
 """
 
 # pivot == conditional aggregation (its relational definition).
-KPI_ORACLES["orders_status_pivot"] = """
+ORACLES["orders_status_pivot"] = """
     SELECT strftime(date_trunc('month', o_orderdate), '%Y-%m') AS month,
            COUNT(*) FILTER (WHERE o_orderstatus = 'F') AS n_f,
            CAST(ROUND(COALESCE(SUM(CAST(o_totalprice AS DECIMAL(18,2)))
@@ -708,7 +708,7 @@ KPI_ORACLES["orders_status_pivot"] = """
 """
 
 # unpivot == UNION ALL per metric column (its relational definition).
-KPI_ORACLES["events_metrics_unpivot"] = """
+ORACLES["events_metrics_unpivot"] = """
     WITH wide AS (
         SELECT event_type,
                CAST(count(*) AS DOUBLE) AS n_events,
@@ -727,7 +727,7 @@ KPI_ORACLES["events_metrics_unpivot"] = """
 
 # events_decayed_engagement: per-row pow(0.5, age/7) double, DECIMAL
 # fold — same fixed IEEE chain on both engines; anchor = max epoch_us.
-KPI_ORACLES["events_decayed_engagement"] = """
+ORACLES["events_decayed_engagement"] = """
     WITH a AS (SELECT MAX(epoch_us(ts)) AS amax FROM events)
     SELECT event_type,
            count(*) AS n_events,
@@ -741,7 +741,7 @@ KPI_ORACLES["events_decayed_engagement"] = """
 
 # events_value_outliers_per_type: exact decimal moments per type, the
 # same mean/var/z IEEE chain, |z| rank with event_id tie-break.
-KPI_ORACLES["events_value_outliers_per_type"] = """
+ORACLES["events_value_outliers_per_type"] = """
     WITH mom AS (
         SELECT event_type, count(*) AS n,
                SUM(CAST(value AS DECIMAL(18,2))) AS s1,
@@ -772,7 +772,7 @@ KPI_ORACLES["events_value_outliers_per_type"] = """
     ORDER BY event_type, rk
 """
 
-KPI_ORACLES["shipping_priority"] = """
+ORACLES["shipping_priority"] = """
     SELECT o_orderkey, o_orderdate, o_orderpriority,
            CAST(ROUND(SUM(CAST(l_extendedprice AS DECIMAL(18,2))
                            * (1 - CAST(l_discount AS DECIMAL(18,2)))), 2)
@@ -789,7 +789,7 @@ KPI_ORACLES["shipping_priority"] = """
     LIMIT 10
 """
 
-KPI_ORACLES["returned_items_report"] = """
+ORACLES["returned_items_report"] = """
     WITH per_cust AS (
         SELECT o_custkey,
                CAST(ROUND(SUM(CAST(l_extendedprice AS DECIMAL(18,2))
@@ -811,7 +811,7 @@ KPI_ORACLES["returned_items_report"] = """
     LIMIT 20
 """
 
-KPI_ORACLES["customer_rfm_segments"] = """
+ORACLES["customer_rfm_segments"] = """
     WITH per_cust AS (
         SELECT o_custkey,
                MAX(o_orderdate) AS last_order,
@@ -854,7 +854,7 @@ KPI_ORACLES["customer_rfm_segments"] = """
     GROUP BY 1 ORDER BY 1
 """
 
-KPI_ORACLES["nation_market_share"] = """
+ORACLES["nation_market_share"] = """
     SELECT CAST(year(l_shipdate) AS INT) AS ship_year,
            CAST(ROUND(SUM(CASE WHEN n_name = 'NATION_3'
                     THEN CAST(l_extendedprice AS DECIMAL(18,2))
@@ -879,7 +879,7 @@ KPI_ORACLES["nation_market_share"] = """
     GROUP BY 1 ORDER BY 1
 """
 
-KPI_ORACLES["promo_revenue_share"] = """
+ORACLES["promo_revenue_share"] = """
     SELECT CAST(month(l_shipdate) AS INT) AS ship_month,
            CAST(ROUND(SUM(CASE WHEN p_type = 'PROMO'
                     THEN CAST(l_extendedprice AS DECIMAL(18,2))
@@ -903,7 +903,7 @@ KPI_ORACLES["promo_revenue_share"] = """
     GROUP BY 1 ORDER BY 1
 """
 
-KPI_ORACLES["order_priority_fulfillment"] = """
+ORACLES["order_priority_fulfillment"] = """
     SELECT o_orderpriority, COUNT(*) AS n_late_orders
     FROM orders
     WHERE o_orderdate >= TIMESTAMP '1999-01-01 00:00:00'
@@ -916,7 +916,7 @@ KPI_ORACLES["order_priority_fulfillment"] = """
     GROUP BY 1 ORDER BY 1
 """
 
-KPI_ORACLES["customer_order_distribution"] = """
+ORACLES["customer_order_distribution"] = """
     WITH per_cust AS (
         SELECT o_custkey, count(*) AS _n FROM orders GROUP BY 1
     )
@@ -927,7 +927,7 @@ KPI_ORACLES["customer_order_distribution"] = """
     ORDER BY n_customers DESC, n_orders DESC
 """
 
-KPI_ORACLES["large_order_customers"] = """
+ORACLES["large_order_customers"] = """
     WITH big AS (
         SELECT l_orderkey,
                SUM(CAST(l_quantity AS DECIMAL(18,2))) AS _qty
@@ -944,7 +944,7 @@ KPI_ORACLES["large_order_customers"] = """
     LIMIT 20
 """
 
-KPI_ORACLES["dormant_customer_balance"] = """
+ORACLES["dormant_customer_balance"] = """
     WITH pos AS (
         SELECT CAST(SUM(CAST(c_acctbal AS DECIMAL(18,2))) AS DECIMAL(18,2)) AS _s,
                CAST(count(*) AS DECIMAL(12,0)) AS _n
@@ -969,7 +969,7 @@ KPI_ORACLES["dormant_customer_balance"] = """
     ORDER BY 1
 """
 
-KPI_ORACLES["nation_supplier_hhi"] = """
+ORACLES["nation_supplier_hhi"] = """
     WITH per_supp AS (
         SELECT l_suppkey,
                CAST(ROUND(SUM(CAST(l_extendedprice AS DECIMAL(18,2))
@@ -997,7 +997,7 @@ KPI_ORACLES["nation_supplier_hhi"] = """
     ORDER BY hhi DESC, n_name
 """
 
-KPI_ORACLES["nation_trade_flows"] = """
+ORACLES["nation_trade_flows"] = """
     SELECT sn.n_name AS supp_nation,
            cn.n_name AS cust_nation,
            CAST(year(l_shipdate) AS BIGINT) AS ship_year,
@@ -1018,7 +1018,7 @@ KPI_ORACLES["nation_trade_flows"] = """
     ORDER BY 1, 2, 3
 """
 
-KPI_ORACLES["top_supplier_quarter"] = """
+ORACLES["top_supplier_quarter"] = """
     WITH rev AS (
         SELECT l_suppkey,
                CAST(ROUND(SUM(CAST(l_extendedprice AS DECIMAL(18,2))
@@ -1036,7 +1036,7 @@ KPI_ORACLES["top_supplier_quarter"] = """
     ORDER BY s_suppkey
 """
 
-KPI_ORACLES["discount_revenue_impact"] = """
+ORACLES["discount_revenue_impact"] = """
     SELECT count(*) AS n_lines,
            CAST(ROUND(SUM(CAST(l_extendedprice AS DECIMAL(18,2))
                            * CAST(l_discount AS DECIMAL(18,2))), 2)
@@ -1048,7 +1048,7 @@ KPI_ORACLES["discount_revenue_impact"] = """
       AND l_quantity < 10
 """
 
-KPI_ORACLES["nation_yoy_growth"] = """
+ORACLES["nation_yoy_growth"] = """
     WITH per AS (
         SELECT n_name,
                CAST(year(o_orderdate) AS BIGINT) AS order_year,
@@ -1068,7 +1068,7 @@ KPI_ORACLES["nation_yoy_growth"] = """
     ORDER BY n_name, order_year
 """
 
-KPI_ORACLES["cheapest_supplier_per_part"] = """
+ORACLES["cheapest_supplier_per_part"] = """
     WITH pf AS (
         SELECT p_partkey, p_name FROM part
         WHERE p_size = 6 AND p_type = 'STANDARD'
@@ -1092,7 +1092,7 @@ KPI_ORACLES["cheapest_supplier_per_part"] = """
     ORDER BY p_partkey, s_suppkey
 """
 
-KPI_ORACLES["product_profit_by_nation_year"] = """
+ORACLES["product_profit_by_nation_year"] = """
     WITH pf AS (
         SELECT p_partkey,
                CAST(ROUND(p_retailprice * 0.5, 2) AS DECIMAL(18,2)) AS _unit_cost
@@ -1113,7 +1113,7 @@ KPI_ORACLES["product_profit_by_nation_year"] = """
     ORDER BY 1, 2
 """
 
-KPI_ORACLES["small_quantity_revenue"] = """
+ORACLES["small_quantity_revenue"] = """
     WITH pf AS (
         SELECT p_partkey FROM part WHERE p_brand = 'Brand#13'
     ),
@@ -1128,7 +1128,7 @@ KPI_ORACLES["small_quantity_revenue"] = """
     FROM j WHERE l_quantity < _thr
 """
 
-KPI_ORACLES["disjunctive_promo_revenue"] = """
+ORACLES["disjunctive_promo_revenue"] = """
     SELECT count(*) AS n_lines,
            CAST(ROUND(SUM(CAST(l_extendedprice AS DECIMAL(18,2))
                            * (1 - CAST(l_discount AS DECIMAL(18,2)))), 2)
@@ -1142,7 +1142,7 @@ KPI_ORACLES["disjunctive_promo_revenue"] = """
            AND l_quantity BETWEEN 20 AND 30)
 """
 
-KPI_ORACLES["excess_volume_suppliers"] = """
+ORACLES["excess_volume_suppliers"] = """
     WITH ps AS (
         SELECT l_partkey, l_suppkey, SUM(l_quantity) AS _qty
         FROM lineitem
@@ -1169,7 +1169,7 @@ KPI_ORACLES["excess_volume_suppliers"] = """
     ORDER BY 3 DESC, 1
 """
 
-KPI_ORACLES["waiting_orders_suppliers"] = """
+ORACLES["waiting_orders_suppliers"] = """
     WITH ps AS (
         SELECT l_orderkey, l_suppkey,
                MAX(CASE WHEN l_shipdate > o_orderdate + INTERVAL 60 DAY
@@ -1194,7 +1194,7 @@ KPI_ORACLES["waiting_orders_suppliers"] = """
     LIMIT 20
 """
 
-KPI_ORACLES["supplier_part_diversity"] = """
+ORACLES["supplier_part_diversity"] = """
     SELECT p_brand, p_type, p_size,
            COUNT(DISTINCT l_suppkey) AS supplier_cnt
     FROM (SELECT DISTINCT l_partkey, l_suppkey FROM lineitem)
@@ -1208,7 +1208,7 @@ KPI_ORACLES["supplier_part_diversity"] = """
     ORDER BY 4 DESC, 1, 2, 3
 """
 
-KPI_ORACLES["shipping_delay_priority_split"] = """
+ORACLES["shipping_delay_priority_split"] = """
     SELECT CASE WHEN date_diff('day', o_orderdate, l_shipdate) < 30
                 THEN 'FAST' ELSE 'SLOW' END AS delay_bucket,
            CAST(SUM(CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH')
@@ -1222,7 +1222,7 @@ KPI_ORACLES["shipping_delay_priority_split"] = """
     ORDER BY 1
 """
 
-KPI_ORACLES["parts_copurchase_triangles"] = """
+ORACLES["parts_copurchase_triangles"] = """
     WITH und AS (
         SELECT a.pk AS u, b.pk AS v
         FROM (SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk FROM lineitem) a
@@ -1301,10 +1301,10 @@ def _dense_peel_sql(rounds: int = 4) -> str:
     )
 
 
-KPI_ORACLES["parts_dense_community"] = _dense_peel_sql()
+ORACLES["parts_dense_community"] = _dense_peel_sql()
 
 
-KPI_ORACLES["revenue_seasonality"] = """
+ORACLES["revenue_seasonality"] = """
     WITH monthly AS (
         SELECT strftime(o_orderdate, '%Y-%m') AS month,
                CAST(ROUND(SUM(CAST(o_totalprice AS DECIMAL(18,2))), 2)
@@ -1413,16 +1413,16 @@ def _markov_attribution_sql(steps: int = 6) -> str:
     return "".join(parts)
 
 
-KPI_ORACLES["events_markov_attribution"] = _markov_attribution_sql()
+ORACLES["events_markov_attribution"] = _markov_attribution_sql()
 
 
-# market_basket_rules (r13): items are part BRANDS (part-level
+# market_basket_rules: items are part BRANDS (part-level
 # triples are support-1 at sf0.1 — no fixed floor can gate them) and
 # the support floor is RELATIVE: greatest(2, ceil(α·n_orders)) with
 # α = kpi.BASKET_RULES_MIN_SUPPORT, mirrored as a literal here. The
 # e0 suffix forces a DOUBLE literal (DuckDB would otherwise parse
 # 0.0035 as DECIMAL and ceil in decimal arithmetic).
-KPI_ORACLES["market_basket_rules"] = """
+ORACLES["market_basket_rules"] = """
     WITH items AS (
         SELECT DISTINCT l.l_orderkey AS ok, p.p_brand AS it
         FROM lineitem l JOIN part p ON l.l_partkey = p.p_partkey
@@ -1463,7 +1463,7 @@ KPI_ORACLES["market_basket_rules"] = """
 """
 
 
-KPI_ORACLES["events_key_skew_report"] = """
+ORACLES["events_key_skew_report"] = """
     WITH per_key AS (
         SELECT user_id, count(*) AS c FROM events GROUP BY 1
     ),
@@ -1501,7 +1501,7 @@ KPI_ORACLES["events_key_skew_report"] = """
 """
 
 
-KPI_ORACLES["session_path_mining"] = """
+ORACLES["session_path_mining"] = """
     WITH flagged AS (
         SELECT user_id, ts, event_id, event_type,
                CASE WHEN epoch_us(ts) - lag(epoch_us(ts)) OVER w

@@ -87,7 +87,7 @@ def events_range_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-TEMPORAL_ORACLES: dict[str, str] = {
+ORACLES: dict[str, str] = {
     # LATERAL top-1 per purchase, tie-break (ts DESC, view_id DESC) —
     # the same winner asof_join's window order picks.
     "events_asof_attribution": """
@@ -173,7 +173,7 @@ def events_view_to_purchase_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-TEMPORAL_ORACLES["events_view_to_purchase_asof"] = """
+ORACLES["events_view_to_purchase_asof"] = """
     WITH v AS (
         SELECT event_id AS view_id, user_id, ts
         FROM events WHERE event_type = 'view'

@@ -18,7 +18,13 @@ from ecommerce_realtime_pipeline_spark.operators import multimodal as MM
 from ecommerce_realtime_pipeline_spark.operators import similarity as SIM
 from ecommerce_realtime_pipeline_spark.operators import text as TX
 from ecommerce_realtime_pipeline_spark.plans import fixtures as FX
-from ecommerce_realtime_pipeline_spark.plans import llm
+from ecommerce_realtime_pipeline_spark.plans import (
+    ann,
+    dedup,
+    multimodal,
+    textsearch,
+    training,
+)
 
 SF = "/root/testdata/sf0.001"
 
@@ -32,8 +38,8 @@ def test_minhash_lsh_equals_exact_jaccard(spark):
     """The LSH-banded path must recover exactly the inverted-index
     exact-Jaccard pairs on this corpus (clean separation ⇒ recall 1);
     this is what licenses sharing the oracle between the two entries."""
-    exact = {(r[0], r[1], r[2]) for r in llm.docs_neardup_jaccard(spark, SF).collect()}
-    lsh = {(r[0], r[1], r[2]) for r in llm.docs_neardup_minhash(spark, SF).collect()}
+    exact = {(r[0], r[1], r[2]) for r in dedup.docs_neardup_jaccard(spark, SF).collect()}
+    lsh = {(r[0], r[1], r[2]) for r in dedup.docs_neardup_minhash(spark, SF).collect()}
     assert exact == lsh
     assert len(exact) > 0  # corpus carries deliberate near-dups
 
@@ -42,7 +48,7 @@ def test_simhash_pairs_subset_of_neardups(spark, docs):
     """SimHash(hamming ≤ 3) must be high-precision: every emitted pair
     is a true near-dup (member of the exact-Jaccard pair set), with
     recall ≥ 0.8 on this corpus — on the production (xxhash64) path."""
-    exact = {(r[0], r[1]) for r in llm.docs_neardup_jaccard(spark, SF).collect()}
+    exact = {(r[0], r[1]) for r in dedup.docs_neardup_jaccard(spark, SF).collect()}
     sim = {(r[0], r[1]) for r in DD.simhash_pairs(docs, max_hamming=3).collect()}
     assert sim <= exact
     assert len(sim) / len(exact) >= 0.8
@@ -58,7 +64,7 @@ def test_simhash_portable_and_fast_paths_agree(spark, docs):
     Jaccard near-dup set (no hash introduces a false positive), both
     keep recall ≥ 0.8, and their overlap Jaccard is ≥ 0.9 (the hash
     swap only perturbs the boundary, never the bulk)."""
-    exact = {(r[0], r[1]) for r in llm.docs_neardup_jaccard(spark, SF).collect()}
+    exact = {(r[0], r[1]) for r in dedup.docs_neardup_jaccard(spark, SF).collect()}
     fast = {
         (r[0], r[1])
         for r in DD.simhash_pairs(docs, max_hamming=3).collect()
@@ -200,8 +206,8 @@ def test_mixture_weights_temperature_flattening(spark, monkeypatch):
         "doc_id long, text string, source string",
     )
     monkeypatch.setattr(CAT, "load_table", lambda s, d, t: docs)
-    monkeypatch.setattr(llm, "load_table", lambda s, d, t: docs)
-    out = {r["source"]: r for r in llm.docs_mixture_weights(spark, "x").collect()}
+    monkeypatch.setattr(training, "load_table", lambda s, d, t: docs)
+    out = {r["source"]: r for r in training.docs_mixture_weights(spark, "x").collect()}
     token_share = 100 / 10100
     assert out["small"]["mix_weight"] > token_share  # flattened up
     expected = 100**0.7 / (100**0.7 + 10000**0.7)
@@ -283,9 +289,9 @@ def test_knn_lsh_recall_floor(spark):
     """Multi-table sign-LSH recall ≥ 0.6 vs brute force even on this
     isotropic (worst-case) corpus; clustered real embeddings do better."""
     bf, lsh = {}, {}
-    for r in llm.emb_knn_bruteforce(spark, SF).collect():
+    for r in ann.emb_knn_bruteforce(spark, SF).collect():
         bf.setdefault(r["query_id"], set()).add(r["neighbor_id"])
-    for r in llm.emb_knn_lsh(spark, SF).collect():
+    for r in ann.emb_knn_lsh(spark, SF).collect():
         lsh.setdefault(r["query_id"], set()).add(r["neighbor_id"])
     recalls = [len(bf[q] & lsh.get(q, set())) / len(bf[q]) for q in bf]
     assert sum(recalls) / len(recalls) >= 0.6
@@ -296,9 +302,9 @@ def test_knn_ivf_recall_floor(spark):
     (the worst case — scan fraction ~25%); clustered embeddings do far
     better. Exact rerank makes every returned neighbor's cos_sim true."""
     bf, ivf = {}, {}
-    for r in llm.emb_knn_bruteforce(spark, SF).collect():
+    for r in ann.emb_knn_bruteforce(spark, SF).collect():
         bf.setdefault(r["query_id"], set()).add(r["neighbor_id"])
-    for r in llm.emb_knn_ivf(spark, SF).collect():
+    for r in ann.emb_knn_ivf(spark, SF).collect():
         ivf.setdefault(r["query_id"], set()).add(r["neighbor_id"])
     recalls = [len(bf[q] & ivf.get(q, set())) / len(bf[q]) for q in bf]
     assert sum(recalls) / len(recalls) >= 0.5
@@ -311,9 +317,9 @@ def test_knn_pq_recall_floor(spark):
     and clustered real embeddings only improve this. Exact rerank
     keeps every returned cos_sim true."""
     bf, pq = {}, {}
-    for r in llm.emb_knn_bruteforce(spark, SF).collect():
+    for r in ann.emb_knn_bruteforce(spark, SF).collect():
         bf.setdefault(r["query_id"], set()).add(r["neighbor_id"])
-    for r in llm.emb_knn_pq(spark, SF).collect():
+    for r in ann.emb_knn_pq(spark, SF).collect():
         pq.setdefault(r["query_id"], set()).add(r["neighbor_id"])
     recalls = [len(bf[q] & pq.get(q, set())) / len(bf[q]) for q in bf]
     assert sum(recalls) / len(recalls) >= 0.6
@@ -324,9 +330,9 @@ def test_knn_ivfpq_recall_floor(spark):
     the two approximation stages compound, so the floor sits between
     plain-IVF and plain-PQ — ≥0.5 mean recall on isotropic vectors."""
     bf, iq = {}, {}
-    for r in llm.emb_knn_bruteforce(spark, SF).collect():
+    for r in ann.emb_knn_bruteforce(spark, SF).collect():
         bf.setdefault(r["query_id"], set()).add(r["neighbor_id"])
-    for r in llm.emb_knn_ivfpq(spark, SF).collect():
+    for r in ann.emb_knn_ivfpq(spark, SF).collect():
         iq.setdefault(r["query_id"], set()).add(r["neighbor_id"])
     recalls = [len(bf[q] & iq.get(q, set())) / len(bf[q]) for q in bf]
     assert sum(recalls) / len(recalls) >= 0.5
@@ -340,7 +346,7 @@ def _planted_recall_fixture(spark):
     retrieval must put the planted copy in its original's top-k.
     Returns (planted corpus, query vectors = the originals, n_queries,
     the planted delta batch alone)."""
-    from ecommerce_realtime_pipeline_spark.plans.llm import _with_planted_dups
+    from ecommerce_realtime_pipeline_spark.plans.ann import _with_planted_dups
 
     emb = load_table(spark, SF, "embeddings")
     corpus = _with_planted_dups(emb)
@@ -502,7 +508,7 @@ def test_kmeans_refine_partition_independent(spark):
 
 
 def test_knn_bruteforce_is_top_k_sound(spark):
-    out = llm.emb_knn_bruteforce(spark, SF)
+    out = ann.emb_knn_bruteforce(spark, SF)
     per_q = out.groupBy("query_id").agg(
         F.count("*").alias("n"), F.max("rank").alias("maxr")
     )
@@ -527,7 +533,7 @@ def test_multimodal_features_match_python(spark):
 
 
 def test_multimodal_metadata_consistent(spark, docs):
-    out = llm.mm_feature_summary(spark, SF).collect()
+    out = multimodal.mm_feature_summary(spark, SF).collect()
     assert len(out) == 20  # one row per source
     assert all(r["n_meta_mismatch"] == 0 for r in out)
 
@@ -718,7 +724,7 @@ def test_cosine_neardup_finds_exactly_planted_pairs(spark):
     """Non-vacuous recall gate: the LSH self-join must recover every
     planted perturbed duplicate (cos ≥ 0.9428 by construction) and
     nothing else (natural max cos ≈ 0.51)."""
-    out = {(r["vec_a"], r["vec_b"]) for r in llm.emb_cosine_neardup(spark, SF).collect()}
+    out = {(r["vec_a"], r["vec_b"]) for r in ann.emb_cosine_neardup(spark, SF).collect()}
     emb = load_table(spark, SF, "embeddings")
     planted_ids = [r[0] for r in emb.filter(F.col("vec_id") % 10 == 0).select("vec_id").collect()]
     assert len(planted_ids) > 0
@@ -832,7 +838,7 @@ def test_semdedup_drops_are_planted_copies(spark):
     exactly its source (naturals max out near cos 0.51, far under the
     0.9 threshold), i.e. (vec_id = v + 1e6, first_match = v,
     n_matches = 1); and within-cell recall must be positive."""
-    drops = llm.emb_semdedup(spark, SF).collect()
+    drops = ann.emb_semdedup(spark, SF).collect()
     assert len(drops) > 0
     for r in drops:
         assert r["vec_id"] >= 1_000_000
@@ -845,10 +851,10 @@ def test_semdedup_subset_of_lsh_neardups(spark):
     finds (the published boundary-miss mode) — never invent one."""
     lsh_pairs = {
         (r["vec_a"], r["vec_b"])
-        for r in llm.emb_cosine_neardup(spark, SF).collect()
+        for r in ann.emb_cosine_neardup(spark, SF).collect()
     }
     sem_pairs = {
-        (r["first_match"], r["vec_id"]) for r in llm.emb_semdedup(spark, SF).collect()
+        (r["first_match"], r["vec_id"]) for r in ann.emb_semdedup(spark, SF).collect()
     }
     assert sem_pairs <= lsh_pairs
 
@@ -857,7 +863,7 @@ def test_bpe_encode_fertility_bounds(spark):
     """Per-source BPE fertility must be ≥ 1 unit/word and strictly
     below chars+marker (the merges must actually compress), and the
     unit totals must be consistent with the word totals."""
-    rows = llm.docs_bpe_encode(spark, SF).collect()
+    rows = training.docs_bpe_encode(spark, SF).collect()
     assert len(rows) > 0
     for r in rows:
         assert r["n_docs"] > 0 and r["total_words"] > 0
@@ -865,7 +871,7 @@ def test_bpe_encode_fertility_bounds(spark):
         assert r["total_units"] >= r["total_words"]  # ≥ 1 unit per word
     # merges compress: the corpus-wide mean must beat the unmerged
     # baseline (chars + </w> per word), by a wide margin on text
-    words = llm._corpus_words(spark, SF)
+    words = training._corpus_words(spark, SF)
     base = words.select(
         F.sum(F.length("word") * F.col("freq")).alias("chars"),
         F.sum((F.lit(1)) * F.col("freq")).alias("n"),
@@ -883,12 +889,12 @@ def test_quality_lr_beats_majority_baseline(spark):
     """The trained classifier must actually LEARN: training accuracy
     strictly above the majority-class baseline (otherwise GD collapsed
     to the constant predictor and the query is decoration)."""
-    row = llm.docs_quality_lr(spark, SF).collect()[0]
+    row = training.docs_quality_lr(spark, SF).collect()[0]
     docs = load_table(spark, SF, "documents")
     pos_rate = docs.select(
         F.avg(
             F.when(
-                F.size(F.split("text", " ")) >= llm.LR_MIN_TOKENS, 1.0
+                F.size(F.split("text", " ")) >= training.LR_MIN_TOKENS, 1.0
             ).otherwise(0.0)
         )
     ).collect()[0][0]
@@ -905,8 +911,8 @@ def test_logistic_train_partition_invariant(spark):
     from ecommerce_realtime_pipeline_spark.operators import model as MODEL
 
     docs = load_table(spark, SF, "documents")
-    feats = llm._lr_features(docs)
-    cols = llm.LR_FEATURES
+    feats = training._lr_features(docs)
+    cols = training.LR_FEATURES
     w1 = MODEL.logistic_train(feats.coalesce(1), cols, "y", 2, 4.0).collect()[0]
     w32 = MODEL.logistic_train(feats.repartition(32), cols, "y", 2, 4.0).collect()[0]
     assert tuple(w1) == tuple(w32)
@@ -918,7 +924,7 @@ def test_semdedup_fast_path_same_contract(spark):
     pairs dropped (cells change shape, correctness doesn't), and the
     drop set is a subset of the unbounded LSH near-dup pairs."""
     emb = load_table(spark, SF, "embeddings")
-    corpus = llm._with_planted_dups(emb).localCheckpoint()
+    corpus = ann._with_planted_dups(emb).localCheckpoint()
     drops = SIM.semdedup_drops(
         corpus, threshold=0.9, train=emb, max_exact_cells=4, n=corpus.count()
     ).collect()
@@ -928,7 +934,7 @@ def test_semdedup_fast_path_same_contract(spark):
         assert r["first_match"] == r["vec_id"] - 1_000_000
     lsh_pairs = {
         (r["vec_a"], r["vec_b"])
-        for r in llm.emb_cosine_neardup(spark, SF).collect()
+        for r in ann.emb_cosine_neardup(spark, SF).collect()
     }
     assert {(r["first_match"], r["vec_id"]) for r in drops} <= lsh_pairs
 
@@ -937,10 +943,10 @@ def test_cluster_representatives_pick_longest_member(spark, docs):
     """Every representative must be a member of its cluster with the
     maximal n_chars (ties → smallest doc_id), and the bookkeeping
     (n_members/n_dropped) must reconcile with the cluster table."""
-    reps = llm.docs_cluster_representatives(spark, SF).collect()
+    reps = dedup.docs_cluster_representatives(spark, SF).collect()
     clusters = {
         r["doc_id"]: r["cluster_id"]
-        for r in llm.docs_neardup_clusters_lss(spark, SF).collect()
+        for r in dedup.docs_neardup_clusters_lss(spark, SF).collect()
     }
     chars = {r["doc_id"]: r["n_chars"] for r in docs.select("doc_id", "n_chars").collect()}
     assert len(reps) > 0
@@ -961,8 +967,8 @@ def test_persisted_ivf_equals_in_session(spark):
     """write→load→serve must return bit-identical rows to the
     in-session IVF (same quantizer): the persisted path is a storage
     layout, not a semantic change."""
-    mem = [tuple(r) for r in llm.emb_knn_ivf(spark, SF).collect()]
-    disk = [tuple(r) for r in llm.emb_knn_ivf_persisted(spark, SF).collect()]
+    mem = [tuple(r) for r in ann.emb_knn_ivf(spark, SF).collect()]
+    disk = [tuple(r) for r in ann.emb_knn_ivf_persisted(spark, SF).collect()]
     assert sorted(mem) == sorted(disk) and len(mem) > 0
 
 
@@ -1012,11 +1018,11 @@ def test_deleted_fixture_memo_correctness(spark, tmp_path):
     )
 
     docs = load_table(spark, SF, "documents")
-    p1 = llm._persisted_text_deleted_path(spark, SF, docs)
+    p1 = FX.persisted_text_deleted_path(spark, SF, docs)
     m1 = indexfmt.read_manifest(p1, TEXT_INDEX_FORMAT)
     assert int(m1["version"]) == 2 and m1.get("tombstones")
     mtime = os.path.getmtime(os.path.join(p1, indexfmt.MANIFEST))
-    p2 = llm._persisted_text_deleted_path(spark, SF, docs)
+    p2 = FX.persisted_text_deleted_path(spark, SF, docs)
     assert p2 == p1  # memo hit
     assert os.path.getmtime(os.path.join(p1, indexfmt.MANIFEST)) == mtime
     # v1 = full pre-delete build: no tombstones in the retained gen
@@ -1025,12 +1031,12 @@ def test_deleted_fixture_memo_correctness(spark, tmp_path):
     # different corpus stamp → different fixture
     alt = tmp_path / "alt_sf"
     shutil.copytree(SF, alt)
-    p3 = llm._persisted_text_deleted_path(spark, str(alt), docs)
+    p3 = FX.persisted_text_deleted_path(spark, str(alt), docs)
     assert p3 != p1
     # a crashed/half-built fixture (wrong generation shape) rebuilds
     shutil.rmtree(p3)
     os.makedirs(p3)
-    p4 = llm._persisted_text_deleted_path(spark, str(alt), docs)
+    p4 = FX.persisted_text_deleted_path(spark, str(alt), docs)
     assert p4 == p3
     m4 = indexfmt.read_manifest(p4, TEXT_INDEX_FORMAT)
     assert int(m4["version"]) == 2 and m4.get("tombstones")
@@ -1038,15 +1044,13 @@ def test_deleted_fixture_memo_correctness(spark, tmp_path):
 
 
 def test_merged_fixture_memo_and_mutable_copy(spark):
-    """The r13 merged/drifted shared fixtures: (a) build-once memo —
+    """The merged/drifted shared fixtures: (a) build-once memo —
     a second call returns the same path with the manifest untouched;
     (b) the pinned 2-segment v2 no-tombstone shape; (c)
-    `_mutable_index_copy` yields a relocatable byte-equal index whose
+    `mutable_index_copy` yields a relocatable byte-equal index whose
     MUTATION (compact / requantize) leaves the shared base untouched
     — the property that licenses sharing one base across the whole
     mutation family."""
-    import shutil
-
     from ecommerce_realtime_pipeline_spark.operators import indexfmt
     from ecommerce_realtime_pipeline_spark.operators.text import (
         TEXT_INDEX_FORMAT,
@@ -1055,7 +1059,7 @@ def test_merged_fixture_memo_and_mutable_copy(spark):
     )
 
     docs = load_table(spark, SF, "documents")
-    base = llm._merged_text_path(spark, SF, docs)
+    base = FX.merged_text_path(spark, SF, docs)
     m = indexfmt.read_manifest(base, TEXT_INDEX_FORMAT)
     assert (
         int(m["version"]) == 2
@@ -1063,7 +1067,7 @@ def test_merged_fixture_memo_and_mutable_copy(spark):
         and not m.get("tombstones")
     )
     mtime = os.path.getmtime(os.path.join(base, indexfmt.MANIFEST))
-    assert llm._merged_text_path(spark, SF, docs) == base  # memo hit
+    assert FX.merged_text_path(spark, SF, docs) == base  # memo hit
     assert os.path.getmtime(os.path.join(base, indexfmt.MANIFEST)) == mtime
 
     def _content(p):
@@ -1075,8 +1079,7 @@ def test_merged_fixture_memo_and_mutable_copy(spark):
         )
 
     before = _content(base)
-    tmp, copy = llm._mutable_index_copy(base, "eng_test_copy_")
-    try:
+    with FX.mutable_index_copy(base, "eng_test_copy_") as copy:
         assert compact_text_index(spark, copy) == 2
         mc = indexfmt.read_manifest(copy, TEXT_INDEX_FORMAT)
         assert int(mc["version"]) == 3 and len(mc["segments"]) == 1
@@ -1088,18 +1091,17 @@ def test_merged_fixture_memo_and_mutable_copy(spark):
         assert (
             os.path.getmtime(os.path.join(base, indexfmt.MANIFEST)) == mtime
         )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+    assert not os.path.exists(copy)  # the copy is removed on exit
     # the drifted IVF fixture pins the same shape
     emb = load_table(spark, SF, "embeddings")
-    dbase = llm._ivf_drifted_path(spark, SF, emb)
+    dbase = FX.ivf_drifted_path(spark, SF, emb)
     md = indexfmt.read_manifest(dbase, SIM.IVF_INDEX_FORMAT)
     assert (
         int(md["version"]) == 2
         and len(md["segments"]) == 2
         and not md.get("tombstones")
     )
-    assert llm._ivf_drifted_path(spark, SF, emb) == dbase
+    assert FX.ivf_drifted_path(spark, SF, emb) == dbase
 
 
 # -- HLL sketch -------------------------------------------------------------
@@ -1363,18 +1365,18 @@ class TestChunkTokens:
 
 
 def test_distinctive_terms_shape_and_monotone_rank(spark):
-    out = llm.docs_distinctive_terms(spark, SF).collect()
+    out = training.docs_distinctive_terms(spark, SF).collect()
     by_source = {}
     for r in out:
         by_source.setdefault(r["source"], []).append(r)
     for source, rows in by_source.items():
         assert [r["rank"] for r in rows] == list(
-            range(1, llm.DISTINCTIVE_TOP_K + 1)
+            range(1, training.DISTINCTIVE_TOP_K + 1)
         ), source
         zs = [r["z"] for r in rows]
         assert zs == sorted(zs, reverse=True), source
         assert all(
-            r["n_in_source"] >= llm.DISTINCTIVE_MIN_COUNT for r in rows
+            r["n_in_source"] >= training.DISTINCTIVE_MIN_COUNT for r in rows
         ), source
 
 
@@ -1393,7 +1395,7 @@ def test_distinctive_terms_planted_token_wins(spark, tmp_path):
     path = str(tmp_path / "documents.parquet")
     docs.repartition(1).write.parquet(path)
     # the query loads <sf_dir>/documents.parquet — point it at the plant
-    out = llm.docs_distinctive_terms(spark, str(tmp_path)).collect()
+    out = training.docs_distinctive_terms(spark, str(tmp_path)).collect()
     top_plant = next(
         r for r in out if r["source"] == "src_plant" and r["rank"] == 1
     )
@@ -1401,7 +1403,7 @@ def test_distinctive_terms_planted_token_wins(spark, tmp_path):
 
 
 def test_source_overlap_matrix_symmetric_counts(spark):
-    out = llm.docs_source_overlap_matrix(spark, SF).collect()
+    out = training.docs_source_overlap_matrix(spark, SF).collect()
     shared = {(r["source_a"], r["source_b"]): r["n_shared"] for r in out}
     for (a, b), n in shared.items():
         assert a != b
@@ -1426,19 +1428,19 @@ def test_label_outliers_planted_mislabel_is_top(spark, tmp_path):
     spark.createDataFrame(
         rows, "vec_id long, embedding array<float>, label int"
     ).repartition(1).write.parquet(str(tmp_path / "embeddings.parquet"))
-    out = llm.emb_label_outliers(spark, str(tmp_path)).collect()
+    out = ann.emb_label_outliers(spark, str(tmp_path)).collect()
     assert out[0]["vec_id"] == 999 and out[0]["label"] == 0
     assert out[0]["centroid_dist"] > 5 * out[1]["centroid_dist"]
     assert out[0]["n_label"] == 21
 
 
 def test_hard_negatives_cross_label_and_ranked(spark):
-    out = llm.emb_hard_negatives(spark, SF).collect()
+    out = ann.emb_hard_negatives(spark, SF).collect()
     assert out, "anchor set must mine at least one hard negative"
     per_q = {}
     for r in out:
         assert r["query_label"] != r["neighbor_label"]
-        assert 1 <= r["rank"] <= llm.HARD_NEG_K
+        assert 1 <= r["rank"] <= ann.HARD_NEG_K
         per_q.setdefault(r["query_id"], []).append((r["rank"], r["cos_sim"]))
     for q, rows in per_q.items():
         rows.sort()
@@ -1447,10 +1449,10 @@ def test_hard_negatives_cross_label_and_ranked(spark):
 
 
 def test_ann_recall_eval_bounds_and_floor(spark):
-    out = llm.emb_ann_recall(spark, SF).collect()
+    out = ann.emb_ann_recall(spark, SF).collect()
     assert len(out) == 10  # one row per query vector
     assert all(0.0 <= r["recall_at_k"] <= 1.0 for r in out)
-    assert all(r["n_hits"] == round(r["recall_at_k"] * llm.KNN_K) for r in out)
+    assert all(r["n_hits"] == round(r["recall_at_k"] * ann.KNN_K) for r in out)
     mean = sum(r["recall_at_k"] for r in out) / len(out)
     assert mean >= 0.8  # the documented isotropic-corpus floor for 4x12 LSH
 
@@ -1779,16 +1781,16 @@ def test_hybrid_rrf_fusion_properties(spark):
     one leg, the score is exactly Σ 1/(60+rank) over present legs
     (recomputed row by row), and the list is sorted by (score desc,
     doc_id) — rank-only fusion, no score calibration."""
-    rows = llm.docs_hybrid_search_rrf(spark, SF).collect()
+    rows = textsearch.docs_hybrid_search_rrf(spark, SF).collect()
     assert len(rows) == 10
     prev = None
     for r in rows:
         assert r["lex_rank"] is not None or r["sem_rank"] is not None
         want = 0.0
         if r["lex_rank"] is not None:
-            want += 1.0 / (llm.RRF_K + r["lex_rank"])
+            want += 1.0 / (textsearch.RRF_K + r["lex_rank"])
         if r["sem_rank"] is not None:
-            want += 1.0 / (llm.RRF_K + r["sem_rank"])
+            want += 1.0 / (textsearch.RRF_K + r["sem_rank"])
         assert abs(r["rrf_score"] - round(want, 6)) < 1e-9
         if prev is not None:
             assert (r["rrf_score"], -r["doc_id"]) <= prev
@@ -2306,7 +2308,7 @@ def test_image_ahash_neardup_finds_planted_pairs(spark):
     agree on it via the exact verify), every detected pair is within
     the threshold, and detection survives the PPM/BMP codec boundary
     (pair members alternate formats)."""
-    pairs = llm.mm_image_ahash_neardup(spark, SF).collect()
+    pairs = multimodal.mm_image_ahash_neardup(spark, SF).collect()
     planted = [
         r for r in pairs
         if r["doc_b"] == r["doc_a"] + 1 and r["doc_a"] % 10 == 0
@@ -2345,9 +2347,9 @@ def test_knn_graph_beam_recall_floor(spark):
     graph variant measured 0.06-0.1: cell-disconnected graphs strand
     the beam — the regression this floor guards.)"""
     bf, gb = {}, {}
-    for r in llm.emb_knn_bruteforce(spark, SF).collect():
+    for r in ann.emb_knn_bruteforce(spark, SF).collect():
         bf.setdefault(r["query_id"], set()).add(r["neighbor_id"])
-    for r in llm.emb_knn_graph_beam(spark, SF).collect():
+    for r in ann.emb_knn_graph_beam(spark, SF).collect():
         gb.setdefault(r["query_id"], set()).add(r["neighbor_id"])
     recalls = [len(bf[q] & gb.get(q, set())) / len(bf[q]) for q in bf]
     assert sum(recalls) / len(recalls) >= 0.4
@@ -2418,11 +2420,11 @@ def test_max_deleted_ratio_counts_distinct_live_dead(spark, tmp_path):
 def _bm25_rows(postings, dfreq, stats):
     """BM25 over the fixed query terms, from pre-resolved index
     handles — the serving composition of docs_bm25_from_index."""
-    res = llm._bm25_rank(
-        postings.filter(F.col("token").isin(*llm.BM25_TERMS)).select(
+    res = textsearch.bm25_rank(
+        postings.filter(F.col("token").isin(*textsearch.BM25_TERMS)).select(
             "doc_id", "token", "tf", "dl"
         ),
-        dfreq.filter(F.col("token").isin(*llm.BM25_TERMS)),
+        dfreq.filter(F.col("token").isin(*textsearch.BM25_TERMS)),
         stats,
     )
     return sorted(tuple(r) for r in res.collect())

@@ -848,10 +848,10 @@ def test_ivf_health_report_reads_zero_data_columns(spark, sf_dir):
     vector I/O: counting rows per cell prunes every data column (the
     inline vectors are the index's bulk), so each segment FileScan
     shows ReadSchema: struct<> with only the cell partition key."""
-    from ecommerce_realtime_pipeline_spark.plans import llm
+    from ecommerce_realtime_pipeline_spark.plans import ann
 
     plan = (
-        llm.emb_ivf_index_health(spark, sf_dir)
+        ann.emb_ivf_index_health(spark, sf_dir)
         ._jdf.queryExecution()
         .executedPlan()
         .toString()

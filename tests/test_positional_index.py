@@ -521,9 +521,9 @@ def test_proximity_boost_position_leg_is_topk_bounded(spark):
     by a BROADCAST semi-join BEFORE the band join — bounded by k,
     never a corpus-scale position scan — with no cartesian product
     anywhere."""
-    from ecommerce_realtime_pipeline_spark.plans import llm
+    from ecommerce_realtime_pipeline_spark.plans import textsearch
 
-    df = llm.docs_bm25_proximity_boost_indexed(
+    df = textsearch.docs_bm25_proximity_boost_indexed(
         spark, "/root/testdata/sf0.001"
     )
     plan = df._jdf.queryExecution().executedPlan().toString()

@@ -1,6 +1,6 @@
 """Unit tests for tools/rotate_window.py — the generator of the
-driver's 50-query verification window (round-8 verdict task 7). The
-ordering rules are load-bearing (a mis-rotation leaves stale driver
+driver's 50-query verification window — and for the name-only
+registry it writes. The ordering rules are load-bearing (a mis-rotation leaves stale driver
 evidence), so they get direct coverage: evidence folding takes the
 LATEST round per query, the window layout puts closers last and
 warmers before their in-window dependents."""
@@ -61,20 +61,46 @@ def test_order_window_without_warmer_is_stable():
 
 
 def test_registry_matches_live_entrypoint():
-    """The tool's registry view must cover the live queries() dict
-    exactly — a drift here would rotate phantom names."""
+    """The tool's registry view must be the live queries() names in
+    registration order — a drift here would rotate phantom names."""
     sys.path.insert(0, rotate_window.REPO)
     import __spark_entry__ as entry
 
-    reg = rotate_window.registry()
-    assert set(reg) == set(entry.queries())
-    # rendered references use the entrypoint's own module aliases
-    assert all("." in ref for ref in reg.values())
+    assert rotate_window.registry() == list(entry.queries())
+
+
+def test_registry_integrity():
+    """Every registered name resolves to exactly one plain function
+    that a ``PLAN_MODULES`` module defines under that name, and every
+    query has exactly one oracle: ``test_oracle_diff`` parametrizes
+    over the oracle keys, so a query that lost its oracle would
+    otherwise silently leave the gate."""
+    import inspect
+
+    sys.path.insert(0, rotate_window.REPO)
+    import __spark_entry__ as entry
+    from ecommerce_realtime_pipeline_spark.plans._registry_order import (
+        REGISTRY_ORDER,
+    )
+
+    module_names = {m.__name__ for m in entry.PLAN_MODULES}
+    for name in REGISTRY_ORDER:
+        definers = [
+            m.__name__
+            for m in entry.PLAN_MODULES
+            if inspect.isfunction(getattr(m, name, None))
+            and getattr(m, name).__module__ == m.__name__
+        ]
+        assert len(definers) == 1, (name, definers)
+        fn = entry.queries()[name]
+        assert fn.__name__ == name and fn.__module__ in module_names
+    assert len(REGISTRY_ORDER) == len(set(REGISTRY_ORDER)) == 213
+    assert set(entry.oracle_sql()) == set(entry.queries())
 
 
 def test_docstring_carries_generated_rotation_summary():
-    """Round-9 verdict task 7: the queries() docstring narrative is
-    tool-emitted, so it must carry the generated ``round-N window:``
+    """The queries() docstring narrative is tool-emitted, so it must
+    carry the generated ``round-N window:``
     composition line — and while the evidence state still matches
     generation time (no newer CORRECTNESS artifact has landed), the
     line must equal the summary recomputed FROM THE LIVE DICT, so the
@@ -114,7 +140,7 @@ def test_plan_rotation_heads_never_checked_and_respects_new():
     window tail), unknown names are dropped, and window+tail cover
     the registry exactly."""
     green = (1, True)
-    reg = {f"q{i:03d}": f"kpi.q{i:03d}" for i in range(60)}
+    reg = [f"q{i:03d}" for i in range(60)]
     ev = {n: green for n in reg if n not in ("q005", "q006")}
     window, tail = rotate_window.plan_rotation(
         ev, reg, new=["q007", "nope"], forced=["q059"]
@@ -141,7 +167,7 @@ def test_plan_rotation_invariants_hold_over_random_evidence():
         "monitoring_b",
         "pipeline_c",
     ]
-    reg = {n: f"kpi.{n}" for n in names}
+    reg = names
 
     @settings(max_examples=50, deadline=None)
     @given(
@@ -177,17 +203,15 @@ def test_plan_rotation_invariants_hold_over_random_evidence():
 
 def test_render_module_round_trips_the_order(tmp_path):
     """The generated _registry_order.py must exec cleanly and carry
-    window+tail verbatim (order preserved), with the narrative's
-    summary line matching the emitted window — the one-file-diff
-    rotation contract (round-10 verdict task 8)."""
+    window+tail verbatim (order preserved) as bare names, with the
+    narrative's summary line matching the emitted window — the
+    one-file-diff rotation contract."""
     ev = {"a": (3, True), "b": (2, True)}
-    reg = {"a": "kpi.a", "b": "llm.b", "c": "gen.c"}
     window, tail = ["b", "a"], ["c"]
-    src = rotate_window.render_module(window, tail, ev, reg, 11)
+    src = rotate_window.render_module(window, tail, ev, 11)
     ns: dict = {}
     exec(compile(src, "_registry_order.py", "exec"), ns)
-    assert [n for n, _ in ns["REGISTRY_ORDER"]] == window + tail
-    assert dict(ns["REGISTRY_ORDER"]) == reg
+    assert ns["REGISTRY_ORDER"] == window + tail
     assert rotate_window.window_summary(window, ev, 11) in ns["NARRATIVE"]
     assert "never-checked late registrations" in ns["NARRATIVE"]  # c has no evidence
 
@@ -202,27 +226,25 @@ def test_live_registry_order_module_matches_entrypoint():
         REGISTRY_ORDER,
     )
 
-    assert [n for n, _ in REGISTRY_ORDER] == list(entry.queries())
+    assert REGISTRY_ORDER == list(entry.queries())
 
 
 def test_validate_ref_rejects_typos_at_write_time():
-    """--register validation (r11 ADVICE): a typo'd module alias or a
-    nonexistent function must be rejected BEFORE it lands in the
-    generated _registry_order.py (where it would only surface as a
-    KeyError the next time queries() imports), and a real ref passes."""
-    assert rotate_window.validate_ref("llm.docs_bm25_search") is None
-    err = rotate_window.validate_ref("lllm.docs_bm25_search")
-    assert err and "unknown module alias" in err
-    err = rotate_window.validate_ref("llm.no_such_function_xyz")
-    assert err and "no callable" in err
+    """--register validation: a nonexistent name must be rejected
+    BEFORE it lands in the generated _registry_order.py (where it would
+    only surface as a LookupError the next time queries() imports),
+    and a real query name passes."""
+    assert rotate_window.validate_name("docs_bm25_search") is None
+    err = rotate_window.validate_name("no_such_function_xyz")
+    assert err and "no plan module defines" in err
     # a module-level non-callable (e.g. a constant) is not a query
-    err = rotate_window.validate_ref("llm.BM25_TERMS")
-    assert err and "no callable" in err
-    # wrong-but-CALLABLE attributes (r12 ADVICE): an imported helper
-    # (`load_table` — defined in catalog, imported into the plan
-    # module) or a non-function callable (`F` — a module) must be
-    # rejected at write time, not at driver run time
-    err = rotate_window.validate_ref("llm.load_table")
-    assert err and ("imported from" in err or "not a plain function" in err)
-    err = rotate_window.validate_ref("llm.DataFrame")
-    assert err and "not a plain function" in err
+    err = rotate_window.validate_name("BM25_TERMS")
+    assert err and "no plan module defines" in err
+    # wrong-but-CALLABLE names: an imported helper (`load_table` —
+    # defined in catalog, imported into every plan module) or a
+    # class (`DataFrame`) must be rejected at write time, not at
+    # driver run time
+    err = rotate_window.validate_name("load_table")
+    assert err and "no plan module defines" in err
+    err = rotate_window.validate_name("DataFrame")
+    assert err and "no plan module defines" in err

@@ -81,7 +81,7 @@ def test_pii_counts_and_redaction_exact(spark):
 
 
 def test_pack_sequences_contiguity_invariants(spark, sf_dir):
-    from ecommerce_realtime_pipeline_spark.plans.llm import (
+    from ecommerce_realtime_pipeline_spark.plans.training import (
         PACK_WINDOW,
         docs_pack_sequences,
     )

@@ -3,8 +3,8 @@
 
 The external driver verifies the FIRST 50 registered queries each
 round, so registration order IS the verification rotation. Rewriting
-the dict by hand at 189+ queries is error-prone (round-8 verdict task
-7), so this tool derives the order mechanically:
+the order by hand at 200+ queries is error-prone, so this tool derives
+it mechanically:
 
 1. Fold every ``CORRECTNESS_r*.json`` into a latest-evidence map
    (query -> last round with a driver row, plus whether it was green).
@@ -12,7 +12,7 @@ the dict by hand at 189+ queries is error-prone (round-8 verdict task
    evidence most), then everything else OLDEST EVIDENCE FIRST;
    queries named via ``--new`` (registered this round, no evidence by
    construction) are placed at the END of the non-streaming window
-   instead of the front, per the verdict's "window tail" placement.
+   instead of the front.
 3. Apply the two standing layout constraints inside the window:
    - WARMERS_BEFORE: a dependent never precedes its session-memo
      warmer (ANN artifact reuse keeps the window cheap);
@@ -22,21 +22,23 @@ the dict by hand at 189+ queries is error-prone (round-8 verdict task
    first, so the NEXT rotation can slice from the top.
 
 WRITES the generated registration-order module
-(``ecommerce_realtime_pipeline_spark/plans/_registry_order.py``) that
-``__spark_entry__.queries()`` resolves at import time — so a rotation
-is a ONE-FILE diff and hand-edits of the 200+-entry ordering are
-impossible (round-10 verdict task 8). A per-round evidence summary
-goes to stderr. Pass ``--force-window name ...`` to pin specific
-queries into the window regardless of age (e.g. rows whose code
-changed this round); ``--freeze`` re-emits the CURRENT live order
-unchanged (the refactor/migration path, no rotation); ``--stdout``
-prints the module instead of writing it."""
+(``ecommerce_realtime_pipeline_spark/plans/_registry_order.py``): a
+list of query NAMES that ``__spark_entry__.queries()`` resolves at
+import time against ``__spark_entry__.PLAN_MODULES`` — each name is
+the one plain function of that name a plan module defines, so the
+order is the only thing the generated file records, and a rotation is
+a ONE-FILE diff. A per-round evidence summary goes to stderr. Pass
+``--force-window name ...`` to pin specific queries into the window
+regardless of age (e.g. rows whose code changed this round);
+``--freeze`` re-emits the CURRENT live order unchanged (the
+refactor/migration path, no rotation); ``--register name ...`` appends
+brand-new query names (each must resolve in a plan module);
+``--stdout`` prints the module instead of writing it."""
 
 from __future__ import annotations
 
 import argparse
 import glob
-import inspect
 import json
 import os
 import re
@@ -83,62 +85,30 @@ def fold_evidence() -> dict[str, tuple[int, bool]]:
     return out
 
 
-#: the five plan modules a registration ref may name (alias -> module)
-ALIAS_MODULES = {
-    "kpi": "ecommerce_realtime_pipeline_spark.plans.kpi",
-    "dq": "ecommerce_realtime_pipeline_spark.plans.dq",
-    "llm": "ecommerce_realtime_pipeline_spark.plans.llm",
-    "gen": "ecommerce_realtime_pipeline_spark.plans.gen",
-    "temporal": "ecommerce_realtime_pipeline_spark.plans.temporal",
-}
-
-
-def registry() -> dict[str, str]:
-    """name -> 'module_alias.func' from the live registry."""
+def _entry():
     sys.path.insert(0, REPO)
     import __spark_entry__ as entry  # noqa: PLC0415
 
-    alias = {mod: a for a, mod in ALIAS_MODULES.items()}
-    out = {}
-    for name, fn in entry.queries().items():
-        out[name] = f"{alias.get(fn.__module__, fn.__module__)}.{fn.__name__}"
-    return out
+    return entry
 
 
-def validate_ref(ref: str) -> str | None:
-    """Reject a ``--register`` ref at WRITE time instead of letting a
-    typo ('lllm.foo', 'llm.nonexistent') land in the generated
-    ``_registry_order.py`` and only surface as a KeyError the next
-    time ``__spark_entry__.queries()`` imports — after the one-file
-    diff was already committed (r11 driver ADVICE). Returns an error
-    message, or None when the alias is a known plan module and the
-    function exists there and is callable."""
-    import importlib
+def registry() -> list[str]:
+    """The live registered query names, in registration order."""
+    return list(_entry().queries())
 
-    alias, _, func = ref.partition(".")
-    mod_name = ALIAS_MODULES.get(alias)
-    if mod_name is None:
-        return (
-            f"unknown module alias {alias!r} (known: "
-            f"{sorted(ALIAS_MODULES)})"
-        )
-    sys.path.insert(0, REPO)
-    mod = importlib.import_module(mod_name)
-    fn = getattr(mod, func, None)
-    if not callable(fn):
-        return f"{mod_name} has no callable {func!r}"
-    # callable is not enough (r12 ADVICE): imported helpers
-    # (`load_table`, `F`), classes, and sibling-module functions are
-    # all callable attributes of a plan module — require the ref to
-    # resolve to a FUNCTION the aliased module itself defines, so a
-    # wrong-but-callable ref fails here, not at driver run time
-    if not inspect.isfunction(fn):
-        return f"{mod_name}.{func} is not a plain function ({type(fn).__name__})"
-    if fn.__module__ != mod_name:
-        return (
-            f"{mod_name}.{func} is imported from {fn.__module__} — "
-            "register the query under its defining module's alias"
-        )
+
+def validate_name(name: str) -> str | None:
+    """Reject a ``--register`` name at WRITE time instead of letting a
+    typo land in the generated ``_registry_order.py`` and only surface
+    as a LookupError the next time ``__spark_entry__`` imports, after
+    the one-file diff was already committed. Returns an error message,
+    or None when exactly one plan module defines a plain function of
+    that name: an imported helper (``load_table``), a class, a
+    constant or a misspelled name all fail here."""
+    try:
+        _entry().resolve(name)
+    except LookupError as exc:
+        return str(exc)
     return None
 
 
@@ -161,7 +131,7 @@ def order_window(names: list[str]) -> list[str]:
 
 def plan_rotation(
     ev: dict[str, tuple[int, bool]],
-    reg: dict[str, str],
+    reg: list[str],
     new: list[str] | tuple[str, ...] = (),
     forced: list[str] | tuple[str, ...] = (),
 ) -> tuple[list[str], list[str]]:
@@ -224,14 +194,13 @@ def render_module(
     window: list[str],
     tail: list[str],
     ev: dict[str, tuple[int, bool]],
-    reg: dict[str, str],
     rnd: int,
 ) -> str:
     """The full source of ``plans/_registry_order.py``: the ordered
-    (name, 'module_alias.function') registration list plus the
-    narrative block ``__spark_entry__`` appends to the queries()
-    docstring — both derived from the same rotation, so neither can
-    drift from the other."""
+    registration list of query names plus the narrative block
+    ``__spark_entry__`` appends to the queries() docstring — both
+    derived from the same rotation, so neither can drift from the
+    other."""
     summary = window_summary(window, ev, rnd)
     n_never_tail = sum(1 for n in tail if n not in ev)
     tail_desc = (
@@ -251,10 +220,10 @@ def render_module(
         '"""Driver registration order — GENERATED by',
         "``tools/rotate_window.py``; regenerate, don't hand-edit.",
         "",
-        "``__spark_entry__.queries()`` resolves this list at import time,",
-        "so registration order (the driver's 50-query sampling window)",
-        "lives in exactly one generated file and a rotation is a one-file",
-        'diff."""',
+        "``__spark_entry__.queries()`` resolves each name against",
+        "``PLAN_MODULES`` at import time, so registration order (the",
+        "driver's 50-query sampling window) lives in exactly one generated",
+        'file and a rotation is a one-file diff."""',
         "",
         "from __future__ import annotations",
         "",
@@ -266,21 +235,21 @@ def render_module(
         "#: from the order below)",
         f"NARRATIVE = {narrative!r}",
         "",
-        "#: (query name, 'module_alias.function') in driver sampling order",
-        "REGISTRY_ORDER: list[tuple[str, str]] = [",
+        "#: query names in driver sampling order",
+        "REGISTRY_ORDER: list[str] = [",
         "    # ---- positions 1-50: THE CHECK WINDOW ----",
     ]
     for n in window:
         r = ev.get(n, (None, None))[0]
         note = f"  # evidence: r{r}" if r else "  # NEW — no driver evidence yet"
-        lines.append(f'    ("{n}", "{reg[n]}"),{note}')
+        lines.append(f'    "{n}",{note}')
     lines.append(
         "    # ---- positions 51+: driver-green tail, oldest evidence first ----"
     )
     for n in tail:
         r = ev.get(n, (None, None))[0]
         note = f"  # evidence: r{r}" if r else "  # NEW — no driver evidence yet"
-        lines.append(f'    ("{n}", "{reg[n]}"),{note}')
+        lines.append(f'    "{n}",{note}')
     lines.append("]")
     return "\n".join(lines) + "\n"
 
@@ -292,24 +261,20 @@ def main() -> int:
     ap.add_argument("--round", type=int, default=None, help="round number for the docstring block (default: newest CORRECTNESS round + 1)")
     ap.add_argument("--freeze", action="store_true", help="re-emit the CURRENT live order unchanged (migration/no-op path)")
     ap.add_argument("--stdout", action="store_true", help="print the generated module instead of writing it")
-    ap.add_argument("--register", nargs="*", default=[], help="NEW registrations as name=alias.func, appended to the registry before planning (registration is generated too, so brand-new plan functions enter here; combine with --freeze for post-rotation dict-tail additions, or with --new for window-tail placement in a rotation)")
+    ap.add_argument("--register", nargs="*", default=[], help="NEW query names, appended to the registry before planning; each must be the name of a plain function one plan module defines (combine with --freeze for post-rotation tail additions, or with --new for window-tail placement in a rotation)")
     args = ap.parse_args()
 
     ev = fold_evidence()
     reg = registry()
-    for spec in args.register:
-        name, _, ref = spec.partition("=")
-        if not ref or "." not in ref:
-            print(f"ERROR: --register wants name=alias.func, got {spec!r}", file=sys.stderr)
-            return 2
-        err = validate_ref(ref)
+    for name in args.register:
+        err = validate_name(name)
         if err:
-            print(f"ERROR: --register {spec!r}: {err}", file=sys.stderr)
+            print(f"ERROR: --register {name!r}: {err}", file=sys.stderr)
             return 2
         if name in reg:
             print(f"WARNING: --register {name} already registered; ignored", file=sys.stderr)
             continue
-        reg[name] = ref
+        reg.append(name)
     missing = [n for n in ev if n not in reg]
     if missing:
         print(f"WARNING: evidence for unregistered queries: {missing}", file=sys.stderr)
@@ -331,7 +296,7 @@ def main() -> int:
     summary = window_summary(window, ev, rnd)
     print(f"window={len(window)} tail={len(tail)} {summary}", file=sys.stderr)
 
-    src = render_module(window, tail, ev, reg, rnd)
+    src = render_module(window, tail, ev, rnd)
     if args.stdout:
         print(src, end="")
     else:
