@@ -21,6 +21,7 @@ from ecommerce_realtime_pipeline_spark.plans import (
     gen,
     kpi,
     multimodal,
+    streams,
     temporal,
     textsearch,
     training,
@@ -33,7 +34,9 @@ from ecommerce_realtime_pipeline_spark.plans.sqlhints import materialize_all
 
 #: the plan modules, one per query family: each defines its queries as
 #: plain functions named like the query, and an ``ORACLES`` dict
-PLAN_MODULES = (kpi, dq, temporal, gen, dedup, ann, textsearch, training, multimodal)
+PLAN_MODULES = (
+    kpi, dq, temporal, gen, streams, dedup, ann, textsearch, training, multimodal
+)
 
 
 def resolve(name: str) -> Callable[[SparkSession, str], DataFrame]:

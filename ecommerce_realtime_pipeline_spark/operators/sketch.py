@@ -109,7 +109,7 @@ def hll_fold(regs: DataFrame, group_cols: list[str]) -> DataFrame:
 
 # DuckDB-side register derivation (the oracle spelling of
 # hll_register_cols) lives inline in plans/oracles.py
-# (events_hll_users) and plans/gen.py (streaming_hll_users) — change
+# (events_hll_users) and plans/streams.py (streaming_hll_users) — change
 # hll_register_cols and BOTH oracles must follow (the oracle hash
 # check is what catches a missed one).
 

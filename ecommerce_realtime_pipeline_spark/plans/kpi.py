@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ecommerce_realtime_pipeline_spark.catalog import load_table
+from ecommerce_realtime_pipeline_spark.plans import fixtures as FX
 
 # the KPI oracles live in their own module; bound here so every plan
 # module exposes its family's oracles as ``ORACLES``
@@ -614,16 +615,12 @@ def events_zorder_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the rewrite is one range exchange + in-file sort — the
     scheduled clustering job (per day-partition at 100 TB), same
     maintenance slot as ``compact_buckets``."""
-    import shutil
-    import tempfile
-
     from ecommerce_realtime_pipeline_spark.operators.layout import write_zordered
 
     events = load_table(spark, sf_dir, "events").select(
         "event_id", "user_id", "event_type", "value"
     )
-    tmp = tempfile.mkdtemp(prefix="eng_zorder_q_")
-    try:
+    with FX.scratch_dir("eng_zorder_q_") as tmp:
         write_zordered(events, f"{tmp}/events_z", ["user_id", "value"])
         back = spark.read.parquet(f"{tmp}/events_z")
         return (
@@ -638,8 +635,6 @@ def events_zorder_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             .orderBy("event_type")
             .localCheckpoint(eager=True)
         )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 def events_heavy_hitters_mg(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -556,9 +556,10 @@ def streamed_index(
     idempotence story). The per-batch merges shuffle a half-corpus
     vocab, so ``spark.sql.shuffle.partitions`` is pinned to 8 for the
     micro-batch jobs (driver sessions default to 200) and restored
-    before the caller serves. Source, checkpoint and index live in one
-    :func:`fixtures.scratch_dir`, removed when the block exits."""
-    old_sp = spark.conf.get("spark.sql.shuffle.partitions")
+    before the caller serves (:func:`fixtures.pinned_conf`); each run
+    is checked (:func:`fixtures.await_run`). Source, checkpoint and
+    index live in one :func:`fixtures.scratch_dir`, removed when the
+    block exits."""
     with FX.scratch_dir(prefix) as tmp:
         src, ckpt = os.path.join(tmp, "src"), os.path.join(tmp, "ckpt")
         idx = os.path.join(tmp, "index")
@@ -572,17 +573,17 @@ def streamed_index(
             else:
                 write(rows, idx)
 
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        try:
+        with FX.pinned_conf(spark, {"spark.sql.shuffle.partitions": "8"}):
             for half in (0, 1):
                 docs.filter(F.col("doc_id") % 2 == half).repartition(1).write.mode(
                     "append"
                 ).parquet(src)
-                start_available_now(
-                    spark.readStream.schema(_DOC_SCHEMA).parquet(src), ckpt, fold
-                ).awaitTermination()
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", old_sp)
+                FX.await_run(
+                    start_available_now(
+                        spark.readStream.schema(_DOC_SCHEMA).parquet(src), ckpt, fold
+                    ),
+                    f"streamed index fold ({prefix})",
+                )
         yield idx
 
 

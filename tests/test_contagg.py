@@ -13,6 +13,7 @@ import tempfile
 import pytest
 from pyspark.sql import functions as F
 
+from ecommerce_realtime_pipeline_spark.plans import fixtures as FX
 from ecommerce_realtime_pipeline_spark.streaming import contagg as CA
 from ecommerce_realtime_pipeline_spark.streaming.ingest import upsert_batch
 
@@ -254,9 +255,7 @@ def test_recreated_checkpoint_rebases_instead_of_skipping(spark, dirs):
     tmp = os.path.dirname(silver)
     src = os.path.join(tmp, "src")
     ckpt = os.path.join(tmp, "ckpt")
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
+    with FX.pinned_conf(spark, FX.STATE_PARTITIONS):
         # generation 1: two epochs, then prune so _pruned_through = 0
         _stream_batch(
             spark, src, "b0.json",
@@ -310,8 +309,6 @@ def test_recreated_checkpoint_rebases_instead_of_skipping(spark, dirs):
             "pending": (4, 1.0 + 2.0 + 3.0 + 100.0),
             "shipped": (1, 40.0),
         }
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
 
 
 def test_no_data_batch_commits_no_version(spark, dirs):
@@ -327,9 +324,7 @@ def test_no_data_batch_commits_no_version(spark, dirs):
     tmp = os.path.dirname(silver)
     src = os.path.join(tmp, "src")
     ckpt = os.path.join(tmp, "ckpt")
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
+    with FX.pinned_conf(spark, FX.STATE_PARTITIONS):
         _stream_batch(
             spark, src, "b0.json",
             [(i, f"o{i}", float(i), "pending", 0) for i in range(1, 4)],
@@ -353,5 +348,3 @@ def test_no_data_batch_commits_no_version(spark, dirs):
             for r in CA.read_continuous_agg(spark, agg).collect()
         }
         assert view == {"pending": (3, 6.0)}
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)

@@ -8,14 +8,14 @@ from __future__ import annotations
 import json
 
 from ecommerce_realtime_pipeline_spark import dashboard as D
-from ecommerce_realtime_pipeline_spark.plans.gen import _pinned_state_partitions
+from ecommerce_realtime_pipeline_spark.plans import fixtures as FX
 
 
 def test_dashboard_serves_pipeline_marts(spark, tmp_path):
     from ecommerce_realtime_pipeline_spark.pipeline import run_pipeline
 
     work = str(tmp_path / "p")
-    with _pinned_state_partitions(spark):
+    with FX.pinned_conf(spark, FX.STATE_PARTITIONS):
         summary = run_pipeline(spark, work)
     gold = f"{work}/gold"
 
@@ -48,7 +48,7 @@ def test_dashboard_tolerates_missing_panels(spark, tmp_path):
 def test_pipeline_cli_prints_summary_and_dashboard(spark, tmp_path, capsys):
     from ecommerce_realtime_pipeline_spark.pipeline import run_cli
 
-    with _pinned_state_partitions(spark):
+    with FX.pinned_conf(spark, FX.STATE_PARTITIONS):
         rc = run_cli(
             ["--work-dir", str(tmp_path / "p"), "--show-dashboard"],
             spark=spark,

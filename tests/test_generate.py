@@ -102,14 +102,14 @@ def test_produced_topics_fixture_memoizes_and_matches_real_publish(
     spark, tmp_path, monkeypatch
 ):
     """The session topic-tree memo must be invisible to consumers:
-    (1) the linked tree a `_memo_publisher` caller receives is
+    (1) the linked tree a `memo_publisher` caller receives is
     byte-identical to what the real `produce_batch` writes for the
     same spec, with identical counts; (2) the REAL produce runs once
     per (session, spec) — later calls reuse the tree without a new
     publish; (3) a different spec misses the memo."""
     import os
 
-    from ecommerce_realtime_pipeline_spark.plans import gen as GP
+    from ecommerce_realtime_pipeline_spark.plans import fixtures as FX
     from ecommerce_realtime_pipeline_spark.sources import produce as P
 
     spec = dict(
@@ -128,9 +128,9 @@ def test_produced_topics_fixture_memoizes_and_matches_real_publish(
 
     monkeypatch.setattr(P, "produce_batch", counting)
     linked1 = str(tmp_path / "linked1")
-    counts1 = GP._memo_publisher(spark, linked1, **spec)
+    counts1 = FX.memo_publisher(spark, linked1, **spec)
     linked2 = str(tmp_path / "linked2")
-    counts2 = GP._memo_publisher(spark, linked2, **spec)
+    counts2 = FX.memo_publisher(spark, linked2, **spec)
     assert counts1 == counts2 == real_counts
     assert calls["n"] <= 1  # 0 if an earlier test in this session built it
 
@@ -162,7 +162,7 @@ def test_produced_topics_fixture_memoizes_and_matches_real_publish(
 
     # different spec = different memo key = a real publish
     before = calls["n"]
-    GP._memo_publisher(
+    FX.memo_publisher(
         spark, str(tmp_path / "linked3"),
         **{**spec, "customer_count": 8},
     )
@@ -178,21 +178,21 @@ def test_memo_publisher_copies_when_hardlinks_cross_filesystems(
     import errno
     import os
 
-    from ecommerce_realtime_pipeline_spark.plans import gen as GP
+    from ecommerce_realtime_pipeline_spark.plans import fixtures as FX
 
     spec = dict(
         product_count=0, customer_count=7, order_count=0, event_count=0,
         seed=33, n_partitions=2, entities=("customers",),
     )
     linked = str(tmp_path / "linked")
-    counts_linked = GP._memo_publisher(spark, linked, **spec)
+    counts_linked = FX.memo_publisher(spark, linked, **spec)
 
     def cross_device(src, dst):
         raise OSError(errno.EXDEV, "Invalid cross-device link", src)
 
     monkeypatch.setattr(os, "link", cross_device)
     copied = str(tmp_path / "copied")
-    assert GP._memo_publisher(spark, copied, **spec) == counts_linked
+    assert FX.memo_publisher(spark, copied, **spec) == counts_linked
 
     def tree(root):
         out = {}
@@ -213,7 +213,7 @@ def test_memo_publisher_rejects_unencodable_kwarg_by_name(
     TypeError naming the kwarg, and nothing is published."""
     import pytest
 
-    from ecommerce_realtime_pipeline_spark.plans import gen as GP
+    from ecommerce_realtime_pipeline_spark.plans import fixtures as FX
     from ecommerce_realtime_pipeline_spark.sources import produce as P
 
     def must_not_publish(*a, **kw):  # pragma: no cover
@@ -221,7 +221,7 @@ def test_memo_publisher_rejects_unencodable_kwarg_by_name(
 
     monkeypatch.setattr(P, "produce_batch", must_not_publish)
     with pytest.raises(TypeError, match="metrics="):
-        GP._memo_publisher(
+        FX.memo_publisher(
             spark, str(tmp_path / "t"), 0, 3, 0, 0,
             seed=5, metrics=P.ProducerMetrics(),
         )
@@ -238,7 +238,6 @@ def test_topics_fixture_rebuild_clears_a_half_built_tree(spark, tmp_path):
     import shutil
 
     from ecommerce_realtime_pipeline_spark.plans import fixtures as FX
-    from ecommerce_realtime_pipeline_spark.plans import gen as GP
     from ecommerce_realtime_pipeline_spark.sources import produce as P
 
     spec = dict(
@@ -278,7 +277,7 @@ def test_topics_fixture_rebuild_clears_a_half_built_tree(spark, tmp_path):
         os.path.join(topic_dir, "stray-" + envelope),
     )
 
-    path, counts = GP._produced_topics_fixture(spark, **spec)
+    path, counts = FX.produced_topics_fixture(spark, **spec)
     assert path == half
     assert counts == real_counts
     assert envelopes(path) == envelopes(real)

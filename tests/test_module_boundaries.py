@@ -2,7 +2,8 @@
 imports or reads another package module's ``_private`` name. Shared
 machinery gets a public name in the module that owns it (commit and
 lock steps in ``storage``, job overlap in ``session``, fixture
-directories and the index fixtures in ``plans.fixtures``, the BM25 and
+directories, the index fixtures and the fixture harness (scratch dirs,
+conf pins, checked stream awaits) in ``plans.fixtures``, the BM25 and
 phrase serves in ``plans.textsearch``, the streaming start path in
 ``streaming.ingest``, the partitioned index-segment write in
 ``operators.indexfmt``). The same holds for the scripts that drive the
@@ -168,3 +169,59 @@ def test_index_families_write_segments_through_indexfmt():
     their own and list no directory."""
     for name in ("text.py", "similarity.py"):
         assert _segment_write_sites(ROOT / "operators" / name) == [], name
+
+
+def _harness_sites(path: pathlib.Path) -> list[str]:
+    """Every ``tempfile.mkdtemp(`` call, ``.awaitTermination(`` call and
+    ``spark.conf.set(`` call in one module, as ``<line> <form>``."""
+    found = []
+    for node in ast.walk(ast.parse(path.read_text())):
+        if not (isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute)):
+            continue
+        func = node.func
+        if func.attr == "mkdtemp":
+            found.append(f"{node.lineno} mkdtemp")
+        elif func.attr == "awaitTermination":
+            found.append(f"{node.lineno} awaitTermination")
+        elif (
+            func.attr == "set"
+            and isinstance(func.value, ast.Attribute)
+            and func.value.attr == "conf"
+        ):
+            found.append(f"{node.lineno} conf.set")
+    return found
+
+
+def test_plan_fixtures_run_through_one_harness():
+    """The plan modules make temp dirs, pin session confs and await
+    stream runs only through ``plans/fixtures.py`` (``scratch_dir``,
+    ``pinned_conf``, ``await_run``): no other ``plans/*.py`` module calls
+    ``tempfile.mkdtemp``, ``.awaitTermination(`` or ``spark.conf.set(``."""
+    plans = sorted((ROOT / "plans").glob("*.py"))
+    assert len(plans) > 10  # the scan sees the plan modules
+    sites = {
+        path.name: found
+        for path in plans
+        if path.name != "fixtures.py" and (found := _harness_sites(path))
+    }
+    assert sites == {}
+    assert {"mkdtemp", "awaitTermination", "conf.set"} == {
+        s.split()[1] for s in _harness_sites(ROOT / "plans" / "fixtures.py")
+    }
+
+
+def test_one_streaming_query_listener():
+    """``ingest.StatsListener`` is the package's only
+    ``StreamingQueryListener``: a fixture reads per-query progress from
+    its own queries' ``recentProgress`` instead of a session-global
+    listener."""
+    listeners = []
+    for name, path in sorted(_modules().items()):
+        for node in ast.walk(ast.parse(path.read_text())):
+            if isinstance(node, ast.ClassDef) and any(
+                (b.id if isinstance(b, ast.Name) else getattr(b, "attr", None))
+                == "StreamingQueryListener"
+                for b in node.bases
+            ):
+                listeners.append(f"{name}.{node.name}")
+    assert listeners == ["ecommerce_realtime_pipeline_spark.streaming.ingest.StatsListener"]

@@ -11,6 +11,7 @@ import os
 
 import pytest
 
+from ecommerce_realtime_pipeline_spark.plans import fixtures as FX
 from ecommerce_realtime_pipeline_spark.streaming import ingest as I
 
 TS = "2025-01-01T00:00:00Z"
@@ -227,16 +228,28 @@ def test_monitoring_stats_deterministic(spark):
     """R18/R19 driver entry: the monitoring aggregates are
     count-invariant (batch slicing may vary; totals don't) and
     repeatable across invocations."""
-    from ecommerce_realtime_pipeline_spark.plans import gen
+    from ecommerce_realtime_pipeline_spark.plans import streams
 
-    a = gen.monitoring_stats(spark, "unused").collect()
-    b = gen.monitoring_stats(spark, "unused").collect()
+    a = streams.monitoring_stats(spark, "unused").collect()
+    b = streams.monitoring_stats(spark, "unused").collect()
     assert a == b
     row = a[0]
     assert row["records_processed_total"] == 30
     assert row["records_failed_total"] == 0
     assert row["n_partitions"] == 2
     assert row["n_consumer_groups"] == 1
+
+
+def test_monitoring_stats_raises_when_listener_misses_rows(spark, monkeypatch):
+    """A listener that never receives the run's progress makes
+    ``monitoring_stats`` raise ``TimeoutError`` with the seen/expected
+    row counts, instead of building the stats from a partial count."""
+    from ecommerce_realtime_pipeline_spark.plans import streams
+
+    monkeypatch.setattr(I.StatsListener, "onQueryProgress", lambda self, event: None)
+    monkeypatch.setattr(streams, "LISTENER_WAIT_S", 1)
+    with pytest.raises(TimeoutError, match="listener saw 0/30 input rows"):
+        streams.monitoring_stats(spark, "unused")
 
 
 def test_parse_failures_quarantined_not_dropped(spark, dirs):
@@ -610,13 +623,9 @@ def test_pipeline_end_to_end_rerun_stable(spark, tmp_path):
     end)."""
     from ecommerce_realtime_pipeline_spark.pipeline import run_pipeline
 
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
+    with FX.pinned_conf(spark, FX.STATE_PARTITIONS):
         s1 = run_pipeline(spark, str(tmp_path / "p"))
         s2 = run_pipeline(spark, str(tmp_path / "p"), base_offset=1000)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
     assert s1["silver_counts"] == s2["silver_counts"]
     assert s1["marts"] == s2["marts"]
     assert s1["silver_counts"]["orders"] == 25
@@ -634,15 +643,11 @@ def test_pipeline_dq_gate_clean_and_corrupted(spark, tmp_path):
 
     from ecommerce_realtime_pipeline_spark.pipeline import run_pipeline
 
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
+    with FX.pinned_conf(spark, FX.STATE_PARTITIONS):
         clean = run_pipeline(spark, str(tmp_path / "clean"))
         dirty = run_pipeline(
             spark, str(tmp_path / "dirty"), corruption_enabled=True
         )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
     assert clean["marts"]["dq_gate"] == 5
 
     def gate(base):
@@ -818,7 +823,7 @@ def test_silver_compaction_report_query(spark):
     """The maintenance invoice repeats bit-for-bit: 16 buckets fragment
     into 60 files under the pinned 4-task write, compaction leaves one
     file per bucket, content fully preserved."""
-    from ecommerce_realtime_pipeline_spark.plans import gen
+    from ecommerce_realtime_pipeline_spark.plans import streams
 
-    a = [tuple(r) for r in gen.silver_compaction_report(spark, "unused").collect()]
+    a = [tuple(r) for r in streams.silver_compaction_report(spark, "unused").collect()]
     assert a == [(16, 60, 16, 200, 200, 200)]

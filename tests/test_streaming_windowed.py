@@ -90,9 +90,9 @@ def test_session_windows_split_on_gap(spark, tmp_path):
 def test_streaming_windowed_kpi_query_deterministic(spark):
     """The driver entry returns the exact closed-window set (late row
     dropped, each window once) and repeats identically."""
-    from ecommerce_realtime_pipeline_spark.plans import gen
+    from ecommerce_realtime_pipeline_spark.plans import streams
 
-    a = gen.streaming_windowed_kpi(spark, "unused")
+    a = streams.streaming_windowed_kpi(spark, "unused")
     rows = {(r["window_start"].strftime("%H:%M"), r["type"]): r["n"] for r in a.collect()}
     assert rows == {
         ("10:00", "view"): 2,   # late batch-2 view did NOT re-open it
@@ -100,7 +100,7 @@ def test_streaming_windowed_kpi_query_deterministic(spark):
         ("10:15", "view"): 1,
         ("10:30", "view"): 1,
     }
-    b = gen.streaming_windowed_kpi(spark, "unused")
+    b = streams.streaming_windowed_kpi(spark, "unused")
     assert sorted(map(tuple, a.collect())) == sorted(map(tuple, b.collect()))
 
 
@@ -153,9 +153,9 @@ def test_streaming_attribution_join_exact_pairs(spark):
     from datetime import datetime
 
     from ecommerce_realtime_pipeline_spark.operators import temporal as T
-    from ecommerce_realtime_pipeline_spark.plans import gen
+    from ecommerce_realtime_pipeline_spark.plans import streams
 
-    out = gen.streaming_attribution_join(spark, "unused")
+    out = streams.streaming_attribution_join(spark, "unused")
     pairs = sorted((r["purchase_id"], r["click_id"]) for r in out.collect())
     assert pairs == [("p1", "c10"), ("p1", "c11"), ("p3", "c10"), ("p3", "c12")]
 
@@ -188,25 +188,25 @@ def test_streaming_attribution_join_exact_pairs(spark):
 def test_streaming_session_windows_query_deterministic(spark):
     """The driver entry emits exactly the two closed sessions (the
     advancer's own session stays open) and repeats identically."""
-    from ecommerce_realtime_pipeline_spark.plans import gen
+    from ecommerce_realtime_pipeline_spark.plans import streams
 
-    a = gen.streaming_session_windows(spark, "unused")
+    a = streams.streaming_session_windows(spark, "unused")
     rows = {
         (r["customer_id"], r["session_start"].strftime("%H:%M"),
          r["session_end"].strftime("%H:%M"), r["n_events"])
         for r in a.collect()
     }
     assert rows == {("c1", "10:00", "10:35", 2), ("c2", "10:10", "10:40", 1)}
-    b = gen.streaming_session_windows(spark, "unused")
+    b = streams.streaming_session_windows(spark, "unused")
     assert sorted(map(tuple, a.collect())) == sorted(map(tuple, b.collect()))
 
 
 def test_streaming_late_drop_stats_deterministic(spark):
     """Exactly the one below-watermark row is dropped; the counter
     comes from the engine's state-operator metrics, repeatably."""
-    from ecommerce_realtime_pipeline_spark.plans import gen
+    from ecommerce_realtime_pipeline_spark.plans import streams
 
-    a = gen.streaming_late_drop_stats(spark, "unused").collect()
+    a = streams.streaming_late_drop_stats(spark, "unused").collect()
     assert [tuple(r) for r in a] == [(2, 3, 1)]
-    b = gen.streaming_late_drop_stats(spark, "unused").collect()
+    b = streams.streaming_late_drop_stats(spark, "unused").collect()
     assert [tuple(r) for r in b] == [(2, 3, 1)]
