@@ -25,39 +25,35 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ecommerce_realtime_pipeline_spark.session import overlapped
+from ecommerce_realtime_pipeline_spark.session import memo, overlapped
 
 from . import indexfmt
-
-
-#: Embedding dimension memo keyed by caller-chosen key (e.g. the table
-#: path) — avoids re-running a one-row driver job per query call.
-_DIM_CACHE: dict[str, int] = {}
 
 
 def embedding_dim(
     emb: DataFrame, col: str = "embedding", cache_key: str | None = None
 ) -> int:
-    """Length of the embedding arrays. One one-row job on first use;
-    memoized under ``cache_key`` afterwards (array columns carry no
-    length in the schema, so this can't come from metadata alone)."""
-    if cache_key is not None and cache_key in _DIM_CACHE:
-        return _DIM_CACHE[cache_key]
-    row = emb.select(col).first()
-    if row is None:
-        # loud contract instead of the NoneType-subscript the bare
-        # first()[0] throws on an empty corpus: every ANN/dedup
-        # entry point funnels through here, so this one check converts
-        # a family of obscure numpy/TypeError crashes into one message
-        raise ValueError(
-            "embedding corpus is empty — dim cannot be inferred and "
-            "cosine/ANN operators have no meaningful output; filter "
-            "upstream or skip the call"
-        )
-    dim = len(row[0])
-    if cache_key is not None:
-        _DIM_CACHE[cache_key] = dim
-    return dim
+    """Length of the embedding arrays: one one-row job (array columns
+    carry no length in the schema, so this can't come from metadata
+    alone), memoized per session under ``cache_key``
+    (``session.memo``)."""
+
+    def build() -> int:
+        row = emb.select(col).first()
+        if row is None:
+            # loud contract instead of the NoneType-subscript the bare
+            # first()[0] throws on an empty corpus: every ANN/dedup
+            # entry point funnels through here, so this one check
+            # converts a family of obscure numpy/TypeError crashes into
+            # one message
+            raise ValueError(
+                "embedding corpus is empty — dim cannot be inferred and "
+                "cosine/ANN operators have no meaningful output; filter "
+                "upstream or skip the call"
+            )
+        return len(row[0])
+
+    return memo(emb.sparkSession, cache_key, ("embedding_dim", col), build)
 
 
 def dot(a, b):
@@ -212,18 +208,8 @@ def exact_rerank(
     )
 
 
-#: IVF index memo: centroid list keyed by (cache_key, n_centroids,
-#: seed), and the corpus cell assignment keyed additionally by the
-#: owning SparkContext application id (a localCheckpoint is only valid
-#: inside the session that produced it). An IVF index is build-once /
-#: query-many by definition — re-deriving the quantizer and the cell
-#: table per query call is pure waste (a full md5 TakeOrdered scan +
-#: an extra corpus matmul on every invocation).
 #: manifest format tag for the persisted IVF index (see indexfmt)
 IVF_INDEX_FORMAT = "ivf-index"
-
-_IVF_CENTROID_CACHE: dict[tuple, list] = {}
-_IVF_CELL_CACHE: dict[tuple, DataFrame] = {}
 
 #: persisted centroid-TABLE memo: without it every IVF serve/merge
 #: re-reads and re-collects the k·dim-tiny quantizer table of the same
@@ -287,31 +273,31 @@ def ivf_centroids(
     practice), so collecting it to broadcast into the assignment UDF is
     the standard IVF layout, not a driver-side data pull; ``limit``
     after ``orderBy`` plans as TakeOrdered — no full sort materializes.
-    Memoized under ``cache_key`` (e.g. the table path): the quantizer
-    is immutable for a given corpus, so it is picked once per session.
+    The quantizer is immutable for a given corpus, so it is memoized
+    per session under ``cache_key`` (``session.memo``).
     At 100 TB swap the global hash sort for TABLESAMPLE + local top-n;
     semantics unchanged."""
-    memo = (cache_key, n_centroids, seed) if cache_key is not None else None
-    if memo is not None and memo in _IVF_CENTROID_CACHE:
-        return _IVF_CENTROID_CACHE[memo]
-    rows = (
-        emb.select("vec_id", col)
-        .orderBy(
-            F.md5(F.concat(F.col("vec_id").cast("string"), F.lit(f"|{seed}"))),
-            F.col("vec_id"),
+
+    def build() -> list[list[float]]:
+        rows = (
+            emb.select("vec_id", col)
+            .orderBy(
+                F.md5(F.concat(F.col("vec_id").cast("string"), F.lit(f"|{seed}"))),
+                F.col("vec_id"),
+            )
+            .limit(n_centroids)
+            .collect()
         )
-        .limit(n_centroids)
-        .collect()
+        if not rows:
+            raise ValueError(
+                "ivf_centroids: empty training corpus — an IVF quantizer "
+                "needs at least one vector (empty-corpus contract)"
+            )
+        return [list(r[1]) for r in rows]
+
+    return memo(
+        emb.sparkSession, cache_key, ("ivf_centroids", n_centroids, col, seed), build
     )
-    if not rows:
-        raise ValueError(
-            "ivf_centroids: empty training corpus — an IVF quantizer "
-            "needs at least one vector (empty-corpus contract)"
-        )
-    cents = [list(r[1]) for r in rows]
-    if memo is not None:
-        _IVF_CENTROID_CACHE[memo] = cents
-    return cents
 
 
 def _write_centroid_table(spark, cents: list[list[float]], dest: str) -> None:
@@ -457,29 +443,23 @@ def ivf_cell_tables(
 ) -> tuple[DataFrame, DataFrame]:
     """The two IVF index frames shared by ``knn_ivf`` and
     ``knn_ivfpq``: ``corpus_cells`` (neighbor_id, cell — the posting
-    lists, memoized/localCheckpointed per session under ``cache_key``)
-    and ``q_cells`` (query_id, cell — each query's ``n_probe`` nearest
-    cells)."""
+    lists, localCheckpointed and memoized per session under
+    ``cache_key`` (``session.memo``)) and ``q_cells`` (query_id, cell —
+    each query's ``n_probe`` nearest cells)."""
     cents = ivf_centroids(emb, n_centroids, col, seed, cache_key=cache_key)
-    spark = emb.sparkSession
-    cell_memo = (
-        (spark.sparkContext.applicationId, cache_key, n_centroids, seed, col)
-        if cache_key is not None
-        else None
-    )
-    corpus_cells = (
-        _IVF_CELL_CACHE.get(cell_memo) if cell_memo is not None else None
-    )
-    if corpus_cells is None:
+
+    def build() -> DataFrame:
         assign = _probe_udf(cents, 1)
-        corpus_cells = emb.select(
+        cells = emb.select(
             F.col("vec_id").alias("neighbor_id"),
             F.element_at(assign(F.col(col)), 1).alias("cell"),
         )
-        if cell_memo is not None:
-            # narrow 2-int rows; eager so the matmul runs exactly once
-            corpus_cells = corpus_cells.localCheckpoint()
-            _IVF_CELL_CACHE[cell_memo] = corpus_cells
+        # narrow 2-int rows; eager so the matmul runs exactly once
+        return cells if cache_key is None else cells.localCheckpoint()
+
+    corpus_cells = memo(
+        emb.sparkSession, cache_key, ("ivf_cell_tables", n_centroids, col, seed), build
+    )
     probe = _probe_udf(cents, n_probe)
     q_cells = queries.select(
         F.col("vec_id").alias("query_id"),
@@ -808,13 +788,6 @@ def _pq_subspace_dists(
     )
 
 
-#: PQ code-table memo, keyed like _IVF_CELL_CACHE (localCheckpoints
-#: are session-scoped, hence the applicationId in the key). Codes are
-#: build-once/query-many exactly like IVF posting lists — emb_pq_codes,
-#: emb_knn_pq, and emb_knn_ivfpq all scan the same immutable table.
-_PQ_CODES_CACHE: dict[tuple, DataFrame] = {}
-
-
 def _pq_assign_udf(codebook_rows: list, m: int, ksub: int, dim: int):
     """Arrow-batched PQ assignment (the FAST path): one numpy pass per
     batch — normalize rows, then per subspace argmin over the ksub
@@ -862,8 +835,9 @@ def pq_encode(
 
     Output: (vec_id, subspace, code, _qd exact-decimal quantization
     distance) — long form, one row per subspace. With ``cache_key``
-    the code table is localCheckpointed once per session (narrow
-    (long, int, int, decimal) rows — the compressed index itself).
+    the code table (narrow (long, int, int, decimal) rows — the
+    compressed index itself) is localCheckpointed and memoized per
+    session under ``cache_key`` (``session.memo``).
 
     Two assignment paths — the code layout and every consumer are
     identical either way (the simhash ``portable_hash`` precedent):
@@ -878,37 +852,31 @@ def pq_encode(
       the test corpus; agreement pinned in tests). ``_qd`` is null.
     """
     spark = emb.sparkSession
-    memo = (
-        (spark.sparkContext.applicationId, cache_key, m, ksub, seed, col, exact)
-        if cache_key is not None
-        else None
-    )
-    if memo is not None and memo in _PQ_CODES_CACHE:
-        return _PQ_CODES_CACHE[memo]
-    cb_rows = pq_codebook_rows(emb, m, ksub, col, seed, cache_key)
-    if exact:
-        cb = spark.createDataFrame(cb_rows, "s int, c int, i int, y double")
-        dists = _pq_subspace_dists(emb, "vec_id", cb, col)
-        codes = (
-            dists.groupBy("vec_id", "s")
-            .agg(F.min(F.struct("d", "c")).alias("_m"))
-            .select(
-                "vec_id",
-                F.col("s").alias("subspace"),
-                F.col("_m.c").alias("code"),
-                F.col("_m.d").alias("_qd"),
+
+    def build() -> DataFrame:
+        cb_rows = pq_codebook_rows(emb, m, ksub, col, seed, cache_key)
+        if exact:
+            cb = spark.createDataFrame(cb_rows, "s int, c int, i int, y double")
+            dists = _pq_subspace_dists(emb, "vec_id", cb, col)
+            codes = (
+                dists.groupBy("vec_id", "s")
+                .agg(F.min(F.struct("d", "c")).alias("_m"))
+                .select(
+                    "vec_id",
+                    F.col("s").alias("subspace"),
+                    F.col("_m.c").alias("code"),
+                    F.col("_m.d").alias("_qd"),
+                )
             )
-        )
-    else:
-        dim = max(r[2] for r in cb_rows) + 1
-        assign = _pq_assign_udf(cb_rows, m, ksub, dim)
-        codes = emb.select(
-            "vec_id", F.posexplode(assign(F.col(col))).alias("subspace", "code")
-        ).withColumn("_qd", F.lit(None).cast("decimal(28,14)"))
-    if memo is not None:
-        codes = codes.localCheckpoint()
-        _PQ_CODES_CACHE[memo] = codes
-    return codes
+        else:
+            dim = max(r[2] for r in cb_rows) + 1
+            assign = _pq_assign_udf(cb_rows, m, ksub, dim)
+            codes = emb.select(
+                "vec_id", F.posexplode(assign(F.col(col))).alias("subspace", "code")
+            ).withColumn("_qd", F.lit(None).cast("decimal(28,14)"))
+        return codes if cache_key is None else codes.localCheckpoint()
+
+    return memo(spark, cache_key, ("pq_encode", m, ksub, col, seed, exact), build)
 
 
 def knn_pq_adc(
@@ -1022,12 +990,6 @@ def knn_ivfpq(
     return exact_rerank(cand, emb, queries, k, col)
 
 
-#: Refined-quantizer memos, session-scoped like the other index
-#: caches: final stats frames and (centroids, assignment) loop output.
-_KMEANS_CACHE: dict[tuple, DataFrame] = {}
-_KMEANS_LOOP_CACHE: dict[tuple, tuple[DataFrame, DataFrame]] = {}
-
-
 def _kmeans_decimal_dists(comp: DataFrame, cents: DataFrame) -> DataFrame:
     """(vec_id, cid, d): DECIMAL-exact squared-L2 of every vector to
     every centroid — the shared assignment kernel of Lloyd training
@@ -1049,49 +1011,45 @@ def _kmeans_loop(
     cache_key: str | None,
 ) -> tuple[DataFrame, DataFrame]:
     """Run ``iters`` Lloyd iterations → (centroids (cid, pos, y),
-    final member assignment (vec_id, cid)). Memoized per session under
-    ``cache_key`` — training is build-once/serve-many."""
+    final member assignment (vec_id, cid)). Training is build-once/
+    serve-many: with ``cache_key`` both frames are localCheckpointed
+    and memoized per session under ``cache_key`` (``session.memo``)."""
     spark = emb.sparkSession
-    memo = (
-        (spark.sparkContext.applicationId, cache_key, k, iters, seed, col)
-        if cache_key is not None
-        else None
-    )
-    if memo is not None and memo in _KMEANS_LOOP_CACHE:
-        return _KMEANS_LOOP_CACHE[memo]
-    train = ivf_centroids(emb, k, col, seed, cache_key=cache_key)
-    comp = (
-        emb.select("vec_id", F.posexplode(F.col(col)).alias("pos", "x"))
-        .withColumn("x", F.col("x").cast("double"))
-        .localCheckpoint()
-    )
-    cents = spark.createDataFrame(
-        [(c, i, float(v)) for c, vec in enumerate(train) for i, v in enumerate(vec)],
-        "cid int, pos int, y double",
-    )
-    assign = None
-    for _ in range(iters):
-        d = _kmeans_decimal_dists(comp, cents)
-        assign = (
-            d.groupBy("vec_id")
-            .agg(F.min(F.struct("d", "cid")).alias("_m"))
-            .select("vec_id", F.col("_m.cid").alias("cid"))
+
+    def build() -> tuple[DataFrame, DataFrame]:
+        train = ivf_centroids(emb, k, col, seed, cache_key=cache_key)
+        comp = (
+            emb.select("vec_id", F.posexplode(F.col(col)).alias("pos", "x"))
+            .withColumn("x", F.col("x").cast("double"))
+            .localCheckpoint()
         )
-        cents = (
-            comp.join(assign, "vec_id")
-            .groupBy("cid", "pos")
-            .agg(
-                (
-                    F.sum(F.col("x").cast("decimal(28,14)")).cast("double")
-                    / F.count("*")
-                ).alias("y")
+        cents = spark.createDataFrame(
+            [(c, i, float(v)) for c, vec in enumerate(train) for i, v in enumerate(vec)],
+            "cid int, pos int, y double",
+        )
+        assign = None
+        for _ in range(iters):
+            d = _kmeans_decimal_dists(comp, cents)
+            assign = (
+                d.groupBy("vec_id")
+                .agg(F.min(F.struct("d", "cid")).alias("_m"))
+                .select("vec_id", F.col("_m.cid").alias("cid"))
             )
-        )
-    if memo is not None:
-        cents = cents.localCheckpoint()
-        assign = assign.localCheckpoint()
-        _KMEANS_LOOP_CACHE[memo] = (cents, assign)
-    return cents, assign
+            cents = (
+                comp.join(assign, "vec_id")
+                .groupBy("cid", "pos")
+                .agg(
+                    (
+                        F.sum(F.col("x").cast("decimal(28,14)")).cast("double")
+                        / F.count("*")
+                    ).alias("y")
+                )
+            )
+        if cache_key is None:
+            return cents, assign
+        return cents.localCheckpoint(), assign.localCheckpoint()
+
+    return memo(spark, cache_key, ("_kmeans_loop", k, iters, col, seed), build)
 
 
 def kmeans_refine(
@@ -1127,36 +1085,31 @@ def kmeans_refine(
     Output: per surviving centroid after ``iters`` rounds —
     (cid, n_vecs, centroid_norm, mean_component). Like every quantizer
     build here, training is build-once/serve-many: with ``cache_key``
-    the (≤ k)-row result is localCheckpointed and memoized per
-    session."""
-    spark = emb.sparkSession
-    memo = (
-        (spark.sparkContext.applicationId, cache_key, k, iters, seed, col)
-        if cache_key is not None
-        else None
+    the (≤ k)-row result is localCheckpointed and memoized per session
+    under ``cache_key`` (``session.memo``)."""
+
+    def build() -> DataFrame:
+        cents, assign = _kmeans_loop(emb, k, iters, col, seed, cache_key)
+        n_vecs = assign.groupBy("cid").agg(F.count("*").alias("n_vecs"))
+        stats = cents.groupBy("cid").agg(
+            F.round(
+                F.sqrt(
+                    F.sum((F.col("y") * F.col("y")).cast("decimal(28,14)")).cast("double")
+                ),
+                4,
+            ).alias("centroid_norm"),
+            F.round(
+                F.sum(F.col("y").cast("decimal(28,14)")).cast("double") / F.count("*"), 6
+            ).alias("mean_component"),
+        )
+        out = stats.join(n_vecs, "cid").select(
+            "cid", "n_vecs", "centroid_norm", "mean_component"
+        )
+        return out if cache_key is None else out.localCheckpoint()
+
+    return memo(
+        emb.sparkSession, cache_key, ("kmeans_refine", k, iters, col, seed), build
     )
-    if memo is not None and memo in _KMEANS_CACHE:
-        return _KMEANS_CACHE[memo]
-    cents, assign = _kmeans_loop(emb, k, iters, col, seed, cache_key)
-    n_vecs = assign.groupBy("cid").agg(F.count("*").alias("n_vecs"))
-    stats = cents.groupBy("cid").agg(
-        F.round(
-            F.sqrt(
-                F.sum((F.col("y") * F.col("y")).cast("decimal(28,14)")).cast("double")
-            ),
-            4,
-        ).alias("centroid_norm"),
-        F.round(
-            F.sum(F.col("y").cast("decimal(28,14)")).cast("double") / F.count("*"), 6
-        ).alias("mean_component"),
-    )
-    out = stats.join(n_vecs, "cid").select(
-        "cid", "n_vecs", "centroid_norm", "mean_component"
-    )
-    if memo is not None:
-        out = out.localCheckpoint()
-        _KMEANS_CACHE[memo] = out
-    return out
 
 
 def kmeans_cluster_quality(
@@ -1961,11 +1914,6 @@ def top_component_power(
     return out.orderBy(F.abs(F.col("loading")).desc(), "pos").limit(topk)
 
 
-#: kNN-graph memo (the NSW-flavor beam index): (app_id, cache_key,
-#: n_centroids, seed, col, m) → localCheckpointed (src, dst) frame.
-_KNN_GRAPH_CACHE: dict[tuple, DataFrame] = {}
-
-
 def knn_graph_beam(
     emb: DataFrame,
     queries: DataFrame,
@@ -2000,19 +1948,14 @@ def knn_graph_beam(
     frontier_h = top-``beam`` of expansion_h alone — both engines
     share the identical definition and the (cos, id) tie-break.
     Graph build work is Σ|2-probe cell|² (4× the SemDeDup bound),
-    never O(n²); with ``cache_key`` it is memoized per session
-    (build-once / query-many, like the IVF posting lists)."""
-    spark = emb.sparkSession
+    never O(n²); the graph is always localCheckpointed, and memoized
+    per session under ``cache_key`` (``session.memo``) — build-once /
+    query-many, like the IVF posting lists."""
     corpus = with_norm(emb, col).select(
         F.col("vec_id").alias("nid"), F.col(col).alias("_cv"), "_nrm"
     )
-    graph_memo = (
-        (spark.sparkContext.applicationId, cache_key, n_centroids, seed, col, m)
-        if cache_key is not None
-        else None
-    )
-    graph = _KNN_GRAPH_CACHE.get(graph_memo) if graph_memo is not None else None
-    if graph is None:
+
+    def build() -> DataFrame:
         cents = ivf_centroids(emb, n_centroids, col, seed, cache_key=cache_key)
         probe2 = _probe_udf(cents, 2)
         corpus2 = emb.select(
@@ -2032,7 +1975,7 @@ def knn_graph_beam(
         pw = Window.partitionBy("src").orderBy(
             F.desc("_cos"), F.asc("dst")
         )
-        graph = (
+        return (
             a.join(b, "cell")
             .filter(F.col("src") != F.col("dst"))
             .select("src", "dst")
@@ -2047,8 +1990,10 @@ def knn_graph_beam(
             .select("src", "dst")
             .localCheckpoint(eager=True)
         )
-        if graph_memo is not None:
-            _KNN_GRAPH_CACHE[graph_memo] = graph
+
+    graph = memo(
+        emb.sparkSession, cache_key, ("knn_graph_beam", n_centroids, col, seed, m), build
+    )
     # IVF-routed entries: the query's own (1-probe) cell's members,
     # from the memoized posting lists
     corpus_cells, q_cells = ivf_cell_tables(

@@ -20,7 +20,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ecommerce_realtime_pipeline_spark.session import materialize as _materialize
-from ecommerce_realtime_pipeline_spark.session import overlapped
+from ecommerce_realtime_pipeline_spark.session import memo, overlapped
 
 from . import indexfmt
 
@@ -453,9 +453,6 @@ def apply_merge(seqs: DataFrame, w1: str, w2: str) -> DataFrame:
     )
 
 
-_BPE_CACHE: dict = {}
-
-
 def bpe_train(
     words: DataFrame, n_merges: int, cache_key: str | None = None
 ) -> tuple[list[tuple], DataFrame]:
@@ -475,36 +472,31 @@ def bpe_train(
     same bounded-collect class as the Lloyd centroid pick; sequences
     are localCheckpointed per round so round k doesn't recompute
     rounds 1..k-1. Like the quantizer builds, training is build-once/
-    serve-many: memoized per session under ``cache_key``."""
-    spark = words.sparkSession
-    memo = (
-        (spark.sparkContext.applicationId, cache_key, n_merges)
-        if cache_key is not None
-        else None
-    )
-    if memo is not None and memo in _BPE_CACHE:
-        return _BPE_CACHE[memo]
-    seqs = bpe_init_seqs(words).transform(_lazy_materialize)
-    merges: list[tuple] = []
-    for r in range(1, n_merges + 1):
-        top = (
-            _pair_counts(seqs)
-            .orderBy(F.desc("pair_count"), "w1", "w2")
-            .limit(1)
-            .collect()
-        )
-        if not top:
-            break
-        t = top[0]
-        merges.append((r, t.w1, t.w2, t.w1 + t.w2, t.pair_count))
-        # superseded checkpoints are reclaimed by the ContextCleaner
-        # once unreferenced (DataFrame.unpersist would be a no-op on
-        # localCheckpoint blocks); vocab-sized state keeps the window
-        # of live copies small
-        seqs = apply_merge(seqs, t.w1, t.w2).transform(_lazy_materialize)
-    if memo is not None:
-        _BPE_CACHE[memo] = (merges, seqs)
-    return merges, seqs
+    serve-many: memoized per session under ``cache_key``
+    (``session.memo``)."""
+
+    def build() -> tuple[list[tuple], DataFrame]:
+        seqs = bpe_init_seqs(words).transform(_lazy_materialize)
+        merges: list[tuple] = []
+        for r in range(1, n_merges + 1):
+            top = (
+                _pair_counts(seqs)
+                .orderBy(F.desc("pair_count"), "w1", "w2")
+                .limit(1)
+                .collect()
+            )
+            if not top:
+                break
+            t = top[0]
+            merges.append((r, t.w1, t.w2, t.w1 + t.w2, t.pair_count))
+            # superseded checkpoints are reclaimed by the ContextCleaner
+            # once unreferenced (DataFrame.unpersist would be a no-op on
+            # localCheckpoint blocks); vocab-sized state keeps the window
+            # of live copies small
+            seqs = apply_merge(seqs, t.w1, t.w2).transform(_lazy_materialize)
+        return merges, seqs
+
+    return memo(words.sparkSession, cache_key, ("bpe_train", n_merges), build)
 
 
 def bpe_learn_merges(

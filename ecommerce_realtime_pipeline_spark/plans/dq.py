@@ -23,8 +23,6 @@ Scale stance (100 TB):
 
 from __future__ import annotations
 
-from functools import reduce
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -45,7 +43,9 @@ def _cnt_if(cond, alias: str):
 def dq_fk_orphans(spark: SparkSession, sf_dir: str) -> DataFrame:
     """R6: orphan-row counts for every FK relationship in the testdata
     star schema (orders→customer, lineitem→orders, lineitem→part,
-    events→customer). One row, four counts."""
+    events→customer). One row, four counts. SQL FK semantics: a NULL
+    reference is not checked (``dq_constraint_violations`` counts it
+    as ``null_custkey``/``null_user_id``), so it is no orphan."""
     orders = load_table(spark, sf_dir, "orders")
     customer = load_table(spark, sf_dir, "customer")
     lineitem = load_table(spark, sf_dir, "lineitem")
@@ -54,7 +54,8 @@ def dq_fk_orphans(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def orphans(child: DataFrame, fk: str, parent: DataFrame, pk: str, alias: str) -> DataFrame:
         return (
-            child.join(parent.select(pk).distinct(), child[fk] == parent[pk], "left_anti")
+            child.filter(child[fk].isNotNull())
+            .join(parent.select(pk).distinct(), child[fk] == parent[pk], "left_anti")
             .agg(F.count("*").alias(alias))
         )
 
@@ -146,7 +147,9 @@ def dq_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     sets (key-column-pruned scans; Catalyst broadcasts small key sets,
     AQE shuffles fact-sized ones). The naive form — separate queries per
     rule family — scanned orders/lineitem 3-5× each. The 1-row
-    aggregates are then unpivoted and stacked with unionByName."""
+    aggregates are then unpivoted and stacked with unionByName. An FK
+    orphan is a non-NULL reference without a parent, as in
+    ``dq_fk_orphans``."""
     orders = load_table(spark, sf_dir, "orders")
     customer = load_table(spark, sf_dir, "customer")
     lineitem = load_table(spark, sf_dir, "lineitem")
@@ -191,42 +194,17 @@ def dq_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     pa = part.agg((F.count("*") - F.countDistinct("p_partkey")).alias("part_pk_dups"))
 
-    table_of = {
-        "null_custkey": "orders",
-        "neg_totalprice": "orders",
-        "bad_status": "orders",
-        "orders_no_customer": "orders",
-        "orders_pk_dups": "orders",
-        "nonpos_quantity": "lineitem",
-        "neg_extendedprice": "lineitem",
-        "bad_discount": "lineitem",
-        "lineitem_no_order": "lineitem",
-        "lineitem_no_part": "lineitem",
-        "lineitem_line_dups": "lineitem",
-        "bad_event_type": "events",
-        "null_user_id": "events",
-        "events_no_user": "events",
-        "customer_pk_dups": "customer",
-        "part_pk_dups": "part",
-    }
-
-    def melt(df: DataFrame) -> DataFrame:
-        unp = df.unpivot([], df.columns, "rule", "n_violations")
-        table_expr = reduce(
-            lambda acc, kv: acc.when(F.col("rule") == kv[0], F.lit(kv[1])),
-            table_of.items(),
-            F.when(F.lit(False), F.lit("")),
-        )
-        return unp.select(
-            table_expr.alias("table_name"), "rule", F.col("n_violations").cast("long")
+    def melt(df: DataFrame, table: str) -> DataFrame:
+        return df.unpivot([], df.columns, "rule", "n_violations").select(
+            F.lit(table).alias("table_name"), "rule", F.col("n_violations").cast("long")
         )
 
     return (
-        melt(o)
-        .unionByName(melt(li))
-        .unionByName(melt(ev))
-        .unionByName(melt(cu))
-        .unionByName(melt(pa))
+        melt(o, "orders")
+        .unionByName(melt(li, "lineitem"))
+        .unionByName(melt(ev, "events"))
+        .unionByName(melt(cu, "customer"))
+        .unionByName(melt(pa, "part"))
     )
 
 
@@ -495,16 +473,20 @@ ORACLES: dict[str, str] = {
     "dq_fk_orphans": """
         SELECT
           (SELECT count(*) FROM orders o
-             WHERE NOT EXISTS (SELECT 1 FROM customer c WHERE c.c_custkey = o.o_custkey)
+             WHERE o.o_custkey IS NOT NULL
+               AND NOT EXISTS (SELECT 1 FROM customer c WHERE c.c_custkey = o.o_custkey)
           ) AS orders_no_customer,
           (SELECT count(*) FROM lineitem l
-             WHERE NOT EXISTS (SELECT 1 FROM orders o WHERE o.o_orderkey = l.l_orderkey)
+             WHERE l.l_orderkey IS NOT NULL
+               AND NOT EXISTS (SELECT 1 FROM orders o WHERE o.o_orderkey = l.l_orderkey)
           ) AS lineitem_no_order,
           (SELECT count(*) FROM lineitem l
-             WHERE NOT EXISTS (SELECT 1 FROM part p WHERE p.p_partkey = l.l_partkey)
+             WHERE l.l_partkey IS NOT NULL
+               AND NOT EXISTS (SELECT 1 FROM part p WHERE p.p_partkey = l.l_partkey)
           ) AS lineitem_no_part,
           (SELECT count(*) FROM events e
-             WHERE NOT EXISTS (SELECT 1 FROM customer c WHERE c.c_custkey = e.user_id)
+             WHERE e.user_id IS NOT NULL
+               AND NOT EXISTS (SELECT 1 FROM customer c WHERE c.c_custkey = e.user_id)
           ) AS events_no_user
     """,
     "dq_duplicate_keys": """
@@ -581,16 +563,20 @@ ORACLES: dict[str, str] = {
         UNION ALL SELECT 'events', 'null_user_id', null_user_id FROM ev
         UNION ALL SELECT 'orders', 'orders_no_customer',
           (SELECT count(*) FROM orders o
-             WHERE NOT EXISTS (SELECT 1 FROM customer c WHERE c.c_custkey = o.o_custkey))
+             WHERE o.o_custkey IS NOT NULL
+               AND NOT EXISTS (SELECT 1 FROM customer c WHERE c.c_custkey = o.o_custkey))
         UNION ALL SELECT 'lineitem', 'lineitem_no_order',
           (SELECT count(*) FROM lineitem l
-             WHERE NOT EXISTS (SELECT 1 FROM orders o WHERE o.o_orderkey = l.l_orderkey))
+             WHERE l.l_orderkey IS NOT NULL
+               AND NOT EXISTS (SELECT 1 FROM orders o WHERE o.o_orderkey = l.l_orderkey))
         UNION ALL SELECT 'lineitem', 'lineitem_no_part',
           (SELECT count(*) FROM lineitem l
-             WHERE NOT EXISTS (SELECT 1 FROM part p WHERE p.p_partkey = l.l_partkey))
+             WHERE l.l_partkey IS NOT NULL
+               AND NOT EXISTS (SELECT 1 FROM part p WHERE p.p_partkey = l.l_partkey))
         UNION ALL SELECT 'events', 'events_no_user',
           (SELECT count(*) FROM events e
-             WHERE NOT EXISTS (SELECT 1 FROM customer c WHERE c.c_custkey = e.user_id))
+             WHERE e.user_id IS NOT NULL
+               AND NOT EXISTS (SELECT 1 FROM customer c WHERE c.c_custkey = e.user_id))
         UNION ALL SELECT 'customer', 'customer_pk_dups',
           (SELECT count(*) - count(DISTINCT c_custkey) FROM customer)
         UNION ALL SELECT 'orders', 'orders_pk_dups',

@@ -135,6 +135,33 @@ def materialize(df, eager: bool = True):
     return df.checkpoint(eager=eager)
 
 
+#: the build-once artifacts of :func:`memo`, by
+#: (applicationId, cache_key, *parts)
+_MEMO: dict[tuple, object] = {}
+
+
+def memo(spark, cache_key: str | None, parts: tuple, build):
+    """The one memo for the session's derived tables (IVF quantizer
+    and cells, PQ codes, k-means, the kNN graph, BPE training, the
+    near-dup cluster table): build once, serve many. With
+    ``cache_key=None`` it returns ``build()``; otherwise it builds once
+    per ``(applicationId, cache_key, *parts)`` and returns the stored
+    value afterwards. ``parts`` opens with the caller's function name
+    and holds every parameter that shapes the result. The application
+    id scopes an entry to the session that built it (a
+    localCheckpoint is only readable there); whether and where a result
+    is pinned is the caller's ``build``. Two threads that miss at once
+    both build, and ``setdefault`` keeps the first value stored, so
+    every caller of one key gets the same artifact."""
+    if cache_key is None:
+        return build()
+    key = (spark.sparkContext.applicationId, cache_key, *parts)
+    value = _MEMO.get(key)
+    if value is None:
+        value = _MEMO.setdefault(key, build())
+    return value
+
+
 #: in-flight thunks of :func:`overlapped`: two jobs fill one job's
 #: stage tail without fighting the other for executors
 OVERLAP_WIDTH = 2

@@ -120,14 +120,22 @@ def test_lsh_dim_param_skips_probe_job(spark, monkeypatch):
     monkeypatch.undo()
 
 
-def test_embedding_dim_memoized(spark):
+def test_embedding_dim_memoized(spark, monkeypatch):
+    """A memo hit runs no job: the second call under the same
+    ``cache_key`` never reaches the one-row ``.first()`` probe."""
+    from pyspark.sql import DataFrame
+
     emb = spark.createDataFrame(
         [(1, [1.0, 2.0, 3.0])], "vec_id long, embedding array<float>"
     )
-    assert SIM.embedding_dim(emb, cache_key="t1") == 3
-    assert SIM._DIM_CACHE["t1"] == 3
-    # cache hit: no DataFrame access at all
-    assert SIM.embedding_dim(None, cache_key="t1") == 3
+    assert SIM.embedding_dim(emb, cache_key="test-embedding-dim") == 3
+
+    def boom(self):
+        raise AssertionError(".first() probe job ran on a memo hit")
+
+    monkeypatch.setattr(DataFrame, "first", boom)
+    assert SIM.embedding_dim(emb, cache_key="test-embedding-dim") == 3
+    monkeypatch.undo()
 
 
 def test_quantize_int8_bounds_and_roundtrip(spark):

@@ -1,14 +1,14 @@
 """Package modules use each other's public names only: no module
 imports or reads another package module's ``_private`` name. Shared
 machinery gets a public name in the module that owns it (commit and
-lock steps in ``storage``, job overlap in ``session``, fixture
-directories, the index fixtures and the fixture harness (scratch dirs,
-conf pins, checked stream awaits) in ``plans.fixtures``, the BM25 and
-phrase serves in ``plans.textsearch``, the streaming start path in
-``streaming.ingest``, the partitioned index-segment write in
-``operators.indexfmt``). The same holds for the scripts that drive the
-package: ``bench.py``, ``__spark_entry__.py`` and ``tools/*.py``.
-Tests are exempt."""
+lock steps in ``storage``, job overlap and the build-once memo in
+``session``, fixture directories, the index fixtures and the fixture
+harness (scratch dirs, conf pins, checked stream awaits) in
+``plans.fixtures``, the BM25 and phrase serves in ``plans.textsearch``,
+the streaming start path in ``streaming.ingest``, the partitioned
+index-segment write in ``operators.indexfmt``). The same holds for
+the scripts that drive the package: ``bench.py``,
+``__spark_entry__.py`` and ``tools/*.py``. Tests are exempt."""
 
 from __future__ import annotations
 
@@ -225,3 +225,38 @@ def test_one_streaming_query_listener():
             ):
                 listeners.append(f"{name}.{node.name}")
     assert listeners == ["ecommerce_realtime_pipeline_spark.streaming.ingest.StatsListener"]
+
+
+def _module_caches(path: pathlib.Path) -> list[str]:
+    """Every module-level name ending in ``_CACHE`` bound in one
+    module (plain or annotated assignment)."""
+    found = []
+    for node in ast.parse(path.read_text()).body:
+        if isinstance(node, ast.Assign):
+            targets = node.targets
+        elif isinstance(node, ast.AnnAssign):
+            targets = [node.target]
+        else:
+            continue
+        for t in targets:
+            if isinstance(t, ast.Name) and t.id.endswith("_CACHE"):
+                found.append(t.id)
+    return found
+
+
+def test_build_once_artifacts_memoize_through_session():
+    """The session's build-once artifacts (IVF quantizer and cells, PQ
+    codes, k-means, the kNN graph, BPE training, the near-dup cluster
+    table) are memoized through ``session.memo``: no package module but
+    ``session.py`` binds a module-level ``*_CACHE`` name. The one
+    exception is ``similarity._CENTROID_TABLE_CACHE``, keyed on an
+    immutable index directory rather than on the session."""
+    caches = {
+        f"{name}.{c}"
+        for name, path in _modules().items()
+        if path.name != "session.py"
+        for c in _module_caches(path)
+    }
+    assert caches == {
+        "ecommerce_realtime_pipeline_spark.operators.similarity._CENTROID_TABLE_CACHE"
+    }

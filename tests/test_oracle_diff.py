@@ -168,3 +168,59 @@ def test_degenerate_divides_match_oracle(spark, tmp_path):
     assert len(rows) == 4
     assert all(r["removal_effect"] == 0.0 and r["conv_full"] == 0.0 for r in rows)
     con.close()
+
+
+def test_null_fk_is_not_an_orphan(spark, tmp_path):
+    """SQL FK semantics on both engines: a NULL reference is not
+    checked (it is counted as ``null_custkey``/``null_user_id``), only
+    a non-NULL key without a parent is an orphan. ``dq_fk_orphans``,
+    ``dq_metrics`` and their oracles agree on a corpus with a NULL
+    ``o_custkey``, a NULL ``user_id`` and one real orphan order."""
+    import datetime
+
+    import duckdb
+
+    sf = str(tmp_path)
+    tables = {
+        "customer": ([(1,), (2,)], "c_custkey long"),
+        "part": ([(101,)], "p_partkey long"),
+        "orders": (
+            [(10, 1, 5.0, "O"), (11, None, 3.0, "F"), (12, 99, 1.0, "P")],
+            "o_orderkey long, o_custkey long, o_totalprice double, o_orderstatus string",
+        ),
+        "lineitem": (
+            [(10, 1, 101, 1.0, 5.0, 0.0)],
+            "l_orderkey long, l_linenumber int, l_partkey long, l_quantity double, "
+            "l_extendedprice double, l_discount double",
+        ),
+        "events": (
+            [
+                (i, datetime.datetime(2024, 1, 1, 0, i), uid, "view")
+                for i, uid in enumerate([1, None, 2])
+            ],
+            "event_id long, ts timestamp, user_id long, event_type string",
+        ),
+    }
+    con = duckdb.connect()
+    for t, (rows, schema) in tables.items():
+        spark.createDataFrame(rows, schema).coalesce(1).write.parquet(
+            f"{sf}/{t}.parquet"
+        )
+        con.execute(
+            f"CREATE VIEW {t} AS SELECT * FROM parquet_scan('{sf}/{t}.parquet/*.parquet')"
+        )
+
+    fk = QUERIES["dq_fk_orphans"](spark, sf)
+    assert_matches_oracle(fk, con, ORACLES["dq_fk_orphans"], "fk-orphans-null-fk")
+    assert fk.collect()[0].asDict() == {
+        "orders_no_customer": 1,
+        "lineitem_no_order": 0,
+        "lineitem_no_part": 0,
+        "events_no_user": 0,
+    }
+    dm = QUERIES["dq_metrics"](spark, sf)
+    assert_matches_oracle(dm, con, ORACLES["dq_metrics"], "dq-metrics-null-fk")
+    counts = {r["rule"]: r["n_violations"] for r in dm.collect()}
+    assert counts["orders_no_customer"] == 1 and counts["events_no_user"] == 0
+    assert counts["null_custkey"] == 1 and counts["null_user_id"] == 1
+    con.close()
