@@ -176,7 +176,12 @@ def time_query(spark, counter: JobCounter, fn, data_dir: str, runs: int):
     Returns ``(median_sec, run_secs, counts)``: the median wall time
     rounded to 0.1 ms, every run's wall time, and the
     ``{jobs, stages, tasks}`` the last run submitted. The counter is read
-    outside the timed window. A failing run raises."""
+    outside the timed window, and the testdata schemas are inferred before
+    it starts, so a query's counts do not depend on which query read a
+    table first. A failing run raises."""
+    from ecommerce_realtime_pipeline_spark.catalog import infer_schemas
+
+    infer_schemas(spark, data_dir)
     times = []
     try:
         for _ in range(runs):

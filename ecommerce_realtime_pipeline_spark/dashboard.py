@@ -27,8 +27,12 @@ from decimal import Decimal
 
 from pyspark.sql import SparkSession
 
+from ecommerce_realtime_pipeline_spark.schemas import GOLD_MART_SCHEMAS
+from ecommerce_realtime_pipeline_spark.storage import read_parquet
+
 #: marts written by ``pipeline.build_marts`` — the reference README's
-#: declared dashboard panels, in display order.
+#: declared dashboard panels, in display order (each read with its
+#: declared schema, ``schemas.GOLD_MART_SCHEMAS``).
 MART_NAMES = (
     "orders_per_minute",
     "revenue_by_status",
@@ -56,7 +60,8 @@ def read_marts(spark: SparkSession, gold_dir: str) -> dict[str, list[dict]]:
         path = os.path.join(gold_dir, name)
         if not os.path.isdir(path):
             continue
-        rows = spark.read.parquet(path).collect()  # mart-sized by design
+        # mart-sized by design
+        rows = read_parquet(spark, path, GOLD_MART_SCHEMAS[name]).collect()
         out[name] = [
             {k: _plain(v) for k, v in r.asDict().items()} for r in rows
         ]

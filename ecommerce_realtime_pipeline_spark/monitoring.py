@@ -22,6 +22,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 
 from ecommerce_realtime_pipeline_spark.catalog import TABLES, load_table
+from ecommerce_realtime_pipeline_spark.schemas import CONSUMER_OFFSETS_SCHEMA
+from ecommerce_realtime_pipeline_spark.storage import read_parquet
 
 OK = "ok"
 FAIL = "fail"
@@ -66,7 +68,7 @@ def _offsets_check(
     try:
         if not os.path.exists(offsets_path):
             return ("consumer_offsets", FAIL, "ledger missing")
-        offs = spark.read.parquet(offsets_path)
+        offs = read_parquet(spark, offsets_path, CONSUMER_OFFSETS_SCHEMA)
         row = offs.agg({"last_updated": "max"}).collect()[0]
         newest = row[0]
         if newest is None:

@@ -505,7 +505,7 @@ def required(m: dict, key: str):
 def _union(spark, path: str, children: list[str], cols: list[str]) -> DataFrame:
     return reduce(
         lambda a, b: a.unionByName(b),
-        [spark.read.parquet(f"{path}/{c}").select(*cols) for c in children],
+        [storage.read_parquet(spark, f"{path}/{c}").select(*cols) for c in children],
     )
 
 
@@ -570,7 +570,7 @@ def delete_ids(
     plane_children = required(m, plane)
     tomb = new_dir_name("tomb")
     ids.distinct().write.mode("overwrite").parquet(f"{path}/{tomb}")
-    n = spark.read.parquet(f"{path}/{tomb}").count()
+    n = storage.read_parquet(spark, f"{path}/{tomb}").count()
     if n == 0:
         shutil.rmtree(f"{path}/{tomb}", ignore_errors=True)
         return 0

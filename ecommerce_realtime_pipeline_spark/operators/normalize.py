@@ -53,6 +53,9 @@ def parse_envelope(raw: DataFrame, entity: str) -> tuple[DataFrame, DataFrame]:
     StructType. Returns (typed, parse_quarantine); a payload that fails
     to parse (NULL struct) or lacks the entity's id is quarantined with
     the raw row intact for reprocessing (the JSONB audit-table intent).
+    ``consumed_at`` is cast to the envelope's TIMESTAMP, so the typed
+    rows match ``schemas.silver_schema`` whatever the batch frame
+    carried (a hand-built batch may hold it as an ISO string).
     """
     schema = ENTITY_SCHEMAS[entity]
     id_field = schema.fields[0].name  # product_id / customer_id / order_id / event_id
@@ -63,7 +66,11 @@ def parse_envelope(raw: DataFrame, entity: str) -> tuple[DataFrame, DataFrame]:
     good = parsed.filter(
         F.col("_payload").isNotNull() & F.col(f"_payload.{id_field}").isNotNull()
     )
-    typed = good.select(*ENVELOPE_KEY, "consumed_at", F.col("_payload.*"))
+    typed = good.select(
+        *ENVELOPE_KEY,
+        F.col("consumed_at").cast(T.TimestampType()).alias("consumed_at"),
+        F.col("_payload.*"),
+    )
     return typed, bad
 
 

@@ -25,6 +25,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ecommerce_realtime_pipeline_spark import storage
 from ecommerce_realtime_pipeline_spark.session import memo, overlapped
 
 from . import indexfmt
@@ -242,7 +243,7 @@ def _read_centroid_list(spark, path: str, m: dict) -> list[list[float]]:
     cached = _CENTROID_TABLE_CACHE.get(key)
     if cached is None:
         rows = (
-            spark.read.parquet(f"{path}/{m['centroids']}")
+            storage.read_parquet(spark, f"{path}/{m['centroids']}")
             .orderBy("cid")
             .collect()
         )
@@ -600,8 +601,7 @@ def _seek_cell_dirs(
     schema = f"neighbor_id bigint, _v array<{vtype}>"
     dirs = {f"cell={c}": c for c in dict.fromkeys(int(c) for c in cell_ids)}
     parts = [
-        spark.read.schema(schema)
-        .parquet(f"{path}/{s}/{name}")
+        storage.read_parquet(spark, f"{path}/{s}/{name}", schema)
         .withColumn("cell", F.lit(dirs[name]).cast("int"))
         for s in m["segments"]
         for name in indexfmt.existing_dirs(spark, f"{path}/{s}", list(dirs))

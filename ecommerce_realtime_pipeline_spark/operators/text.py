@@ -19,6 +19,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ecommerce_realtime_pipeline_spark import storage
 from ecommerce_realtime_pipeline_spark.session import materialize as _materialize
 from ecommerce_realtime_pipeline_spark.session import memo, overlapped
 
@@ -638,13 +639,13 @@ def _text_body(docs: DataFrame, parent: str, caller: str, m: dict) -> tuple:
     stats = base.agg(F.count("*").alias("n_docs"), F.sum("dl").alias("sum_dl"))
     if m:
         dfreq = (
-            spark.read.parquet(f"{parent}/{m['dfreq']}")
+            storage.read_parquet(spark, f"{parent}/{m['dfreq']}")
             .unionByName(dfreq)
             .groupBy("token")
             .agg(F.sum("df").cast("long").alias("df"))
         )
         stats = (
-            spark.read.parquet(f"{parent}/{m['stats']}")
+            storage.read_parquet(spark, f"{parent}/{m['stats']}")
             .unionByName(stats)
             .agg(
                 F.sum("n_docs").cast("long").alias("n_docs"),
@@ -724,8 +725,8 @@ def read_text_index(
     postings = indexfmt.read_live(
         spark, path, m, m["segments"], ["token", "doc_id", "tf", "dl"], "doc_id"
     )
-    dfreq = spark.read.parquet(f"{path}/{m['dfreq']}")
-    stats = spark.read.parquet(f"{path}/{m['stats']}")
+    dfreq = storage.read_parquet(spark, f"{path}/{m['dfreq']}")
+    stats = storage.read_parquet(spark, f"{path}/{m['stats']}")
     return postings, dfreq, stats
 
 
@@ -960,7 +961,7 @@ def _pos_body(docs: DataFrame, parent: str, caller: str, m: dict) -> tuple:
     if not values:
         return values, {}
     docs_tbl = indexfmt.new_dir_name("docs")
-    docs.sparkSession.read.parquet(f"{parent}/{seg}").select(
+    storage.read_parquet(docs.sparkSession, f"{parent}/{seg}").select(
         "doc_id"
     ).distinct().write.mode("overwrite").parquet(f"{parent}/{docs_tbl}")
     return values, {
@@ -1105,9 +1106,9 @@ def _seek_token_dirs(
     for s in m["segments"]:
         for name in indexfmt.existing_dirs(spark, f"{path}/{s}", list(dirs)):
             parts.append(
-                spark.read.schema(file_schema)
-                .parquet(f"{path}/{s}/{name}")
-                .withColumn("token", F.lit(dirs[name]))
+                storage.read_parquet(
+                    spark, f"{path}/{s}/{name}", file_schema
+                ).withColumn("token", F.lit(dirs[name]))
             )
     if not parts:
         return None
@@ -1171,8 +1172,8 @@ def read_text_index_meta(
     two frames."""
     m = indexfmt.read_manifest(path, TEXT_INDEX_FORMAT, version=version)
     return (
-        spark.read.parquet(f"{path}/{m['dfreq']}"),
-        spark.read.parquet(f"{path}/{m['stats']}"),
+        storage.read_parquet(spark, f"{path}/{m['dfreq']}"),
+        storage.read_parquet(spark, f"{path}/{m['stats']}"),
     )
 
 

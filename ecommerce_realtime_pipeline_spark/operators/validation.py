@@ -203,16 +203,17 @@ def entity_row_rules(name: str) -> list[RowRule]:
     raise KeyError(name)
 
 
-def validate_entity(
+def check_entity(
     name: str,
     df: DataFrame,
     parents: dict[str, DataFrame] | None = None,
-) -> tuple[DataFrame, DataFrame, DataFrame]:
+) -> DataFrame:
     """Full constraint pass for one entity: row rules + uniqueness + FKs.
 
-    Returns (valid, quarantine, metrics). ``parents`` supplies FK
-    targets keyed by entity name (e.g. {"customers": df}); omitted
-    parents skip their FK rule (batch-local validation).
+    Returns every row of ``df`` with its ``violations`` array (empty for
+    a valid row). ``parents`` supplies FK targets keyed by entity name
+    (e.g. {"customers": df}); omitted parents skip their FK rule
+    (batch-local validation).
     """
     parents = parents or {}
     out = check_rows(df, entity_row_rules(name))
@@ -231,8 +232,16 @@ def validate_entity(
         out = check_fk(out, "customer_id", parents["customers"], "customer_id", "order_fk_customer")
     if name == "events" and "customers" in parents:
         out = check_fk(out, "customer_id", parents["customers"], "customer_id", "event_fk_customer")
+    return out
 
-    valid, quarantine = split_valid(out)
+
+def validate_entity(
+    name: str,
+    df: DataFrame,
+    parents: dict[str, DataFrame] | None = None,
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """:func:`check_entity` routed: returns (valid, quarantine, metrics)."""
+    valid, quarantine = split_valid(check_entity(name, df, parents))
     return valid, quarantine, quarantine_metrics(quarantine, name)
 
 

@@ -53,28 +53,28 @@ def build_marts(spark: SparkSession, silver_dir: str, gold_dir: str) -> dict[str
     line, corrupt total, FK orphan) must not flow into the dashboards
     it was flagged out of (gate and marts would otherwise contradict
     each other; test-pinned on the duplicate item lines). Each mart is
-    a full (mart-sized, tiny) snapshot written atomically. Returns
-    mart → row count."""
+    a full (mart-sized, tiny) snapshot written atomically: one
+    partition, rows sorted within it, so a reader sees them in display
+    order without a global sort (a sample job and a range shuffle).
+    Returns mart → row count, summed from the written files' footers."""
     gate, valid_frames = dq_gate(spark, silver_dir)
     orders = valid_frames["orders"]
     items = valid_frames["order_items"]
     events = valid_frames["events"]
 
     marts: dict[str, DataFrame] = {
-        "revenue_by_status": (
-            orders.groupBy("status")
-            .agg(
+        "revenue_by_status": _one_sorted(
+            orders.groupBy("status").agg(
                 F.count("*").alias("n_orders"),
                 F.sum(F.col("total").cast("decimal(18,2)")).alias("revenue"),
-            )
-            .orderBy("status")
+            ),
+            "status",
         ),
-        "orders_per_minute": (
+        "orders_per_minute": _one_sorted(
             orders.groupBy(
                 F.date_trunc("minute", F.col("created_at")).alias("minute")
-            )
-            .agg(F.count("*").alias("n_orders"))
-            .orderBy("minute")
+            ).agg(F.count("*").alias("n_orders")),
+            "minute",
         ),
         "top_products_by_quantity": (
             items.groupBy("product_id")
@@ -87,27 +87,31 @@ def build_marts(spark: SparkSession, silver_dir: str, gold_dir: str) -> dict[str
             .orderBy(F.desc("total_quantity"), "product_id")
             .limit(10)
         ),
-        "event_type_counts": (
-            events.groupBy("event_type")
-            .agg(F.count("*").alias("n_events"))
-            .orderBy("event_type")
+        "event_type_counts": _one_sorted(
+            events.groupBy("event_type").agg(F.count("*").alias("n_events")),
+            "event_type",
         ),
     }
     marts["dq_gate"] = gate
 
     # the five marts are independent tiny snapshots — submit their
-    # write+count jobs from a small thread pool so the next mart's
+    # write jobs from a small thread pool so the next mart's
     # tasks back-fill executors freed by the previous one's tail
     # (guide §2.6 overlap). Each writes its own uuid-temp
     # dir + target path, so no shared mutable state crosses threads.
     def _write_one(name: str, df: DataFrame) -> tuple[str, int]:
         path = os.path.join(gold_dir, name)
         storage.swap_dir(df, path)
-        return name, spark.read.parquet(path).count()
+        return name, storage.parquet_rows(path)
 
     return dict(
         overlapped(*(partial(_write_one, name, df) for name, df in marts.items()))
     )
+
+
+def _one_sorted(df: DataFrame, *cols: str) -> DataFrame:
+    """A mart-sized frame as one partition sorted by ``cols``."""
+    return df.coalesce(1).sortWithinPartitions(*cols)
 
 
 def dq_gate(
@@ -123,18 +127,18 @@ def dq_gate(
     UNIQUE(order_id, product_id) would reject (seed-frozen at 5 in
     tests); corruption-enabled runs light up the other rules too.
 
-    Cost: ONE validation execution per table — the valid side is
-    localCheckpointed (that materialization is the only run of the
-    rule DAG; its count is then free) and the quarantine count is
-    total − valid with the total a cheap footer-count scan; the mart
-    builds reuse the checkpointed valid frames."""
+    Cost: ONE validation execution per table — the checked rows
+    (every silver row with its violations) are localCheckpointed, that
+    materialization being the only run of the rule DAG; one aggregate
+    over the checkpoint gives the total and valid counts, and the mart
+    builds reuse the checkpoint's valid side."""
     from ecommerce_realtime_pipeline_spark.operators import validation as V
 
     silver = {
-        e: I.read_silver(spark, os.path.join(silver_dir, e)) for e in ENTITIES
+        e: I.read_silver(spark, os.path.join(silver_dir, e), e) for e in ENTITIES
     }
-    silver["order_items"] = spark.read.parquet(
-        os.path.join(silver_dir, "order_items")
+    silver["order_items"] = I.read_bucketed(
+        spark, os.path.join(silver_dir, "order_items"), "order_items"
     )
     parents = {
         "customers": silver["customers"],
@@ -148,11 +152,12 @@ def dq_gate(
     # (guide §2.6). Results are deterministic, so the tally is
     # byte-identical to a sequential loop's.
     def _one(name: str) -> tuple[str, DataFrame, int, int]:
-        valid, _quarantine, _m = V.validate_entity(
-            name, silver[name], parents
-        )
-        valid = valid.localCheckpoint()
-        return name, valid, valid.count(), silver[name].count()
+        checked = V.check_entity(name, silver[name], parents).localCheckpoint()
+        n_total, n_valid = checked.agg(
+            F.count("*"), F.count_if(F.size(V.VIOLATIONS_COL) == 0)
+        ).first()
+        valid, _quarantine = V.split_valid(checked)
+        return name, valid, n_valid, n_total
 
     results = overlapped(*(partial(_one, n) for n in (*ENTITIES, "order_items")))
     valid_frames = {name: valid for name, valid, _nv, _nt in results}
@@ -253,11 +258,7 @@ def run_pipeline(
             )
     # five independent footer-count scans — overlap them (guide §2.6)
     def _count_one(e: str) -> tuple[str, int]:
-        if e == "order_items":
-            df = spark.read.parquet(os.path.join(silver, e))
-        else:
-            df = I.read_silver(spark, os.path.join(silver, e))
-        return e, df.count()
+        return e, I.read_bucketed(spark, os.path.join(silver, e), e).count()
 
     silver_counts = dict(
         overlapped(*(partial(_count_one, e) for e in (*ENTITIES, "order_items")))

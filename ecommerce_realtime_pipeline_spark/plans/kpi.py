@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ecommerce_realtime_pipeline_spark.catalog import load_table
+from ecommerce_realtime_pipeline_spark.storage import read_parquet
 from ecommerce_realtime_pipeline_spark.plans import fixtures as FX
 
 # the KPI oracles live in their own module; bound here so every plan
@@ -622,7 +623,7 @@ def events_zorder_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     with FX.scratch_dir("eng_zorder_q_") as tmp:
         write_zordered(events, f"{tmp}/events_z", ["user_id", "value"])
-        back = spark.read.parquet(f"{tmp}/events_z")
+        back = read_parquet(spark, f"{tmp}/events_z")
         return (
             back.groupBy("event_type")
             .agg(

@@ -32,9 +32,11 @@ from functools import partial
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ecommerce_realtime_pipeline_spark import storage
 from ecommerce_realtime_pipeline_spark.operators import sketch as SK
 from ecommerce_realtime_pipeline_spark.pipeline import run_pipeline
 from ecommerce_realtime_pipeline_spark.plans import fixtures as FX
+from ecommerce_realtime_pipeline_spark.schemas import CONSUMER_OFFSETS_SCHEMA
 from ecommerce_realtime_pipeline_spark.streaming import contagg as CA
 from ecommerce_realtime_pipeline_spark.streaming import embdedup as ED
 from ecommerce_realtime_pipeline_spark.streaming import ingest as I
@@ -96,7 +98,11 @@ def _sink_after_runs(
         src, sink, ckpt = (os.path.join(tmp, d) for d in ("src", "sink", "ckpt"))
         with FX.pinned_conf(spark, conf):
             FX.run_batches(src, batches, lambda: start(spark, src, sink, ckpt), what)
-        return spark.read.parquet(sink).orderBy(*order).localCheckpoint(eager=True)
+        return (
+            storage.read_parquet(spark, sink)
+            .orderBy(*order)
+            .localCheckpoint(eager=True)
+        )
 
 
 def streaming_ingest_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -121,7 +127,7 @@ def streaming_ingest_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
                 spark, f"{topics}/customers", "customers", f"{tmp}/silver", f"{tmp}/ckpt"
             )
             FX.await_run(q, "streaming_ingest_roundtrip")
-        silver = I.read_silver(spark, f"{tmp}/silver")
+        silver = I.read_silver(spark, f"{tmp}/silver", "customers")
         # localCheckpoint pins the result blocks so the temp dirs can go
         # away before the caller consumes the frame (bench runs this 3×)
         return (
@@ -223,7 +229,9 @@ def monitoring_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.sum("records_failed").alias("records_failed_total"),
             ).collect()[0]
             orow = (
-                spark.read.parquet(f"{tmp}/offsets")
+                storage.read_parquet(
+                    spark, f"{tmp}/offsets", CONSUMER_OFFSETS_SCHEMA
+                )
                 .agg(
                     F.count("*").alias("n_partitions"),
                     F.sum("offset_committed").alias("offsets_committed_sum"),
@@ -403,7 +411,7 @@ def streaming_late_drop_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             for p in q.recentProgress
             for op in p.stateOperators
         )
-        out = spark.read.parquet(sink)
+        out = storage.read_parquet(spark, sink)
         n_windows = out.select("window_start").distinct().count()
         n_rows = int(
             out.agg(F.sum("n").alias("s")).collect()[0]["s"] or 0
@@ -659,7 +667,7 @@ def streaming_dim_enrichment(spark: SparkSession, sf_dir: str) -> DataFrame:
                 I.run_dim_enrichment(spark, src, dim, sink, ckpt),
                 "streaming_dim_enrichment",
             )
-        out = spark.read.parquet(sink).select(
+        out = storage.read_parquet(spark, sink).select(
             "purchase_id", "customer_id", "segment"
         )
         return out.orderBy("purchase_id").localCheckpoint(eager=True)
@@ -905,11 +913,11 @@ def silver_compaction_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         with FX.pinned_conf(spark, FX.STATE_PARTITIONS):
             with FX.pinned_conf(spark, {"spark.sql.adaptive.enabled": "false"}):
                 I.upsert_batch(spark, batch, "customers", silver)
-            rows_before = I.read_silver(spark, silver).count()
+            rows_before = I.read_silver(spark, silver, "customers").count()
             files_before = nfiles(silver)
             report = I.compact_buckets(spark, silver)
             files_after = nfiles(silver)
-            after = I.read_silver(spark, silver)
+            after = I.read_silver(spark, silver, "customers")
             rows_after = after.count()
             distinct_after = after.select("customer_id").distinct().count()
     return spark.createDataFrame(
@@ -1038,7 +1046,7 @@ def cdc_bucket_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count("*").alias("n_rows"),
             F.sum(F.col("total").cast("decimal(18,2)")).alias("sum_val"),
         )
-        prev_agg = agg(spark.read.parquet(old_snap))
+        prev_agg = agg(I.read_bucketed(spark, old_snap, "orders"))
         refreshed = I.cdc_refresh_buckets(
             spark, old_snap, silver, "orders", touched, "status", "total",
             prev_agg,
@@ -1047,7 +1055,7 @@ def cdc_bucket_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
             r["status"]: (r["n_rows"], str(r["sum_val"])) for r in df.collect()
         }
         rmap = as_map(refreshed)
-        matches = rmap == as_map(agg(spark.read.parquet(silver)))
+        matches = rmap == as_map(agg(I.read_bucketed(spark, silver, "orders")))
     return spark.createDataFrame(
         [
             (

@@ -26,6 +26,7 @@ from ecommerce_realtime_pipeline_spark.operators import similarity as SIM
 from ecommerce_realtime_pipeline_spark.operators import text as TX
 from ecommerce_realtime_pipeline_spark.plans import fixtures as FX
 from ecommerce_realtime_pipeline_spark.plans.ann import ivf_tombstoned_sem_leg_sql
+from ecommerce_realtime_pipeline_spark.storage import read_parquet
 from ecommerce_realtime_pipeline_spark.streaming.ingest import start_available_now
 
 #: query name -> DuckDB oracle SQL, one entry per query of this module
@@ -1510,7 +1511,7 @@ def docs_pos_index_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         sidecar = reduce(
             lambda a, b: a.unionByName(b),
             [
-                spark.read.parquet(f"{path}/{t}").select("doc_id")
+                read_parquet(spark, f"{path}/{t}").select("doc_id")
                 for t in m["docs"]
             ],
         )

@@ -132,6 +132,68 @@ ENTITY_SCHEMAS: dict[str, T.StructType] = {
     "events": EVENT_SCHEMA,
 }
 
+# Audit columns stamped at every silver write (R10, normalize.stamp_audit)
+AUDIT_FIELDS = [
+    T.StructField("inserted_at", T.TimestampType(), False),
+    T.StructField("last_modified", T.TimestampType(), False),
+]
+
+
+def silver_schema(entity: str) -> T.StructType:
+    """The data columns of one silver table's files, in the order the
+    upsert writes them: the envelope key, ``consumed_at``, the entity
+    fields and the audit columns. The ``bucket`` partition column is not
+    in the files; a read discovers it from the path."""
+    envelope = [
+        f
+        for f in RAW_ENVELOPE_SCHEMA.fields
+        if f.name in ("topic", "topic_partition", "topic_offset", "consumed_at")
+    ]
+    return T.StructType(envelope + ENTITY_SCHEMAS[entity].fields + AUDIT_FIELDS)
+
+
+# ---------------------------------------------------------------------------
+# Gold marts (pipeline.build_marts) — the dashboard panels
+# ---------------------------------------------------------------------------
+
+REVENUE = T.DecimalType(28, 2)  # sum() of decimal(18,2)
+
+GOLD_MART_SCHEMAS: dict[str, T.StructType] = {
+    "revenue_by_status": T.StructType(
+        [
+            T.StructField("status", T.StringType(), True),
+            T.StructField("n_orders", T.LongType(), False),
+            T.StructField("revenue", REVENUE, True),
+        ]
+    ),
+    "orders_per_minute": T.StructType(
+        [
+            T.StructField("minute", T.TimestampType(), True),
+            T.StructField("n_orders", T.LongType(), False),
+        ]
+    ),
+    "top_products_by_quantity": T.StructType(
+        [
+            T.StructField("product_id", T.StringType(), True),
+            T.StructField("total_quantity", T.LongType(), True),
+            T.StructField("revenue", REVENUE, True),
+        ]
+    ),
+    "event_type_counts": T.StructType(
+        [
+            T.StructField("event_type", T.StringType(), True),
+            T.StructField("n_events", T.LongType(), False),
+        ]
+    ),
+    "dq_gate": T.StructType(
+        [
+            T.StructField("table_name", T.StringType(), True),
+            T.StructField("n_valid", T.LongType(), True),
+            T.StructField("n_quarantined", T.LongType(), True),
+        ]
+    ),
+}
+
 # Domains enforced by SQL CHECK constraints (02_create_tables.sql:81-82,113-114)
 ORDER_STATUSES = ("pending", "processing", "shipped", "delivered", "cancelled")
 EVENT_TYPES = ("page_view", "product_view", "add_to_cart", "remove_from_cart", "purchase")

@@ -1,5 +1,16 @@
-"""Crash-safe commit and lock steps shared by the engine's exactly-once
-protocols: the offsets ledger and sketch/aggregate snapshots
+"""The engine's parquet read step and the crash-safe commit and lock
+steps shared by its exactly-once protocols.
+
+Every parquet read goes through :func:`read_parquet`. The engine's
+mutable tables (silver, ``order_items``, the offsets ledger, the gold
+marts) pass their declared schema (``schemas.py``); every other read
+(testdata files, index segments and sidecars, snapshots replaced
+whole, journals) has its schema inferred once per file version, so no
+read path pays Spark's footer-reading inference job twice.
+:func:`parquet_rows` counts a written directory's rows from its
+footers without a job.
+
+The commit steps back the offsets ledger and sketch/aggregate snapshots
 (:func:`swap_dir`), the contagg epoch ledger stamps and the dedup
 journal stamps (:func:`replace_file` / :func:`read_file`), the index
 ``_CURRENT`` flip (:func:`replace_file` under :func:`try_lock`), and
@@ -21,7 +32,64 @@ import shutil
 import time
 import uuid
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
+
+from ecommerce_realtime_pipeline_spark.session import memo
+
+
+def parquet_schema(spark: SparkSession, path: str) -> StructType:
+    """The schema Spark infers for the parquet file or directory at
+    ``path``, memoized per file version — ``(path, st_ino,
+    st_mtime_ns, st_size)`` through :func:`session.memo` — so the
+    footer-reading inference job runs once per version. Raises
+    ``OSError`` when ``path`` cannot be stat'ed."""
+    st = os.stat(path)
+    return memo(
+        spark,
+        "parquet_schema",
+        ("parquet_schema", path, st.st_ino, st.st_mtime_ns, st.st_size),
+        lambda: spark.read.parquet(path).schema,
+    )
+
+
+def read_parquet(
+    spark: SparkSession, path: str, schema: StructType | str | None = None
+) -> DataFrame:
+    """The package's one parquet read. With ``schema`` it is
+    ``spark.read.schema(schema).parquet(path)``: no inference, and
+    partition columns the schema leaves out are still discovered from
+    the path. Without it, the read uses :func:`parquet_schema`: the
+    schema Spark infers (one footer-reading Spark job) is memoized per
+    file version, and every later read of that version starts no job.
+
+    The memo suits paths whose schema is fixed once published: single
+    files, published segment and sidecar directories, and directories
+    replaced whole (a swap or an overwrite gives a new inode, and an
+    entry added to or renamed in a directory moves its mtime). A file
+    appended inside one of a directory's partitions moves none of the
+    key, so the engine's mutable partitioned tables (silver,
+    ``order_items``) and its ledgers and marts pass their declared
+    schema instead. A path that cannot be stat'ed locally (missing, or
+    a URI) is read as is, so Spark reports it in its own terms."""
+    if schema is None:
+        try:
+            schema = parquet_schema(spark, path)
+        except OSError:
+            return spark.read.parquet(path)
+    return spark.read.schema(schema).parquet(path)
+
+
+def parquet_rows(path: str) -> int:
+    """Row count of an unpartitioned parquet directory, summed from its
+    files' footers on the driver: no Spark job."""
+    import pyarrow.parquet as pq
+
+    return sum(
+        pq.read_metadata(os.path.join(path, name)).num_rows
+        for name in os.listdir(path)
+        if name.endswith(".parquet") and not name.startswith((".", "_"))
+    )
 
 
 def swap_dir(df: DataFrame, path: str) -> None:

@@ -50,6 +50,7 @@ from ecommerce_realtime_pipeline_spark.streaming import journal as EJ
 from ecommerce_realtime_pipeline_spark.streaming.ingest import (
     bucket_of,
     deduped_stream,
+    read_bucketed,
     stream_envelopes,
     upsert_batch,
 )
@@ -91,6 +92,7 @@ def pruned_through(agg_path: str) -> int:
 
 def rebase_from_silver(
     spark: SparkSession,
+    entity: str,
     silver_path: str,
     agg_path: str,
     group_col: str,
@@ -113,7 +115,7 @@ def rebase_from_silver(
 
     if os.path.isdir(silver_path):
         base = (
-            spark.read.parquet(silver_path)
+            read_bucketed(spark, silver_path, entity)
             .groupBy(group_col)
             .agg(
                 F.count(F.lit(1)).alias("n_rows"),
@@ -154,10 +156,11 @@ def read_continuous_agg(spark: SparkSession, agg_path: str) -> DataFrame:
     ``base`` when no epoch has committed since the last rebase)."""
     epochs = _committed_epochs(agg_path)
     if epochs:
-        return spark.read.parquet(os.path.join(agg_path, f"v={epochs[-1]}"))
+        latest = os.path.join(agg_path, f"v={epochs[-1]}")
+        return storage.read_parquet(spark, latest)
     base = os.path.join(agg_path, _BASE_DIR)
     if os.path.isdir(base):
-        return spark.read.parquet(base)
+        return storage.read_parquet(spark, base)
     raise FileNotFoundError(f"no committed aggregate version in {agg_path}")
 
 
@@ -193,7 +196,7 @@ def refresh_epoch(
             .collect()
         ]
         pre = (
-            spark.read.parquet(silver_path)
+            read_bucketed(spark, silver_path, entity)
             .filter(F.col("bucket").isin(buckets))
             .join(F.broadcast(keys), id_field, "left_semi")
         )
@@ -306,7 +309,7 @@ def run_ingest_with_agg(
         pruned_through(agg_path) >= 0 or bool(_committed_epochs(agg_path)),
         stamp=_LEDGER_ID_FILE,
         on_mismatch=lambda: rebase_from_silver(
-            spark, silver_path, agg_path, group_col, sum_col
+            spark, entity, silver_path, agg_path, group_col, sum_col
         ),
     )
 

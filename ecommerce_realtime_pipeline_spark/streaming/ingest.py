@@ -53,9 +53,12 @@ from pyspark.sql.streaming import StreamingQueryListener
 from ecommerce_realtime_pipeline_spark import storage
 from ecommerce_realtime_pipeline_spark.operators import normalize as N
 from ecommerce_realtime_pipeline_spark.schemas import (
+    CONSUMER_OFFSETS_SCHEMA,
     ENTITY_SCHEMAS,
+    ORDER_ITEMS_TABLE_SCHEMA,
     PROCESSING_STATS_SCHEMA,
     RAW_ENVELOPE_SCHEMA,
+    silver_schema,
 )
 
 ENVELOPE_KEY = N.ENVELOPE_KEY
@@ -115,10 +118,24 @@ def bucket_of(id_col: str, n_buckets: int = N_BUCKETS):
     return F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_buckets)).cast("int")
 
 
-def read_silver(spark: SparkSession, path: str) -> DataFrame:
+def read_bucketed(spark: SparkSession, path: str, entity: str) -> DataFrame:
+    """Read the bucketed silver table of ``entity`` (or ``order_items``)
+    with its declared schema, ``bucket`` discovered from the path."""
+    schema = (
+        ORDER_ITEMS_TABLE_SCHEMA if entity == "order_items" else silver_schema(entity)
+    )
+    return storage.read_parquet(spark, path, schema)
+
+
+def read_silver(spark: SparkSession, path: str, entity: str | None = None) -> DataFrame:
     """Read a bucketed silver table without the internal ``bucket``
-    partition column (the user-facing schema)."""
-    df = spark.read.parquet(path)
+    partition column (the user-facing schema). With ``entity`` the read
+    uses the declared schema; without it, the schema memoized for the
+    directory's current version."""
+    if entity is None:
+        df = storage.read_parquet(spark, path)
+    else:
+        df = read_bucketed(spark, path, entity)
     return df.drop("bucket") if "bucket" in df.columns else df
 
 
@@ -165,7 +182,7 @@ def upsert_batch(
     if not touched:
         return []
     if os.path.exists(silver_path):
-        current = spark.read.parquet(silver_path).filter(
+        current = read_bucketed(spark, silver_path, entity).filter(
             F.col("bucket").isin(touched)
         )
         merged = current.unionByName(typed, allowMissingColumns=True)
@@ -187,7 +204,9 @@ def compact_buckets(
     unchanged). Pure layout change — row content is identical, which
     the tests assert. `repartition("bucket")` puts every row of a
     bucket in exactly one task, so the rewrite emits exactly one file
-    per bucket directory.
+    per bucket directory. The read keeps the files' own schema, memoized
+    for the directory's version: every bucket swap renames entries of
+    the table directory, which moves its mtime.
 
     Returns {bucket: (files_before, files_after)} for the compacted
     buckets. At 100 TB this is the scheduled maintenance job every
@@ -206,7 +225,7 @@ def compact_buckets(
     if not frag:
         return report
     df = (
-        spark.read.parquet(silver_path)
+        storage.read_parquet(spark, silver_path)
         .filter(F.col("bucket").isin(frag))
         .repartition("bucket")
     )
@@ -251,7 +270,7 @@ def cdc_refresh_buckets(
 
     def pruned(path: str) -> DataFrame:
         return (
-            spark.read.parquet(path)
+            read_bucketed(spark, path, entity)
             .filter(F.col("bucket").isin(touched))
             .select(*cols)
         )
@@ -272,7 +291,7 @@ def record_offsets(
     )
     if os.path.exists(offsets_path):
         merged = (
-            spark.read.parquet(offsets_path)
+            storage.read_parquet(spark, offsets_path, CONSUMER_OFFSETS_SCHEMA)
             .select(
                 "topic",
                 F.col("partition_id").alias("topic_partition"),
@@ -488,7 +507,7 @@ def run_ingest(
             return
         touched = upsert_batch(spark, batch_df, entity, silver_path)
         if items_path and entity == "orders" and touched:
-            silver = spark.read.parquet(silver_path).filter(
+            silver = read_bucketed(spark, silver_path, entity).filter(
                 F.col("bucket").isin(touched)
             )
             items = N.explode_order_items(silver.drop("bucket")).withColumn(
@@ -605,7 +624,7 @@ def run_dim_enrichment(
     parsed = parse_events(stream_envelopes(spark, source_dir)).select(
         F.col("event_id").alias("purchase_id"), "customer_id"
     )
-    dim = F.broadcast(spark.read.parquet(dim_dir))
+    dim = F.broadcast(storage.read_parquet(spark, dim_dir))
     enriched = parsed.join(dim, "customer_id", "left").select(
         "purchase_id", "customer_id", "segment"
     )

@@ -45,6 +45,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ecommerce_realtime_pipeline_spark import storage
 from ecommerce_realtime_pipeline_spark.operators import dedup as DD
 from ecommerce_realtime_pipeline_spark.streaming import journal as EJ
 
@@ -69,7 +70,7 @@ def has_kind(work_dir: str, kind: str) -> bool:
 
 
 def read_kind(spark: SparkSession, work_dir: str, kind: str) -> DataFrame:
-    return spark.read.parquet(journal_path(work_dir)).filter(
+    return storage.read_parquet(spark, journal_path(work_dir)).filter(
         F.col("kind") == kind
     )
 

@@ -44,7 +44,7 @@ def merge_hll_batch(
     replay (max of max)."""
     new = SK.hll_registers(batch_df, "user_id", ["event_type"])
     if os.path.exists(regs_path):
-        old = spark.read.parquet(regs_path)
+        old = storage.read_parquet(spark, regs_path)
         merged = SK.hll_merge([old, new], ["event_type"])
     else:
         merged = SK.hll_merge([new], ["event_type"])
@@ -65,7 +65,7 @@ def run_hll_stream(
 
 def estimates(spark: SparkSession, regs_path: str) -> DataFrame:
     """Fold the maintained registers → per-type estimate."""
-    regs = spark.read.parquet(regs_path)
+    regs = storage.read_parquet(spark, regs_path)
     return SK.hll_fold(regs, ["event_type"]).select(
         "event_type", F.round("hll_estimate", 2).alias("hll_estimate")
     )
@@ -109,6 +109,6 @@ def cms_counters_from_journal(spark: SparkSession, journal_path: str) -> DataFra
     """Replay-idempotent fold: a re-appended epoch writes identical
     delta rows, so max-per-(epoch, r, c) dedups them exactly; the
     epoch sum then equals the true multiset counters."""
-    j = spark.read.parquet(journal_path)
+    j = storage.read_parquet(spark, journal_path)
     per_epoch = j.groupBy("batch_id", "_r", "_c").agg(F.max("cnt").alias("cnt"))
     return per_epoch.groupBy("_r", "_c").agg(F.sum("cnt").alias("cnt"))

@@ -1,7 +1,7 @@
 """Package modules use each other's public names only: no module
 imports or reads another package module's ``_private`` name. Shared
-machinery gets a public name in the module that owns it (commit and
-lock steps in ``storage``, job overlap and the build-once memo in
+machinery gets a public name in the module that owns it (the parquet
+read step and the commit and lock steps in ``storage``, job overlap and the build-once memo in
 ``session``, fixture directories, the index fixtures and the fixture
 harness (scratch dirs, conf pins, checked stream awaits) in
 ``plans.fixtures``, the BM25 and phrase serves in ``plans.textsearch``,
@@ -260,3 +260,55 @@ def test_build_once_artifacts_memoize_through_session():
     assert caches == {
         "ecommerce_realtime_pipeline_spark.operators.similarity._CENTROID_TABLE_CACHE"
     }
+
+
+def _parquet_reads(path: pathlib.Path) -> list[str]:
+    """The enclosing function of every batch parquet read in one
+    module: a ``.parquet(`` call whose receiver chain passes through
+    ``.read`` (``spark.read.parquet``, ``spark.read.schema(s).parquet``);
+    ``readStream`` is another attribute and stays out."""
+
+    def reads(node) -> bool:
+        while isinstance(node, (ast.Attribute, ast.Call)):
+            if isinstance(node, ast.Attribute):
+                if node.attr == "read":
+                    return True
+                node = node.value
+            else:
+                node = node.func
+        return False
+
+    found: list[str] = []
+    stack: list[str] = []
+
+    class Visitor(ast.NodeVisitor):
+        def visit_FunctionDef(self, node):
+            stack.append(node.name)
+            self.generic_visit(node)
+            stack.pop()
+
+        visit_AsyncFunctionDef = visit_FunctionDef
+
+        def visit_Call(self, node):
+            f = node.func
+            if isinstance(f, ast.Attribute) and f.attr == "parquet" and reads(f.value):
+                found.append(".".join(stack) or "<module>")
+            self.generic_visit(node)
+
+    Visitor().visit(ast.parse(path.read_text()))
+    return found
+
+
+def test_one_parquet_read_step():
+    """Every batch parquet read of the package goes through
+    ``storage.read_parquet``, which reads with a declared schema or the
+    schema ``storage.parquet_schema`` memoizes per file version: no
+    other function calls ``.read.parquet(`` and pays Spark's inference
+    job."""
+    sites = {
+        f"{name}.{fn}"
+        for name, path in _modules().items()
+        for fn in _parquet_reads(path)
+    }
+    storage = "ecommerce_realtime_pipeline_spark.storage"
+    assert sites == {f"{storage}.read_parquet", f"{storage}.parquet_schema"}

@@ -107,3 +107,53 @@ def test_entity_registry_complete():
         "orders": "order_id",
         "events": "event_id",
     }
+
+
+def _types(schema, drop=()):
+    return [(f.name, f.dataType.simpleString()) for f in schema.fields if f.name not in drop]
+
+
+def _fields(schema):
+    """Name, type (nested nullability included) and nullability; field
+    metadata (the stream's watermark tag on ``consumed_at``) left out."""
+    return [(f.name, f.dataType, f.nullable) for f in schema.fields]
+
+
+def test_declared_schemas_match_written_tables(spark, tmp_path):
+    """Schema-drift guard for the tables the engine reads with a
+    declared schema instead of inference: after one small pipeline cycle
+    through every entity, each declared schema equals the footer-inferred
+    schema of what the writers produced (names, types and order), and a
+    declared read returns the same rows as an inferred one."""
+    import os
+
+    from ecommerce_realtime_pipeline_spark import pipeline as PL
+    from ecommerce_realtime_pipeline_spark import storage
+
+    work = str(tmp_path / "work")
+    PL.run_pipeline(
+        spark,
+        work,
+        product_count=6,
+        customer_count=6,
+        order_count=8,
+        event_count=12,
+        seed=11,
+    )
+    tables = {os.path.join("silver", e): S.silver_schema(e) for e in PL.ENTITIES}
+    tables[os.path.join("silver", "order_items")] = S.ORDER_ITEMS_TABLE_SCHEMA
+    tables.update(
+        {os.path.join("offsets", e): S.CONSUMER_OFFSETS_SCHEMA for e in PL.ENTITIES}
+    )
+    tables.update(
+        {os.path.join("gold", m): sch for m, sch in S.GOLD_MART_SCHEMAS.items()}
+    )
+    for rel, declared in tables.items():
+        path = os.path.join(work, rel)
+        inferred = spark.read.parquet(path)
+        assert _types(declared) == _types(inferred.schema, drop=("bucket",)), rel
+        got = storage.read_parquet(spark, path, declared)
+        assert _fields(got.schema) == _fields(inferred.schema), rel
+        assert sorted(map(repr, got.collect())) == sorted(
+            map(repr, inferred.collect())
+        ), rel
