@@ -212,49 +212,33 @@ def exact_rerank(
 #: manifest format tag for the persisted IVF index (see indexfmt)
 IVF_INDEX_FORMAT = "ivf-index"
 
-#: persisted centroid-TABLE memo: without it every IVF serve/merge
-#: re-reads and re-collects the k·dim-tiny quantizer table of the same
-#: index generation — one Spark job apiece. Centroid
-#: directories are immutable once referenced (fresh uuid name per
-#: generation, never rewritten in place; vacuum only deletes
-#: unreferenced ones), so (index path, centroid dir name) keys the
-#: exact bytes and the memo is pure metadata caching — the postings
-#: themselves are still read from parquet on every serve.
-_CENTROID_TABLE_CACHE: dict[tuple[str, str], list] = {}
-
-
-#: cap on the centroid-table memo: one long bench session touches many
-#: temp index paths (every mutation query lands a new uuid-named
-#: centroid dir); the memo is pure metadata, so dropping the oldest
-#: half at the cap only costs a re-collect, never correctness
-_CENTROID_TABLE_CACHE_MAX = 256
-
 
 def _read_centroid_list(spark, path: str, m: dict) -> list[list[float]]:
     """The manifest generation's quantizer as a driver list (bounded:
-    k·dim — the same bounded-collect class as ``ivf_centroids``),
-    memoized per immutable centroid directory. The cached value is
-    stored as tuples and COPIED on return, so a caller mutating its
-    list cannot corrupt later serves of the same generation. Unsynced
-    check-then-set across the overlap thread pools is a benign race by
-    design: two threads missing concurrently both collect the same
-    immutable directory and setdefault keeps one identical value."""
-    key = (path, m["centroids"])
-    cached = _CENTROID_TABLE_CACHE.get(key)
-    if cached is None:
+    k·dim — the same bounded-collect class as ``ivf_centroids``).
+    Without a memo every IVF serve/merge would re-collect the same
+    table, one Spark job apiece. Centroid directories are immutable
+    once referenced (a fresh uuid name per generation, never rewritten
+    in place; vacuum only deletes unreferenced ones), so (index path,
+    centroid dir name) keys the exact bytes in ``session.memo``. The
+    memoized value is stored as tuples and COPIED on return, so a
+    caller mutating its list cannot corrupt later serves of the same
+    generation."""
+
+    def build() -> list[tuple]:
         rows = (
             storage.read_parquet(spark, f"{path}/{m['centroids']}")
             .orderBy("cid")
             .collect()
         )
-        if len(_CENTROID_TABLE_CACHE) >= _CENTROID_TABLE_CACHE_MAX:
-            for old in list(_CENTROID_TABLE_CACHE)[
-                : _CENTROID_TABLE_CACHE_MAX // 2
-            ]:
-                _CENTROID_TABLE_CACHE.pop(old, None)
-        cached = _CENTROID_TABLE_CACHE.setdefault(
-            key, [tuple(r["centroid"]) for r in rows]
-        )
+        return [tuple(r["centroid"]) for r in rows]
+
+    cached = memo(
+        spark,
+        "ivf_centroid_table",
+        ("_read_centroid_list", path, m["centroids"]),
+        build,
+    )
     return [list(v) for v in cached]
 
 

@@ -56,7 +56,10 @@ def build_marts(spark: SparkSession, silver_dir: str, gold_dir: str) -> dict[str
     a full (mart-sized, tiny) snapshot written atomically: one
     partition, rows sorted within it, so a reader sees them in display
     order without a global sort (a sample job and a range shuffle).
-    Returns mart → row count, summed from the written files' footers."""
+    Returns mart → row count, summed from the written files' footers.
+    The marts are the children of ``gold_dir``, recovered first from a
+    swap a crashed build left unfinished (``storage.recover``)."""
+    storage.recover(gold_dir)
     gate, valid_frames = dq_gate(spark, silver_dir)
     orders = valid_frames["orders"]
     items = valid_frames["order_items"]
@@ -92,7 +95,7 @@ def build_marts(spark: SparkSession, silver_dir: str, gold_dir: str) -> dict[str
             "event_type",
         ),
     }
-    marts["dq_gate"] = gate
+    marts["dq_gate"] = _one_sorted(gate, "table_name")
 
     # the five marts are independent tiny snapshots — submit their
     # write jobs from a small thread pool so the next mart's

@@ -19,6 +19,15 @@ from ecommerce_realtime_pipeline_spark.settings import Settings
 DEFAULT_SHUFFLE_PARTITIONS = Settings().cpus
 
 
+def default_driver_memory() -> str:
+    """The driver heap when ``SPARK_GRAFT_DRIVER_MEM`` is unset: a
+    quarter of physical memory in whole GiB, at least 2g and at most
+    90g, so a driver leaves room for its executors' and neighbours'
+    memory on a small machine."""
+    total = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{max(2, min(90, total // (4 << 30)))}g"
+
+
 def get_spark(
     app_name: str = "ecommerce_realtime_pipeline_spark",
     master: str | None = None,
@@ -44,7 +53,10 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "90g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_memory(),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.parquet.filterPushdown", "true")
         # reliable checkpoint_mode writes one Dataset.checkpoint copy

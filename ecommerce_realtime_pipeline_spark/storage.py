@@ -10,11 +10,17 @@ read path pays Spark's footer-reading inference job twice.
 :func:`parquet_rows` counts a written directory's rows from its
 footers without a job.
 
-The commit steps back the offsets ledger and sketch/aggregate snapshots
-(:func:`swap_dir`), the contagg epoch ledger stamps and the dedup
-journal stamps (:func:`replace_file` / :func:`read_file`), the index
-``_CURRENT`` flip (:func:`replace_file` under :func:`try_lock`), and
-the cross-process fixture build guard (:func:`try_lock`).
+:func:`swap_dir` is the package's one directory swap. It commits
+every mutable table: silver, ``order_items`` and their compaction per
+``bucket=N`` child; the offsets ledger, the gold marts, the HLL
+registers and the contagg base and versions whole. Its staging names
+(``<unit>__tmp_<hex8>`` for the new data, ``<unit>__old_<hex8>`` for
+the data it replaces) are known to this module only, and they are the
+crash record :func:`recover` reads. The other commit steps back the
+contagg epoch ledger stamps and the dedup journal stamps
+(:func:`replace_file` / :func:`read_file`), the index ``_CURRENT``
+flip (:func:`replace_file` under :func:`try_lock`), and the
+cross-process fixture build guard (:func:`try_lock`).
 
 Each step has exactly one implementation here, so a crash at any of
 its points is one code path to reason about (and to test). All of
@@ -28,6 +34,7 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import shutil
 import time
 import uuid
@@ -92,21 +99,83 @@ def parquet_rows(path: str) -> int:
     )
 
 
-def swap_dir(df: DataFrame, path: str) -> None:
-    """Write ``df`` as a parquet snapshot at ``path`` via a sibling
-    temp dir + rename. Between the two renames there is a short window
-    where ``path`` does not exist — acceptable for the single-writer
-    tables this backs (offsets ledger, aggregate versions, sketch
-    registers); a multi-reader deployment swaps in a version pointer
-    (write a versioned dir, flip a manifest) or a real table format."""
-    tmp = f"{path}__tmp_{uuid.uuid4().hex[:8]}"
-    df.write.mode("overwrite").parquet(tmp)
-    old = f"{path}__old_{uuid.uuid4().hex[:8]}"
-    if os.path.exists(path):
-        os.rename(path, old)
-    os.rename(tmp, path)
-    if os.path.exists(old):
-        shutil.rmtree(old, ignore_errors=True)
+#: a swap's staging name: ``<unit>__tmp_<hex8>`` holds the new data,
+#: ``<unit>__old_<hex8>`` the data it replaced
+_STAGING = re.compile(r"(?P<unit>.+)__(?P<kind>tmp|old)_[0-9a-f]{8}")
+
+
+def _staging(path: str, kind: str) -> str:
+    return f"{path}__{kind}_{uuid.uuid4().hex[:8]}"
+
+
+def swap_dir(df: DataFrame, path: str, buckets: list[int] | None = None) -> None:
+    """Write ``df`` as parquet into a sibling temp dir of ``path``, then
+    swap it in by rename: move the old data aside, move the new data
+    in, drop the old copy.
+
+    With ``buckets=None`` the unit swapped is ``path`` itself. With a
+    bucket list, ``df`` (holding ONLY rows of ``buckets``) is written
+    ``partitionBy("bucket")`` and each ``bucket=N`` child of the list
+    is swapped on its own; the other children are not opened, rewritten
+    or renamed, so their files stay byte-identical. A listed bucket
+    with no rows is removed.
+
+    A crash between the two renames of a unit leaves the unit missing
+    and its old data under ``<unit>__old_<hex8>``. Every writer of the
+    table calls :func:`recover` before its first read, which rolls such
+    a unit back; the swap never finished, so the caller never committed
+    its epoch and the epoch replays. Readers do not call it: they may
+    run beside a live writer, whose in-flight swap a recovery would
+    undo. Each table has a single writer at a time."""
+    tmp = _staging(path, "tmp")
+    writer = df.write.mode("overwrite")
+    if buckets is None:
+        writer.parquet(tmp)
+        _swap_unit(tmp, path)
+        return
+    writer.partitionBy("bucket").parquet(tmp)
+    os.makedirs(path, exist_ok=True)
+    for b in buckets:
+        _swap_unit(os.path.join(tmp, f"bucket={b}"), os.path.join(path, f"bucket={b}"))
+    shutil.rmtree(tmp, ignore_errors=True)
+
+
+def _swap_unit(src: str, dst: str) -> None:
+    old = _staging(dst, "old")
+    if os.path.exists(dst):
+        os.rename(dst, old)
+    if os.path.exists(src):
+        os.rename(src, dst)
+    shutil.rmtree(old, ignore_errors=True)
+
+
+def recover(path: str) -> None:
+    """Undo what a crashed :func:`swap_dir` of the table at ``path``
+    left behind, using the staging names as the crash record: a
+    ``<unit>__old_<hex8>`` whose ``<unit>`` is missing is renamed back,
+    and every other ``__old_``/``__tmp_`` leftover is removed. A unit
+    is ``path`` itself (a whole-directory swap) or one of its children
+    (a per-bucket swap, a contagg version). In ``path``'s parent only
+    names staged for ``path``'s own base name match, so a sibling
+    table's in-flight staging is never touched.
+
+    Rolling back is always safe: a swap that did not finish belongs to
+    an epoch its caller never committed, and that epoch replays (a
+    marts build or a compaction simply runs again). Only a table's
+    writer calls this, before its first read of the table."""
+    parent, base = os.path.split(path.rstrip("/"))
+    for d, only in ((parent or ".", base), (path, None)):
+        if not os.path.isdir(d):
+            continue
+        for name in sorted(os.listdir(d)):
+            m = _STAGING.fullmatch(name)
+            if m is None or only not in (None, m["unit"]):
+                continue
+            staged, unit = os.path.join(d, name), os.path.join(d, m["unit"])
+            if m["kind"] == "old" and not os.path.exists(unit):
+                os.rename(staged, unit)
+            else:
+                shutil.rmtree(staged, ignore_errors=True)
 
 
 def replace_file(dir: str, name: str, text: str) -> None:

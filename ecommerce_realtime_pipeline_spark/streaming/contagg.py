@@ -139,9 +139,9 @@ def rebase_from_silver(
 
 def _committed_epochs(agg_path: str) -> list[int]:
     """Committed = directories named exactly ``v=<int>``. The staging
-    artifacts of an in-flight or crashed write are siblings named
-    ``v=<int>__tmp_*`` / ``__old_*`` — they must be ignored, not
-    parsed (a crashed writer would otherwise wedge every reader)."""
+    siblings of an in-flight or crashed ``storage.swap_dir`` are
+    ignored, not parsed (a crashed writer would otherwise wedge every
+    reader until its next run recovers them)."""
     if not os.path.isdir(agg_path):
         return []
     out = []
@@ -274,7 +274,13 @@ def run_ingest_with_agg(
     "already applied" (new data) nor double-applied (replayed data —
     its delta against the post-image cancels to zero). The new query
     id is bound to the ledger right after start.
+
+    Before any of that, silver and the view are recovered from a swap
+    a crashed run left unfinished (``storage.recover``): the crashed
+    epoch replays onto the rolled-back tables.
     """
+    storage.recover(silver_path)
+    storage.recover(agg_path)
     stream = deduped_stream(stream_envelopes(spark, source_dir), watermark)
 
     def handle(batch_df: DataFrame, epoch_id: int) -> None:

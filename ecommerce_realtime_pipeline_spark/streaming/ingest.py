@@ -42,9 +42,7 @@ modes).
 from __future__ import annotations
 
 import os
-import shutil
 import threading
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -139,26 +137,6 @@ def read_silver(spark: SparkSession, path: str, entity: str | None = None) -> Da
     return df.drop("bucket") if "bucket" in df.columns else df
 
 
-def _swap_buckets(df: DataFrame, path: str, buckets: list[int]) -> None:
-    """Materialize ``df`` (which holds ONLY rows of ``buckets``) as
-    ``bucket=N`` partition dirs and swap exactly those dirs into
-    ``path``. Untouched bucket directories are not opened, rewritten, or
-    renamed — their files stay byte-identical (asserted in tests)."""
-    tmp = f"{path}__tmp_{uuid.uuid4().hex[:8]}"
-    df.write.mode("overwrite").partitionBy("bucket").parquet(tmp)
-    os.makedirs(path, exist_ok=True)
-    for b in buckets:
-        src = os.path.join(tmp, f"bucket={b}")
-        dst = os.path.join(path, f"bucket={b}")
-        old = f"{dst}__old_{uuid.uuid4().hex[:8]}"
-        if os.path.exists(dst):
-            os.rename(dst, old)
-        if os.path.exists(src):
-            os.rename(src, dst)
-        shutil.rmtree(old, ignore_errors=True)
-    shutil.rmtree(tmp, ignore_errors=True)
-
-
 def upsert_batch(
     spark: SparkSession,
     batch_df: DataFrame,
@@ -189,7 +167,7 @@ def upsert_batch(
     else:
         merged = typed
     latest = N.latest_by_key(merged, id_field, N.ORDER_COLS[entity])
-    _swap_buckets(N.stamp_audit(latest), silver_path, touched)
+    storage.swap_dir(N.stamp_audit(latest), silver_path, touched)
     return touched
 
 
@@ -200,9 +178,10 @@ def compact_buckets(
     many triggers a bucket directory holds one part-file per writing
     task; this pass rewrites each FRAGMENTED bucket (≥2 files) to a
     single file and leaves single-file buckets untouched byte-for-byte
-    (same swap primitive as the upsert, so crash semantics are
-    unchanged). Pure layout change — row content is identical, which
-    the tests assert. `repartition("bucket")` puts every row of a
+    (the upsert's per-bucket ``storage.swap_dir``, after a
+    ``storage.recover`` of an interrupted swap). Pure layout change —
+    row content is identical, which the tests assert.
+    `repartition("bucket")` puts every row of a
     bucket in exactly one task, so the rewrite emits exactly one file
     per bucket directory. The read keeps the files' own schema, memoized
     for the directory's version: every bucket swap renames entries of
@@ -212,6 +191,7 @@ def compact_buckets(
     buckets. At 100 TB this is the scheduled maintenance job every
     streaming table needs (the parquet analogue of Delta OPTIMIZE);
     run it off the write path — the swap is per-bucket atomic."""
+    storage.recover(silver_path)
     report: dict[int, tuple[int, int]] = {}
     frag: list[int] = []
     for b in range(n_buckets):
@@ -229,7 +209,7 @@ def compact_buckets(
         .filter(F.col("bucket").isin(frag))
         .repartition("bucket")
     )
-    _swap_buckets(df, silver_path, frag)
+    storage.swap_dir(df, silver_path, frag)
     return report
 
 
@@ -488,7 +468,14 @@ def run_ingest(
     ON DELETE CASCADE coupling (``02_create_tables.sql:103-106``).
     Items are bucketed by ``order_id`` with the same hash as the parent,
     so a touched order's children are always in the same-numbered
-    bucket — the cascade rewrite is per-bucket too, never O(table)."""
+    bucket — the cascade rewrite is per-bucket too, never O(table).
+
+    Before the stream starts, each table this query writes is recovered
+    from a swap a crashed run left unfinished (``storage.recover``); the
+    crashed epoch then replays onto the rolled-back tables."""
+    for path in (silver_path, items_path, offsets_path):
+        if path:
+            storage.recover(path)
     stream = deduped_stream(stream_envelopes(spark, source_dir), watermark)
 
     def handle(batch_df: DataFrame, epoch_id: int) -> None:
@@ -513,7 +500,7 @@ def run_ingest(
             items = N.explode_order_items(silver.drop("bucket")).withColumn(
                 "bucket", bucket_of("order_id")
             )
-            _swap_buckets(items, items_path, touched)
+            storage.swap_dir(items, items_path, touched)
         if offsets_path:
             record_offsets(spark, batch_df, offsets_path)
 

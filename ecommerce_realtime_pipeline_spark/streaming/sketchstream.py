@@ -55,7 +55,9 @@ def run_hll_stream(
     spark: SparkSession, src: str, regs_path: str, ckpt: str
 ):
     """One availableNow pass of the user-event stream into the
-    register table."""
+    register table, after recovering it from a swap a crashed pass
+    left unfinished (``storage.recover``)."""
+    storage.recover(regs_path)
     return start_available_now(
         spark.readStream.schema(STREAM_SCHEMA).json(src),
         ckpt,

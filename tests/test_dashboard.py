@@ -24,6 +24,21 @@ def test_dashboard_serves_pipeline_marts(spark, tmp_path):
     assert set(marts) == set(D.MART_NAMES)
     for name, rows in marts.items():
         assert len(rows) == summary["marts"][name]
+    # each panel's rows come back in display order, with no sort on read
+    for name, col in (
+        ("dq_gate", "table_name"),
+        ("revenue_by_status", "status"),
+        ("orders_per_minute", "minute"),
+        ("event_type_counts", "event_type"),
+    ):
+        keys = [r[col] for r in marts[name]]
+        assert keys == sorted(keys), name
+    assert len(marts["dq_gate"]) == 5
+    top = [
+        (-r["total_quantity"], r["product_id"])
+        for r in marts["top_products_by_quantity"]
+    ]
+    assert top == sorted(top)
 
     # JSON feed round-trips and keeps Decimal revenue as exact strings
     doc = json.loads(D.marts_json(spark, gold))

@@ -2612,14 +2612,16 @@ def test_requantize_equals_fresh_build_over_live(spark, tmp_path):
     assert old_cells.count() == len(evens) + len(odds) - len(dead)
 
 
-def test_centroid_table_memo_is_generation_keyed(spark, tmp_path):
-    """The persisted centroid-table memo (r13 optimization round) must
-    key on the immutable centroid DIRECTORY name: a second read of the
-    same generation is a cache hit (no re-collect), while a mutation
-    (requantize → fresh centroid dir) is read fresh — never served the
-    stale quantizer. r14 (ADVICE): the memo hands each caller a COPY —
-    a caller mutating its returned centroids must not corrupt later
-    serves of the same generation."""
+def test_centroid_table_memo_is_generation_keyed(spark, tmp_path, monkeypatch):
+    """The centroid-table memo (``session.memo``) keys on the immutable
+    centroid DIRECTORY name: a second read of the same generation is a
+    memo hit, which runs no collect job, while a mutation (requantize →
+    fresh centroid dir) is read fresh — never served the stale
+    quantizer. The memo hands each caller a COPY: a caller mutating its
+    returned centroids must not corrupt later serves of the same
+    generation."""
+    from pyspark.sql import DataFrame
+
     from ecommerce_realtime_pipeline_spark.operators import indexfmt
 
     emb = spark.createDataFrame(
@@ -2633,14 +2635,19 @@ def test_centroid_table_memo_is_generation_keyed(spark, tmp_path):
     SIM.write_ivf_index(emb, path, n_centroids=4)
     m1 = indexfmt.read_manifest(path, SIM.IVF_INDEX_FORMAT)
     c1, _ = SIM.read_ivf_index(spark, path)
-    assert (path, m1["centroids"]) in SIM._CENTROID_TABLE_CACHE
-    # same generation → cache hit with the same VALUE, but a fresh
+
+    def boom(self):
+        raise AssertionError("centroid collect job ran on a memo hit")
+
+    # same generation → memo hit with the same VALUE, but a fresh
     # copy per caller: corrupting c1b must not leak into a later read
+    monkeypatch.setattr(DataFrame, "collect", boom)
     c1b, _ = SIM.read_ivf_index(spark, path)
     assert c1b == c1 and c1b is not c1
     c1b[0][0] = 999.0
     c1c, _ = SIM.read_ivf_index(spark, path)
     assert c1c == c1  # unpoisoned by the caller's mutation
+    monkeypatch.undo()
     # mutation lands a NEW centroid dir → fresh read, new quantizer
     SIM.requantize_ivf_index(spark, path, n_centroids=8)
     m2 = indexfmt.read_manifest(path, SIM.IVF_INDEX_FORMAT)

@@ -96,15 +96,15 @@ def test_scan_detects_both_reach_forms(tmp_path):
     modules = _modules()
     probe = tmp_path / "probe.py"
     probe.write_text(
-        "from ecommerce_realtime_pipeline_spark.streaming import ingest as I\n"
-        "from ecommerce_realtime_pipeline_spark.streaming.ingest import _swap_buckets\n"
-        "I._swap_buckets\n"
-        "I.read_silver\n"
+        "from ecommerce_realtime_pipeline_spark import storage as S\n"
+        "from ecommerce_realtime_pipeline_spark.storage import _swap_unit\n"
+        "S._swap_unit\n"
+        "S.swap_dir\n"
     )
     name = "ecommerce_realtime_pipeline_spark.probe"
     found = _reaches(name, probe, {**modules, name: probe})
     assert len(found) == 2
-    assert all("_swap_buckets" in f for f in found)
+    assert all("_swap_unit" in f for f in found)
 
 
 def _stream_start_sites(name: str, path: pathlib.Path) -> set:
@@ -245,21 +245,18 @@ def _module_caches(path: pathlib.Path) -> list[str]:
 
 
 def test_build_once_artifacts_memoize_through_session():
-    """The session's build-once artifacts (IVF quantizer and cells, PQ
-    codes, k-means, the kNN graph, BPE training, the near-dup cluster
-    table) are memoized through ``session.memo``: no package module but
-    ``session.py`` binds a module-level ``*_CACHE`` name. The one
-    exception is ``similarity._CENTROID_TABLE_CACHE``, keyed on an
-    immutable index directory rather than on the session."""
+    """The session's build-once artifacts (IVF quantizer, cells and
+    centroid table, PQ codes, k-means, the kNN graph, BPE training, the
+    near-dup cluster table) are memoized through ``session.memo``: no
+    package module but ``session.py`` binds a module-level ``*_CACHE``
+    name."""
     caches = {
         f"{name}.{c}"
         for name, path in _modules().items()
         if path.name != "session.py"
         for c in _module_caches(path)
     }
-    assert caches == {
-        "ecommerce_realtime_pipeline_spark.operators.similarity._CENTROID_TABLE_CACHE"
-    }
+    assert caches == set()
 
 
 def _parquet_reads(path: pathlib.Path) -> list[str]:
@@ -312,3 +309,72 @@ def test_one_parquet_read_step():
     }
     storage = "ecommerce_realtime_pipeline_spark.storage"
     assert sites == {f"{storage}.read_parquet", f"{storage}.parquet_schema"}
+
+
+#: ``os.rename`` sites with a commit protocol of their own: the index
+#: family's one-rename publish of a fully staged directory, and the
+#: producer's move of staged topic files into their topic directory
+_OWN_RENAME_PROTOCOLS = {
+    "ecommerce_realtime_pipeline_spark.operators.indexfmt.publish_stage",
+    "ecommerce_realtime_pipeline_spark.sources.produce.write_topic",
+}
+
+
+def _swap_sites(name: str, path: pathlib.Path) -> set:
+    """(enclosing function, form) for every string constant spelling a
+    swap staging name (``__tmp_``/``__old_``, docstrings included) and
+    every ``os.rename``/``os.replace`` call in one module."""
+    sites = set()
+
+    def visit(node, fn):
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            fn = f"{name}.{node.name}"
+        if (
+            isinstance(node, ast.Constant)
+            and isinstance(node.value, str)
+            and ("__tmp_" in node.value or "__old_" in node.value)
+        ):
+            sites.add((fn or name, "staging name"))
+        if (
+            isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Attribute)
+            and node.func.attr in ("rename", "replace")
+            and isinstance(node.func.value, ast.Name)
+            and node.func.value.id == "os"
+        ):
+            sites.add((fn or name, f"os.{node.func.attr}"))
+        for child in ast.iter_child_nodes(node):
+            visit(child, fn)
+
+    visit(ast.parse(path.read_text()), None)
+    return sites
+
+
+def test_one_swap_step():
+    """``storage.swap_dir`` is the package's one directory swap and
+    ``storage.recover`` the one reader of its crash record: no other
+    module spells the ``__tmp_``/``__old_`` staging names or renames a
+    directory, bar the named protocols of ``_OWN_RENAME_PROTOCOLS``."""
+    sites = {
+        site
+        for name, path in _modules().items()
+        if path.name != "storage.py"
+        for site in _swap_sites(name, path)
+    }
+    assert sites == {(fn, "os.rename") for fn in _OWN_RENAME_PROTOCOLS}
+
+
+def test_swap_scan_detects_staging_names_and_renames(tmp_path):
+    """The scan itself: a staging name in a format string and an
+    ``os.rename`` call are both reported with their function."""
+    probe = tmp_path / "probe.py"
+    probe.write_text(
+        "import os\n"
+        "def swap(path, b):\n"
+        "    old = f'{path}__old_{b}'\n"
+        "    os.rename(path, old)\n"
+    )
+    assert _swap_sites("probe", probe) == {
+        ("probe.swap", "staging name"),
+        ("probe.swap", "os.rename"),
+    }

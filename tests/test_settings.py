@@ -74,3 +74,24 @@ def test_settings_frozen():
 
     with pytest.raises(dataclasses.FrozenInstanceError):
         Settings().batch_size = 99  # type: ignore[misc]
+
+
+def test_default_driver_memory_is_a_quarter_of_physical_memory(monkeypatch):
+    """Without ``SPARK_GRAFT_DRIVER_MEM`` the driver heap is a quarter
+    of physical memory in whole GiB, clamped to [2g, 90g]; derived from
+    ``os.sysconf`` without starting a session."""
+    import os
+
+    from ecommerce_realtime_pipeline_spark.session import default_driver_memory
+
+    page = 4096
+
+    def machine(gib):
+        sizes = {"SC_PAGE_SIZE": page, "SC_PHYS_PAGES": gib * (1 << 30) // page}
+        monkeypatch.setattr(os, "sysconf", lambda name: sizes[name])
+        return default_driver_memory()
+
+    assert machine(15) == "3g"
+    assert machine(64) == "16g"
+    assert machine(4) == "2g"
+    assert machine(1024) == "90g"
