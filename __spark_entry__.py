@@ -19,11 +19,14 @@ from ecommerce_realtime_pipeline_spark.plans import (
     dedup,
     dq,
     gen,
+    graph,
     kpi,
+    mining,
     multimodal,
     streams,
     temporal,
     textsearch,
+    tpch,
     training,
 )
 from ecommerce_realtime_pipeline_spark.plans._registry_order import (
@@ -35,7 +38,8 @@ from ecommerce_realtime_pipeline_spark.plans.sqlhints import materialize_all
 #: the plan modules, one per query family: each defines its queries as
 #: plain functions named like the query, and an ``ORACLES`` dict
 PLAN_MODULES = (
-    kpi, dq, temporal, gen, streams, dedup, ann, textsearch, training, multimodal
+    kpi, tpch, graph, mining, dq, temporal, gen, streams, dedup, ann, textsearch,
+    training, multimodal,
 )
 
 

@@ -8,13 +8,17 @@ from the parquet footers: once per file version (a Spark job of its own),
 memoized by :func:`storage.read_parquet`, and every later read of the
 same file starts no inference job. Min/max pushdown still reads each
 scanned row group's footer statistics at execution.
+
+The money expressions every plan module shares live here too:
+:data:`MONEY`, :func:`money` and :func:`as_double`.
 """
 
 from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 from ecommerce_realtime_pipeline_spark.settings import Settings
 from ecommerce_realtime_pipeline_spark.storage import parquet_schema, read_parquet
@@ -51,12 +55,8 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         df = read_parquet(spark, f"{sf_dir}/{name}.parquet")
         ts_type = dict(df.dtypes).get("ts")
         if ts_type == "bigint":
-            from pyspark.sql import functions as F
-
             df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
         elif ts_type == "timestamp_ntz":
-            from pyspark.sql import functions as F
-
             # explicit timestamp_ltz: cast("timestamp") resolves through
             # spark.sql.timestampType and would be a no-op on a session
             # that defaults to TIMESTAMP_NTZ, leaving unix_micros
@@ -76,6 +76,24 @@ def _pin_events_read(spark: SparkSession) -> None:
     # ts by the zone offset and breaks oracle epoch_us parity.
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
+
+
+#: exact money type of the testdata's price columns. A query casts to
+#: it BEFORE arithmetic, so sums are exact and partition-order
+#: independent (doubles would make the oracle hash flaky), and casts
+#: its final result to DOUBLE only; mirrors the reference's
+#: round-to-2dp money semantics (schemas.py:61,81 in the reference).
+MONEY = "decimal(18,2)"
+
+
+def money(col: str) -> Column:
+    """Column ``col`` as exact money (:data:`MONEY`)."""
+    return F.col(col).cast(MONEY)
+
+
+def as_double(col: Column, scale: int = 2) -> Column:
+    """A money result rounded to ``scale`` places, then cast to DOUBLE."""
+    return F.round(col, scale).cast("double")
 
 
 def infer_schemas(spark: SparkSession, sf_dir: str) -> None:

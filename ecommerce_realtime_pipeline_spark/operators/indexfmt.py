@@ -229,23 +229,16 @@ def _acquire_writer_lock(path: str) -> str:
         raise ConcurrentWriterError(
             f"index at {path} has a live writer lock ({LOCK}): "
             "merge/delete/compact are single-writer operations — "
-            "serialize mutators, or pass lock=False to write_manifest "
-            "when an external coordinator (job scheduler) already "
-            "guarantees it"
+            "serialize mutators"
         )
     return lock
 
 
-def write_manifest(
-    path: str,
-    manifest: dict,
-    keep_generations: int = KEEP_GENERATIONS,
-    lock: bool = True,
-) -> None:
+def write_manifest(path: str, manifest: dict) -> None:
     """Atomic pointer flip — the single commit point of every index
     mutation. Before the flip, the superseded manifest (if any) is
     preserved as an immutable ``_GEN-<version>`` snapshot and the
-    snapshot set is pruned oldest-first to ``keep_generations`` — the
+    snapshot set is pruned oldest-first to ``KEEP_GENERATIONS`` — the
     retention horizon :func:`vacuum` honors, so a concurrent reader
     holding the previous generation keeps its files through the next
     flip+vacuum.
@@ -258,11 +251,9 @@ def write_manifest(
     ``O_EXCL`` lock file (:func:`_acquire_writer_lock`): a racing
     second mutator fails loudly with :class:`ConcurrentWriterError`
     instead, and a crashed writer's lock is broken after
-    ``STALE_LOCK_SECONDS``. ``lock=False`` is the documented escape
-    hatch for deployments whose job scheduler already serializes
-    mutators (the Iceberg external-lock-manager configuration)."""
+    ``STALE_LOCK_SECONDS``."""
     os.makedirs(path, exist_ok=True)
-    held = _acquire_writer_lock(path) if lock else None
+    held = _acquire_writer_lock(path)
     try:
         cur = os.path.join(path, MANIFEST)
         if os.path.exists(cur):
@@ -279,17 +270,16 @@ def write_manifest(
         storage.replace_file(
             path, MANIFEST, json.dumps(manifest, indent=1, sort_keys=True)
         )
-        for name in _generation_names(path)[: -keep_generations or None]:
+        for name in _generation_names(path)[: -KEEP_GENERATIONS or None]:
             try:
                 os.remove(os.path.join(path, name))
             except OSError:
                 pass
     finally:
-        if held is not None:
-            try:
-                os.remove(held)
-            except OSError:
-                pass
+        try:
+            os.remove(held)
+        except OSError:
+            pass
 
 
 def publish_stage(stage: str, path: str) -> None:

@@ -26,14 +26,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ecommerce_realtime_pipeline_spark.catalog import load_table
+from ecommerce_realtime_pipeline_spark.catalog import MONEY, load_table
 
 # Domains observed in the driver testdata (TPC-H-ish); the analog of the
 # reference's status/event_type CHECK IN (...) lists.
 TPCH_ORDER_STATUSES = ("O", "F", "P")
 TPCH_EVENT_TYPES = ("view", "click", "purchase", "signup", "error")
-
-_D = "decimal(18,2)"
 
 
 def _cnt_if(cond, alias: str):
@@ -121,14 +119,14 @@ def order_total_reagg(spark: SparkSession, sf_dir: str) -> DataFrame:
     lineitem = load_table(spark, sf_dir, "lineitem")
     line_charge = F.round(
         F.col("l_extendedprice") * (1 - F.col("l_discount")) * (1 + F.col("l_tax")), 2
-    ).cast(_D)
+    ).cast(MONEY)
     recomputed = lineitem.groupBy("l_orderkey").agg(
         F.sum(line_charge).alias("_recomputed")
     )
     joined = orders.join(
         recomputed, orders.o_orderkey == recomputed.l_orderkey, "left"
     )
-    diff = F.abs(F.col("o_totalprice").cast(_D) - F.col("_recomputed"))
+    diff = F.abs(F.col("o_totalprice").cast(MONEY) - F.col("_recomputed"))
     return joined.agg(
         F.count("*").alias("n_orders"),
         _cnt_if(F.col("_recomputed").isNull(), "n_orders_without_items"),
@@ -239,10 +237,10 @@ def dedup_lineitem_latest(spark: SparkSession, sf_dir: str) -> DataFrame:
     return li.withColumn("_rn", rn).agg(
         F.count(F.when(keep, 1)).alias("n_kept"),
         F.count(F.when(~keep, 1)).alias("n_dropped"),
-        F.round(F.sum(F.when(keep, F.col("l_quantity").cast(_D))), 2)
+        F.round(F.sum(F.when(keep, F.col("l_quantity").cast(MONEY))), 2)
         .cast("double")
         .alias("sum_qty_kept"),
-        F.round(F.sum(F.when(keep, F.col("l_extendedprice").cast(_D))), 2)
+        F.round(F.sum(F.when(keep, F.col("l_extendedprice").cast(MONEY))), 2)
         .cast("double")
         .alias("sum_extprice_kept"),
     )

@@ -5,13 +5,21 @@ but never implements: orders-per-minute, revenue trends, top products,
 funnel analysis, customer history, data-quality metrics. Here each is a
 named function ``(spark, sf_dir) -> DataFrame`` over the driver testdata,
 expressed declaratively so Catalyst gets pushdown/pruning/broadcast for
-free.
+free. This module holds the dashboard, customer and event KPIs, the
+sketches and quantiles, pivots and windows; the rest of the KPI family
+lives in ``tpch.py`` (supplier/nation analytics), ``graph.py``
+(co-purchase graph) and ``mining.py`` (baskets, attribution, paths,
+cohorts), under the same contract.
 
 Determinism contract (for the DuckDB oracle hash-diff): money math is
-done in DECIMAL (exact, order-independent sums), only the final result
-is cast to DOUBLE; time buckets are emitted as formatted strings so both
-engines hash identical values. Every computed column is aliased
-identically here and in the oracle SQL (__spark_entry__.oracle_sql).
+done in DECIMAL (``catalog.money``: exact, order-independent sums), only
+the final result is cast to DOUBLE (``catalog.as_double``); time buckets
+are emitted as formatted strings so both engines hash identical values.
+Each query's oracle, its ``ORACLES`` entry right after it, follows the
+same rules: DECIMAL(18,2) before summing, then ROUND(...,2) and CAST AS
+DOUBLE; strftime time buckets; integer sums cast to BIGINT (DuckDB's
+SUM(int) is HUGEINT); every computed column aliased exactly as the
+DataFrame aliases it.
 
 Scale notes (100 TB stance) are on each function: which side broadcasts,
 what the shuffle key is, why the aggregate is partial-agg friendly.
@@ -22,27 +30,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ecommerce_realtime_pipeline_spark.catalog import load_table
+from ecommerce_realtime_pipeline_spark.catalog import MONEY, as_double, load_table, money
 from ecommerce_realtime_pipeline_spark.storage import read_parquet
 from ecommerce_realtime_pipeline_spark.plans import fixtures as FX
 
-# the KPI oracles live in their own module; bound here so every plan
-# module exposes its family's oracles as ``ORACLES``
-from ecommerce_realtime_pipeline_spark.plans.oracles import ORACLES  # noqa: F401
-
-# Exact money expression: cast to decimal BEFORE arithmetic so sums are
-# exact and partition-order independent (doubles would make the oracle
-# hash flaky). Mirrors reference round-to-2dp money semantics
-# (schemas.py:61,81 in the reference).
-_D = "decimal(18,2)"
-
-
-def _money(col: str) -> F.Column:
-    return F.col(col).cast(_D)
-
-
-def _as_double(col: F.Column, scale: int = 2) -> F.Column:
-    return F.round(col, scale).cast("double")
+#: query name -> DuckDB oracle SQL, one entry per query of this module
+ORACLES: dict[str, str] = {}
 
 
 def revenue_trend_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -56,9 +49,18 @@ def revenue_trend_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
         orders.groupBy(F.date_format(F.date_trunc("day", "o_orderdate"), "yyyy-MM-dd").alias("order_day"))
         .agg(
             F.count("*").alias("n_orders"),
-            _as_double(F.sum(_money("o_totalprice"))).alias("revenue"),
+            as_double(F.sum(money("o_totalprice"))).alias("revenue"),
         )
     )
+
+
+ORACLES["revenue_trend_daily"] = """
+        SELECT strftime(date_trunc('day', o_orderdate), '%Y-%m-%d') AS order_day,
+               count(*) AS n_orders,
+               CAST(ROUND(SUM(CAST(o_totalprice AS DECIMAL(18,2))), 2) AS DOUBLE) AS revenue
+        FROM orders
+        GROUP BY 1
+    """
 
 
 def orders_per_minute(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -76,6 +78,14 @@ def orders_per_minute(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+ORACLES["orders_per_minute"] = """
+        SELECT strftime(date_trunc('minute', ts), '%Y-%m-%d %H:%M:%S') AS minute,
+               count(*) AS n_events
+        FROM events
+        GROUP BY 1
+    """
+
+
 def revenue_trend_hourly_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:
     """R14 sliding-trend variant: hourly value sums per event type."""
     events = load_table(spark, sf_dir, "events")
@@ -86,9 +96,19 @@ def revenue_trend_hourly_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .agg(
             F.count("*").alias("n_events"),
-            _as_double(F.sum(F.col("value").cast(_D))).alias("total_value"),
+            as_double(F.sum(F.col("value").cast(MONEY))).alias("total_value"),
         )
     )
+
+
+ORACLES["revenue_trend_hourly_by_type"] = """
+        SELECT strftime(date_trunc('hour', ts), '%Y-%m-%d %H:%M:%S') AS hour,
+               event_type,
+               count(*) AS n_events,
+               CAST(ROUND(SUM(CAST(value AS DECIMAL(18,2))), 2) AS DOUBLE) AS total_value
+        FROM events
+        GROUP BY 1, 2
+    """
 
 
 def events_sliding_window(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -110,7 +130,7 @@ def events_sliding_window(spark: SparkSession, sf_dir: str) -> DataFrame:
         events.groupBy(F.window("ts", "10 minutes", "5 minutes").alias("w"))
         .agg(
             F.count("*").alias("n_events"),
-            _as_double(F.sum(F.col("value").cast(_D))).alias("total_value"),
+            as_double(F.sum(F.col("value").cast(MONEY))).alias("total_value"),
         )
         .select(
             F.date_format(F.col("w.start"), "yyyy-MM-dd HH:mm:ss").alias("window_start"),
@@ -118,6 +138,28 @@ def events_sliding_window(spark: SparkSession, sf_dir: str) -> DataFrame:
             "total_value",
         )
     )
+
+
+# events_sliding_window: every ts is covered by exactly the two
+# 10-min windows starting at trunc5(ts) and trunc5(ts)-5min
+# (trunc5(ts) > ts-5min, so both starts are > ts-10min), which is
+# precisely Spark's window(ts,'10 minutes','5 minutes') expansion.
+ORACLES["events_sliding_window"] = """
+        WITH expanded AS (
+            SELECT strftime(ws, '%Y-%m-%d %H:%M:%S') AS window_start, value
+            FROM events,
+                 unnest([date_trunc('minute', ts)
+                             - INTERVAL (EXTRACT(minute FROM ts)::INT % 5) MINUTE,
+                         date_trunc('minute', ts)
+                             - INTERVAL (EXTRACT(minute FROM ts)::INT % 5) MINUTE
+                             - INTERVAL 5 MINUTE]) AS t(ws)
+        )
+        SELECT window_start,
+               count(*) AS n_events,
+               CAST(ROUND(SUM(CAST(value AS DECIMAL(18,2))), 2) AS DOUBLE) AS total_value
+        FROM expanded
+        GROUP BY 1
+    """
 
 
 def top_products_by_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -129,18 +171,31 @@ def top_products_by_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     lineitem = load_table(spark, sf_dir, "lineitem")
     part = load_table(spark, sf_dir, "part")
-    revenue = _money("l_extendedprice") * (F.lit(1).cast(_D) - _money("l_discount"))
+    revenue = money("l_extendedprice") * (F.lit(1).cast(MONEY) - money("l_discount"))
     return (
         lineitem.join(F.broadcast(part), lineitem.l_partkey == part.p_partkey)
         .groupBy("p_partkey", "p_name")
         .agg(
-            _as_double(F.sum(revenue)).alias("revenue"),
+            as_double(F.sum(revenue)).alias("revenue"),
             F.sum("l_quantity").cast("double").alias("total_qty"),
             F.count("*").alias("n_lines"),
         )
         .orderBy(F.desc("revenue"), F.asc("p_partkey"))
         .limit(10)
     )
+
+
+ORACLES["top_products_by_revenue"] = """
+        SELECT p_partkey, p_name,
+               CAST(ROUND(SUM(CAST(l_extendedprice AS DECIMAL(18,2))
+                               * (1 - CAST(l_discount AS DECIMAL(18,2)))), 2) AS DOUBLE) AS revenue,
+               CAST(SUM(l_quantity) AS DOUBLE) AS total_qty,
+               count(*) AS n_lines
+        FROM lineitem JOIN part ON l_partkey = p_partkey
+        GROUP BY 1, 2
+        ORDER BY revenue DESC, p_partkey ASC
+        LIMIT 10
+    """
 
 
 def top_customers_by_spend(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -150,7 +205,7 @@ def top_customers_by_spend(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         orders.groupBy("o_custkey")
         .agg(
-            _as_double(F.sum(_money("o_totalprice"))).alias("total_spend"),
+            as_double(F.sum(money("o_totalprice"))).alias("total_spend"),
             F.count("*").alias("n_orders"),
         )
         .join(F.broadcast(customer), F.col("o_custkey") == customer.c_custkey)
@@ -160,32 +215,18 @@ def top_customers_by_spend(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H-Q1-style pricing summary (R21/R24): 2-key groupBy, 8 aggregates.
-
-    All sums in DECIMAL (exact); averages derived from exact sums and
-    counts in double (deterministic given identical operands).
-    """
-    li = load_table(spark, sf_dir, "lineitem")
-    qty = _money("l_quantity")
-    base = _money("l_extendedprice")
-    disc_price = _money("l_extendedprice") * (F.lit(1).cast(_D) - _money("l_discount"))
-    charge = disc_price * (F.lit(1).cast(_D) + _money("l_tax"))
-    n = F.count("*")
-    return (
-        li.filter(F.col("l_shipdate") <= F.lit("1998-09-02"))
-        .groupBy("l_returnflag", "l_linestatus")
-        .agg(
-            _as_double(F.sum(qty)).alias("sum_qty"),
-            _as_double(F.sum(base)).alias("sum_base_price"),
-            _as_double(F.sum(disc_price)).alias("sum_disc_price"),
-            _as_double(F.sum(charge)).alias("sum_charge"),
-            F.round(F.sum(qty).cast("double") / n, 6).alias("avg_qty"),
-            F.round(F.sum(base).cast("double") / n, 6).alias("avg_price"),
-            F.round(F.sum(_money("l_discount")).cast("double") / n, 6).alias("avg_disc"),
-            n.alias("count_order"),
+ORACLES["top_customers_by_spend"] = """
+        WITH spend AS (
+            SELECT o_custkey,
+                   CAST(ROUND(SUM(CAST(o_totalprice AS DECIMAL(18,2))), 2) AS DOUBLE) AS total_spend,
+                   count(*) AS n_orders
+            FROM orders GROUP BY 1
         )
-    )
+        SELECT c_custkey, c_name, c_mktsegment, total_spend, n_orders
+        FROM spend JOIN customer ON o_custkey = c_custkey
+        ORDER BY total_spend DESC, c_custkey ASC
+        LIMIT 10
+    """
 
 
 def _customer_geo_spend(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -204,7 +245,7 @@ def _customer_geo_spend(spark: SparkSession, sf_dir: str) -> DataFrame:
     nation = load_table(spark, sf_dir, "nation")
     region = load_table(spark, sf_dir, "region")
     per_cust = orders.groupBy("o_custkey").agg(
-        F.sum(_money("o_totalprice")).alias("_spend"),
+        F.sum(money("o_totalprice")).alias("_spend"),
         F.count("*").alias("_cnt"),
     )
     return (
@@ -217,9 +258,21 @@ def _customer_geo_spend(spark: SparkSession, sf_dir: str) -> DataFrame:
 def revenue_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H-Q5-flavor multi-join: revenue per customer nation."""
     return _customer_geo_spend(spark, sf_dir).groupBy("r_name", "n_name").agg(
-        _as_double(F.sum("_spend")).alias("revenue"),
+        as_double(F.sum("_spend")).alias("revenue"),
         F.sum("_cnt").alias("n_orders"),
     )
+
+
+ORACLES["revenue_by_nation"] = """
+        SELECT r_name, n_name,
+               CAST(ROUND(SUM(CAST(o_totalprice AS DECIMAL(18,2))), 2) AS DOUBLE) AS revenue,
+               count(*) AS n_orders
+        FROM orders
+        JOIN customer ON o_custkey = c_custkey
+        JOIN nation ON c_nationkey = n_nationkey
+        JOIN region ON n_regionkey = r_regionkey
+        GROUP BY 1, 2
+    """
 
 
 def revenue_rollup_region_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -233,7 +286,7 @@ def revenue_rollup_region_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
         _customer_geo_spend(spark, sf_dir)
         .rollup("r_name", "n_name")
         .agg(
-            _as_double(F.sum("_spend")).alias("revenue"),
+            as_double(F.sum("_spend")).alias("revenue"),
             F.sum("_cnt").alias("n_orders"),
         )
         .select(
@@ -245,16 +298,40 @@ def revenue_rollup_region_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+ORACLES["revenue_rollup_region_nation"] = """
+        SELECT COALESCE(r_name, 'ALL') AS region,
+               COALESCE(n_name, 'ALL') AS nation,
+               CAST(ROUND(SUM(CAST(o_totalprice AS DECIMAL(18,2))), 2) AS DOUBLE) AS revenue,
+               count(*) AS n_orders
+        FROM orders
+        JOIN customer ON o_custkey = c_custkey
+        JOIN nation ON c_nationkey = n_nationkey
+        JOIN region ON n_regionkey = r_regionkey
+        GROUP BY ROLLUP (r_name, n_name)
+    """
+
+
 def order_status_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     """R2/R21: status filter domain + counts (mirrors the reference's
     partial index WHERE status IN (...) workload)."""
     orders = load_table(spark, sf_dir, "orders")
     return orders.groupBy("o_orderstatus").agg(
         F.count("*").alias("n_orders"),
-        _as_double(F.sum(_money("o_totalprice"))).alias("revenue"),
-        _as_double(F.min(_money("o_totalprice"))).alias("min_price"),
-        _as_double(F.max(_money("o_totalprice"))).alias("max_price"),
+        as_double(F.sum(money("o_totalprice"))).alias("revenue"),
+        as_double(F.min(money("o_totalprice"))).alias("min_price"),
+        as_double(F.max(money("o_totalprice"))).alias("max_price"),
     )
+
+
+ORACLES["order_status_distribution"] = """
+        SELECT o_orderstatus,
+               count(*) AS n_orders,
+               CAST(ROUND(SUM(CAST(o_totalprice AS DECIMAL(18,2))), 2) AS DOUBLE) AS revenue,
+               CAST(ROUND(MIN(CAST(o_totalprice AS DECIMAL(18,2))), 2) AS DOUBLE) AS min_price,
+               CAST(ROUND(MAX(CAST(o_totalprice AS DECIMAL(18,2))), 2) AS DOUBLE) AS max_price
+        FROM orders
+        GROUP BY 1
+    """
 
 
 def customer_history(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -266,10 +343,21 @@ def customer_history(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders")
     return orders.groupBy(F.col("o_custkey").alias("custkey")).agg(
         F.count("*").alias("n_orders"),
-        _as_double(F.sum(_money("o_totalprice"))).alias("lifetime_value"),
+        as_double(F.sum(money("o_totalprice"))).alias("lifetime_value"),
         F.date_format(F.min("o_orderdate"), "yyyy-MM-dd").alias("first_order"),
         F.date_format(F.max("o_orderdate"), "yyyy-MM-dd").alias("last_order"),
     )
+
+
+ORACLES["customer_history"] = """
+        SELECT o_custkey AS custkey,
+               count(*) AS n_orders,
+               CAST(ROUND(SUM(CAST(o_totalprice AS DECIMAL(18,2))), 2) AS DOUBLE) AS lifetime_value,
+               strftime(MIN(o_orderdate), '%Y-%m-%d') AS first_order,
+               strftime(MAX(o_orderdate), '%Y-%m-%d') AS last_order
+        FROM orders
+        GROUP BY 1
+    """
 
 
 def funnel_stage_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -279,6 +367,15 @@ def funnel_stage_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count("*").alias("n_events"),
         F.countDistinct("user_id").alias("n_users"),
     )
+
+
+ORACLES["funnel_stage_counts"] = """
+        SELECT event_type,
+               count(*) AS n_events,
+               count(DISTINCT user_id) AS n_users
+        FROM events
+        GROUP BY 1
+    """
 
 
 def funnel_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -304,6 +401,21 @@ def funnel_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+ORACLES["funnel_conversion"] = """
+        SELECT count(*) AS n_users,
+               count(first_view) AS n_viewers,
+               count(last_purchase) AS n_purchasers,
+               CAST(SUM(CASE WHEN first_view < last_purchase THEN 1 ELSE 0 END) AS BIGINT) AS n_converted
+        FROM (
+            SELECT user_id,
+                   min(CASE WHEN event_type = 'view' THEN ts END) AS first_view,
+                   max(CASE WHEN event_type = 'purchase' THEN ts END) AS last_purchase
+            FROM events
+            GROUP BY user_id
+        )
+    """
+
+
 def sessionization(spark: SparkSession, sf_dir: str) -> DataFrame:
     """R16/§2.7 session windows (30-min inactivity gap), batch flavor.
 
@@ -325,6 +437,23 @@ def sessionization(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("new_session").alias("n_sessions"),
         F.count("*").alias("n_events"),
     )
+
+
+ORACLES["sessionization"] = """
+        WITH flagged AS (
+            SELECT user_id,
+                   CASE WHEN lag(ts) OVER (PARTITION BY user_id ORDER BY ts) IS NULL
+                             OR epoch_us(ts)
+                                - epoch_us(lag(ts) OVER (PARTITION BY user_id ORDER BY ts)) > 1800000000
+                        THEN 1 ELSE 0 END AS new_session
+            FROM events
+        )
+        SELECT user_id,
+               CAST(SUM(new_session) AS BIGINT) AS n_sessions,
+               count(*) AS n_events
+        FROM flagged
+        GROUP BY user_id
+    """
 
 
 def sessionization_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -357,6 +486,39 @@ def sessionization_session_window(spark: SparkSession, sf_dir: str) -> DataFrame
     )
 
 
+# session_window twin: island detection via lag-gap flag + running
+# sum. Spark merges an event at EXACTLY prev+gap (new session only
+# when the gap is strictly exceeded — probed, pinned in tests), so
+# the flag uses `>`. Session end = last event + gap (Spark's
+# session_window.end definition). Equal-ts ties can't flip the
+# flag (gap 0 is never > 30min), so lag's tie order is immaterial.
+ORACLES["sessionization_session_window"] = """
+        WITH flagged AS (
+            SELECT user_id, epoch_us(ts) AS us,
+                   CASE WHEN lag(ts) OVER w IS NULL
+                             OR epoch_us(ts) - epoch_us(lag(ts) OVER w)
+                                > 1800000000
+                        THEN 1 ELSE 0 END AS new_session
+            FROM events
+            WINDOW w AS (PARTITION BY user_id ORDER BY ts)
+        ),
+        sess AS (
+            SELECT user_id, us,
+                   SUM(new_session) OVER (
+                       PARTITION BY user_id ORDER BY us
+                       ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW
+                   ) AS sid
+            FROM flagged
+        )
+        SELECT user_id,
+               MIN(us) AS session_start_us,
+               MAX(us) + 1800000000 AS session_end_us,
+               count(*) AS n_events
+        FROM sess
+        GROUP BY user_id, sid
+    """
+
+
 def jsonb_adhoc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """R20 JSONB ad-hoc query: key extraction + containment over the raw
     JSON props column (the reference's GIN-index workload →
@@ -372,6 +534,15 @@ def jsonb_adhoc(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("k")
         .agg(F.count("*").alias("n"))
     )
+
+
+ORACLES["jsonb_adhoc"] = """
+        SELECT TRY_CAST(json_extract_string(props, '$.k') AS INT) AS k,
+               count(*) AS n
+        FROM events
+        WHERE TRY_CAST(json_extract_string(props, '$.k') AS INT) >= 50
+        GROUP BY 1
+    """
 
 
 def throughput_per_topic(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -399,6 +570,15 @@ def throughput_per_topic(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_events",
         F.round(F.col("n_events") / span_sec, 6).alias("events_per_sec"),
     )
+
+
+ORACLES["throughput_per_topic"] = """
+        SELECT event_type,
+               count(*) AS n_events,
+               ROUND(count(*) / (SELECT (max(epoch_us(ts)) - min(epoch_us(ts))) / 1000000.0 FROM events), 6) AS events_per_sec
+        FROM events
+        GROUP BY 1
+    """
 
 
 def events_hll_users(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -432,6 +612,63 @@ def events_hll_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# events_hll_users: full HLL replica — md5 registers, exact integer
+# register fold (DECIMAL sum of 2^(61-M_j)), one double division,
+# textbook linear-counting rule. Bit-identical estimate by design.
+ORACLES["events_hll_users"] = """
+        WITH r AS (
+            SELECT event_type,
+                   CAST(('0x' || substr(md5(CAST(user_id AS VARCHAR)), 1, 2))::BIGINT
+                        AS INT) AS bkt,
+                   ('0x' || substr(md5(CAST(user_id AS VARCHAR)), 3, 15))::BIGINT AS v
+            FROM events
+        ),
+        regs AS (
+            SELECT event_type, bkt,
+                   MAX(CASE WHEN v = 0 THEN 61
+                            ELSE 60 - CAST(FLOOR(log2(v)) AS INT) END) AS m
+            FROM r GROUP BY 1, 2
+        ),
+        folded AS (
+            SELECT event_type,
+                   SUM(CAST(pow(2, 61 - m) AS DECIMAL(38,0))) AS s,
+                   COUNT(*) AS present
+            FROM regs GROUP BY 1
+        ),
+        est AS (
+            SELECT event_type,
+                   (256 - present)
+                       + CAST(s AS DOUBLE) / CAST(2305843009213693952 AS DOUBLE)
+                       AS sum_inv,
+                   256 - present AS v_empty
+            FROM folded
+        ),
+        scored AS (
+            SELECT event_type,
+                   CAST(0.7213 AS DOUBLE) / (1 + CAST(1.079 AS DOUBLE) / 256)
+                       * 256 * 256 / sum_inv AS e_raw,
+                   v_empty
+            FROM est
+        ),
+        final AS (
+            SELECT event_type,
+                   CASE WHEN e_raw <= CAST(2.5 AS DOUBLE) * 256 AND v_empty > 0
+                        THEN 256 * ln(256 / v_empty)
+                        ELSE e_raw END AS hll_estimate
+            FROM scored
+        ),
+        exact AS (
+            SELECT event_type, count(*) AS n_events,
+                   count(DISTINCT user_id) AS exact_distinct
+            FROM events GROUP BY 1
+        )
+        SELECT event_type, n_events, exact_distinct,
+               ROUND(hll_estimate, 2) AS hll_estimate
+        FROM exact JOIN final USING (event_type)
+        ORDER BY event_type
+    """
+
+
 def events_cms_user_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Heavy-hitter frequency estimation via the engine-portable
     Count-Min sketch: build the (d·w = 2048)-counter state over the
@@ -458,6 +695,41 @@ def events_cms_user_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# events_cms_user_counts: Count-Min replica — salted-md5 counter
+# columns, integer count/min folds. Exact parity by construction.
+ORACLES["events_cms_user_counts"] = """
+        WITH hashed AS (
+            SELECT user_id, r,
+                   ('0x' || substr(md5(CAST(r AS VARCHAR) || '|'
+                                        || CAST(user_id AS VARCHAR)), 1, 4))::BIGINT
+                       % 512 AS c
+            FROM events, unnest([0, 1, 2, 3]) AS t(r)
+        ),
+        counters AS (
+            SELECT r, c, count(*) AS cnt FROM hashed GROUP BY 1, 2
+        ),
+        probes AS (
+            SELECT DISTINCT user_id, r,
+                   ('0x' || substr(md5(CAST(r AS VARCHAR) || '|'
+                                        || CAST(user_id AS VARCHAR)), 1, 4))::BIGINT
+                       % 512 AS c
+            FROM events, unnest([0, 1, 2, 3]) AS t(r)
+        ),
+        est AS (
+            SELECT user_id, MIN(cnt) AS cms_estimate
+            FROM probes JOIN counters USING (r, c)
+            GROUP BY 1
+        ),
+        exact AS (
+            SELECT user_id, count(*) AS exact_n FROM events GROUP BY 1
+        )
+        SELECT user_id, exact_n, cms_estimate
+        FROM exact JOIN est USING (user_id)
+        ORDER BY cms_estimate DESC, user_id
+        LIMIT 10
+    """
+
+
 def events_value_quantile_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """p50/p90/p99 of event value per type from the 64-bin histogram
     sketch (`operators/sketch.hist_quantiles`) — quantiles the way a
@@ -473,6 +745,52 @@ def events_value_quantile_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select(
         "event_type", "q", F.round("approx_value", 4).alias("approx_value")
     ).orderBy("event_type", "q")
+
+
+# events_value_quantile_sketch: histogram-sketch replica — same
+# grid (floor((v-mn)/((mx-mn)/64)), clamp 63), integer cumulative
+# counts, identical interpolation expression. Estimates match
+# bit-for-bit because every float op is the same IEEE sequence.
+ORACLES["events_value_quantile_sketch"] = """
+        WITH stats AS (
+            SELECT event_type, MIN(value) AS mn, MAX(value) AS mx,
+                   COUNT(value) AS n
+            FROM events GROUP BY 1
+        ),
+        binned AS (
+            SELECT e.event_type, s.mn, s.mx, s.n,
+                   CASE WHEN s.mx = s.mn THEN 0
+                        ELSE LEAST(63, CAST(FLOOR((e.value - s.mn)
+                                 / ((s.mx - s.mn) / 64)) AS INT)) END AS bin
+            FROM events e JOIN stats s USING (event_type)
+        ),
+        counts AS (
+            SELECT event_type, mn, mx, n, bin, COUNT(*) AS cnt
+            FROM binned GROUP BY 1, 2, 3, 4, 5
+        ),
+        cum AS (
+            SELECT *, SUM(cnt) OVER (PARTITION BY event_type
+                                     ORDER BY bin) AS cum
+            FROM counts
+        ),
+        hit AS (
+            SELECT c.*, c.cum - c.cnt AS prev, q.q
+            FROM cum c,
+                 (SELECT CAST(q AS DOUBLE) AS q
+                  FROM (VALUES (0.5), (0.9), (0.99)) AS v(q)) q
+            WHERE c.cum >= q.q * c.n
+        ),
+        first_hit AS (
+            SELECT *, ROW_NUMBER() OVER (PARTITION BY event_type, q
+                                         ORDER BY bin) AS rn
+            FROM hit
+        )
+        SELECT event_type, q,
+               ROUND(mn + ((mx - mn) / 64)
+                     * (bin + (q * n - prev) / cnt), 4) AS approx_value
+        FROM first_hit WHERE rn = 1
+        ORDER BY event_type, q
+    """
 
 
 def events_by_segment_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -505,10 +823,22 @@ def events_by_segment_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
         joined.groupBy("c_mktsegment")
         .agg(
             F.count("*").alias("n_events"),
-            _as_double(F.sum(F.col("value").cast(_D))).alias("total_value"),
+            as_double(F.sum(F.col("value").cast(MONEY))).alias("total_value"),
         )
         .orderBy("c_mktsegment")
     )
+
+
+# events_by_segment_salted: the oracle is the PLAIN join — salting
+# is a physical rewrite and must not change a single row.
+ORACLES["events_by_segment_salted"] = """
+        SELECT c_mktsegment,
+               count(*) AS n_events,
+               CAST(ROUND(SUM(CAST(value AS DECIMAL(18,2))), 2) AS DOUBLE) AS total_value
+        FROM events e JOIN customer c ON e.user_id = c.c_custkey
+        GROUP BY 1
+        ORDER BY 1
+    """
 
 
 def events_bloom_semijoin(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -544,62 +874,29 @@ def events_bloom_semijoin(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.count("*").alias("n_events"),
             F.countDistinct("user_id").alias("n_users"),
-            _as_double(F.sum(F.col("value").cast(_D))).alias("total_value"),
+            as_double(F.sum(F.col("value").cast(MONEY))).alias("total_value"),
         )
         .orderBy("event_type")
     )
 
 
-def parts_copurchase_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Product-graph centrality: fixed-iteration PageRank
-    (`graph.pagerank`, 3 rounds, d=0.85) over the co-purchase graph
-    (parts linked when they share an order basket — the level-2
-    market-basket graph symmetrized), top-20 parts by rank. The
-    "anchor products" analysis: high-rank parts co-occur with many
-    well-connected parts, a recommendation/merchandising signal the
-    raw pair counts miss.
-
-    Oracle: DuckDB replays the 3 propagation rounds CTE-for-CTE —
-    contributions are one IEEE double divide each, summed in DECIMAL
-    (order-independent), so every intermediate rank is bit-identical
-    across engines (the kmeans/logistic-GD exactness pattern).
-
-    Scale: basket self-join is bounded by Σ|basket|² (|basket| ≤ 7);
-    each round is one edge-list equi-join + one partial-agg shuffle on
-    dst; node table and 1-row N are broadcast. TakeOrdered top-20."""
-    from ecommerce_realtime_pipeline_spark.operators.graph import pagerank
-
-    li = load_table(spark, sf_dir, "lineitem")
-    # items dedup is partitioned by ok ALONE (hashpartitioning(ok)
-    # satisfies the (ok, pk) dedup's required distribution), so the
-    # basket self-join consumes the SAME exchange on both sides
-    # (ReusedExchange) with zero re-shuffle — one items-sized exchange
-    # for the whole pair build. The raw pair stream goes to pagerank
-    # UN-deduped (dedup_edges=True): the edge dedup fuses into the
-    # single _u-partitioned exchange that builds the checkpointed edge
-    # table, instead of paying its own (src,dst) distinct shuffle
-    # first (the co-purchase pair stream is ~duplicate-free anyway —
-    # a dup needs two orders sharing both parts).
-    items = (
-        li.select(F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("pk"))
-        .repartition(F.col("ok"))
-        .dropDuplicates(["ok", "pk"])
-    )
-    a = items.select("ok", F.col("pk").alias("src"))
-    b = items.select("ok", F.col("pk").alias("dst"))
-    edges = (
-        a.join(b, "ok")
-        .filter(F.col("src") != F.col("dst"))
-        .select("src", "dst")
-    )
-    ranks = pagerank(edges, iters=3, damping=0.85, dedup_edges=True)
-    return (
-        ranks.select(
-            F.col("node").alias("part_key"), F.round("rank", 8).alias("rank")
+# events_bloom_semijoin: the oracle is the PLAIN semi-join — Bloom
+# pruning is a physical prefilter with no false negatives, so the
+# bloom→exact pipeline must reproduce it row-for-row.
+ORACLES["events_bloom_semijoin"] = """
+        SELECT event_type,
+               count(*) AS n_events,
+               count(DISTINCT user_id) AS n_users,
+               CAST(ROUND(SUM(CAST(value AS DECIMAL(18,2))), 2) AS DOUBLE)
+                   AS total_value
+        FROM events e
+        WHERE EXISTS (
+            SELECT 1 FROM customer c
+            WHERE c.c_custkey = e.user_id AND c.c_mktsegment = 'BUILDING'
         )
-        .orderBy(F.desc("rank"), "part_key")
-        .limit(20)
-    )
+        GROUP BY 1
+        ORDER BY 1
+    """
 
 
 def events_zorder_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -629,13 +926,30 @@ def events_zorder_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(
                 F.count("*").alias("n_events"),
                 F.countDistinct("user_id").alias("n_users"),
-                _as_double(F.sum(F.col("value").cast(_D))).alias("total_value"),
+                as_double(F.sum(F.col("value").cast(MONEY))).alias("total_value"),
                 F.min("event_id").alias("min_event_id"),
                 F.max("event_id").alias("max_event_id"),
             )
             .orderBy("event_type")
             .localCheckpoint(eager=True)
         )
+
+
+# events_zorder_roundtrip: the oracle aggregates the RAW table —
+# the z-order rewrite is a physical permutation and must preserve
+# every row exactly.
+ORACLES["events_zorder_roundtrip"] = """
+        SELECT event_type,
+               count(*) AS n_events,
+               count(DISTINCT user_id) AS n_users,
+               CAST(ROUND(SUM(CAST(value AS DECIMAL(18,2))), 2) AS DOUBLE)
+                   AS total_value,
+               MIN(event_id) AS min_event_id,
+               MAX(event_id) AS max_event_id
+        FROM events
+        GROUP BY 1
+        ORDER BY 1
+    """
 
 
 def events_heavy_hitters_mg(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -664,36 +978,22 @@ def events_heavy_hitters_mg(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def events_type_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Clickstream path mining: top-15 consecutive event-type
-    transitions (src → dst) across each user's time-ordered stream —
-    the first-order Markov structure of the funnel (which steps
-    actually follow which). Deterministic ordering via (ts, event_id)
-    tie-break on both engines.
-
-    Scale: ONE shuffle to partition by user for the lag window (the
-    same exchange sessionization pays), then a tiny (|types|²)-key agg;
-    top-k is TakeOrdered."""
-    from pyspark.sql import Window as W
-
-    events = load_table(spark, sf_dir, "events")
-    w = W.partitionBy("user_id").orderBy("ts", "event_id")
-    trans = (
-        events.select(
-            "user_id",
-            F.lag("event_type").over(w).alias("src_type"),
-            F.col("event_type").alias("dst_type"),
+# events_heavy_hitters_mg: plain top-5 over the planted-skew
+# corpus — result invariance despite MG eviction-order
+# nondeterminism (certificate pinned in tests).
+ORACLES["events_heavy_hitters_mg"] = """
+        WITH corpus AS (
+            SELECT user_id FROM events
+            UNION ALL
+            SELECT user_id FROM events, unnest([1, 2, 3]) AS t(i)
+            WHERE user_id < 8
         )
-        .filter(F.col("src_type").isNotNull())
-        .groupBy("src_type", "dst_type")
-        .agg(
-            F.count("*").alias("n_transitions"),
-            F.countDistinct("user_id").alias("n_users"),
-        )
-    )
-    return trans.orderBy(
-        F.desc("n_transitions"), "src_type", "dst_type"
-    ).limit(15)
+        SELECT user_id, count(*) AS n_events
+        FROM corpus
+        GROUP BY 1
+        ORDER BY n_events DESC, user_id
+        LIMIT 5
+    """
 
 
 def events_volume_anomalies(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -731,6 +1031,37 @@ def events_volume_anomalies(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# events_volume_anomalies: integer moments are exact sums; the
+# mean/var/z chain is the same fixed IEEE op sequence as Spark's.
+ORACLES["events_volume_anomalies"] = """
+        WITH per_min AS (
+            SELECT date_trunc('minute', ts) AS minute,
+                   count(*) AS n_events
+            FROM events GROUP BY 1
+        ),
+        mom AS (
+            SELECT count(*) AS n, SUM(n_events) AS s1,
+                   SUM(n_events * n_events) AS s2
+            FROM per_min
+        ),
+        scored AS (
+            SELECT minute, n_events,
+                   ROUND(
+                       (CAST(n_events AS DOUBLE) - CAST(s1 AS DOUBLE) / n)
+                       / sqrt((CAST(s2 AS DOUBLE)
+                               - CAST(s1 AS DOUBLE)
+                                 * (CAST(s1 AS DOUBLE) / n)) / (n - 1)),
+                       6
+                   ) AS zscore
+            FROM per_min, mom
+        )
+        SELECT minute, n_events, zscore
+        FROM scored
+        ORDER BY abs(zscore) DESC, minute
+        LIMIT 10
+    """
+
+
 def orders_exact_quantiles_twopass(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EXACT p50/p90 of order value WITHOUT a global sort
     (`sketch.exact_quantiles_twopass`): histogram pass localizes each
@@ -752,6 +1083,25 @@ def orders_exact_quantiles_twopass(spark: SparkSession, sf_dir: str) -> DataFram
     )
 
 
+# orders_exact_quantiles_twopass: the k-th order statistic
+# (k = ceil(q*n)) via explicit ORDER BY/OFFSET — the definitionally
+# exact form the two-pass algorithm must reproduce.
+ORACLES["orders_exact_quantiles_twopass"] = """
+        WITH s AS (SELECT CAST(o_totalprice AS DOUBLE) AS v FROM orders),
+        n AS (SELECT count(*) AS n FROM s)
+        SELECT 'p50' AS quantile,
+               (SELECT v FROM s ORDER BY v
+                LIMIT 1 OFFSET (SELECT CAST(ceil(0.5 * n) AS BIGINT) - 1
+                                FROM n)) AS value
+        UNION ALL
+        SELECT 'p90',
+               (SELECT v FROM s ORDER BY v
+                LIMIT 1 OFFSET (SELECT CAST(ceil(0.9 * n) AS BIGINT) - 1
+                                FROM n))
+        ORDER BY quantile
+    """
+
+
 def top_products_per_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Group-wise top-K (R15/R22 windowed form): top-3 products by
     revenue within every nation — rank() over a per-nation window.
@@ -767,7 +1117,7 @@ def top_products_per_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     supplier = load_table(spark, sf_dir, "supplier")
     nation = load_table(spark, sf_dir, "nation")
     part = load_table(spark, sf_dir, "part")
-    revenue = _money("l_extendedprice") * (F.lit(1).cast(_D) - _money("l_discount"))
+    revenue = money("l_extendedprice") * (F.lit(1).cast(MONEY) - money("l_discount"))
     per = (
         lineitem.join(F.broadcast(supplier), lineitem.l_suppkey == supplier.s_suppkey)
         .join(F.broadcast(nation), supplier.s_nationkey == nation.n_nationkey)
@@ -779,8 +1129,32 @@ def top_products_per_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         per.withColumn("rank", F.rank().over(w))
         .filter(F.col("rank") <= 3)
-        .select("nation", "product", "rank", _as_double(F.col("_rev")).alias("revenue"))
+        .select("nation", "product", "rank", as_double(F.col("_rev")).alias("revenue"))
     )
+
+
+ORACLES["top_products_per_nation"] = """
+            WITH per AS (
+                SELECT n_name AS nation, p_name AS product,
+                       SUM(CAST(l_extendedprice AS DECIMAL(18,2))
+                           * (1 - CAST(l_discount AS DECIMAL(18,2)))) AS rev
+                FROM lineitem
+                JOIN supplier ON l_suppkey = s_suppkey
+                JOIN nation ON s_nationkey = n_nationkey
+                JOIN part ON l_partkey = p_partkey
+                GROUP BY 1, 2
+            ),
+            ranked AS (
+                SELECT nation, product,
+                       rank() OVER (PARTITION BY nation
+                                    ORDER BY rev DESC, product) AS rank,
+                       rev
+                FROM per
+            )
+            SELECT nation, product, rank,
+                   CAST(ROUND(rev, 2) AS DOUBLE) AS revenue
+            FROM ranked WHERE rank <= 3
+        """
 
 
 def top_products_per_nation_heap(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -804,7 +1178,7 @@ def top_products_per_nation_heap(spark: SparkSession, sf_dir: str) -> DataFrame:
     supplier = load_table(spark, sf_dir, "supplier")
     nation = load_table(spark, sf_dir, "nation")
     part = load_table(spark, sf_dir, "part")
-    revenue = _money("l_extendedprice") * (F.lit(1).cast(_D) - _money("l_discount"))
+    revenue = money("l_extendedprice") * (F.lit(1).cast(MONEY) - money("l_discount"))
     per = (
         lineitem.join(F.broadcast(supplier), lineitem.l_suppkey == supplier.s_suppkey)
         .join(F.broadcast(nation), supplier.s_nationkey == nation.n_nationkey)
@@ -819,8 +1193,13 @@ def top_products_per_nation_heap(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         cands.withColumn("rank", F.rank().over(w))
         .filter(F.col("rank") <= 3)
-        .select("nation", "product", "rank", _as_double(F.col("_rev")).alias("revenue"))
+        .select("nation", "product", "rank", as_double(F.col("_rev")).alias("revenue"))
     )
+
+
+# The heap scale-path variant produces the identical result by
+# construction (candidates cover the true top-k) -> same oracle.
+ORACLES["top_products_per_nation_heap"] = ORACLES["top_products_per_nation"]
 
 
 def events_decayed_engagement(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -859,6 +1238,21 @@ def events_decayed_engagement(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("event_type")
     )
+
+
+# events_decayed_engagement: per-row pow(0.5, age/7) double, DECIMAL
+# fold — same fixed IEEE chain on both engines; anchor = max epoch_us.
+ORACLES["events_decayed_engagement"] = """
+    WITH a AS (SELECT MAX(epoch_us(ts)) AS amax FROM events)
+    SELECT event_type,
+           count(*) AS n_events,
+           ROUND(CAST(SUM(CAST(value * pow(0.5,
+                    (CAST(amax - epoch_us(ts) AS DOUBLE) / 86400000000.0)
+                    / 7.0) AS DECIMAL(28,14))) AS DOUBLE), 4)
+               AS decayed_value
+    FROM events, a
+    GROUP BY 1 ORDER BY 1
+"""
 
 
 def events_value_outliers_per_type(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -906,6 +1300,40 @@ def events_value_outliers_per_type(spark: SparkSession, sf_dir: str) -> DataFram
     )
 
 
+# events_value_outliers_per_type: exact decimal moments per type, the
+# same mean/var/z IEEE chain, |z| rank with event_id tie-break.
+ORACLES["events_value_outliers_per_type"] = """
+    WITH mom AS (
+        SELECT event_type, count(*) AS n,
+               SUM(CAST(value AS DECIMAL(18,2))) AS s1,
+               SUM(CAST(CAST(value AS DECIMAL(18,2))
+                        * CAST(value AS DECIMAL(18,2))
+                        AS DECIMAL(38,4))) AS s2
+        FROM events GROUP BY 1
+    ),
+    scored AS (
+        SELECT e.event_type, e.event_id, e.value,
+               ROUND((CAST(e.value AS DOUBLE) - CAST(s1 AS DOUBLE) / n)
+                     / sqrt((CAST(s2 AS DOUBLE)
+                             - CAST(s1 AS DOUBLE)
+                               * (CAST(s1 AS DOUBLE) / n)) / (n - 1)),
+                     6) AS zscore
+        FROM events e JOIN mom USING (event_type)
+    ),
+    ranked AS (
+        SELECT event_type, event_id, value, zscore,
+               CAST(row_number() OVER (
+                   PARTITION BY event_type
+                   ORDER BY abs(zscore) DESC, event_id
+               ) AS INT) AS rk
+        FROM scored
+    )
+    SELECT event_type, rk, event_id, value, zscore
+    FROM ranked WHERE rk <= 3
+    ORDER BY event_type, rk
+"""
+
+
 def customer_value_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Customer-lifetime-value DECILES (ntile window): per-customer
     spend (DECIMAL-exact, so the ordering is engine-identical) →
@@ -924,7 +1352,7 @@ def customer_value_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     orders = load_table(spark, sf_dir, "orders")
     spend = orders.groupBy("o_custkey").agg(
-        F.sum(_money("o_totalprice")).alias("_spend")
+        F.sum(money("o_totalprice")).alias("_spend")
     )
     w = W.orderBy(F.col("_spend").desc(), F.col("o_custkey"))
     return (
@@ -932,12 +1360,35 @@ def customer_value_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("decile")
         .agg(
             F.count("*").alias("n_customers"),
-            _as_double(F.sum("_spend")).alias("total_spend"),
-            _as_double(F.max("_spend")).alias("max_spend"),
-            _as_double(F.min("_spend")).alias("min_spend"),
+            as_double(F.sum("_spend")).alias("total_spend"),
+            as_double(F.max("_spend")).alias("max_spend"),
+            as_double(F.min("_spend")).alias("min_spend"),
         )
         .orderBy("decile")
     )
+
+
+# ntile decile segmentation: SQL-standard remainder-to-first-buckets
+# rule + a total order (spend DECIMAL-exact, custkey tie-break) make
+# bucket membership engine-identical.
+ORACLES["customer_value_deciles"] = """
+    WITH spend AS (
+        SELECT o_custkey,
+               SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS s
+        FROM orders GROUP BY 1
+    ),
+    t AS (
+        SELECT o_custkey, s,
+               ntile(10) OVER (ORDER BY s DESC, o_custkey) AS decile
+        FROM spend
+    )
+    SELECT decile,
+           count(*) AS n_customers,
+           CAST(ROUND(SUM(s), 2) AS DOUBLE) AS total_spend,
+           CAST(ROUND(MAX(s), 2) AS DOUBLE) AS max_spend,
+           CAST(ROUND(MIN(s), 2) AS DOUBLE) AS min_spend
+    FROM t GROUP BY 1 ORDER BY 1
+"""
 
 
 def orders_status_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -954,23 +1405,39 @@ def orders_status_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     month = F.date_format(F.date_trunc("month", F.col("o_orderdate")), "yyyy-MM")
     wide = (
         orders.select(month.alias("month"), "o_orderstatus",
-                      _money("o_totalprice").alias("_rev"))
+                      money("o_totalprice").alias("_rev"))
         .groupBy("month")
         .pivot("o_orderstatus", ["F", "O", "P"])
         .agg(F.count(F.lit(1)).alias("n"), F.sum("_rev").alias("rev"))
     )
     # a month with zero orders of a status pivots to NULL cells —
     # coalesce to 0 like the oracle's FILTER/COALESCE form.
-    zero = F.lit(0).cast(_D)
+    zero = F.lit(0).cast(MONEY)
     return wide.select(
         "month",
         F.coalesce("F_n", F.lit(0)).alias("n_f"),
-        _as_double(F.coalesce("F_rev", zero)).alias("rev_f"),
+        as_double(F.coalesce("F_rev", zero)).alias("rev_f"),
         F.coalesce("O_n", F.lit(0)).alias("n_o"),
-        _as_double(F.coalesce("O_rev", zero)).alias("rev_o"),
+        as_double(F.coalesce("O_rev", zero)).alias("rev_o"),
         F.coalesce("P_n", F.lit(0)).alias("n_p"),
-        _as_double(F.coalesce("P_rev", zero)).alias("rev_p"),
+        as_double(F.coalesce("P_rev", zero)).alias("rev_p"),
     ).orderBy("month")
+
+
+# pivot == conditional aggregation (its relational definition).
+ORACLES["orders_status_pivot"] = """
+    SELECT strftime(date_trunc('month', o_orderdate), '%Y-%m') AS month,
+           COUNT(*) FILTER (WHERE o_orderstatus = 'F') AS n_f,
+           CAST(ROUND(COALESCE(SUM(CAST(o_totalprice AS DECIMAL(18,2)))
+                 FILTER (WHERE o_orderstatus = 'F'), 0), 2) AS DOUBLE) AS rev_f,
+           COUNT(*) FILTER (WHERE o_orderstatus = 'O') AS n_o,
+           CAST(ROUND(COALESCE(SUM(CAST(o_totalprice AS DECIMAL(18,2)))
+                 FILTER (WHERE o_orderstatus = 'O'), 0), 2) AS DOUBLE) AS rev_o,
+           COUNT(*) FILTER (WHERE o_orderstatus = 'P') AS n_p,
+           CAST(ROUND(COALESCE(SUM(CAST(o_totalprice AS DECIMAL(18,2)))
+                 FILTER (WHERE o_orderstatus = 'P'), 0), 2) AS DOUBLE) AS rev_p
+    FROM orders GROUP BY 1 ORDER BY 1
+"""
 
 
 def events_metrics_unpivot(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -986,7 +1453,7 @@ def events_metrics_unpivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     wide = events.groupBy("event_type").agg(
         F.count("*").cast("double").alias("n_events"),
         F.countDistinct("user_id").cast("double").alias("n_users"),
-        _as_double(F.sum(F.col("value").cast(_D))).alias("total_value"),
+        as_double(F.sum(F.col("value").cast(MONEY))).alias("total_value"),
     )
     return wide.unpivot(
         ["event_type"],
@@ -994,6 +1461,25 @@ def events_metrics_unpivot(spark: SparkSession, sf_dir: str) -> DataFrame:
         "metric",
         "value",
     ).orderBy("event_type", "metric")
+
+
+# unpivot == UNION ALL per metric column (its relational definition).
+ORACLES["events_metrics_unpivot"] = """
+    WITH wide AS (
+        SELECT event_type,
+               CAST(count(*) AS DOUBLE) AS n_events,
+               CAST(count(DISTINCT user_id) AS DOUBLE) AS n_users,
+               CAST(ROUND(SUM(CAST(value AS DECIMAL(18,2))), 2) AS DOUBLE)
+                   AS total_value
+        FROM events GROUP BY 1
+    )
+    SELECT event_type, 'n_events' AS metric, n_events AS value FROM wide
+    UNION ALL
+    SELECT event_type, 'n_users', n_users FROM wide
+    UNION ALL
+    SELECT event_type, 'total_value', total_value FROM wide
+    ORDER BY event_type, metric
+"""
 
 
 def customer_running_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1017,11 +1503,30 @@ def customer_running_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("o_orderkey").alias("orderkey"),
         F.date_format("o_orderdate", "yyyy-MM-dd").alias("order_day"),
         F.row_number().over(w).alias("order_seq"),
-        _as_double(F.sum(_money("o_totalprice")).over(run)).alias("running_value"),
+        as_double(F.sum(money("o_totalprice")).over(run)).alias("running_value"),
         F.datediff(
             F.col("o_orderdate"), F.lag("o_orderdate").over(w)
         ).alias("days_since_prev"),
     )
+
+
+ORACLES["customer_running_totals"] = """
+            SELECT o_custkey AS custkey,
+                   o_orderkey AS orderkey,
+                   strftime(o_orderdate, '%Y-%m-%d') AS order_day,
+                   row_number() OVER w AS order_seq,
+                   CAST(ROUND(SUM(CAST(o_totalprice AS DECIMAL(18,2)))
+                       OVER (PARTITION BY o_custkey
+                             ORDER BY o_orderdate, o_orderkey
+                             ROWS BETWEEN UNBOUNDED PRECEDING
+                                  AND CURRENT ROW), 2) AS DOUBLE)
+                       AS running_value,
+                   date_diff('day', lag(o_orderdate) OVER w, o_orderdate)
+                       AS days_since_prev
+            FROM orders
+            WINDOW w AS (PARTITION BY o_custkey
+                         ORDER BY o_orderdate, o_orderkey)
+        """
 
 
 def order_value_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1044,1229 +1549,15 @@ def order_value_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def market_basket_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Market-basket pair mining (a-priori level 2): top-20 part pairs
-    by co-purchase order count, with per-part support and lift — the
-    classic e-commerce cross-sell analysis over order baskets.
-
-    Scale shape (the order of operations IS the design):
-    - the within-order self-join is keyed on l_orderkey (co-partitioned
-      equi-join) and bounded by Σ|basket|² with |basket| ≤ 7 — linear
-      in orders, never corpus-quadratic;
-    - pair counts take ONE shuffle on (part_a, part_b), then the
-      top-20 is TakeOrdered;
-    - only THEN are the 20 survivor rows enriched with per-part order
-      counts — broadcasting the 20-row side into the part-counts
-      table, never the reverse (part counts are corpus-sized at
-      100 TB; the survivors are k rows).
-    - lift = n_both·n_orders/(n_a·n_b): exact integer inputs, one
-      double divide — bit-identical across engines.
-    """
-    li = load_table(spark, sf_dir, "lineitem")
-    items = li.select("l_orderkey", "l_partkey").distinct()
-    a = items.select(
-        F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("part_a")
-    )
-    b = items.select(
-        F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("part_b")
-    )
-    top_pairs = (
-        a.join(b, "ok")
-        .filter(F.col("part_a") < F.col("part_b"))
-        .groupBy("part_a", "part_b")
-        .agg(F.count("*").alias("n_both"))
-        .orderBy(F.desc("n_both"), "part_a", "part_b")
-        .limit(20)
-    )
-    part_orders = items.groupBy("l_partkey").agg(F.count("*").alias("n_part"))
-    # 1-row scalar attachment (total basket count), not a cartesian
-    totals = items.select(
-        F.countDistinct("l_orderkey").alias("n_orders")
-    )
-    e1 = part_orders.join(
-        F.broadcast(top_pairs), part_orders.l_partkey == top_pairs.part_a
-    ).select("part_a", "part_b", "n_both", F.col("n_part").alias("n_a"))
-    pob = part_orders.select(
-        F.col("l_partkey").alias("part_b"), F.col("n_part").alias("n_b")
-    )
-    e2 = pob.join(F.broadcast(e1), "part_b").crossJoin(F.broadcast(totals))
-    return e2.select(
-        "part_a",
-        "part_b",
-        "n_both",
-        "n_a",
-        "n_b",
-        (
-            (F.col("n_both") * F.col("n_orders")).cast("double")
-            / (F.col("n_a") * F.col("n_b"))
-        ).alias("lift"),
-    ).orderBy(F.desc("n_both"), "part_a", "part_b")
-
-
-def cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cohort retention: users grouped by first-activity week; for
-    each (cohort_week, weeks-since-cohort) the count of distinct
-    users still active — the canonical growth-dashboard triangle.
-
-    Scale: first-activity and per-user activity weeks are two aggs on
-    user_id sharing one shuffle partitioning (AQE reuses the
-    exchange); the cohort join is user-co-partitioned; the final agg
-    shuffles on (cohort_week, week_offset) — cardinality weeks², tiny.
-    """
-    events = load_table(spark, sf_dir, "events")
-    firsts = events.groupBy("user_id").agg(
-        F.date_trunc("week", F.min("ts")).cast("date").alias("cohort_day")
-    )
-    active = (
-        events.select(
-            "user_id", F.date_trunc("week", "ts").cast("date").alias("week")
-        )
-        .distinct()
-    )
-    joined = active.join(firsts, "user_id")
-    return (
-        joined.groupBy(
-            # string date: hashable the same way both engines emit it
-            F.date_format("cohort_day", "yyyy-MM-dd").alias("cohort_week"),
-            (F.datediff("week", "cohort_day") / 7).cast("int").alias("week_offset"),
-        )
-        .agg(F.countDistinct("user_id").alias("n_users"))
-        .orderBy("cohort_week", "week_offset")
-    )
-
-
-def repurchase_intervals(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Repeat-purchase cadence: the distribution of days between a
-    customer's consecutive orders, bucketed into the merchandising
-    bands (≤7, 8-30, 31-90, >90 days) with the average gap per band.
-
-    Scale: one shuffle+sort on (custkey, orderdate) for the lag; the
-    band agg is 4 rows. avg_days is one exact-integer sum divided
-    once — engine-identical."""
-    orders = load_table(spark, sf_dir, "orders")
-    from pyspark.sql import Window as W
-
-    w = W.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
-    gap = F.datediff("o_orderdate", F.lag("o_orderdate").over(w))
-    gaps = orders.select(gap.alias("days")).filter(F.col("days").isNotNull())
-    band = (
-        F.when(F.col("days") <= 7, "a_week")
-        .when(F.col("days") <= 30, "b_month")
-        .when(F.col("days") <= 90, "c_quarter")
-        .otherwise("d_longer")
-    )
-    return (
-        gaps.groupBy(band.alias("band"))
-        .agg(
-            F.count("*").alias("n_intervals"),
-            (F.sum("days").cast("double") / F.count("*")).alias("avg_days"),
-        )
-        .orderBy("band")
-    )
-
-
-def shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H-Q3-style shipping priority: BUILDING-segment orders placed
-    before the cutoff whose lines ship AFTER it, ranked by outstanding
-    discounted revenue — the unshipped-backlog triage list.
-
-    Plan: segment membership is a SEMI join (no hard-coded broadcast —
-    the filtered customer set is exactly what may not fit at 100 TB;
-    AQE promotes small cases at runtime, the Bloom path is the explicit
-    alternative), one equi-join orders⋈lineitem on the order key with
-    both date filters PUSHED to the scans, decimal-exact revenue, and a
-    TakeOrdered top-10 — never a global sort."""
-    cut = "1999-06-30"
-    cust = (
-        load_table(spark, sf_dir, "customer")
-        .filter(F.col("c_mktsegment") == "BUILDING")
-        .select("c_custkey")
-    )
-    orders = (
-        load_table(spark, sf_dir, "orders")
-        .filter(F.col("o_orderdate") < F.lit(cut))
-        .select("o_orderkey", "o_custkey", "o_orderdate", "o_orderpriority")
-    )
-    li = (
-        load_table(spark, sf_dir, "lineitem")
-        .filter(F.col("l_shipdate") > F.lit(cut))
-        .select("l_orderkey", "l_extendedprice", "l_discount")
-    )
-    rev = _money("l_extendedprice") * (F.lit(1).cast(_D) - _money("l_discount"))
-    j = orders.join(
-        cust, orders["o_custkey"] == cust["c_custkey"], "left_semi"
-    ).join(li, F.col("o_orderkey") == F.col("l_orderkey"))
-    return (
-        j.groupBy("o_orderkey", "o_orderdate", "o_orderpriority")
-        .agg(_as_double(F.sum(rev)).alias("revenue"))
-        .orderBy(F.desc("revenue"), "o_orderkey")
-        .limit(10)
-    )
-
-
-def returned_items_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H-Q10-style returned-item report: customers ranked by the
-    discounted revenue of their RETURNED lines for orders placed in one
-    quarter — who is hurting, with their nation attached for routing.
-
-    Plan: both selective filters (quarter, returnflag) pushed to the
-    scans; orders⋈lineitem equi-join; the per-customer aggregate is
-    customer-cardinality-sized BEFORE the name/nation joins (aggregate
-    first, decorate later — the decoration joins touch top-k-bound
-    rows only after TakeOrdered at scale; here the tiny dims broadcast);
-    top-20 by revenue with key tie-break."""
-    orders = (
-        load_table(spark, sf_dir, "orders")
-        .filter(
-            (F.col("o_orderdate") >= F.lit("1999-01-01"))
-            & (F.col("o_orderdate") < F.lit("1999-04-01"))
-        )
-        .select("o_orderkey", "o_custkey")
-    )
-    li = (
-        load_table(spark, sf_dir, "lineitem")
-        .filter(F.col("l_returnflag") == "R")
-        .select("l_orderkey", "l_extendedprice", "l_discount")
-    )
-    rev = _money("l_extendedprice") * (F.lit(1).cast(_D) - _money("l_discount"))
-    per_cust = (
-        orders.join(li, F.col("o_orderkey") == F.col("l_orderkey"))
-        .groupBy("o_custkey")
-        .agg(_as_double(F.sum(rev)).alias("revenue"))
-    )
-    cust = load_table(spark, sf_dir, "customer").select(
-        "c_custkey", "c_name", "c_nationkey", "c_acctbal"
-    )
-    nation = load_table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
-    return (
-        per_cust.join(cust, per_cust["o_custkey"] == cust["c_custkey"])
-        .join(F.broadcast(nation), cust["c_nationkey"] == nation["n_nationkey"])
-        .select(
-            "c_custkey",
-            "c_name",
-            "n_name",
-            F.round(F.col("c_acctbal"), 2).alias("acctbal"),
-            "revenue",
-        )
-        .orderBy(F.desc("revenue"), "c_custkey")
-        .limit(20)
-    )
-
-
-def customer_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Classic RFM segmentation: per customer, Recency (days since last
-    order, anchored at the corpus max date — no wall clock), Frequency
-    (order count), Monetary (decimal-exact spend); each scored into
-    quintiles with a custkey tie-break (the customer_value_deciles
-    total-order pattern, SQL-standard ntile bucket rule shared by both
-    engines), then folded into the standard segment labels via ONE
-    deterministic CASE chain mirrored verbatim in the oracle.
-
-    Scale: scoring reproduces ``ntile(5)``
-    EXACTLY — the oracle keeps plain ntile — but WITHOUT the three
-    single-reducer global-sort windows ``Window.orderBy`` forces: the
-    4 bucket-closing boundary ROWS per dimension (ntile's cumulative
-    rank i·q+min(i,rem), including the tie custkey, since tied values
-    straddle buckets) come from ``sketch.exact_rank_rows_twopass``
-    (histogram-localized order statistics, bin-partitioned windows,
-    ≤256-row collects), and each customer's score is then
-    1 + #boundaries-passed via lexicographic LITERAL comparisons — no
-    window, no join, no shuffle beyond the per-customer partial agg.
-    One orders scan, checkpointed customer-sized base reused by the
-    nine bounded boundary jobs; the final fold is |segments|-row."""
-    from ecommerce_realtime_pipeline_spark.operators import sketch as SK
-
-    orders = load_table(spark, sf_dir, "orders").select(
-        "o_custkey", "o_orderdate", _money("o_totalprice").alias("_m")
-    )
-    per_cust = orders.groupBy("o_custkey").agg(
-        F.max("o_orderdate").alias("_last"),
-        F.count("*").alias("n_orders"),
-        F.sum("_m").alias("_spend"),
-    )
-    anchor = orders.agg(F.max("o_orderdate").alias("_anchor"))
-    base = (
-        per_cust.crossJoin(F.broadcast(anchor))
-        .withColumn(
-            "recency_days", F.datediff(F.col("_anchor"), F.col("_last"))
-        )
-        # recency scores by recency DESC: negate so every dimension
-        # ranks ASC through the same order-statistic machinery
-        .withColumn("_neg_r", -F.col("recency_days"))
-        .localCheckpoint(eager=True)
-    )
-    n = base.count()
-    q5, rem = divmod(n, 5)
-    # ntile's cumulative bucket-closing ranks (first `rem` buckets get
-    # one extra row — NOT ceil(i·n/5), which differs when rem ∈ {3,4})
-    ks = [i * q5 + min(i, rem) for i in range(1, 5)]
-    ks = [max(1, k) for k in ks]
-
-    def score(value_col: str, bounds) -> F.Column:
-        s = F.lit(1)
-        for _k, v, t in bounds:
-            s = s + F.when(
-                (F.col(value_col) > F.lit(v))
-                | ((F.col(value_col) == F.lit(v)) & (F.col("o_custkey") > F.lit(t))),
-                1,
-            ).otherwise(0)
-        return s
-
-    r_b = SK.exact_rank_rows_twopass(base, "_neg_r", "o_custkey", ks)
-    f_b = SK.exact_rank_rows_twopass(base, "n_orders", "o_custkey", ks)
-    m_b = SK.exact_rank_rows_twopass(base, "_spend", "o_custkey", ks)
-    scored = (
-        base.withColumn("r_score", score("_neg_r", r_b))
-        .withColumn("f_score", score("n_orders", f_b))
-        .withColumn("m_score", score("_spend", m_b))
-    )
-    segment = (
-        F.when(
-            (F.col("r_score") >= 4) & (F.col("f_score") >= 4) & (F.col("m_score") >= 4),
-            "champions",
-        )
-        .when(F.col("f_score") >= 4, "loyal")
-        .when(F.col("m_score") >= 4, "big_spenders")
-        .when((F.col("r_score") <= 2) & (F.col("f_score") >= 3), "at_risk")
-        .when((F.col("r_score") <= 2) & (F.col("f_score") <= 2), "hibernating")
-        .otherwise("regular")
-    )
-    return (
-        scored.withColumn("segment", segment)
-        .groupBy("segment")
-        .agg(
-            F.count("*").alias("n_customers"),
-            _as_double(F.sum("_spend")).alias("total_spend"),
-            F.round(F.avg("recency_days"), 4).alias("avg_recency_days"),
-            F.round(F.avg("n_orders"), 4).alias("avg_orders"),
-        )
-        .orderBy("segment")
-    )
-
-
-def nation_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H-Q8-flavor market share: of all STANDARD-part line revenue,
-    the fraction supplied by NATION_3's suppliers, per ship year — the
-    competitive-share trend. Plan: the filtered part keys and nation
-    are hinted broadcast dims, supplier is AQE-promoted (see inline
-    note — it is unfiltered and scale-linear), around ONE lineitem scan;
-    the share is a conditional aggregate over the same partial-agg
-    shuffle (never two scans, never a join after aggregation);
-    decimal-exact sums, one double divide per year row."""
-    li = load_table(spark, sf_dir, "lineitem").select(
-        "l_partkey", "l_suppkey", "l_shipdate", "l_extendedprice", "l_discount"
-    )
-    part = (
-        load_table(spark, sf_dir, "part")
-        .filter(F.col("p_type") == "STANDARD")
-        .select("p_partkey")
-    )
-    supplier = load_table(spark, sf_dir, "supplier").select(
-        "s_suppkey", "s_nationkey"
-    )
-    nation = load_table(spark, sf_dir, "nation").select(
-        "n_nationkey", "n_name"
-    )
-    vol = _money("l_extendedprice") * (F.lit(1).cast(_D) - _money("l_discount"))
-    # supplier deliberately carries NO broadcast hint: it is the one
-    # UNFILTERED dim here and grows linearly with scale factor — a
-    # hard hint that wins at sf0.1 is an executor OOM at 100×. AQE
-    # promotes it to broadcast at runtime whenever it measures small
-    # (plan-pinned at sf0.1); past the threshold it degrades to a
-    # shuffle join instead of dying. part (filtered) and nation
-    # (constant-sized) keep their hints — same policy
-    # shipping_priority documents.
-    j = (
-        li.join(F.broadcast(part), li["l_partkey"] == part["p_partkey"])
-        .join(supplier, li["l_suppkey"] == supplier["s_suppkey"])
-        .join(F.broadcast(nation), supplier["s_nationkey"] == nation["n_nationkey"])
-    )
-    target = F.when(F.col("n_name") == "NATION_3", vol).otherwise(
-        F.lit(0).cast(_D)
-    )
-    return (
-        j.groupBy(F.year("l_shipdate").alias("ship_year"))
-        .agg(
-            _as_double(F.sum(target)).alias("nation_revenue"),
-            _as_double(F.sum(vol)).alias("total_revenue"),
-            F.round(
-                F.sum(target).cast("double") / F.sum(vol).cast("double"), 6
-            ).alias("mkt_share"),
-        )
-        .orderBy("ship_year")
-    )
-
-
-def promo_revenue_share(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H-Q14-flavor promo effect: per ship month of 1999, the
-    percentage of line revenue coming from PROMO-type parts. ONE
-    lineitem scan (ship-year filter pushed) joined to the broadcast
-    (p_partkey, p_type) dim; promo vs total are conditional aggregates
-    over the same shuffle; decimal-exact sums, one double divide."""
-    li = (
-        load_table(spark, sf_dir, "lineitem")
-        .filter(
-            (F.col("l_shipdate") >= F.lit("1999-01-01"))
-            & (F.col("l_shipdate") < F.lit("2000-01-01"))
-        )
-        .select("l_partkey", "l_shipdate", "l_extendedprice", "l_discount")
-    )
-    part = load_table(spark, sf_dir, "part").select("p_partkey", "p_type")
-    vol = _money("l_extendedprice") * (F.lit(1).cast(_D) - _money("l_discount"))
-    promo = F.when(F.col("p_type") == "PROMO", vol).otherwise(F.lit(0).cast(_D))
-    return (
-        li.join(F.broadcast(part), li["l_partkey"] == part["p_partkey"])
-        .groupBy(F.month("l_shipdate").alias("ship_month"))
-        .agg(
-            _as_double(F.sum(promo)).alias("promo_revenue"),
-            _as_double(F.sum(vol)).alias("total_revenue"),
-            F.round(
-                F.lit(100.0) * F.sum(promo).cast("double")
-                / F.sum(vol).cast("double"),
-                6,
-            ).alias("promo_share_pct"),
-        )
-        .orderBy("ship_month")
-    )
-
-
-def order_priority_fulfillment(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H-Q4-flavor priority check: per order priority, how many
-    orders placed in 1999 H1 have at least one LATE line (shipped more
-    than 90 days after the order date) — the fulfillment-SLA breakdown.
-
-    Plan: the order-date filter is pushed to the orders scan; lateness
-    is decided by an EXISTS (left-semi) equi-join on the order key with
-    the date comparison as the join residual — never an inequality-only
-    join; the priority rollup is a |priorities|-row aggregate."""
-    orders = (
-        load_table(spark, sf_dir, "orders")
-        .filter(
-            (F.col("o_orderdate") >= F.lit("1999-01-01"))
-            & (F.col("o_orderdate") < F.lit("1999-07-01"))
-        )
-        .select("o_orderkey", "o_orderdate", "o_orderpriority")
-    )
-    li = load_table(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_shipdate"
-    )
-    late = orders.join(
-        li,
-        (F.col("o_orderkey") == F.col("l_orderkey"))
-        & (F.col("l_shipdate") > F.date_add(F.col("o_orderdate"), 90)),
-        "left_semi",
-    )
-    return (
-        late.groupBy("o_orderpriority")
-        .agg(F.count("*").alias("n_late_orders"))
-        .orderBy("o_orderpriority")
-    )
-
-
-def customer_order_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H-Q13-flavor customer distribution: how many customers
-    placed exactly N orders, for every N seen (including 0 via the
-    LEFT join — a customer with no orders must land in the zero
-    bucket, the classic outer-join-then-histogram shape).
-
-    Plan: orders aggregates FIRST (one scan → customer-cardinality
-    counts), then ONE equi-join against the customer keys (no
-    broadcast hint on either side — both are scale-linear; AQE
-    promotes if one measures small), then the |distinct counts|-row
-    histogram. Never a per-customer correlated subquery."""
-    cust = load_table(spark, sf_dir, "customer").select("c_custkey")
-    orders = load_table(spark, sf_dir, "orders").select("o_custkey")
-    per_cust = orders.groupBy("o_custkey").agg(F.count("*").alias("_n"))
-    return (
-        cust.join(per_cust, cust["c_custkey"] == per_cust["o_custkey"], "left")
-        .select(F.coalesce(F.col("_n"), F.lit(0)).alias("n_orders"))
-        .groupBy("n_orders")
-        .agg(F.count("*").alias("n_customers"))
-        .orderBy(F.desc("n_customers"), F.desc("n_orders"))
-    )
-
-
-def large_order_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H-Q18-flavor large-volume orders: the top-20 orders whose
-    total line quantity exceeds 300 units, decorated with the customer
-    — the bulk-buyer watchlist.
-
-    Plan: lineitem aggregates FIRST (per-order decimal-exact quantity
-    sum, one scan), the HAVING filter shrinks it to the handful of
-    qualifying orders BEFORE any join; the orders/customer decoration
-    joins run on that filtered set (AQE sees the tiny side at runtime
-    — no hard hints on the scale-linear dims); TakeOrdered top-20."""
-    li = load_table(spark, sf_dir, "lineitem").select(
-        "l_orderkey", F.col("l_quantity").cast(_D).alias("_q")
-    )
-    big = (
-        li.groupBy("l_orderkey")
-        .agg(F.sum("_q").alias("_qty"))
-        .filter(F.col("_qty") > 300)
-    )
-    orders = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_custkey", "o_orderdate", "o_totalprice"
-    )
-    cust = load_table(spark, sf_dir, "customer").select("c_custkey", "c_name")
-    return (
-        big.join(orders, big["l_orderkey"] == orders["o_orderkey"])
-        .join(cust, orders["o_custkey"] == cust["c_custkey"])
-        .select(
-            "c_custkey",
-            "c_name",
-            "o_orderkey",
-            "o_orderdate",
-            _as_double(F.col("o_totalprice")).alias("order_total"),
-            _as_double(F.col("_qty")).alias("total_qty"),
-        )
-        .orderBy(F.desc("order_total"), "o_orderkey")
-        .limit(20)
-    )
-
-
-def dormant_customer_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H-Q22-flavor dormant-capital report: customers whose account
-    balance exceeds the average POSITIVE balance but who placed no
-    order on/after 1999-09-01 — per market segment, how many such
-    dormant high-balance customers and how much balance they hold (the
-    re-engagement target list).
-
-    Exactness: the threshold comparison is division-free —
-    ``acctbal · n > Σbal`` in exact DECIMAL (mirrored verbatim in the
-    oracle), so no engine-specific average rounding can flip a
-    boundary customer. Plan: the 1-row positive-balance aggregate
-    broadcasts; dormancy is a LEFT ANTI equi-join against the
-    date-filtered orders scan (filter pushed; never NOT IN over a
-    subquery per row); output is a |segments|-row aggregate."""
-    cust = load_table(spark, sf_dir, "customer").select(
-        "c_custkey", "c_mktsegment", "c_acctbal"
-    )
-    pos = cust.filter(F.col("c_acctbal") > 0).agg(
-        F.sum(F.col("c_acctbal").cast(_D)).alias("_s"),
-        F.count("*").cast("decimal(12,0)").alias("_n"),
-    )
-    recent = (
-        load_table(spark, sf_dir, "orders")
-        .filter(F.col("o_orderdate") >= F.lit("1999-09-01"))
-        .select("o_custkey")
-    )
-    rich = cust.crossJoin(F.broadcast(pos)).filter(
-        F.col("c_acctbal").cast(_D) * F.col("_n") > F.col("_s")
-    )
-    dormant = rich.join(
-        recent, rich["c_custkey"] == recent["o_custkey"], "left_anti"
-    )
-    return (
-        dormant.groupBy("c_mktsegment")
-        .agg(
-            F.count("*").alias("n_customers"),
-            _as_double(F.sum(F.col("c_acctbal").cast(_D))).alias(
-                "total_balance"
-            ),
-        )
-        .orderBy("c_mktsegment")
-    )
-
-
-def nation_supplier_hhi(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H-Q11-flavor market concentration: per supplier nation, the
-    Herfindahl-Hirschman index of its suppliers' revenue shares plus
-    the top-supplier share — the is-this-market-captured report.
-
-    Exactness: per-supplier revenue reduces to DECIMAL(18,2) (2dp
-    round, both engines exact), so its square is the exact (37,4)
-    product and the per-nation Σr² / (Σr)² needs only ONE double
-    divide per nation row (4dp-rounded). Plan: lineitem aggregates
-    FIRST to supplier cardinality; supplier joins that aggregate
-    UN-hinted (scale-linear dim — AQE promotes when small, the
-    nation_market_share policy); nation broadcasts; the HHI fold is a
-    |nations|-row aggregate. No global window anywhere."""
-    li = load_table(spark, sf_dir, "lineitem").select(
-        "l_suppkey", "l_extendedprice", "l_discount"
-    )
-    vol = _money("l_extendedprice") * (F.lit(1).cast(_D) - _money("l_discount"))
-    per_supp = (
-        li.groupBy("l_suppkey")
-        .agg(F.round(F.sum(vol), 2).cast(_D).alias("_r"))
-    )
-    supplier = load_table(spark, sf_dir, "supplier").select(
-        "s_suppkey", "s_nationkey"
-    )
-    nation = load_table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
-    j = (
-        per_supp.join(supplier, per_supp["l_suppkey"] == supplier["s_suppkey"])
-        .join(F.broadcast(nation), supplier["s_nationkey"] == nation["n_nationkey"])
-    )
-    sq = (F.col("_r") * F.col("_r")).alias("_r2")  # exact (37,4)
-    return (
-        j.groupBy("n_name")
-        .agg(
-            F.count("*").alias("n_suppliers"),
-            _as_double(F.sum("_r")).alias("total_revenue"),
-            F.round(
-                F.max("_r").cast("double")
-                / F.sum("_r").cast("double"),
-                4,
-            ).alias("top_share"),
-            F.round(
-                F.sum(sq).cast("double")
-                / (F.sum("_r").cast("double") * F.sum("_r").cast("double")),
-                4,
-            ).alias("hhi"),
-        )
-        .orderBy(F.desc("hhi"), "n_name")
-    )
-
-
-def nation_trade_flows(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H-Q7-flavor bilateral trade: line revenue shipped between
-    NATION_13 and NATION_19 (both directions), per ship year — the
-    two-dimension-decorated fact shape (supplier nation AND customer
-    nation on one lineitem scan). The nation pair is chosen so the
-    gate is NON-EMPTY at every test SF (a pair with zero suppliers at
-    sf0.001 would give an empty result, which exercises nothing in the
-    direction the driver scales).
-
-    Plan: the 2-row filtered nation dim broadcasts into supplier and
-    customer, shrinking both scale-linear dims to the two target
-    nations BEFORE they touch the fact; orders joins lineitem equi;
-    no hard hints on the linear dims (AQE promotes the filtered
-    sides); the rollup is |years × 2| rows."""
-    nation = load_table(spark, sf_dir, "nation").filter(
-        F.col("n_name").isin("NATION_13", "NATION_19")
-    )
-    supp = (
-        load_table(spark, sf_dir, "supplier")
-        .join(
-            F.broadcast(nation.select("n_nationkey", "n_name")),
-            F.col("s_nationkey") == F.col("n_nationkey"),
-        )
-        .select("s_suppkey", F.col("n_name").alias("supp_nation"))
-    )
-    cust = (
-        load_table(spark, sf_dir, "customer")
-        .join(
-            F.broadcast(nation.select("n_nationkey", "n_name")),
-            F.col("c_nationkey") == F.col("n_nationkey"),
-        )
-        .select("c_custkey", F.col("n_name").alias("cust_nation"))
-    )
-    orders = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_custkey"
-    )
-    li = load_table(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_suppkey", "l_shipdate", "l_extendedprice", "l_discount"
-    )
-    vol = _money("l_extendedprice") * (F.lit(1).cast(_D) - _money("l_discount"))
-    j = (
-        li.join(supp, li["l_suppkey"] == supp["s_suppkey"])
-        .join(orders, li["l_orderkey"] == orders["o_orderkey"])
-        .join(cust, orders["o_custkey"] == cust["c_custkey"])
-        .filter(F.col("supp_nation") != F.col("cust_nation"))
-    )
-    return (
-        j.groupBy(
-            "supp_nation",
-            "cust_nation",
-            F.year("l_shipdate").alias("ship_year"),
-        )
-        .agg(
-            F.count("*").alias("n_lines"),
-            _as_double(F.sum(vol)).alias("revenue"),
-        )
-        .orderBy("supp_nation", "cust_nation", "ship_year")
-    )
-
-
-def top_supplier_quarter(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H-Q15-flavor top supplier: the supplier(s) with the maximum
-    line revenue in 1999 Q1 — the argmax-with-join-back shape (the
-    revenue view is computed once, its max is a 1-row broadcast, and
-    equality joins back; DECIMAL-exact revenue makes the tie equality
-    engine-safe).
-
-    Plan: the quarter filter is pushed to the lineitem scan; the
-    per-supplier aggregate is supplier-cardinality; the 1-row max
-    broadcasts; the name decoration joins the (usually 1-row) winner
-    set."""
-    li = (
-        load_table(spark, sf_dir, "lineitem")
-        .filter(
-            (F.col("l_shipdate") >= F.lit("1999-01-01"))
-            & (F.col("l_shipdate") < F.lit("1999-04-01"))
-        )
-        .select("l_suppkey", "l_extendedprice", "l_discount")
-    )
-    vol = _money("l_extendedprice") * (F.lit(1).cast(_D) - _money("l_discount"))
-    rev = (
-        li.groupBy("l_suppkey")
-        .agg(F.round(F.sum(vol), 2).cast(_D).alias("_rev"))
-    )
-    top = rev.agg(F.max("_rev").alias("_max"))
-    supplier = load_table(spark, sf_dir, "supplier").select(
-        "s_suppkey", "s_name"
-    )
-    return (
-        rev.crossJoin(F.broadcast(top))
-        .filter(F.col("_rev") == F.col("_max"))
-        .join(supplier, F.col("l_suppkey") == F.col("s_suppkey"))
-        .select(
-            "s_suppkey",
-            "s_name",
-            _as_double(F.col("_rev")).alias("total_revenue"),
-        )
-        .orderBy("s_suppkey")
-    )
-
-
-def discount_revenue_impact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H-Q6-flavor what-if: revenue that would have been gained in
-    1999 by eliminating small discounts (5-7%) on small orders
-    (quantity < 10) — ONE filtered scan, every predicate pushed to
-    parquet, one decimal-exact aggregate row. The canonical
-    scan-efficiency probe."""
-    li = load_table(spark, sf_dir, "lineitem").filter(
-        (F.col("l_shipdate") >= F.lit("1999-01-01"))
-        & (F.col("l_shipdate") < F.lit("2000-01-01"))
-        & (F.col("l_discount") >= 0.05)
-        & (F.col("l_discount") <= 0.07)
-        & (F.col("l_quantity") < 10)
-    )
-    gain = _money("l_extendedprice") * _money("l_discount")
-    return li.agg(
-        F.count("*").alias("n_lines"),
-        _as_double(F.sum(gain)).alias("potential_revenue"),
-    )
-
-
-def nation_yoy_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Year-over-year revenue growth per customer nation — the
-    partitioned LAG window report (each nation's trend computed inside
-    its own partition; the window never crosses nations, so the shape
-    stays parallel at any nation count, unlike a global-order window).
-
-    Plan: orders joins customer equi (both scale-linear, no hints —
-    AQE decides), nation broadcasts; the aggregate is
-    |nations × years| rows BEFORE the window touches it; growth is
-    one double divide, 4dp, NULL for each nation's first year."""
-    from pyspark.sql import Window as W
-
-    orders = load_table(spark, sf_dir, "orders").select(
-        "o_custkey", "o_orderdate", _money("o_totalprice").alias("_m")
-    )
-    cust = load_table(spark, sf_dir, "customer").select(
-        "c_custkey", "c_nationkey"
-    )
-    nation = load_table(spark, sf_dir, "nation").select(
-        "n_nationkey", "n_name"
-    )
-    per = (
-        orders.join(cust, orders["o_custkey"] == cust["c_custkey"])
-        .join(F.broadcast(nation), cust["c_nationkey"] == nation["n_nationkey"])
-        .groupBy("n_name", F.year("o_orderdate").alias("order_year"))
-        .agg(F.round(F.sum("_m"), 2).cast(_D).alias("_rev"))
-    )
-    prev = F.lag("_rev").over(W.partitionBy("n_name").orderBy("order_year"))
-    return per.select(
-        "n_name",
-        "order_year",
-        _as_double(F.col("_rev")).alias("revenue"),
-        F.round(
-            (F.col("_rev") - prev).cast("double") / prev.cast("double"), 4
-        ).alias("yoy_growth"),
-    ).orderBy("n_name", "order_year")
-
-
-def cheapest_supplier_per_part(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H-Q2-flavor sourcing report: for every STANDARD size-6
-    part, the supplier(s) whose line price hit that part's minimum —
-    the correlated-MIN-plus-join-back shape, realized as ONE shuffle:
-    a per-part window MIN replaces the self-join the subquery would
-    naively compile to (the reference schema has no partsupp; lineitem
-    evidence is the offer book). The (size, type) selector is chosen
-    to be non-empty at every test SF (size 25 has zero STANDARD parts
-    at sf0.001).
-
-    Plan: the filtered part dim (1/300th of parts) broadcasts into the
-    fact BEFORE any aggregation, so the window only ever sees relevant
-    lines; per-part groups are basket-bounded, so the window partition
-    never skews; supplier/nation decorate the (≈|parts|) winner set.
-    DECIMAL-exact min ⇒ the tie equality is engine-safe."""
-    from pyspark.sql import Window as W
-
-    part_f = (
-        load_table(spark, sf_dir, "part")
-        .filter((F.col("p_size") == 6) & (F.col("p_type") == "STANDARD"))
-        .select("p_partkey", "p_name")
-    )
-    li = load_table(spark, sf_dir, "lineitem").select(
-        "l_partkey", "l_suppkey", _money("l_extendedprice").alias("_price")
-    )
-    offers = li.join(
-        F.broadcast(part_f), li["l_partkey"] == part_f["p_partkey"]
-    )
-    best = F.min("_price").over(W.partitionBy("l_partkey"))
-    winners = (
-        offers.withColumn("_best", best)
-        .filter(F.col("_price") == F.col("_best"))
-        .select("p_partkey", "p_name", "l_suppkey", "_best")
-        .distinct()
-    )
-    supplier = load_table(spark, sf_dir, "supplier").select(
-        "s_suppkey", "s_name", "s_nationkey"
-    )
-    nation = load_table(spark, sf_dir, "nation").select(
-        "n_nationkey", "n_name"
-    )
-    return (
-        winners.join(supplier, winners["l_suppkey"] == supplier["s_suppkey"])
-        .join(F.broadcast(nation), F.col("s_nationkey") == F.col("n_nationkey"))
-        .select(
-            "p_partkey",
-            "p_name",
-            _as_double(F.col("_best")).alias("best_price"),
-            "s_suppkey",
-            "s_name",
-            F.col("n_name").alias("supp_nation"),
-        )
-        .orderBy("p_partkey", "s_suppkey")
-    )
-
-
-def product_profit_by_nation_year(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H-Q9-flavor product-line profit: for parts named '% bolt',
-    profit per (supplier nation, ship year) where profit = line revenue
-    minus a retail-derived unit cost (no partsupp in this schema, so
-    cost ≔ half retail price — fixed, deterministic).
-
-    Plan: the name-filtered part dim joins the fact first (broadcast —
-    it is a constant fraction of a dim that is itself ~1/1000th of the
-    fact); supplier joins equi with no hint (scale-linear, AQE
-    decides); nation broadcasts; the rollup is |nations × years|.
-    Profit stays DECIMAL through the subtraction; the cost halving is
-    an exact binary scale of a 2dp price, rounded back to cents before
-    entering DECIMAL."""
-    part_f = (
-        load_table(spark, sf_dir, "part")
-        .filter(F.col("p_name").like("% bolt"))
-        .select(
-            "p_partkey",
-            F.round(F.col("p_retailprice") * 0.5, 2).cast(_D).alias("_unit_cost"),
-        )
-    )
-    li = load_table(spark, sf_dir, "lineitem").select(
-        "l_partkey", "l_suppkey", "l_shipdate",
-        "l_extendedprice", "l_discount", "l_quantity",
-    )
-    supplier = load_table(spark, sf_dir, "supplier").select(
-        "s_suppkey", "s_nationkey"
-    )
-    nation = load_table(spark, sf_dir, "nation").select(
-        "n_nationkey", "n_name"
-    )
-    profit = _money("l_extendedprice") * (
-        F.lit(1).cast(_D) - _money("l_discount")
-    ) - F.col("_unit_cost") * _money("l_quantity")
-    return (
-        li.join(F.broadcast(part_f), li["l_partkey"] == part_f["p_partkey"])
-        .join(supplier, li["l_suppkey"] == supplier["s_suppkey"])
-        .join(F.broadcast(nation), F.col("s_nationkey") == F.col("n_nationkey"))
-        .groupBy(
-            F.col("n_name").alias("supp_nation"),
-            F.year("l_shipdate").alias("ship_year"),
-        )
-        .agg(
-            F.count("*").alias("n_lines"),
-            _as_double(F.sum(profit)).alias("profit"),
-        )
-        .orderBy("supp_nation", "ship_year")
-    )
-
-
-def small_quantity_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H-Q17-flavor small-lot probe: average yearly revenue that
-    Brand#13 lines below 20% of their part's mean quantity represent —
-    the correlated-AVG shape, again as a per-part window instead of a
-    second scan + self-join.
-
-    Plan: brand-filtered parts broadcast into the fact first; ONE
-    shuffle on partkey feeds both the window AVG and the filter;
-    quantities are integers-in-doubles so the mean is exact and the
-    0.2× threshold comparison is bit-identical across engines; the
-    revenue sum is DECIMAL, divided by 7 once at the end."""
-    from pyspark.sql import Window as W
-
-    part_f = (
-        load_table(spark, sf_dir, "part")
-        .filter(F.col("p_brand") == "Brand#13")
-        .select("p_partkey")
-    )
-    li = load_table(spark, sf_dir, "lineitem").select(
-        "l_partkey", "l_quantity", _money("l_extendedprice").alias("_e")
-    )
-    j = li.join(F.broadcast(part_f), li["l_partkey"] == part_f["p_partkey"])
-    avg_qty = F.avg("l_quantity").over(W.partitionBy("l_partkey"))
-    small = j.withColumn("_thr", 0.2 * avg_qty).filter(
-        F.col("l_quantity") < F.col("_thr")
-    )
-    return small.agg(
-        F.count("*").alias("n_lines"),
-        F.round(F.sum("_e").cast("double") / 7.0, 2).alias("avg_yearly_revenue"),
-    )
-
-
-def disjunctive_promo_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H-Q19-flavor disjunctive revenue: one OR-of-ANDs predicate
-    mixing part attributes (brand, size) with line attributes
-    (quantity) — the constraint-propagation probe. Catalyst derives
-    the single-side residuals (brand ∈ {...} on part, quantity ∈
-    [1,30] on lineitem) from the disjunction and pushes them below the
-    join, so each scan prunes before the equi-join; the final AND/OR
-    evaluates post-join on the survivors.
-
-    Plan: no broadcast hint on part (scale-linear; the derived IN
-    filter shrinks it and AQE promotes if small); one aggregate row."""
-    li = load_table(spark, sf_dir, "lineitem").select(
-        "l_partkey", "l_quantity", "l_extendedprice", "l_discount"
-    )
-    part = load_table(spark, sf_dir, "part").select(
-        "p_partkey", "p_brand", "p_size"
-    )
-    j = li.join(part, li["l_partkey"] == part["p_partkey"])
-    disj = (
-        (
-            (F.col("p_brand") == "Brand#3")
-            & F.col("p_size").between(1, 5)
-            & F.col("l_quantity").between(1, 11)
-        )
-        | (
-            (F.col("p_brand") == "Brand#15")
-            & F.col("p_size").between(1, 10)
-            & F.col("l_quantity").between(10, 20)
-        )
-        | (
-            (F.col("p_brand") == "Brand#22")
-            & F.col("p_size").between(1, 15)
-            & F.col("l_quantity").between(20, 30)
-        )
-    )
-    rev = _money("l_extendedprice") * (F.lit(1).cast(_D) - _money("l_discount"))
-    return j.filter(disj).agg(
-        F.count("*").alias("n_lines"),
-        _as_double(F.sum(rev)).alias("revenue"),
-    )
-
-
-def excess_volume_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H-Q20-flavor dominant suppliers: NATION_3 suppliers that
-    shipped MORE THAN HALF of some contested part's total 1999 volume
-    (contested = ≥2 suppliers shipped it) — the nested-semi-join
-    chain, realized as agg → per-part window totals → filter →
-    nation-filtered decoration.
-
-    Plan: the date filter is pushed to the scan; ONE shuffle on
-    partkey serves the (part,supplier) rollup AND the per-part window
-    (partial agg first, so the window sees |part×supp| rows, not
-    lines); the 1-nation supplier set joins the ≈|dominating pairs|
-    survivors; quantities are integers-in-doubles ⇒ the half-share
-    strict comparison is exact."""
-    from pyspark.sql import Window as W
-
-    li = (
-        load_table(spark, sf_dir, "lineitem")
-        .filter(
-            (F.col("l_shipdate") >= F.lit("1999-01-01"))
-            & (F.col("l_shipdate") < F.lit("2000-01-01"))
-        )
-        .select("l_partkey", "l_suppkey", "l_quantity")
-    )
-    ps = li.groupBy("l_partkey", "l_suppkey").agg(
-        F.sum("l_quantity").alias("_qty")
-    )
-    w = W.partitionBy("l_partkey")
-    dom = (
-        ps.withColumn("_total", F.sum("_qty").over(w))
-        .withColumn("_nsupp", F.count("*").over(w))
-        .filter((F.col("_nsupp") >= 2) & (F.col("_qty") > 0.5 * F.col("_total")))
-    )
-    nation = load_table(spark, sf_dir, "nation").filter(
-        F.col("n_name") == "NATION_3"
-    )
-    supplier = load_table(spark, sf_dir, "supplier").join(
-        F.broadcast(nation.select("n_nationkey")),
-        F.col("s_nationkey") == F.col("n_nationkey"),
-    )
-    return (
-        dom.join(supplier, dom["l_suppkey"] == supplier["s_suppkey"])
-        .groupBy("s_suppkey", "s_name")
-        .agg(F.count("*").alias("n_dominated_parts"))
-        .orderBy(F.desc("n_dominated_parts"), "s_suppkey")
-    )
-
-
-def waiting_orders_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H-Q21-flavor blame report: suppliers that were the SOLE
-    late shipper (>60 days after order date) on multi-supplier orders
-    — the EXISTS/NOT-EXISTS pair, compiled to one per-(order,supplier)
-    partial agg plus per-order window counts instead of two
-    correlated self-joins of the fact.
-
-    Plan: lineitem joins orders equi on orderkey (both scale-linear,
-    no hints); ONE shuffle on orderkey serves the pair rollup and the
-    order-partition window (basket-bounded partitions); survivors
-    aggregate per supplier (dim-sized), decorate, TakeOrdered 20 with
-    a total tie-break."""
-    from pyspark.sql import Window as W
-
-    li = load_table(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_suppkey", "l_shipdate"
-    )
-    orders = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_orderdate"
-    )
-    late = (
-        F.col("l_shipdate")
-        > F.col("o_orderdate") + F.expr("INTERVAL 60 DAYS")
-    ).cast("int")
-    ps = (
-        li.join(orders, li["l_orderkey"] == orders["o_orderkey"])
-        .groupBy("l_orderkey", "l_suppkey")
-        .agg(F.max(late).alias("_late"))
-    )
-    w = W.partitionBy("l_orderkey")
-    qual = (
-        ps.withColumn("_nsupp", F.count("*").over(w))
-        .withColumn("_nlate", F.sum("_late").over(w))
-        .filter(
-            (F.col("_late") == 1)
-            & (F.col("_nlate") == 1)
-            & (F.col("_nsupp") >= 2)
-        )
-    )
-    supplier = load_table(spark, sf_dir, "supplier").select(
-        "s_suppkey", "s_name"
-    )
-    return (
-        qual.groupBy("l_suppkey")
-        .agg(F.count("*").alias("numwait"))
-        .join(supplier, F.col("l_suppkey") == F.col("s_suppkey"))
-        .select("s_suppkey", "s_name", "numwait")
-        .orderBy(F.desc("numwait"), "s_suppkey")
-        .limit(20)
-    )
-
-
-def supplier_part_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H-Q16-flavor supplier diversity: distinct shipper count per
-    (brand, type, size) for selected sizes, EXCLUDING suppliers in
-    arrears (negative account balance) — the NOT-IN-subquery shape as
-    a broadcast LEFT ANTI join (the excluded set is a filtered
-    fraction of an already scale-linear dim, and anti joins
-    short-circuit per probe row).
-
-    Plan: the (part,supplier) bridge is ONE distinct shuffle of the
-    fact's two key columns; the anti join is broadcast; the filtered
-    part dim joins equi (no hint — size IN keeps it linear, AQE
-    promotes at small SF); countDistinct rides the same partkey
-    shuffle."""
-    bad = (
-        load_table(spark, sf_dir, "supplier")
-        .filter(F.col("s_acctbal") < 0)
-        .select("s_suppkey")
-    )
-    pairs = (
-        load_table(spark, sf_dir, "lineitem")
-        .select("l_partkey", "l_suppkey")
-        .distinct()
-    )
-    ok = pairs.join(
-        F.broadcast(bad),
-        pairs["l_suppkey"] == bad["s_suppkey"],
-        "left_anti",
-    )
-    part_f = (
-        load_table(spark, sf_dir, "part")
-        .filter(
-            (F.col("p_brand") != "Brand#5")
-            & F.col("p_size").isin(1, 10, 20, 30, 40, 50)
-        )
-        .select("p_partkey", "p_brand", "p_type", "p_size")
-    )
-    return (
-        ok.join(part_f, ok["l_partkey"] == part_f["p_partkey"])
-        .groupBy("p_brand", "p_type", "p_size")
-        .agg(F.countDistinct("l_suppkey").alias("supplier_cnt"))
-        .orderBy(F.desc("supplier_cnt"), "p_brand", "p_type", "p_size")
-    )
-
-
-def shipping_delay_priority_split(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H-Q12-flavor shipping-SLA split: 1999 lines bucketed FAST
-    (<30 days after order) vs SLOW, each bucket counting
-    critical-priority (1-URGENT/2-HIGH) vs other orders — the
-    conditional-aggregation shape (no shipmode column in this schema;
-    the delay bucket is the analogue).
-
-    Plan: ship-year filter pushed to the fact scan; orders joins equi
-    (no hint); ONE shuffle on the 2-value bucket with map-side partial
-    aggregation carrying both conditional counts."""
-    li = (
-        load_table(spark, sf_dir, "lineitem")
-        .filter(
-            (F.col("l_shipdate") >= F.lit("1999-01-01"))
-            & (F.col("l_shipdate") < F.lit("2000-01-01"))
-        )
-        .select("l_orderkey", "l_shipdate")
-    )
-    orders = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_orderdate", "o_orderpriority"
-    )
-    j = li.join(orders, li["l_orderkey"] == orders["o_orderkey"])
-    bucket = F.when(
-        F.datediff(F.col("l_shipdate"), F.col("o_orderdate")) < 30, "FAST"
-    ).otherwise("SLOW")
-    crit = F.col("o_orderpriority").isin("1-URGENT", "2-HIGH").cast("long")
-    return (
-        j.groupBy(bucket.alias("delay_bucket"))
-        .agg(
-            F.sum(crit).alias("critical_lines"),
-            F.sum(F.lit(1) - crit).alias("other_lines"),
-        )
-        .orderBy("delay_bucket")
-    )
-
-
-def parts_copurchase_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Co-purchase graph cohesion: triangle count + global clustering
-    coefficient of the SUPPORT-FILTERED part co-purchase graph (parts
-    adjacent when they share ≥2 order baskets) — the one-row
-    graph-topology health report (how clique-ish is the catalog's
-    cross-sell structure). The support threshold is the standard
-    market-basket practice AND the first scale lever: single
-    co-occurrences on random baskets are noise edges, and dropping
-    them shrinks the sf0.1 edge set 333× (1.2M → 3.6k) BEFORE any
-    superlinear topology work touches it.
-
-    Plan (the scale design IS the orientation): undirected edges are
-    the basket self-join (Σ|basket|², |basket| ≤ 7, linear in orders)
-    grouped to (pair, support) and thresholded in the same shuffle,
-    then checkpointed once (edge-sized, like PageRank's edge build —
-    the three triangle join legs read the materialization instead of
-    replaying the basket join). Each edge is then ORIENTED
-    from its lower-(degree,
-    id) endpoint to the higher one — the classic wedge-bounding trick:
-    every node's out-degree is O(√|E|), so the wedge join
-    e1(u,v)⋈e2(v,w) is Σ out² = O(|E|^1.5) worst-case instead of
-    Σ deg² (which a hub node makes quadratic). Triangles close with a
-    THIRD equi-join probing (u,w) — three hash equi-joins total, no
-    inequality join anywhere. Wedges for the coefficient are the exact
-    Σ deg·(deg−1)/2, integer math; one double divide at the end.
-    Oracle replays the a<b<c 3-way join (same count — each triangle
-    has exactly one orientation-consistent corner / one sorted
-    corner)."""
-    li = load_table(spark, sf_dir, "lineitem")
-    items = li.select(
-        F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("pk")
-    ).distinct()
-    a = items.select("ok", F.col("pk").alias("u"))
-    b = items.select("ok", F.col("pk").alias("v"))
-    # materialize the basket self-join ONCE (edge-sized): und feeds
-    # the degree table AND the orientation; without the checkpoint the
-    # three triangle join legs would each replay it
-    und = (
-        a.join(b, "ok")
-        .filter(F.col("u") < F.col("v"))
-        .groupBy("u", "v")
-        .agg(F.count("*").alias("_sup"))
-        .filter(F.col("_sup") >= 2)
-        .select("u", "v")
-        .localCheckpoint(eager=True)
-    )
-    # degree per node over the undirected edge list (node-sized; used
-    # by both endpoints' decoration and the wedge denominator)
-    deg = (
-        und.select(F.col("u").alias("n"))
-        .unionAll(und.select(F.col("v").alias("n")))
-        .groupBy("n")
-        .agg(F.count("*").alias("deg"))
-        .localCheckpoint(eager=True)
-    )
-    du = deg.select(F.col("n").alias("u"), F.col("deg").alias("du"))
-    dv = deg.select(F.col("n").alias("v"), F.col("deg").alias("dv"))
-    withdeg = und.join(du, "u").join(dv, "v")
-    # orient low (deg, id) → high (deg, id): out-degree ≤ O(√|E|)
-    oriented = withdeg.select(
-        F.when(
-            (F.col("du") < F.col("dv"))
-            | ((F.col("du") == F.col("dv")) & (F.col("u") < F.col("v"))),
-            F.struct(F.col("u").alias("s"), F.col("v").alias("t")),
-        )
-        .otherwise(F.struct(F.col("v").alias("s"), F.col("u").alias("t")))
-        .alias("e")
-    ).select(F.col("e.s").alias("s"), F.col("e.t").alias("t")).localCheckpoint(
-        eager=True
-    )
-    e1 = oriented.select(F.col("s").alias("x"), F.col("t").alias("y"))
-    e2 = oriented.select(F.col("s").alias("y"), F.col("t").alias("z"))
-    e3 = oriented.select(F.col("s").alias("x"), F.col("t").alias("z"))
-    wedges = e1.join(e2, "y")
-    tri = wedges.join(e3, ["x", "z"]).agg(F.count("*").alias("_tri"))
-    stats = (
-        deg.agg(
-            F.count("*").alias("n_nodes"),
-            (F.sum(F.col("deg") * (F.col("deg") - 1)) / 2).cast("long").alias("_wedges"),
-            (F.sum("deg") / 2).cast("long").alias("n_edges"),
-        )
-    )
-    return (
-        stats.crossJoin(F.broadcast(tri))
-        .select(
-            "n_nodes",
-            "n_edges",
-            F.col("_tri").alias("n_triangles"),
-            # a wedge-free graph (isolated edges only, or empty) has
-            # clustering 0 by convention — the bare divide returns
-            # NULL in Spark but inf/NaN in DuckDB, so guard BOTH sides
-            F.when(
-                F.col("_wedges") > 0,
-                F.round(3.0 * F.col("_tri") / F.col("_wedges"), 6),
-            )
-            .otherwise(F.lit(0.0))
-            .alias("global_clustering"),
-        )
-    )
-
-
-def parts_dense_community(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Densest co-purchase community: 4 rounds of average-degree
-    peeling (`graph.peel_dense_subgraph`) over the part co-purchase
-    graph — per-round (n_nodes, n_edges, density) trajectory; the
-    densest round is the Charikar 2-approximation of the densest
-    subgraph (the "core catalog" merchandising view).
-
-    Scale: basket-bounded edge build (Σ|basket|², checkpointed once);
-    each peel is a degree shuffle + two edge-sized semi-joins against
-    the broadcast survivor set; the driver sees only one (N, E) row
-    per round (the bounded-probe pattern `neardup_clusters`
-    established). Oracle replays all 4 peels CTE-for-CTE with the
-    same all-integer keep test."""
-    from ecommerce_realtime_pipeline_spark.operators.graph import (
-        peel_dense_subgraph,
-    )
-
-    li = load_table(spark, sf_dir, "lineitem")
-    items = li.select(
-        F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("pk")
-    ).distinct()
-    a = items.select("ok", F.col("pk").alias("u"))
-    b = items.select("ok", F.col("pk").alias("v"))
-    und = (
-        a.join(b, "ok")
-        .filter(F.col("u") < F.col("v"))
-        .select("u", "v")
-        .distinct()
-    )
-    return peel_dense_subgraph(und, rounds=4).orderBy("round")
+ORACLES["order_value_percentiles"] = """
+            SELECT o_orderstatus AS status,
+                   count(*) AS n_orders,
+                   ROUND(quantile_cont(o_totalprice, 0.5), 4) AS p50,
+                   ROUND(quantile_cont(o_totalprice, 0.9), 4) AS p90,
+                   ROUND(quantile_cont(o_totalprice, 0.99), 4) AS p99
+            FROM orders
+            GROUP BY 1
+        """
 
 
 def revenue_seasonality(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2286,277 +1577,42 @@ def revenue_seasonality(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     orders = load_table(spark, sf_dir, "orders").select(
         F.date_format("o_orderdate", "yyyy-MM").alias("month"),
-        _money("o_totalprice").alias("_m"),
+        money("o_totalprice").alias("_m"),
     )
     monthly = orders.groupBy("month").agg(
-        F.round(F.sum("_m"), 2).cast(_D).alias("_rev")
+        F.round(F.sum("_m"), 2).cast(MONEY).alias("_rev")
     )
     w = W.orderBy("month").rowsBetween(-1, 1)
     trend = F.sum("_rev").over(w).cast("double") / F.count("_rev").over(w)
     return monthly.select(
         "month",
-        _as_double(F.col("_rev")).alias("revenue"),
+        as_double(F.col("_rev")).alias("revenue"),
         F.round(trend, 4).alias("trend"),
         F.round(F.col("_rev").cast("double") / trend, 4).alias("seasonal_index"),
     ).orderBy("month")
 
 
-def events_markov_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Markov-chain channel attribution (the removal-effect model):
-    fit the first-order transition matrix of user journeys (purchase
-    absorbing, journey-end = implicit loss), walk 6 steps from the
-    observed first-touch distribution, and for each removable channel
-    recompute conversion with that channel's inbound transitions
-    removed — removal_effect = 1 − conv_without/conv_full, the
-    standard data-driven alternative to last-touch attribution.
-
-    Determinism contract (the logistic-GD/power-iteration pattern):
-    probabilities are 8dp-rounded DECIMALs (one IEEE divide each);
-    every walk step is an exact DECIMAL(14,8)×(10,8) product sum over
-    the ≤|types|² matrix, rounded back to (14,8) — both engines walk
-    identical mass vectors, all 5 scenarios vectorized through ONE
-    code path via a scenario tag.
-
-    Scale: two passes of the user-partition window over the fact (one
-    for transition counts, one for the first-touch distribution —
-    the sessionization exchange each time) collapse to a |types|²-row
-    matrix + |types|-row vector, both checkpointed; the 6-step ×
-    5-scenario walk then moves ≤ |scenarios×types| rows per step —
-    free at any corpus size. Zero driver collects."""
-    from pyspark.sql import Window as W
-
-    ABSORB = "purchase"
-    events = load_table(spark, sf_dir, "events")
-    w = W.partitionBy("user_id").orderBy("ts", "event_id")
-    pairs = events.select(
-        "user_id",
-        F.lag("event_type").over(w).alias("src"),
-        F.col("event_type").alias("dst"),
-        F.row_number().over(w).alias("_rn"),
+ORACLES["revenue_seasonality"] = """
+    WITH monthly AS (
+        SELECT strftime(o_orderdate, '%Y-%m') AS month,
+               CAST(ROUND(SUM(CAST(o_totalprice AS DECIMAL(18,2))), 2)
+                    AS DECIMAL(18,2)) AS _rev
+        FROM orders GROUP BY 1
+    ),
+    framed AS (
+        SELECT month, _rev,
+               CAST(SUM(_rev) OVER w AS DOUBLE)
+                   / COUNT(_rev) OVER w AS trend
+        FROM monthly
+        WINDOW w AS (ORDER BY month ROWS BETWEEN 1 PRECEDING AND 1 FOLLOWING)
     )
-    trans = (
-        pairs.filter(F.col("src").isNotNull() & (F.col("src") != ABSORB))
-        .groupBy("src", "dst")
-        .agg(F.count("*").alias("_cnt"))
-    )
-    totals = (
-        events.filter(F.col("event_type") != ABSORB)
-        .groupBy(F.col("event_type").alias("src"))
-        .agg(F.count("*").alias("_tot"))
-    )
-    P = trans.join(totals, "src").select(
-        "src",
-        "dst",
-        F.round(F.col("_cnt") / F.col("_tot"), 8).cast("decimal(10,8)").alias("_p"),
-    )
-    firsts = pairs.filter(F.col("_rn") == 1)
-    n_users = firsts.groupBy().agg(F.count("*").alias("_n"))
-    v0 = (
-        firsts.groupBy(F.col("dst").alias("state"))
-        .agg(F.count("*").alias("_c"))
-        .crossJoin(F.broadcast(n_users))
-        .select(
-            "state",
-            F.round(F.col("_c") / F.col("_n"), 8).cast("decimal(14,8)").alias("_m"),
-        )
-    )
-    scen = spark.createDataFrame(
-        [("full",), ("click",), ("error",), ("signup",), ("view",)],
-        "scenario string",
-    )
-    # materialize the |scenarios×types²| matrix and |scenarios×types|
-    # start vector ONCE: every walk step references them, and without
-    # the checkpoint each of the 6 steps' lineage would replay the
-    # user-window pass over the fact (measured 6× the runtime)
-    Ps = (
-        P.crossJoin(F.broadcast(scen))
-        .filter((F.col("scenario") == "full") | (F.col("dst") != F.col("scenario")))
-        .select(F.col("scenario").alias("_ps"), "src", "dst", "_p")
-        .localCheckpoint(eager=True)
-    )
-    v = (
-        v0.crossJoin(F.broadcast(scen))
-        .filter((F.col("scenario") == "full") | (F.col("state") != F.col("scenario")))
-        .select("scenario", "state", "_m")
-        .localCheckpoint(eager=True)
-    )
-    absorbed = [
-        v.filter(F.col("state") == ABSORB).select("scenario", F.col("_m").alias("_a"))
-    ]
-    cur = v.filter(F.col("state") != ABSORB)
-    for _ in range(6):
-        nxt = (
-            cur.join(
-                Ps,
-                (cur["state"] == Ps["src"]) & (cur["scenario"] == Ps["_ps"]),
-            )
-            .groupBy("scenario", "dst")
-            .agg(F.round(F.sum(F.col("_m") * F.col("_p")), 8).cast("decimal(14,8)").alias("_m"))
-        )
-        absorbed.append(
-            nxt.filter(F.col("dst") == ABSORB).select("scenario", F.col("_m").alias("_a"))
-        )
-        cur = nxt.filter(F.col("dst") != ABSORB).withColumnRenamed("dst", "state")
-    allabs = absorbed[0]
-    for a in absorbed[1:]:
-        allabs = allabs.unionByName(a)
-    # LEFT join back to the scenario list: a channel whose removal
-    # kills EVERY conversion has no absorbed rows at all — it must
-    # report conv_without = 0 (removal_effect 1.0), not vanish
-    conv = scen.join(
-        allabs.groupBy("scenario").agg(F.sum("_a").alias("_sum")),
-        "scenario",
-        "left",
-    ).select(
-        "scenario",
-        F.coalesce(F.col("_sum"), F.lit(0)).cast("decimal(14,8)").alias("_conv"),
-    )
-    full = conv.filter(F.col("scenario") == "full").select(
-        F.col("_conv").alias("_cfull")
-    )
-    return (
-        conv.filter(F.col("scenario") != "full")
-        .crossJoin(F.broadcast(full))
-        .select(
-            F.col("scenario").alias("channel"),
-            F.round(F.col("_cfull").cast("double"), 6).alias("conv_full"),
-            F.round(F.col("_conv").cast("double"), 6).alias("conv_without"),
-            # a corpus with zero conversions has nothing to attribute:
-            # removal_effect 0 by convention (Spark NULL vs DuckDB NaN
-            # on the bare 0/0 — guarded identically in the oracle)
-            F.when(
-                F.col("_cfull") > 0,
-                F.round(
-                    1.0
-                    - F.col("_conv").cast("double")
-                    / F.col("_cfull").cast("double"),
-                    4,
-                ),
-            )
-            .otherwise(F.lit(0.0))
-            .alias("removal_effect"),
-        )
-        .orderBy("channel")
-    )
-
-
-#: relative support floor for market_basket_rules: floor =
-#: greatest(2, ceil(α · |orders|)). Chosen against the measured
-#: brand-triple support quantiles of the synthetic corpus — the
-#: floor lands between p50 and p90 at sf0.001/0.01/0.1 (supports
-#: p50/p90: 4/9, 47/63, 484/529 vs floors 6, 52, 516), so the gate
-#: is non-empty AND discriminating at every SF (a fixed absolute
-#: floor gates an empty result at sf0.1, where no part-level triple
-#: even repeats — rules are mined at BRAND level for exactly that
-#: reason).
-BASKET_RULES_MIN_SUPPORT = 0.0035
-
-
-def market_basket_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A-priori level 3: association rules (A,B) → C over BRAND
-    triples, with confidence = sup(ABC)/sup(AB) and lift =
-    confidence / P(C) — the cross-sell RULE layer on top of
-    `market_basket_pairs`' pair counts (which brands, TOGETHER,
-    predict a third). Items are part BRANDS (broadcast dim join):
-    part-level triples are support-1 at scale on this corpus (no
-    triple ever repeats at sf0.1), so rule mining happens one rung
-    up the hierarchy — the standard a-priori answer to sparse item
-    spaces — and the support floor is RELATIVE
-    (`BASKET_RULES_MIN_SUPPORT`), so the gate stays discriminating
-    as the corpus grows.
-
-    Plan: the distinct basket brand list materializes ONCE
-    (checkpointed — it feeds triples, pair denominators, item counts,
-    and the order total); the triple self-join is bounded by
-    Σ|basket brands|³ with |basket| ≤ 7 (C(7,3)=35 per order — linear
-    in orders, the level-2 argument one level up), thresholded in its
-    own shuffle against the broadcast 1-row order count; each
-    surviving triple emits its 3 rotations, joined to pair supports
-    (equi) and a broadcast item-count dim. Lift is computed from the
-    RAW integer counts in one double chain (never from the rounded
-    confidence)."""
-    li = load_table(spark, sf_dir, "lineitem")
-    part = load_table(spark, sf_dir, "part")
-    items = (
-        li.select(
-            F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("pk")
-        )
-        .join(
-            F.broadcast(
-                part.select(
-                    F.col("p_partkey").alias("pk"),
-                    F.col("p_brand").alias("it"),
-                )
-            ),
-            "pk",
-        )
-        .select("ok", "it")
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    a = items.select("ok", F.col("it").alias("pa"))
-    b = items.select("ok", F.col("it").alias("pb"))
-    c = items.select("ok", F.col("it").alias("pc"))
-    n_orders = items.select(F.countDistinct("ok").alias("n_orders"))
-    floor = F.greatest(
-        F.lit(2).cast("long"),
-        F.ceil(F.lit(BASKET_RULES_MIN_SUPPORT) * F.col("n_orders")),
-    )
-    triples = (
-        a.join(b, "ok")
-        .filter(F.col("pa") < F.col("pb"))
-        .join(c, "ok")
-        .filter(F.col("pb") < F.col("pc"))
-        .groupBy("pa", "pb", "pc")
-        .agg(F.count("*").alias("sup3"))
-        .crossJoin(F.broadcast(n_orders))
-        .filter(F.col("sup3") >= floor)
-        .drop("n_orders")
-        # ≤ C(|brands|,3) rows after the floor — checkpoint so the 3
-        # rotations below read this materialization instead of EACH
-        # replaying the triple self-join (the plan's only heavy
-        # subtree ran 3× before this)
-        .localCheckpoint(eager=True)
-    )
-    pairs = (
-        a.join(b, "ok")
-        .filter(F.col("pa") < F.col("pb"))
-        .groupBy(F.col("pa").alias("qa"), F.col("pb").alias("qb"))
-        .agg(F.count("*").alias("sup2"))
-    )
-    singles = items.groupBy(F.col("it").alias("cons")).agg(
-        F.count("*").alias("n_cons")
-    )
-    rots = None
-    for ax, bx, cx in [("pa", "pb", "pc"), ("pa", "pc", "pb"), ("pb", "pc", "pa")]:
-        r = triples.select(
-            F.least(F.col(ax), F.col(bx)).alias("ant_a"),
-            F.greatest(F.col(ax), F.col(bx)).alias("ant_b"),
-            F.col(cx).alias("cons"),
-            "sup3",
-        )
-        rots = r if rots is None else rots.unionByName(r)
-    return (
-        rots.join(
-            pairs,
-            (F.col("ant_a") == F.col("qa")) & (F.col("ant_b") == F.col("qb")),
-        )
-        .join(singles, "cons")
-        .crossJoin(F.broadcast(n_orders))
-        .select(
-            "ant_a",
-            "ant_b",
-            "cons",
-            "sup3",
-            F.round(F.col("sup3") / F.col("sup2"), 4).alias("confidence"),
-            F.round(
-                (F.col("sup3") * F.col("n_orders"))
-                / (F.col("sup2") * F.col("n_cons")),
-                4,
-            ).alias("lift"),
-        )
-        .orderBy(F.desc("confidence"), F.desc("lift"), "ant_a", "ant_b", "cons")
-    )
+    SELECT month,
+           CAST(ROUND(_rev, 2) AS DOUBLE) AS revenue,
+           ROUND(trend, 4) AS trend,
+           ROUND(CAST(_rev AS DOUBLE) / trend, 4) AS seasonal_index
+    FROM framed
+    ORDER BY month
+"""
 
 
 def events_key_skew_report(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2631,58 +1687,39 @@ def events_key_skew_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def session_path_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Full-path funnel mining: the top-10 most common SESSION paths
-    (the exact event-type sequence inside each 30-min-gap session)
-    with their conversion rates — the whole-journey complement to the
-    pairwise `events_type_transitions` Markov structure (which paths
-    actually happen, and which of them convert).
-
-    Plan: the same (user, ts) exchange as `sessionization` carries
-    BOTH windows (gap flag + running session id); per-session
-    assembly is one groupBy collecting (ts, event_id, type) structs —
-    state bounded by session length, never user history — sorted with
-    the engine-side array_sort (struct field order = the (ts,
-    event_id) tie-break the oracle's ORDER BY mirrors); the path
-    rollup is |distinct paths|-sized; top-k is TakeOrdered."""
-    from pyspark.sql import Window as W
-
-    events = load_table(spark, sf_dir, "events")
-    w = W.partitionBy("user_id").orderBy("ts", "event_id")
-    us = F.unix_micros(F.col("ts"))
-    gap = us - F.lag(us).over(w)
-    flagged = events.withColumn(
-        "_new", F.when(gap.isNull() | (gap > 1800 * 1_000_000), 1).otherwise(0)
-    ).withColumn(
-        "_sid",
-        F.sum("_new").over(w.rowsBetween(W.unboundedPreceding, 0)),
+ORACLES["events_key_skew_report"] = """
+    WITH per_key AS (
+        SELECT user_id, count(*) AS c FROM events GROUP BY 1
+    ),
+    hist AS (SELECT c, count(*) AS m FROM per_key GROUP BY 1),
+    dec AS (
+        SELECT c, m,
+               CAST(c * (COALESCE(SUM(m) OVER w, 0) * m
+                         + (m * (m + 1)) / 2) AS BIGINT) AS _t,
+               COALESCE(SUM(m) OVER w, 0) + m AS _cum
+        FROM hist
+        WINDOW w AS (ORDER BY c ROWS BETWEEN UNBOUNDED PRECEDING
+                     AND 1 PRECEDING)
+    ),
+    stats AS (
+        SELECT CAST(SUM(m) AS BIGINT) AS n_keys,
+               CAST(SUM(c * m) AS BIGINT) AS n_rows,
+               CAST(SUM(_t) AS BIGINT) AS _T,
+               CAST(MAX(c) AS BIGINT) AS max_rows_per_key
+        FROM dec
+    ),
+    p50 AS (
+        SELECT CAST(MIN(c) AS BIGINT) AS p50_rows_per_key
+        FROM dec, stats WHERE _cum >= CEIL(0.5 * n_keys)
+    ),
+    p99 AS (
+        SELECT CAST(MIN(c) AS BIGINT) AS p99_rows_per_key
+        FROM dec, stats WHERE _cum >= CEIL(0.99 * n_keys)
     )
-    per_session = (
-        flagged.groupBy("user_id", "_sid")
-        .agg(
-            F.array_sort(
-                F.collect_list(F.struct("ts", "event_id", "event_type"))
-            ).alias("_evs"),
-        )
-        .select(
-            F.array_join(
-                F.transform(F.col("_evs"), lambda x: x["event_type"]), ">"
-            ).alias("path"),
-            F.array_contains(
-                F.transform(F.col("_evs"), lambda x: x["event_type"]),
-                "purchase",
-            ).cast("int").alias("_conv"),
-        )
-    )
-    return (
-        per_session.groupBy("path")
-        .agg(
-            F.count("*").alias("n_sessions"),
-            F.sum("_conv").cast("long").alias("n_converted"),
-        )
-        .withColumn(
-            "conv_rate", F.round(F.col("n_converted") / F.col("n_sessions"), 4)
-        )
-        .orderBy(F.desc("n_sessions"), "path")
-        .limit(10)
-    )
+    SELECT n_keys, n_rows, p50_rows_per_key, p99_rows_per_key,
+           max_rows_per_key,
+           ROUND(max_rows_per_key * 1.0 / n_rows, 6) AS top_key_share,
+           ROUND(2.0 * _T / (n_keys * n_rows)
+                 - (n_keys + 1) * 1.0 / n_keys, 4) AS gini
+    FROM stats, p50, p99
+"""

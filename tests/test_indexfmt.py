@@ -309,23 +309,6 @@ def test_write_manifest_breaks_stale_crashed_writer_lock(tmp_path):
     assert not os.path.exists(lock)
 
 
-def test_write_manifest_lock_false_is_the_escape_hatch(tmp_path):
-    """lock=False (external coordinator owns serialization) skips the
-    guard entirely — flips under a held lock without touching it."""
-    path = str(tmp_path / "idx")
-    _mk(path, {"format": "text-index", "version": 1, "segments": ["seg-a"]})
-    lock = os.path.join(path, indexfmt.LOCK)
-    with open(lock, "w") as fh:
-        fh.write("pid=1 t=now\n")
-    indexfmt.write_manifest(
-        path,
-        {"format": "text-index", "version": 2, "segments": ["seg-b"]},
-        lock=False,
-    )
-    assert indexfmt.read_manifest(path, "text-index")["version"] == 2
-    assert os.path.exists(lock)  # not ours; left alone
-
-
 def test_stale_lock_break_is_rename_won(tmp_path, monkeypatch):
     """The stale-lock break must be winner-takes-all (os.rename), not
     os.remove — two breakers that both observed the stale lock could

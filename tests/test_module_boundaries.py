@@ -378,3 +378,82 @@ def test_swap_scan_detects_staging_names_and_renames(tmp_path):
         ("probe.swap", "staging name"),
         ("probe.swap", "os.rename"),
     }
+
+
+def _oracle_bindings(path: pathlib.Path) -> tuple[bool, list[str]]:
+    """Whether one module binds ``ORACLES`` by a module-level assignment
+    in its own source, and every import in it that brings an ``ORACLES``
+    in (``module:line``)."""
+    tree = ast.parse(path.read_text())
+    assigned = any(
+        isinstance(t, ast.Name) and t.id == "ORACLES"
+        for node in tree.body
+        if isinstance(node, (ast.Assign, ast.AnnAssign))
+        for t in (node.targets if isinstance(node, ast.Assign) else [node.target])
+    )
+    imports = [
+        f"{getattr(node, 'module', None) or a.name}:{node.lineno}"
+        for node in ast.walk(tree)
+        if isinstance(node, (ast.Import, ast.ImportFrom))
+        for a in node.names
+        if (a.asname or a.name) == "ORACLES"
+    ]
+    return assigned, imports
+
+
+def test_each_oracle_beside_its_query():
+    """Every plan module binds its own ``ORACLES`` (an assignment in its
+    source, never an import of another module's), keyed by exactly the
+    queries that ``__spark_entry__.resolve`` maps to it: a query's
+    oracle lives in the module that defines the query."""
+    import __spark_entry__ as entry
+
+    assert len(entry.PLAN_MODULES) >= 10  # the scan sees the plan modules
+    queries: dict[str, set] = {}
+    for name in entry.queries():
+        queries.setdefault(entry.resolve(name).__module__, set()).add(name)
+    borrowed = {
+        mod.__name__: bindings
+        for mod in entry.PLAN_MODULES
+        if (bindings := _oracle_bindings(pathlib.Path(mod.__file__))) != (True, [])
+    }
+    assert borrowed == {}
+    misplaced = {
+        mod.__name__: set(mod.ORACLES) ^ queries.get(mod.__name__, set())
+        for mod in entry.PLAN_MODULES
+        if set(mod.ORACLES) != queries.get(mod.__name__, set())
+    }
+    assert misplaced == {}
+
+
+def test_oracle_scan_tells_an_own_binding_from_an_import(tmp_path):
+    """The scan itself: a module-level assignment counts as the module's
+    own ``ORACLES``; an import of another module's does not, and is
+    reported."""
+    own = tmp_path / "own.py"
+    own.write_text('ORACLES: dict[str, str] = {}\nORACLES["q"] = "SELECT 1"\n')
+    borrowed = tmp_path / "borrowed.py"
+    borrowed.write_text(
+        "from pkg.plans.oracles import ORACLES  # noqa: F401\n"
+        "def f():\n"
+        "    ORACLES = {}\n"
+    )
+    assert _oracle_bindings(own) == (True, [])
+    assert _oracle_bindings(borrowed) == (False, ["pkg.plans.oracles:1"])
+
+
+def test_read_mix_queries_stay_in_their_span_families():
+    """perfbench's ``read_mix`` names a query's span family after the
+    last name of its plan module (``ReadMix.family``) and reports only
+    ``readmix.FAMILIES``: every ``READ_QUERIES`` query must resolve into
+    one of those modules, and each family must keep one, or a module
+    split zeroes the ``kpi.*``/``dq.*``/``temporal.*`` counters silently."""
+    import __spark_entry__ as entry
+    from perfbench import readmix
+    from perfbench.metrics import READ_QUERIES
+
+    family = {
+        q: entry.resolve(q).__module__.rpartition(".")[2] for q in READ_QUERIES
+    }
+    assert {q: f for q, f in family.items() if f not in readmix.FAMILIES} == {}
+    assert set(family.values()) == set(readmix.FAMILIES)

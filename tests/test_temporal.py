@@ -240,7 +240,7 @@ def test_markov_attribution_removal_effects_analytic(spark, tmp_path):
 
     from pyspark.sql import functions as F
 
-    from ecommerce_realtime_pipeline_spark.plans import kpi
+    from ecommerce_realtime_pipeline_spark.plans import mining
 
     t0 = dt.datetime(2025, 1, 1)
     rows = []
@@ -259,7 +259,7 @@ def test_markov_attribution_removal_effects_analytic(spark, tmp_path):
     df.write.parquet(str(tmp_path / "events.parquet"))
     out = {
         r["channel"]: r
-        for r in kpi.events_markov_attribution(spark, str(tmp_path)).collect()
+        for r in mining.events_markov_attribution(spark, str(tmp_path)).collect()
     }
     assert set(out) == {"click", "error", "signup", "view"}
     assert abs(out["click"]["conv_full"] - 2 / 3) < 1e-6
