@@ -9,8 +9,9 @@ memoized by :func:`storage.read_parquet`, and every later read of the
 same file starts no inference job. Min/max pushdown still reads each
 scanned row group's footer statistics at execution.
 
-The money expressions every plan module shares live here too:
-:data:`MONEY`, :func:`money` and :func:`as_double`.
+The money expressions every module shares live here too:
+:data:`MONEY`, :func:`money`, :func:`as_double` and the order-total
+fold :func:`order_total`.
 """
 
 from __future__ import annotations
@@ -96,6 +97,25 @@ def as_double(col: Column, scale: int = 2) -> Column:
     return F.round(col, scale).cast("double")
 
 
+def order_total(items: str | Column) -> Column:
+    """An order's header total from its items array: each line's
+    ``quantity * unit_price`` brounded to 2 places, summed as
+    :data:`MONEY`, the sum brounded and cast to ``decimal(10,2)`` (the
+    reference's ``Order.compute_total``, ``schemas.py:60-61,79-82``). A
+    NULL items array totals 0. The generator, the producer and the
+    validator all fold through this one definition."""
+    return F.bround(
+        F.aggregate(
+            F.coalesce(items, F.array()),
+            F.lit(0).cast(MONEY),
+            lambda acc, x: (
+                acc + F.bround(x["quantity"].cast(MONEY) * x["unit_price"], 2)
+            ).cast(MONEY),
+        ),
+        2,
+    ).cast("decimal(10,2)")
+
+
 def infer_schemas(spark: SparkSession, sf_dir: str) -> None:
     """Infer the schema of every testdata table present in ``sf_dir``
     ahead of its first read: one Spark job per table and file version,
@@ -116,32 +136,6 @@ def register_views(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR) -> dict[st
         df = load_table(spark, sf_dir, name)
         df.createOrReplaceTempView(name)
         out[name] = df
-    return out
-
-
-def init_catalog(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR) -> dict[str, DataFrame]:
-    """S7 catalog bootstrap — the Spark counterpart of the reference's
-    file-ordered SQL init (``sql/init/01→03``, ``init-multi-db.sh``):
-    register data views plus empty, schema-typed monitoring tables
-    (``processing_stats``, ``consumer_offsets`` —
-    ``02_create_tables.sql:125-141``) so monitoring queries are valid
-    from the first batch. Index DDL (``03_create_indexes.sql``) has no
-    Spark equivalent by design: parquet footers + Catalyst pushdown
-    replace b-tree/GIN indexes."""
-    from ecommerce_realtime_pipeline_spark.schemas import (
-        CONSUMER_OFFSETS_SCHEMA,
-        PROCESSING_STATS_SCHEMA,
-    )
-
-    out = register_views(spark, sf_dir)
-    for name, schema in (
-        ("processing_stats", PROCESSING_STATS_SCHEMA),
-        ("consumer_offsets", CONSUMER_OFFSETS_SCHEMA),
-    ):
-        if not spark.catalog.tableExists(name):
-            df = spark.createDataFrame([], schema)
-            df.createOrReplaceTempView(name)
-            out[name] = df
     return out
 
 

@@ -27,6 +27,9 @@ from ecommerce_realtime_pipeline_spark.session import materialize
 
 from ecommerce_realtime_pipeline_spark.operators import text as TX
 
+#: width of the SimHash signature (the first 8 hex chars of an md5)
+SIMHASH_BITS = 32
+
 
 def exact_dedup(docs: DataFrame) -> tuple[DataFrame, DataFrame]:
     """Exact dedup on the normalized-text fingerprint: keeps the
@@ -133,11 +136,11 @@ def verify_jaccard(
     )
 
 
-def minhash_signatures(docs: DataFrame, num_hashes: int = 64, n: int = 3) -> DataFrame:
+def minhash_signatures(docs: DataFrame, num_hashes: int) -> DataFrame:
     """MinHash signature per doc: for each of ``num_hashes`` seeded
-    xxhash64 functions, the min over the doc's distinct shingles.
+    xxhash64 functions, the min over the doc's distinct 3-gram shingles.
     One explode + one groupBy (single shuffle), k aggregates wide."""
-    idx = TX.shingle_index(docs, n)
+    idx = TX.shingle_index(docs, 3)
     aggs = [
         F.min(F.xxhash64("shingle", F.lit(seed))).alias(f"h{seed}")
         for seed in range(num_hashes)
@@ -146,7 +149,7 @@ def minhash_signatures(docs: DataFrame, num_hashes: int = 64, n: int = 3) -> Dat
 
 
 def banded_signatures(
-    docs: DataFrame, num_hashes: int = 64, bands: int = 16, n: int = 3
+    docs: DataFrame, num_hashes: int = 64, bands: int = 16
 ) -> DataFrame:
     """(doc_id, band, bucket) LSH band keys for each doc: the k-hash
     MinHash signature split into ``bands`` buckets of ``num_hashes //
@@ -154,7 +157,7 @@ def banded_signatures(
     near-dup join (:func:`minhash_lsh_pairs`) and the streaming
     dedup-against-history index (``streaming/neardup.py``)."""
     rows_per_band = num_hashes // bands
-    sig = minhash_signatures(docs, num_hashes, n)
+    sig = minhash_signatures(docs, num_hashes)
     band_cols = F.array(
         *[
             F.struct(
@@ -171,22 +174,16 @@ def banded_signatures(
     )
 
 
-def minhash_lsh_pairs(
-    docs: DataFrame,
-    threshold: float = 0.5,
-    num_hashes: int = 64,
-    bands: int = 16,
-    n: int = 3,
-) -> DataFrame:
-    """MinHash-LSH near-dup pairs: band the k-hash signature into
-    ``bands`` buckets, equi-join docs sharing any (band, bucket-hash),
+def minhash_lsh_pairs(docs: DataFrame, threshold: float = 0.5) -> DataFrame:
+    """MinHash-LSH near-dup pairs: band the 64-hash signature into
+    16 buckets, equi-join docs sharing any (band, bucket-hash),
     then verify candidates with EXACT Jaccard ≥ threshold.
 
     b=16 × r=4 puts the S-curve knee near J≈0.5; with the corpus's
     clean separation (true dups ≳0.9) recall is effectively 1.
     Output: (doc_a, doc_b, jaccard) — same contract as jaccard_pairs.
     """
-    banded = banded_signatures(docs, num_hashes, bands, n)
+    banded = banded_signatures(docs)
     cand = (
         banded.alias("x")
         .join(banded.alias("y"), ["band", "bucket"])
@@ -197,12 +194,10 @@ def minhash_lsh_pairs(
         .distinct()
     )
     # exact-Jaccard verification of the (small) candidate set
-    return verify_jaccard(cand, docs, threshold, n)
+    return verify_jaccard(cand, docs, threshold)
 
 
-def neardup_clusters(
-    pairs: DataFrame, max_iter: int = 20, warmup_rounds: int = 2
-) -> DataFrame:
+def neardup_clusters(pairs: DataFrame) -> DataFrame:
     """Connected components over near-dup pairs → (doc_id, cluster_id)
     with cluster_id = the smallest doc_id in the component. This is the
     canonical final step of web-scale dedup: pairs → clusters → keep
@@ -211,7 +206,7 @@ def neardup_clusters(
     Iterative min-label propagation: each round every node adopts the
     minimum label among itself and its neighbors; converges in
     O(diameter) rounds, and near-dup graphs are short chains/cliques
-    (diameter ≤ a few), so 3-4 rounds in practice with ``max_iter`` as
+    (diameter ≤ a few), so 3-4 rounds in practice with 20 rounds as
     the safety bound. Each round is one equi-join + groupBy (no
     all-pairs anywhere); ``localCheckpoint`` per round breaks the
     otherwise exponentially-growing lineage.
@@ -221,7 +216,7 @@ def neardup_clusters(
     comparison inside the same projection — free), so the probe is a
     filter over the just-checkpointed narrow frame, never an extra
     join; and because diameter ≥ 2 whenever any chain exists, the
-    first ``warmup_rounds`` rounds skip the probe entirely and later
+    first 2 rounds skip the probe entirely and later
     rounds probe every other round. Worst case this runs one round
     past convergence — a cheap no-op round — in exchange for removing
     a driver action from every round. At 100 TB-scale graphs with long
@@ -244,7 +239,7 @@ def neardup_clusters(
         .withColumn("label", F.col("node"))
         .transform(materialize)
     )
-    for rnd in range(max_iter):
+    for rnd in range(20):
         neighbor_min = (
             edges.join(
                 labels.select(
@@ -270,7 +265,7 @@ def neardup_clusters(
             .transform(materialize)
         )
         labels = new_labels
-        if rnd >= warmup_rounds and (rnd - warmup_rounds) % 2 == 0:
+        if rnd >= 2 and rnd % 2 == 0:
             if new_labels.filter(F.col("_chg")).limit(1).count() == 0:
                 break
     return labels.select(
@@ -278,7 +273,7 @@ def neardup_clusters(
     )
 
 
-def neardup_clusters_lss(pairs: DataFrame, max_iter: int = 20) -> DataFrame:
+def neardup_clusters_lss(pairs: DataFrame) -> DataFrame:
     """Connected components via alternating LARGE-STAR / SMALL-STAR
     (Kiveris et al., "Connected Components in MapReduce and Beyond" —
     the public MapReduce CC algorithm) → (doc_id, cluster_id) with
@@ -312,7 +307,7 @@ def neardup_clusters_lss(pairs: DataFrame, max_iter: int = 20) -> DataFrame:
         .transform(materialize)
     )
     prev_sig: tuple | None = None
-    for _ in range(max_iter):
+    for _ in range(20):  # the safety bound
         sym = edges.select(
             F.col("c").alias("node"), F.col("p").alias("nbr")
         ).unionByName(edges.select(F.col("p").alias("node"), F.col("c").alias("nbr")))
@@ -358,33 +353,19 @@ def neardup_clusters_lss(pairs: DataFrame, max_iter: int = 20) -> DataFrame:
     ).select(F.col("node").alias("doc_id"), "cluster_id")
 
 
-def simhash(
-    docs: DataFrame, bits: int = 32, n: int = 3, portable_hash: bool = False
-) -> DataFrame:
-    """SimHash per doc over distinct n-gram SHINGLES (tokens are too
-    shared across a narrow-vocab corpus to discriminate): each bit is
-    the sign of the Σ(±1) votes from shingle-hash bits. One explode +
-    one groupBy with ``bits`` conditional-sum aggregates.
+def simhash(docs: DataFrame) -> DataFrame:
+    """``SIMHASH_BITS``-bit SimHash per doc over distinct 3-gram
+    SHINGLES (tokens are too shared across a narrow-vocab corpus to
+    discriminate): each bit is the sign of the Σ(±1) votes from
+    shingle-hash bits. One explode + one groupBy with one
+    conditional-sum aggregate per bit.
 
-    Two shingle-hash paths — the banding/vote math is hash-agnostic:
-
-    - ``portable_hash=False`` (DEFAULT, production): ``xxhash64`` low
-      32 bits. Codegen'd JVM hash, no hex round-trip — the fast path.
-    - ``portable_hash=True`` (oracle parity): first 8 hex chars of md5
-      via ``conv`` — md5 is the one hash Spark and DuckDB share
-      bit-for-bit, which is what makes docs_neardup_simhash exactly
-      replicable in SQL. ~2.4× slower than xxhash64 (measured); pay it
-      only when an external engine must reproduce the signature.
-
-    Requires ``bits`` ≤ 32."""
-    if bits > 32:
-        raise ValueError("32-bit-derived simhash supports at most 32 bits")
-    if portable_hash:
-        h = F.conv(F.substring(F.md5("tok"), 1, 8), 16, 10).cast("long")
-    else:
-        h = F.xxhash64("tok").bitwiseAND(F.lit((1 << 32) - 1))
+    The shingle hash is the first 8 hex chars of md5 via ``conv`` —
+    md5 is the one hash Spark and DuckDB share bit-for-bit, which is
+    what makes docs_neardup_simhash exactly replicable in SQL."""
+    h = F.conv(F.substring(F.md5("tok"), 1, 8), 16, 10).cast("long")
     tok = (
-        TX.with_shingles(docs.select("doc_id", "text"), n)
+        TX.with_shingles(docs.select("doc_id", "text"), 3)
         .select("doc_id", F.explode("_sh").alias("tok"))
         .withColumn("_h", h)
     )
@@ -392,31 +373,25 @@ def simhash(
         F.sum(
             F.when(F.shiftright("_h", i).bitwiseAND(F.lit(1)) == 1, 1).otherwise(-1)
         ).alias(f"v{i}")
-        for i in range(bits)
+        for i in range(SIMHASH_BITS)
     ]
     per_doc = tok.groupBy("doc_id").agg(*votes)
     sh = None
-    for i in range(bits):
+    for i in range(SIMHASH_BITS):
         bit = F.when(F.col(f"v{i}") > 0, F.lit(2**i).cast("long")).otherwise(F.lit(0).cast("long"))
         sh = bit if sh is None else sh + bit
     return per_doc.select("doc_id", sh.alias("simhash"))
 
 
-def simhash_pairs(
-    docs: DataFrame,
-    max_hamming: int = 3,
-    bits: int = 32,
-    portable_hash: bool = False,
-) -> DataFrame:
-    """SimHash near-dup pairs: band the ``bits``-bit hash into 4 chunks
-    (pigeonhole: hamming ≤ 3 ⇒ at least one identical chunk), equi-join
-    on (chunk_idx, chunk), verify with popcount(xor) ≤ max_hamming.
-    ``portable_hash`` selects the shingle hash (see :func:`simhash`) —
-    the banding/verify math is identical either way.
+def simhash_pairs(docs: DataFrame, max_hamming: int = 3) -> DataFrame:
+    """SimHash near-dup pairs: band the 32-bit hash (:func:`simhash`)
+    into 4 chunks (pigeonhole: hamming ≤ 3 ⇒ at least one identical
+    chunk), equi-join on (chunk_idx, chunk), verify with
+    popcount(xor) ≤ max_hamming.
     Output: (doc_a, doc_b, hamming)."""
-    chunk_bits = bits // 4
+    chunk_bits = SIMHASH_BITS // 4
     mask = (1 << chunk_bits) - 1
-    sh = simhash(docs, bits, portable_hash=portable_hash)
+    sh = simhash(docs)
     chunks = F.array(
         *[
             F.struct(
@@ -486,13 +461,7 @@ def duplicate_span_stats(docs: DataFrame, n: int = 8) -> DataFrame:
     )
 
 
-def decontaminate(
-    docs: DataFrame,
-    n: int = 8,
-    train_split: str = "train",
-    eval_split: str = "test",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def decontaminate(docs: DataFrame, n: int = 8) -> DataFrame:
     """Benchmark decontamination: training docs sharing any word
     ``n``-gram with the eval split (the standard long-n-gram overlap
     check — GPT-3 §C / PaLM-style — long n-grams make incidental
@@ -508,18 +477,18 @@ def decontaminate(
     natural broadcast/bloom side; here Spark/AQE picks the strategy.
     One shuffle each side + one join — never doc×doc.
     """
-    tagged = docs.withColumn("_split", TX.hash_split(id_col))
-    idx = TX.shingle_index(tagged.filter(F.col("_split") == train_split), n)
+    tagged = docs.withColumn("_split", TX.hash_split("doc_id"))
+    idx = TX.shingle_index(tagged.filter(F.col("_split") == "train"), n)
     eval_grams = (
         TX.with_shingles(
-            tagged.filter(F.col("_split") == eval_split).select(id_col, "text"), n
+            tagged.filter(F.col("_split") == "test").select("doc_id", "text"), n
         )
         .select(F.explode("_sh").alias("shingle"))
         .distinct()
     )
     return (
         idx.join(eval_grams, "shingle")
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(F.count_distinct("shingle").alias("n_shared"))
     )
 
@@ -528,8 +497,6 @@ def edit_distance_pairs(
     docs: DataFrame,
     max_dist: int = 3,
     key_len: int = 40,
-    col: str = "text",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """Typo-level fuzzy duplicate pairs by Levenshtein distance over a
     fixed-width prefix key — the string-similarity join that catches
@@ -568,8 +535,8 @@ def edit_distance_pairs(
     seg_len = key_len // n_seg
     if seg_len * n_seg != key_len:
         raise ValueError("key_len must be a multiple of max_dist + 1")
-    key = F.rpad(F.substring(F.col(col), 1, key_len), key_len, " ")
-    keys = docs.select(F.col(id_col).alias("_id"), key.alias("_key"))
+    key = F.rpad(F.substring(F.col("text"), 1, key_len), key_len, " ")
+    keys = docs.select(F.col("doc_id").alias("_id"), key.alias("_key"))
     seg_idx = F.explode(F.array(*[F.lit(i) for i in range(n_seg)])).alias(
         "seg_idx"
     )

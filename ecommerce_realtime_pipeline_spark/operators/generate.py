@@ -30,6 +30,7 @@ from dataclasses import dataclass
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ecommerce_realtime_pipeline_spark.catalog import order_total
 from ecommerce_realtime_pipeline_spark.schemas import (
     EMAIL_DOMAINS,
     EVENT_TYPES,
@@ -227,16 +228,7 @@ def gen_orders(
             ).alias("items"),
         )
     )
-    total = F.bround(
-        F.aggregate(
-            "items",
-            F.lit(0).cast("decimal(18,2)"),
-            lambda acc, x: (
-                acc + F.bround(x["quantity"].cast("decimal(18,2)") * x["unit_price"], 2)
-            ).cast("decimal(18,2)"),
-        ),
-        2,
-    ).cast("decimal(10,2)")
+    total = order_total("items")
     cust_pool = customers.select(
         F.col("_idx").alias("_cidx"), F.col("customer_id")
     )

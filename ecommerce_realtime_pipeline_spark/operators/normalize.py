@@ -28,6 +28,8 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ecommerce_realtime_pipeline_spark.catalog import MONEY, money
+
 from ecommerce_realtime_pipeline_spark.schemas import ENTITY_SCHEMAS
 
 ENVELOPE_KEY = ["topic", "topic_partition", "topic_offset"]
@@ -110,9 +112,9 @@ def explode_order_items(orders: DataFrame) -> DataFrame:
         )
         .withColumn(
             "line_total",
-            F.bround(
-                F.col("quantity").cast("decimal(18,2)") * F.col("unit_price"), 2
-            ).cast(T.DecimalType(10, 2)),
+            F.bround(money("quantity") * F.col("unit_price"), 2).cast(
+                T.DecimalType(10, 2)
+            ),
         )
     )
 
@@ -183,7 +185,6 @@ def incremental_agg(
     key_cols: list[str],
     group_col: str,
     sum_col: str,
-    sum_type: str = "decimal(18,2)",
 ) -> DataFrame:
     """Incremental materialized-aggregate maintenance: refresh a
     per-group (count, sum) aggregate from a CDC change feed WITHOUT
@@ -199,7 +200,8 @@ def incremental_agg(
     Groups whose maintained count reaches 0 drop out, exactly as a
     recompute would drop them.
 
-    Exactness: contributions are summed in DECIMAL (``sum_type``), so
+    Exactness: contributions are summed as exact money
+    (``catalog.MONEY``), so
     the incremental total is partition-order-independent and equals
     the direct recompute bit-for-bit — the property the driver oracle
     (direct aggregation over the new snapshot) hash-proves.
@@ -212,15 +214,15 @@ def incremental_agg(
     group-cardinality-sized old aggregate. The new snapshot is only
     read at diff keys; there is no full second scan.
     """
-    d_val = F.col(sum_col).cast(sum_type)
+    d_val = money(sum_col)
     old_agg = old.groupBy(group_col).agg(
         F.count("*").alias("_n"), F.sum(d_val).alias("_s")
     )
-    delta = cdc_delta(old, new, diff, key_cols, group_col, sum_col, sum_type)
+    delta = cdc_delta(old, new, diff, key_cols, group_col, sum_col)
     prev = old_agg.select(
         group_col, F.col("_n").alias("n_rows"), F.col("_s").alias("sum_val")
     )
-    return merge_agg_delta(prev, delta, group_col, sum_type)
+    return merge_agg_delta(prev, delta, group_col)
 
 
 def cdc_delta(
@@ -230,7 +232,6 @@ def cdc_delta(
     key_cols: list[str],
     group_col: str,
     sum_col: str,
-    sum_type: str = "decimal(18,2)",
 ) -> DataFrame:
     """The retract/add delta kernel shared by :func:`incremental_agg`
     and the bucketed per-bucket CDC loop (``ingest.cdc_refresh_buckets``):
@@ -238,7 +239,7 @@ def cdc_delta(
     ``old``/``new`` may be PRUNED to the touched buckets — every diff
     key's pre/post row lives in those buckets by construction (the
     bucket function is a pure function of the key)."""
-    d_val = F.col(sum_col).cast(sum_type)
+    d_val = money(sum_col)
     retract = (
         diff.filter(F.col("op") != "insert")
         .select(*key_cols)
@@ -266,9 +267,7 @@ def cdc_delta(
     )
 
 
-def merge_agg_delta(
-    prev: DataFrame, delta: DataFrame, group_col: str, sum_type: str
-) -> DataFrame:
+def merge_agg_delta(prev: DataFrame, delta: DataFrame, group_col: str) -> DataFrame:
     """The (count, sum) view-maintenance MERGE shared by the batch
     :func:`incremental_agg` and the streaming continuous aggregate
     (``streaming/contagg``): full-outer join the previous aggregate
@@ -285,9 +284,9 @@ def merge_agg_delta(
             + F.coalesce(F.col("_dn"), F.lit(0))
         ).alias("_n"),
         (
-            F.coalesce(F.col("sum_val"), F.lit(0).cast(sum_type))
-            + F.coalesce(F.col("_ds"), F.lit(0).cast(sum_type))
-        ).cast(sum_type).alias("_s"),
+            F.coalesce(F.col("sum_val"), F.lit(0).cast(MONEY))
+            + F.coalesce(F.col("_ds"), F.lit(0).cast(MONEY))
+        ).cast(MONEY).alias("_s"),
     )
     return merged.filter(F.col("_n") > 0).select(
         group_col, F.col("_n").alias("n_rows"), F.col("_s").alias("sum_val")

@@ -13,6 +13,10 @@ Scale stance (100 TB):
   anywhere.
 - All dot products ride ``zip_with``/``aggregate`` (JVM, codegen) on
   the array column — no Python in the hot path.
+
+Every operator reads its vectors from the ``embedding`` column. The
+index parameters below are part of each index's design, fixed when the
+index is built (and replayed by the SQL oracles), not per-call knobs.
 """
 
 from __future__ import annotations
@@ -30,17 +34,31 @@ from ecommerce_realtime_pipeline_spark.session import memo, overlapped
 
 from . import indexfmt
 
+#: seed of the LSH hyperplanes and of the md5-ordered quantizer pick
+#: (vectors ordered by ``md5(vec_id || '|42')``)
+SEED = 42
+#: ``knn_lsh``'s index: tables of sign-hyperplane bits
+LSH_BITS, LSH_TABLES = 4, 12
+#: the cosine near-dup self-join's static LSH width, and the floor of
+#: its occupancy-pinned sizing (``auto_lsh_params``)
+NEARDUP_BITS, NEARDUP_TABLES = 8, 12
+#: coarse cells of the IVF quantizer (and centroids of k-means)
+N_CENTROIDS = 16
+#: Lloyd iterations of the k-means refinement
+LLOYD_ITERS = 2
+#: product quantization: subspaces, codewords per subspace, and the
+#: ADC candidates that get the exact rerank
+PQ_M, PQ_KSUB, PQ_REFINE = 16, 32, 40
 
-def embedding_dim(
-    emb: DataFrame, col: str = "embedding", cache_key: str | None = None
-) -> int:
+
+def embedding_dim(emb: DataFrame, cache_key: str | None = None) -> int:
     """Length of the embedding arrays: one one-row job (array columns
     carry no length in the schema, so this can't come from metadata
     alone), memoized per session under ``cache_key``
     (``session.memo``)."""
 
     def build() -> int:
-        row = emb.select(col).first()
+        row = emb.select("embedding").first()
         if row is None:
             # loud contract instead of the NoneType-subscript the bare
             # first()[0] throws on an empty corpus: every ANN/dedup
@@ -54,7 +72,7 @@ def embedding_dim(
             )
         return len(row[0])
 
-    return memo(emb.sparkSession, cache_key, ("embedding_dim", col), build)
+    return memo(emb.sparkSession, cache_key, ("embedding_dim",), build)
 
 
 def dot(a, b):
@@ -69,13 +87,11 @@ def norm(a):
     return F.sqrt(dot(a, a))
 
 
-def with_norm(emb: DataFrame, col: str = "embedding") -> DataFrame:
-    return emb.withColumn("_nrm", norm(F.col(col)))
+def with_norm(emb: DataFrame) -> DataFrame:
+    return emb.withColumn("_nrm", norm(F.col("embedding")))
 
 
-def knn_bruteforce(
-    emb: DataFrame, queries: DataFrame, k: int = 5, col: str = "embedding"
-) -> DataFrame:
+def knn_bruteforce(emb: DataFrame, queries: DataFrame, k: int = 5) -> DataFrame:
     """Exact cosine top-k for each query vector against the corpus.
 
     ``queries`` must carry (vec_id, embedding); it is broadcast — the
@@ -83,10 +99,10 @@ def knn_bruteforce(
     cos_sim) with deterministic (cos desc, neighbor_id) ordering.
     """
     q = queries.select(
-        F.col("vec_id").alias("query_id"), F.col(col).alias("_qv")
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("_qv")
     )
-    c = with_norm(emb, col).select(
-        F.col("vec_id").alias("neighbor_id"), F.col(col).alias("_cv"), "_nrm"
+    c = with_norm(emb).select(
+        F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("_cv"), "_nrm"
     )
     scored = (
         c.crossJoin(F.broadcast(q.withColumn("_qn", norm(F.col("_qv")))))
@@ -103,7 +119,7 @@ def knn_bruteforce(
     )
 
 
-def hyperplanes(dim: int, n_planes: int = 12, seed: int = 42) -> list[list[float]]:
+def hyperplanes(dim: int, n_planes: int, seed: int) -> list[list[float]]:
     """Deterministic random hyperplanes (fixed seed ⇒ identical buckets
     across runs, machines, and partitionings)."""
     rng = random.Random(seed)
@@ -135,45 +151,38 @@ def bucket_udf(planes: list[list[float]], bits: int, n_tables: int):
 
 
 def knn_lsh(
-    emb: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-    bits: int = 4,
-    n_tables: int = 12,
-    col: str = "embedding",
-    seed: int = 42,
-    dim: int | None = None,
+    emb: DataFrame, queries: DataFrame, k: int = 5, dim: int | None = None
 ) -> DataFrame:
     """ANN cosine top-k: MULTI-TABLE sign-LSH + exact rerank inside
     candidate buckets.
 
-    ``n_tables`` independent tables of ``bits`` hyperplanes each;
+    ``LSH_TABLES`` independent tables of ``LSH_BITS`` hyperplanes each;
     a pair collides if it shares a bucket in ANY table — recall is
-    1-(1-p^bits)^n_tables with p = 1 - θ/π. Candidate generation is an
-    equi-join on (table_id, bucket); the corpus side carries n_tables
-    index rows per vector (an LSH index is ~n_tables× key storage, not
+    1-(1-p^bits)^tables with p = 1 - θ/π. Candidate generation is an
+    equi-join on (table_id, bucket); the corpus side carries one index
+    row per table and vector (an LSH index is ~tables× key storage, not
     data duplication — only (id, bucket) pairs are exploded, the
     vectors themselves ride the final rerank join once).
 
-    Defaults (4 bits × 12 tables) give ≥0.8 recall even on isotropic
+    4 bits × 12 tables give ≥0.8 recall even on isotropic
     random vectors (the hardest case, θ≈70°); clustered real-world
     embeddings reach ~1 at far lower scan fractions. Same output
     contract as ``knn_bruteforce``. Pass ``dim`` (or use
     :func:`embedding_dim` with a cache key) to avoid a one-row probe
     job before planning.
     """
-    dim = dim or embedding_dim(emb, col)
-    planes = hyperplanes(dim, bits * n_tables, seed)
-    buckets = bucket_udf(planes, bits, n_tables)
+    dim = dim or embedding_dim(emb)
+    planes = hyperplanes(dim, LSH_BITS * LSH_TABLES, SEED)
+    buckets = bucket_udf(planes, LSH_BITS, LSH_TABLES)
 
     # index side: (neighbor_id, tbl, bucket) — narrow key rows only
     index = emb.select(
         F.col("vec_id").alias("neighbor_id"),
-        F.posexplode(buckets(F.col(col))).alias("tbl", "bucket"),
+        F.posexplode(buckets(F.col("embedding"))).alias("tbl", "bucket"),
     )
     q = queries.select(
         F.col("vec_id").alias("query_id"),
-        F.posexplode(buckets(F.col(col))).alias("tbl", "bucket"),
+        F.posexplode(buckets(F.col("embedding"))).alias("tbl", "bucket"),
     )
     cand = (
         index.join(F.broadcast(q), ["tbl", "bucket"])
@@ -181,20 +190,20 @@ def knn_lsh(
         .select("query_id", "neighbor_id")
         .distinct()
     )
-    return exact_rerank(cand, emb, queries, k, col)
+    return exact_rerank(cand, emb, queries, k)
 
 
 def exact_rerank(
-    cand: DataFrame, emb: DataFrame, queries: DataFrame, k: int, col: str
+    cand: DataFrame, emb: DataFrame, queries: DataFrame, k: int
 ) -> DataFrame:
     """Exact cosine top-k over a (query_id, neighbor_id) candidate set —
     the verification tail shared by every ANN index (LSH, IVF). Joins
     the corpus vectors once, broadcasts the query vectors."""
-    corpus = with_norm(emb, col).select(
-        F.col("vec_id").alias("neighbor_id"), F.col(col).alias("_cv"), "_nrm"
+    corpus = with_norm(emb).select(
+        F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("_cv"), "_nrm"
     )
     qv = queries.select(
-        F.col("vec_id").alias("query_id"), F.col(col).alias("_qv")
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("_qv")
     ).withColumn("_qn", norm(F.col("_qv")))
     scored = (
         cand.join(corpus, "neighbor_id")
@@ -243,17 +252,13 @@ def _read_centroid_list(spark, path: str, m: dict) -> list[list[float]]:
 
 
 def ivf_centroids(
-    emb: DataFrame,
-    n_centroids: int = 16,
-    col: str = "embedding",
-    seed: int = 42,
-    cache_key: str | None = None,
+    emb: DataFrame, n_centroids: int = N_CENTROIDS, cache_key: str | None = None
 ) -> list[list[float]]:
     """Deterministic coarse quantizer: ``n_centroids`` corpus vectors
     chosen by md5 order of vec_id (IVF-flat with sampled init — no
     k-means dependency, reproducible across runs/partitionings, and
     engine-portable: DuckDB replicates the identical pick via
-    ``md5(vec_id || '|seed')``, which is what licenses the emb_knn_ivf
+    ``md5(vec_id || '|42')`` (``SEED``), which is what licenses the emb_knn_ivf
     oracle). The centroid table is small by design (√n-ish in
     practice), so collecting it to broadcast into the assignment UDF is
     the standard IVF layout, not a driver-side data pull; ``limit``
@@ -265,9 +270,9 @@ def ivf_centroids(
 
     def build() -> list[list[float]]:
         rows = (
-            emb.select("vec_id", col)
+            emb.select("vec_id", "embedding")
             .orderBy(
-                F.md5(F.concat(F.col("vec_id").cast("string"), F.lit(f"|{seed}"))),
+                F.md5(F.concat(F.col("vec_id").cast("string"), F.lit(f"|{SEED}"))),
                 F.col("vec_id"),
             )
             .limit(n_centroids)
@@ -280,9 +285,7 @@ def ivf_centroids(
             )
         return [list(r[1]) for r in rows]
 
-    return memo(
-        emb.sparkSession, cache_key, ("ivf_centroids", n_centroids, col, seed), build
-    )
+    return memo(emb.sparkSession, cache_key, ("ivf_centroids", n_centroids), build)
 
 
 def _write_centroid_table(spark, cents: list[list[float]], dest: str) -> None:
@@ -335,10 +338,7 @@ def knn_ivf(
     emb: DataFrame,
     queries: DataFrame,
     k: int = 5,
-    n_centroids: int = 16,
     n_probe: int = 4,
-    col: str = "embedding",
-    seed: int = 42,
     cache_key: str | None = None,
 ) -> DataFrame:
     """ANN cosine top-k via IVF (inverted-file) cells: every corpus
@@ -346,7 +346,7 @@ def knn_ivf(
     matmul pass — this is the index build), queries probe their
     ``n_probe`` nearest cells, exact rerank inside probed cells only.
 
-    Scan fraction ≈ n_probe/n_centroids per query. Candidate generation
+    Scan fraction ≈ n_probe/``N_CENTROIDS`` per query. Candidate generation
     is an equi-join on the cell id against the broadcast probed-cells
     list — never a cross join. Same output contract as
     ``knn_bruteforce``; recall vs brute force is pinned in tests.
@@ -357,31 +357,25 @@ def knn_ivf(
     actual IVF posting-list layout — so repeat queries pay only the
     probe + rerank, never a rebuild. That is the production shape: the
     index is written once and served many times."""
-    corpus_cells, q_cells = ivf_cell_tables(
-        emb, queries, n_centroids, n_probe, col, seed, cache_key
-    )
+    corpus_cells, q_cells = ivf_cell_tables(emb, queries, n_probe, cache_key)
     cand = (
         corpus_cells.join(F.broadcast(q_cells), "cell")
         .filter(F.col("neighbor_id") != F.col("query_id"))
         .select("query_id", "neighbor_id")
         .distinct()
     )
-    return exact_rerank(cand, emb, queries, k, col)
+    return exact_rerank(cand, emb, queries, k)
 
 
 def knn_ivf_filtered(
     emb: DataFrame,
     queries: DataFrame,
     k: int = 5,
-    n_centroids: int = 16,
     n_probe: int = 4,
-    col: str = "embedding",
-    seed: int = 42,
     cache_key: str | None = None,
-    meta_col: str = "label",
 ) -> DataFrame:
     """FILTERED vector search: ANN cosine top-k where every neighbor
-    must share the query's ``meta_col`` value — the metadata-
+    must share the query's ``label`` value — the metadata-
     constrained retrieval pattern (same-tenant, same-language,
     same-label). The constraint is applied AT CANDIDATE GENERATION
     (posting-list equi-join → metadata equi-join → exact rerank),
@@ -396,14 +390,12 @@ def knn_ivf_filtered(
     (id, meta) projection onto the BOUNDED candidate set (|q| ×
     probed-cell occupancy), with the query metadata broadcast — never
     a corpus-wide filter pass per query."""
-    corpus_cells, q_cells = ivf_cell_tables(
-        emb, queries, n_centroids, n_probe, col, seed, cache_key
-    )
+    corpus_cells, q_cells = ivf_cell_tables(emb, queries, n_probe, cache_key)
     n_meta = emb.select(
-        F.col("vec_id").alias("neighbor_id"), F.col(meta_col).alias("_nm")
+        F.col("vec_id").alias("neighbor_id"), F.col("label").alias("_nm")
     )
     q_meta = queries.select(
-        F.col("vec_id").alias("query_id"), F.col(meta_col).alias("_qm")
+        F.col("vec_id").alias("query_id"), F.col("label").alias("_qm")
     )
     cand = (
         corpus_cells.join(F.broadcast(q_cells), "cell")
@@ -414,16 +406,13 @@ def knn_ivf_filtered(
         .select("query_id", "neighbor_id")
         .distinct()
     )
-    return exact_rerank(cand, emb, queries, k, col)
+    return exact_rerank(cand, emb, queries, k)
 
 
 def ivf_cell_tables(
     emb: DataFrame,
     queries: DataFrame,
-    n_centroids: int = 16,
     n_probe: int = 4,
-    col: str = "embedding",
-    seed: int = 42,
     cache_key: str | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """The two IVF index frames shared by ``knn_ivf`` and
@@ -431,24 +420,22 @@ def ivf_cell_tables(
     lists, localCheckpointed and memoized per session under
     ``cache_key`` (``session.memo``)) and ``q_cells`` (query_id, cell —
     each query's ``n_probe`` nearest cells)."""
-    cents = ivf_centroids(emb, n_centroids, col, seed, cache_key=cache_key)
+    cents = ivf_centroids(emb, cache_key=cache_key)
 
     def build() -> DataFrame:
         assign = _probe_udf(cents, 1)
         cells = emb.select(
             F.col("vec_id").alias("neighbor_id"),
-            F.element_at(assign(F.col(col)), 1).alias("cell"),
+            F.element_at(assign(F.col("embedding")), 1).alias("cell"),
         )
         # narrow 2-int rows; eager so the matmul runs exactly once
         return cells if cache_key is None else cells.localCheckpoint()
 
-    corpus_cells = memo(
-        emb.sparkSession, cache_key, ("ivf_cell_tables", n_centroids, col, seed), build
-    )
+    corpus_cells = memo(emb.sparkSession, cache_key, ("ivf_cell_tables",), build)
     probe = _probe_udf(cents, n_probe)
     q_cells = queries.select(
         F.col("vec_id").alias("query_id"),
-        F.explode(probe(F.col(col))).alias("cell"),
+        F.explode(probe(F.col("embedding"))).alias("cell"),
     )
     return corpus_cells, q_cells
 
@@ -456,7 +443,6 @@ def ivf_cell_tables(
 def _ivf_body(
     emb: DataFrame,
     parent: str,
-    col: str,
     cents: list[list[float]],
     vtype: str,
     caller: str,
@@ -486,8 +472,8 @@ def _ivf_body(
     assign = _probe_udf(cents, 1)
     cells = emb.select(
         F.col("vec_id").cast("long").alias("neighbor_id"),
-        F.col(col).cast(f"array<{vtype}>").alias("_v"),
-        F.element_at(assign(F.col(col)), 1).alias("cell"),
+        F.col("embedding").cast(f"array<{vtype}>").alias("_v"),
+        F.element_at(assign(F.col("embedding")), 1).alias("cell"),
     ).repartition(F.col("cell"))
     writes = [lambda: indexfmt.write_segment(cells, parent, "cell", caller)]
     if cent_dir is not None:
@@ -502,9 +488,7 @@ def _ivf_body(
 def write_ivf_index(
     emb: DataFrame,
     path: str,
-    n_centroids: int = 16,
-    col: str = "embedding",
-    seed: int = 42,
+    n_centroids: int = N_CENTROIDS,
     cache_key: str | None = None,
 ) -> None:
     """Persist the IVF-flat index: posting lists written as parquet
@@ -527,14 +511,12 @@ def write_ivf_index(
     rename fails and it discards its staging dir (the winner's
     identical index serves both). Object stores swap the rename for a
     conditional manifest PUT."""
-    cents = ivf_centroids(emb, n_centroids, col, seed, cache_key=cache_key)
-    vtype = emb.schema[col].dataType.elementType.simpleString()
+    cents = ivf_centroids(emb, n_centroids, cache_key)
+    vtype = emb.schema["embedding"].dataType.elementType.simpleString()
     cent_dir = indexfmt.new_dir_name("centroids")
 
     def body(stage):
-        seg, values = _ivf_body(
-            emb, stage, col, cents, vtype, "write_ivf_index", cent_dir
-        )
+        seg, values = _ivf_body(emb, stage, cents, vtype, "write_ivf_index", cent_dir)
         return values, {"segments": [seg], "centroids": cent_dir, "vtype": vtype}
 
     indexfmt.build(path, IVF_INDEX_FORMAT, body, "write_ivf_index")
@@ -626,7 +608,6 @@ def knn_ivf_from_index(
     queries: DataFrame,
     k: int = 5,
     n_probe: int = 4,
-    col: str = "embedding",
     version: int | None = None,
 ) -> DataFrame:
     """Serve ANN top-k from a PERSISTED IVF index (built by
@@ -659,7 +640,7 @@ def knn_ivf_from_index(
     probe = _probe_udf(cents, n_probe)
     q_rows = queries.select(
         F.col("vec_id").alias("query_id"),
-        F.explode(probe(F.col(col))).alias("cell"),
+        F.explode(probe(F.col("embedding"))).alias("cell"),
     ).collect()  # bounded: |queries|·n_probe — the probe pass runs ONCE
     # pandas/Arrow local frame, not createDataFrame(list): the list
     # path parallelizes |queries|·n_probe rows over defaultParallelism
@@ -688,9 +669,9 @@ def knn_ivf_from_index(
         .distinct()
     )
     stored_vecs = cells.select(
-        F.col("neighbor_id").alias("vec_id"), F.col("_v").alias(col)
+        F.col("neighbor_id").alias("vec_id"), F.col("_v").alias("embedding")
     )
-    return exact_rerank(cand, stored_vecs, queries, k, col)
+    return exact_rerank(cand, stored_vecs, queries, k)
 
 
 def _seq_l2(vals: list) -> float:
@@ -704,18 +685,13 @@ def _seq_l2(vals: list) -> float:
 
 
 def pq_codebook_rows(
-    emb: DataFrame,
-    m: int = 16,
-    ksub: int = 32,
-    col: str = "embedding",
-    seed: int = 42,
-    cache_key: str | None = None,
+    emb: DataFrame, cache_key: str | None = None
 ) -> list[tuple[int, int, int, float]]:
     """Long-form product-quantization codebook: ``(s, c, i, y)`` rows —
     subspace s, code c, global dim index i, UNIT-NORMALIZED component
-    value y. The ``ksub`` training vectors are the same deterministic
+    value y. The ``PQ_KSUB`` training vectors are the same deterministic
     md5-ordered pick as :func:`ivf_centroids` (and share its memo),
-    normalized to the unit sphere and sliced into ``m`` contiguous
+    normalized to the unit sphere and sliced into ``PQ_M`` contiguous
     subspaces. Normalization is what makes PQ serve COSINE search:
     on unit vectors squared-L2 = 2·(1−cos), so ADC ranking is monotone
     in cosine — unnormalized PQ ranks by raw L2 and decorrelates from
@@ -723,32 +699,30 @@ def pq_codebook_rows(
     across engines (licenses the SQL oracle); a production deployment
     would k-means-refine each sub-codebook — layout, encode, and ADC
     machinery are unchanged by that swap."""
-    train = ivf_centroids(emb, ksub, col, seed, cache_key=cache_key)
+    train = ivf_centroids(emb, PQ_KSUB, cache_key)
     dim = len(train[0])
-    sub = dim // m
-    norms = [_seq_l2(train[c]) for c in range(ksub)]
+    sub = dim // PQ_M
+    norms = [_seq_l2(train[c]) for c in range(PQ_KSUB)]
     return [
-        (min(i // sub, m - 1), c, i, float(train[c][i]) / norms[c])
-        for c in range(ksub)
+        (min(i // sub, PQ_M - 1), c, i, float(train[c][i]) / norms[c])
+        for c in range(PQ_KSUB)
         for i in range(dim)
     ]
 
 
-def _unit_vectors(vecs: DataFrame, col: str = "embedding") -> DataFrame:
+def _unit_vectors(vecs: DataFrame) -> DataFrame:
     """(vec_id, _nv): unit-normalized double components. Element j is
     x_j/‖x‖ with the norm a sequential fold — every engine computes
     the identical doubles."""
-    return vecs.withColumn("_nrm", norm(F.col(col))).select(
+    return vecs.withColumn("_nrm", norm(F.col("embedding"))).select(
         "vec_id",
         F.transform(
-            F.col(col), lambda x: x.cast("double") / F.col("_nrm")
+            F.col("embedding"), lambda x: x.cast("double") / F.col("_nrm")
         ).alias("_nv"),
     )
 
 
-def _pq_subspace_dists(
-    vecs: DataFrame, id_alias: str, cb: DataFrame, col: str = "embedding"
-) -> DataFrame:
+def _pq_subspace_dists(vecs: DataFrame, id_alias: str, cb: DataFrame) -> DataFrame:
     """Exact per-(vector, subspace, code) squared L2 distance between
     the UNIT-NORMALIZED subvector and the codebook entry: per-element
     squared diffs are IEEE doubles (bit-identical in any engine),
@@ -759,7 +733,7 @@ def _pq_subspace_dists(
     Scale: the standard distributed matmul layout — posexplode the
     vector, broadcast the (m·ksub·dim)-row codebook, partial-agg
     groupBy. One shuffle of skinny rows; no UDF, no collect."""
-    comp = _unit_vectors(vecs, col).select(
+    comp = _unit_vectors(vecs).select(
         F.col("vec_id").alias(id_alias), F.posexplode("_nv").alias("i", "x")
     )
     sq = (F.col("x").cast("double") - F.col("y")) * (
@@ -772,49 +746,12 @@ def _pq_subspace_dists(
     )
 
 
-def _pq_assign_udf(codebook_rows: list, m: int, ksub: int, dim: int):
-    """Arrow-batched PQ assignment (the FAST path): one numpy pass per
-    batch — normalize rows, then per subspace argmin over the ksub
-    codewords via the ‖x‖²−2x·C+‖C‖² expansion. Returns array<int> of
-    m codes per vector."""
-    from pyspark.sql.functions import pandas_udf
-
-    sub = dim // m
-    CB = np.zeros((m, ksub, sub))
-    for s, c, i, y in codebook_rows:
-        j = i - s * sub
-        if 0 <= j < sub:
-            CB[s, c, j] = y
-    cb_sq = (CB**2).sum(axis=2)  # (m, ksub)
-
-    @pandas_udf("array<int>")
-    def assign(v: pd.Series) -> pd.Series:
-        M = np.vstack(v.to_numpy()).astype(np.float64)
-        M /= np.linalg.norm(M, axis=1, keepdims=True)
-        out = np.empty((len(M), m), dtype=np.int32)
-        for s in range(m):
-            X = M[:, s * sub : (s + 1) * sub]  # (n, sub)
-            d = (X**2).sum(1, keepdims=True) - 2 * X @ CB[s].T + cb_sq[s]
-            out[:, s] = np.argmin(d, axis=1)
-        return pd.Series(list(out))
-
-    return assign
-
-
-def pq_encode(
-    emb: DataFrame,
-    m: int = 16,
-    ksub: int = 32,
-    col: str = "embedding",
-    seed: int = 42,
-    cache_key: str | None = None,
-    exact: bool = True,
-) -> DataFrame:
-    """Product-quantization encode: each vector → ``m`` sub-codes
+def pq_encode(emb: DataFrame, cache_key: str | None = None) -> DataFrame:
+    """Product-quantization encode: each vector → ``PQ_M`` sub-codes
     (argmin squared-L2 codebook entry per subspace, ties to the
     smallest code via lexicographic struct-min). PQ is THE 100 TB
-    embedding-corpus compression: m bytes per vector (here 4) instead
-    of 4·dim (256) — a 64× memory cut that lets the whole corpus's
+    embedding-corpus compression: m bytes per vector (here 16) instead
+    of 4·dim (256) — a 16× memory cut that lets the whole corpus's
     codes live executor-resident for ADC scans.
 
     Output: (vec_id, subspace, code, _qd exact-decimal quantization
@@ -823,57 +760,37 @@ def pq_encode(
     compressed index itself) is localCheckpointed and memoized per
     session under ``cache_key`` (``session.memo``).
 
-    Two assignment paths — the code layout and every consumer are
-    identical either way (the simhash ``portable_hash`` precedent):
-
-    - ``exact=True`` (DEFAULT, oracle parity): distances as decimal-
-      exact sums via the posexplode+join layout — engine-exact argmin
-      incl. tie-breaks, which is what licenses the SQL oracle. Cost is
-      O(n·dim·ksub) join rows.
-    - ``exact=False`` (production): one Arrow matmul pass per batch
-      (:func:`_pq_assign_udf`) — ~dim× less data movement; float64
-      argmin may flip only exact-tie codewords (measured identical on
-      the test corpus; agreement pinned in tests). ``_qd`` is null.
+    Distances are decimal-exact sums via the posexplode+join layout, so
+    the argmin (incl. tie-breaks) is engine-exact, which is what
+    licenses the SQL oracle. Cost is O(n·dim·ksub) join rows.
     """
     spark = emb.sparkSession
 
     def build() -> DataFrame:
-        cb_rows = pq_codebook_rows(emb, m, ksub, col, seed, cache_key)
-        if exact:
-            cb = spark.createDataFrame(cb_rows, "s int, c int, i int, y double")
-            dists = _pq_subspace_dists(emb, "vec_id", cb, col)
-            codes = (
-                dists.groupBy("vec_id", "s")
-                .agg(F.min(F.struct("d", "c")).alias("_m"))
-                .select(
-                    "vec_id",
-                    F.col("s").alias("subspace"),
-                    F.col("_m.c").alias("code"),
-                    F.col("_m.d").alias("_qd"),
-                )
+        cb = spark.createDataFrame(
+            pq_codebook_rows(emb, cache_key), "s int, c int, i int, y double"
+        )
+        codes = (
+            _pq_subspace_dists(emb, "vec_id", cb)
+            .groupBy("vec_id", "s")
+            .agg(F.min(F.struct("d", "c")).alias("_m"))
+            .select(
+                "vec_id",
+                F.col("s").alias("subspace"),
+                F.col("_m.c").alias("code"),
+                F.col("_m.d").alias("_qd"),
             )
-        else:
-            dim = max(r[2] for r in cb_rows) + 1
-            assign = _pq_assign_udf(cb_rows, m, ksub, dim)
-            codes = emb.select(
-                "vec_id", F.posexplode(assign(F.col(col))).alias("subspace", "code")
-            ).withColumn("_qd", F.lit(None).cast("decimal(28,14)"))
+        )
         return codes if cache_key is None else codes.localCheckpoint()
 
-    return memo(spark, cache_key, ("pq_encode", m, ksub, col, seed, exact), build)
+    return memo(spark, cache_key, ("pq_encode",), build)
 
 
 def knn_pq_adc(
     emb: DataFrame,
     queries: DataFrame,
     k: int = 5,
-    m: int = 16,
-    ksub: int = 32,
-    refine: int = 40,
-    col: str = "embedding",
-    seed: int = 42,
     cache_key: str | None = None,
-    exact: bool = True,
 ) -> DataFrame:
     """ANN cosine top-k via PQ + ADC (asymmetric distance computation)
     + exact rerank — the compressed-domain scan of an IVF-PQ stack.
@@ -883,7 +800,7 @@ def knn_pq_adc(
     the ADC distance of a corpus vector is then ONE equi-join of its m
     code rows against the LUT plus a sum — the corpus's full vectors
     are never touched during the scan, only the m-byte codes. The top
-    ``refine`` candidates by ADC (exact decimal, deterministic
+    ``PQ_REFINE`` candidates by ADC (exact decimal, deterministic
     tie-break) get an exact cosine rerank, so approximation affects
     recall only — same contract as every other ANN path here; recall
     vs brute force is pinned in tests.
@@ -893,13 +810,13 @@ def knn_pq_adc(
     full-vector I/O until the ≤ refine·q rerank rows."""
     spark = emb.sparkSession
     cb = spark.createDataFrame(
-        pq_codebook_rows(emb, m, ksub, col, seed, cache_key),
+        pq_codebook_rows(emb, cache_key),
         "s int, c int, i int, y double",
     )
-    codes = pq_encode(emb, m, ksub, col, seed, cache_key, exact).select(
+    codes = pq_encode(emb, cache_key).select(
         "vec_id", F.col("subspace").alias("s"), F.col("code").alias("c")
     )
-    lut = _pq_subspace_dists(queries, "query_id", cb, col)
+    lut = _pq_subspace_dists(queries, "query_id", cb)
     adc = (
         codes.join(F.broadcast(lut), ["s", "c"])
         .filter(F.col("vec_id") != F.col("query_id"))
@@ -909,40 +826,30 @@ def knn_pq_adc(
     w = Window.partitionBy("query_id").orderBy(F.asc("_adc"), F.asc("neighbor_id"))
     cand = (
         adc.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= refine)
+        .filter(F.col("_rn") <= PQ_REFINE)
         .select("query_id", "neighbor_id")
     )
-    return exact_rerank(cand, emb, queries, k, col)
+    return exact_rerank(cand, emb, queries, k)
 
 
 def knn_ivfpq(
     emb: DataFrame,
     queries: DataFrame,
     k: int = 5,
-    n_centroids: int = 16,
-    n_probe: int = 8,
-    m: int = 16,
-    ksub: int = 32,
-    refine: int = 40,
-    col: str = "embedding",
-    seed: int = 42,
     cache_key: str | None = None,
-    exact: bool = True,
 ) -> DataFrame:
     """The composite IVF-PQ search — how a production 100 TB ANN index
     actually serves queries: IVF cell pruning bounds WHICH vectors are
-    scanned (n_probe/n_centroids of the corpus), PQ codes bound WHAT
+    scanned (8 probed of ``N_CENTROIDS`` cells), PQ codes bound WHAT
     is read per scanned vector (m bytes, not 4·dim), ADC ranks the
     pruned candidates in the compressed domain, and only the top
-    ``refine`` get full-vector exact rerank.
+    ``PQ_REFINE`` get full-vector exact rerank.
 
     Composition of :func:`ivf_cell_tables` + :func:`pq_encode`'s code
     layout + the ADC LUT — cell filter and code scan are both
     equi-joins against broadcast frames; full vectors are touched only
     for ≤ refine·|queries| rerank rows."""
-    corpus_cells, q_cells = ivf_cell_tables(
-        emb, queries, n_centroids, n_probe, col, seed, cache_key
-    )
+    corpus_cells, q_cells = ivf_cell_tables(emb, queries, 8, cache_key)
     cell_cand = (
         corpus_cells.join(F.broadcast(q_cells), "cell")
         .filter(F.col("neighbor_id") != F.col("query_id"))
@@ -950,15 +857,15 @@ def knn_ivfpq(
     )
     spark = emb.sparkSession
     cb = spark.createDataFrame(
-        pq_codebook_rows(emb, m, ksub, col, seed, cache_key),
+        pq_codebook_rows(emb, cache_key),
         "s int, c int, i int, y double",
     )
-    codes = pq_encode(emb, m, ksub, col, seed, cache_key, exact).select(
+    codes = pq_encode(emb, cache_key).select(
         F.col("vec_id").alias("neighbor_id"),
         F.col("subspace").alias("s"),
         F.col("code").alias("c"),
     )
-    lut = _pq_subspace_dists(queries, "query_id", cb, col)
+    lut = _pq_subspace_dists(queries, "query_id", cb)
     adc = (
         cell_cand.join(codes, "neighbor_id")
         .join(F.broadcast(lut), ["query_id", "s", "c"])
@@ -968,10 +875,10 @@ def knn_ivfpq(
     w = Window.partitionBy("query_id").orderBy(F.asc("_adc"), F.asc("neighbor_id"))
     cand = (
         adc.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= refine)
+        .filter(F.col("_rn") <= PQ_REFINE)
         .select("query_id", "neighbor_id")
     )
-    return exact_rerank(cand, emb, queries, k, col)
+    return exact_rerank(cand, emb, queries, k)
 
 
 def _kmeans_decimal_dists(comp: DataFrame, cents: DataFrame) -> DataFrame:
@@ -987,12 +894,7 @@ def _kmeans_decimal_dists(comp: DataFrame, cents: DataFrame) -> DataFrame:
 
 
 def _kmeans_loop(
-    emb: DataFrame,
-    k: int,
-    iters: int,
-    col: str,
-    seed: int,
-    cache_key: str | None,
+    emb: DataFrame, k: int, iters: int, cache_key: str | None
 ) -> tuple[DataFrame, DataFrame]:
     """Run ``iters`` Lloyd iterations → (centroids (cid, pos, y),
     final member assignment (vec_id, cid)). Training is build-once/
@@ -1001,9 +903,9 @@ def _kmeans_loop(
     spark = emb.sparkSession
 
     def build() -> tuple[DataFrame, DataFrame]:
-        train = ivf_centroids(emb, k, col, seed, cache_key=cache_key)
+        train = ivf_centroids(emb, k, cache_key)
         comp = (
-            emb.select("vec_id", F.posexplode(F.col(col)).alias("pos", "x"))
+            emb.select("vec_id", F.posexplode(F.col("embedding")).alias("pos", "x"))
             .withColumn("x", F.col("x").cast("double"))
             .localCheckpoint()
         )
@@ -1033,15 +935,13 @@ def _kmeans_loop(
             return cents, assign
         return cents.localCheckpoint(), assign.localCheckpoint()
 
-    return memo(spark, cache_key, ("_kmeans_loop", k, iters, col, seed), build)
+    return memo(spark, cache_key, ("_kmeans_loop", k, iters), build)
 
 
 def kmeans_refine(
     emb: DataFrame,
-    k: int = 16,
-    iters: int = 2,
-    col: str = "embedding",
-    seed: int = 42,
+    k: int = N_CENTROIDS,
+    iters: int = LLOYD_ITERS,
     cache_key: str | None = None,
 ) -> DataFrame:
     """Lloyd k-means refinement of the md5-sampled coarse quantizer —
@@ -1073,7 +973,7 @@ def kmeans_refine(
     under ``cache_key`` (``session.memo``)."""
 
     def build() -> DataFrame:
-        cents, assign = _kmeans_loop(emb, k, iters, col, seed, cache_key)
+        cents, assign = _kmeans_loop(emb, k, iters, cache_key)
         n_vecs = assign.groupBy("cid").agg(F.count("*").alias("n_vecs"))
         stats = cents.groupBy("cid").agg(
             F.round(
@@ -1091,19 +991,10 @@ def kmeans_refine(
         )
         return out if cache_key is None else out.localCheckpoint()
 
-    return memo(
-        emb.sparkSession, cache_key, ("kmeans_refine", k, iters, col, seed), build
-    )
+    return memo(emb.sparkSession, cache_key, ("kmeans_refine", k, iters), build)
 
 
-def kmeans_cluster_quality(
-    emb: DataFrame,
-    k: int = 16,
-    iters: int = 2,
-    col: str = "embedding",
-    seed: int = 42,
-    cache_key: str | None = None,
-) -> DataFrame:
+def kmeans_cluster_quality(emb: DataFrame, cache_key: str | None = None) -> DataFrame:
     """Clustering-quality report for the Lloyd-refined quantizer: per
     surviving cell, member count, exact inertia (Σ squared-L2 to the
     cell's FINAL centroid), mean squared distance, and population
@@ -1117,9 +1008,9 @@ def kmeans_cluster_quality(
     rounds. Scale: rides the session-memoized training loop; the extra
     pass is one broadcast join + two skinny partial-agg shuffles; the
     report is ≤ k rows."""
-    cents, _ = _kmeans_loop(emb, k, iters, col, seed, cache_key)
+    cents, _ = _kmeans_loop(emb, N_CENTROIDS, LLOYD_ITERS, cache_key)
     comp = emb.select(
-        "vec_id", F.posexplode(F.col(col)).alias("pos", "x")
+        "vec_id", F.posexplode(F.col("embedding")).alias("pos", "x")
     ).withColumn("x", F.col("x").cast("double"))
     d = _kmeans_decimal_dists(comp, cents)
     best = (
@@ -1156,11 +1047,7 @@ def knn_ivf_refined(
     emb: DataFrame,
     queries: DataFrame,
     k: int = 5,
-    n_centroids: int = 16,
-    iters: int = 2,
     n_probe: int = 4,
-    col: str = "embedding",
-    seed: int = 42,
     cache_key: str | None = None,
 ) -> DataFrame:
     """IVF serving on the Lloyd-REFINED quantizer — training
@@ -1173,8 +1060,8 @@ def knn_ivf_refined(
     the full train→index→probe→rerank pipeline is SQL-oracle-checkable.
     Refined cells are tighter than the sampled-init ones, so recall at
     equal n_probe only improves (pinned in tests vs plain IVF)."""
-    cents, _ = _kmeans_loop(emb, n_centroids, iters, col, seed, cache_key)
-    comp = emb.select("vec_id", F.posexplode(F.col(col)).alias("pos", "x")).withColumn(
+    cents, _ = _kmeans_loop(emb, N_CENTROIDS, LLOYD_ITERS, cache_key)
+    comp = emb.select("vec_id", F.posexplode(F.col("embedding")).alias("pos", "x")).withColumn(
         "x", F.col("x").cast("double")
     )
     d_all = _kmeans_decimal_dists(comp, cents)
@@ -1197,44 +1084,33 @@ def knn_ivf_refined(
         .select("query_id", "neighbor_id")
         .distinct()
     )
-    return exact_rerank(cand, emb, queries, k, col)
+    return exact_rerank(cand, emb, queries, k)
 
 
-def auto_lsh_params(
-    n: int,
-    threshold: float,
-    min_bits: int = 8,
-    min_tables: int = 12,
-    target_occupancy: int = 16,
-    miss: float = 1e-4,
-    miss_margin: float = 0.05,
-) -> tuple[int, int]:
+def auto_lsh_params(n: int, threshold: float) -> tuple[int, int]:
     """Occupancy-targeted sign-LSH sizing for the cosine near-dup
     self-join. Fixed ``bits`` is a scale trap: candidate volume is
     Σ_buckets occ² ≈ n²·T/2^bits — QUADRATIC in n. Growing bits with
-    ``log2(n / target_occupancy)`` pins mean bucket occupancy, making
+    ``log2(n / 16)`` pins mean bucket occupancy at 16, making
     candidates ~ n·occupancy·T — LINEAR in n; tables then grow (slowly)
-    to hold the analytic per-pair miss bound (1-p^bits)^T ≤ ``miss``
-    at cos = threshold + ``miss_margin`` (p = 1 - acos(cos)/π).
+    to hold the analytic per-pair miss bound (1-p^bits)^T ≤ 1e-4
+    at cos = threshold + 0.05 (p = 1 - acos(cos)/π). Neither ever
+    drops below the static ``NEARDUP_BITS``/``NEARDUP_TABLES``.
     Recall at the exact threshold is correspondingly weaker and is
     pinned empirically in tests; it only improves vs the static config
     at small n (same bits, more tables)."""
-    bits = max(min_bits, math.ceil(math.log2(max(n / target_occupancy, 1.0))))
-    p = 1.0 - math.acos(min(threshold + miss_margin, 1.0)) / math.pi
+    bits = max(NEARDUP_BITS, math.ceil(math.log2(max(n / 16, 1.0))))
+    p = 1.0 - math.acos(min(threshold + 0.05, 1.0)) / math.pi
     per_table = p**bits
     if per_table >= 1.0 - 1e-12:
-        return bits, min_tables
-    tables = max(min_tables, math.ceil(math.log(miss) / math.log(1.0 - per_table)))
+        return bits, NEARDUP_TABLES
+    tables = max(NEARDUP_TABLES, math.ceil(math.log(1e-4) / math.log(1.0 - per_table)))
     return bits, tables
 
 
 def cosine_neardup_pairs(
     emb: DataFrame,
     threshold: float = 0.9,
-    bits: int = 8,
-    n_tables: int = 12,
-    col: str = "embedding",
-    seed: int = 42,
     dim: int | None = None,
     n: int | None = None,
 ) -> DataFrame:
@@ -1245,23 +1121,25 @@ def cosine_neardup_pairs(
     never all-pairs. When the caller supplies the corpus size ``n``,
     (bits, tables) are sized by :func:`auto_lsh_params` so candidate
     volume stays LINEAR in n (occupancy-pinned buckets) while the
-    per-pair miss bound holds; without ``n`` the static (bits,
-    n_tables) apply and plan construction runs no Spark job.
+    per-pair miss bound holds; without ``n`` the static
+    ``NEARDUP_BITS`` × ``NEARDUP_TABLES`` apply and plan construction
+    runs no Spark job.
     Verification makes false positives impossible; recall is the only
     approximation, pinned in tests with planted duplicates.
 
     Output: (vec_a, vec_b, cos_sim) with vec_a < vec_b.
     """
+    bits, n_tables = NEARDUP_BITS, NEARDUP_TABLES
     if n is not None:
-        bits, n_tables = auto_lsh_params(n, threshold, bits, n_tables)
-    dim = dim or embedding_dim(emb, col)
-    planes = hyperplanes(dim, bits * n_tables, seed)
+        bits, n_tables = auto_lsh_params(n, threshold)
+    dim = dim or embedding_dim(emb)
+    planes = hyperplanes(dim, bits * n_tables, SEED)
     buckets = bucket_udf(planes, bits, n_tables)
     # materialize the (id, table, bucket) index once: the self-join
     # references it on both sides, and the Arrow matmul pass is the
     # expensive part — without this it runs twice in one job
     index = emb.select(
-        "vec_id", F.posexplode(buckets(F.col(col))).alias("tbl", "bucket")
+        "vec_id", F.posexplode(buckets(F.col("embedding"))).alias("tbl", "bucket")
     ).localCheckpoint()
     # NO distinct here: cross-table duplicate candidates are rare for
     # non-dup pairs (multiplicity ≈ 1 + T·p^bits), so deduping the raw
@@ -1278,8 +1156,8 @@ def cosine_neardup_pairs(
     )
     # same double-reference on the verify tail: (vector, norm) joins in
     # for BOTH pair members — compute norms once
-    vecs = with_norm(emb, col).select(
-        "vec_id", F.col(col).alias("_v"), "_nrm"
+    vecs = with_norm(emb).select(
+        "vec_id", F.col("embedding").alias("_v"), "_nrm"
     ).localCheckpoint()
     return (
         cand.join(
@@ -1310,11 +1188,7 @@ def cosine_neardup_pairs(
 def semdedup_drops(
     corpus: DataFrame,
     threshold: float = 0.9,
-    cell_target: int = 64,
     max_exact_cells: int = 16,
-    iters: int = 2,
-    col: str = "embedding",
-    seed: int = 42,
     train: DataFrame | None = None,
     cache_key: str | None = None,
     n: int | None = None,
@@ -1329,8 +1203,8 @@ def semdedup_drops(
     per-cell quadratic is bounded and embarrassingly parallel — the
     published recipe for pruning web-scale pretraining corpora.
 
-    The cell count SCALES with the corpus — k = max(16, n /
-    ``cell_target``) — which is what keeps the per-cell quadratic
+    The cell count SCALES with the corpus — k = max(16, n / 64), a
+    target of 64 vectors per cell — which is what keeps the per-cell quadratic
     bounded: fixed k would make the whole pass O(n²/k) i.e. quadratic
     in n (measured: 19× cost at 10× rows before this auto-sizing).
     Two assignment kernels behind one contract:
@@ -1366,11 +1240,11 @@ def semdedup_drops(
     train_emb = train if train is not None else corpus
     if n is None:
         n = corpus.count()
-    k = max(16, n // cell_target)
+    k = max(16, n // 64)
     if k <= max_exact_cells:
-        cents, _ = _kmeans_loop(train_emb, k, iters, col, seed, cache_key)
+        cents, _ = _kmeans_loop(train_emb, k, LLOYD_ITERS, cache_key)
         comp = corpus.select(
-            "vec_id", F.posexplode(F.col(col)).alias("pos", "x")
+            "vec_id", F.posexplode(F.col("embedding")).alias("pos", "x")
         ).withColumn("x", F.col("x").cast("double"))
         assign = (
             _kmeans_decimal_dists(comp, cents)
@@ -1379,15 +1253,15 @@ def semdedup_drops(
             .select("vec_id", F.col("_m.cid").alias("cid"))
         )
     else:
-        # memo key already carries (cache_key, k, seed) — distinct from
-        # the fixed-16 IVF quantizer of the ANN queries
-        cent_list = ivf_centroids(train_emb, k, col, seed, cache_key=cache_key)
+        # memo key already carries (cache_key, k) — distinct from the
+        # fixed-16 IVF quantizer of the ANN queries whenever k > 16
+        cent_list = ivf_centroids(train_emb, k, cache_key)
         assign = corpus.select(
             "vec_id",
-            F.element_at(_probe_udf(cent_list, 1)(F.col(col)), 1).alias("cid"),
+            F.element_at(_probe_udf(cent_list, 1)(F.col("embedding")), 1).alias("cid"),
         )
-    sided = assign.join(with_norm(corpus, col), "vec_id").select(
-        "cid", "vec_id", F.col(col).alias("_v"), "_nrm"
+    sided = assign.join(with_norm(corpus), "vec_id").select(
+        "cid", "vec_id", F.col("embedding").alias("_v"), "_nrm"
     )
     a = sided.select(
         "cid",
@@ -1416,7 +1290,7 @@ def semdedup_drops(
     )
 
 
-def label_centroids(emb: DataFrame, col: str = "embedding") -> DataFrame:
+def label_centroids(emb: DataFrame) -> DataFrame:
     """Per-label centroid statistics via posexplode → exact DECIMAL
     component sums. Everything stays exact (order-independent ⇒
     oracle-hashable) until ONE double division/sqrt at the very end,
@@ -1425,7 +1299,7 @@ def label_centroids(emb: DataFrame, col: str = "embedding") -> DataFrame:
     Output: (label, n_vecs, centroid_norm, mean_component,
     min_component, max_component)."""
     comp = emb.select(
-        "label", F.posexplode(F.col(col)).alias("pos", "val")
+        "label", F.posexplode(F.col("embedding")).alias("pos", "val")
     ).withColumn("_vd", F.col("val").cast("decimal(20,10)"))
     # exact per-(label, pos) component sum; |s| < 1e4 so (14,10) fits
     per_pos = comp.groupBy("label", "pos").agg(
@@ -1461,7 +1335,7 @@ def label_centroids(emb: DataFrame, col: str = "embedding") -> DataFrame:
     )
 
 
-def quantize_int8(emb: DataFrame, col: str = "embedding") -> DataFrame:
+def quantize_int8(emb: DataFrame) -> DataFrame:
     """Symmetric per-vector int8 quantization — the standard 4×
     storage/bandwidth reduction for embedding corpora (the fp32 corpus
     is the ANN index's dominant cost at 100 TB; rerank happens on the
@@ -1475,7 +1349,7 @@ def quantize_int8(emb: DataFrame, col: str = "embedding") -> DataFrame:
 
     Output: vec_id, scale (double), q (array<int> codes).
     """
-    c = F.col(col)
+    c = F.col("embedding")
     scale = F.array_max(F.transform(c, lambda x: F.abs(x.cast("double"))))
     q = F.transform(
         c,
@@ -1492,10 +1366,8 @@ def quantize_int8(emb: DataFrame, col: str = "embedding") -> DataFrame:
 def random_projection(
     emb: DataFrame,
     out_dim: int = 8,
-    col: str = "embedding",
     seed: int = 7,
     dim: int | None = None,
-    cache_key: str | None = None,
 ) -> DataFrame:
     """Johnson-Lindenstrauss random projection to ``out_dim`` dims —
     the dimensionality-reduction pass of an embedding pipeline (shrink
@@ -1515,14 +1387,14 @@ def random_projection(
     Output: (vec_id, out_pos, component) — long form, one row per
     projected component.
     """
-    dim = dim or embedding_dim(emb, col, cache_key)
+    dim = dim or embedding_dim(emb)
     planes = hyperplanes(dim, out_dim, seed)
     spark = emb.sparkSession
     plane_rows = [
         (j, i, planes[j][i]) for j in range(out_dim) for i in range(dim)
     ]
     pl = spark.createDataFrame(plane_rows, "out_pos int, i int, p double")
-    comp = emb.select("vec_id", F.posexplode(F.col(col)).alias("i", "v"))
+    comp = emb.select("vec_id", F.posexplode(F.col("embedding")).alias("i", "v"))
     return (
         comp.join(F.broadcast(pl), "i")
         .groupBy("vec_id", "out_pos")
@@ -1540,7 +1412,6 @@ def random_projection(
 def merge_ivf_index(
     new_emb: DataFrame,
     path: str,
-    col: str = "embedding",
     max_segments: int | None = None,
     max_occupancy_ratio: float | None = None,
 ) -> list[int]:
@@ -1581,7 +1452,6 @@ def merge_ivf_index(
     seg, values = _ivf_body(
         new_emb,
         path,
-        col,
         _read_centroid_list(spark, path, m),
         indexfmt.required(m, "vtype"),
         "merge_ivf_index",
@@ -1689,8 +1559,7 @@ def compact_ivf_index(spark, path: str) -> int:
 def requantize_ivf_index(
     spark,
     path: str,
-    n_centroids: int = 16,
-    seed: int = 42,
+    n_centroids: int = N_CENTROIDS,
     _cells: DataFrame | None = None,
 ) -> int:
     """Quantizer-drift REMEDIATION — the write half of the
@@ -1706,7 +1575,7 @@ def requantize_ivf_index(
 
     Semantics: the result is IDENTICAL to a fresh
     :func:`write_ivf_index` over the live (tombstone-masked) vectors
-    with the same ``n_centroids``/``seed`` — :func:`ivf_centroids` is
+    with the same ``n_centroids`` — :func:`ivf_centroids` is
     a pure function of the (vec_id, vector) set, and assignment is a
     pure function of the quantizer — which is what licenses the SQL
     oracle (test-pinned). Tombstones are applied physically on the
@@ -1739,25 +1608,17 @@ def requantize_ivf_index(
             "empty index is unreadable on the way back; delete the "
             "index directory instead"
         )
-    cents = ivf_centroids(live, n_centroids, "embedding", seed)
+    cents = ivf_centroids(live, n_centroids)
     vtype = live.schema["embedding"].dataType.elementType.simpleString()
     cent_dir = indexfmt.new_dir_name("centroids")
-    segment = _ivf_body(
-        live, path, "embedding", cents, vtype, "requantize_ivf_index", cent_dir
-    )
+    segment = _ivf_body(live, path, cents, vtype, "requantize_ivf_index", cent_dir)
     indexfmt.commit_fold(
         path, m, segment, "requantize_ivf_index", centroids=cent_dir, vtype=vtype
     )
     return len(cents)
 
 
-def maybe_requantize_ivf_index(
-    spark,
-    path: str,
-    max_occupancy_ratio: float,
-    n_centroids: int | None = None,
-    seed: int = 42,
-) -> bool:
+def maybe_requantize_ivf_index(spark, path: str, max_occupancy_ratio: float) -> bool:
     """Quantizer-drift POLICY — the loop that connects the
     ``emb_ivf_index_health`` alarm (read half) to
     :func:`requantize_ivf_index` (write half), shaped exactly like
@@ -1772,8 +1633,8 @@ def maybe_requantize_ivf_index(
     aggregate prunes the segment scans to the partition key, never
     the vectors.
 
-    ``n_centroids=None`` retrains at the index's CURRENT cell count
-    (read from the live quantizer) — remediation fixes the
+    The retrain keeps the index's CURRENT cell count (read from the
+    live quantizer) — remediation fixes the
     assignment, not the capacity. Returns True iff requantization
     ran; serving results are unchanged either way beyond ranking
     candidates being re-bucketed (requantize ≡ fresh build over the
@@ -1795,20 +1656,13 @@ def maybe_requantize_ivf_index(
     ratio = float(row["max_n"]) / float(row["mean_n"])
     if ratio <= max_occupancy_ratio:
         return False
-    requantize_ivf_index(
-        spark,
-        path,
-        n_centroids=len(cents) if n_centroids is None else n_centroids,
-        seed=seed,
-        _cells=cells,
-    )
+    requantize_ivf_index(spark, path, n_centroids=len(cents), _cells=cells)
     return True
 
 
 def top_component_power(
     emb: DataFrame,
     iters: int = 2,
-    col: str = "embedding",
     topk: int = 8,
     cache_key: str | None = None,
 ) -> DataFrame:
@@ -1837,7 +1691,7 @@ def top_component_power(
     spark = emb.sparkSession
     d = embedding_dim(emb, cache_key=cache_key)
     comp = emb.select(
-        "vec_id", F.posexplode(F.col(col)).alias("pos", "val")
+        "vec_id", F.posexplode(F.col("embedding")).alias("pos", "val")
     ).withColumn("_x", F.col("val").cast("decimal(12,10)"))
     v = spark.range(d).select(
         F.col("id").cast("int").alias("pos"),
@@ -1902,49 +1756,43 @@ def knn_graph_beam(
     emb: DataFrame,
     queries: DataFrame,
     k: int = 5,
-    m: int = 6,
-    beam: int = 8,
-    hops: int = 2,
-    n_centroids: int = 16,
-    col: str = "embedding",
-    seed: int = 42,
     cache_key: str | None = None,
 ) -> DataFrame:
     """GRAPH-based ANN (the NSW family, in its bounded declarative
     form) with IVF-ROUTED ENTRY — the production composition: the
     coarse quantizer picks WHERE to start (the query's own cell's
     members), the kNN graph decides WHERE TO GO NEXT (each vector's
-    top-``m`` cosine neighbors among its 2-probe cell-mates — the
+    top-6 cosine neighbors among its 2-probe cell-mates — the
     2-probe assignment is what BRIDGES adjacent cells; a 1-probe
     graph is disconnected across cells and beam search can never
     leave the entry cell, measured recall 0.06). Serve by fixed-hop
     BEAM SEARCH: score the entry set, expand the per-query best
-    ``beam`` nodes through the graph ``hops`` times, exact-rerank
+    8 nodes (the beam) through the graph twice (two hops), exact-rerank
     everything visited. Per-query work is O(|cell| + hops·beam·m)
     scored candidates — independent of corpus size.
 
     Honest contract: production HNSW is hierarchical with
     query-adaptive TERMINATION; this is the fixed-depth expressible
-    core (every frontier is a window top-``beam`` per query, every
+    core (every frontier is a window top-8 per query, every
     visited set a union of equi-join expansions), so the whole search
     is a finite expression chain a SQL oracle replays CTE-for-CTE.
     Visited = entries ∪ every FULL expansion (pre-beam-cut);
-    frontier_h = top-``beam`` of expansion_h alone — both engines
+    frontier_h = top-8 of expansion_h alone — both engines
     share the identical definition and the (cos, id) tie-break.
     Graph build work is Σ|2-probe cell|² (4× the SemDeDup bound),
     never O(n²); the graph is always localCheckpointed, and memoized
     per session under ``cache_key`` (``session.memo``) — build-once /
     query-many, like the IVF posting lists."""
-    corpus = with_norm(emb, col).select(
-        F.col("vec_id").alias("nid"), F.col(col).alias("_cv"), "_nrm"
+    corpus = with_norm(emb).select(
+        F.col("vec_id").alias("nid"), F.col("embedding").alias("_cv"), "_nrm"
     )
 
     def build() -> DataFrame:
-        cents = ivf_centroids(emb, n_centroids, col, seed, cache_key=cache_key)
+        cents = ivf_centroids(emb, cache_key=cache_key)
         probe2 = _probe_udf(cents, 2)
         corpus2 = emb.select(
             F.col("vec_id").alias("nid"),
-            F.explode(probe2(F.col(col))).alias("cell"),
+            F.explode(probe2(F.col("embedding"))).alias("cell"),
         )
         a = corpus2.select(F.col("nid").alias("src"), "cell")
         b = corpus2.select(F.col("nid").alias("dst"), "cell")
@@ -1970,24 +1818,20 @@ def knn_graph_beam(
                 "_cos", dot(F.col("_sv"), F.col("_dv")) / (F.col("_sn") * F.col("_dn"))
             )
             .withColumn("_rn", F.row_number().over(pw))
-            .filter(F.col("_rn") <= m)
+            .filter(F.col("_rn") <= 6)
             .select("src", "dst")
             .localCheckpoint(eager=True)
         )
 
-    graph = memo(
-        emb.sparkSession, cache_key, ("knn_graph_beam", n_centroids, col, seed, m), build
-    )
+    graph = memo(emb.sparkSession, cache_key, ("knn_graph_beam",), build)
     # IVF-routed entries: the query's own (1-probe) cell's members,
     # from the memoized posting lists
-    corpus_cells, q_cells = ivf_cell_tables(
-        emb, queries, n_centroids, 1, col, seed, cache_key
-    )
+    corpus_cells, q_cells = ivf_cell_tables(emb, queries, 1, cache_key)
     entries = corpus_cells.join(F.broadcast(q_cells), "cell").select(
         "query_id", F.col("neighbor_id").alias("nid")
     )
     qv = queries.select(
-        F.col("vec_id").alias("query_id"), F.col(col).alias("_qv")
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("_qv")
     ).withColumn("_qn", norm(F.col("_qv")))
 
     def score(nodes: DataFrame) -> DataFrame:
@@ -2006,10 +1850,10 @@ def knn_graph_beam(
     visited = f0
     frontier = f0
     bw = Window.partitionBy("query_id").orderBy(F.desc("_cos"), F.asc("nid"))
-    for _ in range(hops):
+    for _ in range(2):
         cut = (
             frontier.withColumn("_rn", F.row_number().over(bw))
-            .filter(F.col("_rn") <= beam)
+            .filter(F.col("_rn") <= 8)
             .select("query_id", "nid")
         )
         exp = (

@@ -32,6 +32,7 @@ from dataclasses import dataclass
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ecommerce_realtime_pipeline_spark.catalog import order_total
 from ecommerce_realtime_pipeline_spark.schemas import EVENT_TYPES, ORDER_STATUSES
 
 VIOLATIONS_COL = "violations"
@@ -254,17 +255,7 @@ def order_total_check(orders: DataFrame) -> DataFrame:
     Narrow: computed from the nested items array, no shuffle. Returns
     the input plus ``computed_total`` and boolean ``total_matches``.
     """
-    computed = F.bround(
-        F.aggregate(
-            F.coalesce("items", F.array()),
-            F.lit(0).cast("decimal(18,2)"),
-            lambda acc, x: (
-                acc + F.bround(x["quantity"].cast("decimal(18,2)") * x["unit_price"], 2)
-            ).cast("decimal(18,2)"),
-        ),
-        2,
-    ).cast("decimal(10,2)")
-    return orders.withColumn("computed_total", computed).withColumn(
+    return orders.withColumn("computed_total", order_total("items")).withColumn(
         "total_matches",
         F.coalesce(F.col("total") == F.col("computed_total"), F.lit(False)),
     )

@@ -36,6 +36,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ecommerce_realtime_pipeline_spark import storage
+from ecommerce_realtime_pipeline_spark.catalog import money
 from ecommerce_realtime_pipeline_spark.session import overlapped
 from ecommerce_realtime_pipeline_spark.sources import produce as P
 from ecommerce_realtime_pipeline_spark.streaming import ingest as I
@@ -69,7 +70,7 @@ def build_marts(spark: SparkSession, silver_dir: str, gold_dir: str) -> dict[str
         "revenue_by_status": _one_sorted(
             orders.groupBy("status").agg(
                 F.count("*").alias("n_orders"),
-                F.sum(F.col("total").cast("decimal(18,2)")).alias("revenue"),
+                F.sum(money("total")).alias("revenue"),
             ),
             "status",
         ),
@@ -83,9 +84,7 @@ def build_marts(spark: SparkSession, silver_dir: str, gold_dir: str) -> dict[str
             items.groupBy("product_id")
             .agg(
                 F.sum("quantity").alias("total_quantity"),
-                F.sum(F.col("line_total").cast("decimal(18,2)")).alias(
-                    "revenue"
-                ),
+                F.sum(money("line_total")).alias("revenue"),
             )
             .orderBy(F.desc("total_quantity"), "product_id")
             .limit(10)

@@ -25,6 +25,7 @@ ORACLES: dict[str, str] = {}
 
 N_QUERY_VECS = 10  # ANN query set: vec_id < 10 (deterministic)
 KNN_K = 5
+EMB_DIM = 64  # the testdata embeddings are 64-dim at every SF
 
 
 def _query_vectors(emb: DataFrame) -> DataFrame:
@@ -64,16 +65,17 @@ ORACLES["emb_knn_bruteforce"] = """
     """
 
 
-def _lsh_oracle_sql(dim: int = 64, bits: int = 4, n_tables: int = 12, seed: int = 42) -> str:
+def _lsh_oracle_sql() -> str:
     """Generate the emb_knn_lsh oracle: the hyperplane matrix is a
-    pure function of (dim, bits, n_tables, seed), so its exact float64
+    pure function of (dim, bits, tables, seed), so its exact float64
     constants are inlined as a VALUES literal (repr round-trips
     doubles) — no RNG or libm divergence between engines. The oracle
     then mirrors the Spark pipeline: per-(vector, plane) dot products →
     sign bits → per-table bucket ids → bucket equi-join candidates →
-    exact cosine rerank. The testdata embeddings are 64-dim (all SFs);
-    the Spark query derives dim dynamically and agrees."""
-    planes = SIM.hyperplanes(dim, bits * n_tables, seed)
+    exact cosine rerank. The testdata embeddings are ``EMB_DIM``-dim
+    (all SFs); the Spark query derives dim dynamically and agrees."""
+    dim, bits = EMB_DIM, SIM.LSH_BITS
+    planes = SIM.hyperplanes(dim, bits * SIM.LSH_TABLES, SIM.SEED)
     rows = ",".join(
         f"({i},{j},{w!r})" for i, p in enumerate(planes) for j, w in enumerate(p)
     )
@@ -166,7 +168,7 @@ def emb_knn_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
 # quantizer, probes, and exact rerank (all-pairs against 16
 # centroids is fine for an oracle; the Spark path never cross-joins
 # the corpus itself).
-ORACLES["emb_knn_ivf"] = """
+ORACLES["emb_knn_ivf"] = f"""
         WITH base AS (
             SELECT vec_id, embedding::DOUBLE[] AS v,
                    sqrt(list_dot_product(embedding::DOUBLE[],
@@ -175,11 +177,11 @@ ORACLES["emb_knn_ivf"] = """
         ),
         cents AS (
             SELECT row_number() OVER (
-                       ORDER BY md5(CAST(vec_id AS VARCHAR) || '|42'), vec_id
+                       ORDER BY md5(CAST(vec_id AS VARCHAR) || '|{SIM.SEED}'), vec_id
                    ) - 1 AS cid,
                    v AS cv, nrm AS cn
             FROM base
-            ORDER BY md5(CAST(vec_id AS VARCHAR) || '|42'), vec_id
+            ORDER BY md5(CAST(vec_id AS VARCHAR) || '|{SIM.SEED}'), vec_id
             LIMIT 16
         ),
         cell_sims AS (
@@ -283,7 +285,7 @@ ORACLES["emb_knn_ivf_wide_probe"] = _ivf_wide_probe_sql()
 # per-(vector, subspace, code) squared-L2 distances summed as
 # DECIMAL(28,14) — engine-exact, so argmin code assignment and ADC
 # ranking (incl. MIN(c) tie-breaks) match Spark bit-for-bit.
-_PQ_CTES = """
+_PQ_CTES = f"""
     WITH base AS (
         SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings
     ),
@@ -295,10 +297,10 @@ _PQ_CTES = """
     ),
     train AS (
         SELECT row_number() OVER (
-                   ORDER BY md5(CAST(vec_id AS VARCHAR) || '|42'), vec_id
+                   ORDER BY md5(CAST(vec_id AS VARCHAR) || '|{SIM.SEED}'), vec_id
                ) - 1 AS c, nv
         FROM basen
-        ORDER BY md5(CAST(vec_id AS VARCHAR) || '|42'), vec_id
+        ORDER BY md5(CAST(vec_id AS VARCHAR) || '|{SIM.SEED}'), vec_id
         LIMIT 32
     ),
     cb AS (
@@ -443,18 +445,18 @@ def emb_knn_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Composite IVF-PQ: the IVF oracle's cosine cell assignment/probing
 # (raw vectors) + the PQ oracle's normalized codebook/codes/LUT, with
 # ADC restricted to cell-pruned pairs.
-ORACLES["emb_knn_ivfpq"] = _PQ_CTES + """
+ORACLES["emb_knn_ivfpq"] = _PQ_CTES + f"""
     ,
     nb AS (
         SELECT vec_id, v, sqrt(list_dot_product(v, v)) AS nrm FROM base
     ),
     cents AS (
         SELECT row_number() OVER (
-                   ORDER BY md5(CAST(vec_id AS VARCHAR) || '|42'), vec_id
+                   ORDER BY md5(CAST(vec_id AS VARCHAR) || '|{SIM.SEED}'), vec_id
                ) - 1 AS cid,
                v AS cv, nrm AS cn
         FROM nb
-        ORDER BY md5(CAST(vec_id AS VARCHAR) || '|42'), vec_id
+        ORDER BY md5(CAST(vec_id AS VARCHAR) || '|{SIM.SEED}'), vec_id
         LIMIT 16
     ),
     cell_sims AS (
@@ -526,7 +528,7 @@ ORACLES["emb_knn_ivfpq"] = _PQ_CTES + """
 # squared-L2 to the iteration-(t-1) centroids, a{t} = argmin with
 # MIN(cid) tie-break, c{t} = member means (exact decimal sum, one
 # double division per component). Mirrors kmeans_refine step for step.
-_KMEANS_CTES = """
+_KMEANS_CTES = f"""
     WITH base AS (
         SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings
     ),
@@ -536,10 +538,10 @@ _KMEANS_CTES = """
     ),
     train AS (
         SELECT row_number() OVER (
-                   ORDER BY md5(CAST(vec_id AS VARCHAR) || '|42'), vec_id
+                   ORDER BY md5(CAST(vec_id AS VARCHAR) || '|{SIM.SEED}'), vec_id
                ) - 1 AS cid, v
         FROM base
-        ORDER BY md5(CAST(vec_id AS VARCHAR) || '|42'), vec_id
+        ORDER BY md5(CAST(vec_id AS VARCHAR) || '|{SIM.SEED}'), vec_id
         LIMIT 16
     ),
     c0 AS (
@@ -786,7 +788,7 @@ def emb_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 # pair — only a cell assignment, and only at a true cosine near-tie
 # (none at any tested SF; the emb_knn_ivf oracle banks on the same
 # argmax equality corpus-wide at sf0.1).
-ORACLES["emb_semdedup"] = """
+ORACLES["emb_semdedup"] = f"""
     WITH base AS (
         SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings
     ),
@@ -802,7 +804,7 @@ ORACLES["emb_semdedup"] = """
     cents AS (
         SELECT * FROM (
             SELECT row_number() OVER (
-                       ORDER BY md5(CAST(vec_id AS VARCHAR) || '|42'), vec_id
+                       ORDER BY md5(CAST(vec_id AS VARCHAR) || '|{SIM.SEED}'), vec_id
                    ) - 1 AS cid,
                    v AS cv,
                    sqrt(list_dot_product(v, v)) AS cn
@@ -1078,10 +1080,15 @@ ORACLES["emb_label_centroids"] = """
     """
 
 
-def _projection_oracle_sql(dim: int = 64, out_dim: int = 8, seed: int = 7) -> str:
-    planes = SIM.hyperplanes(dim, out_dim, seed)
+DIM_REDUCE_OUT, DIM_REDUCE_SEED = 8, 7  # emb_dim_reduce's JL projection
+
+
+def _projection_oracle_sql() -> str:
+    planes = SIM.hyperplanes(EMB_DIM, DIM_REDUCE_OUT, DIM_REDUCE_SEED)
     rows = ",".join(
-        f"({j},{i},{planes[j][i]!r})" for j in range(out_dim) for i in range(dim)
+        f"({j},{i},{planes[j][i]!r})"
+        for j in range(DIM_REDUCE_OUT)
+        for i in range(EMB_DIM)
     )
     return f"""
         WITH planes(out_pos, i, p) AS (VALUES {rows}),
@@ -1105,7 +1112,9 @@ def emb_dim_reduce(spark: SparkSession, sf_dir: str) -> DataFrame:
     portable; the oracle inlines the same plane constants (repr
     round-trips doubles — the `_lsh_oracle_sql` pattern)."""
     emb = load_table(spark, sf_dir, "embeddings")
-    return SIM.random_projection(emb, out_dim=8, seed=7, dim=64)
+    return SIM.random_projection(
+        emb, out_dim=DIM_REDUCE_OUT, seed=DIM_REDUCE_SEED, dim=EMB_DIM
+    )
 
 
 ORACLES["emb_dim_reduce"] = _projection_oracle_sql()
@@ -1238,7 +1247,7 @@ def emb_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("query_label") != F.col("neighbor_label"))
         .select("query_id", "neighbor_id")
     )
-    ranked = SIM.exact_rerank(cross_label, emb, anchors, HARD_NEG_K, "embedding")
+    ranked = SIM.exact_rerank(cross_label, emb, anchors, HARD_NEG_K)
     return (
         ranked.join(F.broadcast(al), "query_id")
         .join(nl, "neighbor_id")
@@ -1263,11 +1272,11 @@ ORACLES["emb_hard_negatives"] = f"""
     ),
     cents AS (
         SELECT row_number() OVER (
-                   ORDER BY md5(CAST(vec_id AS VARCHAR) || '|42'), vec_id
+                   ORDER BY md5(CAST(vec_id AS VARCHAR) || '|{SIM.SEED}'), vec_id
                ) - 1 AS cid,
                v AS cv, nrm AS cn
         FROM base
-        ORDER BY md5(CAST(vec_id AS VARCHAR) || '|42'), vec_id
+        ORDER BY md5(CAST(vec_id AS VARCHAR) || '|{SIM.SEED}'), vec_id
         LIMIT 16
     ),
     cell_sims AS (
@@ -1783,7 +1792,10 @@ def emb_knn_same_label(spark: SparkSession, sf_dir: str) -> DataFrame:
 ORACLES["emb_knn_same_label"] = _ivf_label_filtered_sql()
 
 
-def _power_iteration_sql(iters: int = 2) -> str:
+POWER_ITERS = 2  # emb_top_component's power-iteration rounds
+
+
+def _power_iteration_sql() -> str:
     head = """WITH x AS (
         SELECT vec_id, unnest(range(0, len(embedding))) AS pos,
                CAST(unnest(embedding) AS DECIMAL(12,10)) AS xv
@@ -1796,7 +1808,7 @@ def _power_iteration_sql(iters: int = 2) -> str:
         FROM dd
     )"""
     parts = [head]
-    for t in range(1, iters + 1):
+    for t in range(1, POWER_ITERS + 1):
         parts.append(f""",
     dots{t} AS (
         SELECT vec_id, CAST(SUM(xv * v) AS DECIMAL(18,8)) AS dot
@@ -1830,7 +1842,7 @@ def _power_iteration_sql(iters: int = 2) -> str:
     SELECT pos,
            ROUND(CAST(v AS DOUBLE), 4) AS loading,
            ROUND(nw, 4) AS sigma_est
-    FROM v{iters}, nw{iters}
+    FROM v{POWER_ITERS}, nw{POWER_ITERS}
     ORDER BY abs(ROUND(CAST(v AS DOUBLE), 4)) DESC, pos
     LIMIT 8""")
     return "".join(parts)
@@ -1846,7 +1858,7 @@ def emb_top_component(spark: SparkSession, sf_dir: str) -> DataFrame:
     sqrt/divide per normalization)."""
     emb = load_table(spark, sf_dir, "embeddings")
     return SIM.top_component_power(
-        emb, iters=2, cache_key=f"{sf_dir}/embeddings"
+        emb, iters=POWER_ITERS, cache_key=f"{sf_dir}/embeddings"
     )
 
 
@@ -1868,7 +1880,7 @@ def emb_knn_graph_beam(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLES["emb_knn_graph_beam"] = """
+ORACLES["emb_knn_graph_beam"] = f"""
     WITH base AS (
         SELECT vec_id, embedding::DOUBLE[] AS v,
                sqrt(list_dot_product(embedding::DOUBLE[],
@@ -1877,11 +1889,11 @@ ORACLES["emb_knn_graph_beam"] = """
     ),
     cents AS (
         SELECT row_number() OVER (
-                   ORDER BY md5(CAST(vec_id AS VARCHAR) || '|42'), vec_id
+                   ORDER BY md5(CAST(vec_id AS VARCHAR) || '|{SIM.SEED}'), vec_id
                ) - 1 AS cid,
                v AS cv, nrm AS cn
         FROM base
-        ORDER BY md5(CAST(vec_id AS VARCHAR) || '|42'), vec_id
+        ORDER BY md5(CAST(vec_id AS VARCHAR) || '|{SIM.SEED}'), vec_id
         LIMIT 16
     ),
     cell_sims AS (

@@ -198,16 +198,13 @@ ORACLES["docs_neardup_minhash"] = _JACCARD_SQL
 
 
 def docs_neardup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SimHash near-dup pairs (32-bit, hamming ≤ 3, banded join). This
-    driver-checked query runs ``portable_hash=True``: the md5-derived
-    bit hash makes the sketch engine-portable, and the 4-chunk
-    pigeonhole banding is EXACT for hamming ≤ 3 — so the all-pairs
-    DuckDB oracle computes the identical pair set (the oracle may go
-    all-pairs; the Spark path never does). Production default is the
-    xxhash64 path (~2.4× faster, same banding math) — pair-set overlap
-    between the two hashes on the planted corpus is pinned in tests."""
+    """SimHash near-dup pairs (32-bit, hamming ≤ 3, banded join). The
+    md5-derived bit hash makes the sketch engine-portable, and the
+    4-chunk pigeonhole banding is EXACT for hamming ≤ 3 — so the
+    all-pairs DuckDB oracle computes the identical pair set (the oracle
+    may go all-pairs; the Spark path never does)."""
     docs = load_table(spark, sf_dir, "documents")
-    return DD.simhash_pairs(docs, max_hamming=3, portable_hash=True)
+    return DD.simhash_pairs(docs, max_hamming=3)
 
 
 # 4-chunk pigeonhole banding is EXACT for hamming ≤ 3, so the

@@ -26,7 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ecommerce_realtime_pipeline_spark.catalog import MONEY, load_table
+from ecommerce_realtime_pipeline_spark.catalog import MONEY, load_table, money
 
 # Domains observed in the driver testdata (TPC-H-ish); the analog of the
 # reference's status/event_type CHECK IN (...) lists.
@@ -384,9 +384,7 @@ def revenue_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         joined.cube("r_name", "o_orderstatus")
         .agg(
-            F.round(
-                F.sum(F.col("o_totalprice").cast("decimal(18,2)")), 2
-            )
+            F.round(F.sum(money("o_totalprice")), 2)
             .cast("double")
             .alias("revenue"),
             F.count("*").alias("n_orders"),

@@ -21,6 +21,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ecommerce_realtime_pipeline_spark.catalog import order_total
 from ecommerce_realtime_pipeline_spark.operators import generate as G
 from ecommerce_realtime_pipeline_spark.operators import validation as V
 from ecommerce_realtime_pipeline_spark.plans import fixtures as FX
@@ -122,7 +123,7 @@ def produce_envelopes_shape(spark: SparkSession, sf_dir: str) -> DataFrame:
         if entity == "orders":
             # totals were forced at publish: the parsed-back total must
             # equal a second recompute pass (S2 is idempotent)
-            parsed = parsed.withColumn("_rt", P.computed_total(F.col("_p.items")))
+            parsed = parsed.withColumn("_rt", order_total(F.col("_p.items")))
             checks.append(
                 F.count(F.when(F.col("_p.total") != F.col("_rt"), 1)).alias(
                     "n_total_mismatch"

@@ -1274,7 +1274,7 @@ def events_value_outliers_per_type(spark: SparkSession, sf_dir: str) -> DataFram
     from pyspark.sql import Window as W
 
     events = load_table(spark, sf_dir, "events")
-    vd = F.col("value").cast("decimal(18,2)")
+    vd = money("value")
     mom = events.groupBy("event_type").agg(
         F.count("*").alias("_n"),
         F.sum(vd).alias("_s1"),

@@ -33,6 +33,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ecommerce_realtime_pipeline_spark import storage
+from ecommerce_realtime_pipeline_spark.catalog import money
 from ecommerce_realtime_pipeline_spark.operators import sketch as SK
 from ecommerce_realtime_pipeline_spark.pipeline import run_pipeline
 from ecommerce_realtime_pipeline_spark.plans import fixtures as FX
@@ -1044,7 +1045,7 @@ def cdc_bucket_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
                         identical = False
         agg = lambda df: df.groupBy("status").agg(  # noqa: E731
             F.count("*").alias("n_rows"),
-            F.sum(F.col("total").cast("decimal(18,2)")).alias("sum_val"),
+            F.sum(money("total")).alias("sum_val"),
         )
         prev_agg = agg(I.read_bucketed(spark, old_snap, "orders"))
         refreshed = I.cdc_refresh_buckets(

@@ -24,7 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ecommerce_realtime_pipeline_spark.catalog import load_table
+from ecommerce_realtime_pipeline_spark.catalog import MONEY, load_table, money
 from ecommerce_realtime_pipeline_spark.operators import temporal as T
 
 
@@ -74,14 +74,14 @@ def events_range_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = T.range_join(p, c, on="user_id", lower_sec=-3600, upper_sec=0)
     agg = pairs.groupBy("purchase_id").agg(
         F.count("*").alias("_n"),
-        F.sum(F.col("value").cast("decimal(18,2)")).alias("_v"),
+        F.sum(money("value")).alias("_v"),
     )
     return p.join(agg, "purchase_id", "left").select(
         "purchase_id",
         "user_id",
         F.unix_micros("ts").alias("purchase_us"),
         F.coalesce("_n", F.lit(0)).alias("n_clicks"),
-        F.round(F.coalesce(F.col("_v"), F.lit(0).cast("decimal(18,2)")), 2)
+        F.round(F.coalesce(F.col("_v"), F.lit(0).cast(MONEY)), 2)
         .cast("double")
         .alias("click_value"),
     )

@@ -42,6 +42,7 @@ from functools import partial
 from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ecommerce_realtime_pipeline_spark.catalog import order_total
 from ecommerce_realtime_pipeline_spark.operators import generate as G
 from ecommerce_realtime_pipeline_spark.schemas import ENTITY_SCHEMAS
 from ecommerce_realtime_pipeline_spark.session import overlapped
@@ -90,26 +91,11 @@ def entity_topic(entity: str, settings: Settings | None = None) -> str:
     return getattr(settings, ENTITY_ROUTING[entity][1])
 
 
-def computed_total(items_col: str | F.Column = "items") -> F.Column:
-    """G8 header total from an items array: per-line bround then sum
-    (``schemas.py:60-61,79-82``)."""
-    return F.bround(
-        F.aggregate(
-            F.coalesce(items_col, F.array()),
-            F.lit(0).cast("decimal(18,2)"),
-            lambda acc, x: (
-                acc + F.bround(x["quantity"].cast("decimal(18,2)") * x["unit_price"], 2)
-            ).cast("decimal(18,2)"),
-        ),
-        2,
-    ).cast("decimal(10,2)")
-
-
 def force_order_totals(orders: DataFrame) -> DataFrame:
     """S2: ``produce_order`` recomputes the header total from the items
     before publish (``producer.py:169-176``) so downstream consumers
     never see a stale total."""
-    return orders.withColumn("total", computed_total("items"))
+    return orders.withColumn("total", order_total("items"))
 
 
 def to_envelope(df: DataFrame, entity: str, settings: Settings | None = None) -> DataFrame:

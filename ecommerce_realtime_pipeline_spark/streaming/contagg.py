@@ -44,6 +44,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ecommerce_realtime_pipeline_spark import storage
+from ecommerce_realtime_pipeline_spark.catalog import MONEY, money
 from ecommerce_realtime_pipeline_spark.operators import normalize as N
 from ecommerce_realtime_pipeline_spark.schemas import ENTITY_SCHEMAS
 from ecommerce_realtime_pipeline_spark.streaming import journal as EJ
@@ -54,8 +55,6 @@ from ecommerce_realtime_pipeline_spark.streaming.ingest import (
     stream_envelopes,
     upsert_batch,
 )
-
-_SUM_TYPE = "decimal(18,2)"
 
 #: high-watermark file: the largest epoch whose ``v=<epoch>`` marker
 #: has been PRUNED. The markers double as the exactly-once replay
@@ -119,14 +118,12 @@ def rebase_from_silver(
             .groupBy(group_col)
             .agg(
                 F.count(F.lit(1)).alias("n_rows"),
-                F.sum(F.col(sum_col).cast(_SUM_TYPE))
-                .cast(_SUM_TYPE)
-                .alias("sum_val"),
+                F.sum(money(sum_col)).cast(MONEY).alias("sum_val"),
             )
         )
     else:
         base = spark.createDataFrame(
-            [], f"{group_col} string, n_rows long, sum_val {_SUM_TYPE}"
+            [], f"{group_col} string, n_rows long, sum_val {MONEY}"
         )
     storage.swap_dir(base, os.path.join(agg_path, _BASE_DIR))
     for e in _committed_epochs(agg_path):
@@ -173,7 +170,6 @@ def refresh_epoch(
     epoch_id: int,
     group_col: str,
     sum_col: str,
-    n_buckets: int = 16,
 ) -> None:
     """Incrementally refresh the aggregate for one micro-batch AGAINST
     THE SILVER PRE-IMAGE (call before the upsert). Skip-if-committed
@@ -184,16 +180,12 @@ def refresh_epoch(
     typed, _bad = N.parse_envelope(batch_df, entity)
     id_field = ENTITY_SCHEMAS[entity].fields[0].name
     batch_rows = N.latest_by_key(typed, id_field, N.ORDER_COLS[entity])
-    d_val = F.col(sum_col).cast(_SUM_TYPE)
+    d_val = money(sum_col)
     if os.path.isdir(silver_path):
         keys = batch_rows.select(id_field).distinct()
         buckets = [
             r[0]
-            for r in keys.select(
-                bucket_of(id_field, n_buckets).alias("b")
-            )
-            .distinct()
-            .collect()
+            for r in keys.select(bucket_of(id_field).alias("b")).distinct().collect()
         ]
         pre = (
             read_bucketed(spark, silver_path, entity)
@@ -241,10 +233,10 @@ def refresh_epoch(
         prev = read_continuous_agg(spark, agg_path)
     except FileNotFoundError:
         prev = spark.createDataFrame(
-            [], f"{group_col} string, n_rows long, sum_val {_SUM_TYPE}"
+            [], f"{group_col} string, n_rows long, sum_val {MONEY}"
         )
     storage.swap_dir(
-        N.merge_agg_delta(prev, delta_agg, group_col, _SUM_TYPE), version_dir
+        N.merge_agg_delta(prev, delta_agg, group_col), version_dir
     )
 
 

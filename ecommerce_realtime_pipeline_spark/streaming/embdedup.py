@@ -5,9 +5,10 @@ embedding cosine rather than n-gram Jaccard (semantic dedup of a
 continuously-embedded crawl).
 
 Only the two family-specific steps live here: the bucketing (the
-batch's vectors in ``n_tables`` sign-LSH tables, ``similarity.bucket_udf``
-— one Arrow matmul pass) and the verify (EXACT cosine ≥ threshold over
-the full vectors). The rest of each micro-batch — in-batch self-join,
+batch's vectors in the near-dup join's static sign-LSH tables,
+``similarity.NEARDUP_BITS`` × ``NEARDUP_TABLES`` through
+``similarity.bucket_udf`` — one Arrow matmul pass) and the verify
+(EXACT cosine ≥ 0.9 over the full vectors). The rest of each micro-batch — in-batch self-join,
 join against the history index of every accepted vector, min-id
 canonical decision, one-job kind-partitioned append — is neardup's
 banded-LSH kernel (``neardup.lsh_dedup_batch``) writing the shared
@@ -73,21 +74,15 @@ def _exact_cos_verify(
 
 
 def dedup_batch(
-    spark: SparkSession,
-    batch: DataFrame,
-    work_dir: str,
-    batch_id: int,
-    threshold: float = 0.9,
-    bits: int = 8,
-    n_tables: int = 12,
-    seed: int = 42,
+    spark: SparkSession, batch: DataFrame, work_dir: str, batch_id: int
 ) -> None:
     """Process one micro-batch of vectors through the kernel: sign-LSH
     buckets, exact-cosine verify."""
+    bits, n_tables = SIM.NEARDUP_BITS, SIM.NEARDUP_TABLES
 
     def band(vecs: DataFrame) -> DataFrame:
         dim = len(vecs.select("embedding").first()[0])
-        planes = SIM.hyperplanes(dim, bits * n_tables, seed)
+        planes = SIM.hyperplanes(dim, bits * n_tables, SIM.SEED)
         buckets = SIM.bucket_udf(planes, bits, n_tables)
         return vecs.select(
             "vec_id", F.posexplode(buckets(F.col("embedding"))).alias("tbl", "bucket")
@@ -102,19 +97,13 @@ def dedup_batch(
         payload="embedding",
         band=band,
         band_cols=("tbl", "bucket"),
-        verify=lambda cand, vecs: _exact_cos_verify(cand, vecs, threshold),
+        verify=lambda cand, vecs: _exact_cos_verify(cand, vecs, 0.9),
         kinds=_KINDS,
     )
 
 
 def run_embdedup_stream(
-    spark: SparkSession,
-    src_dir: str,
-    work_dir: str,
-    checkpoint: str,
-    threshold: float = 0.9,
-    bits: int = 8,
-    n_tables: int = 12,
+    spark: SparkSession, src_dir: str, work_dir: str, checkpoint: str
 ):
     """Drain all currently-available embedding files through the dedup
     pass (availableNow); re-running with the same checkpoint processes
@@ -122,7 +111,7 @@ def run_embdedup_stream(
     the journal's is refused with ``RuntimeError``."""
 
     def handle(batch_df: DataFrame, epoch_id: int) -> None:
-        dedup_batch(spark, batch_df, work_dir, epoch_id, threshold, bits, n_tables)
+        dedup_batch(spark, batch_df, work_dir, epoch_id)
 
     stream = spark.readStream.schema(EMB_STREAM_SCHEMA).parquet(src_dir)
     return EJ.start_bound(

@@ -20,7 +20,7 @@ implemented Spark-first:
   restarts idempotent too).
 - **Upsert sink (S6/R4)**: ``foreachBatch`` last-write-wins merge by
   entity key over a HASH-BUCKETED silver layout: silver lives as
-  ``bucket=N`` parquet partitions on ``pmod(xxhash64(key), n_buckets)``,
+  ``bucket=N`` parquet partitions on ``pmod(xxhash64(key), N_BUCKETS)``,
   and each micro-batch rewrites ONLY the buckets containing batch keys
   (partition pruning makes the read side touch only those directories
   too). Work per trigger is O(touched buckets), not O(table) — the
@@ -33,7 +33,7 @@ implemented Spark-first:
 
 Scale stance: the streaming graph is identical at any scale — state
 size is bounded by the watermark; the bucketed upsert rewrites only
-key-touched buckets per trigger (raise ``n_buckets`` with table size so
+key-touched buckets per trigger (raise ``N_BUCKETS`` with table size so
 a bucket stays executor-memory-sized), and validation/normalization
 reuse the batch operators unchanged (one code path, two execution
 modes).
@@ -104,16 +104,19 @@ def deduped_stream(raw: DataFrame, watermark: str = "10 minutes") -> DataFrame:
     )
 
 
-#: Silver bucket count. 16 suffices for test scale; at 100 TB raise it
-#: (e.g. 4096) so one bucket ≈ one executor-memory-sized rewrite unit.
+#: Silver bucket count — a layout property of silver, read by every
+#: writer and maintainer, never a per-call option (a caller with another
+#: count would route keys to the wrong bucket or skip buckets). 16
+#: suffices for test scale; at 100 TB raise it (e.g. 4096) so one
+#: bucket ≈ one executor-memory-sized rewrite unit.
 N_BUCKETS = 16
 
 
-def bucket_of(id_col: str, n_buckets: int = N_BUCKETS):
-    """Deterministic bucket assignment: ``pmod(xxhash64(key), n)``.
+def bucket_of(id_col: str):
+    """Deterministic bucket assignment: ``pmod(xxhash64(key), N_BUCKETS)``.
     Children bucketed by the parent key land in the parent's bucket, so
     per-bucket maintenance of order_items never crosses buckets."""
-    return F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_buckets)).cast("int")
+    return F.pmod(F.xxhash64(F.col(id_col)), F.lit(N_BUCKETS)).cast("int")
 
 
 def read_bucketed(spark: SparkSession, path: str, entity: str) -> DataFrame:
@@ -142,7 +145,6 @@ def upsert_batch(
     batch_df: DataFrame,
     entity: str,
     silver_path: str,
-    n_buckets: int = N_BUCKETS,
 ) -> list[int]:
     """S6/R4 foreachBatch hook: parse the envelope batch, merge with the
     touched buckets of the existing silver snapshot, keep the newest row
@@ -153,7 +155,7 @@ def upsert_batch(
     snapshot — idempotent. Returns the touched bucket ids."""
     typed, _bad = N.parse_envelope(batch_df, entity)
     id_field = ENTITY_SCHEMAS[entity].fields[0].name
-    typed = typed.withColumn("bucket", bucket_of(id_field, n_buckets))
+    typed = typed.withColumn("bucket", bucket_of(id_field))
     touched = sorted(
         r["bucket"] for r in typed.select("bucket").distinct().collect()
     )
@@ -171,9 +173,7 @@ def upsert_batch(
     return touched
 
 
-def compact_buckets(
-    spark: SparkSession, silver_path: str, n_buckets: int = N_BUCKETS
-) -> dict[int, tuple[int, int]]:
+def compact_buckets(spark: SparkSession, silver_path: str) -> dict[int, tuple[int, int]]:
     """Small-files maintenance for the bucketed silver layout: after
     many triggers a bucket directory holds one part-file per writing
     task; this pass rewrites each FRAGMENTED bucket (≥2 files) to a
@@ -194,7 +194,7 @@ def compact_buckets(
     storage.recover(silver_path)
     report: dict[int, tuple[int, int]] = {}
     frag: list[int] = []
-    for b in range(n_buckets):
+    for b in range(N_BUCKETS):
         d = os.path.join(silver_path, f"bucket={b}")
         if not os.path.isdir(d):
             continue
@@ -222,7 +222,6 @@ def cdc_refresh_buckets(
     group_col: str,
     sum_col: str,
     prev_agg: DataFrame,
-    sum_type: str = "decimal(18,2)",
 ) -> DataFrame:
     """The bucketed-silver CDC loop, END TO END: diff two snapshots of
     a bucketed silver table READING ONLY THE TOUCHED BUCKETS (the
@@ -257,8 +256,8 @@ def cdc_refresh_buckets(
 
     old_b, new_b = pruned(old_path), pruned(new_path)
     diff = N.snapshot_diff(old_b, new_b, [key])
-    delta = N.cdc_delta(old_b, new_b, diff, [key], group_col, sum_col, sum_type)
-    return N.merge_agg_delta(prev_agg, delta, group_col, sum_type)
+    delta = N.cdc_delta(old_b, new_b, diff, [key], group_col, sum_col)
+    return N.merge_agg_delta(prev_agg, delta, group_col)
 
 
 def record_offsets(

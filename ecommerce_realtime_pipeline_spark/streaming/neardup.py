@@ -11,7 +11,8 @@ Per micro-batch (the kernel):
      ``dedup.banded_signatures``) and self-join the band keys,
   2. equi-join those band keys against the persisted index of every
      previously ACCEPTED item,
-  3. verify candidates exactly (here: Jaccard over full shingle sets),
+  3. verify candidates exactly (here: Jaccard ≥ 0.5 over the full
+     3-gram shingle sets),
   4. decide min-id canonical: a dup points at its smallest verified
      match, so the earliest-seen item of a cluster stays novel,
   5. append the batch's per-item decisions AND the novel items' band
@@ -176,10 +177,8 @@ def dedup_batch(
     batch: DataFrame,
     work_dir: str,
     batch_id: int,
-    threshold: float = 0.5,
-    num_hashes: int = 64,
-    bands: int = 16,
-    n: int = 3,
+    num_hashes: int,
+    bands: int,
 ) -> None:
     """Process one micro-batch of documents through the kernel: MinHash
     band keys, exact-Jaccard verify."""
@@ -190,9 +189,9 @@ def dedup_batch(
         batch_id,
         id_col="doc_id",
         payload="text",
-        band=lambda docs: DD.banded_signatures(docs, num_hashes, bands, n),
+        band=lambda docs: DD.banded_signatures(docs, num_hashes, bands),
         band_cols=("band", "bucket"),
-        verify=lambda cand, docs: DD.verify_jaccard(cand, docs, threshold, n),
+        verify=lambda cand, docs: DD.verify_jaccard(cand, docs, 0.5),
         kinds=_KINDS,
     )
 
@@ -202,10 +201,8 @@ def run_neardup_stream(
     src_dir: str,
     work_dir: str,
     checkpoint: str,
-    threshold: float = 0.5,
     num_hashes: int = 64,
     bands: int = 16,
-    n: int = 3,
 ):
     """Drain all currently-available document files through the dedup
     pass (availableNow). Re-running with the same checkpoint processes
@@ -214,9 +211,7 @@ def run_neardup_stream(
     refused with ``RuntimeError``."""
 
     def handle(batch_df: DataFrame, epoch_id: int) -> None:
-        dedup_batch(
-            spark, batch_df, work_dir, epoch_id, threshold, num_hashes, bands, n
-        )
+        dedup_batch(spark, batch_df, work_dir, epoch_id, num_hashes, bands)
 
     stream = spark.readStream.schema(DOC_STREAM_SCHEMA).parquet(src_dir)
     return EJ.start_bound(

@@ -7,7 +7,6 @@ event/level keys, rotation honors the byte cap, and get_logger binds
 from __future__ import annotations
 
 import json
-import logging
 from pathlib import Path
 
 import pytest
@@ -15,13 +14,7 @@ import pytest
 from ecommerce_realtime_pipeline_spark import logging_config as lc
 from ecommerce_realtime_pipeline_spark.settings import Settings
 
-
-@pytest.fixture(autouse=True)
-def _reset_logging():
-    yield
-    for h in list(logging.root.handlers):
-        logging.root.removeHandler(h)
-        h.close()
+pytestmark = pytest.mark.usefixtures("reset_root_logging")
 
 
 def test_console_format_no_file(monkeypatch, tmp_path):

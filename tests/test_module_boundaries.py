@@ -442,6 +442,109 @@ def test_oracle_scan_tells_an_own_binding_from_an_import(tmp_path):
     assert _oracle_bindings(borrowed) == (False, ["pkg.plans.oracles:1"])
 
 
+#: the operator families whose every option must have a caller
+_OPTION_MODULES = (
+    "operators/similarity.py",
+    "operators/dedup.py",
+    "streaming/neardup.py",
+    "streaming/embdedup.py",
+    "plans/ann.py",
+)
+
+
+def _calling_files() -> list[pathlib.Path]:
+    """The package, the scripts, the benchmark and the tests."""
+    paths = sorted(ROOT.rglob("*.py")) + list(_scripts().values())
+    for d in ("perfbench", "tests"):
+        paths += sorted((REPO / d).glob("*.py"))
+    return paths
+
+
+def _unset_options(defining: pathlib.Path, callers: list[pathlib.Path]) -> list[str]:
+    """Every ``function(param=)`` of ``defining`` whose parameter has a
+    default that no call in ``callers`` passes, by keyword or by
+    position. Calls match by function name, after resolving
+    ``from … import x as y`` aliases; ``functools.partial(f, …)``
+    counts as a call of ``f``."""
+    options = {}
+    for node in ast.walk(ast.parse(defining.read_text())):
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            a = node.args
+            pos = a.posonlyargs + a.args
+            first = len(pos) - len(a.defaults)
+            for i, arg in enumerate(pos[first:], first):
+                options[(node.name, arg.arg)] = i
+            for arg, default in zip(a.kwonlyargs, a.kw_defaults):
+                if default is not None:
+                    options[(node.name, arg.arg)] = None
+    passed = set()
+    for path in callers:
+        tree = ast.parse(path.read_text())
+        alias = {
+            a.asname: a.name
+            for node in ast.walk(tree)
+            if isinstance(node, ast.ImportFrom)
+            for a in node.names
+            if a.asname
+        }
+        for node in ast.walk(tree):
+            if not isinstance(node, ast.Call):
+                continue
+            func, args = node.func, node.args
+            name = getattr(func, "id", None) or getattr(func, "attr", None)
+            if name == "partial" and args:
+                func, args = args[0], args[1:]
+                name = getattr(func, "id", None) or getattr(func, "attr", None)
+            name = alias.get(name, name)
+            passed.update((name, kw.arg) for kw in node.keywords)
+            for i, arg in enumerate(args):
+                if isinstance(arg, ast.Starred):
+                    break
+                passed.add((name, i))
+    return [
+        f"{fn}({param}=)"
+        for (fn, param), i in options.items()
+        if (fn, param) not in passed and (i is None or (fn, i) not in passed)
+    ]
+
+
+def test_every_option_has_a_caller():
+    """The ANN and near-dup operator families keep no option that no
+    caller sets: every defaulted parameter of every function in
+    ``_OPTION_MODULES`` is passed somewhere in the package, the
+    scripts, the benchmark or the tests. An option nothing passes is a
+    configuration nothing runs; it belongs in a constant."""
+    callers = _calling_files()
+    assert len(callers) > 80  # the scan sees every calling file
+    unset = {
+        mod: found
+        for mod in _OPTION_MODULES
+        if (found := _unset_options(ROOT / mod, callers))
+    }
+    assert unset == {}
+
+
+def test_option_scan_resolves_aliases_positions_and_partials(tmp_path):
+    """The scan itself: an option passed by position through an import
+    alias counts, as does a keyword bound by ``functools.partial``; a
+    keyword-only option no call passes is reported, and so is one that
+    only its own default sets."""
+    defining = tmp_path / "ops.py"
+    defining.write_text(
+        "def f(a, b=1, *, c=2):\n    return g()\n"
+        "def g(x=0):\n    return x\n"
+        "def h(y=0):\n    return y\n"
+    )
+    caller = tmp_path / "use.py"
+    caller.write_text(
+        "from functools import partial\n"
+        "from ops import f as _f, h\n"
+        "_f(1, 2)\n"
+        "partial(h, y=3)\n"
+    )
+    assert _unset_options(defining, [defining, caller]) == ["f(c=)", "g(x=)"]
+
+
 def test_read_mix_queries_stay_in_their_span_families():
     """perfbench's ``read_mix`` names a query's span family after the
     last name of its plan module (``ReadMix.family``) and reports only

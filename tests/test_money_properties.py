@@ -1,6 +1,6 @@
 """Property-based pin of the money math (hypothesis): the engine's
 order-total expression (per-line bround-HALF_UP then exact DECIMAL sum
-— ``sources/produce.py computed_total`` / ``normalize.explode_order_items``)
+— ``catalog.order_total`` / ``normalize.explode_order_items``)
 must equal an independent Python ``decimal`` HALF_UP implementation for
 ANY item list within the total's declared ``decimal(10,2)`` range. This
 is the arithmetic the exactly-once hashes and the R12 re-aggregation
@@ -25,7 +25,7 @@ import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
-from ecommerce_realtime_pipeline_spark.sources import produce as P
+from ecommerce_realtime_pipeline_spark.catalog import order_total
 
 MONEY = st.decimals(
     min_value=Decimal("0.01"), max_value=Decimal("9999.99"), places=2
@@ -59,7 +59,7 @@ def _items_df(spark, items):
 @given(items=ITEMS)
 def test_computed_total_matches_decimal_half_up(spark, items):
     df = _items_df(spark, items)
-    got = df.select(P.computed_total("items").alias("t")).collect()[0]["t"]
+    got = df.select(order_total("items").alias("t")).collect()[0]["t"]
     assert got == _expected_total(items), (items, got)
 
 
@@ -72,4 +72,4 @@ def test_computed_total_overflow_fails_loudly(spark):
     items = [(999, Decimal("99999.99")), (999, Decimal("99999.99"))]
     df = _items_df(spark, items)
     with pytest.raises(ArithmeticException):
-        df.select(P.computed_total("items").alias("t")).collect()
+        df.select(order_total("items").alias("t")).collect()

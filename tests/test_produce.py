@@ -8,6 +8,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from ecommerce_realtime_pipeline_spark.catalog import order_total
 from ecommerce_realtime_pipeline_spark.operators import generate as G
 from ecommerce_realtime_pipeline_spark.operators.corruptions import corrupt_orders
 from ecommerce_realtime_pipeline_spark.schemas import CUSTOMER_SCHEMA
@@ -53,7 +54,7 @@ def test_force_totals_repairs_corrupted_header(spark, batch):
 
     back = env.select(F.from_json("value", ORDER_SCHEMA).alias("p")).select("p.*")
     assert back.filter(F.col("total") < 0).count() == 0
-    mism = back.withColumn("_rt", P.computed_total("items")).filter(
+    mism = back.withColumn("_rt", order_total("items")).filter(
         F.col("total") != F.col("_rt")
     )
     assert mism.count() == 0
@@ -158,7 +159,7 @@ def _last_json_block(out: str):
     return json.loads(out[out.rindex('{\n  "produced_messages"') :])
 
 
-def test_cli_metrics_summary_and_exit_code(spark, tmp_path, capsys):
+def test_cli_metrics_summary_and_exit_code(spark, tmp_path, capsys, reset_root_logging):
     """run_cli prints the ProducerMetrics JSON (produced_messages,
     produced_bytes, errors) and returns 0 on success — the reference's
     stdout contract (producer.py:306-316)."""
@@ -185,7 +186,9 @@ def test_cli_metrics_summary_and_exit_code(spark, tmp_path, capsys):
     )
 
 
-def test_cli_exit_1_on_errors(spark, tmp_path, capsys, monkeypatch):
+def test_cli_exit_1_on_errors(
+    spark, tmp_path, capsys, monkeypatch, reset_root_logging
+):
     """Any failed entity publish → errors counted, exit code 1
     (reference producer.py:316)."""
 

@@ -106,10 +106,10 @@ def test_kmeans_refine_and_loop_keep_apart(spark):
     )
     key = "test-kmeans-memo"
     stats = SIM.kmeans_refine(emb, k=2, iters=1, cache_key=key)
-    loop = SIM._kmeans_loop(emb, 2, 1, "embedding", 42, key)
+    loop = SIM._kmeans_loop(emb, 2, 1, key)
     assert isinstance(loop, tuple) and len(loop) == 2
     assert SIM.kmeans_refine(emb, k=2, iters=1, cache_key=key) is stats
-    assert SIM._kmeans_loop(emb, 2, 1, "embedding", 42, key) is loop
+    assert SIM._kmeans_loop(emb, 2, 1, key) is loop
 
 
 # -- the parquet schema memo of ``storage.read_parquet`` ----------------------
